@@ -176,8 +176,7 @@ object ChaosCheck {
       val t0 = System.nanoTime()
       ops.DedupOps.queries("build_minhash_index")(spark, dir2).collect()
       val cleanMs = (System.nanoTime() - t0) / 1000000L
-      val want = spark.read
-        .parquet(ops.MinhashIndex.ensure(spark, dir2).bands)
+      val want = Tables.read(spark, ops.MinhashIndex.ensure(spark, dir2).bands)
         .select("doc_id", "band", "band_key")
         .collect().map(_.toString).sorted
       awaitExecutors(2)
@@ -186,7 +185,7 @@ object ChaosCheck {
       ops.DedupOps.queries("build_minhash_index")(spark, dir).collect()
       val chaosMs = (System.nanoTime() - t1) / 1000000L
       val ix = ops.MinhashIndex.ensure(spark, dir)
-      val got = spark.read.parquet(ix.bands)
+      val got = Tables.read(spark, ix.bands)
         .select("doc_id", "band", "band_key")
         .collect().map(_.toString).sorted
       val pristine = got.sameElements(want) &&
@@ -200,7 +199,7 @@ object ChaosCheck {
       awaitExecutors(2)
       val sq = spark; import sq.implicits._
       implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-      val docs = spark.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(spark, s"$dir/documents.parquet")
       val ixRoot = s"$dir/chaos_mhix"
       api.GraftAPI.writeMinhashIndex(
         docs.filter(col("doc_id") < 450), "doc_id", "text", ixRoot,
@@ -224,7 +223,7 @@ object ChaosCheck {
         }
       } finally q.stop()
       val chaosMs = (System.nanoTime() - t1) / 1000000L
-      val streamed = spark.read.parquet(out)
+      val streamed = Tables.read(spark, out)
         .select("doc_id", "is_dup").collect()
         .map(r => r.getLong(0) -> r.getBoolean(1)).sorted
       val wantFlags = ops.DedupOps.queries("dedup_incremental")(spark, dir)

@@ -1,13 +1,15 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftx.Bridge
 import org.apache.spark.sql.types._
 
 /** Table readers + oracle-parity helpers shared by every operator.
   *
   * Design notes (100 TB posture):
-  *  - All readers are plain `spark.read.parquet` scans: the vectorized
+  *  - Every batch parquet read goes through [[Tables.read]]: the vectorized
   *    parquet reader + Catalyst column pruning / predicate pushdown do the
   *    heavy lifting; operators never pre-materialize.
   *  - Double aggregation goes through DECIMAL so results are exact and
@@ -17,8 +19,88 @@ import org.apache.spark.sql.types._
   *    on a real cluster.
   */
 object Tables {
+
+  /** The one batch parquet reader (InventorySpec keeps it the only one).
+    * `spark.read.parquet(path)` resolves the table on every call: a file
+    * listing, a data-source lookup and, with no declared schema, a
+    * one-task job that reads footers to infer it. Most reads here are of
+    * tables unchanged since the last call (fixture tables, stored index
+    * generations), so this reader resolves each one once per session.
+    *
+    *  - '''Cached:''' per (session, paths, declared schema, options), the
+    *    resolved `LogicalRelation` (schema, file index, partition spec)
+    *    together with a stamp of the table's files. Session settings
+    *    that shape resolution (case sensitivity, `nanosAsLong`) are the
+    *    ones in force at the first read.
+    *  - '''Hit:''' on an unchanged stamp the cached relation comes back
+    *    through `newInstance()`. That mints fresh attribute ids, so two
+    *    reads of one table in one plan (a self-join) stay as unambiguous
+    *    as two `spark.read` frames; the schema and file index are shared.
+    *    No job, no file listing, no data-source lookup.
+    *  - '''Invalidation:''' the stamp is [[graft.ops.IndexFs.shallowStamp]],
+    *    the name, length and mtime of the root and its direct children.
+    *    Spark writes unique part-file names and rewrites `_SUCCESS`, and a
+    *    new file inside a partition directory bumps that directory's
+    *    mtime, so every overwrite, append or delete changes the stamp; the
+    *    reader then resolves through `spark.read` again and replaces the
+    *    entry. The stamp is taken BEFORE resolving, so a write racing the
+    *    resolution can only make the entry look stale, never fresh. A
+    *    missing root is never cached: its read fails as `spark.read` does.
+    *  - '''Declared schemas:''' a table that can hold no data files (an
+    *    empty delta generation, a partitioned table with only empty
+    *    partitions) must be read with its declared `schema`: inference
+    *    has no footer to read and fails, a declared-schema read of it
+    *    returns zero rows.
+    *  - '''Lifetime:''' no setting; entries end with their session (a
+    *    stopped context's entries are dropped on the next miss) and a
+    *    fixed LRU cap ([[MemoCap]]) bounds tables written once, read once.
+    *
+    * At 100 TB a catalog snapshot id (an Iceberg/Delta table version)
+    * takes the stamp's place: the same resolve-once contract, keyed by a
+    * version the catalog already keeps instead of a directory listing. */
+  def read(s: SparkSession, path: String, schema: Option[StructType] = None,
+           options: Map[String, String] = Map.empty): DataFrame =
+    readAll(s, Seq(path), schema, options)
+
+  /** [[read]] over several roots as ONE scan (the committed delta
+    * generations of an index); the stamp folds every root's. */
+  def readAll(s: SparkSession, paths: Seq[String], schema: Option[StructType] = None,
+              options: Map[String, String] = Map.empty): DataFrame = {
+    val key = ReadKey(s, paths, schema, options)
+    val stamps = paths.map(graft.ops.IndexFs.shallowStamp)
+    val stamp =
+      if (stamps.contains(None)) None else Some(stamps.flatten.foldLeft(17L)(_ * 31 + _))
+    val hit = stamp.flatMap(st =>
+      memo.synchronized(Option(memo.get(key))).filter(_._1 == st).map(_._2))
+    hit match {
+      case Some(rel) => Bridge.ofRows(s, rel.newInstance())
+      case None =>
+        val df = schema.foldLeft(s.read.options(options))(_ schema _).parquet(paths: _*)
+        (stamp, Bridge.analyzedPlan(df)) match {
+          case (Some(st), rel: LogicalRelation) => memo.synchronized {
+            memo.keySet.removeIf(_.s.sparkContext.isStopped)
+            memo.put(key, (st, rel))
+          }
+          case _ =>
+        }
+        df
+    }
+  }
+
+  /** Most entries the reader memo keeps, over all sessions (LRU). */
+  private val MemoCap = 256
+
+  private final case class ReadKey(s: SparkSession, paths: Seq[String],
+                                   schema: Option[StructType], options: Map[String, String])
+
+  private val memo = new java.util.LinkedHashMap[ReadKey, (Long, LogicalRelation)](
+      64, 0.75f, true) {
+    override def removeEldestEntry(
+        e: java.util.Map.Entry[ReadKey, (Long, LogicalRelation)]): Boolean = size > MemoCap
+  }
+
   def tbl(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    read(s, s"$dir/$name.parquet")
 
   def lineitem(s: SparkSession, dir: String): DataFrame  = tbl(s, dir, "lineitem")
   def orders(s: SparkSession, dir: String): DataFrame    = tbl(s, dir, "orders")

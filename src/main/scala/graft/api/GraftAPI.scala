@@ -1,5 +1,6 @@
 package graft.api
 
+import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -280,7 +281,7 @@ object GraftAPI {
       "hotSize" -> graft.ops.DedupOps.RebandHotSize.toString)
     require(graft.ops.IndexFs.touch(marker),
       s"could not commit index marker under $path")
-    s.read.parquet(s"$path/bands")
+    Tables.read(s, s"$path/bands")
       .groupBy("band")
       .agg(countDistinct(col("band_key")).as("n_keys"),
         count(lit(1)).as("n_postings"),
@@ -354,7 +355,7 @@ object GraftAPI {
     // generations and the fine side-table coincide, so one schema
     // serves both.
     val deltaSchema = graft.ops.MinhashIndex.facadeFineSchema(
-      spark.read.parquet(bandsPath).schema)
+      Tables.read(spark, bandsPath).schema)
     // localCheckpoint: the banded batch feeds the delta write AND the
     // fine refresh — one signature pass, lineage severed.
     val banded = minhashBandsWithSub(batch, id, text, numHashes, bands)
@@ -365,7 +366,7 @@ object GraftAPI {
     // refresh AND the returned manifest (review r13 — this call used to
     // scan the base table three times); persisted across the fine write,
     // released before return (the manifest re-reads from disk lazily).
-    val basePost = spark.read.parquet(bandsPath)
+    val basePost = Tables.read(spark, bandsPath)
       .select("_id", "band", "band_key", "pband")
       .persist()
     // Committed-generation listing is taken ONCE, after this batch's
@@ -380,9 +381,8 @@ object GraftAPI {
           graft.ops.IndexFs.child(d, "_SUCCESS")))
       meta.get("hotSize").foreach { hs =>
         val hotSize = hs.toLong
-        val deltaSub = spark.read.schema(deltaSchema)
-          .option("basePath", deltaRoot)
-          .parquet(committed: _*)
+        val deltaSub = Tables.readAll(spark, committed, Some(deltaSchema),
+          Map("basePath" -> deltaRoot))
           .select(col("_id"), col("band"), col("band_key"), col("sub_key"),
             col("pband"))
         val hot = basePost.select("band", "band_key")
@@ -394,8 +394,7 @@ object GraftAPI {
         // table (base) and the delta rows themselves — buckets pushed
         // over the threshold by THIS append included, no text re-read.
         // distinct: a replayed batch's rows recompute byte-identically.
-        val subKeys = spark.read
-          .parquet(graft.ops.IndexFs.child(root, "sub_keys"))
+        val subKeys = Tables.read(spark, graft.ops.IndexFs.child(root, "sub_keys"))
         val newFine = basePost
           .join(hot, Seq("band", "band_key"), "left_semi")
           .join(subKeys, "_id")
@@ -408,11 +407,10 @@ object GraftAPI {
           .parquet(graft.ops.IndexFs.child(root, "bands_fine"))
       }
     } finally basePost.unpersist()
-    val nBase = spark.read.parquet(bandsPath)
+    val nBase = Tables.read(spark, bandsPath)
       .groupBy("band").agg(count(lit(1)).as("n_base"))
-    val nNew = spark.read.schema(deltaSchema)
-      .option("basePath", deltaRoot)
-      .parquet(committed: _*)
+    val nNew = Tables.readAll(spark, committed, Some(deltaSchema),
+      Map("basePath" -> deltaRoot))
       .groupBy("band").agg(count(lit(1)).as("n_new"))
     nBase.join(nNew, Seq("band"), "full_outer")
       .select(col("band").cast("int").as("band"),
@@ -470,17 +468,16 @@ object GraftAPI {
       s"index at $root is not committed (a crashed lifecycle op?) — " +
         "rebuild via writeMinhashIndex instead of compacting")
     if (committed.nonEmpty) {
-      val baseSchema = spark.read.parquet(bandsPath).schema
+      val baseSchema = Tables.read(spark, bandsPath).schema
       val hasBatchAxis = baseSchema.fieldNames.contains("pbatch")
       val batchWidth = meta.get("batchWidth").map(_.toLong).getOrElse(0L)
       if (hasBatchAxis) require(batchWidth > 0,
         s"index at $root has a pbatch axis but records batchWidth=" +
           s"${meta.get("batchWidth").orNull} — cannot derive the " +
           "appended rows' ingest-batch partitions")
-      val deltaSub = spark.read
-        .schema(graft.ops.MinhashIndex.facadeFineSchema(baseSchema))
-        .option("basePath", deltaRoot)
-        .parquet(committed: _*)
+      val deltaSub = Tables.readAll(spark, committed,
+        Some(graft.ops.MinhashIndex.facadeFineSchema(baseSchema)),
+        Map("basePath" -> deltaRoot))
         .select("_id", "band", "band_key", "sub_key", "pband")
       // distinct on the posting key: replayed/overlapping generations
       // must fold to one row, the idempotent-append contract extended
@@ -494,12 +491,11 @@ object GraftAPI {
       // compact re-lands docs the base already holds — the fold must
       // collapse them to one posting per (doc, band), not double bucket
       // sizes. O(index) shuffle, which an in-place compact already is.
-      val merged = spark.read.parquet(bandsPath)
+      val merged = Tables.read(spark, bandsPath)
         .unionByName(deltaPost)
         .distinct()
         .localCheckpoint() // severs the read from the overwrite below
-      val subKeys = spark.read
-        .parquet(graft.ops.IndexFs.child(root, "sub_keys"))
+      val subKeys = Tables.read(spark, graft.ops.IndexFs.child(root, "sub_keys"))
         .unionByName(deltaSub.select("_id", "sub_key").distinct())
         .distinct()
         .localCheckpoint()
@@ -537,7 +533,7 @@ object GraftAPI {
           s"could not remove the folded delta generations under $root")
       }
     }
-    spark.read.parquet(bandsPath)
+    Tables.read(spark, bandsPath)
       .groupBy("band")
       .agg(countDistinct(col("band_key")).as("n_keys"),
         count(lit(1)).as("n_postings"),
@@ -568,7 +564,7 @@ object GraftAPI {
     // meta key is simply absent); the meta check stays as the recorded-
     // geometry cross-check. Both run BEFORE the marker retirement: a
     // rejected mis-call must leave a valid index valid.
-    require(spark.read.parquet(bandsPath).columns.contains("pbatch"),
+    require(Tables.read(spark, bandsPath).columns.contains("pbatch"),
       s"index at $root was written without a batchWidth (ingest-batch " +
         "partition axis) — partition-pruned deletes need it; rebuild " +
         "with writeMinhashIndex(batchWidth = <ids per ingest batch>)")
@@ -603,11 +599,9 @@ object GraftAPI {
       .filter(d => graft.ops.IndexFs.isFile(
         graft.ops.IndexFs.child(d, "_SUCCESS")))
     if (deltaGens.nonEmpty) {
-      val hitDelta = spark.read
-        .schema(graft.ops.MinhashIndex.facadeFineSchema(
-          spark.read.parquet(bandsPath).schema))
-        .option("basePath", graft.ops.IndexFs.child(root, "bands_delta"))
-        .parquet(deltaGens: _*)
+      val hitDelta = Tables.readAll(spark, deltaGens,
+        Some(graft.ops.MinhashIndex.facadeFineSchema(Tables.read(spark, bandsPath).schema)),
+        Map("basePath" -> graft.ops.IndexFs.child(root, "bands_delta")))
         .join(deleteIds.select(col(id).as("_id")), Seq("_id"), "left_semi")
         .limit(1).count()
       require(hitDelta == 0L,
@@ -628,10 +622,8 @@ object GraftAPI {
       // hot-postings-small, so a full rewrite is fine.
       val fineDir = graft.ops.IndexFs.child(root, "bands_fine")
       if (graft.ops.Artifacts.readMeta(root).contains("hotSize")) {
-        val survivors = spark.read
-          .schema(graft.ops.MinhashIndex.facadeFineSchema(
-            spark.read.parquet(bandsPath).schema))
-          .parquet(fineDir)
+        val survivors = Tables.read(spark, fineDir,
+          Some(graft.ops.MinhashIndex.facadeFineSchema(Tables.read(spark, bandsPath).schema)))
           .join(deleteIds.select(col(id).as("_id")), Seq("_id"), "left_anti")
           .localCheckpoint()
         survivors.repartition(col("pband"))
@@ -644,7 +636,7 @@ object GraftAPI {
       val subDir = graft.ops.IndexFs.child(root, "sub_keys")
       if (graft.ops.IndexFs.isFile(
           graft.ops.IndexFs.child(subDir, "_SUCCESS"))) {
-        val keptSub = spark.read.parquet(subDir)
+        val keptSub = Tables.read(spark, subDir)
           .join(deleteIds.select(col(id).as("_id")), Seq("_id"), "left_anti")
           .localCheckpoint()
         keptSub.write.mode("overwrite").parquet(subDir)
@@ -694,7 +686,7 @@ object GraftAPI {
     // minhashIndexDelete discipline): a rejected mis-call — wrong path,
     // a table that is not a cell-partitioned code layout — must leave a
     // valid index valid, not retired-and-never-recommitted.
-    val liveCols = spark.read.parquet(codesPath).columns.toSet
+    val liveCols = Tables.read(spark, codesPath).columns.toSet
     Seq("vec_id", "cell").foreach(c => require(liveCols.contains(c),
       s"table at $codesPath has no '$c' column — not a cell-partitioned " +
         "ANN code table (buildAnnIndex's ivfpq_codes layout)"))
@@ -716,9 +708,9 @@ object GraftAPI {
           "this delete; drop those partitions via the catalog instead of " +
           "a data rewrite")
     }
-    refuseEmptied(codesPath, spark.read.parquet(codesPath))
-    if (hasCompact) refuseEmptied(compactP, spark.read
-      .schema(graft.ops.VectorOps.codesSchema).parquet(compactP))
+    refuseEmptied(codesPath, Tables.read(spark, codesPath))
+    if (hasCompact) refuseEmptied(compactP,
+      Tables.read(spark, compactP, Some(graft.ops.VectorOps.codesSchema)))
     withRetiredMarker(root) {
       graft.ops.VectorOps.deleteFromCodes(spark, codesPath, del)
       // Lifecycle siblings (review r13): the probe-root resolver serves a
@@ -729,14 +721,12 @@ object GraftAPI {
       // a data-file-less delta must read as empty, not crash inference.
       if (hasCompact)
         graft.ops.VectorOps.deleteFromCodes(spark, compactP, del,
-          source = Some(spark.read
-            .schema(graft.ops.VectorOps.codesSchema).parquet(compactP)))
+          source = Some(Tables.read(spark, compactP, Some(graft.ops.VectorOps.codesSchema))))
       // The delta takes a guard-FREE full rewrite: it is day-scale and
       // library-managed, so an emptied cell has no catalog partition to
       // drop — the directory just goes.
       if (hasDelta) {
-        val survivors = spark.read
-          .schema(graft.ops.VectorOps.codesSchema).parquet(deltaP)
+        val survivors = Tables.read(spark, deltaP, Some(graft.ops.VectorOps.codesSchema))
           .select("vec_id", "m", "code", "cell")
           .join(del, Seq("vec_id"), "left_anti")
           .localCheckpoint()
@@ -752,7 +742,7 @@ object GraftAPI {
       val cellsP = graft.ops.IndexFs.child(root, "cells")
       if (graft.ops.IndexFs.isFile(
           graft.ops.IndexFs.child(cellsP, "_SUCCESS"))) {
-        val kept = spark.read.parquet(cellsP)
+        val kept = Tables.read(spark, cellsP)
           .join(del, Seq("vec_id"), "left_anti")
           .localCheckpoint()
         kept.write.mode("overwrite").parquet(cellsP)
@@ -1486,9 +1476,9 @@ object GraftAPI {
     val s = df.sparkSession
     val ix = graft.ops.IvfPqIndex.Ix(path)
     graft.ops.IvfPqIndex.buildAt(s, e, ix, cells, m, k, iters)
-    val nv = s.read.parquet(ix.cells)
+    val nv = Tables.read(s, ix.cells)
       .groupBy("cell").agg(count(lit(1)).as("n_vecs"))
-    val nc = s.read.parquet(ix.ivfCodes)
+    val nc = Tables.read(s, ix.ivfCodes)
       .groupBy("cell").agg(count(lit(1)).as("n_codes"))
     nv.join(nc, "cell").select(col("cell"), col("n_vecs"), col("n_codes"))
   }
@@ -1588,12 +1578,12 @@ object GraftAPI {
         require(got == dim,
           s"batch vectors are $got-dimensional; the index at $path was " +
             s"trained at dim=$dim")
-        val fresh = e.join(s.read.parquet(ix.cells).select("vec_id"),
+        val fresh = e.join(Tables.read(s, ix.cells).select("vec_id"),
           Seq("vec_id"), "left_anti")
         // ONE shared stored-codebook encode path with the registry append
         // (review r13): byte-stable replay must not be able to drift.
         graft.ops.VectorOps.encodeAgainstStored(fresh,
-          s.read.parquet(ix.coarse), s.read.parquet(ix.ivfCodebooks),
+          Tables.read(s, ix.coarse), Tables.read(s, ix.ivfCodebooks),
           mM, sub)
       }
     // Fold into the single delta generation. Declared schema on the
@@ -1601,8 +1591,7 @@ object GraftAPI {
     // table. localCheckpoint severs the read from the overwrite.
     val merged = (if (graft.ops.IndexFs.isFile(graft.ops.IndexFs.child(
         ix.ivfCodesDelta, "_SUCCESS")))
-      s.read.schema(graft.ops.VectorOps.codesSchema)
-        .parquet(ix.ivfCodesDelta)
+      Tables.read(s, ix.ivfCodesDelta, Some(graft.ops.VectorOps.codesSchema))
         .select("vec_id", "m", "code", "cell")
         .unionByName(newCodes)
     else newCodes).distinct().localCheckpoint()
@@ -1612,10 +1601,9 @@ object GraftAPI {
         .write.mode("overwrite").partitionBy("pcell")
         .parquet(ix.ivfCodesDelta)
     }
-    val nBase = s.read.parquet(ix.cells)
+    val nBase = Tables.read(s, ix.cells)
       .groupBy("cell").agg(count(lit(1)).as("n_base"))
-    val nNew = s.read.schema(graft.ops.VectorOps.codesSchema)
-      .parquet(ix.ivfCodesDelta)
+    val nNew = Tables.read(s, ix.ivfCodesDelta, Some(graft.ops.VectorOps.codesSchema))
       .filter(col("m") === 0)
       .groupBy("cell").agg(count(lit(1)).as("n_new"))
     nBase.join(nNew, Seq("cell"), "full_outer")
@@ -1653,15 +1641,14 @@ object GraftAPI {
         "rebuild via buildAnnIndex instead of compacting")
     if (graft.ops.IndexFs.isFile(graft.ops.IndexFs.child(
         ix.ivfCodesDelta, "_SUCCESS"))) {
-      val delta = spark.read.schema(graft.ops.VectorOps.codesSchema)
-        .parquet(ix.ivfCodesDelta)
+      val delta = Tables.read(spark, ix.ivfCodesDelta, Some(graft.ops.VectorOps.codesSchema))
         .select("vec_id", "m", "code", "cell")
-      val merged = spark.read.parquet(ix.ivfCodes)
+      val merged = Tables.read(spark, ix.ivfCodes)
         .select("vec_id", "m", "code", "cell")
         .unionByName(delta)
         .distinct()
         .localCheckpoint()
-      val newCells = spark.read.parquet(ix.cells)
+      val newCells = Tables.read(spark, ix.cells)
         .unionByName(delta.filter(col("m") === 0).select("vec_id", "cell"))
         .distinct()
         .localCheckpoint()
@@ -1679,7 +1666,7 @@ object GraftAPI {
             s"could not retire the stale split marker under $path")
       }
     }
-    spark.read.parquet(ix.ivfCodes)
+    Tables.read(spark, ix.ivfCodes)
       .groupBy("cell")
       .agg(countDistinct(col("vec_id")).as("n_vecs"),
         count(lit(1)).as("n_codes"))

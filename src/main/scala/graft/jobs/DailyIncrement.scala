@@ -1,5 +1,6 @@
 package graft.jobs
 
+import graft.Tables
 import org.apache.spark.sql.functions._
 
 /** spark-submit entry point for the STEADY-STATE DAILY RUN — the job that
@@ -80,7 +81,7 @@ object DailyIncrement {
     try {
       graft.ops.PipelineOps.curationIncremental(spark, sfDir)
         .write.mode("overwrite").parquet(s"$outDir/verdicts")
-      val verdicts = spark.read.parquet(s"$outDir/verdicts")
+      val verdicts = Tables.read(spark, s"$outDir/verdicts")
       val keep = verdicts.filter(col("verdict") === "keep").select("doc_id")
       // TODAY's batch boundary (r13): docs >= AppendCutoff; everything
       // below it — base AND yesterday's delta — is already packed.
@@ -115,14 +116,14 @@ object DailyIncrement {
         .write.mode("overwrite").parquet(s"$outDir/postings_manifest")
       graft.ops.VectorOps.annIndexAppend(spark, sfDir)
         .write.mode("overwrite").parquet(s"$outDir/ann_delta_manifest")
-      val annNew = spark.read.parquet(s"$outDir/ann_delta_manifest")
+      val annNew = Tables.read(spark, s"$outDir/ann_delta_manifest")
         .agg(coalesce(sum("n_new"), lit(0L))).head().getLong(0)
       // 5. MAINTENANCE AUDIT — the shared detect step (see scaladoc).
       val posture = Maintenance.audit(spark, sfDir)
       Maintenance.auditDF(spark, posture)
         .write.mode("overwrite").parquet(s"$outDir/maintenance")
       def p(f: String) = posture.find(_.family == f).get
-      val shards = spark.read.parquet(s"$outDir/shards")
+      val shards = Tables.read(spark, s"$outDir/shards")
       val dayTokens = shards.agg(coalesce(sum("n_tokens"), lit(0L)))
         .head().getLong(0)
       // packed_tokens_total is THE feedback value: pass it verbatim as the

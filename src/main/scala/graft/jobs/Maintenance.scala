@@ -1,5 +1,6 @@
 package graft.jobs
 
+import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -79,33 +80,32 @@ object Maintenance {
   def audit(spark: SparkSession, sfDir: String): Seq[Posture] = {
     val mhIx = graft.ops.MinhashIndex.ensureBase(spark, sfDir)
     graft.ops.MinhashIndex.ensureDelta(spark, sfDir, mhIx)
-    val mhDelta = spark.read.schema(graft.ops.DedupOps.bandsSchema)
-      .parquet(mhIx.delta).select("band", "band_key")
+    val mhDelta = Tables.read(spark, mhIx.delta, Some(graft.ops.DedupOps.bandsSchema))
+      .select("band", "band_key")
     val mhFineCovered =
       if (new java.io.File(mhIx.root, "_fine_SUCCESS").isFile)
-        spark.read.schema(graft.ops.DedupOps.fineSchema)
-          .parquet(mhIx.fine).select("band", "band_key")
+        Tables.read(spark, mhIx.fine, Some(graft.ops.DedupOps.fineSchema))
+          .select("band", "band_key")
       else spark.emptyDataFrame
         .withColumn("band", lit(0)).withColumn("band_key", lit(""))
         .limit(0)
     val (mhHot, mhMax, mhUn) = hotPosture(
-      spark.read.parquet(mhIx.bands).select("band", "band_key")
+      Tables.read(spark, mhIx.bands).select("band", "band_key")
         .unionByName(mhDelta),
       mhDelta, Seq("band", "band_key"),
       graft.ops.DedupOps.RebandHotSize, mhFineCovered)
     val annIx = graft.ops.IvfPqIndex.ensureBase(spark, sfDir)
     graft.ops.IvfPqIndex.ensureDelta(spark, sfDir, annIx)
-    val annDelta = spark.read.schema(graft.ops.VectorOps.codesSchema)
-      .parquet(annIx.ivfCodesDelta)
+    val annDelta = Tables.read(spark, annIx.ivfCodesDelta, Some(graft.ops.VectorOps.codesSchema))
       .filter(col("m") === 0).select("cell")
     val annSplitCovered =
       if (graft.ops.IndexFs.isFile(
           graft.ops.IndexFs.child(annIx.root, "_split_SUCCESS")))
-        spark.read.schema(graft.ops.VectorOps.splitCentsSchema)
-          .parquet(s"${annIx.root}/coarse_split").select("cell")
+        Tables.read(spark, s"${annIx.root}/coarse_split",
+          Some(graft.ops.VectorOps.splitCentsSchema)).select("cell")
       else spark.emptyDataFrame.withColumn("cell", lit(0L)).limit(0)
     val (annHot, annMax, annUn) = hotPosture(
-      spark.read.parquet(annIx.cells).select("cell")
+      Tables.read(spark, annIx.cells).select("cell")
         .unionByName(annDelta),
       annDelta, Seq("cell"),
       graft.ops.VectorOps.SplitHotSize, annSplitCovered)

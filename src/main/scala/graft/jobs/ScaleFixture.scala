@@ -1,5 +1,6 @@
 package graft.jobs
 
+import graft.Tables
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -48,7 +49,7 @@ object ScaleFixture {
       .appName("graft-scale-fixture")
       .getOrCreate()
     try {
-      val docs = spark.read.parquet(s"$src/documents.parquet")
+      val docs = Tables.read(spark, s"$src/documents.parquet")
       val docStride = {
         val m = docs.agg(max("doc_id")).head().getLong(0) + 1
         // round the stride up to a multiple of 50 to preserve the
@@ -71,7 +72,7 @@ object ScaleFixture {
         .repartition(32)
         .write.mode("overwrite").parquet(s"$out/documents.parquet")
 
-      val emb = spark.read.parquet(s"$src/embeddings.parquet")
+      val emb = Tables.read(spark, s"$src/embeddings.parquet")
       val vecStride = emb.agg(max("vec_id")).head().getLong(0) + 1
       emb.select(col("*"), copyIdx)
         .select(
@@ -87,7 +88,7 @@ object ScaleFixture {
       // pass-through tables the corpus composites' spines/joins touch
       Seq("region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events").foreach { t =>
-        spark.read.parquet(s"$src/$t.parquet")
+        Tables.read(spark, s"$src/$t.parquet")
           .write.mode("overwrite").parquet(s"$out/$t.parquet")
       }
       // the raw JSONL/XML side files some scans read, if present

@@ -52,8 +52,6 @@ private[graft] object Artifacts {
     }
   }
 
-  /** Fold (name, mtime, length) over the source file (or every file under
-    * it when it's a directory, in name order). */
   /** Recursive local delete, shared by the bucketed-table GC and the
     * crash-window specs (review r11 — was copy-pasted three times). */
   private[graft] def rmrf(f: java.io.File): Unit = {
@@ -61,28 +59,14 @@ private[graft] object Artifacts {
     f.delete(); ()
   }
 
-  /** One-level fold of a table root (name/mtime/length of the root and
-    * its DIRECT children) — the cheap memo key for [[fingerprint]]:
-    * any rewrite touches a direct child (part file or partition dir),
-    * bumping its mtime, so the deep walk re-runs exactly when content
-    * may have changed. */
-  private[graft] def shallowStamp(dir: String, table: String): Long = {
-    // Nanosecond mtimes + child COUNT (ADVICE r11): millisecond
-    // granularity let a same-millisecond regeneration with identical
-    // child names/sizes serve a stale deep fingerprint from the memo.
-    // Files.getLastModifiedTime carries the filesystem's full
-    // resolution (ns on ext4/xfs/apfs), shrinking the silent-staleness
-    // window from 1 ms to the fs clock tick.
-    def ns(f: java.io.File): Long =
-      try java.nio.file.Files.getLastModifiedTime(f.toPath)
-        .to(java.util.concurrent.TimeUnit.NANOSECONDS)
-      catch { case _: java.io.IOException => f.lastModified }
-    val root = new java.io.File(s"$dir/$table")
-    val kids = Option(root.listFiles).getOrElse(Array.empty).sortBy(_.getName)
-    kids.foldLeft(ns(root) * 31 + kids.length)((a, c) =>
-      a * 31 + c.getName.hashCode.toLong + ns(c) * 7 + c.length)
-  }
+  /** [[IndexFs.shallowStamp]] of a table root (0 when absent) — the cheap
+    * memo key for [[fingerprint]]: the deep walk re-runs exactly when a
+    * direct child changed. */
+  private[graft] def shallowStamp(dir: String, table: String): Long =
+    IndexFs.shallowStamp(s"$dir/$table").getOrElse(0L)
 
+  /** Fold (name, mtime, length) over the source file (or every file under
+    * it when it's a directory, in name order). */
   private[graft] def fingerprint(dir: String, table: String): Long = {
     def fold(f: java.io.File): Long =
       if (f.isDirectory)

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Tables
 import graft.Tables._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -588,7 +589,7 @@ object DedupOps {
     * a lost or doubled row in the write fails the count oracle. */
   def buildMinhashIndex(s: SparkSession, dir: String): DataFrame = {
     val ix = MinhashIndex.ensure(s, dir)
-    s.read.parquet(ix.bands)
+    Tables.read(s, ix.bands)
       .groupBy("band")
       .agg(countDistinct(col("band_key")).as("n_keys"),
         count(lit(1)).as("n_postings"),
@@ -611,7 +612,7 @@ object DedupOps {
     * a skewed bucket stalls the pair join. */
   def minhashIndexStats(s: SparkSession, dir: String): DataFrame = {
     val ix = MinhashIndex.ensure(s, dir)
-    val buckets = s.read.parquet(ix.bands)
+    val buckets = Tables.read(s, ix.bands)
       .groupBy("band", "band_key").agg(count(lit(1)).as("sz"))
     buckets.groupBy("band")
       .agg(count(lit(1)).as("n_buckets"),
@@ -650,10 +651,10 @@ object DedupOps {
   def dedupIndexAppend(s: SparkSession, dir: String): DataFrame = {
     val ix = MinhashIndex.ensureBase(s, dir)
     MinhashIndex.writeDelta(s, dir, ix)
-    val base = s.read.parquet(ix.bands)
+    val base = Tables.read(s, ix.bands)
       .groupBy("band").agg(count(lit(1)).as("n_base"))
     // declared schema: an empty delta slice writes a data-file-less table
-    val fresh = s.read.schema(bandsSchema).parquet(ix.delta)
+    val fresh = Tables.read(s, ix.delta, Some(bandsSchema))
       .groupBy("band").agg(count(lit(1)).as("n_new"))
     base.join(fresh, Seq("band"), "left")
       .select(col("band").cast("int").as("band"), col("n_base"),
@@ -682,13 +683,13 @@ object DedupOps {
     // append re-runs; a committed one is byte-stable (deterministic
     // banding) and is exactly what a re-append would rewrite.
     MinhashIndex.ensureDelta(s, dir, ix)
-    s.read.parquet(ix.bands)
-      .unionByName(s.read.schema(bandsSchema).parquet(ix.delta))
+    Tables.read(s, ix.bands)
+      .unionByName(Tables.read(s, ix.delta, Some(bandsSchema)))
       .withColumn("pband", col("band"))
       .repartition(col("pband"))
       .write.mode("overwrite").partitionBy("pband")
       .parquet(ix.compact)
-    s.read.parquet(ix.compact)
+    Tables.read(s, ix.compact)
       .groupBy("band")
       .agg(countDistinct(col("band_key")).as("n_keys"),
         count(lit(1)).as("n_postings"),
@@ -731,7 +732,7 @@ object DedupOps {
                                      del: DataFrame,
                                      idCol: String = "doc_id",
                                      source: Option[DataFrame] = None): Unit = {
-    val liveT = source.getOrElse(s.read.parquet(live))
+    val liveT = source.getOrElse(Tables.read(s, live))
     val affected = liveT.join(del, idCol)
       .select(col("band").as("aband"), col("pbatch").as("abatch")).distinct()
     val survivors = liveT.drop("pband")
@@ -769,7 +770,7 @@ object DedupOps {
     synchronized {
       val ix = MinhashIndex.ensure(s, dir)
       val live = s"${ix.root}/bands_live"
-      val pristine = s.read.parquet(ix.bands).drop("pband")
+      val pristine = Tables.read(s, ix.bands).drop("pband")
         .withColumn("pbatch", expr(s"doc_id div $IngestBatch"))
       // The layout is keyed by the ingest-batch width: a live table built
       // by older code with a different width would otherwise survive in
@@ -820,7 +821,7 @@ object DedupOps {
         col("doc_id") % 3 === 0)
       .select("doc_id")
     deleteFromBands(s, live, del, source = Some(pristine))
-    s.read.parquet(live)
+    Tables.read(s, live)
       .groupBy("band")
       .agg(countDistinct(col("band_key")).as("n_keys"),
         count(lit(1)).as("n_postings"),
@@ -922,7 +923,7 @@ object DedupOps {
   def dedupIndexReband(s: SparkSession, dir: String): DataFrame = {
     val ix = MinhashIndex.ensure(s, dir)
     val fine = fineRowsFor(s, dir,
-      s.read.parquet(ix.bands).select("doc_id", "band", "band_key"))
+      Tables.read(s, ix.bands).select("doc_id", "band", "band_key"))
     // Marker-disciplined rewrite (ADVICE r11): the side-table lands in
     // a committed index root, so a crash mid-write must read as "no
     // fine table", not as a trustworthy partial one.
@@ -931,7 +932,7 @@ object DedupOps {
     // bucket >= the hot threshold writes a data-file-less partitioned
     // table, and schema inference on it throws — a healthy index must
     // yield an EMPTY manifest, not a crash.
-    val sub = s.read.schema(fineSchema).parquet(s"${ix.root}/bands_fine")
+    val sub = Tables.read(s, s"${ix.root}/bands_fine", Some(fineSchema))
       .groupBy("band", "band_key", "sub_key").agg(count(lit(1)).as("ssz"))
     sub.groupBy("band", "band_key")
       .agg(sum("ssz").as("n_docs"),
@@ -979,7 +980,7 @@ object DedupOps {
     // left-semi probe, and a semi-join is insensitive to build-side
     // duplicates — the old distinct paid a full shuffle+aggregate of the
     // stored fine table per probe for nothing.
-    val fineKeys = s.read.schema(fineSchema).parquet(finePath)
+    val fineKeys = Tables.read(s, finePath, Some(fineSchema))
       .select("band", "band_key", "sub_key")
     batch.join(coldKeys, Seq("band", "band_key"), "left_semi")
       .select("doc_id")
@@ -1052,14 +1053,13 @@ object DedupOps {
     // ONLY through a batch semi-join, so leaving the fine rows
     // un-deduplicated changes no flag. (Batch-key pruning of the size
     // aggregate was A/B'd and reverted — see fineProbeHits.)
-    val baseSz = s.read.parquet(ix.bands)
+    val baseSz = Tables.read(s, ix.bands)
       .groupBy("band", "band_key").agg(count(lit(1)).as("sz"))
     val coldKeys0 = baseSz.filter(col("sz") < RebandHotSize)
       .select("band", "band_key")
     val baseHot = baseSz.filter(col("sz") >= RebandHotSize)
       .select("band", "band_key")
-    val fineKeys0 = s.read.schema(fineSchema)
-      .parquet(MinhashIndex.ensureFine(s, dir, ix))
+    val fineKeys0 = Tables.read(s, MinhashIndex.ensureFine(s, dir, ix), Some(fineSchema))
       .filter(col("doc_id") < IncrementalCutoff)
       .join(baseHot, Seq("band", "band_key"), "left_semi")
       .select("band", "band_key", "sub_key")

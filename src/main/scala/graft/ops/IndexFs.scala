@@ -70,6 +70,38 @@ private[graft] object IndexFs {
       .map(_.getPath.toString).sorted
   }
 
+  /** One-level fold of a table root (a directory or a single file): mtime
+    * and length of the root, then name, mtime and length of its DIRECT
+    * children in name order; None when the root does not exist. Any
+    * Spark rewrite touches a direct child (a unique part-file name, a
+    * partition directory, `_SUCCESS`, the root itself through
+    * `_temporary`), so an unchanged stamp means an unchanged file set.
+    * Local paths fold nanosecond mtimes (at millisecond granularity a
+    * same-millisecond regeneration with identical child names and sizes
+    * would keep its stamp); other schemes fold the store's `FileStatus`
+    * mtime, the resolution it records. */
+  def shallowStamp(path: String): Option[Long] = withFs(path) { (fs, p) =>
+    def fold(mtime: Long, len: Long, kids: Seq[(String, Long, Long)]): Long =
+      kids.foldLeft((mtime * 31 + len) * 31 + kids.length)((a, c) =>
+        a * 31 + c._1.hashCode.toLong + c._2 * 7 + c._3)
+    if (fs.getScheme == "file") {
+      def ns(f: java.io.File): Long =
+        try java.nio.file.Files.getLastModifiedTime(f.toPath)
+          .to(java.util.concurrent.TimeUnit.NANOSECONDS)
+        catch { case _: java.io.IOException => f.lastModified }
+      val root = new java.io.File(p.toUri.getPath)
+      if (!root.exists) None
+      else Some(fold(ns(root), root.length, Option(root.listFiles).getOrElse(Array.empty)
+        .toSeq.sortBy(_.getName).map(c => (c.getName, ns(c), c.length))))
+    } else if (!fs.exists(p)) None
+    else {
+      val st = fs.getFileStatus(p)
+      val kids = if (st.isDirectory) fs.listStatus(p).toSeq else Seq.empty
+      Some(fold(st.getModificationTime, st.getLen, kids.sortBy(_.getPath.getName)
+        .map(c => (c.getPath.getName, c.getModificationTime, c.getLen))))
+    }
+  }
+
   def readIfExists[T](path: String)(body: java.io.InputStream => T): Option[T] =
     withFs(path) { (fs, p) =>
       if (!fs.exists(p)) None

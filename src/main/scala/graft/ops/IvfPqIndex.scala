@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Tables
 import graft.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -108,12 +109,12 @@ object IvfPqIndex {
     // held-out slice writes a data-file-less delta — it must resolve to
     // "base alone", not crash the probe (the bandsSchema rule).
     if (new java.io.File(ix.ivfCodesCompact, "_SUCCESS").isFile)
-      s.read.schema(VectorOps.codesSchema).parquet(ix.ivfCodesCompact)
+      Tables.read(s, ix.ivfCodesCompact, Some(VectorOps.codesSchema))
         .select(cols.map(col): _*)
     else {
       val delta = ensureDelta(s, dir, ix)
-      s.read.parquet(ix.ivfCodes).select(cols.map(col): _*)
-        .unionByName(s.read.schema(VectorOps.codesSchema).parquet(delta)
+      Tables.read(s, ix.ivfCodes).select(cols.map(col): _*)
+        .unionByName(Tables.read(s, delta, Some(VectorOps.codesSchema))
           .select(cols.map(col): _*))
     }
   }
@@ -222,11 +223,11 @@ object IvfPqIndex {
       // 1. coarse centroids (learned cells, deterministic training)
       VectorOps.kmeansCentroids(e, iters, cells)
         .write.mode("overwrite").parquet(ix.coarse)
-      val coarse = s.read.parquet(ix.coarse)
+      val coarse = Tables.read(s, ix.coarse)
       // 2. coarse cell assignment
       VectorOps.assignCells(e, coarse)
         .write.mode("overwrite").parquet(ix.cells)
-      val cellsT = s.read.parquet(ix.cells)
+      val cellsT = Tables.read(s, ix.cells)
       // 3. raw-vector PQ: one long-form frame holds every subspace
       val emLong = e.select(col("vec_id"), sliceL(col("x")))
         .select(col("vec_id"), col("pos").cast("int").as("m"), col("col").as("x"))
@@ -234,7 +235,7 @@ object IvfPqIndex {
       try {
         VectorOps.kmeansCentroidsLong(emLong, iters, k)
           .write.mode("overwrite").parquet(ix.pqCodebooks)
-        VectorOps.assignCellsLong(emLong, s.read.parquet(ix.pqCodebooks))
+        VectorOps.assignCellsLong(emLong, Tables.read(s, ix.pqCodebooks))
           .select(col("vec_id"), col("m"), col("cell").as("code"))
           .write.mode("overwrite").parquet(ix.pqCodes)
       } finally emLong.unpersist(false)
@@ -254,7 +255,7 @@ object IvfPqIndex {
         // column keeps its exact LongType — partition-value inference would
         // narrow it); one file per cell via the repartition.
         VectorOps.assignCellsLong(remLong.select("m", "vec_id", "x"),
-            s.read.parquet(ix.ivfCodebooks))
+            Tables.read(s, ix.ivfCodebooks))
           .select(col("vec_id"), col("m"), col("cell").as("code"))
           .join(cellsT, "vec_id")
           .withColumn("pcell", col("cell"))

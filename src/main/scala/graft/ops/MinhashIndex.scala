@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -124,12 +125,12 @@ object MinhashIndex {
     // table, and inference on it throws — an empty delta must resolve
     // to "base alone", not crash the probe.
     if (new java.io.File(ix.compact, "_SUCCESS").isFile)
-      s.read.schema(DedupOps.bandsSchema).parquet(ix.compact)
+      Tables.read(s, ix.compact, Some(DedupOps.bandsSchema))
         .select(cols.map(col): _*)
     else {
       val delta = ensureDelta(s, dir, ix)
-      s.read.parquet(ix.bands).select(cols.map(col): _*)
-        .unionByName(s.read.schema(DedupOps.bandsSchema).parquet(delta)
+      Tables.read(s, ix.bands).select(cols.map(col): _*)
+        .unionByName(Tables.read(s, delta, Some(DedupOps.bandsSchema))
           .select(cols.map(col): _*))
     }
   }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Tables
 import graft.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -481,9 +482,9 @@ object PipelineOps {
     val Budget = 2000L
     val survivors = withRangeBucket(
       qualityKept(s, dir)
-        .join(s.read.parquet(s"$root/exact_keep"), Seq("doc_id"), "left_semi")
-        .join(s.read.parquet(s"$root/cluster_drops"), Seq("doc_id"), "left_anti")
-        .join(s.read.parquet(s"$root/contaminated"), Seq("doc_id"), "left_anti")
+        .join(Tables.read(s, s"$root/exact_keep"), Seq("doc_id"), "left_semi")
+        .join(Tables.read(s, s"$root/cluster_drops"), Seq("doc_id"), "left_anti")
+        .join(Tables.read(s, s"$root/contaminated"), Seq("doc_id"), "left_anti")
         .filter(col("doc_id") % 50 =!= 0)
         .select(col("doc_id"), col("lang"), col("n_tokens")),
       "doc_id", documents(s, dir).select("doc_id"))
@@ -605,11 +606,11 @@ object PipelineOps {
     val root = ensureCurationStages(s, dir)
     val docs = documents(s, dir)
     val qOk = qualityOk
-    val exactKeep = s.read.parquet(s"$root/exact_keep")
+    val exactKeep = Tables.read(s, s"$root/exact_keep")
       .withColumn("ek", lit(true))
-    val clusterDrops = s.read.parquet(s"$root/cluster_drops")
+    val clusterDrops = Tables.read(s, s"$root/cluster_drops")
       .withColumn("cd", lit(true))
-    val contaminated = s.read.parquet(s"$root/contaminated")
+    val contaminated = Tables.read(s, s"$root/contaminated")
       .withColumn("ct", lit(true))
     val reached = docs.select(col("doc_id"), qOk.as("q_ok"))
       .join(exactKeep, Seq("doc_id"), "left")
@@ -952,10 +953,10 @@ object PipelineOps {
     // sort-before-repartition pass for nothing. coalesce folds the 64
     // fragments into 4 writers shuffle-free — the standard
     // rewriteDataFiles bin-pack shape.
-    s.read.parquet(frag).coalesce(4)
+    Tables.read(s, frag).coalesce(4)
       .write.mode("overwrite").option("maxRecordsPerFile", 500000)
       .parquet(tidy)
-    s.read.parquet(tidy)
+    Tables.read(s, tidy)
       .groupBy("l_returnflag")
       .agg(count(lit(1)).as("n"), dsum(col("l_extendedprice")).as("sum_price"))
       .orderBy("l_returnflag")

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Tables
 import graft.Tables._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -697,7 +698,7 @@ object Relational {
       .filter(col("l_quantity") > 40)
       .select("l_orderkey", "l_linenumber", "l_returnflag", "l_extendedprice")
       .write.mode("overwrite").partitionBy("l_returnflag").parquet(path)
-    s.read.parquet(path)
+    Tables.read(s, path)
       .groupBy("l_returnflag")
       .agg(count(lit(1)).as("n"), dsum(col("l_extendedprice")).as("sum_price"))
       .orderBy("l_returnflag")
@@ -877,7 +878,7 @@ object Relational {
         .sortWithinPartitions("l_orderkey", "l_linenumber")
         .write.mode("overwrite").parquet(path)
     }
-    s.read.parquet(path)
+    Tables.read(s, path)
       .filter(col("l_orderkey").between(1000, 3000))
       .groupBy((col("l_orderkey") % 7).as("g"))
       .agg(count(lit(1)).as("n"), dsum(col("l_quantity")).as("sum_qty"))
@@ -903,7 +904,7 @@ object Relational {
         .repartition(col("o_orderpriority"))
         .write.mode("overwrite").partitionBy("o_orderpriority").parquet(path)
     }
-    s.read.parquet(path)
+    Tables.read(s, path)
       .filter(col("o_orderpriority").isin("1-URGENT", "2-HIGH"))
       .groupBy("o_orderpriority")
       .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("sum_price"))
@@ -935,7 +936,7 @@ object Relational {
         .sortWithinPartitions("z")
         .write.mode("overwrite").parquet(path)
     }
-    s.read.parquet(path)
+    Tables.read(s, path)
       .filter(col("l_orderkey").between(1000, 3000) &&
         col("l_partkey").between(100, 500))
       .groupBy("l_partkey")
@@ -1017,7 +1018,7 @@ object Relational {
     val dim = orders(s, dir)
       .select(date_format(col("o_orderdate"), "yyyy-MM").as("m")).distinct()
       .filter(split(col("m"), "-").getItem(1).cast("int").between(4, 6))
-    s.read.parquet(path)
+    Tables.read(s, path)
       .join(broadcast(dim), col("om") === col("m"))
       .groupBy("om")
       .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("sum_price"))
@@ -1093,7 +1094,7 @@ object Relational {
     o.filter(col("o_orderkey") % 2 === 1)
       .select("o_orderkey", "o_totalprice", "o_orderpriority")
       .write.mode("overwrite").parquet(s"$path/epoch=2")
-    s.read.option("mergeSchema", "true").parquet(path)
+    Tables.read(s, path, None, Map("mergeSchema" -> "true"))
       .groupBy(coalesce(col("o_orderpriority"), lit("<pre-evolution>")).as("prio"))
       .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("sum_price"))
       .orderBy("prio")

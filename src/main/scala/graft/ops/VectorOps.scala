@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Tables
 import graft.Tables._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -275,7 +276,7 @@ object VectorOps {
     val ix = IvfPqIndex.ensure(s, dir)
     val e = embeddings(s, dir)
       .select(col("vec_id"), col("label"), asD(col("embedding")).as("x"))
-    val cells = s.read.parquet(ix.cells)
+    val cells = Tables.read(s, ix.cells)
     val ex = e.join(cells, "vec_id")
     val q = ex.filter(col("vec_id") === 0)
       .select(col("x").as("qv"), col("cell").as("qcell"))
@@ -350,9 +351,9 @@ object VectorOps {
         slice(col("x"), m * PqSub + 1, PqSub)): _*)))
       .select(col("pos").cast("int").as("m"), col("col").as("qv"))
     // query→centroid distance table: (m, code, d), 8×16 rows, broadcast
-    val dt = s.read.parquet(ix.pqCodebooks).join(broadcast(qm), "m")
+    val dt = Tables.read(s, ix.pqCodebooks).join(broadcast(qm), "m")
       .select(col("m"), col("cid").as("code"), sqDist(col("qv"), col("cv")).as("d"))
-    val scored = s.read.parquet(ix.pqCodes)
+    val scored = Tables.read(s, ix.pqCodes)
       .join(broadcast(dt), Seq("m", "code"))
       .groupBy("vec_id")
       .agg(r6(dsum(col("d"))).as("adc"))
@@ -426,9 +427,9 @@ object VectorOps {
     val ix = IvfPqIndex.ensure(s, dir)
     val e = embeddings(s, dir)
       .select(col("vec_id"), col("label"), asD(col("embedding")).as("x"))
-    val coarse = s.read.parquet(ix.coarse)
+    val coarse = Tables.read(s, ix.coarse)
     // Probe cell = the query's own stored coarse assignment.
-    val qcell = s.read.parquet(ix.cells).filter(col("vec_id") === 0)
+    val qcell = Tables.read(s, ix.cells).filter(col("vec_id") === 0)
       .select(col("cell").as("qcell"))
     // Query residual against its probe cell's centroid, sliced into the
     // long PQ form → the broadcast ADC distance table (8×16 rows).
@@ -438,12 +439,12 @@ object VectorOps {
       .select(posexplode(array((0 until PqM).map(m =>
         slice(col("rq"), m * PqSub + 1, PqSub)): _*)))
       .select(col("pos").cast("int").as("m"), col("col").as("qv"))
-    val dt = s.read.parquet(ix.ivfCodebooks).join(broadcast(qm), "m")
+    val dt = Tables.read(s, ix.ivfCodebooks).join(broadcast(qm), "m")
       .select(col("m"), col("cid").as("code"), sqDist(col("qv"), col("cv")).as("d"))
     // One cell's codes: the join on the hive-partition column `pcell`
     // against the broadcast 1-row probe prunes every other cell directory
     // (dynamic partition pruning — the inverted-list fetch).
-    val scored = s.read.parquet(ix.ivfCodes)
+    val scored = Tables.read(s, ix.ivfCodes)
       .join(broadcast(qcell), col("pcell") === col("qcell"))
       .filter(col("vec_id") =!= 0)
       .join(broadcast(dt), Seq("m", "code"))
@@ -479,8 +480,8 @@ object VectorOps {
     val codes = IvfPqIndex.resolvedCodes(s, dir, ix)
     val e = embeddings(s, dir)
       .select(col("vec_id"), col("label"), asD(col("embedding")).as("x"))
-    val coarse = s.read.parquet(ix.coarse)
-    val qcell = s.read.parquet(ix.cells).filter(col("vec_id") === 0)
+    val coarse = Tables.read(s, ix.coarse)
+    val qcell = Tables.read(s, ix.cells).filter(col("vec_id") === 0)
       .select(col("cell").as("qcell"))
     val qm = e.filter(col("vec_id") === 0).crossJoin(broadcast(qcell))
       .join(broadcast(coarse), col("qcell") === col("cid"))
@@ -488,7 +489,7 @@ object VectorOps {
       .select(posexplode(array((0 until PqM).map(m =>
         slice(col("rq"), m * PqSub + 1, PqSub)): _*)))
       .select(col("pos").cast("int").as("m"), col("col").as("qv"))
-    val dt = s.read.parquet(ix.ivfCodebooks).join(broadcast(qm), "m")
+    val dt = Tables.read(s, ix.ivfCodebooks).join(broadcast(qm), "m")
       .select(col("m"), col("cid").as("code"), sqDist(col("qv"), col("cv")).as("d"))
     val scored = codes
       .join(broadcast(qcell), col("pcell") === col("qcell"))
@@ -524,7 +525,7 @@ object VectorOps {
     val ix = IvfPqIndex.ensure(s, dir)
     val e = embeddings(s, dir)
       .select(col("vec_id"), col("label"), asD(col("embedding")).as("x"))
-    val coarse = s.read.parquet(ix.coarse)
+    val coarse = Tables.read(s, ix.coarse)
     val q = e.filter(col("vec_id") === 0).select(col("x").as("qx"))
     // Probe ranking: nearest coarse centroids to the RAW query vector.
     // Tiny (IvfPqProbes.max rows incl. centroid payload) but its lineage
@@ -543,14 +544,14 @@ object VectorOps {
       .select(col("pcell"), posexplode(array((0 until PqM).map(m =>
         slice(col("rq"), m * PqSub + 1, PqSub)): _*)))
       .select(col("pcell"), col("pos").cast("int").as("m"), col("col").as("qv"))
-    val dt = s.read.parquet(ix.ivfCodebooks).join(broadcast(qrLong), "m")
+    val dt = Tables.read(s, ix.ivfCodebooks).join(broadcast(qrLong), "m")
       .select(col("pcell").as("dtcell"), col("m"), col("cid").as("code"),
         sqDist(col("qv"), col("cv")).as("d"))
     // Candidates: STORED codes of the probed cells (np tags ride the
     // broadcast probe list; the join on the hive-partition column `pcell`
     // prunes every unprobed cell directory), each scored against the
     // distance table of its OWN cell.
-    val scored = cacheEager(s.read.parquet(ix.ivfCodes)
+    val scored = cacheEager(Tables.read(s, ix.ivfCodes)
       .join(broadcast(probes.select(col("cid").as("pcell"), col("np"))), "pcell")
       .filter(col("vec_id") =!= 0)
       .join(broadcast(dt), Seq("m", "code"))
@@ -852,7 +853,7 @@ object VectorOps {
     val ix = IvfPqIndex.ensure(s, dir)
     val ed = embeddings(s, dir)
       .select(col("vec_id"), col("label"), asD(col("embedding")).as("x"))
-    val e = ed.join(s.read.parquet(ix.cells), "vec_id")
+    val e = ed.join(Tables.read(s, ix.cells), "vec_id")
     val q = e.filter(col("vec_id") < 3)
       .select(col("vec_id").as("query_id"), col("x").as("qv"),
         col("cell").as("qcell"))
@@ -1093,9 +1094,9 @@ object VectorOps {
     * every probe oracle (knn_pq / knn_ivf_pq / knn_recall_*). */
   def buildIvfpqIndex(s: SparkSession, dir: String): DataFrame = {
     val ix = IvfPqIndex.ensure(s, dir)
-    val vecs = s.read.parquet(ix.cells)
+    val vecs = Tables.read(s, ix.cells)
       .groupBy("cell").agg(count(lit(1)).as("n_vecs"))
-    val codes = s.read.parquet(ix.ivfCodes)
+    val codes = Tables.read(s, ix.ivfCodes)
       .groupBy("cell").agg(count(lit(1)).as("n_codes"))
     vecs.join(codes, "cell")
       .select(col("cell"), col("n_vecs"), col("n_codes"))
@@ -1121,7 +1122,7 @@ object VectorOps {
   private[graft] def deleteFromCodes(s: SparkSession, live: String,
                                      del: DataFrame,
                                      source: Option[DataFrame] = None): Unit = {
-    val liveT = source.getOrElse(s.read.parquet(live))
+    val liveT = source.getOrElse(Tables.read(s, live))
     val affected = liveT.join(del, "vec_id")
       .select(col("cell").as("acell")).distinct()
     val survivors = liveT.drop("pcell")
@@ -1156,7 +1157,7 @@ object VectorOps {
     synchronized {
       val ix = IvfPqIndex.ensure(s, dir)
       val live = s"${ix.root}/ivfpq_codes_live"
-      val pristine = s.read.parquet(ix.ivfCodes).drop("pcell")
+      val pristine = Tables.read(s, ix.ivfCodes).drop("pcell")
       if (!new java.io.File(live, "_SUCCESS").isFile)
         pristine.withColumn("pcell", col("cell"))
           .repartition(col("pcell"))
@@ -1187,7 +1188,7 @@ object VectorOps {
     val del = embeddings(s, dir)
       .filter(col("vec_id") % 29 === 0).select("vec_id")
     deleteFromCodes(s, live, del, source = Some(pristine))
-    s.read.parquet(live)
+    Tables.read(s, live)
       .groupBy("cell")
       .agg(countDistinct(col("vec_id")).as("n_vecs"), count(lit(1)).as("n_codes"))
       .orderBy("cell")
@@ -1208,9 +1209,9 @@ object VectorOps {
     * summary from first principles. */
   def annIndexStats(s: SparkSession, dir: String): DataFrame = {
     val ix = IvfPqIndex.ensure(s, dir)
-    val per = s.read.parquet(ix.cells)
+    val per = Tables.read(s, ix.cells)
       .groupBy("cell").agg(count(lit(1)).as("n"))
-    val codeCnt = s.read.parquet(ix.ivfCodes).agg(count(lit(1)).as("n_codes"))
+    val codeCnt = Tables.read(s, ix.ivfCodes).agg(count(lit(1)).as("n_codes"))
     per.agg(
         count(lit(1)).as("n_cells"),
         sum(col("n")).as("n_vecs"),
@@ -1249,11 +1250,11 @@ object VectorOps {
       .select(col("vec_id"), col("label"), asD(col("embedding")).as("x"))
     val q = e.filter(col("vec_id") === 0).select(col("x").as("qv"))
     // 4 nearest stored centroids to the query (16-row broadcast argsort)
-    val probes = s.read.parquet(ix.coarse).crossJoin(broadcast(q))
+    val probes = Tables.read(s, ix.coarse).crossJoin(broadcast(q))
       .select(col("cid"), col("qv"), sqDist(col("qv"), col("cv")).as("d"))
       .orderBy(col("d").asc, col("cid").asc).limit(FilteredProbes)
       .select(col("cid"), col("qv"))
-    e.join(s.read.parquet(ix.cells), "vec_id")
+    e.join(Tables.read(s, ix.cells), "vec_id")
       .join(broadcast(probes), col("cell") === col("cid"))
       .filter(col("label") % 2 === 1 && col("vec_id") =!= 0)
       .select(col("vec_id"), col("label"), cosine(col("x"), col("qv")).as("cos"))
@@ -1287,8 +1288,8 @@ object VectorOps {
     val batch = embeddings(s, dir)
       .filter(col("vec_id") % 10 === 7)
       .select(col("vec_id"), asD(col("embedding")).as("x"))
-    encodeAgainstStored(batch, s.read.parquet(ix.coarse),
-        s.read.parquet(ix.ivfCodebooks), PqM, PqSub)
+    encodeAgainstStored(batch, Tables.read(s, ix.coarse),
+        Tables.read(s, ix.ivfCodebooks), PqM, PqSub)
       .withColumn("pcell", col("cell"))
       .repartition(col("pcell"))
       .write.mode("overwrite").partitionBy("pcell")
@@ -1342,10 +1343,10 @@ object VectorOps {
     writeAnnDelta(s, dir, ix)
     // merged manifest: base counts from the stored index, new counts from
     // the just-landed delta
-    val base = s.read.parquet(ix.cells)
+    val base = Tables.read(s, ix.cells)
       .groupBy("cell").agg(count(lit(1)).as("n_base"))
     // declared schema: an empty held-out slice writes a data-file-less table
-    val fresh = s.read.schema(codesSchema).parquet(ix.ivfCodesDelta)
+    val fresh = Tables.read(s, ix.ivfCodesDelta, Some(codesSchema))
       .filter(col("m") === 0)
       .groupBy("cell").agg(count(lit(1)).as("n_new"))
     // FULL outer (review r10): a coarse cell empty in the base but
@@ -1380,15 +1381,15 @@ object VectorOps {
     // append re-runs; a committed one is byte-stable (deterministic
     // codebooks) and is exactly what a re-append would rewrite.
     IvfPqIndex.ensureDelta(s, dir, ix)
-    val merged = s.read.parquet(ix.ivfCodes)
-      .unionByName(s.read.schema(codesSchema).parquet(ix.ivfCodesDelta)
+    val merged = Tables.read(s, ix.ivfCodes)
+      .unionByName(Tables.read(s, ix.ivfCodesDelta, Some(codesSchema))
         .select("vec_id", "m", "code", "cell", "pcell"))
     merged
       .withColumn("pcell", col("cell"))
       .repartition(col("pcell"))
       .write.mode("overwrite").partitionBy("pcell")
       .parquet(ix.ivfCodesCompact)
-    s.read.parquet(ix.ivfCodesCompact)
+    Tables.read(s, ix.ivfCodesCompact)
       .groupBy("cell")
       .agg(countDistinct(col("vec_id")).as("n_vecs"), count(lit(1)).as("n_codes"))
       .orderBy("cell")
@@ -1474,10 +1475,10 @@ object VectorOps {
     // cells table by default; the maintenance job passes the RESOLVED
     // membership (base ∪ appended delta) so a cell pushed over the hot
     // threshold by appends splits with all its members (r13).
-    val cells = cellsOpt.getOrElse(s.read.parquet(ix.cells))
+    val cells = cellsOpt.getOrElse(Tables.read(s, ix.cells))
     val hot = cells.groupBy("cell").agg(count(lit(1)).as("n"))
       .filter(col("n") >= hotSize).select("cell")
-    val coarse = s.read.parquet(ix.coarse)
+    val coarse = Tables.read(s, ix.coarse)
     val he = e
       .join(cells.join(broadcast(hot), Seq("cell"), "left_semi"), "vec_id")
       .join(broadcast(coarse), col("cell") === col("cid"))
@@ -1495,8 +1496,7 @@ object VectorOps {
   /** Per-hot-cell manifest read back FROM the written `cells_split`
     * side-table — shared by the registry op and the facade. */
   private[graft] def splitManifest(s: SparkSession, ix: IvfPqIndex.Ix): DataFrame = {
-    val sub = s.read.schema(splitCellsSchema)
-      .parquet(s"${ix.root}/cells_split")
+    val sub = Tables.read(s, s"${ix.root}/cells_split", Some(splitCellsSchema))
       .groupBy("cell", "scid").agg(count(lit(1)).as("ssz"))
     sub.groupBy("cell")
       .agg(sum("ssz").as("n_vecs"), count(lit(1)).as("n_sub"),
@@ -1546,14 +1546,12 @@ object VectorOps {
     IvfPqIndex.ensureSplit(s, dir, ix)
     val e = embeddings(s, dir)
       .select(col("vec_id"), asD(col("embedding")).as("x"))
-    val cells = s.read.parquet(ix.cells)
-    val coarse = s.read.parquet(ix.coarse)
+    val cells = Tables.read(s, ix.cells)
+    val coarse = Tables.read(s, ix.coarse)
     val q = e.join(cells, "vec_id").filter(col("vec_id") === 0)
       .select(col("x").as("qv"), col("cell").as("qcell"))
-    val splitCents = s.read.schema(splitCentsSchema)
-      .parquet(s"${ix.root}/coarse_split")
-    val splitCells = s.read.schema(splitCellsSchema)
-      .parquet(s"${ix.root}/cells_split")
+    val splitCents = Tables.read(s, s"${ix.root}/coarse_split", Some(splitCentsSchema))
+    val splitCells = Tables.read(s, s"${ix.root}/cells_split", Some(splitCellsSchema))
     val splitGs = splitCents.select("cell").distinct()
     // unsplit cell → the whole-cell scan, exactly knnIvfKmeans' pool
     val candRaw = cells.join(broadcast(q), col("cell") === col("qcell"))

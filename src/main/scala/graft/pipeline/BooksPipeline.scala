@@ -1,7 +1,9 @@
 package graft.pipeline
 
+import graft.Tables
 import graft.ops.BooksOps
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** The reference's two Airflow DAGs restated as ONE Spark job
   * (SURVEY.md §3.1–3.2): raw ragged JSON → flatten/typecast → columnar
@@ -30,16 +32,17 @@ object BooksPipeline {
     * (parquet overwrite) → Validate (E3 read-back non-emptiness,
     * /root/reference/dags/db_to_snowflake.py:122). */
   def run(spark: SparkSession, rawJsonlPath: String, warehousePath: String): EtlReport = {
-    // The JSON parse is the expensive subtree (text scan + from_json);
-    // cache it so the sink write, the raw count, and the transformed
-    // count all share ONE parse instead of three (review r10).
-    val raw = BooksOps.parseRawJsonLines(spark.read.text(rawJsonlPath)).cache()
-    try {
-      val flat = BooksOps.flattenRawBooks(raw)
-      flat.write.mode("overwrite").parquet(warehousePath)
-      val readBack = spark.read.parquet(warehousePath).count()
-      require(readBack > 0, "E3 validation failed: loaded books table is empty")
-      EtlReport(raw.count(), flat.count(), readBack)
-    } finally { raw.unpersist(); () }
+    // One pass over the feed: the row count rides the warehouse write as
+    // a `Dataset.observe` metric, and since the flatten is 1:1 per JSONL
+    // record it is both the raw and the transformed count. The read-back
+    // declares the written frame's schema, so it runs no inference job.
+    val flat = BooksOps.flattenRawBooks(BooksOps.parseRawJsonLines(spark.read.text(rawJsonlPath)))
+    val obs = Observation()
+    flat.observe(obs, count(lit(1)).as("rows"))
+      .write.mode("overwrite").parquet(warehousePath)
+    val rows = obs.get("rows").asInstanceOf[Long]
+    val readBack = Tables.read(spark, warehousePath, Some(flat.schema)).count()
+    require(readBack > 0, "E3 validation failed: loaded books table is empty")
+    EtlReport(rows, rows, readBack)
   }
 }

@@ -163,7 +163,8 @@ object JdbcSink {
   /** K3 append sink: distributed JDBC batch-insert append. `numPartitions`
     * bounds connection fan-in from the cluster side. */
   def append(df: DataFrame, url: String, table: String,
-             numPartitions: Int = 4, driver: String = DerbyDriver): Unit =
+             numPartitions: Int = 4, driver: String = DerbyDriver): Unit = {
+    SinkDialect.registerDialects
     df.write.format("jdbc")
       .option("url", url)
       // ident() like every other entry point (review r10): Spark's JDBC
@@ -176,6 +177,7 @@ object JdbcSink {
       .option("batchsize", 1000)
       .mode(SaveMode.Append)
       .save()
+  }
 
   /** K5 staged bulk-copy publish: load into a staging table (distributed
     * append), then one transactional server-side

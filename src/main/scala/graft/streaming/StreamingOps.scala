@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
@@ -257,7 +258,7 @@ object StreamingOps {
     val root = graft.ops.IndexFs.parent(indexBandsPath)
     val compact = graft.ops.IndexFs.child(root, "bands_compact")
     if (graft.ops.IndexFs.isFile(graft.ops.IndexFs.child(compact, "_SUCCESS")))
-      s.read.parquet(compact).select("band", "band_key")
+      Tables.read(s, compact).select("band", "band_key")
     else {
       // `baseDf` arrives from the caller, which already opened the base
       // table — one footer-listing pass per micro-batch, not three
@@ -274,8 +275,8 @@ object StreamingOps {
       // the resolver must serve base alone, not fail the micro-batch.
       // The delta layout coincides with the fine side-table's.
       else base.unionByName(
-        s.read.schema(graft.ops.MinhashIndex.facadeFineSchema(baseDf.schema))
-          .parquet(deltas: _*).select("band", "band_key"))
+        Tables.readAll(s, deltas, Some(graft.ops.MinhashIndex.facadeFineSchema(baseDf.schema)))
+          .select("band", "band_key"))
     }
   }
 
@@ -293,7 +294,7 @@ object StreamingOps {
       batch, id, text, numHashes, bands).localCheckpoint()
     // ONE base-table open per micro-batch (review r13): the frame feeds
     // the resolver's base branch AND both declared-schema sibling reads.
-    val baseDf = s.read.parquet(indexBandsPath)
+    val baseDf = Tables.read(s, indexBandsPath)
     // Probe keys come from the RESOLVER, so appended postings flag the
     // very next micro-batch's dups of them, compact or not (r13).
     val post = resolvedFacadeKeys(s, indexBandsPath, baseDf)
@@ -305,9 +306,8 @@ object StreamingOps {
         val coldKeys = post
           .groupBy("band", "band_key").agg(count(lit(1)).as("sz"))
           .filter(col("sz") < hotSize.toLong).select("band", "band_key")
-        val fineKeys = s.read
-          .schema(graft.ops.MinhashIndex.facadeFineSchema(baseDf.schema))
-          .parquet(graft.ops.IndexFs.child(root, "bands_fine"))
+        val fineKeys = Tables.read(s, graft.ops.IndexFs.child(root, "bands_fine"),
+          Some(graft.ops.MinhashIndex.facadeFineSchema(baseDf.schema)))
           .select("band", "band_key", "sub_key").distinct()
         bt.join(coldKeys, Seq("band", "band_key"), "left_semi").select(id)
           .union(bt.join(fineKeys, Seq("band", "band_key", "sub_key"),
@@ -332,11 +332,11 @@ object StreamingOps {
     val toks = split(col(text), " ")
     val qOk = col(nChars) >= minChars && col(nChars) <= maxChars &&
       size(toks).cast("double") / size(array_distinct(toks)) <= maxRep
-    val baseFps = s.read.parquet(baseFpsPath)
+    val baseFps = Tables.read(s, baseFpsPath)
       .select("fp").distinct().withColumn("seen", lit(true))
     val nearHits = fineUnionHits(indexBandsPath, batch, id, text,
       numHashes, bands).withColumn("near", lit(true))
-    val evalSet = s.read.parquet(evalShinglesPath).select("x").distinct()
+    val evalSet = Tables.read(s, evalShinglesPath).select("x").distinct()
     val sh = graft.api.GraftAPI.shingleRows(batch, id, text)
     val tot = sh.groupBy(id).agg(count(lit(1)).as("n_shingles"))
     val hits = sh.join(broadcast(evalSet), "x")
@@ -386,7 +386,7 @@ object StreamingOps {
                     cId: String = "vec_id", cVec: String = "embedding",
                     k: Int = 10)(batch: DataFrame, batchId: Long): Unit = {
     val s = batch.sparkSession
-    val coarse = s.read.parquet(s"$indexRoot/coarse")
+    val coarse = Tables.read(s, s"$indexRoot/coarse")
     // Pool membership through the probe-root resolver (r13, the ANN
     // mirror of the dedup twins' resolution): a committed codes compact
     // (one (vec_id, cell) row per vector at m = 0), else the cells table
@@ -400,8 +400,7 @@ object StreamingOps {
       // whose held-out slice is empty commits a data-file-less delta,
       // and inference on it would fail every micro-batch — the resolver
       // must serve the cells table alone, not crash the probe.
-      def m0(path: String) = s.read
-        .schema(graft.ops.VectorOps.codesSchema).parquet(path)
+      def m0(path: String) = Tables.read(s, path, Some(graft.ops.VectorOps.codesSchema))
         .filter(col("m") === 0).select("vec_id", "cell")
       val compact = graft.ops.IndexFs.child(indexRoot, "ivfpq_codes_compact")
       val delta = graft.ops.IndexFs.child(indexRoot, "ivfpq_codes_delta")
@@ -409,8 +408,8 @@ object StreamingOps {
           graft.ops.IndexFs.child(compact, "_SUCCESS"))) m0(compact)
       else if (graft.ops.IndexFs.isFile(
           graft.ops.IndexFs.child(delta, "_SUCCESS")))
-        s.read.parquet(s"$indexRoot/cells").unionByName(m0(delta))
-      else s.read.parquet(s"$indexRoot/cells")
+        Tables.read(s, s"$indexRoot/cells").unionByName(m0(delta))
+      else Tables.read(s, s"$indexRoot/cells")
     }
     def dot2(a: Column, b: Column) = graft.functions.VectorFunctions.graftDot(a, b)
     val q = batch.select(col(qId).as("query_id"),
@@ -455,12 +454,10 @@ object StreamingOps {
       } else {
         def sq(x: Column, cv: Column): Column =
           graft.Tables.r6(dot2(x, x) - lit(2) * dot2(x, cv) + dot2(cv, cv))
-        val splitCents = s.read
-          .schema(graft.ops.VectorOps.splitCentsSchema)
-          .parquet(s"$indexRoot/coarse_split")
-        val splitCells = s.read
-          .schema(graft.ops.VectorOps.splitCellsSchema)
-          .parquet(s"$indexRoot/cells_split")
+        val splitCents = Tables.read(s, s"$indexRoot/coarse_split",
+          Some(graft.ops.VectorOps.splitCentsSchema))
+        val splitCells = Tables.read(s, s"$indexRoot/cells_split",
+          Some(graft.ops.VectorOps.splitCellsSchema))
         val splitGs = broadcast(splitCents
           .select(col("cell").as("scell")).distinct())
         val qres = qfull.join(broadcast(coarse), col("qcell") === col("cid"))
@@ -506,7 +503,7 @@ object StreamingOps {
           .select(col("query_id"), col("qx"), col("vec_id"))
         candRaw.unionByName(candSplit).unionByName(candWide)
       }
-    val scored = s.read.parquet(corpusPath)
+    val scored = Tables.read(s, corpusPath)
       .select(col(cId).as("corpus_id"), col(cVec).cast("array<double>").as("cx"))
       .join(cand, col("corpus_id") === col("vec_id"))
       .select(col("query_id"), col("corpus_id"),
@@ -561,8 +558,8 @@ object StreamingOps {
               s"dims in [${r.getInt(0)}, ${r.getInt(1)}]")
         }
     }
-    val coarse = s.read.parquet(s"$indexRoot/coarse")
-    val books = s.read.parquet(s"$indexRoot/ivfpq_codebooks")
+    val coarse = Tables.read(s, s"$indexRoot/coarse")
+    val books = Tables.read(s, s"$indexRoot/ivfpq_codebooks")
     // Lazy persist (review r10): the assignment feeds TWO consumers (the
     // residual join and the final code join) on a per-trigger hot path —
     // without the pin every micro-batch pays the broadcast-argmin twice.

@@ -55,4 +55,49 @@ class InventorySpec extends AnyFunSuite {
     assert((noOrder.keySet -- allowed).isEmpty,
       s"oracles missing ORDER BY: ${noOrder.keySet -- allowed}")
   }
+
+  /** True when `code` (whitespace removed) holds a batch parquet read: a
+    * `.read` call chain (`readStream` is a different name) that reaches
+    * `.parquet(` or `.format("parquet")`. Arguments are skipped with
+    * their parentheses balanced, so `.schema(f(x)).parquet(` is caught. */
+  private def batchParquetRead(code: String): Boolean = {
+    val call = "\\.\\w+\\(".r
+    def close(open: Int): Int = { // index after the ')' matching code(open)
+      var (depth, j) = (0, open)
+      do {
+        code(j) match { case '(' => depth += 1; case ')' => depth -= 1; case _ => }
+        j += 1
+      } while (depth > 0 && j < code.length)
+      j
+    }
+    def chain(at: Int): List[String] = // the calls of a chain, e.g. ".schema(x)"
+      call.findPrefixMatchOf(code.substring(at)) match {
+        case Some(c) => val end = close(at + c.end - 1); code.substring(at, end) :: chain(end)
+        case None    => Nil
+      }
+    "\\.read(?=\\.)".r.findAllMatchIn(code).exists(m => chain(m.end).exists(c =>
+      c.startsWith(".parquet(") || c == ".format(\"parquet\")"))
+  }
+
+  test("Tables.read is the only batch parquet reader under src/main/scala") {
+    // the detector itself: what it must and must not flag
+    Seq("s.read.parquet(p)", "spark.read.schema(f(x)).option(\"a\",\"b\").parquet(p)",
+        "s.read.format(\"parquet\").load(p)")
+      .foreach(c => assert(batchParquetRead(c), c))
+    Seq("s.readStream.schema(x).parquet(p)", "df.write.parquet(p)", "s.read.json(p)",
+        "s.read.text(p).select(x).write.parquet(q)")
+      .foreach(c => assert(!batchParquetRead(c), c))
+    import scala.jdk.CollectionConverters._
+    val offenders = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .iterator.asScala
+      .filter(f => f.toString.endsWith(".scala") && f.getFileName.toString != "Tables.scala")
+      .filter { f =>
+        val code = new String(java.nio.file.Files.readAllBytes(f),
+          java.nio.charset.StandardCharsets.UTF_8)
+          .replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("(?m)^\\s*//.*$", "")
+          .replaceAll("\\s+", "")
+        batchParquetRead(code)
+      }.map(_.toString).toSeq
+    assert(offenders.isEmpty, s"batch parquet reads outside Tables.read: $offenders")
+  }
 }
