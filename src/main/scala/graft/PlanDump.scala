@@ -5,8 +5,7 @@ import org.apache.spark.sql.SparkSession
   * named queries to `<outDir>/<query>_<tag>.txt` — the before/after
   * evidence files the optimization rounds commit under `plans/r<k>/`.
   *
-  * Unlike [[Explain]] (fixed list, stdout, local[8]) this runs under the
-  * BENCH session geometry (SPARK_GRAFT_CPUS cores, same shuffle
+  * Runs under the BENCH session geometry (SPARK_GRAFT_CPUS cores, same shuffle
   * partitions, same broadcast threshold) so the captured plan is the plan
   * the bench actually executes, parameterized by query list and output
   * dir:
@@ -44,8 +43,8 @@ object PlanDump {
     for (q <- names) {
       val full = SparkEntry.queries(q)(spark, dir).queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
-      // Same cap rationale as Explain: cached-subtree reprints can run to
-      // 50k+ lines; the audit wants the operator spine + scan details.
+      // Cached-subtree reprints can run to 50k+ lines; the audit wants
+      // the operator spine + scan details.
       val lines = full.linesIterator.toSeq
       val capped = if (lines.size <= 1500) full
         else (lines.take(1500) :+

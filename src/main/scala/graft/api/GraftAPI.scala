@@ -6,10 +6,14 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Public, column-parameterized entry points — the surface a USER of this
-  * library calls on their own DataFrames (the harness registry in
-  * `graft.ops` binds the same algorithms to the test tables; each facade
-  * method here is equivalence-tested against its harness twin in
-  * `ApiSpec`).
+  * library calls on their own DataFrames.
+  *
+  * The dedup-family methods here ARE the registry's implementation:
+  * `graft.ops.DedupOps` binds them to the test tables (`doc_id`, `text`
+  * and the harness MinHash geometry) plus a presentation sort, so the
+  * DuckDB oracle gate checks these very plans. The other families still
+  * keep a harness twin in `graft.ops` and stay equivalence-tested against
+  * it in `ApiSpec` until they are bound the same way.
   *
   * Everything is a pure DataFrame→DataFrame transform: no SparkSession
   * parameter, no paths, no side effects — the caller owns I/O. All
@@ -80,8 +84,14 @@ object GraftAPI {
     * duplication-sized → broadcasts on clean corpora, AQE-hash-joins on
     * dirty ones. */
   def crossdocDupRatio(df: DataFrame, id: String, text: String,
-                       n: Int = 8, minDocs: Int = 2): DataFrame = {
-    val grams = ngramRows(df, id, text, n)
+                       n: Int = 8, minDocs: Int = 2): DataFrame =
+    dupGramCoverage(ngramRows(df, id, text, n), id, minDocs)
+
+  /** The coverage step of [[crossdocDupRatio]] over [[ngramRows]]-shaped
+    * (id, g) rows — split out so a caller that pins its gram rows (the
+    * registry's generation cache) reuses them across the three consumers. */
+  private[graft] def dupGramCoverage(grams: DataFrame, id: String,
+                                     minDocs: Int): DataFrame = {
     val dupG = grams.groupBy("g").agg(countDistinct(col(id)).as("nd"))
       .filter(col("nd") >= minDocs).select("g")
     val tot = grams.groupBy(id).agg(count(lit(1)).as("n_grams"))
@@ -115,6 +125,16 @@ object GraftAPI {
     val chunks = df
       .select(col(id).as("_id"), posexplode(split(col(text), sepRe)))
       .select(col("_id"), col("pos").cast("long").as("cidx"), col("col").as("chunk"))
+    keepFirstChunks(chunks, "_id", separator).withColumnRenamed("_id", id)
+  }
+
+  /** The keeper-and-reassembly core of [[paragraphDedup]] over (id,
+    * cidx, chunk) rows, whatever chunker produced them: each distinct
+    * chunk survives at its lowest (id, cidx), survivors rejoin per id in
+    * cidx order with `separator`, and every id keeps its row (n_kept = 0
+    * when emptied). Returns (id, n_chunks, n_kept, text_kept). */
+  private[graft] def keepFirstChunks(chunks: DataFrame, id: String,
+                                     separator: String): DataFrame = {
     // Both factors are guarded: cidx ≥ 2^20 would collide with the next
     // id's block, and an id outside [0, 2^43) overflows id·2^20 + cidx —
     // silently, to a key that can alias ANOTHER document's chunk (a
@@ -123,30 +143,38 @@ object GraftAPI {
     val enc = when(col("cidx") >= (1L << 20),
         expr("raise_error('paragraphDedup: >=2^20 units in one row — key would alias')")
           .cast("long"))
-      .when(col("_id") < 0 || col("_id") >= (1L << 43),
+      .when(col(id) < 0 || col(id) >= (1L << 43),
         expr("raise_error('paragraphDedup: id outside [0, 2^43) — keeper key would overflow')")
           .cast("long"))
-      .otherwise(col("_id") * (1L << 20) + col("cidx"))
+      .otherwise(col(id) * (1L << 20) + col("cidx"))
     val keep = chunks.groupBy("chunk").agg(min(enc).as("kkey"))
     val kept = chunks.join(keep, "chunk").filter(enc === col("kkey"))
-    val perDoc = kept.groupBy("_id")
+    val perDoc = kept.groupBy(id)
       .agg(count(lit(1)).as("n_kept"),
         array_sort(collect_list(struct(col("cidx"), col("chunk")))).as("p"))
-      .select(col("_id"), col("n_kept"),
+      .select(col(id), col("n_kept"),
         concat_ws(separator, transform(col("p"), x => x.getField("chunk"))).as("text_kept"))
-    chunks.groupBy("_id").agg(count(lit(1)).as("n_chunks"))
-      .join(perDoc, Seq("_id"), "left")
-      .select(col("_id").as(id), col("n_chunks"),
+    chunks.groupBy(id).agg(count(lit(1)).as("n_chunks"))
+      .join(perDoc, Seq(id), "left")
+      .select(col(id), col("n_chunks"),
         coalesce(col("n_kept"), lit(0L)).as("n_kept"),
         coalesce(col("text_kept"), lit("")).as("text_kept"))
   }
 
   /** Distinct word-3-gram shingles, one row per (id, shingle `x`) — the
-    * shared tokenize+shingle front of the dedup family, public so
+    * shared tokenize+shingle front of the dedup family (the registry's
+    * MinHash, verify and decontamination ops all start here), public so
     * downstream verdict jobs (e.g. the streaming incremental-curation
     * twin) can probe stored shingle-set artifacts without re-deriving
-    * the recipe. Same windowed-lead form as the engine ops: stays in
-    * whole-stage codegen, shuffles on the id only. */
+    * the recipe.
+    *
+    * Deliberately NOT a higher-order-function array build: HOF lambdas
+    * (`transform`/`aggregate`) evaluate interpreted and measured ~2.6 ms
+    * per document — they were the entire minhash hot path. posexplode +
+    * window `lead` + distinct stays inside whole-stage codegen; the
+    * window and distinct both shuffle on the id, which is also the right
+    * layout at 100 TB (each doc's token stream is processed in one
+    * partition, shingle sets never exist as per-row array objects). */
   def shingleRows(df: DataFrame, id: String, text: String): DataFrame = {
     val w = Window.partitionBy(id).orderBy("pos")
     df.select(col(id), posexplode(split(lower(col(text)), " ")))
@@ -179,27 +207,85 @@ object GraftAPI {
     * `bands_fine` side-table share. One signature pass serves both. */
   private[graft] def minhashBandsWithSub(df: DataFrame, id: String,
                                          text: String, numHashes: Int,
-                                         bands: Int): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val rowsPerBand = numHashes / bands
-    val ex = shingleRows(df, id, text)
+                                         bands: Int): DataFrame =
+    minhashBandRows(minhashSignatures(shingleRows(df, id, text), id, numHashes),
+      id, numHashes, bands)
+      .select(col(id), col("band"), col("band_key"), col("sub_key"))
+
+  /** MinHash signatures over [[shingleRows]]-shaped (id, x) rows, in the
+    * scale-friendly explode + partial-agg shape: ONE md5 per shingle
+    * split into two 32-bit integer halves (a, b), then the k seed hashes
+    * derived by Kirsch–Mitzenmacher mixing `a + s·b` inside a hash
+    * aggregate with k `min` accumulators — codegen'd scalar work and one
+    * map-side-combined groupBy whose shuffle rows are (id, k longs); no
+    * interpreted higher-order functions, no per-seed rehash of the text.
+    * (a + s·b < 2³² + k·2³² — no overflow, and identical integer
+    * arithmetic in DuckDB.) Emits (id, mh1..mhk, n_sh): the shingle-set
+    * size rides the same aggregate for free (callers that do not read it
+    * have it pruned). */
+  private[graft] def minhashSignatures(shRows: DataFrame, id: String,
+                                       numHashes: Int): DataFrame = {
+    val ex = shRows
       .select(col(id), md5(col("x")).as("h"))
       .select(col(id),
         conv(substring(col("h"), 1, 8), 16, 10).cast("long").as("a"),
         conv(substring(col("h"), 9, 8), 16, 10).cast("long").as("b"))
     val mins = (1 to numHashes).map(sd => min(col("a") + lit(sd.toLong) * col("b")).as(s"mh$sd"))
-    val sig = ex.groupBy(id).agg(mins.head, mins.tail: _*)
+    ex.groupBy(id).agg(mins.head, (mins.tail :+ count(lit(1)).as("n_sh")): _*)
+  }
+
+  /** The full-signature sub-key over a [[minhashSignatures]] row — md5
+    * over ALL `numHashes` slots, the fine re-band key (collision
+    * probability J^numHashes instead of a band's J^rowsPerBand). */
+  private[graft] def minhashSubKey(numHashes: Int): Column =
+    md5(concat_ws("|", (1 to numHashes).map(i => col(s"mh$i").cast("string")): _*))
+
+  /** LSH banding of [[minhashSignatures]]: one row per (id, band) with
+    * `band_key` = md5 over that band's `numHashes / bands` slots, the
+    * doc's `n_sh` and its [[minhashSubKey]] — the candidate-stage length
+    * filter and the hot-bucket fine scheme read both straight off the
+    * bucket rows. Emits (id, n_sh, sub_key, band, band_key). */
+  private[graft] def minhashBandRows(sig: DataFrame, id: String,
+                                     numHashes: Int, bands: Int): DataFrame = {
+    require(numHashes % bands == 0, "bands must divide numHashes")
+    val rowsPerBand = numHashes / bands
     val bandArr = array((1 to bands).map { bnd =>
       val slots = ((bnd - 1) * rowsPerBand + 1 to bnd * rowsPerBand)
         .map(i => col(s"mh$i").cast("string"))
       struct(lit(bnd).as("band"), md5(concat_ws("|", slots: _*)).as("band_key"))
     }: _*)
-    val subKey = md5(concat_ws("|",
-      (1 to numHashes).map(i => col(s"mh$i").cast("string")): _*))
-    sig.select(col(id), subKey.as("sub_key"), explode(bandArr).as("bk"))
-      .select(col(id), col("bk.band").as("band"),
-        col("bk.band_key").as("band_key"), col("sub_key"))
+    sig.select(col(id), col("n_sh"), minhashSubKey(numHashes).as("sub_key"),
+        explode(bandArr).as("bk"))
+      .select(col(id), col("n_sh"), col("sub_key"),
+        col("bk.band").as("band"), col("bk.band_key").as("band_key"))
   }
+
+  /** i<j pairs within each sorted `ids` array, one exploded row per pair
+    * built by `pair(x, y)` — bucket-local enumeration, fan-out bounded by
+    * bucket size, never n². */
+  private[graft] def bucketPairs(ids: Column)(pair: (Column, Column) => Column): Column =
+    explode(flatten(transform(ids, (x, i) =>
+      transform(slice(ids, i + lit(2), size(ids)), y => pair(x, y)))))
+
+  /** Distinct (a, b) pairs, narrowed to the two ids BEFORE the distinct
+    * (optimization r14, guide §2.3): the explicit repartition on `a`
+    * makes ONE exchange serve both the distinct (HashPartitioning(a)
+    * co-locates equal tuples) and any downstream join on `a`, which
+    * reuses the partitioning instead of adding its own exchange+sort. */
+  private[graft] def distinctPairs(pairs: DataFrame, a: String, b: String): DataFrame =
+    pairs.select(a, b).repartition(col(a)).distinct()
+
+  /** The per-band manifest (band, n_keys, n_postings, n_docs) of a
+    * stored postings table whose document id is `id`. Every doc with ≥1
+    * shingle posts exactly ONE key per band, so n_postings = n_docs by
+    * construction — a lost or doubled posting shows in the manifest. */
+  private[graft] def bandManifest(postings: DataFrame, id: String): DataFrame =
+    postings.groupBy("band")
+      .agg(countDistinct(col("band_key")).as("n_keys"),
+        count(lit(1)).as("n_postings"),
+        countDistinct(col(id)).as("n_docs"))
+      .select(col("band").cast("int").as("band"), col("n_keys"),
+        col("n_postings"), col("n_docs"))
 
   /** Persist [[minhashBands]] as a stored dedup index (the facade form of
     * the registry's `build_minhash_index` / [[graft.ops.MinhashIndex]]):
@@ -281,13 +367,7 @@ object GraftAPI {
       "hotSize" -> graft.ops.DedupOps.RebandHotSize.toString)
     require(graft.ops.IndexFs.touch(marker),
       s"could not commit index marker under $path")
-    Tables.read(s, s"$path/bands")
-      .groupBy("band")
-      .agg(countDistinct(col("band_key")).as("n_keys"),
-        count(lit(1)).as("n_postings"),
-        countDistinct(col("_id")).as("n_docs"))
-      .select(col("band").cast("int").as("band"), col("n_keys"),
-        col("n_postings"), col("n_docs"))
+    bandManifest(Tables.read(s, s"$path/bands"), "_id")
   }
 
   /** APPEND a day's batch to a stored facade MinHash index (the facade
@@ -533,14 +613,7 @@ object GraftAPI {
           s"could not remove the folded delta generations under $root")
       }
     }
-    Tables.read(spark, bandsPath)
-      .groupBy("band")
-      .agg(countDistinct(col("band_key")).as("n_keys"),
-        count(lit(1)).as("n_postings"),
-        countDistinct(col("_id")).as("n_docs"))
-      .select(col("band").cast("int").as("band"), col("n_keys"),
-        col("n_postings"), col("n_docs"))
-      .orderBy("band")
+    bandManifest(Tables.read(spark, bandsPath), "_id").orderBy("band")
   }
 
   /** Partition-pruned takedown on a stored MinHash postings table
@@ -767,20 +840,18 @@ object GraftAPI {
     * (Jaccard on shingle sets) before acting on them. */
   def lshCandidatePairs(df: DataFrame, id: String, text: String,
                         numHashes: Int = 128, bands: Int = 16): DataFrame =
-    minhashBands(df, id, text, numHashes, bands)
+    distinctPairs(minhashBands(df, id, text, numHashes, bands)
       .groupBy("band", "band_key")
       .agg(sort_array(collect_list(col(id))).as("ids"))
       .filter(size(col("ids")) > 1)
-      .select(explode(flatten(transform(col("ids"), (x, i) =>
-        transform(slice(col("ids"), i + lit(2), size(col("ids"))),
-          y => struct(x.as("id_a"), y.as("id_b")))))).as("p"))
-      .select(col("p.id_a"), col("p.id_b"))
-      .distinct()
+      .select(bucketPairs(col("ids"))((x, y) => struct(x.as("id_a"), y.as("id_b"))).as("p"))
+      .select(col("p.id_a"), col("p.id_b")), "id_a", "id_b")
 
   /** 16-bit SimHash fingerprint per row: per-token md5, bit j = sign of
     * Σ(±1) over hex-digit parity. Near-dup test = `bit_count(a XOR b)`
     * ≤ threshold; at scale, bucket by 4-bit chunks (pigeonhole) and
-    * compare bucket-mates only. One map-side-combined groupBy. */
+    * compare bucket-mates only. Explode is map-side; one
+    * map-side-combined groupBy shuffles 16 small ints per row. */
   def simhash(df: DataFrame, id: String, text: String): DataFrame = {
     val bits = 16
     val tok = df.select(col(id), explode(split(lower(col(text)), " ")).as("w"))
@@ -1707,8 +1778,9 @@ object GraftAPI {
     * pair join — the quadratic-blowup early warning that decides a
     * re-band (more bands / more rows per band) before a hot bucket
     * stalls candidate generation. Two fixed-width aggregations over the
-    * stored scalar columns; document text is never touched. Harness
-    * twin: `minhash_index_stats`. */
+    * stored scalar columns; document text is never touched. The
+    * registry's `minhash_index_stats` is this audit over its stored
+    * postings. */
   def minhashIndexSkew(bands: DataFrame): DataFrame = {
     val buckets = bands.groupBy("band", "band_key").agg(count(lit(1)).as("sz"))
     buckets.groupBy("band")
@@ -1716,7 +1788,11 @@ object GraftAPI {
         max(col("sz")).as("max_bucket"),
         sum(when(col("sz") >= 2, 1L).otherwise(0L)).as("hot_buckets"),
         sum(when(col("sz") === 1, 1L).otherwise(0L)).as("singletons"),
-        sum((col("sz") * (col("sz") - 1) / 2).cast("long")).as("cand_pairs"))
+        // sz·(sz−1) is always even → the halved sum is exact in longs —
+        // via INTEGER div (review r10): `/` coerces to Double, which loses
+        // exactness past 2^53 (sz ≳ 9.5e7, exactly the hot-bucket blowup
+        // this audit measures).
+        sum(expr("CAST(sz * (sz - 1) AS BIGINT) div 2")).as("cand_pairs"))
       .select(col("band").cast("int").as("band"), col("n_buckets"),
         col("max_bucket"), col("hot_buckets"), col("singletons"),
         col("cand_pairs"))

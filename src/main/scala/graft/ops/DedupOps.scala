@@ -2,12 +2,18 @@ package graft.ops
 
 import graft.Tables
 import graft.Tables._
+import graft.api.GraftAPI
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 /** Deduplication operators over `documents` (SURVEY.md §2.11/§2.12 L1–L2
   * plus the training-data-pipeline extensions: SimHash, n-gram Jaccard).
+  * The shingle, MinHash, candidate-pair, SimHash, cross-doc n-gram,
+  * paragraph and skew recipes live once, in the column-parameterized
+  * [[graft.api.GraftAPI]] facade; the registry keys here bind them to
+  * `documents` (`doc_id`, `text`, the harness geometry [[NumHashes]] /
+  * [[NumBands]]) and add the presentation sort.
   * The reference's own dedup precedent is the orphaned HF DAG's set-based
   * transform (`/root/reference/dags/__pycache__/huggingface_extract.cpython-312.pyc`,
   * SURVEY.md §2.11); everything beyond exact dedup is the 100 TB extension.
@@ -119,42 +125,10 @@ object DedupOps {
       } else df.checkpoint(eager = false)
     } else df.localCheckpoint(eager)
 
-  /** Dev-only stage timing to stderr when SPARK_GRAFT_DEBUG is set. */
-  private def timed[A](name: String)(f: => A): A =
-    if (sys.env.contains("SPARK_GRAFT_DEBUG")) {
-      val t0 = System.nanoTime(); val r = f
-      System.err.println(f"[dedup] $name%-24s ${(System.nanoTime() - t0) / 1e9}%8.3f s")
-      r
-    } else f
-
-  /** Distinct word-3-gram shingles, one ROW per (doc_id, shingle).
-    *
-    * Deliberately NOT a higher-order-function array build: HOF lambdas
-    * (`transform`/`aggregate`) evaluate interpreted and measured ~2.6 ms
-    * per document on this corpus — they were the entire minhash hot path.
-    * posexplode + window `lead` + distinct stays inside whole-stage
-    * codegen end-to-end; the window and distinct both shuffle on doc_id
-    * keys, which is also the right layout at 100 TB (each doc's token
-    * stream is processed in one partition, shingle sets never exist as
-    * driver-side or per-row array objects). */
+  /** The facade's shingle rows over `documents` — one row per (doc_id,
+    * shingle `x`). */
   private def shingleRows(s: SparkSession, dir: String): DataFrame =
-    shingleRowsFrom(documents(s, dir))
-
-  /** Shingle pipeline over an arbitrary (doc_id, text) frame — lets a
-    * caller push a doc_id restriction BELOW the tokenize fan-out
-    * ([[dedupIndexReband]]: only hot docs re-sign; the per-token explode
-    * over 100 TB is exactly the cost a maintenance job must not pay). */
-  private def shingleRowsFrom(docs: DataFrame): DataFrame = {
-    val w = Window.partitionBy("doc_id").orderBy("pos")
-    docs
-      .select(col("doc_id"), posexplode(split(lower(col("text")), " ")))
-      .withColumnRenamed("col", "w")
-      .withColumn("w1", lead("w", 1).over(w))
-      .withColumn("w2", lead("w", 2).over(w))
-      .filter(col("w2").isNotNull)
-      .select(col("doc_id"), concat_ws(" ", col("w"), col("w1"), col("w2")).as("x"))
-      .distinct()
-  }
+    GraftAPI.shingleRows(documents(s, dir), "doc_id", "text")
 
   /** Per-doc shingle SET as an array (for the exact-Jaccard verify step
     * only — candidate-pair-scale inputs, never the whole corpus). */
@@ -170,57 +144,13 @@ object DedupOps {
   private[ops] val NumBands  = 2
   private val RowsPerBand = NumHashes / NumBands
 
-  /** MinHash signatures, computed in the scale-friendly explode +
-    * partial-agg shape: ONE md5 per shingle occurrence split into two
-    * 32-bit integer halves (a, b), then the k seed hashes derived by
-    * Kirsch–Mitzenmacher mixing `a + s·b` inside a hash aggregate with k
-    * `min` accumulators. Everything is codegen'd scalar work + one
-    * map-side-combined groupBy whose shuffle rows are (doc_id, 8 longs) —
-    * no interpreted higher-order functions, no per-seed rehash of the
-    * text. (a + s·b < 2³² + 8·2³² — no overflow, and identical integer
-    * arithmetic in DuckDB.) */
-  private def signaturesFrom(shRows: DataFrame): DataFrame = {
-    val ex = shRows
-      .select(col("doc_id"), md5(col("x")).as("h"))
-      .select(col("doc_id"),
-        conv(substring(col("h"), 1, 8), 16, 10).cast("long").as("a"),
-        conv(substring(col("h"), 9, 8), 16, 10).cast("long").as("b"))
-    val mins = (1 to NumHashes).map(sd => min(col("a") + lit(sd.toLong) * col("b")).as(s"mh$sd"))
-    // n_sh rides the SAME hash aggregate for free: the per-doc shingle-set
-    // size feeds the candidate-stage length filter in [[simPairs]].
-    ex.groupBy("doc_id").agg(mins.head, (mins.tail :+ count(lit(1)).as("n_sh")): _*)
-  }
-
-  /** (doc_id, band, band_key) LSH banding table: band key = md5 over its
-    * RowsPerBand signature slots. */
-  private[ops] def bandTableFrom(shRows: DataFrame): DataFrame =
-    bandTableWithN(shRows).select("doc_id", "band", "band_key")
-
-  /** The full-signature sub-key — md5 over ALL NumHashes slots, the
-    * fine re-band key (collision probability J^NumHashes instead of the
-    * band's J^RowsPerBand). Shared by [[bandTableWithN]],
-    * [[dedupIndexReband]] and the fine-probe side-table so every
-    * producer/consumer keys identically. */
-  private def subKeyCol: Column =
-    md5(concat_ws("|",
-      (1 to NumHashes).map(i => col(s"mh$i").cast("string")): _*))
-
-  /** Band table carrying each doc's shingle-set size (`n_sh`) and
-    * full-signature `sub_key` — the verify-stage length filter and the
-    * hot-bucket fine scheme both read them straight out of the bucket
-    * rows, no extra join. */
-  private[ops] def bandTableWithN(shRows: DataFrame): DataFrame = {
-    val bands = array((1 to NumBands).map { b =>
-      val slots = ((b - 1) * RowsPerBand + 1 to b * RowsPerBand)
-        .map(i => col(s"mh$i").cast("string"))
-      struct(lit(b).as("band"), md5(concat_ws("|", slots: _*)).as("band_key"))
-    }: _*)
-    signaturesFrom(shRows)
-      .select(col("doc_id"), col("n_sh"), subKeyCol.as("sub_key"),
-        explode(bands).as("bk"))
-      .select(col("doc_id"), col("n_sh"), col("sub_key"),
-        col("bk.band").as("band"), col("bk.band_key").as("band_key"))
-  }
+  /** The facade's MinHash signing + banding at the harness geometry:
+    * (doc_id, n_sh, sub_key, band, band_key) — `n_sh` feeds the
+    * candidate-stage length filter, `sub_key` the hot-bucket fine
+    * scheme. */
+  private[ops] def bandsOf(shRows: DataFrame): DataFrame =
+    GraftAPI.minhashBandRows(GraftAPI.minhashSignatures(shRows, "doc_id", NumHashes),
+      "doc_id", NumHashes, NumBands)
 
   /** L1: exact dedup — content-hash groupBy keeping the smallest doc_id
     * per distinct text (the deterministic form of `dropDuplicates`; one
@@ -235,7 +165,8 @@ object DedupOps {
     * artifact — at 100 TB this table is what gets written, partitioned by
     * band_key prefix, and self-joined bucket-locally. */
   def dedupMinhash(s: SparkSession, dir: String): DataFrame =
-    bandTableFrom(shingleRows(s, dir)).orderBy("doc_id", "band")
+    bandsOf(shingleRows(s, dir)).select("doc_id", "band", "band_key")
+      .orderBy("doc_id", "band")
 
   /** L4: LSH-bucketed similarity join with exact-Jaccard verify.
     * Candidate pairs are generated BUCKET-LOCALLY: one groupBy on
@@ -269,7 +200,7 @@ object DedupOps {
     // cheap aggregations over cached data. (The r6 A/B that rejected
     // eager-per-cache counted EVERY cache — the cost was serializing many
     // small jobs, not this single shared-root pin.)
-    timed("shRows.count")(shRows.count())
+    shRows.count()
     // Bucket rows carry (doc_id, n_sh) structs so the LENGTH FILTER runs
     // at pair birth (r11, the hot-bucket fix). The emitted predicate is
     // the ROUNDED threshold's necessary condition: downstream keeps
@@ -343,13 +274,11 @@ object DedupOps {
 
   private[graft] def candidatePairs(shRows: DataFrame): DataFrame = {
     def pairsOf(g: DataFrame): DataFrame = g
-      .select(explode(flatten(transform(col("ids"), (x, i) =>
-        transform(slice(col("ids"), i + lit(2), size(col("ids"))),
-          y => struct(x.getField("doc_id").as("doc_a"),
-            y.getField("doc_id").as("doc_b"),
-            x.getField("n_sh").as("na"), y.getField("n_sh").as("nb")))))).as("p"))
+      .select(GraftAPI.bucketPairs(col("ids"))((x, y) =>
+        struct(x.getField("doc_id").as("doc_a"), y.getField("doc_id").as("doc_b"),
+          x.getField("n_sh").as("na"), y.getField("n_sh").as("nb"))).as("p"))
       .select(col("p.doc_a"), col("p.doc_b"), col("p.na"), col("p.nb"))
-    val grouped = bandTableWithN(shRows)
+    val grouped = bandsOf(shRows)
       .groupBy("band", "band_key")
       .agg(sort_array(collect_list(
         struct(col("doc_id"), col("n_sh"), col("sub_key")))).as("ids"))
@@ -364,20 +293,13 @@ object DedupOps {
       .agg(sort_array(collect_list(
         struct(col("d.doc_id").as("doc_id"), col("d.n_sh").as("n_sh")))).as("ids"))
       .filter(size(col("ids")) > 1))
-    // Narrow to the id pair BEFORE the distinct (optimization r14, guide
-    // §2.3): na/nb are functions of the ids, and the verify stage now
-    // reads set sizes off the shingle arrays — carrying them through the
-    // dedup exchange doubled its row width for nothing. The explicit
-    // repartition on doc_a makes ONE exchange serve both the distinct
-    // (HashPartitioning(doc_a) co-locates equal (doc_a, doc_b) tuples)
-    // and the verify join on doc_a, which reuses the partitioning
-    // instead of adding its own exchange+sort.
-    cold.unionByName(hot)
+    // na/nb are functions of the ids and the verify stage reads set sizes
+    // off the shingle arrays, so the pairs narrow to the ids before the
+    // shared distinct (whose repartition on doc_a also serves the verify
+    // join on doc_a).
+    GraftAPI.distinctPairs(cold.unionByName(hot)
       .filter(lit(4000000L) * least(col("na"), col("nb")) >=
-        lit(3199998L) * greatest(col("na"), col("nb")))
-      .select("doc_a", "doc_b")
-      .repartition(col("doc_a"))
-      .distinct()
+        lit(3199998L) * greatest(col("na"), col("nb"))), "doc_a", "doc_b")
   }
 
   /** L4c: transitive dup-cluster collapse — near-dup PAIRS become dedup
@@ -413,7 +335,7 @@ object DedupOps {
     // round, and a lazily-persisted pairs frame lets round 1's two union
     // branches race into recomputing the band-bucket + Jaccard-verify
     // subtree. One action; every subsequent round reads cached pairs.
-    timed("pairs.count")(pairs.count())
+    pairs.count()
     // Symmetrize by a map-side explode instead of a union of two scans
     // (optimization r14): the union form put TWO InMemoryTableScans of
     // the pair cache into every propagation round's plan; the explode
@@ -492,7 +414,7 @@ object DedupOps {
       // unmaterialized — unpersisting prev would then force later rounds
       // to recompute through the whole chain. count() materializes every
       // partition of `next`, making prev genuinely dead.
-      converged = timed(s"round $rounds")(next.filter(col("changed")).count() == 0)
+      converged = next.filter(col("changed")).count() == 0
       prev.unpersist(false)
       prev = next
       labels = next.select("id", "lbl")
@@ -556,22 +478,13 @@ object DedupOps {
         r6(col("n_overlap").cast("double") / col("n_shingles")).as("contam_ratio"))
   }
 
-  /** Full-corpus band rows for the index BUILD ([[MinhashIndex]]). */
-  private[ops] def bandRows(s: SparkSession, dir: String): DataFrame =
-    bandTableFrom(shingleRows(s, dir))
-
-  /** Band rows for the corpus slice below `cutoff` — the stored side of
-    * the incremental probe. The doc_id filter runs BEFORE shingling, so a
-    * base build never tokenizes the batch's text. */
-  private[ops] def bandRowsBelow(s: SparkSession, dir: String, cutoff: Long): DataFrame =
-    bandTableFrom(shingleRows(s, dir).filter(col("doc_id") < cutoff))
-
-  /** Band rows for a doc_id range [lo, hi) — the appended-day slice
-    * ([[graft.ops.MinhashIndex.writeDelta]]). Same pre-shingle pushdown. */
-  private[ops] def bandRowsBetween(s: SparkSession, dir: String,
-                                   lo: Long, hi: Long): DataFrame =
-    bandTableFrom(shingleRows(s, dir)
-      .filter(col("doc_id") >= lo && col("doc_id") < hi))
+  /** (doc_id, band, band_key) postings of the docs `keep` selects — the
+    * [[MinhashIndex]] build input (full corpus, the base slice, the
+    * appended-day slice). The doc_id filter runs BEFORE shingling, so a
+    * slice build never tokenizes text outside the slice. */
+  private[ops] def postingRows(s: SparkSession, dir: String,
+                               keep: Column = lit(true)): DataFrame =
+    bandsOf(shingleRows(s, dir).filter(keep)).select("doc_id", "band", "band_key")
 
   /** L2j: the MinHash-LSH index BUILD as a first-class sink-style job —
     * the dedup counterpart of `build_ivfpq_index`: shingle + sign +
@@ -589,14 +502,7 @@ object DedupOps {
     * a lost or doubled row in the write fails the count oracle. */
   def buildMinhashIndex(s: SparkSession, dir: String): DataFrame = {
     val ix = MinhashIndex.ensure(s, dir)
-    Tables.read(s, ix.bands)
-      .groupBy("band")
-      .agg(countDistinct(col("band_key")).as("n_keys"),
-        count(lit(1)).as("n_postings"),
-        countDistinct(col("doc_id")).as("n_docs"))
-      .select(col("band").cast("int").as("band"), col("n_keys"),
-        col("n_postings"), col("n_docs"))
-      .orderBy("band")
+    GraftAPI.bandManifest(Tables.read(s, ix.bands), "doc_id").orderBy("band")
   }
 
   /** L2m: MinHash index SKEW audit over the stored postings — the health
@@ -610,25 +516,9 @@ object DedupOps {
     * (doc_id, band, band_key) table — two fixed-width aggregations, text
     * never touched. At 100 TB this audit is what decides a re-band before
     * a skewed bucket stalls the pair join. */
-  def minhashIndexStats(s: SparkSession, dir: String): DataFrame = {
-    val ix = MinhashIndex.ensure(s, dir)
-    val buckets = Tables.read(s, ix.bands)
-      .groupBy("band", "band_key").agg(count(lit(1)).as("sz"))
-    buckets.groupBy("band")
-      .agg(count(lit(1)).as("n_buckets"),
-        max(col("sz")).as("max_bucket"),
-        sum(when(col("sz") >= 2, 1L).otherwise(0L)).as("hot_buckets"),
-        sum(when(col("sz") === 1, 1L).otherwise(0L)).as("singletons"),
-        // sz·(sz−1) is always even → the halved sum is exact in longs —
-        // via INTEGER div (review r10): Spark `/` coerces to Double,
-        // which loses exactness past 2^53 (sz ≳ 9.5e7, exactly the
-        // hot-bucket blowup this audit measures); the oracle uses `//`.
-        sum(expr("CAST(sz * (sz - 1) AS BIGINT) div 2")).as("cand_pairs"))
-      .select(col("band").cast("int").as("band"), col("n_buckets"),
-        col("max_bucket"), col("hot_buckets"), col("singletons"),
-        col("cand_pairs"))
+  def minhashIndexStats(s: SparkSession, dir: String): DataFrame =
+    GraftAPI.minhashIndexSkew(Tables.read(s, MinhashIndex.ensure(s, dir).bands))
       .orderBy("band")
-  }
 
   /** L2k: MinHash index APPEND — the dedup lifecycle's third leg (build →
     * probe → append), mirroring `ann_index_append`: the late-arriving
@@ -689,14 +579,7 @@ object DedupOps {
       .repartition(col("pband"))
       .write.mode("overwrite").partitionBy("pband")
       .parquet(ix.compact)
-    Tables.read(s, ix.compact)
-      .groupBy("band")
-      .agg(countDistinct(col("band_key")).as("n_keys"),
-        count(lit(1)).as("n_postings"),
-        countDistinct(col("doc_id")).as("n_docs"))
-      .select(col("band").cast("int").as("band"), col("n_keys"),
-        col("n_postings"), col("n_docs"))
-      .orderBy("band")
+    GraftAPI.bandManifest(Tables.read(s, ix.compact), "doc_id").orderBy("band")
   }
 
   /** Ingest-batch width for the delete-leg live layout: documents land
@@ -821,14 +704,7 @@ object DedupOps {
         col("doc_id") % 3 === 0)
       .select("doc_id")
     deleteFromBands(s, live, del, source = Some(pristine))
-    Tables.read(s, live)
-      .groupBy("band")
-      .agg(countDistinct(col("band_key")).as("n_keys"),
-        count(lit(1)).as("n_postings"),
-        countDistinct(col("doc_id")).as("n_docs"))
-      .select(col("band").cast("int").as("band"), col("n_keys"),
-        col("n_postings"), col("n_docs"))
-      .orderBy("band")
+    GraftAPI.bandManifest(Tables.read(s, live), "doc_id").orderBy("band")
   }
 
   /** Buckets at or above this size get re-banded by [[dedupIndexReband]].
@@ -882,9 +758,10 @@ object DedupOps {
     // The doc restriction pushes BELOW the tokenize fan-out (review r11:
     // a semi-join on the corpus-wide shingle ROWS still paid the full
     // per-token explode + window; only the hot docs' text should).
-    val subKeys = signaturesFrom(shingleRowsFrom(
-        documents(s, dir).join(hotIds, Seq("doc_id"), "left_semi")))
-      .select(col("doc_id"), subKeyCol.as("sub_key"))
+    val subKeys = GraftAPI.minhashSignatures(GraftAPI.shingleRows(
+        documents(s, dir).join(hotIds, Seq("doc_id"), "left_semi"), "doc_id", "text"),
+        "doc_id", NumHashes)
+      .select(col("doc_id"), GraftAPI.minhashSubKey(NumHashes).as("sub_key"))
     hotPostings.join(subKeys, "doc_id")
       .select("doc_id", "band", "band_key", "sub_key")
       .withColumn("pband", col("band"))
@@ -952,7 +829,7 @@ object DedupOps {
     * cold-keys/fine-keys wiring lives once): distinct batch doc_ids
     * whose band rows hit the stored base index under the fine-union
     * rule. `batch` must carry (doc_id, band, band_key, sub_key) —
-    * [[bandTableWithN]]'s shape — and should be cached by the caller
+    * [[bandsOf]]'s shape — and should be cached by the caller
     * (both legs consume it). */
   private[ops] def fineProbeHits(s: SparkSession, dir: String,
                                  batch: DataFrame): DataFrame = {
@@ -1018,7 +895,7 @@ object DedupOps {
     // the result spine); cache + eager count so they can't race into
     // recomputing the batch's shingle+signature pipeline (the r5→r6
     // lesson at this site, now scoped to the batch only).
-    val batch = cache(bandTableWithN(
+    val batch = cache(bandsOf(
       shingleRows(s, dir).filter(col("doc_id") >= AppendCutoff)))
     batch.count()
     val hits = fineProbeHits(s, dir, batch).withColumn("is_dup", lit(true))
@@ -1042,7 +919,7 @@ object DedupOps {
     * probes, never a re-shingle. The DuckDB oracle mirrors both rules;
     * at sf0.01 doc 452 flips (near-dup of an appended [400,450) doc). */
   def dedupIncrementalVsdelta(s: SparkSession, dir: String): DataFrame = {
-    val batch = cache(bandTableWithN(
+    val batch = cache(bandsOf(
       shingleRows(s, dir).filter(col("doc_id") >= AppendCutoff)))
     batch.count()
     val resolvedHits = fineProbeHits(s, dir, batch)
@@ -1092,23 +969,10 @@ object DedupOps {
 
   private val SimBits = 16
 
-  /** SimHash (16-bit): per token-occurrence md5, bit j of the fingerprint
-    * is the sign of Σ(±1) over the parity of hex digit j. Explode is
-    * map-side; the groupBy shuffles 16 small ints per doc. */
-  def dedupSimhash(s: SparkSession, dir: String): DataFrame = {
-    val tok = documents(s, dir)
-      .select(col("doc_id"), explode(split(lower(col("text")), " ")).as("w"))
-      .select(col("doc_id"), md5(col("w")).as("h"))
-    val sums = (1 to SimBits).map { j =>
-      sum(when(ascii(substring(col("h"), j, 1)) % 2 === 1, 1).otherwise(-1)).as(s"b$j")
-    }
-    val fp = (1 to SimBits)
-      .map(j => when(col(s"b$j") > 0, lit(1L << (j - 1))).otherwise(lit(0L)))
-      .reduce(_ + _)
-    tok.groupBy("doc_id").agg(sums.head, sums.tail: _*)
-      .select(col("doc_id"), fp.cast("long").as("simhash"))
-      .orderBy("doc_id")
-  }
+  /** SimHash (16-bit) fingerprints of `documents` — the facade's
+    * [[GraftAPI.simhash]]. */
+  def dedupSimhash(s: SparkSession, dir: String): DataFrame =
+    GraftAPI.simhash(documents(s, dir), "doc_id", "text").orderBy("doc_id")
 
   /** L2b (decision half): SimHash Hamming distances on adjacent doc pairs
     * — fingerprint XOR + popcount (`bit_count`, codegen'd built-ins), the
@@ -1166,7 +1030,7 @@ object DedupOps {
     // and both the estimate and the exact Jaccard now come off the same
     // consecutive-pair row. (Pinned via the generation cache, review
     // r10: the a/b sides are two consumers.)
-    val both = cache(signaturesFrom(pinnedShingles(s, dir))
+    val both = cache(GraftAPI.minhashSignatures(pinnedShingles(s, dir), "doc_id", NumHashes)
       .join(shingled(s, dir), "doc_id"))
     val agree = (1 to NumHashes)
       .map(i => when(col(s"a.mh$i") === col(s"b.mh$i"), 1).otherwise(0))
@@ -1215,30 +1079,10 @@ object DedupOps {
     * common case and falls back to a co-partitioned hash join when a
     * crawl is dirty. Positions (not distinct grams) are counted so the
     * ratio weighs repeated spans by their actual coverage. */
-  def dedupCrossdocNgrams(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy("doc_id").orderBy("pos")
-    val leads = (1 until CrossdocN).map(i => lead(col("w"), i).over(w).as(s"w$i"))
-    val grams = cache(documents(s, dir)
-      .select(col("doc_id"), posexplode(split(lower(col("text")), " ")))
-      .withColumnRenamed("col", "w")
-      .select(col("doc_id") +: col("w") +: leads: _*)
-      .filter(col(s"w${CrossdocN - 1}").isNotNull)
-      .select(col("doc_id"),
-        md5(concat_ws(" ", col("w") +: (1 until CrossdocN).map(i => col(s"w$i")): _*))
-          .as("g")))
-    val dupG = grams.groupBy("g")
-      .agg(countDistinct(col("doc_id")).as("nd"))
-      .filter(col("nd") >= 2).select("g")
-    val tot = grams.groupBy("doc_id").agg(count(lit(1)).as("n_grams"))
-    val hit = grams.join(dupG, "g")
-      .groupBy("doc_id").agg(count(lit(1)).as("n_dup"))
-    tot.join(hit, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("n_grams"),
-        coalesce(col("n_dup"), lit(0L)).as("n_dup"),
-        r6(coalesce(col("n_dup"), lit(0L)).cast("double") / col("n_grams"))
-          .as("dup_ratio"))
-      .orderBy("doc_id")
-  }
+  def dedupCrossdocNgrams(s: SparkSession, dir: String): DataFrame =
+    GraftAPI.dupGramCoverage(
+      cache(GraftAPI.ngramRows(documents(s, dir), "doc_id", "text", CrossdocN)),
+      "doc_id", minDocs = 2).orderBy("doc_id")
 
   /** D12: edit-distance fuzzy match — dirty probe strings (supplier names
     * with their 10th char deleted, a deterministic "typo") resolved to the
@@ -1297,32 +1141,7 @@ object DedupOps {
         s"transform(sequence(0, CAST(ceil(size(w) / ${ParaWords}.0) AS INT) - 1), " +
           s"i -> concat_ws(' ', slice(w, i * $ParaWords + 1, $ParaWords)))")))
       .select(col("doc_id"), col("pos").cast("long").as("cidx"), col("col").as("chunk"))
-    // keeper per distinct chunk: associative min over an integer-encoded
-    // (doc_id, cidx) key — the encode keeps the min map-side-combinable.
-    // cidx < 2^20 (a 10M-word doc at 10 words/chunk); the guard is IN
-    // the key expression so an over-long doc fails the job loudly
-    // instead of silently aliasing into a neighbouring doc's key space
-    // (review r7). 2^20 leaves doc_id headroom to 2^43.
-    val enc = when(col("cidx") >= (1L << 20),
-        expr("raise_error('dedupParagraphs: >=2^20 chunks in one doc — key would alias')")
-          .cast("long"))
-      .otherwise(col("doc_id") * (1L << 20) + col("cidx"))
-    val keep = chunks
-      .groupBy("chunk")
-      .agg(min(enc).as("kkey"))
-    val kept = chunks.join(keep, "chunk")
-      .filter(enc === col("kkey"))
-    val perDoc = kept.groupBy("doc_id")
-      .agg(count(lit(1)).as("n_kept"),
-        array_sort(collect_list(struct(col("cidx"), col("chunk")))).as("p"))
-      .select(col("doc_id"), col("n_kept"),
-        concat_ws(" ", transform(col("p"), x => x.getField("chunk"))).as("text_kept"))
-    val totals = chunks.groupBy("doc_id").agg(count(lit(1)).as("n_chunks"))
-    totals.join(perDoc, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("n_chunks"),
-        coalesce(col("n_kept"), lit(0L)).as("n_kept"),
-        coalesce(col("text_kept"), lit("")).as("text_kept"))
-      .orderBy("doc_id")
+    GraftAPI.keepFirstChunks(chunks, "doc_id", " ").orderBy("doc_id")
   }
 
   /** Every entry opens a fresh cache generation (retiring the previous
@@ -1385,8 +1204,8 @@ object DedupOps {
        |bands AS (
        |  $bandSelects)""".stripMargin
 
-  /** Full-signature sub-key per doc (the DuckDB mirror of the Spark
-    * side's `subKeyCol`). Requires bandsCte's `sig` in scope. */
+  /** Full-signature sub-key per doc (the DuckDB mirror of
+    * [[GraftAPI.minhashSubKey]]). Requires bandsCte's `sig` in scope. */
   private[ops] val subKeySql = "md5(" + (1 to NumHashes)
     .map(i => s"mh$i::VARCHAR").mkString(" || '|' || ") + ")"
 

@@ -59,7 +59,7 @@ object MinhashIndex {
   def ensure(s: SparkSession, dir: String): Ix = synchronized {
     val ix = Ix(Artifacts.root("mhix_v1", dir, "documents.parquet"))
     if (!new java.io.File(ix.root, "_SUCCESS").isFile)
-      buildAt(DedupOps.bandRows(s, dir), ix)
+      buildAt(DedupOps.postingRows(s, dir), ix)
     ix
   }
 
@@ -74,7 +74,8 @@ object MinhashIndex {
   def ensureBase(s: SparkSession, dir: String): Ix = synchronized {
     val ix = Ix(Artifacts.root("mhix_v2_base", dir, "documents.parquet"))
     if (!new java.io.File(ix.root, "_SUCCESS").isFile)
-      buildAt(DedupOps.bandRowsBelow(s, dir, DedupOps.IncrementalCutoff), ix)
+      buildAt(DedupOps.postingRows(s, dir,
+        col("doc_id") < DedupOps.IncrementalCutoff), ix)
     ix
   }
 
@@ -86,8 +87,8 @@ object MinhashIndex {
     * byte-stable). Spark's own `bands_delta/_SUCCESS` commits last, so a
     * crashed write reads as "no delta" to [[ensureDelta]]. */
   def writeDelta(s: SparkSession, dir: String, ix: Ix): Unit = {
-    DedupOps.bandRowsBetween(s, dir,
-        DedupOps.IncrementalCutoff, DedupOps.AppendCutoff)
+    DedupOps.postingRows(s, dir, col("doc_id") >= DedupOps.IncrementalCutoff &&
+        col("doc_id") < DedupOps.AppendCutoff)
       .withColumn("pband", col("band"))
       .repartition(col("pband"))
       .write.mode("overwrite").partitionBy("pband")

@@ -391,7 +391,7 @@ object PipelineOps {
 
   /** Generation-scoped persists, the DedupOps/VectorOps discipline
     * (review r11: [[packShards]] leaked one cached survivor frame per
-    * curation invocation — Verify/Explain/specs never run Bench's
+    * curation invocation — Verify/PlanDump/specs never run Bench's
     * clearCache). Each registry entry retires the previous call's
     * generation. */
   private val cachedGen = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
@@ -687,7 +687,7 @@ object PipelineOps {
     // eager count against the double-compute of the batch signature
     // pipeline (the dedupIncremental lesson at this site).
     val batchBands = cache(
-      DedupOps.bandTableWithN(sh.filter(col("doc_id") >= cut)))
+      DedupOps.bandsOf(sh.filter(col("doc_id") >= cut)))
     batchBands.count()
     val nearHits = DedupOps.fineProbeHits(s, dir, batchBands)
       .withColumn("near", lit(true))

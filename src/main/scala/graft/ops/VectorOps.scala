@@ -34,7 +34,7 @@ object VectorOps {
     * caches nothing) — same generational lifecycle as [[DedupOps]]:
     * lazy results can't be unpersisted before their consumer's action
     * runs, so each new invocation retires the previous one's blocks
-    * instead of leaking one set per call (review r6: Verify/Explain/
+    * instead of leaking one set per call (review r6: Verify/PlanDump/
     * specs never run Bench's clearCache). */
   private val cachedGen = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
 

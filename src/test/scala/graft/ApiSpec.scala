@@ -5,12 +5,17 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The public column-parameterized facade must agree with the harness
-  * registry on the test tables — each facade method is checked against
-  * its `graft.ops` twin (or an independent local model). */
+  * registry on the test tables. Dedup-family methods ARE the registry's
+  * implementation, so they run here on RENAMED columns (`doc_id` → `k`,
+  * `text` → `body`) to test the column parameterization; every other
+  * method is checked against its `graft.ops` twin (or an independent
+  * local model). */
 class ApiSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val sf = TestSpark.Sf0001
   private def docs = spark.read.parquet(s"$sf/documents.parquet")
+  /** The documents under caller-chosen column names. */
+  private def renamedDocs = docs.select(col("doc_id").as("k"), col("text").as("body"))
   private def events = graft.Tables.events(spark, sf)
 
   test("exactDedupGroups == DedupOps.dedupExact") {
@@ -27,8 +32,8 @@ class ApiSpec extends AnyFunSuite {
   }
 
   test("crossdocDupRatio == DedupOps.dedupCrossdocNgrams") {
-    val got = GraftAPI.crossdocDupRatio(docs, "doc_id", "text")
-      .orderBy("doc_id").collect()
+    val got = GraftAPI.crossdocDupRatio(renamedDocs, "k", "body")
+      .orderBy("k").collect()
     val want = ops.DedupOps.dedupCrossdocNgrams(spark, sf).collect()
     assert(got.length == want.length)
     got.zip(want).foreach { case (g, w) =>
@@ -164,8 +169,8 @@ class ApiSpec extends AnyFunSuite {
   }
 
   test("simhash == DedupOps.dedupSimhash fingerprints") {
-    val got = GraftAPI.simhash(docs, "doc_id", "text")
-      .orderBy("doc_id").collect()
+    val got = GraftAPI.simhash(renamedDocs, "k", "body")
+      .orderBy("k").collect()
     val want = ops.DedupOps.dedupSimhash(spark, sf).collect()
     assert(got.length == want.length)
     got.zip(want).foreach { case (g, w) =>
@@ -187,8 +192,8 @@ class ApiSpec extends AnyFunSuite {
   }
 
   test("minhashBands == DedupOps.dedupMinhash band table") {
-    val got = GraftAPI.minhashBands(docs, "doc_id", "text", numHashes = 8, bands = 2)
-      .orderBy("doc_id", "band").collect()
+    val got = GraftAPI.minhashBands(renamedDocs, "k", "body", numHashes = 8, bands = 2)
+      .orderBy("k", "band").collect()
     val want = ops.DedupOps.dedupMinhash(spark, sf).collect()
     assert(got.length == want.length)
     got.zip(want).foreach { case (g, w) =>
@@ -1391,6 +1396,20 @@ class ApiSpec extends AnyFunSuite {
     val want = ops.DedupOps.minhashIndexStats(spark, sf)
       .collect().map(_.toSeq)
     assert(got.nonEmpty && got.toSeq == want.toSeq)
+  }
+
+  test("minhashIndexSkew: hand-computed manifest on bucket sizes 1, 2 and 5 (cand_pairs 0, 1, 10)") {
+    import spark.implicits._
+    // band 1: buckets of 1, 2 and 5 docs; band 2: three pairs + two singletons
+    val sizes = Seq(1 -> Seq(1, 2, 5), 2 -> Seq(2, 2, 2, 1, 1))
+    val bands = sizes.flatMap { case (band, szs) =>
+      szs.zipWithIndex.flatMap { case (sz, b) =>
+        (0 until sz).map(d => (d.toLong, band, s"key$b")) }
+    }.toDF("doc_id", "band", "band_key")
+    val got = GraftAPI.minhashIndexSkew(bands).orderBy("band").collect().map(_.toSeq)
+    // (band, n_buckets, max_bucket, hot_buckets, singletons, cand_pairs)
+    assert(got.toSeq == Seq(Seq(1, 3L, 5L, 2L, 1L, 0L + 1L + 10L),
+                            Seq(2, 5L, 2L, 3L, 2L, 3L)))
   }
 
   test("embeddingOutliers(facade) == VectorOps.embedOutliers at the registry protocol") {

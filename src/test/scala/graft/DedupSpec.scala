@@ -154,6 +154,27 @@ class DedupSpec extends AnyFunSuite {
       assert(firstDoc._3 == firstDoc._2, "first doc's unique chunks must all survive")
   }
 
+  test("dedup_paragraphs fails loudly on a doc_id >= 2^43 instead of overflowing the keeper key") {
+    // doc_id · 2^20 exceeds Long.MaxValue for ids ≥ 2^43. Without ANSI
+    // arithmetic the product wraps silently to a key that can alias
+    // another document's chunk, so the keeper choice itself must refuse
+    // the id under either setting (a separate session keeps the conf
+    // change away from other suites).
+    val dir = java.nio.file.Files.createTempDirectory("graft_para_id").toString
+    val sq = spark; import sq.implicits._
+    Seq((1L, "shared words here"), ((1L << 43) + 5, "shared words here"))
+      .toDF("doc_id", "text")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val nonAnsi = spark.newSession()
+    nonAnsi.conf.set("spark.sql.ansi.enabled", "false")
+    Seq(nonAnsi, spark).foreach { s =>
+      val err = intercept[Exception](DedupOps.dedupParagraphs(s, dir).collect())
+      val msgs = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+        .map(e => String.valueOf(e.getMessage)).mkString(" | ")
+      assert(msgs.contains("outside [0, 2^43)"), msgs)
+    }
+  }
+
   test("decontam single-pass factoring matches the brute-force overlap model") {
     // Pins the r14 refactor (one broadcast-left-probe aggregate replacing
     // the tot/hits groupBy pair + re-join): per-doc overlap and shingle

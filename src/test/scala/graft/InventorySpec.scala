@@ -87,17 +87,46 @@ class InventorySpec extends AnyFunSuite {
     Seq("s.readStream.schema(x).parquet(p)", "df.write.parquet(p)", "s.read.json(p)",
         "s.read.text(p).select(x).write.parquet(q)")
       .foreach(c => assert(!batchParquetRead(c), c))
-    import scala.jdk.CollectionConverters._
-    val offenders = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
-      .iterator.asScala
-      .filter(f => f.toString.endsWith(".scala") && f.getFileName.toString != "Tables.scala")
-      .filter { f =>
-        val code = new String(java.nio.file.Files.readAllBytes(f),
-          java.nio.charset.StandardCharsets.UTF_8)
-          .replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("(?m)^\\s*//.*$", "")
-          .replaceAll("\\s+", "")
-        batchParquetRead(code)
-      }.map(_.toString).toSeq
+    val offenders = mainSources
+      .filter { case (f, code) => !f.endsWith("/Tables.scala") && batchParquetRead(code) }
+      .map(_._1)
     assert(offenders.isEmpty, s"batch parquet reads outside Tables.read: $offenders")
+  }
+
+  /** Source text with block and whole-line comments removed and all
+    * whitespace squeezed out, so a lint matches code only. */
+  private def codeOnly(src: String): String =
+    src.replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("(?m)^\\s*//.*$", "")
+      .replaceAll("\\s+", "")
+
+  /** (path, [[codeOnly]] text) of every Scala file under src/main/scala. */
+  private lazy val mainSources: Seq[(String, String)] = {
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .iterator.asScala.filter(_.toString.endsWith(".scala"))
+      .map(f => f.toString -> codeOnly(new String(java.nio.file.Files.readAllBytes(f),
+        java.nio.charset.StandardCharsets.UTF_8)))
+      .toSeq
+  }
+
+  /** Files whose code (comments excluded) contains `recipe`. */
+  private def filesWith(recipe: String, sources: Seq[(String, String)]): Seq[String] = {
+    val needle = recipe.replaceAll("\\s+", "")
+    sources.collect { case (f, code) if code.contains(needle) => f }
+  }
+
+  test("the dedup recipes live in one file each: shingle tokenizer, MinHash signer") {
+    val recipes = Seq("posexplode(split(lower(", "min(col(\"a\") + lit(")
+    // the detector itself: a second copy in code is caught, a comment is not
+    val copy = "df.select(col(id), posexplode(split(lower(col(text)), \" \")))"
+    val twoCopies = Seq("A.scala" -> codeOnly(copy), "B.scala" -> codeOnly(s"val x =\n  $copy"))
+    assert(filesWith(recipes.head, twoCopies) == Seq("A.scala", "B.scala"))
+    val commented = Seq("A.scala" -> codeOnly(copy),
+      "B.scala" -> codeOnly(s"/** was $copy */\n// $copy\nval y = 1"))
+    assert(filesWith(recipes.head, commented) == Seq("A.scala"))
+    recipes.foreach { r =>
+      val hits = filesWith(r, mainSources)
+      assert(hits.size == 1, s"recipe `$r` must live in exactly one file, found in: $hits")
+    }
   }
 }
