@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every `SparkEntry.queries` entry at the target SF.
   *
@@ -82,43 +81,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new functions.GraftExtensions)
-      // SPARK_GRAFT_MASTER overrides for multi-JVM runs (e.g.
-      // "local-cluster[2,4,4096]" — the serialization/conf-fallback
-      // seams a single-JVM local[n] can never exercise).
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // Hundreds of distinct queries in ONE driver JVM: broadcast vars,
-      // task binaries and shuffle state are only released after a driver
-      // GC lets ContextCleaner's weak refs fire, and with a 64 g heap that
-      // GC never comes (default periodicGC is 30 min — longer than the
-      // run). The accumulated block-manager state progressively slowed
-      // late queries by 10-70×; a 90 s periodic GC keeps cleanup flowing.
-      // (SPARK_GRAFT_PERIODIC_GC overrides for triage, e.g. "30min" ≈ off.)
-      .config("spark.cleaner.periodicGC.interval",
-        sys.env.getOrElse("SPARK_GRAFT_PERIODIC_GC", "90s"))
-      // Never auto-broadcast a pruned FACT table: at the default 10 MB the
-      // column-pruned lineitem scan (~2-4 MB estimate at sf0.1) was chosen
-      // as the build side of sql_local_supplier_volume, and the repeated
-      // ~35 MB hashed-relation builds dominated the sweep (12s for a query
-      // that is ~1s clean — VERDICT r4 #5). 2 MB is the empirical flip
-      // point: dimension tables (nation/region/supplier/customer/part)
-      // still broadcast, fact-scale scans never do. Explicit broadcast()
-      // hints are unaffected; at real scale AQE re-plans from true sizes.
-      .config("spark.sql.autoBroadcastJoinThreshold", "2097152")
-      // The generated-class cache defaults to 100 entries — a 212-query
-      // sweep (plus its full warm-up pass) evicts the early queries'
-      // compiled classes, so position-N queries pay a Janino recompile
-      // storm unrelated to their plan (bisected r5: curation_pipeline
-      // 14.5 s in-sweep vs 5.4 s with an identical 29-query prefix but
-      // short warm-up). Size the cache to the sweep, not the default.
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .getOrCreate()
+    val spark = GraftSession.builder("graft-bench").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Debug aid: SPARK_GRAFT_ONLY=q1,q2 restricts BOTH warm-up and the
     // timed set (the driver never sets it — full map by default).

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Executor-loss chaos harness (VERDICT r12 #3): the r12 multi-JVM sweep
@@ -100,16 +99,11 @@ object ChaosCheck {
   def main(args: Array[String]): Unit = {
     require(args.length == 2, "usage: ChaosCheck <sfDir> <outJson>")
     val Array(sfDir, outJson) = args
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", "local-cluster[2,4,4096]")
+    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", "")
     require(master.startsWith("local-cluster"),
-      s"chaos needs a multi-JVM master to kill, got $master")
-    val spark = SparkSession.builder()
-      .appName("graft-chaos")
-      .master(master)
-      .withExtensions(new functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+      s"chaos needs a multi-JVM master to kill: set SPARK_GRAFT_MASTER to " +
+        s"local-cluster[...], got '$master'")
+    val spark = GraftSession.builder("graft-chaos")
       // a killed executor loses its shuffle files mid-stage; fetch
       // failures must re-run the map side, not fail the app
       .config("spark.stage.maxConsecutiveAttempts", "8")

@@ -1,14 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Optimization-round plan capture: writes `.explain("formatted")` for the
   * named queries to `<outDir>/<query>_<tag>.txt` — the before/after
   * evidence files the optimization rounds commit under `plans/r<k>/`.
   *
-  * Runs under the BENCH session geometry (SPARK_GRAFT_CPUS cores, same shuffle
-  * partitions, same broadcast threshold) so the captured plan is the plan
-  * the bench actually executes, parameterized by query list and output
-  * dir:
+  * Runs under the [[GraftSession]] profile, as the bench does, so the
+  * captured plan is the plan the bench actually executes, parameterized by
+  * query list and output dir:
   *
   *   runMain graft.PlanDump <outDir> <tag> <q1,q2,...> [sfDir]
   */
@@ -24,20 +22,12 @@ object PlanDump {
     require(unknown.isEmpty,
       s"unknown queries: ${unknown.mkString(", ")} — valid names are " +
         s"SparkEntry.queries keys, e.g. ${SparkEntry.queries.keys.take(5).mkString(", ")} …")
-    // Same env vars, same defaults as Bench (ADVICE r13): a bare invocation
-    // must capture exactly the plan the bench executes — cpus default 4,
-    // sfDir from SPARK_GRAFT_SF_DIR, master overridable by SPARK_GRAFT_MASTER.
+    // Same sfDir default and the same GraftSession profile as Bench
+    // (ADVICE r13): a bare invocation must capture exactly the plan the
+    // bench executes.
     val dir = if (args.length > 3) args(3)
       else sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new functions.GraftExtensions)
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "2097152")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder("graft-plandump").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     for (q <- names) {

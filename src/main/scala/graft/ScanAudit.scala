@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
@@ -21,14 +20,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 object ScanAudit {
   def main(args: Array[String]): Unit = {
     val minRepeat = args.headOption.map(_.toInt).getOrElse(3)
-    val spark = SparkSession.builder()
-      .withExtensions(new functions.GraftExtensions)
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "2097152")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder("graft-scan-audit").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.001"
     def scans(p: SparkPlan): Seq[String] = {

@@ -1,35 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new functions.GraftExtensions)
-      // SPARK_GRAFT_MASTER overrides for multi-JVM runs (e.g.
-      // "local-cluster[2,4,4096]" — the serialization/conf-fallback
-      // seams a single-JVM local[n] can never exercise).
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // Same long-running-driver hygiene as Bench: ~190 queries in one
-      // JVM accumulate broadcast/shuffle blocks until a driver GC lets
-      // ContextCleaner release them; keep the cleanup flowing.
-      // (SPARK_GRAFT_PERIODIC_GC overrides for triage, e.g. "30min" ≈ off.)
-      .config("spark.cleaner.periodicGC.interval",
-        sys.env.getOrElse("SPARK_GRAFT_PERIODIC_GC", "90s"))
-      // Fact tables never auto-broadcast (same rationale as Bench): 2 MB is
-      // the empirical flip point below the pruned-lineitem size estimate.
-      .config("spark.sql.autoBroadcastJoinThreshold", "2097152")
-      // Size the generated-class cache to the sweep (default 100 entries
-      // thrashes across 200+ distinct queries — see Bench).
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .getOrCreate()
+    val spark = GraftSession.builder("graft-verify").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Debug aid: SPARK_GRAFT_ONLY=q1,q2 dumps a subset (driver never sets

@@ -4,8 +4,10 @@ import org.apache.spark.sql.SparkSession
 
 /** Session bootstrap shared by the `graft.jobs` spark-submit mains.
   *
-  * Under spark-submit the master/deploy config comes from the launcher;
-  * standalone (tests, bare `java -cp`) it falls back to local[*].
+  * A session this creates carries the [[graft.GraftSession]] profile: under
+  * spark-submit the master/deploy config comes from the launcher;
+  * standalone (tests, bare `java -cp`) the profile's local geometry
+  * applies. A joined host session is not reconfigured.
   * Ownership rules (review r6): a main must NOT stop a session it merely
   * joined (the test JVM shares one session across suites), a STOPPED
   * session must never be handed out (Spark's thread-local active-session
@@ -32,15 +34,7 @@ object JobSession {
         graft.functions.GraftExtensions.ensureFunctions(s)
         s
       case None =>
-        val b = SparkSession.builder()
-          .appName(appName)
-          .withExtensions(new graft.functions.GraftExtensions)
-          .config("spark.sql.session.timeZone", "UTC")
-        if (sys.props.get("spark.master").isEmpty) {
-          b.master("local[*]").config("spark.sql.shuffle.partitions",
-            Runtime.getRuntime.availableProcessors().toString)
-        }
-        val s = b.getOrCreate()
+        val s = graft.GraftSession.builder(appName).getOrCreate()
         created = Some(s)
         refs = 1
         s

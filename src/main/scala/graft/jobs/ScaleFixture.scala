@@ -1,7 +1,6 @@
 package graft.jobs
 
-import graft.Tables
-import org.apache.spark.sql.SparkSession
+import graft.{GraftSession, Tables}
 import org.apache.spark.sql.functions._
 
 /** Deterministic k-fold blow-up of the driver-provided testdata (VERDICT
@@ -35,19 +34,7 @@ object ScaleFixture {
     val Array(src, out, copiesS) = args
     val copies = copiesS.toInt
     require(copies >= 1 && copies <= 100, s"copies out of range: $copies")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      // session parity with Bench/Verify (review r10): events.parquet has
-      // shipped ts as TIMESTAMP(NANOS) in past harness revisions, which
-      // Spark 4 refuses without the legacy flag (Tables.events scaladoc),
-      // and the pass-through copy below reads it directly; UTC pins the
-      // fixture bytes against host-timezone drift.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .appName("graft-scale-fixture")
-      .getOrCreate()
+    val spark = GraftSession.builder("graft-scale-fixture").getOrCreate()
     try {
       val docs = Tables.read(spark, s"$src/documents.parquet")
       val docStride = {

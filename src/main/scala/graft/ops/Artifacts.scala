@@ -75,9 +75,15 @@ private[graft] object Artifacts {
     fold(new java.io.File(s"$dir/$table"))
   }
 
+  /** `/tmp/graft_<tag>_<sf-digits>`: the one spelling of the engine's
+    * local scratch paths (index roots and the sink round-trips). Kept
+    * byte-stable: existing index roots and `/tmp/graft_*` cleanup rely on
+    * it. */
+  private[graft] def scratch(tag: String, dir: String): String =
+    s"/tmp/graft_${tag}_${dir.replaceAll("[^0-9.]", "")}"
+
   /** `/tmp/graft_<tag>_<sf-digits>_<fingerprint-hex>` — same scheme the
     * round-7 ANN index introduced (kept byte-compatible for `annix_v1`). */
   def root(tag: String, dir: String, table: String): String =
-    s"/tmp/graft_${tag}_${dir.replaceAll("[^0-9.]", "")}_" +
-      java.lang.Long.toHexString(fingerprint(dir, table))
+    scratch(tag, dir) + "_" + java.lang.Long.toHexString(fingerprint(dir, table))
 }

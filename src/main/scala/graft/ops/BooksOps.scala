@@ -145,7 +145,7 @@ object BooksOps {
     // r11): two concurrent graft processes on the same corpus — Verify
     // and Bench triaged side by side — would otherwise race one file,
     // overwrite-deleting it under the other's read.
-    val path = s"/tmp/graft_books_raw_${dir.replaceAll("[^0-9.]", "")}_" +
+    val path = Artifacts.scratch("books_raw", dir) + "_" +
       java.lang.Integer.toHexString(dir.hashCode) + "_" +
       s.sparkContext.applicationId.replaceAll("[^a-zA-Z0-9-]", "")
     syntheticRaw(s, dir).write.mode("overwrite").json(path)

@@ -938,9 +938,8 @@ object PipelineOps {
     * On a real lake this is Iceberg/Delta `rewriteDataFiles`; the
     * Spark-core mechanics are the same. */
   def sinkCompact(s: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^0-9.]", "")
-    val frag = s"/tmp/graft_compact_frag_$tag"
-    val tidy = s"/tmp/graft_compact_tidy_$tag"
+    val frag = Artifacts.scratch("compact_frag", dir)
+    val tidy = Artifacts.scratch("compact_tidy", dir)
     val cols = lineitem(s, dir)
       .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
         col("l_extendedprice"))

@@ -693,7 +693,7 @@ object Relational {
     * Partitioning by the low-cardinality flag column is what makes the
     * re-scan prunable at scale. */
   def sinkParquetRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val path = s"/tmp/graft_sink_${dir.replaceAll("[^0-9.]", "")}"
+    val path = Artifacts.scratch("sink", dir)
     lineitem(s, dir)
       .filter(col("l_quantity") > 40)
       .select("l_orderkey", "l_linenumber", "l_returnflag", "l_extendedprice")
@@ -716,7 +716,7 @@ object Relational {
     * dropped first so repeated runs (Bench times twice) stay idempotent. */
   def sinkJdbcRoundtrip(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.JdbcSink
-    val db = s"/tmp/graft_derby_${dir.replaceAll("[^0-9.]", "")}/db"
+    val db = Artifacts.scratch("derby", dir) + "/db"
     val url = s"jdbc:derby:$db;create=true"
     val ddl = """"n_nationkey" BIGINT, "n_name" VARCHAR(64), "n_regionkey" BIGINT"""
     JdbcSink.dropIfExists(url, "nation_t")
@@ -951,7 +951,7 @@ object Relational {
     * verified columns are the exact-typed ones; the oracle is the same
     * agg on the raw table (sink must be semantically invisible). */
   def sinkJsonRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val path = s"/tmp/graft_json_${dir.replaceAll("[^0-9.]", "")}"
+    val path = Artifacts.scratch("json", dir)
     customer(s, dir)
       .select("c_custkey", "c_nationkey", "c_mktsegment")
       .write.mode("overwrite").json(path)
@@ -967,7 +967,7 @@ object Relational {
     * columnar format (ORC keeps doubles binary-exact, so the money column
     * round-trips without a string detour). */
   def sinkOrcRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val path = s"/tmp/graft_orc_${dir.replaceAll("[^0-9.]", "")}"
+    val path = Artifacts.scratch("orc", dir)
     lineitem(s, dir)
       .select("l_orderkey", "l_returnflag", "l_extendedprice")
       .write.mode("overwrite").orc(path)
@@ -982,7 +982,7 @@ object Relational {
     * 100 TB). Long/string columns only: CSV is a text format, and exact
     * float round-trip contracts belong to the columnar sinks. */
   def sinkCsvRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val path = s"/tmp/graft_csv_${dir.replaceAll("[^0-9.]", "")}"
+    val path = Artifacts.scratch("csv", dir)
     orders(s, dir)
       .select("o_orderkey", "o_custkey", "o_orderpriority")
       .write.mode("overwrite").option("header", "true").csv(path)
@@ -1086,7 +1086,7 @@ object Relational {
     * file has a cost: turn it on per-read, or register the merged schema
     * in the catalog once). Oracle = the same split derived on the fly. */
   def scanMergeSchema(s: SparkSession, dir: String): DataFrame = {
-    val path = s"/tmp/graft_evo_${dir.replaceAll("[^0-9.]", "")}"
+    val path = Artifacts.scratch("evo", dir)
     val o = orders(s, dir)
     o.filter(col("o_orderkey") % 2 === 0)
       .select("o_orderkey", "o_totalprice")

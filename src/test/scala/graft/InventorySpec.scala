@@ -99,15 +99,17 @@ class InventorySpec extends AnyFunSuite {
     src.replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("(?m)^\\s*//.*$", "")
       .replaceAll("\\s+", "")
 
-  /** (path, [[codeOnly]] text) of every Scala file under src/main/scala. */
-  private lazy val mainSources: Seq[(String, String)] = {
+  /** (path, [[codeOnly]] text) of every Scala file under `root`. */
+  private def sourcesUnder(root: String): Seq[(String, String)] = {
     import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    java.nio.file.Files.walk(java.nio.file.Paths.get(root))
       .iterator.asScala.filter(_.toString.endsWith(".scala"))
       .map(f => f.toString -> codeOnly(new String(java.nio.file.Files.readAllBytes(f),
         java.nio.charset.StandardCharsets.UTF_8)))
       .toSeq
   }
+
+  private lazy val mainSources = sourcesUnder("src/main/scala")
 
   /** Files whose code (comments excluded) contains `recipe`. */
   private def filesWith(recipe: String, sources: Seq[(String, String)]): Seq[String] = {
@@ -128,5 +130,28 @@ class InventorySpec extends AnyFunSuite {
       val hits = filesWith(r, mainSources)
       assert(hits.size == 1, s"recipe `$r` must live in exactly one file, found in: $hits")
     }
+  }
+
+  test("scratch paths are spelled only in Artifacts: \"/tmp/graft_ outside comments") {
+    val needle = "\"/tmp/graft_"
+    // the detector itself: a path in code is caught, one in a comment is not
+    val controls = Seq("A.scala" -> codeOnly("val p = s\"/tmp/graft_x_$d\""),
+      "B.scala" -> codeOnly("/** under \"/tmp/graft_x\" */\n// \"/tmp/graft_y\"\nval q = 1"))
+    assert(filesWith(needle, controls) == Seq("A.scala"))
+    val hits = filesWith(needle, mainSources)
+    assert(hits.map(java.nio.file.Paths.get(_).getFileName.toString) == Seq("Artifacts.scala"),
+      s"scratch paths must go through Artifacts.scratch, spelled in: $hits")
+  }
+
+  test("GraftSession holds the only SparkSession builder under src/main and src/test") {
+    // spelled in parts: this file is scanned too
+    val builderCall = Seq("SparkSession", "builder").mkString(".")
+    // the detector itself: a call split over lines is caught, comments are not
+    val controls = Seq("A.scala" -> codeOnly("val s = SparkSession\n  .builder()\n  .getOrCreate()"),
+      "B.scala" -> codeOnly(s"// $builderCall()\n/** $builderCall() */\nval t = 1"))
+    assert(filesWith(builderCall, controls) == Seq("A.scala"))
+    val hits = filesWith(builderCall, mainSources ++ sourcesUnder("src/test/scala"))
+    assert(hits.map(java.nio.file.Paths.get(_).getFileName.toString) == Seq("GraftSession.scala"),
+      s"sessions must be built through GraftSession.builder, built in: $hits")
   }
 }
