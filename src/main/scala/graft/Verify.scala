@@ -24,6 +24,10 @@ object Verify {
       // stale parquet in place — hash_match:true and err set for the same
       // key, a mixed signal that can mask the regression.
       graft.ops.Artifacts.rmrf(new java.io.File(s"$outDir/$name"))
+      // Names the query on stderr before it runs, so the Spark warnings
+      // that follow (e.g. "No Partition Defined for Window") can be
+      // attributed to it; stdout and the artifacts stay unchanged.
+      System.err.println(s"[verify] $name")
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e if scala.util.control.NonFatal(e) =>

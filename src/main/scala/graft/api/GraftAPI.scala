@@ -8,12 +8,18 @@ import org.apache.spark.sql.functions._
 /** Public, column-parameterized entry points — the surface a USER of this
   * library calls on their own DataFrames.
   *
-  * The dedup-family methods here ARE the registry's implementation:
-  * `graft.ops.DedupOps` binds them to the test tables (`doc_id`, `text`
-  * and the harness MinHash geometry) plus a presentation sort, so the
-  * DuckDB oracle gate checks these very plans. The other families still
-  * keep a harness twin in `graft.ops` and stay equivalence-tested against
-  * it in `ApiSpec` until they are bound the same way.
+  * The dedup, text, pipeline, events, graph and vector methods here ARE
+  * the registry's implementation: the `graft.ops` registry keys bind them
+  * to the test tables (`doc_id`/`text`, `vec_id`/`embedding`, the harness
+  * MinHash geometry) plus renames and a presentation sort, so the DuckDB
+  * oracle gate checks these very plans. Each bound method names its key
+  * in a "Registry binding" line. Four keys keep their own plan on
+  * purpose, each saying why in its scaladoc: `join_asof` and
+  * `join_asof_tolerance` (one-scan self-timelines, where
+  * [[asofJoinBackward]] would scan `events` twice), `cdc_diff_snapshots`
+  * (a single-pass conditional aggregate, where [[snapshotDiff]] would
+  * scan and shuffle `orders` twice) and `dedup_exact` (which hash is the
+  * contract, raw text or [[exactDedupGroups]]' `to_json`, is still open).
   *
   * Everything is a pure DataFrame→DataFrame transform: no SparkSession
   * parameter, no paths, no side effects — the caller owns I/O. All
@@ -866,26 +872,39 @@ object GraftAPI {
       .select(col(id), fp.cast("long").as("simhash"))
   }
 
+  /** Default marker tokens of [[langId]], in preference order. */
+  private[graft] val LangMarkers: Seq[(String, Seq[String])] = Seq(
+    "en" -> Seq("the", "a", "and"),
+    "de" -> Seq("der", "die", "und"),
+    "es" -> Seq("el", "la", "los"),
+    "fr" -> Seq("le", "les", "des"))
+
   /** Marker-token language ID: first language (in declared order) whose
     * marker hit-count is positive and maximal; "und" otherwise.
-    * Zero-shuffle codegen'd scoring. */
+    * Zero-shuffle codegen'd scoring. Registry binding: `lang_id_ngram`
+    * (through [[langScores]], which keeps the per-language scores). */
   def langId(df: DataFrame, text: String,
-             markers: Seq[(String, Seq[String])] = Seq(
-               "en" -> Seq("the", "a", "and"),
-               "de" -> Seq("der", "die", "und"),
-               "es" -> Seq("el", "la", "los"),
-               "fr" -> Seq("le", "les", "des"))): DataFrame = {
+             markers: Seq[(String, Seq[String])] = LangMarkers): DataFrame =
+    langScores(df, text, markers, "_s_")
+      .drop(markers.map(m => s"_s_${m._1}"): _*)
+
+  /** The scoring step of [[langId]]: adds one marker hit-count column
+    * `<prefix><lang>` per language (over the lowercase whitespace
+    * tokens) and the `lang_pred` argmax. */
+  private[graft] def langScores(df: DataFrame, text: String,
+                                markers: Seq[(String, Seq[String])],
+                                prefix: String): DataFrame = {
     val toks = split(lower(col(text)), " ")
     def score(ms: Seq[String]): Column =
       size(filter(toks, t => array_contains(array(ms.map(lit): _*), t))).cast("long")
     val scored = df.withColumns(
-      markers.map { case (l, ms) => s"_s_$l" -> score(ms) }.toMap)
+      markers.map { case (l, ms) => s"$prefix$l" -> score(ms) }.toMap)
     val best = markers.map(_._1).foldRight(lit("und")) { (l, acc) =>
-      when(col(s"_s_$l") > 0 &&
-        markers.map(m => col(s"_s_$l") >= col(s"_s_${m._1}")).reduce(_ && _), lit(l))
+      when(col(s"$prefix$l") > 0 &&
+        markers.map(m => col(s"$prefix$l") >= col(s"$prefix${m._1}")).reduce(_ && _), lit(l))
         .otherwise(acc)
     }
-    scored.withColumn("lang_pred", best).drop(markers.map(m => s"_s_${m._1}"): _*)
+    scored.withColumn("lang_pred", best)
   }
 
   // ------------------------------------------------------------- ranking
@@ -909,7 +928,8 @@ object GraftAPI {
     * defaults to 0.5 because powers of two are exact doubles — the
     * backfill-determinism choice; other alphas are computed identically
     * but carry last-ulp pow() variance across platforms. Horizon ~1000
-    * steps (v·2^t range) — re-normalize per segment beyond. */
+    * steps (v·2^t range) — re-normalize per segment beyond. Registry
+    * binding: `events_ewma` (over the per-type daily DECIMAL sums). */
   def ewma(df: DataFrame, keys: Seq[String], order: String, value: String,
            alpha: Double = 0.5): DataFrame = {
     // alpha = 1 makes decay = 0 and the v/decay^t rescaling 0·∞ = NaN
@@ -998,8 +1018,11 @@ object GraftAPI {
 
   // ---------------------------------------------------------------- text
 
-  /** Whitespace/BPE-ish token counts for a text column. Zero-shuffle,
-    * codegen'd. */
+  /** Whitespace/BPE-ish token counts for a text column: `ws_tokens`
+    * (single-space split) and `re_tokens` (alpha runs, single digits and
+    * punctuation singles over the lowercased text — the shape of a
+    * byte-pair pretokenizer). Zero-shuffle, codegen'd. Registry binding:
+    * `token_count`. */
   def tokenCounts(df: DataFrame, text: String): DataFrame =
     df.withColumn("ws_tokens", size(split(col(text), " ")).cast("long"))
       .withColumn("re_tokens",
@@ -1042,7 +1065,7 @@ object GraftAPI {
     * back; every stage 6-dp-snaps before its DECIMAL sum so flags are
     * partition-order independent and backfills byte-match. At 100 TB,
     * persist the centroid table like an IVF coarse table and recompute
-    * it on the sample cadence. Harness twin: `embed_outliers`. */
+    * it on the sample cadence. Registry binding: `embed_outliers`. */
   def embeddingOutliers(df: DataFrame, id: String, group: String,
                         vec: String, zThreshold: Double = 2.0): DataFrame = {
     val el = df
@@ -1083,8 +1106,8 @@ object GraftAPI {
     * unbiased uniform sample of the source. The window partitions BY
     * SOURCE, so the ranking is per-source parallel work, never a global
     * sort. Output keeps every row with `src_rank` + `kept` (the audit
-    * artifact; filter `kept` for the corpus). Harness twin:
-    * `corpus_source_quota`. */
+    * artifact; filter `kept` for the corpus). Registry binding:
+    * `corpus_source_quota` (quota 15). */
   def sourceQuota(df: DataFrame, id: String, source: String, quota: Long): DataFrame = {
     val w = Window.partitionBy(source)
       .orderBy(md5(col(id).cast("string")), col(id))
@@ -1095,12 +1118,13 @@ object GraftAPI {
   /** Token-budget selection: keep the rows with the highest integer
     * `quality` until the global sum of `weight` reaches
     * `budgetFrac × total`, truncating the boundary-quality group at its
-    * `id`-ordered prefix. Scale shape (see `PipelineOps.corpusBudgetSelect`):
-    * the quality spine cumulates on a broadcast-sized table and the doc
+    * `id`-ordered prefix. Scale shape: the quality spine cumulates on a
+    * broadcast-sized table (the only unpartitioned window) and the doc
     * side only needs a per-quality-bucket prefix window — no global sort,
     * no partition-less window over the data. `quality` MUST be integral
     * (bucket your score first): that keeps the keep-decision arithmetic
-    * exact and the spine small. */
+    * exact and the spine small. Registry binding: `corpus_budget_select`
+    * (quality = length capped at 4000, weight = whitespace tokens). */
   def budgetSelect(df: DataFrame, id: String, quality: String, weight: String,
                    budgetFrac: Double = 0.5): DataFrame = {
     val wSpine = Window.orderBy(col(quality).desc)
@@ -1123,7 +1147,10 @@ object GraftAPI {
     * (label → fraction, applied in the given order; remainder falls to
     * the last label). Hash-not-rand: reprocessing or repartitioning
     * never moves a row between splits — the property that keeps
-    * train/eval separation valid across backfills. Zero shuffle. */
+    * train/eval separation valid across backfills. u is an exact
+    * multiple of 2⁻³² (hex prefix / 2³²), so the cut compares are
+    * FP-exact. Zero shuffle. Registry binding: `corpus_split_assign`
+    * (plus its per-split × lang rollup). */
   def splitAssign(df: DataFrame, id: String,
                   fractions: Seq[(String, Double)] =
                     Seq("train" -> 0.9, "val" -> 0.05, "test" -> 0.05)): DataFrame = {
@@ -1143,12 +1170,22 @@ object GraftAPI {
     * are normalized away). Two-path + closing-edge join with low→high
     * orientation finds each triangle exactly once; output is
     * (vertex, n_tri). At real scale orient by degree instead of raw id
-    * for the O(m^1.5) candidate bound. */
-  def triangleCounts(edges: DataFrame, src: String, dst: String): DataFrame = {
-    val e = edges
+    * for the O(m^1.5) candidate bound. The edge set feeds three join
+    * branches, so pin a derived edge frame first (as the registry does
+    * with the lineitem co-occurrence pairs) or it is re-derived per
+    * branch. Registry binding: `graph_triangles` (through
+    * [[orientedTriangleCounts]]: its pinned pairs are already oriented
+    * and distinct, so normalizing them again would add one aggregate and
+    * exchange per join branch). */
+  def triangleCounts(edges: DataFrame, src: String, dst: String): DataFrame =
+    orientedTriangleCounts(edges
       .select(least(col(src), col(dst)).as("a"),
         greatest(col(src), col(dst)).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
+      .filter(col("a") =!= col("b")).distinct())
+
+  /** The counting core of [[triangleCounts]] over an edge set that is
+    * already normalized: distinct (a, b) rows with a < b. */
+  private[graft] def orientedTriangleCounts(e: DataFrame): DataFrame = {
     val tri = e.as("e1")
       .join(e.as("e2"), col("e1.b") === col("e2.a"))
       .join(e.as("e3"),
@@ -1159,10 +1196,14 @@ object GraftAPI {
   }
 
   /** Per-row lexical diversity for a text column: whitespace token count,
-    * distinct-type count, type-token ratio, hapax share. Two hash-aggs
-    * both keyed on `id` (the second reuses the first's partitioning). */
+    * distinct-type count, type-token ratio, hapax share — the signals that
+    * catch template spam (few distinct words repeated). Tokens are
+    * lowercased like [[tokenEntropy]]'s, so 'The' and 'the' are one type
+    * and the two signals stay comparable. Two hash-aggs both keyed on
+    * `id` (the second reuses the first's partitioning). Registry binding:
+    * `text_lexical_diversity`. */
   def lexicalDiversity(df: DataFrame, id: String, text: String): DataFrame = {
-    val tf = df.select(col(id), explode(split(col(text), " ")).as("_w"))
+    val tf = df.select(col(id), explode(split(lower(col(text)), " ")).as("_w"))
       .groupBy(id, "_w").agg(count(lit(1)).as("_c"))
     tf.groupBy(id).agg(
         sum("_c").as("n_tokens"),
@@ -1179,11 +1220,11 @@ object GraftAPI {
     * TTR but have entropies 0.056 vs 0.693). Same one-shuffle dataflow:
     * both aggs and the join key on `id`, so the token stream shuffles
     * once; per-type terms 6-dp-snap before the DECIMAL sum so re-runs
-    * byte-match. Harness twin: `text_token_entropy`. */
+    * byte-match. Registry binding: `text_token_entropy`. */
   def tokenEntropy(df: DataFrame, id: String, text: String): DataFrame = {
     // window-over-tf form: one corpus explode serves counts AND totals
-    // (a tf⋈perDoc join would plan the tf subtree twice — see the
-    // registry twin's captured plan)
+    // (a tf⋈perDoc join would plan the tf subtree twice, two corpus
+    // explodes)
     val wd = Window.partitionBy(id)
     df.select(col(id), explode(split(lower(col(text)), " ")).as("_w"))
       .groupBy(id, "_w").agg(count(lit(1)).as("_c"))
@@ -1196,6 +1237,9 @@ object GraftAPI {
       .agg(dsum(col("_term")).as("_hs"))
       .select(col(id), col("n_tokens"), col("n_types"),
         r6(col("_hs").cast("double")).as("entropy"),
+        // least(1, ·): the 6-dp term snap can push the sum a few µnats
+        // past the theoretical max ln(n_types); clamp rather than leak
+        // snap noise into a quantity that is ≤ 1 by definition
         when(col("n_types") === 1, lit(0.0))
           .otherwise(least(lit(1.0), r6(col("_hs").cast("double") /
             log(col("n_types").cast("double"))))).as("norm_entropy"))
@@ -1208,7 +1252,8 @@ object GraftAPI {
     * broadcast, |dims| fixed-width rows per pair, window-bounded top-k);
     * run it before committing to dimension-truncated serving. Query rows
     * present in `df` under the same id are excluded from their own
-    * ranking. Harness twin: `embed_mrl_recall`. */
+    * ranking. Registry binding: `embed_mrl_recall` (queries vec_id < 3,
+    * dims 8/16/32/64, k = 10). */
   def truncatedDimRecall(df: DataFrame, id: String, vec: String,
                          queries: DataFrame, qId: String, qVec: String,
                          dims: Seq[Int], k: Int = 10): DataFrame = {
@@ -1240,7 +1285,7 @@ object GraftAPI {
     // single-pass hit count: a (query, id) surviving at the full width
     // contributes one hit to every dim it survived in — no filtered
     // "truth" branch, which would push below the top-k and duplicate
-    // the corpus subtree (see the registry twin's captured plan)
+    // the corpus subtree
     val hits = topk.groupBy("_qid", id)
       .agg(collect_set(col("_dim")).as("_ds"))
       .filter(array_contains(col("_ds"), lit(dims.max)))
@@ -1276,10 +1321,12 @@ object GraftAPI {
     * `old_*` / `new_*`. Each side shuffles once on the key and the
     * full-outer sort-merge join reuses that partitioning (Sort only —
     * no third exchange); output is changed-keys scale. Works on raw
-    * rows or on pre-aggregated snapshots (`ops.PipelineOps
-    * .cdcDiffSnapshots` is this over two windowed aggregates); route
-    * float payloads through exact [[dsum]]-style aggregation first so
-    * the U-test cannot flap on FP noise. */
+    * rows or on pre-aggregated snapshots; route float payloads through
+    * exact [[dsum]]-style aggregation first so the U-test cannot flap on
+    * FP noise. Two snapshots aggregated from OVERLAPPING windows of one
+    * table are cheaper as one conditional aggregate (one scan, one
+    * exchange): that is why the registry's `cdc_diff_snapshots` does not
+    * bind this method. */
   def snapshotDiff(oldDf: DataFrame, newDf: DataFrame, keys: Seq[String]): DataFrame = {
     val payload = oldDf.columns.filterNot(keys.contains)
       .intersect(newDf.columns.filterNot(keys.contains)).toSeq
@@ -1314,17 +1361,18 @@ object GraftAPI {
     * (path, n, n_keys) with occurrence count and distinct-key support.
     * Counts map-side combine to ≤ |alphabet|ⁿ rows; cut with
     * [[topKPerGroup]] or orderBy/limit downstream (which plans as
-    * `TakeOrderedAndProject`, not a global sort). */
+    * `TakeOrderedAndProject`, not a global sort). Registry binding:
+    * `events_paths3` (n = 3 over (ts, event_id), plus the top-20 cut). */
   def pathNgrams(df: DataFrame, key: String, order: Seq[String],
                  symbol: String, n: Int): DataFrame = {
     require(n >= 2, "path length must be at least 2")
     val w = Window.partitionBy(key).orderBy(order.map(col): _*)
-    val withSteps = (1 until n).foldLeft(df.withColumn("_s0", col(symbol))) {
+    val withSteps = (1 until n).foldLeft(df) {
       case (acc, i) => acc.withColumn(s"_s$i", lead(col(symbol), i).over(w))
     }
     withSteps.filter(col(s"_s${n - 1}").isNotNull)
       .select(col(key),
-        concat_ws(">", (0 until n).map(i => col(s"_s$i")): _*).as("path"))
+        concat_ws(">", col(symbol) +: (1 until n).map(i => col(s"_s$i")): _*).as("path"))
       .groupBy("path")
       .agg(count(lit(1)).as("n"), countDistinct(col(key)).as("n_keys"))
   }
@@ -1753,7 +1801,7 @@ object GraftAPI {
     * the STORED tables (`cells` = (vec_id, cell), `codes` = the code
     * manifest) — reads touch only scalar columns, never floats, so the
     * audit costs one pass over ~12 bytes/vector at any corpus size.
-    * Harness twin: `ann_index_stats`. */
+    * Registry binding: `ann_index_stats` (16 quantizer cells). */
   def annIndexStats(cells: DataFrame, codes: DataFrame,
                     quantizerCells: Int): DataFrame = {
     require(quantizerCells > 0, "quantizerCells must be positive")
@@ -1809,30 +1857,46 @@ object GraftAPI {
     * a filter thins each cell's pool. Exact cosine runs only on the
     * filter-surviving candidates of the probed cells — at 100 TB with a
     * cell-partitioned layout the probe touches ~k/selectivity vectors,
-    * never the corpus. Harness twin: `knn_filtered`. */
+    * never the corpus. Registry binding: `knn_filtered` (through
+    * [[annFilteredProbe]], with the vec_id = 0 row as the query). */
   def annFilteredTopK(df: DataFrame, id: String, vec: String,
                       coarse: DataFrame, cells: DataFrame,
                       query: Seq[Double], pred: Column,
-                      probes: Int = 4, k: Int = 10): DataFrame = {
+                      probes: Int = 4, k: Int = 10): DataFrame =
+    annFilteredProbe(df, id, vec, coarse, cells,
+      df.sparkSession.range(1).select(typedLit(query).as("_q")), "_q",
+      pred, probes, k)
+
+  /** The probe core of [[annFilteredTopK]], with the query as the
+    * `qVec` column of a ONE-row frame (so a query vector stored in a
+    * table never passes through the driver). The row rides the probed
+    * cells' broadcast to the candidate side. `keep` names extra columns
+    * of `df` carried to the output: (id, keep…, cosine). */
+  private[graft] def annFilteredProbe(df: DataFrame, id: String, vec: String,
+                                      coarse: DataFrame, cells: DataFrame,
+                                      query: DataFrame, qVec: String,
+                                      pred: Column, probes: Int, k: Int,
+                                      keep: Seq[String] = Nil): DataFrame = {
     require(probes > 0 && k > 0, s"probes/k must be positive: $probes/$k")
     def dot2(a: Column, b: Column) = graft.functions.VectorFunctions.graftDot(a, b)
-    val qv = typedLit(query)
+    val qv = col("_qv")
     val probeCells = coarse
-      .select(col("cid"), r6(dot2(qv, qv) - lit(2) * dot2(qv, col("cv")) +
-        dot2(col("cv"), col("cv"))).as("d"))
-      .orderBy(col("d").asc, col("cid").asc).limit(probes)
-      .select("cid")
+      .crossJoin(broadcast(query.select(col(qVec).cast("array<double>").as("_qv"))))
+      .select(col("cid"), qv, r6(dot2(qv, qv) - lit(2) * dot2(qv, col("cv")) +
+        dot2(col("cv"), col("cv"))).as("_d"))
+      .orderBy(col("_d").asc, col("cid").asc).limit(probes)
+      .select(col("cid"), qv)
     val x = col(vec).cast("array<double>")
     df.filter(pred)
       .withColumnRenamed(id, "_gid")
       .join(cells, col("_gid") === col("vec_id"))
       .join(broadcast(probeCells), col("cell") === col("cid"))
-      .select(col("_gid").as(id), {
+      .select((col("_gid").as(id) +: keep.map(col)) :+ {
         // zero-norm guard as in truncatedDimRecall: NaN sorts above
         // every real cosine under desc, null sorts last (review r10)
         val den = sqrt(dot2(x, x)) * sqrt(dot2(qv, qv))
         r6(when(den =!= 0.0, dot2(x, qv) / den)).as("cosine")
-      })
+      }: _*)
       .orderBy(col("cosine").desc, col(id).asc)
       .limit(k)
   }
@@ -1855,7 +1919,8 @@ object GraftAPI {
 
   /** SemDeDup cell rule: √n sign-bit cells (least B with 4^B ≥ n) — the
     * cluster column to hand [[semanticDedup]] when no learned clustering
-    * is available. Harness twin: `semantic_dedup_scaled`. */
+    * is available. Registry binding: `semantic_dedup_scaled`
+    * ([[semanticDedup]] over these cells). */
   def sqrtNSignCells(df: DataFrame, vec: String): DataFrame =
     graft.ops.VectorOps.scaledCells(df, j => 1L << (2 * (j - 1)), vec)
 
@@ -1884,11 +1949,12 @@ object GraftAPI {
     * dropped rows carry their lowest-id near-dup as `rep_id`. Greedy by
     * id — local, deterministic, no transitive closure (pair volume is
     * Σ|cluster|², the quantity the caller's clustering controls).
-    * Harness twin: `semantic_dedup` (VectorOps.semanticDedup). */
+    * Registry bindings: `semantic_dedup` (16 sign-grid cells) and
+    * `semantic_dedup_scaled` ([[sqrtNSignCells]]), both at τ = 0.35. */
   def semanticDedup(df: DataFrame, id: String, cluster: String, vec: String,
                     tau: Double): DataFrame = {
-    // cosine written EXACTLY as the harness twin (graftDot / (norm·norm),
-    // then 6-dp snap) so facade and harness agree bit-for-bit at τ
+    // cosine as graftDot / (norm·norm), then the 6-dp snap the DuckDB
+    // oracle mirrors, so the τ test cannot straddle an engine edge
     def d(a: Column, b: Column): Column = graft.functions.VectorFunctions.graftDot(a, b)
     val av = col("a._v").cast("array<double>")
     val bv = col("b._v").cast("array<double>")

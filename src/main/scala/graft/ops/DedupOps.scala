@@ -154,7 +154,12 @@ object DedupOps {
 
   /** L1: exact dedup — content-hash groupBy keeping the smallest doc_id
     * per distinct text (the deterministic form of `dropDuplicates`; one
-    * shuffle on the 32-char fingerprint, never on the text itself). */
+    * shuffle on the 32-char fingerprint, never on the text itself).
+    *
+    * Not bound to [[GraftAPI.exactDedupGroups]] yet: this key hashes the
+    * raw text and the facade hashes `to_json` of the chosen columns, so
+    * binding would change this key's oracle output until one hash is
+    * chosen as the contract. */
   def dedupExact(s: SparkSession, dir: String): DataFrame =
     documents(s, dir)
       .groupBy(md5(col("text")).as("fp"))

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables._
+import graft.api.GraftAPI
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -233,7 +234,12 @@ object EventOps {
     * a (ts, kind, id)-ordered window: one shuffle on `user_id`, no
     * nested-loop join, linear in events per user — the 100 TB-safe form.
     * Signups sort before purchases at equal ts so ties match the oracle's
-    * `s.ts <= p.ts`. */
+    * `s.ts <= p.ts`.
+    *
+    * Does not bind [[graft.api.GraftAPI.asofJoinBackward]] on purpose:
+    * signups and purchases are rows of ONE table, so this timeline is a
+    * single scan of `events` with a conditional carry, while the
+    * facade's two-frame union would scan `events` once per side. */
   def joinAsof(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("user_id")
       .orderBy(col("ts").asc,
@@ -475,27 +481,19 @@ object EventOps {
       .orderBy("prev_type", "event_type")
   }
 
-  /** E15: 3-step path mining — the most-travelled click-path trigrams
-    * with raw occurrence count and distinct-user support (the sequential
-    * generalization of [[eventsTransitions]]'s pair matrix). Both `lead`s
-    * ride ONE shuffle on user_id (same window spec → same exchange +
-    * sort), the path counts map-side combine down to ≤ |types|³ rows,
-    * and the final cut is `TakeOrderedAndProject` — bounded buffers, no
-    * global sort, even when the type alphabet is large. */
-  def eventsPaths3(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-    events(s, dir)
-      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-      .withColumn("t2", lead(col("event_type"), 1).over(w))
-      .withColumn("t3", lead(col("event_type"), 2).over(w))
-      .filter(col("t3").isNotNull)
-      .select(col("user_id"),
-        concat_ws(">", col("event_type"), col("t2"), col("t3")).as("path"))
-      .groupBy("path")
-      .agg(count(lit(1)).as("n"), countDistinct(col("user_id")).as("n_users"))
+  /** E15: 3-step path mining ([[GraftAPI.pathNgrams]] at n = 3) — the
+    * most-travelled click-path trigrams with raw occurrence count and
+    * distinct-user support (the sequential generalization of
+    * [[eventsTransitions]]'s pair matrix). The final cut is
+    * `TakeOrderedAndProject` — bounded buffers, no global sort, even when
+    * the type alphabet is large. */
+  def eventsPaths3(s: SparkSession, dir: String): DataFrame =
+    GraftAPI.pathNgrams(
+        events(s, dir).select(col("user_id"), col("ts"), col("event_id"), col("event_type")),
+        "user_id", Seq("ts", "event_id"), "event_type", 3)
+      .select(col("path"), col("n"), col("n_keys").as("n_users"))
       .orderBy(col("n").desc, col("n_users").desc, col("path").asc)
       .limit(20)
-  }
 
   /** E11: rolling 7-day active users — for each calendar day, the distinct
     * users active in [day-6, day] plus same-day DAU and the DAU/WAU ratio
@@ -554,7 +552,10 @@ object EventOps {
     * bound: a purchase only attributes to a signup at most 24 h older
     * (stale matches null out, the attribution-window semantics ad/conversion
     * pipelines need). Same one-shuffle union-timeline plan; the bound is a
-    * post-window column test, free. */
+    * post-window column test, free. Like [[joinAsof]], a one-scan
+    * self-timeline that does not bind the two-frame
+    * [[graft.api.GraftAPI.asofJoinBackward]] (which would scan `events`
+    * twice). */
   def joinAsofTolerance(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("user_id")
       .orderBy(col("ts").asc,
@@ -608,34 +609,23 @@ object EventOps {
       .orderBy("event_id")
   }
 
-  /** E14: EWMA smoothing of the per-type daily value series — the
-    * exponential-decay trend line (α = 0.5, "halving decay") every
-    * monitoring/forecast pass draws. The recurrence ewma_t = (1-α)·ewma_
-    * {t-1} + α·v_t is re-expressed as ONE running-sum window via
-    * exponent-rescaling: u_i = v_i/(1-α)^i accumulates, and ewma_t =
-    * (1-α)^t·(v_0 + α·(Σu - v_0)). α = 0.5 is chosen deliberately:
-    * powers of 2 are EXACT doubles, so the rescale is lossless and both
-    * engines agree bit-for-bit. Daily sums are DECIMAL-exact first.
-    *
-    * Scale shape: one shuffle to (type, day) daily aggregates; the window
-    * runs over ~30 rows per type. The 2^t rescale bounds the horizon
-    * (~1000 steps in double range) — longer series re-normalize per
-    * segment or drop to a per-key sequential pass (`mapGroups`), both of
-    * which keep the one-shuffle layout. */
+  /** E14: EWMA smoothing of the per-type daily value series
+    * ([[GraftAPI.ewma]]) — the exponential-decay trend line (α = 0.5,
+    * "halving decay") every monitoring/forecast pass draws. The
+    * recurrence ewma_t = (1-α)·ewma_{t-1} + α·v_t is re-expressed as ONE
+    * running-sum window via exponent-rescaling: u_i = v_i/(1-α)^i
+    * accumulates, and ewma_t = (1-α)^t·(v_0 + α·(Σu - v_0)). α = 0.5 is
+    * chosen deliberately: powers of 2 are EXACT doubles, so the rescale is
+    * lossless and both engines agree bit-for-bit. Daily sums are
+    * DECIMAL-exact first. One shuffle to (type, day) daily aggregates;
+    * the window runs over ~30 rows per type. */
   def eventsEwma(s: SparkSession, dir: String): DataFrame = {
     val daily = events(s, dir)
       .select(col("event_type"), to_date(col("ts")).as("day"), col("value"))
       .groupBy("event_type", "day").agg(dsum(col("value")).as("v"))
-    val wOrd = Window.partitionBy("event_type").orderBy("day")
-    val wRun = wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    daily
-      .withColumn("t", row_number().over(wOrd) - lit(1))
-      .withColumn("sacc", sum(col("v") / pow(lit(0.5), col("t"))).over(wRun))
-      .withColumn("v0", first(col("v")).over(wRun))
+    GraftAPI.ewma(daily, Seq("event_type"), "day", "v", alpha = 0.5)
       .select(col("event_type"), dateFmt(col("day")).as("day"),
-        r6(col("v")).as("v_day"),
-        r6(pow(lit(0.5), col("t")) *
-          (col("v0") + lit(0.5) * (col("sacc") - col("v0")))).as("ewma"))
+        r6(col("v")).as("v_day"), r6(col("ewma")).as("ewma"))
       .orderBy("event_type", "day")
   }
 

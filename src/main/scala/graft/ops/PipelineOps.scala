@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.Tables
 import graft.Tables._
+import graft.api.GraftAPI
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -89,7 +90,13 @@ object PipelineOps {
     * 100 TB each snapshot aggregate shuffles once on the key, the
     * full-outer sort-merge join rides the same hash partitioning, and
     * the output is changed-keys-only scale. Revenue compares exactly
-    * because both sides aggregate through DECIMAL ([[graft.Tables.dsum]]). */
+    * because both sides aggregate through DECIMAL ([[graft.Tables.dsum]]).
+    *
+    * Does not bind [[GraftAPI.snapshotDiff]] on purpose: the two
+    * snapshot windows overlap, so one conditional aggregate yields both
+    * in a single scan and exchange, where the facade's generic
+    * full-outer diff of two aggregates would scan and shuffle `orders`
+    * twice. */
   def cdcDiffSnapshots(s: SparkSession, dir: String): DataFrame = {
     // Single-pass conditional aggregation (optimization r14, guide §2.4):
     // the two snapshot windows OVERLAP ([95,97) and [96,98) — their union
@@ -786,61 +793,39 @@ object PipelineOps {
       .orderBy("doc_id")
   }
 
-  /** P12: token-budget corpus selection — keep the highest-quality
-    * documents until a global token budget (here: half the corpus's
-    * tokens, so the query is meaningful at every SF) is exhausted; the
-    * "best N tokens" selection step of a pretraining-data curation run.
-    * Scale shape: NO global sort and NO partition-less window over the
-    * docs. Documents bucket by an integer quality key (length capped at
-    * 4000 — the [[sampleWeighted]] quality proxy kept integer-exact);
-    * per-bucket token totals cumulate over the ≤4001-row bucket spine
-    * (the only unpartitioned window, broadcast-sized); each doc then
-    * needs only its bucket's running offset plus a WITHIN-bucket prefix
-    * sum (window partitioned by bucket). Buckets wholly above the cutoff
-    * keep everything; the one boundary bucket truncates at its doc_id
-    * prefix that still fits. All arithmetic is integer, so the keep
-    * decision can't straddle an FP rounding edge between engines. */
+  /** P12: token-budget corpus selection ([[GraftAPI.budgetSelect]]) —
+    * keep the highest-quality documents until a global token budget
+    * (here: half the corpus's tokens, so the query is meaningful at every
+    * SF) is exhausted; the "best N tokens" selection step of a
+    * pretraining-data curation run. Quality is an integer bucket key
+    * (length capped at 4000 — the [[sampleWeighted]] quality proxy kept
+    * integer-exact), so the ≤4001-row bucket spine is broadcast-sized and
+    * the keep decision can't straddle an FP rounding edge between
+    * engines. */
   def corpusBudgetSelect(s: SparkSession, dir: String): DataFrame = {
     val toks = documents(s, dir).select(
       col("doc_id"),
       least(lit(4000L), col("n_chars")).as("q"),
       size(split(col("text"), " ")).cast("long").as("n_tokens"))
-    val wSpine = Window.orderBy(col("q").desc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val spine = toks.groupBy("q").agg(sum("n_tokens").as("btok"))
-      .withColumn("cum_before", coalesce(sum("btok").over(wSpine), lit(0L)))
-      .select("q", "cum_before")
-    val budget = toks.agg(expr("sum(n_tokens) div 2").as("budget"))
-    val wIn = Window.partitionBy("q").orderBy("doc_id")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    toks
-      .withColumn("within", coalesce(sum("n_tokens").over(wIn), lit(0L)))
-      .join(broadcast(spine), "q")
-      .crossJoin(broadcast(budget))
-      .filter(col("cum_before") + col("within") + col("n_tokens") <= col("budget"))
+    GraftAPI.budgetSelect(toks, "doc_id", "q", "n_tokens", budgetFrac = 0.5)
       .select(col("doc_id"), col("q"), col("n_tokens"))
       .orderBy("doc_id")
   }
 
-  /** P13: deterministic train/val/test split — each doc hashes to a unit
-    * deviate via md5 (the [[sampleStratified]] hash-not-rand rule: a
-    * re-run, a backfill, or a repartition never moves a doc between
-    * splits — the property that keeps eval decontamination valid), cut
-    * 90/5/5, reported as per-split × lang doc/token counts. u is an
-    * exact multiple of 2⁻³² in both engines (hex prefix / 2³²), so the
-    * threshold compares are FP-exact. Pure map + one agg shuffle. */
-  def corpusSplitAssign(s: SparkSession, dir: String): DataFrame = {
-    val u = conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
-      .cast("double") / lit(4294967296.0)
-    documents(s, dir)
-      .select(col("doc_id"), col("lang"), col("n_chars"),
-        size(split(col("text"), " ")).cast("long").as("n_tokens"),
-        when(u < 0.9, "train").when(u < 0.95, "val").otherwise("test").as("split"))
+  /** P13: deterministic train/val/test split ([[GraftAPI.splitAssign]],
+    * 90/5/5 on an md5 unit deviate of doc_id — the [[sampleStratified]]
+    * hash-not-rand rule: a re-run, a backfill, or a repartition never
+    * moves a doc between splits, the property that keeps eval
+    * decontamination valid), reported as per-split × lang doc/token
+    * counts. Pure map + one agg shuffle. */
+  def corpusSplitAssign(s: SparkSession, dir: String): DataFrame =
+    GraftAPI.splitAssign(documents(s, dir)
+        .select(col("doc_id"), col("lang"), col("n_chars"),
+          size(split(col("text"), " ")).cast("long").as("n_tokens")), "doc_id")
       .groupBy("split", "lang")
       .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("tot_tokens"),
         r6(dsum(col("n_chars")) / count(lit(1))).as("avg_chars"))
       .orderBy("split", "lang")
-  }
 
   /** P14: in-pass data-quality metrics via `Dataset.observe` — the
     * production observability idiom: a pipeline's quality counters
@@ -994,27 +979,16 @@ object PipelineOps {
       .orderBy("source")
   }
 
-  /** P16: per-source QUOTA rebalancing — cap any single source's share of
-    * the curated corpus (the "no domain may dominate" rule every pretrain
-    * mix applies; C4/Pile-style source balancing). Selection within a
-    * source is by md5-hash rank, so (a) which docs survive is a pure
-    * function of content ids — re-runs and repartitions never change the
-    * cut — and (b) the kept subset is an unbiased uniform sample of the
-    * source. Window is partitioned BY SOURCE (each source's ranking runs
-    * parallel); at 100 TB a source is still millions of rows per
-    * partition slice, so the rank is per-source-partitioned work, never a
-    * global sort. Output: every doc with its rank + kept flag (the audit
-    * artifact; filter `kept` for the corpus). */
-  def corpusSourceQuota(s: SparkSession, dir: String): DataFrame = {
-    val Quota = 15L // max docs any source may contribute
-    val w = Window.partitionBy("source")
-      .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))
-    documents(s, dir)
-      .select(col("doc_id"), col("source"))
-      .withColumn("src_rank", row_number().over(w).cast("long"))
-      .withColumn("kept", col("src_rank") <= Quota)
+  /** P16: per-source QUOTA rebalancing ([[GraftAPI.sourceQuota]]) — cap
+    * any single source's share of the curated corpus at 15 docs (the "no
+    * domain may dominate" rule every pretrain mix applies; C4/Pile-style
+    * source balancing), by md5-hash rank within the source. Output: every
+    * doc with its rank + kept flag (the audit artifact; filter `kept` for
+    * the corpus). */
+  def corpusSourceQuota(s: SparkSession, dir: String): DataFrame =
+    GraftAPI.sourceQuota(documents(s, dir).select(col("doc_id"), col("source")),
+        "doc_id", "source", quota = 15L)
       .orderBy("doc_id")
-  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "pipeline_observe"     -> pipelineObserve _,

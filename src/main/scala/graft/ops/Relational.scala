@@ -2278,17 +2278,13 @@ object Relational {
       .orderBy("s_suppkey")
   }
 
-  /** G2: triangle counting on the co-purchase graph — part pairs that
-    * co-occur in ≥2 orders form edges (the [[basketPairs]] edge set, same
-    * support threshold bounding edge count); triangles come from the
-    * standard distributed two-path + closing-edge formulation with every
-    * edge oriented low→high, so each triangle is found exactly once and
-    * no candidate is generated twice. Output: the 20 most triangle-dense
-    * parts (participation count), top-k via sort-limit so only k rows
-    * pass the final exchange. At 100 TB the orientation would be by
-    * DEGREE (low-degree endpoint first, id tie-break) rather than raw id —
-    * same algorithm, provably O(m^1.5) candidate pairs — and the two-path
-    * join would pre-bucket both edge copies on the pivot vertex. */
+  /** G2: triangle counting on the co-purchase graph
+    * ([[graft.api.GraftAPI.triangleCounts]]'s counting core) — part pairs
+    * that co-occur in ≥2 orders form the edges (the [[basketPairs]] edge
+    * set, already oriented low→high and distinct; the support threshold
+    * bounds the edge count). Output: the 20 most triangle-dense parts
+    * (participation count), top-k via sort-limit so only k rows pass the
+    * final exchange. */
   def graphTriangles(s: SparkSession, dir: String): DataFrame = {
     // Pinned (optimization r13): the 3-way self-join re-derived the
     // whole co-occurrence subtree once per branch — 3 lineitem scans,
@@ -2301,13 +2297,8 @@ object Relational {
     // the note at the top of this object).
     val edges = DedupOps.truncate(coOccurrencePairs(s, dir)
       .select(col("part_a").as("a"), col("part_b").as("b")))
-    val tri = edges.as("e1")
-      .join(edges.as("e2"), col("e1.b") === col("e2.a"))
-      .join(edges.as("e3"),
-        col("e1.a") === col("e3.a") && col("e2.b") === col("e3.b"))
-      .select(col("e1.a").as("x"), col("e1.b").as("y"), col("e2.b").as("z"))
-    tri.select(explode(array(col("x"), col("y"), col("z"))).as("part"))
-      .groupBy("part").agg(count(lit(1)).as("n_tri"))
+    graft.api.GraftAPI.orientedTriangleCounts(edges)
+      .select(col("vertex").as("part"), col("n_tri"))
       .orderBy(col("n_tri").desc, col("part").asc)
       .limit(20)
   }

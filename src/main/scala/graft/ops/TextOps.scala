@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables._
+import graft.api.GraftAPI
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -115,109 +116,39 @@ object TextOps {
   /** Language-ID heuristic: marker-token overlap score per language,
     * argmax with a fixed preference order. (The synthetic corpus shares one
     * vocabulary across langs, so this exercises the mechanism — scores,
-    * deterministic argmax — rather than linguistic accuracy.) */
-  def langIdNgram(s: SparkSession, dir: String): DataFrame = {
-    val markers: Seq[(String, Seq[String])] = Seq(
-      "en" -> Seq("the", "a", "and"),
-      "de" -> Seq("der", "die", "und"),
-      "es" -> Seq("el", "la", "los"),
-      "fr" -> Seq("le", "les", "des"))
-    val toks = tokens(col("text"))
-    def score(ms: Seq[String]): Column =
-      size(filter(toks, t => array_contains(array(ms.map(lit): _*), t))).cast("long")
-    val scored = documents(s, dir).select(
-      col("doc_id") +: col("lang").as("actual_lang") +:
-        markers.map { case (l, ms) => score(ms).as(s"s_$l") }: _*)
-    val best = markers.map(_._1).foldRight(lit("und")) { (l, acc) =>
-      // first lang (in declared order) with the max positive score wins
-      when(col(s"s_$l") > 0 &&
-        markers.map(m => col(s"s_$l") >= col(s"s_${m._1}")).reduce(_ && _), lit(l))
-        .otherwise(acc)
-    }
-    scored.select(col("doc_id"), col("actual_lang"),
+    * deterministic argmax — rather than linguistic accuracy.) Binds
+    * [[GraftAPI.langId]]'s scoring step, keeping the `s_<lang>` scores. */
+  def langIdNgram(s: SparkSession, dir: String): DataFrame =
+    GraftAPI.langScores(
+        documents(s, dir).select(col("doc_id"), col("lang").as("actual_lang"), col("text")),
+        "text", GraftAPI.LangMarkers, "s_")
+      .select(col("doc_id"), col("actual_lang"),
         col("s_en"), col("s_de"), col("s_es"), col("s_fr"),
-        best.as("pred_lang"))
+        col("lang_pred").as("pred_lang"))
       .orderBy("doc_id")
-  }
 
-  /** Token counting: whitespace tokens + a BPE-ish regex token estimate
-    * (alpha runs, single digits, punctuation singles — the shape of a
-    * byte-pair pretokenizer). */
+  /** Token counting ([[GraftAPI.tokenCounts]]): whitespace tokens + a
+    * BPE-ish regex token estimate. */
   def tokenCount(s: SparkSession, dir: String): DataFrame =
-    documents(s, dir)
-      .select(col("doc_id"),
-        size(split(col("text"), " ")).cast("long").as("ws_tokens"),
-        size(regexp_extract_all(lower(col("text")), lit("[a-z]+|[0-9]|[^a-z0-9 ]"), lit(0)))
-          .cast("long").as("re_tokens"))
+    GraftAPI.tokenCounts(documents(s, dir).select("doc_id", "text"), "text")
+      .select("doc_id", "ws_tokens", "re_tokens")
       .orderBy("doc_id")
 
-  /** T16: lexical diversity — per-doc type-token ratio and hapax share,
-    * the quality signals that catch template spam and boilerplate (low
-    * TTR: few distinct words repeated many times) where length/punct
-    * heuristics ([[textQuality]]) pass it. One explode into a (doc, word)
-    * count agg, then a per-doc rollup — both shuffles hash on doc_id, so
-    * at 100 TB the second agg is a cheap re-use of the first's
-    * partitioning (no wide rows, no collect). */
-  def textLexicalDiversity(s: SparkSession, dir: String): DataFrame = {
-    // tokens() = lowercase split, like every companion quality signal
-    // (review r10): pre-fix this op alone was case-SENSITIVE, so
-    // 'The'/'the' counted as two types for TTR but one for entropy,
-    // making the documented complementary signals incomparable. Oracle
-    // lowercases identically.
-    val tf = documents(s, dir)
-      .select(col("doc_id"), explode(tokens(col("text"))).as("w"))
-      .groupBy("doc_id", "w").agg(count(lit(1)).as("c"))
-    tf.groupBy("doc_id").agg(
-        sum("c").as("n_tokens"),
-        count(lit(1)).as("n_types"),
-        sum(when(col("c") === 1, 1L).otherwise(0L)).as("n_hapax"))
-      .select(col("doc_id"), col("n_tokens"), col("n_types"),
-        r6(col("n_types").cast("double") / col("n_tokens")).as("ttr"),
-        r6(col("n_hapax").cast("double") / col("n_types")).as("hapax_ratio"))
-      .orderBy("doc_id")
-  }
+  /** T16: lexical diversity ([[GraftAPI.lexicalDiversity]]) — per-doc
+    * type-token ratio and hapax share over the lowercase [[tokens]], the
+    * quality signals that catch template spam and boilerplate where
+    * length/punct heuristics ([[textQuality]]) pass it. */
+  def textLexicalDiversity(s: SparkSession, dir: String): DataFrame =
+    GraftAPI.lexicalDiversity(documents(s, dir), "doc_id", "text").orderBy("doc_id")
 
-  /** T17: per-doc unigram Shannon entropy (nats) + normalized entropy —
-    * the distribution-shape quality signal that separates "few distinct
-    * words repeated many times" (entropy → 0: template spam, keyword
-    * stuffing) from healthy prose, catching skew that [[textLexicalDiversity]]'s
-    * type-token ratio misses (TTR sees HOW MANY types, entropy sees how
-    * evenly they're used — {a:99, b:1} and {a:50, b:50} have the same TTR
-    * but entropies 0.056 vs 0.693). norm_entropy = H / ln(n_types) ∈ [0,1]
-    * is the length-comparable form pipelines threshold on (0 when
-    * n_types = 1 — a one-word doc is degenerate by definition).
-    *
-    * Scale shape: the corpus token stream explodes and aggregates ONCE
-    * (a tf-vs-perDoc join formulation planned the tf subtree TWICE — two
-    * corpus explodes, caught in the captured plan); the per-doc totals
-    * come from windows over the tf rows' doc_id partition (state bounded
-    * by types-per-doc), so after the (doc, word) agg only fixed-width
-    * rows move, and the final agg reuses the window's doc_id
-    * partitioning. Per-type terms (c/n)·ln(n/c) are 6-dp-snapped before
-    * the DECIMAL sum ([[graft.Tables.dsum]] rule) so per-doc entropy is
-    * partition-order independent and re-runs byte-match. */
-  def textTokenEntropy(s: SparkSession, dir: String): DataFrame = {
-    val wd = org.apache.spark.sql.expressions.Window.partitionBy("doc_id")
-    documents(s, dir)
-      .select(col("doc_id"), explode(tokens(col("text"))).as("w"))
-      .groupBy("doc_id", "w").agg(count(lit(1)).as("c"))
-      .withColumn("n_tokens", sum(col("c")).over(wd))
-      .withColumn("n_types", count(lit(1)).over(wd))
-      .select(col("doc_id"), col("n_tokens"), col("n_types"),
-        r6(col("c").cast("double") / col("n_tokens") *
-          log(col("n_tokens").cast("double") / col("c"))).as("term"))
-      .groupBy("doc_id", "n_tokens", "n_types")
-      .agg(dsum(col("term")).as("hs"))
-      .select(col("doc_id"), col("n_tokens"), col("n_types"),
-        r6(col("hs").cast("double")).as("entropy"),
-        // least(1, ·): the 6-dp term snap can push the sum a few µnats
-        // past the theoretical max ln(n_types); normalized entropy is ≤ 1
-        // by definition, so clamp rather than leak snap noise.
-        when(col("n_types") === 1, lit(0.0))
-          .otherwise(least(lit(1.0), r6(col("hs").cast("double") /
-            log(col("n_types").cast("double"))))).as("norm_entropy"))
-      .orderBy("doc_id")
-  }
+  /** T17: per-doc unigram Shannon entropy (nats) + normalized entropy
+    * ([[GraftAPI.tokenEntropy]]) — separates "few distinct words repeated
+    * many times" (entropy → 0: template spam, keyword stuffing) from
+    * healthy prose, the skew [[textLexicalDiversity]]'s type-token ratio
+    * misses. norm_entropy = H / ln(n_types) ∈ [0,1] is the
+    * length-comparable form pipelines threshold on (0 when n_types = 1). */
+  def textTokenEntropy(s: SparkSession, dir: String): DataFrame =
+    GraftAPI.tokenEntropy(documents(s, dir), "doc_id", "text").orderBy("doc_id")
 
   /** Document fingerprinting: content-addressed id (md5 — stable across
     * engines) + prefix shard key, the pattern used to bucket a 100 TB

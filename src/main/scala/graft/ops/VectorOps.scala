@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.Tables
 import graft.Tables._
+import graft.api.GraftAPI
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -716,51 +717,14 @@ object VectorOps {
         r6(col("sv") / col("n")).as("centroid"))
       .orderBy("label", "dim")
 
-  /** L19d: embedding OUTLIER audit — per-label centroid-distance z-score,
-    * the corrupt/mis-embedded-row filter a curation pipeline runs before
-    * any semantic op trusts the vectors (a truncated download, a wrong
-    * preprocessing version, or a mislabeled row all land far from its
-    * group's centroid). Dataflow: ONE long-form explode feeds both the
-    * per-(label, dim) centroid hash-agg (label-cardinality output,
-    * broadcast back) and the per-vector squared-distance re-agg — two
-    * fixed-width shuffles keyed (label, dim) and vec_id, no vector ever
-    * leaves its row as an object. z-scores use the population σ of d²
-    * within the label; every stage 6-dp-snaps before its DECIMAL sum, so
-    * flags are partition-order independent and the DuckDB mirror
-    * hash-matches. At 100 TB: the centroid table is a persistable
-    * artifact like the IVF coarse table — recompute it on the sample
-    * cadence, not per audit. */
-  def embedOutliers(s: SparkSession, dir: String): DataFrame = {
-    val el = embeddings(s, dir)
-      .select(col("vec_id"), col("label"), posexplode(asD(col("embedding"))))
-      .select(col("vec_id"), col("label"),
-        col("pos").cast("long").as("dim"), r6(col("col")).as("v"))
-    val cent = el.groupBy("label", "dim")
-      .agg(count(lit(1)).as("n"), dsum(col("v")).as("sv"))
-      .select(col("label").as("cl"), col("dim").as("cd"),
-        r6(col("sv") / col("n")).as("c"))
-    val d2 = el.join(broadcast(cent),
-        col("label") === col("cl") && col("dim") === col("cd"))
-      .select(col("vec_id"), col("label"),
-        r6((col("v") - col("c")) * (col("v") - col("c"))).as("sq"))
-      .groupBy("vec_id", "label")
-      .agg(r6(dsum(col("sq"))).as("d2"))
-    val stats = d2
-      .select(col("label"), col("d2"), r6(col("d2") * col("d2")).as("d2sq"))
-      .groupBy("label")
-      .agg(count(lit(1)).as("n"), dsum(col("d2")).as("sd"),
-        dsum(col("d2sq")).as("sd2"))
-      .select(col("label").as("sl"), r6(col("sd") / col("n")).as("mu"),
-        r6(sqrt(greatest(
-          r6((col("sd2") - col("sd") * col("sd") / col("n")) / col("n")),
-          lit(0.0)))).as("sigma"))
-    d2.join(broadcast(stats), col("label") === col("sl"))
-      .select(col("vec_id"), col("label"), col("d2"),
-        when(col("sigma") > 0, r6((col("d2") - col("mu")) / col("sigma")))
-          .otherwise(lit(0.0)).as("z"))
-      .withColumn("is_outlier", col("z") > 2.0)
+  /** L19d: embedding OUTLIER audit ([[GraftAPI.embeddingOutliers]]) —
+    * per-label centroid-distance z-score, the corrupt/mis-embedded-row
+    * filter a curation pipeline runs before any semantic op trusts the
+    * vectors; flagged at z > 2. */
+  def embedOutliers(s: SparkSession, dir: String): DataFrame =
+    GraftAPI.embeddingOutliers(embeddings(s, dir), "vec_id", "label", "embedding",
+        zThreshold = 2.0)
       .orderBy("vec_id")
-  }
 
   /** L19c: per-dimension corpus moments (mean + variance) — the whitening
     * / normalization statistics an embedding store computes before PCA or
@@ -878,58 +842,22 @@ object VectorOps {
       .orderBy("query_id")
   }
 
-  /** L5f: truncated-dimension (Matryoshka-style) recall audit — recall@10
-    * of exact cosine search over PREFIX dims d ∈ {8, 16, 32, 64} against
-    * the full-width (d = 64) exact top-10, per query. This is the
-    * evaluation an embedding store runs before committing to
-    * dimension-truncated serving (MRL embeddings): how much recall does a
-    * d-prefix index keep, i.e. can the ANN tier run on 8 floats instead
-    * of 64? The d = 64 rows are the protocol's built-in control — recall
-    * 1.0 by construction, which the oracle also pins.
-    *
-    * Scale shape: ONE corpus scan scores every prefix length — the query
-    * set broadcasts, each (vector, query) pair explodes into 4 fixed-width
-    * (dim, cos) rows (cosine over `slice` prefixes; prefix cosine is
-    * scale-invariant so no renormalization pass is needed), and the
-    * per-(dim, query) top-k plans as the native bounded-buffer operator
-    * (the rank-filter rewrite). The hit check deliberately does NOT take
-    * a filtered "truth" branch — a `dim = max` filter would push below
-    * the top-k and duplicate the whole corpus subtree (verified in the
-    * captured plan); instead ONE aggregation over the ranking itself
-    * counts, per (query, id), the dims it survived in, and ids whose
-    * dim-set contains the full width contribute a hit to each of those
-    * dims — |topk_d ∩ topk_max| without a second pass. At 100 TB the
-    * per-dim rankings are a persisted eval artifact and queries are a
-    * fixed sample, exactly like [[knnRecall]]. */
+  /** L5f: truncated-dimension (Matryoshka-style) recall audit
+    * ([[GraftAPI.truncatedDimRecall]]) — recall@10 of exact cosine search
+    * over PREFIX dims d ∈ {8, 16, 32, 64} against the full-width (d = 64)
+    * exact top-10, per query (vec_id < 3). This is the evaluation an
+    * embedding store runs before committing to dimension-truncated
+    * serving: can the ANN tier run on 8 floats instead of 64? The d = 64
+    * rows are the protocol's built-in control — recall 1.0 by
+    * construction, which the oracle also pins. At 100 TB the per-dim
+    * rankings are a persisted eval artifact and queries are a fixed
+    * sample, exactly like [[knnRecall]]. */
   def embedMrlRecall(s: SparkSession, dir: String): DataFrame = {
-    val dims = Seq(8, 16, 32, 64)
     val e = embeddings(s, dir)
-    val q = e.filter(col("vec_id") < 3)
-      .select(col("vec_id").as("query_id"), asD(col("embedding")).as("qv"))
-    val w = Window.partitionBy("dim", "query_id")
-      .orderBy(col("cos").desc, col("vec_id").asc)
-    val topk = e.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        explode(array(dims.map(d => struct(lit(d).as("dim"),
-          cosine(slice(asD(col("embedding")), 1, d), slice(col("qv"), 1, d))
-            .as("cos"))): _*)).as("s"))
-      .select(col("query_id"), col("vec_id"),
-        col("s.dim").as("dim"), col("s.cos").as("cos"))
-      .withColumn("rn", row_number().over(w)).filter(col("rn") <= K)
-      .select("dim", "query_id", "vec_id")
-    val hits = topk.groupBy("query_id", "vec_id")
-      .agg(collect_set(col("dim")).as("ds"))
-      .filter(array_contains(col("ds"), lit(dims.max)))
-      .select(col("query_id"), explode(col("ds")).as("dim"))
-      .groupBy("dim", "query_id").agg(count(lit(1)).as("h"))
-    val spine = s.range(1)
-      .select(explode(array(dims.map(lit): _*)).as("dim"))
-      .crossJoin(q.select("query_id"))
-    spine.join(hits, Seq("dim", "query_id"), "left")
-      .select(col("dim"), col("query_id"),
-        coalesce(col("h"), lit(0L)).as("n_hit"),
-        r6(coalesce(col("h"), lit(0L)).cast("double") / lit(K)).as("recall"))
+    GraftAPI.truncatedDimRecall(e, "vec_id", "embedding",
+        e.filter(col("vec_id") < 3), "vec_id", "embedding",
+        dims = Seq(8, 16, 32, 64), k = K)
+      .withColumnRenamed("vec_id", "query_id")
       .orderBy("dim", "query_id")
   }
 
@@ -1012,45 +940,28 @@ object VectorOps {
       .orderBy("dim")
   }
 
-  /** L26: SemDeDup-style SEMANTIC dedup — cluster the embedding space,
-    * then keep-one-per-near-dup-set WITHIN each cluster only (Abbas et
-    * al. 2023: ε-dedup inside k-means clusters). The cluster assignment
-    * (sign-grid [[cellOf]] standing in for k-means centroids, same
-    * determinism trade as [[knnIvf]]) bounds candidate generation to
-    * same-cell pairs — the n² cross-corpus comparison never exists, the
-    * identical bucket-not-all-pairs physics as the MinHash banding path,
-    * but driven by embedding geometry instead of lexical shingles (the
-    * two catch DIFFERENT duplicates: paraphrases share no shingles).
-    *
-    * Keep policy is greedy-by-id (a vector is dropped iff a LOWER-id
-    * same-cell vector sits within cos ≥ τ), so the decision is local,
-    * deterministic, and needs no transitive closure ([[graft.ops.DedupOps]]
-    * `dedup_clusters` provides the label-propagation form when full
-    * connected components are wanted). Shuffle profile: one exchange on
-    * cell for the pair join + one on vec_id for the min-rep aggregate;
-    * pair volume is Σ|cell|², the quantity the cluster count controls
-    * at 100 TB (SemDeDup's k ≈ √n rule). */
-  def semanticDedup(s: SparkSession, dir: String): DataFrame = {
-    val Tau = 0.35 // same near-dup threshold as embedNeardup's is_dup gate
-    // NOTE (r7 verdict #2): this registry form pins 16 demo cells — fine
-    // as the semantics fixture, but n²/16 pairs at corpus scale. The
-    // corpus-scale form is [[semanticDedupScaled]] (cells ≈ √n, SemDeDup's
-    // rule) / the API twin GraftAPI.semanticDedup (caller-owned clusters).
-    val e = embeddings(s, dir).withColumn("cell", cellOf(col("embedding")))
-    val reps = e.as("a")
-      .join(e.as("b"),
-        col("a.cell") === col("b.cell") && col("a.vec_id") > col("b.vec_id"))
-      .select(col("a.vec_id").as("vec_id"), col("b.vec_id").as("bid"),
-        cosine(asD(col("a.embedding")), asD(col("b.embedding"))).as("cos"))
-      .filter(col("cos") >= Tau)
-      .groupBy("vec_id").agg(min(col("bid")).as("rep"))
-    e.select(col("vec_id"), col("cell").cast("int").as("cell"))
-      .join(reps, Seq("vec_id"), "left")
-      .select(col("vec_id"), col("cell"),
-        col("rep").isNull.as("keep"),
-        coalesce(col("rep"), col("vec_id")).as("rep_id"))
+  /** L26: SemDeDup-style SEMANTIC dedup ([[GraftAPI.semanticDedup]]) —
+    * cluster the embedding space, then keep-one-per-near-dup-set WITHIN
+    * each cluster only (Abbas et al. 2023: ε-dedup inside k-means
+    * clusters). The cluster assignment (sign-grid [[cellOf]] standing in
+    * for k-means centroids, same determinism trade as [[knnIvf]]) bounds
+    * candidate generation to same-cell pairs — the n² cross-corpus
+    * comparison never exists. Embedding geometry catches DIFFERENT
+    * duplicates than the lexical MinHash path: paraphrases share no
+    * shingles. Keep policy is greedy-by-id (no transitive closure;
+    * [[graft.ops.DedupOps]] `dedup_clusters` provides the
+    * label-propagation form when full connected components are wanted). */
+  def semanticDedup(s: SparkSession, dir: String): DataFrame =
+    // this registry form pins 16 demo cells — fine as the semantics
+    // fixture, but n²/16 pairs at corpus scale; the corpus-scale form is
+    // [[semanticDedupScaled]] (cells ≈ √n, SemDeDup's rule)
+    GraftAPI.semanticDedup(embeddings(s, dir).withColumn("cell", cellOf(col("embedding"))),
+        "vec_id", "cell", "embedding", SemDedupTau)
       .orderBy("vec_id")
-  }
+
+  /** Near-dup cosine threshold of the semantic dedup keys — the same
+    * gate as [[embedNeardup]]'s is_dup. */
+  private val SemDedupTau = 0.35
 
   /** L19b: [[semanticDedup]] at SemDeDup's production geometry — cell
     * count ≈ √n via the corpus-scaled sign grid ([[scaledCells]] with
@@ -1060,23 +971,10 @@ object VectorOps {
     * the k ≈ √n rule makes per-cell size ≈ √n, so total work scales as
     * n·√n worst-case and ~linearly when buckets stay near target — the
     * registry-visible closure of r7's fixed-bucket caveat. */
-  def semanticDedupScaled(s: SparkSession, dir: String): DataFrame = {
-    val Tau = 0.35
-    val e = scaledCells(embeddings(s, dir), j => 1L << (2 * (j - 1)))
-    val reps = e.as("a")
-      .join(e.as("b"),
-        col("a.cell") === col("b.cell") && col("a.vec_id") > col("b.vec_id"))
-      .select(col("a.vec_id").as("vec_id"), col("b.vec_id").as("bid"),
-        cosine(asD(col("a.embedding")), asD(col("b.embedding"))).as("cos"))
-      .filter(col("cos") >= Tau)
-      .groupBy("vec_id").agg(min(col("bid")).as("rep"))
-    e.select(col("vec_id"), col("cell"))
-      .join(reps, Seq("vec_id"), "left")
-      .select(col("vec_id"), col("cell"),
-        col("rep").isNull.as("keep"),
-        coalesce(col("rep"), col("vec_id")).as("rep_id"))
+  def semanticDedupScaled(s: SparkSession, dir: String): DataFrame =
+    GraftAPI.semanticDedup(GraftAPI.sqrtNSignCells(embeddings(s, dir), "embedding"),
+        "vec_id", "cell", "embedding", SemDedupTau)
       .orderBy("vec_id")
-  }
 
   /** L3i: the ANN index BUILD as a first-class sink-style job (VERDICT r7
     * #1) — trains the coarse quantizer and both PQ codebooks, encodes the
@@ -1194,35 +1092,18 @@ object VectorOps {
       .orderBy("cell")
   }
 
-  /** L3k: ANN index HEALTH audit over the STORED artifact — the one-row
-    * dashboard an index operator reads before deciding to re-train or
-    * re-balance. Cell-size skew is the IVF killer at corpus scale: a probe
-    * reads whole cells, so `max_cell` bounds worst-case probe I/O and
-    * `imbalance` (max over mean cell size) is the re-train trigger;
-    * `empty_cells` flags wasted quantizer capacity; `n_codes` cross-checks
-    * the encode pass against the cells table (exactly PqM codes per
-    * vector — a lost or doubled encode row breaks it). Reads ONLY the
-    * persisted index tables (two fixed-width aggregations over (vec_id,
-    * cell) and the code manifest; the float corpus is never touched), so
-    * at 100 TB the audit costs one pass over 12 bytes/vector. The oracle
+  /** L3k: ANN index HEALTH audit over the STORED artifact
+    * ([[GraftAPI.annIndexStats]]) — the one-row dashboard an index
+    * operator reads before deciding to re-train or re-balance: cell
+    * coverage, size skew (`imbalance`, the re-train trigger; `max_cell`,
+    * the worst-case probe I/O) and the code count, which must be exactly
+    * PqM per vector. Reads ONLY the persisted index tables. The oracle
     * reproduces the deterministic coarse training and derives the same
     * summary from first principles. */
   def annIndexStats(s: SparkSession, dir: String): DataFrame = {
     val ix = IvfPqIndex.ensure(s, dir)
-    val per = Tables.read(s, ix.cells)
-      .groupBy("cell").agg(count(lit(1)).as("n"))
-    val codeCnt = Tables.read(s, ix.ivfCodes).agg(count(lit(1)).as("n_codes"))
-    per.agg(
-        count(lit(1)).as("n_cells"),
-        sum(col("n")).as("n_vecs"),
-        min(col("n")).as("min_cell"),
-        max(col("n")).as("max_cell"),
-        r6(max(col("n")) * count(lit(1)) / sum(col("n")).cast("double"))
-          .as("imbalance"))
-      .withColumn("empty_cells", lit(KmeansCells.toLong) - col("n_cells"))
-      .crossJoin(broadcast(codeCnt))
-      .select(col("n_cells"), col("n_vecs"), col("min_cell"),
-        col("max_cell"), col("imbalance"), col("empty_cells"), col("n_codes"))
+    GraftAPI.annIndexStats(Tables.read(s, ix.cells), Tables.read(s, ix.ivfCodes),
+      quantizerCells = KmeansCells)
   }
 
   /** Filtered-ANN probe count: candidate pool = the 4 coarse cells nearest
@@ -1230,36 +1111,24 @@ object VectorOps {
     * cell fan-out to keep the pool ≥ K). */
   private val FilteredProbes = 4
 
-  /** L3l: metadata-FILTERED ANN — top-K nearest neighbors AMONG rows
-    * matching a scalar predicate (here `label % 2 = 1`), the shape every
-    * production vector store serves ("nearest English docs", "nearest in
-    * this tenant"). Pre-filtering inside the IVF probe, not post-filtering
-    * the unfiltered top-K: the predicate lands on the candidate SCAN
-    * (label is a stored scalar column, so pushdown prunes before any
-    * float math), and the probe fans out to [[FilteredProbes]] cells
-    * because a filter thins each cell's pool — the standard
-    * filtered-search adaptation. Reads the STORED coarse centroids +
-    * cell assignment ([[IvfPqIndex]]); exact cosine only on the
-    * filter-surviving candidates of 4/16 cells. At 100 TB: predicate and
-    * cell id are both scan-level prunes (cell-partitioned layout +
-    * parquet predicate pushdown), so the probe touches ~K × selectivity⁻¹
-    * vectors, never the corpus. */
+  /** L3l: metadata-FILTERED ANN ([[GraftAPI.annFilteredTopK]]'s probe
+    * core, with the vec_id = 0 row as the query) — top-K nearest
+    * neighbors AMONG rows matching a scalar predicate (here
+    * `label % 2 = 1`), the shape every production vector store serves
+    * ("nearest English docs", "nearest in this tenant"). Pre-filtering
+    * inside the IVF probe, not post-filtering the unfiltered top-K, over
+    * the STORED coarse centroids + cell assignment ([[IvfPqIndex]]); the
+    * probe fans out to [[FilteredProbes]] of 16 cells because a filter
+    * thins each cell's pool. */
   def knnFiltered(s: SparkSession, dir: String): DataFrame = {
     val ix = IvfPqIndex.ensure(s, dir)
-    val e = embeddings(s, dir)
-      .select(col("vec_id"), col("label"), asD(col("embedding")).as("x"))
-    val q = e.filter(col("vec_id") === 0).select(col("x").as("qv"))
-    // 4 nearest stored centroids to the query (16-row broadcast argsort)
-    val probes = Tables.read(s, ix.coarse).crossJoin(broadcast(q))
-      .select(col("cid"), col("qv"), sqDist(col("qv"), col("cv")).as("d"))
-      .orderBy(col("d").asc, col("cid").asc).limit(FilteredProbes)
-      .select(col("cid"), col("qv"))
-    e.join(Tables.read(s, ix.cells), "vec_id")
-      .join(broadcast(probes), col("cell") === col("cid"))
-      .filter(col("label") % 2 === 1 && col("vec_id") =!= 0)
-      .select(col("vec_id"), col("label"), cosine(col("x"), col("qv")).as("cos"))
-      .orderBy(col("cos").desc, col("vec_id").asc)
-      .limit(K)
+    val e = embeddings(s, dir).select("vec_id", "label", "embedding")
+    GraftAPI.annFilteredProbe(e, "vec_id", "embedding",
+        Tables.read(s, ix.coarse), Tables.read(s, ix.cells),
+        e.filter(col("vec_id") === 0), "embedding",
+        col("label") % 2 === 1 && col("vec_id") =!= 0,
+        FilteredProbes, K, keep = Seq("label"))
+      .withColumnRenamed("cosine", "cos")
   }
 
   /** L3j: ANN index APPEND — the third leg of the index lifecycle

@@ -5,11 +5,15 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The public column-parameterized facade must agree with the harness
-  * registry on the test tables. Dedup-family methods ARE the registry's
-  * implementation, so they run here on RENAMED columns (`doc_id` → `k`,
-  * `text` → `body`) to test the column parameterization; every other
-  * method is checked against its `graft.ops` twin (or an independent
-  * local model). */
+  * registry on the test tables. The dedup, text, pipeline, events, graph
+  * and vector methods ARE the registry's implementation, so their
+  * registry-key tests run the facade on RENAMED columns (`doc_id` → `k`,
+  * `text` → `body`, `vec_id` → `vid`, `embedding` → `emb`, the events
+  * columns likewise) to test the column parameterization rather than a
+  * function against itself. The four keys that keep their own plan
+  * (`join_asof`, `join_asof_tolerance`, `cdc_diff_snapshots`,
+  * `dedup_exact`) are checked against the facade method that does the
+  * same job; the rest are checked against an independent local model. */
 class ApiSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val sf = TestSpark.Sf0001
@@ -17,6 +21,10 @@ class ApiSpec extends AnyFunSuite {
   /** The documents under caller-chosen column names. */
   private def renamedDocs = docs.select(col("doc_id").as("k"), col("text").as("body"))
   private def events = graft.Tables.events(spark, sf)
+  private def emb = spark.read.parquet(s"$sf/embeddings.parquet")
+  /** The embeddings under caller-chosen column names. */
+  private def renamedEmb = emb.select(col("vec_id").as("vid"),
+    col("label").as("lbl"), col("embedding").as("emb"))
 
   test("exactDedupGroups == DedupOps.dedupExact") {
     val got = GraftAPI.exactDedupGroups(docs, Seq("text"), "doc_id")
@@ -45,11 +53,12 @@ class ApiSpec extends AnyFunSuite {
   test("ewma == EventOps.eventsEwma on the daily aggregate") {
     val daily = events
       .select(col("event_type"), to_date(col("ts")).as("day"), col("value"))
-      .groupBy("event_type", "day").agg(graft.Tables.dsum(col("value")).as("v"))
-    val got = GraftAPI.ewma(daily, Seq("event_type"), "day", "v")
-      .select(col("event_type"), graft.Tables.dateFmt(col("day")).as("day"),
+      .groupBy(col("event_type").as("kind"), col("day").as("dt"))
+      .agg(graft.Tables.dsum(col("value")).as("amount"))
+    val got = GraftAPI.ewma(daily, Seq("kind"), "dt", "amount")
+      .select(col("kind"), graft.Tables.dateFmt(col("dt")).as("dt"),
         graft.Tables.r6(col("ewma")).as("ewma"))
-      .orderBy("event_type", "day").collect()
+      .orderBy("kind", "dt").collect()
     val want = ops.EventOps.eventsEwma(spark, sf).collect()
     assert(got.length == want.length)
     got.zip(want).foreach { case (g, w) =>
@@ -179,8 +188,8 @@ class ApiSpec extends AnyFunSuite {
   }
 
   test("langId == TextOps.langIdNgram predictions") {
-    val got = GraftAPI.langId(docs, "text")
-      .select("doc_id", "lang_pred").orderBy("doc_id").collect()
+    val got = GraftAPI.langId(renamedDocs, "body")
+      .select("k", "lang_pred").orderBy("k").collect()
     val want = ops.TextOps.langIdNgram(spark, sf)
       .orderBy("doc_id").collect()
     assert(got.length == want.length)
@@ -233,19 +242,20 @@ class ApiSpec extends AnyFunSuite {
   }
 
   test("budgetSelect == PipelineOps.corpusBudgetSelect at frac 0.5") {
-    val toks = docs.select(col("doc_id"),
-      least(lit(4000L), col("n_chars")).as("q"),
-      size(split(col("text"), " ")).cast("long").as("n_tokens"))
-    val got = GraftAPI.budgetSelect(toks, "doc_id", "q", "n_tokens")
-      .select("doc_id").orderBy("doc_id").collect().map(_.getLong(0))
+    val toks = docs.select(col("doc_id").as("k"),
+      least(lit(4000L), col("n_chars")).as("quality"),
+      size(split(col("text"), " ")).cast("long").as("w"))
+    val got = GraftAPI.budgetSelect(toks, "k", "quality", "w")
+      .select("k").orderBy("k").collect().map(_.getLong(0))
     val want = ops.PipelineOps.corpusBudgetSelect(spark, sf)
       .collect().map(_.getLong(0))
     assert(got.sameElements(want))
   }
 
   test("splitAssign == PipelineOps.corpusSplitAssign on the rollup") {
-    val got = GraftAPI.splitAssign(docs, "doc_id")
-      .withColumn("n_tokens", size(split(col("text"), " ")).cast("long"))
+    val got = GraftAPI.splitAssign(
+        docs.select(col("doc_id").as("k"), col("text").as("body"), col("lang")), "k")
+      .withColumn("n_tokens", size(split(col("body"), " ")).cast("long"))
       .groupBy("split", "lang")
       .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("tot_tokens"))
       .orderBy("split", "lang").collect()
@@ -263,9 +273,9 @@ class ApiSpec extends AnyFunSuite {
     val edges = items.as("x").join(items.as("y"),
         col("x.l_orderkey") === col("y.l_orderkey") &&
           col("x.l_partkey") < col("y.l_partkey"))
-      .groupBy(col("x.l_partkey").as("a"), col("y.l_partkey").as("b"))
+      .groupBy(col("x.l_partkey").as("u"), col("y.l_partkey").as("v"))
       .agg(count(lit(1)).as("n")).filter(col("n") >= 2)
-    val got = GraftAPI.triangleCounts(edges, "a", "b")
+    val got = GraftAPI.triangleCounts(edges, "u", "v")
       .orderBy(col("n_tri").desc, col("vertex")).limit(20).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     val want = ops.Relational.graphTriangles(spark, sf).collect()
@@ -274,14 +284,23 @@ class ApiSpec extends AnyFunSuite {
   }
 
   test("lexicalDiversity == TextOps.textLexicalDiversity") {
-    val got = GraftAPI.lexicalDiversity(docs, "doc_id", "text")
-      .orderBy("doc_id").collect()
+    val got = GraftAPI.lexicalDiversity(renamedDocs, "k", "body")
+      .orderBy("k").collect()
     val want = ops.TextOps.textLexicalDiversity(spark, sf).collect()
     assert(got.length == want.length)
     got.zip(want).foreach { case (g, w) =>
       assert((0 to 2).forall(i => g.getLong(i) == w.getLong(i)) &&
         g.getDouble(3) == w.getDouble(3) && g.getDouble(4) == w.getDouble(4))
     }
+  }
+
+  test("lexicalDiversity lowercases its tokens: 'The the cat' has 2 types, 'a A' has 1") {
+    import spark.implicits._
+    val got = GraftAPI.lexicalDiversity(
+        Seq((1L, "The the cat"), (2L, "a A")).toDF("k", "body"), "k", "body")
+      .orderBy("k").collect()
+      .map(r => (r.getAs[Long]("k"), r.getAs[Long]("n_tokens"), r.getAs[Long]("n_types")))
+    assert(got.toSeq == Seq((1L, 3L, 2L), (2L, 2L, 1L)), got.mkString(","))
   }
 
   test("snapshotDiff == PipelineOps.cdcDiffSnapshots on the same snapshots") {
@@ -312,8 +331,9 @@ class ApiSpec extends AnyFunSuite {
   }
 
   test("pathNgrams(3) == EventOps.eventsPaths3 before the top-20 cut") {
-    val got = GraftAPI.pathNgrams(events, "user_id", Seq("ts", "event_id"),
-        "event_type", 3)
+    val renamed = events.select(col("user_id").as("u"), col("ts").as("t"),
+      col("event_id").as("eid"), col("event_type").as("sym"))
+    val got = GraftAPI.pathNgrams(renamed, "u", Seq("t", "eid"), "sym", 3)
       .orderBy(col("n").desc, col("n_keys").desc, col("path").asc)
       .limit(20).collect()
     val want = ops.EventOps.eventsPaths3(spark, sf).collect()
@@ -506,7 +526,6 @@ class ApiSpec extends AnyFunSuite {
   }
 
   test("scaledSignBuckets: bucket width follows n/T; sqrtNSignCells matches the registry op") {
-    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     val n = emb.count() // 500 on the fixture
     val buckets = GraftAPI.scaledSignBuckets(emb, "embedding", 16)
       .select("vec_id", "bucket").collect().map(r => r.getLong(0) -> r.getLong(1))
@@ -514,8 +533,8 @@ class ApiSpec extends AnyFunSuite {
     // least B with 2^B >= 500/16 = 31.25 -> B = 5 -> ids within [0, 32)
     assert(buckets.forall { case (_, b) => b >= 0 && b < 32 })
     assert(buckets.map(_._2).distinct.length > 16, "bit width collapsed")
-    val cells = GraftAPI.sqrtNSignCells(emb, "embedding")
-      .select("vec_id", "cell").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val cells = GraftAPI.sqrtNSignCells(renamedEmb, "emb")
+      .select("vid", "cell").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val want = ops.VectorOps.semanticDedupScaled(spark, sf)
       .select("vec_id", "cell").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -541,16 +560,15 @@ class ApiSpec extends AnyFunSuite {
   }
 
   test("semanticDedup(facade) == VectorOps.semanticDedup on sign-grid clusters") {
-    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     // the harness derives the cluster internally (sign-grid cell); hand the
     // facade the same cell so the two must agree row-for-row
     val cell = (1 to 4).map(j =>
-      when(element_at(col("embedding"), j) > 0f, lit(1 << (j - 1))).otherwise(lit(0)))
+      when(element_at(col("emb"), j) > 0f, lit(1 << (j - 1))).otherwise(lit(0)))
       .reduce(_ + _)
     val got = GraftAPI.semanticDedup(
-        emb.withColumn("cell", cell), "vec_id", "cell", "embedding", 0.35)
-      .orderBy("vec_id")
-      .select(col("vec_id"), col("keep"), col("rep_id")).collect()
+        renamedEmb.withColumn("grp", cell), "vid", "grp", "emb", 0.35)
+      .orderBy("vid")
+      .select(col("vid"), col("keep"), col("rep_id")).collect()
     val want = ops.VectorOps.semanticDedup(spark, sf)
       .select(col("vec_id"), col("keep"), col("rep_id")).collect()
     assert(got.length == want.length && got.length > 0)
@@ -563,9 +581,9 @@ class ApiSpec extends AnyFunSuite {
 
   test("sourceQuota == PipelineOps.corpusSourceQuota at quota 15") {
     val got = GraftAPI.sourceQuota(
-        docs.select(col("doc_id"), col("source")), "doc_id", "source", 15L)
-      .select("doc_id", "source", "src_rank", "kept")
-      .orderBy("doc_id").collect()
+        docs.select(col("doc_id").as("k"), col("source").as("src")), "k", "src", 15L)
+      .select("k", "src", "src_rank", "kept")
+      .orderBy("k").collect()
     val want = ops.PipelineOps.corpusSourceQuota(spark, sf).collect()
     assert(got.length == want.length && got.length > 0)
     got.zip(want).foreach { case (g, w) =>
@@ -576,12 +594,12 @@ class ApiSpec extends AnyFunSuite {
   }
 
   test("truncatedDimRecall == VectorOps.embedMrlRecall at the registry protocol") {
-    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
+    val queries = emb.filter(col("vec_id") < 3)
+      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
     val got = GraftAPI.truncatedDimRecall(
-        emb, "vec_id", "embedding",
-        emb.filter(col("vec_id") < 3), "vec_id", "embedding",
+        renamedEmb, "vid", "emb", queries, "qid", "qv",
         dims = Seq(8, 16, 32, 64), k = 10)
-      .orderBy("dim", "vec_id").collect()
+      .orderBy("dim", "qid").collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     val want = ops.VectorOps.embedMrlRecall(spark, sf).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
@@ -589,8 +607,8 @@ class ApiSpec extends AnyFunSuite {
   }
 
   test("tokenEntropy == TextOps.textTokenEntropy") {
-    val got = GraftAPI.tokenEntropy(docs, "doc_id", "text")
-      .orderBy("doc_id").collect()
+    val got = GraftAPI.tokenEntropy(renamedDocs, "k", "body")
+      .orderBy("k").collect()
     val want = ops.TextOps.textTokenEntropy(spark, sf).collect()
     assert(got.length == want.length && got.nonEmpty)
     got.zip(want).foreach { case (g, w) =>
@@ -1413,21 +1431,19 @@ class ApiSpec extends AnyFunSuite {
   }
 
   test("embeddingOutliers(facade) == VectorOps.embedOutliers at the registry protocol") {
-    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-    val got = GraftAPI.embeddingOutliers(emb, "vec_id", "label", "embedding")
-      .orderBy("vec_id").collect().map(_.toSeq)
+    val got = GraftAPI.embeddingOutliers(renamedEmb, "vid", "lbl", "emb")
+      .orderBy("vid").collect().map(_.toSeq)
     val want = ops.VectorOps.embedOutliers(spark, sf).collect().map(_.toSeq)
     assert(got.nonEmpty && got.toSeq == want.toSeq)
   }
 
   test("annFilteredTopK(facade) == VectorOps.knnFiltered at the registry protocol") {
-    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     val ix = ops.IvfPqIndex.ensure(spark, sf)
     val q = emb.filter(col("vec_id") === 0)
       .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
-    val got = GraftAPI.annFilteredTopK(emb, "vec_id", "embedding",
+    val got = GraftAPI.annFilteredTopK(renamedEmb, "vid", "emb",
         spark.read.parquet(ix.coarse), spark.read.parquet(ix.cells),
-        q, col("label") % 2 === 1 && col("vec_id") =!= 0)
+        q, col("lbl") % 2 === 1 && col("vid") =!= 0)
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
     val want = ops.VectorOps.knnFiltered(spark, sf)
       .collect().map(r => (r.getAs[Long]("vec_id"), r.getAs[Double]("cos")))

@@ -165,7 +165,7 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("EWMA exponent-rescaling algebra equals the sequential recurrence (pure math)") {
-    // mirrors EventOps.eventsEwma's window formula token-for-token:
+    // mirrors GraftAPI.ewma's window formula (events_ewma) token-for-token:
     // ewma_t = 0.5^t * (v0 + 0.5 * (Σ_{i<=t} v_i/0.5^i − v0)); the property
     // pins the FP claim the operator rests on — power-of-two rescaling is
     // exact, so the data-parallel form tracks the recurrence to roundoff
