@@ -182,8 +182,7 @@ object ChaosCheck {
       val got = Tables.read(spark, ix.bands)
         .select("doc_id", "band", "band_key")
         .collect().map(_.toString).sorted
-      val pristine = got.sameElements(want) &&
-        new java.io.File(ix.root, "_SUCCESS").isFile
+      val pristine = got.sameElements(want) && ops.IndexFs.committed(ix.root)
       record("minhash_build", killer.killedPid, cleanMs, chaosMs, pristine)
       require(pristine, "chaos build diverged from the clean build")
     }

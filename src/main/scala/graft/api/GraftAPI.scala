@@ -297,82 +297,72 @@ object GraftAPI {
     * the registry's `build_minhash_index` / [[graft.ops.MinhashIndex]]):
     * postings land at `path` hive-partitioned by band (`band` duplicated
     * as `pband` so the data column keeps its type), one file per band,
-    * followed by a `_SUCCESS` marker at the root — write-once, and a
-    * crashed build is rebuilt because the marker commits last. Returns
-    * the per-band manifest (band, n_keys, n_postings, n_docs) read back
-    * FROM the stored table; n_postings == n_docs by the one-key-per-
-    * (doc, band) construction, so a lost/doubled posting is visible in
-    * the manifest. At 100 TB, bucket the table by band_key as well so
+    * under the root marker ([[graft.ops.IndexFs.build]]: a crashed build
+    * reads as uncommitted). Returns the per-band manifest (band, n_keys,
+    * n_postings, n_docs) read back FROM the stored table; n_postings ==
+    * n_docs by the one-key-per-(doc, band) construction, so a
+    * lost/doubled posting is visible in the manifest. At 100 TB, bucket the table by band_key as well so
     * incremental batch probes co-partition against it without shuffling
     * the stored side. */
   def writeMinhashIndex(df: DataFrame, id: String, text: String, path: String,
                         numHashes: Int = 128, bands: Int = 16,
                         batchWidth: Long = 0): DataFrame = {
     val s = df.sparkSession
-    // The marker must genuinely commit LAST on a rebuild too (ADVICE r8):
-    // drop any prior marker before the overwrite starts, or a crash
-    // mid-rewrite would leave a valid-looking _SUCCESS over partial data.
-    // Marker I/O goes through IndexFs (review r10): `path` is a caller
-    // table path, which may be an object-store URI java.io.File cannot see.
-    val marker = graft.ops.IndexFs.child(path, "_SUCCESS")
-    if (graft.ops.IndexFs.isFile(marker)) require(graft.ops.IndexFs.delete(marker),
-      s"could not retire the stale index marker under $path")
-    // batchWidth > 0 adds the ingest-batch partition axis (pbatch =
-    // id div batchWidth) that makes [[minhashIndexDelete]]'s takedowns
-    // partition-pruned: a document posts to EVERY band, so band
-    // partitioning alone cannot prune a delete. Readers are unaffected
-    // (pbatch is one more hive partition column they never select).
-    // One signature pass feeds BOTH the postings (sub_key dropped — a
-    // 32-char key per posting would bloat the main table for nothing)
-    // and the hot-bucket fine side-table below; persist so the fine
-    // write doesn't re-shingle the corpus.
-    val bandedSub = minhashBandsWithSub(df, id, text, numHashes, bands)
-      .withColumnRenamed(id, "_id")
-      .withColumn("pband", col("band"))
-      .persist()
-    val banded = bandedSub.drop("sub_key")
-    val (laid, partCols) =
-      if (batchWidth > 0)
-        (banded.withColumn("pbatch", expr(s"_id div $batchWidth"))
-           .repartition(col("pband"), col("pbatch")),
-         Seq("pband", "pbatch"))
-      else (banded.repartition(col("pband")), Seq("pband"))
-    laid.write.mode("overwrite").partitionBy(partCols: _*)
-      .parquet(s"$path/bands")
-    // Hot-bucket fine side-table (r12, the facade form of the registry's
-    // bands_fine): postings of buckets >= hotSize re-keyed on the
-    // full-signature sub_key, so incremental probes
-    // ([[graft.streaming.StreamingOps.dedupBatchAgainstIndex]]) match a
-    // template-family bucket only on a full-signature hit. Written
-    // BEFORE the root marker commits, so "marker commits last" covers
-    // it; its row count is O(hot postings), not O(corpus).
-    val hotKeys = bandedSub.groupBy("band", "band_key")
-      .agg(count(lit(1)).as("sz"))
-      .filter(col("sz") >= graft.ops.DedupOps.RebandHotSize)
-      .select("band", "band_key")
-    bandedSub.join(hotKeys, Seq("band", "band_key"), "left_semi")
-      .select("_id", "band", "band_key", "sub_key", "pband")
-      .repartition(col("pband"))
-      .write.mode("overwrite").partitionBy("pband")
-      .parquet(s"$path/bands_fine")
-    // Per-DOC sub_keys side table (r13): one (_id, sub_key) row per
-    // document — ~40 bytes/doc, a fraction of the bands table's
-    // numBands rows/doc — so a lifecycle APPEND can refresh bands_fine
-    // for buckets the delta pushes over the hot threshold WITHOUT
-    // re-signing any base text (the per-POSTING width argument for
-    // dropping sub_key from the main table doesn't apply here).
-    bandedSub.select("_id", "sub_key").distinct()
-      .write.mode("overwrite").parquet(s"$path/sub_keys")
-    bandedSub.unpersist()
-    // batchWidth is recorded so [[minhashIndexDelete]] can refuse an index
-    // written WITHOUT a batch axis with a geometry message instead of a
-    // late missing-pbatch-column AnalysisException (ADVICE r9).
-    graft.ops.Artifacts.writeMeta(path,
-      "numHashes" -> numHashes.toString, "bands" -> bands.toString,
-      "batchWidth" -> batchWidth.toString,
-      "hotSize" -> graft.ops.DedupOps.RebandHotSize.toString)
-    require(graft.ops.IndexFs.touch(marker),
-      s"could not commit index marker under $path")
+    graft.ops.IndexFs.build(path) {
+      // batchWidth > 0 adds the ingest-batch partition axis (pbatch =
+      // id div batchWidth) that makes [[minhashIndexDelete]]'s takedowns
+      // partition-pruned: a document posts to EVERY band, so band
+      // partitioning alone cannot prune a delete. Readers are unaffected
+      // (pbatch is one more hive partition column they never select).
+      // One signature pass feeds BOTH the postings (sub_key dropped — a
+      // 32-char key per posting would bloat the main table for nothing)
+      // and the hot-bucket fine side-table below; persist so the fine
+      // write doesn't re-shingle the corpus.
+      val bandedSub = minhashBandsWithSub(df, id, text, numHashes, bands)
+        .withColumnRenamed(id, "_id")
+        .withColumn("pband", col("band"))
+        .persist()
+      val banded = bandedSub.drop("sub_key")
+      val (laid, partCols) =
+        if (batchWidth > 0)
+          (banded.withColumn("pbatch", expr(s"_id div $batchWidth"))
+             .repartition(col("pband"), col("pbatch")),
+           Seq("pband", "pbatch"))
+        else (banded.repartition(col("pband")), Seq("pband"))
+      laid.write.mode("overwrite").partitionBy(partCols: _*)
+        .parquet(s"$path/bands")
+      // Hot-bucket fine side-table (r12, the facade form of the registry's
+      // bands_fine): postings of buckets >= hotSize re-keyed on the
+      // full-signature sub_key, so incremental probes
+      // ([[graft.streaming.StreamingOps.dedupBatchAgainstIndex]]) match a
+      // template-family bucket only on a full-signature hit; its row count
+      // is O(hot postings), not O(corpus).
+      val hotKeys = bandedSub.groupBy("band", "band_key")
+        .agg(count(lit(1)).as("sz"))
+        .filter(col("sz") >= graft.ops.DedupOps.RebandHotSize)
+        .select("band", "band_key")
+      bandedSub.join(hotKeys, Seq("band", "band_key"), "left_semi")
+        .select("_id", "band", "band_key", "sub_key", "pband")
+        .repartition(col("pband"))
+        .write.mode("overwrite").partitionBy("pband")
+        .parquet(s"$path/bands_fine")
+      // Per-DOC sub_keys side table (r13): one (_id, sub_key) row per
+      // document — ~40 bytes/doc, a fraction of the bands table's
+      // numBands rows/doc — so a lifecycle APPEND can refresh bands_fine
+      // for buckets the delta pushes over the hot threshold WITHOUT
+      // re-signing any base text (the per-POSTING width argument for
+      // dropping sub_key from the main table doesn't apply here).
+      bandedSub.select("_id", "sub_key").distinct()
+        .write.mode("overwrite").parquet(s"$path/sub_keys")
+      bandedSub.unpersist()
+      // batchWidth is recorded so [[minhashIndexDelete]] can refuse an index
+      // written WITHOUT a batch axis with a geometry message instead of a
+      // late missing-pbatch-column AnalysisException (ADVICE r9).
+      graft.ops.Artifacts.writeMeta(path,
+        "numHashes" -> numHashes.toString, "bands" -> bands.toString,
+        "batchWidth" -> batchWidth.toString,
+        "hotSize" -> graft.ops.DedupOps.RebandHotSize.toString)
+    }
     bandManifest(Tables.read(s, s"$path/bands"), "_id")
   }
 
@@ -380,8 +370,8 @@ object GraftAPI {
     * form of the registry's `dedup_index_append`, r13): the batch
     * shingles + signs ONLY itself and lands as its own COMMITTED delta
     * generation `<root>/bands_delta/batch=<batchId>/` — one
-    * subdirectory per append, each with Spark's own `_SUCCESS`
-    * committing last, so a crashed append is invisible to the probe
+    * subdirectory per append, each committed by its own table marker,
+    * so a crashed append is invisible to the probe
     * resolver and a replay of the same `batchId` is an idempotent
     * overwrite (the foreachBatch replay contract). The streaming probes
     * ([[graft.streaming.StreamingOps.dedupBatchAgainstIndex]] /
@@ -399,7 +389,7 @@ object GraftAPI {
     * threshold. An index built before the sub_keys table existed
     * refuses the append with the rebuild remedy instead of silently
     * serving half-covered hot buckets. The whole append runs under the
-    * retired root marker (the delete legs' discipline): a crash
+    * retired root marker ([[graft.ops.IndexFs.mutate]]): a crash
     * mid-append reads as an uncommitted index. */
   def minhashIndexAppend(spark: SparkSession, bandsPath: String,
                          batch: DataFrame, id: String, text: String,
@@ -414,25 +404,16 @@ object GraftAPI {
     // index built before the sub_keys table existed must leave that
     // valid index valid, not retired-and-never-recommitted.
     if (meta.contains("hotSize"))
-      require(graft.ops.IndexFs.isFile(graft.ops.IndexFs.child(
-          graft.ops.IndexFs.child(root, "sub_keys"), "_SUCCESS")),
+      require(graft.ops.IndexFs.committed(graft.ops.IndexFs.child(root, "sub_keys")),
         s"index at $root predates the per-doc sub_keys table — rebuild " +
           "via writeMinhashIndex before appending (fine-table refresh " +
           "for newly-hot buckets needs the stored sub keys)")
-    // A committed operator-managed bands_compact sibling SHADOWS the
-    // deltas in every probe resolver (served first) — this append would
-    // commit a generation no probe serves, silently (review r13).
-    require(!graft.ops.IndexFs.isFile(graft.ops.IndexFs.child(
-        graft.ops.IndexFs.child(root, "bands_compact"), "_SUCCESS")),
-      s"index at $root carries a committed bands_compact sibling, which " +
-        "probes serve in preference to the delta generation this append " +
-        "would write — retire it before appending")
-    // A crashed prior lifecycle op leaves the root marker retired; an
-    // append on top would extend a possibly half-rewritten index.
-    require(graft.ops.IndexFs.isFile(
-        graft.ops.IndexFs.child(root, "_SUCCESS")),
-      s"index at $root is not committed (a crashed lifecycle op?) — " +
-        "rebuild via writeMinhashIndex before appending")
+    // An operator-managed compact would shadow the generation this
+    // append commits (review r13).
+    graft.ops.IndexFs.requireUncompacted(graft.ops.IndexFs.child(root, "bands_compact"),
+      "retire it before appending")
+    graft.ops.IndexFs.requireCommitted(root,
+      "rebuild via writeMinhashIndex before appending")
     val deltaRoot = graft.ops.IndexFs.child(root, "bands_delta")
     val deltaDir = graft.ops.IndexFs.child(deltaRoot, s"batch=$batchId")
     // Declared schema for every delta read-back (the bandsSchema rule,
@@ -459,12 +440,10 @@ object GraftAPI {
     // delta lands, and reused by the fine refresh and the manifest
     // (review r13 — it was listed and fully re-read twice per append).
     var committed: Seq[String] = Seq.empty
-    try withRetiredMarker(root) {
+    try graft.ops.IndexFs.mutate(root) {
       banded.repartition(col("pband"))
         .write.mode("overwrite").partitionBy("pband").parquet(deltaDir)
-      committed = graft.ops.IndexFs.listDirs(deltaRoot)
-        .filter(d => graft.ops.IndexFs.isFile(
-          graft.ops.IndexFs.child(d, "_SUCCESS")))
+      committed = graft.ops.IndexFs.committedGenerations(deltaRoot)
       meta.get("hotSize").foreach { hs =>
         val hotSize = hs.toLong
         val deltaSub = Tables.readAll(spark, committed, Some(deltaSchema),
@@ -532,27 +511,16 @@ object GraftAPI {
     val root = graft.ops.IndexFs.parent(bandsPath)
     val meta = graft.ops.Artifacts.readMeta(root)
     val deltaRoot = graft.ops.IndexFs.child(root, "bands_delta")
-    val committed = graft.ops.IndexFs.listDirs(deltaRoot)
-      .filter(d => graft.ops.IndexFs.isFile(
-        graft.ops.IndexFs.child(d, "_SUCCESS")))
-    // The same operator-managed-sibling refusal as the takedown: an
-    // external `bands_compact` would shadow whatever this fold writes.
-    require(!graft.ops.IndexFs.isFile(graft.ops.IndexFs.child(
-        graft.ops.IndexFs.child(root, "bands_compact"), "_SUCCESS")),
-      s"index at $root carries a committed bands_compact sibling — " +
-        "retire it before compacting in place")
+    val committed = graft.ops.IndexFs.committedGenerations(deltaRoot)
+    graft.ops.IndexFs.requireUncompacted(graft.ops.IndexFs.child(root, "bands_compact"),
+      "retire it before compacting in place")
     // The fold overwrites the base table from a localCheckpoint whose
     // blocks die with the JVM, so a crash mid-overwrite loses postings
-    // with no intact copy — which is exactly what the retired marker
-    // signals. Refuse to run ON TOP of an already-uncommitted index
-    // (review r13): compacting a half-rewritten base and then removing
-    // the deltas would destroy the only recoverable copy of the
-    // appended rows. The remedy for a crashed lifecycle op is a rebuild
-    // via writeMinhashIndex.
-    require(graft.ops.IndexFs.isFile(
-        graft.ops.IndexFs.child(root, "_SUCCESS")),
-      s"index at $root is not committed (a crashed lifecycle op?) — " +
-        "rebuild via writeMinhashIndex instead of compacting")
+    // with no intact copy. Compacting a half-rewritten base and then
+    // removing the deltas would destroy the only recoverable copy of the
+    // appended rows (review r13).
+    graft.ops.IndexFs.requireCommitted(root,
+      "rebuild via writeMinhashIndex instead of compacting")
     if (committed.nonEmpty) {
       val baseSchema = Tables.read(spark, bandsPath).schema
       val hasBatchAxis = baseSchema.fieldNames.contains("pbatch")
@@ -585,7 +553,7 @@ object GraftAPI {
         .unionByName(deltaSub.select("_id", "sub_key").distinct())
         .distinct()
         .localCheckpoint()
-      withRetiredMarker(root) {
+      graft.ops.IndexFs.mutate(root) {
         val partCols = if (hasBatchAxis) Seq("pband", "pbatch") else Seq("pband")
         merged.repartition(partCols.map(col): _*)
           .write.mode("overwrite").partitionBy(partCols: _*).parquet(bandsPath)
@@ -608,13 +576,9 @@ object GraftAPI {
             .write.mode("overwrite").partitionBy("pband")
             .parquet(graft.ops.IndexFs.child(root, "bands_fine"))
         }
-        // The folded generations retire with the marker still down. A
-        // crash ANYWHERE in this block — mid-overwrite included — reads
-        // as an uncommitted index, and the committed-marker precondition
-        // above refuses further lifecycle ops on it: the honest remedy
-        // for a crashed in-place fold is a rebuild, not a re-run over a
-        // possibly partial base (the facade's documented crash
-        // semantics for every in-place mutation).
+        // The folded generations retire with the marker still down: the
+        // remedy for a crashed in-place fold is a rebuild, not a re-run
+        // over a possibly partial base.
         require(graft.ops.IndexFs.deleteRecursive(deltaRoot),
           s"could not remove the folded delta generations under $root")
       }
@@ -652,20 +616,14 @@ object GraftAPI {
         s"index at $root records batchWidth=$bw — partition-pruned " +
           "deletes need a positive ingest-batch width; rebuild with " +
           "writeMinhashIndex(batchWidth = <ids per ingest batch>)"))
-    // A committed `bands_compact` sibling is what the probe resolver
-    // serves FIRST ([[graft.streaming.StreamingOps]], review r13): this
-    // takedown rewrites only the bands/bands_delta family, so a compact
-    // left in place would keep serving every deleted document's postings
-    // no matter what the rewrite below does. The facade defines no
-    // compact writer (the sibling is operator-managed, layout unknown
-    // here), so refuse loudly before the marker retirement rather than
-    // guess at rewriting it.
-    require(!graft.ops.IndexFs.isFile(graft.ops.IndexFs.child(
-        graft.ops.IndexFs.child(root, "bands_compact"), "_SUCCESS")),
-      s"index at $root carries a committed bands_compact sibling, which " +
-        "probes serve in preference to the rewritten postings — retire " +
-        "it (or rebuild via writeMinhashIndex over the surviving corpus) " +
-        "before the takedown")
+    // This takedown rewrites only the bands/bands_delta family, so a
+    // compact left in place would keep serving every deleted document's
+    // postings. The facade defines no compact writer (the sibling is
+    // operator-managed, layout unknown here), so refuse rather than
+    // guess at rewriting it (review r13).
+    graft.ops.IndexFs.requireUncompacted(graft.ops.IndexFs.child(root, "bands_compact"),
+      "retire it (or rebuild via writeMinhashIndex over the surviving " +
+        "corpus) before the takedown")
     // Delta generations ([[minhashIndexAppend]]) are probe-visible through
     // the resolver, so a takedown that only rewrote `bands` would keep
     // serving deleted documents out of the deltas. Refuse loudly (before
@@ -673,10 +631,8 @@ object GraftAPI {
     // the remedy is [[minhashIndexCompact]] — an O(index) in-place fold
     // that restores the single layout (and the pbatch axis for the
     // appended rows), after which this takedown is legal again.
-    val deltaGens = graft.ops.IndexFs
-      .listDirs(graft.ops.IndexFs.child(root, "bands_delta"))
-      .filter(d => graft.ops.IndexFs.isFile(
-        graft.ops.IndexFs.child(d, "_SUCCESS")))
+    val deltaGens = graft.ops.IndexFs.committedGenerations(
+      graft.ops.IndexFs.child(root, "bands_delta"))
     if (deltaGens.nonEmpty) {
       val hitDelta = Tables.readAll(spark, deltaGens,
         Some(graft.ops.MinhashIndex.facadeFineSchema(Tables.read(spark, bandsPath).schema)),
@@ -689,7 +645,7 @@ object GraftAPI {
           "fold the deltas into the base (O(index), no corpus re-read), " +
           "then re-run the takedown against the single layout")
     }
-    withRetiredMarker(root) {
+    graft.ops.IndexFs.mutate(root) {
       graft.ops.DedupOps.deleteFromBands(spark, bandsPath,
         deleteIds.select(col(id).as("_id")), idCol = "_id")
       // The `bands_fine` side-table holds the SAME documents' hot-bucket
@@ -713,33 +669,13 @@ object GraftAPI {
       // and a later append's fine refresh must not resurrect fine rows
       // for deleted documents.
       val subDir = graft.ops.IndexFs.child(root, "sub_keys")
-      if (graft.ops.IndexFs.isFile(
-          graft.ops.IndexFs.child(subDir, "_SUCCESS"))) {
+      if (graft.ops.IndexFs.committed(subDir)) {
         val keptSub = Tables.read(spark, subDir)
           .join(deleteIds.select(col(id).as("_id")), Seq("_id"), "left_anti")
           .localCheckpoint()
         keptSub.write.mode("overwrite").parquet(subDir)
       }
     }
-  }
-
-  /** The delete legs rewrite live partitions in place, so the index's
-    * root `_SUCCESS` must not stay valid across the rewrite (ADVICE r9 —
-    * the same "marker commits last" rule [[writeMinhashIndex]] enforces
-    * for rebuilds): retire it before the dynamic partition overwrite
-    * starts, recreate it only after the rewrite commits. A crash
-    * mid-delete then reads as an uncommitted index, not a valid-looking
-    * marker over a partially rewritten table. No-op when the table has
-    * no root marker (scratch layouts). IndexFs-routed (review r10) so
-    * the contract holds on object-store index roots too. */
-  private def withRetiredMarker(root: String)(body: => Unit): Unit = {
-    val marker = graft.ops.IndexFs.child(root, "_SUCCESS")
-    val had = graft.ops.IndexFs.isFile(marker)
-    if (had) require(graft.ops.IndexFs.delete(marker),
-      s"could not retire the index marker under $root before the delete")
-    body
-    if (had) require(graft.ops.IndexFs.touch(marker),
-      s"could not recommit the index marker under $root after the delete")
   }
 
   /** Partition-pruned takedown on a stored ANN code table
@@ -751,8 +687,8 @@ object GraftAPI {
     * must not survive its own takedown), AND in the `cells` membership
     * table (the streaming pool resolves membership from cells ∪ delta,
     * so a stale row would keep serving the id whenever the caller's
-    * corpus purge lags) — all under one retired root marker, with
-    * `_split_SUCCESS` retired (split side-tables reflect pre-delete
+    * corpus purge lags) — all under one retired root marker, with the
+    * split marker retired (split side-tables reflect pre-delete
     * membership). A delete that would fully EMPTY a base or compact
     * cell is REFUSED before the marker retirement (toward a catalog
     * DROP PARTITION — and so a rejected call leaves a committed index
@@ -773,10 +709,8 @@ object GraftAPI {
     val del = deleteIds.select(col(id).as("vec_id")).localCheckpoint()
     val compactP = graft.ops.IndexFs.child(root, "ivfpq_codes_compact")
     val deltaP = graft.ops.IndexFs.child(root, "ivfpq_codes_delta")
-    val hasCompact = graft.ops.IndexFs.isFile(
-      graft.ops.IndexFs.child(compactP, "_SUCCESS"))
-    val hasDelta = graft.ops.IndexFs.isFile(
-      graft.ops.IndexFs.child(deltaP, "_SUCCESS"))
+    val hasCompact = graft.ops.IndexFs.committed(compactP)
+    val hasDelta = graft.ops.IndexFs.committed(deltaP)
     // Emptied-cell REFUSALS run before the marker retirement (review
     // r13: deleteFromCodes' internal guard throwing mid-lifecycle left
     // the base rewritten and the index permanently uncommitted).
@@ -790,7 +724,7 @@ object GraftAPI {
     refuseEmptied(codesPath, Tables.read(spark, codesPath))
     if (hasCompact) refuseEmptied(compactP,
       Tables.read(spark, compactP, Some(graft.ops.VectorOps.codesSchema)))
-    withRetiredMarker(root) {
+    graft.ops.IndexFs.mutate(root) {
       graft.ops.VectorOps.deleteFromCodes(spark, codesPath, del)
       // Lifecycle siblings (review r13): the probe-root resolver serves a
       // committed compact FIRST and unions the committed delta with the
@@ -819,8 +753,7 @@ object GraftAPI {
       // — and the facade compact would fold the stale row forward. One
       // scalar-column rewrite; deletes are rare.
       val cellsP = graft.ops.IndexFs.child(root, "cells")
-      if (graft.ops.IndexFs.isFile(
-          graft.ops.IndexFs.child(cellsP, "_SUCCESS"))) {
+      if (graft.ops.IndexFs.committed(cellsP)) {
         val kept = Tables.read(spark, cellsP)
           .join(del, Seq("vec_id"), "left_anti")
           .localCheckpoint()
@@ -829,14 +762,9 @@ object GraftAPI {
       // A committed cell split reflects the PRE-delete membership
       // (ADVICE r12): the split-aware probe computes its pool >= k floor
       // from cells_split rows before joining the live corpus, so stale
-      // split rows inflate the pool with deleted vec_ids. Retire the
-      // split marker (the same move [[graft.ops.IvfPqIndex.buildAt]]
-      // makes on a rebuild) so probes fall back to whole-cell scans
-      // until the next annIndexSplit against this root.
-      val split = graft.ops.IndexFs.child(root, "_split_SUCCESS")
-      if (graft.ops.IndexFs.isFile(split))
-        require(graft.ops.IndexFs.delete(split),
-          s"could not retire the stale split marker under $root after the delete")
+      // split rows inflate the pool with deleted vec_ids; probes fall
+      // back to whole-cell scans until the next annIndexSplit.
+      graft.ops.IndexFs.retire(root, graft.ops.IndexFs.Split)
     }
   }
 
@@ -1170,18 +1098,19 @@ object GraftAPI {
     * are normalized away). Two-path + closing-edge join with low→high
     * orientation finds each triangle exactly once; output is
     * (vertex, n_tri). At real scale orient by degree instead of raw id
-    * for the O(m^1.5) candidate bound. The edge set feeds three join
-    * branches, so pin a derived edge frame first (as the registry does
-    * with the lineitem co-occurrence pairs) or it is re-derived per
+    * for the O(m^1.5) candidate bound. The normalized edge set feeds
+    * three join branches, so it is pinned once, eagerly (one job at
+    * call time; the registry pins its co-occurrence pairs the same way),
+    * and the caller's edge lineage is planned and run once, not per
     * branch. Registry binding: `graph_triangles` (through
     * [[orientedTriangleCounts]]: its pinned pairs are already oriented
     * and distinct, so normalizing them again would add one aggregate and
     * exchange per join branch). */
   def triangleCounts(edges: DataFrame, src: String, dst: String): DataFrame =
-    orientedTriangleCounts(edges
+    orientedTriangleCounts(graft.ops.DedupOps.truncate(edges
       .select(least(col(src), col(dst)).as("a"),
         greatest(col(src), col(dst)).as("b"))
-      .filter(col("a") =!= col("b")).distinct())
+      .filter(col("a") =!= col("b")).distinct()))
 
   /** The counting core of [[triangleCounts]] over an edge set that is
     * already normalized: distinct (a, b) rows with a < b. */
@@ -1578,7 +1507,7 @@ object GraftAPI {
     * trains the coarse quantizer and both PQ codebooks, encodes the
     * corpus, and writes the parquet artifact set (`coarse`, `cells`,
     * `pq_codebooks`, `pq_codes`, `ivfpq_codebooks`, `ivfpq_codes`
-    * hive-partitioned by coarse cell, plus a root `_SUCCESS` commit
+    * hive-partitioned by coarse cell, committed last under the root
     * marker). A probe reads ONE cell directory + two broadcast codebook
     * tables; float vectors stay out of the read path until the shortlist
     * rerank. Training is deterministic (lowest-id seeds, 6-dp-snapped
@@ -1611,8 +1540,7 @@ object GraftAPI {
     * every hot cell in the same jobs, same 6-dp-snapped deterministic
     * math as the codebooks) and re-assign into `coarse_split` /
     * `cells_split` side-tables next to the index, guarded by their own
-    * `_split_SUCCESS` commit marker (a crash mid-write reads as "no
-    * split"). Probes narrow a split cell to the sub-cells nearest the
+    * commit marker (a crash mid-write reads as "no split"). Probes narrow a split cell to the sub-cells nearest the
     * query's residual instead of scanning `max_cell` vectors. `df` must
     * be the SAME corpus the index was built from — only the hot cells'
     * vectors are read. Returns the per-hot-cell manifest
@@ -1666,21 +1594,12 @@ object GraftAPI {
     val mM = meta("m").toInt
     val dim = meta("dim").toInt
     val sub = dim / mM
-    // A committed operator-managed compact sibling SHADOWS the delta in
-    // every probe resolver (served first, deltas ignored) — an append
-    // would commit rows no probe serves and the facade compact refuses
-    // while the sibling exists, so refuse HERE, loudly (review r13).
-    require(!graft.ops.IndexFs.isFile(graft.ops.IndexFs.child(
-        ix.ivfCodesCompact, "_SUCCESS")),
-      s"index at $path carries a committed ivfpq_codes_compact sibling, " +
-        "which probes serve in preference to the delta this append " +
-        "would write — retire it (or fold it in) before appending")
-    // A crashed prior lifecycle op leaves the root marker retired; an
-    // append on top would mutate a possibly half-rewritten index.
-    require(graft.ops.IndexFs.isFile(
-        graft.ops.IndexFs.child(path, "_SUCCESS")),
-      s"index at $path is not committed (a crashed lifecycle op?) — " +
-        "rebuild via buildAnnIndex before appending")
+    // An operator-managed compact would shadow this append's rows, and
+    // the facade compact refuses while it exists (review r13).
+    graft.ops.IndexFs.requireUncompacted(ix.ivfCodesCompact,
+      "retire it (or fold it in) before appending")
+    graft.ops.IndexFs.requireCommitted(path,
+      "rebuild via buildAnnIndex before appending")
     val e = batch.select(col(id).as("vec_id"),
       col(vec).cast("array<double>").as("x"))
     // An EMPTY day commits a no-op cleanly (the minhashIndexAppend
@@ -1708,13 +1627,12 @@ object GraftAPI {
     // Fold into the single delta generation. Declared schema on the
     // prior read: a previous empty append commits a data-file-less
     // table. localCheckpoint severs the read from the overwrite.
-    val merged = (if (graft.ops.IndexFs.isFile(graft.ops.IndexFs.child(
-        ix.ivfCodesDelta, "_SUCCESS")))
+    val merged = (if (graft.ops.IndexFs.committed(ix.ivfCodesDelta))
       Tables.read(s, ix.ivfCodesDelta, Some(graft.ops.VectorOps.codesSchema))
         .select("vec_id", "m", "code", "cell")
         .unionByName(newCodes)
     else newCodes).distinct().localCheckpoint()
-    withRetiredMarker(path) {
+    graft.ops.IndexFs.mutate(path) {
       merged.withColumn("pcell", col("cell"))
         .repartition(col("pcell"))
         .write.mode("overwrite").partitionBy("pcell")
@@ -1735,7 +1653,7 @@ object GraftAPI {
     * mirror of [[minhashIndexCompact]]): folds the committed
     * `ivfpq_codes_delta` into the `ivfpq_codes` table and the appended
     * (vec_id, cell) memberships into `cells`, removes the folded delta,
-    * and retires any `_split_SUCCESS` (the split side-tables reflect
+    * and retires the split marker (the split side-tables reflect
     * PRE-compact cell membership — probes fall back to whole-cell pools
     * until the next [[annIndexSplit]], the same rule the takedown
     * applies). Single layout afterwards; probes resolve base alone and
@@ -1747,19 +1665,13 @@ object GraftAPI {
     * n_codes) of the compacted table. */
   def annIndexCompact(spark: SparkSession, path: String): DataFrame = {
     val ix = graft.ops.IvfPqIndex.Ix(path)
-    require(!graft.ops.IndexFs.isFile(graft.ops.IndexFs.child(
-        ix.ivfCodesCompact, "_SUCCESS")),
-      s"index at $path carries a committed ivfpq_codes_compact sibling " +
-        "(served FIRST by the probe resolver) — retire it before " +
-        "compacting in place")
+    graft.ops.IndexFs.requireUncompacted(ix.ivfCodesCompact,
+      "retire it before compacting in place")
     // Same rationale as minhashIndexCompact (review r13): the in-place
     // fold must not run on top of a crashed lifecycle op's partial base.
-    require(graft.ops.IndexFs.isFile(
-        graft.ops.IndexFs.child(path, "_SUCCESS")),
-      s"index at $path is not committed (a crashed lifecycle op?) — " +
-        "rebuild via buildAnnIndex instead of compacting")
-    if (graft.ops.IndexFs.isFile(graft.ops.IndexFs.child(
-        ix.ivfCodesDelta, "_SUCCESS"))) {
+    graft.ops.IndexFs.requireCommitted(path,
+      "rebuild via buildAnnIndex instead of compacting")
+    if (graft.ops.IndexFs.committed(ix.ivfCodesDelta)) {
       val delta = Tables.read(spark, ix.ivfCodesDelta, Some(graft.ops.VectorOps.codesSchema))
         .select("vec_id", "m", "code", "cell")
       val merged = Tables.read(spark, ix.ivfCodes)
@@ -1771,7 +1683,7 @@ object GraftAPI {
         .unionByName(delta.filter(col("m") === 0).select("vec_id", "cell"))
         .distinct()
         .localCheckpoint()
-      withRetiredMarker(path) {
+      graft.ops.IndexFs.mutate(path) {
         merged.withColumn("pcell", col("cell"))
           .repartition(col("pcell"))
           .write.mode("overwrite").partitionBy("pcell")
@@ -1779,10 +1691,7 @@ object GraftAPI {
         newCells.write.mode("overwrite").parquet(ix.cells)
         require(graft.ops.IndexFs.deleteRecursive(ix.ivfCodesDelta),
           s"could not remove the folded delta under $path")
-        val split = graft.ops.IndexFs.child(path, "_split_SUCCESS")
-        if (graft.ops.IndexFs.isFile(split))
-          require(graft.ops.IndexFs.delete(split),
-            s"could not retire the stale split marker under $path")
+        graft.ops.IndexFs.retire(path, graft.ops.IndexFs.Split)
       }
     }
     Tables.read(spark, ix.ivfCodes)

@@ -83,7 +83,7 @@ object Maintenance {
     val mhDelta = Tables.read(spark, mhIx.delta, Some(graft.ops.DedupOps.bandsSchema))
       .select("band", "band_key")
     val mhFineCovered =
-      if (new java.io.File(mhIx.root, "_fine_SUCCESS").isFile)
+      if (graft.ops.IndexFs.committed(mhIx.root, graft.ops.IndexFs.Fine))
         Tables.read(spark, mhIx.fine, Some(graft.ops.DedupOps.fineSchema))
           .select("band", "band_key")
       else spark.emptyDataFrame
@@ -99,8 +99,7 @@ object Maintenance {
     val annDelta = Tables.read(spark, annIx.ivfCodesDelta, Some(graft.ops.VectorOps.codesSchema))
       .filter(col("m") === 0).select("cell")
     val annSplitCovered =
-      if (graft.ops.IndexFs.isFile(
-          graft.ops.IndexFs.child(annIx.root, "_split_SUCCESS")))
+      if (graft.ops.IndexFs.committed(annIx.root, graft.ops.IndexFs.Split))
         Tables.read(spark, s"${annIx.root}/coarse_split",
           Some(graft.ops.VectorOps.splitCentsSchema)).select("cell")
       else spark.emptyDataFrame.withColumn("cell", lit(0L)).limit(0)

@@ -115,7 +115,7 @@ object DedupOps {
     * unless `spark.cleaner.referenceTracking.cleanCheckpoints` is set —
     * the standard cluster hygiene knob, documented here rather than
     * managed. */
-  private[ops] def truncate(df: DataFrame, eager: Boolean = true): DataFrame =
+  private[graft] def truncate(df: DataFrame, eager: Boolean = true): DataFrame =
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) {
       if (eager) {
         val p = df.persist()
@@ -495,9 +495,9 @@ object DedupOps {
     * the dedup counterpart of `build_ivfpq_index`: shingle + sign +
     * band the corpus ONCE and persist the (doc_id, band, band_key)
     * postings as a parquet table hive-partitioned by band
-    * ([[MinhashIndex]]; idempotent write-once, same `_SUCCESS` contract
-    * as every layout sink here). This is the artifact [[dedupIncremental]]
-    * probes and [[simjoinLsh]]'s `persist()` stands in for — at 100 TB
+    * ([[MinhashIndex]]; write-once under the [[IndexFs]] commit
+    * protocol). This is the artifact [[dedupIncremental]] probes and
+    * [[simjoinLsh]]'s `persist()` stands in for — at 100 TB
     * the postings are additionally bucketed by band_key so batch probes
     * co-partition without shuffling the stored side.
     *
@@ -574,8 +574,7 @@ object DedupOps {
     // Ensure the delta landed WITHOUT re-running the append when its
     // committed table already exists (VERDICT r11 "what's wrong" #3: the
     // in-window append replay made the compact's bench number carry an
-    // append's work). Spark's own _SUCCESS commits last, so a crashed
-    // append re-runs; a committed one is byte-stable (deterministic
+    // append's work). A committed delta is byte-stable (deterministic
     // banding) and is exactly what a re-append would rewrite.
     MinhashIndex.ensureDelta(s, dir, ix)
     Tables.read(s, ix.bands)
@@ -648,10 +647,9 @@ object DedupOps {
 
   /** Build-once scratch "live" layout for [[dedupIndexDelete]]: the
     * stored postings re-partitioned by (band, ingest batch), the table a
-    * production delete mutates in place. Guarded by Spark's own root
-    * `_SUCCESS` (commits last, so a crashed build rebuilds); synchronized
-    * against parallel suites. Returns (live path, pristine source frame
-    * with the batch axis derived) — the pristine frame is what each
+    * production delete mutates in place. Rebuilt when uncommitted;
+    * synchronized against parallel suites. Returns (live path, pristine
+    * source frame with the batch axis derived) — the pristine frame is what each
     * bench draw's pruned rewrite reads, so untouched partitions are
     * written exactly once, here. */
   private def ensureLiveBands(s: SparkSession, dir: String): (String, DataFrame) =
@@ -667,15 +665,16 @@ object DedupOps {
       // Rebuild whenever the recorded width is absent or differs. The
       // width marker is underscore-prefixed so Spark's file listing
       // ignores it (a bare root file would be read as parquet data).
-      val widthFile = new java.io.File(live, "_ingest_batch")
-      val widthOk = widthFile.isFile &&
-        java.nio.file.Files.readString(widthFile.toPath).trim ==
-          IngestBatch.toString
-      if (!new java.io.File(live, "_SUCCESS").isFile || !widthOk) {
+      val widthFile = IndexFs.child(live, "_ingest_batch")
+      val widthOk = IndexFs.readIfExists(widthFile)(in =>
+          new String(in.readAllBytes, java.nio.charset.StandardCharsets.UTF_8).trim)
+        .contains(IngestBatch.toString)
+      if (!IndexFs.committed(live) || !widthOk) IndexFs.build(live) {
         pristine.withColumn("pband", col("band"))
           .repartition(col("pband"), col("pbatch"))
           .write.mode("overwrite").partitionBy("pband", "pbatch").parquet(live)
-        java.nio.file.Files.writeString(widthFile.toPath, IngestBatch.toString)
+        IndexFs.write(widthFile)(_.write(IngestBatch.toString
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8)))
       }
       (live, pristine)
     }

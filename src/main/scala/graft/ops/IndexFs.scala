@@ -1,23 +1,51 @@
 package graft.ops
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.DataFrame
 
-/** Filesystem seam for the index MARKER/MANIFEST plane (review r10): the
-  * public facades ([[graft.api.GraftAPI.writeMinhashIndex]], the delete
-  * legs, `buildAnnIndex`) accept arbitrary table paths, and
-  * `java.io.File` silently no-ops or throws on object-store URIs
-  * (s3a://, hdfs://) — exactly the 100 TB deployments the
-  * marker-commits-last crash-safety rules exist for. All marker and
-  * geometry-manifest I/O resolves through Hadoop's `FileSystem` for the
-  * path's scheme, using the active session's `hadoopConfiguration` when
-  * one exists (so credentials/endpoints configured on the session
-  * apply); plain local paths keep byte-identical behavior with the old
-  * `java.io.File` form. The DATA plane always went through Spark's own
-  * writers and needed no change. Registry-internal scratch layouts
-  * under `/tmp` (Artifacts.root) are local by construction and stay on
-  * `java.io.File`.
+/** The commit protocol of the stored indexes ([[MinhashIndex]],
+  * [[IvfPqIndex]], the facade layouts of [[graft.api.GraftAPI]], the
+  * streaming probes, and the registry's write-once layout tables), and
+  * its filesystem seam. No other file spells a marker name.
+  *
+  * Markers. A table is committed when an empty marker file sits next to
+  * it, and readers trust nothing else:
+  *   - `_SUCCESS` ([[Table]]) in a table directory, where Spark's writer
+  *     commits it, or at an index root, committed after every table
+  *     under the root;
+  *   - `_fine_SUCCESS` ([[Fine]]) at a MinHash root, over `bands_fine`;
+  *   - `_split_SUCCESS` ([[Split]]) at an IVF-PQ root, over
+  *     `coarse_split` and `cells_split`.
+  *
+  * Writes. [[build]] retires the marker first and commits it last, so a
+  * crash mid-write reads as uncommitted and [[ensure]] rebuilds from
+  * scratch instead of serving a partial or mixed-generation table. An
+  * in-place rewrite of a committed root runs under [[mutate]], which
+  * holds the root marker retired for the whole rewrite. A side-table
+  * that a root rewrite makes stale loses its marker through [[retire]],
+  * and consumers fall back to the raw tables until it is rebuilt.
+  *
+  * Resolve. A probe reads the committed compact sibling when there is
+  * one, else the base table ∪ the committed delta generations
+  * ([[resolve]]); both hold the same rows, so compacting changes the
+  * scan count and nothing else. [[requireCommitted]] and
+  * [[requireUncompacted]] are the lifecycle preconditions the facade
+  * checks before it mutates a root.
+  *
+  * All I/O goes through Hadoop's `FileSystem` for the path's scheme,
+  * with the active session's `hadoopConfiguration` when there is one, so
+  * the protocol holds on object-store roots (s3a://, hdfs://) with the
+  * session's credentials and endpoints. The data plane goes through
+  * Spark's own writers.
   */
 private[graft] object IndexFs {
+
+  /** One kind of commit marker: the name of its file. */
+  final class Marker private[IndexFs] (private[IndexFs] val file: String)
+
+  val Table = new Marker("_SUCCESS")
+  val Fine = new Marker("_fine_SUCCESS")
+  val Split = new Marker("_split_SUCCESS")
 
   // getActiveSession is THREAD-LOCAL (ADVICE r10): marker I/O issued from
   // a helper thread that never touched the session would silently fall
@@ -35,19 +63,79 @@ private[graft] object IndexFs {
     f(p.getFileSystem(conf), p)
   }
 
-  def isFile(path: String): Boolean = withFs(path)((fs, p) =>
-    fs.exists(p) && fs.getFileStatus(p).isFile)
+  /** Is the table, root or side-table at `path` committed under `m`? */
+  def committed(path: String, m: Marker = Table): Boolean =
+    withFs(child(path, m.file))((fs, p) => fs.exists(p) && fs.getFileStatus(p).isFile)
 
-  /** Create an empty file; true if the file exists afterwards (matches
-    * the old `createNewFile() || isFile` commit idiom). */
-  def touch(path: String): Boolean = withFs(path)((fs, p) =>
-    fs.createNewFile(p) || fs.exists(p))
+  /** Drop `m` under `path` when it is there. */
+  def retire(path: String, m: Marker = Table): Unit =
+    if (committed(path, m)) require(withFs(child(path, m.file))((fs, p) => fs.delete(p, false)),
+      s"could not retire ${m.file} under $path")
 
-  def delete(path: String): Boolean = withFs(path)((fs, p) => fs.delete(p, false))
+  private def commit(path: String, m: Marker): Unit =
+    require(withFs(child(path, m.file))((fs, p) => fs.createNewFile(p) || fs.exists(p)),
+      s"could not commit ${m.file} under $path")
+
+  /** Commit-last build: retire `m`, write, then commit `m`. A body that
+    * throws leaves `path` uncommitted. */
+  def build(path: String, m: Marker = Table)(body: => Unit): Unit = {
+    retire(path, m)
+    body
+    commit(path, m)
+  }
+
+  /** [[build]] when `path` is not committed under `m`. */
+  def ensure(path: String, m: Marker = Table)(body: => Unit): Unit =
+    if (!committed(path, m)) build(path, m)(body)
+
+  /** Rewrite a root in place under its retired root marker, recommitted
+    * after `body`; a crash mid-rewrite reads as an uncommitted index. A
+    * root with no marker (a scratch layout) stays without one. */
+  def mutate(root: String)(body: => Unit): Unit = {
+    val had = committed(root)
+    retire(root)
+    body
+    if (had) commit(root, Table)
+  }
+
+  /** Refuse to mutate a root whose marker a crashed lifecycle op left
+    * retired: the tables under it may be half rewritten. */
+  def requireCommitted(root: String, remedy: String): Unit =
+    require(committed(root),
+      s"index at $root is not committed (a crashed lifecycle op?) — $remedy")
+
+  /** Refuse to mutate a root whose committed `compact` sibling probes
+    * serve first, ahead of whatever the mutation writes. */
+  def requireUncompacted(compact: String, remedy: String): Unit =
+    require(!committed(compact),
+      s"index at ${parent(compact)} carries a committed " +
+        s"${new Path(compact).getName} sibling, which probes serve in " +
+        s"preference to what this call writes — $remedy")
+
+  /** The committed generation directories under `dir` (empty when
+    * absent), in name order so a union over them is deterministic. */
+  def committedGenerations(dir: String): Seq[String] = withFs(dir) { (fs, p) =>
+    if (!fs.exists(p)) Seq.empty
+    else fs.listStatus(p).toSeq.filter(_.isDirectory)
+      .map(_.getPath.toString).sorted.filter(committed(_))
+  }
+
+  /** The probe-root resolver: `readCompact(compact)` when `compact` is
+    * committed, else `base` ∪ `readDeltas(deltas)`, or `base` alone when
+    * there are no deltas. `deltas` is evaluated first and only without a
+    * committed compact, so an ensured delta is built only when read. */
+  def resolve(compact: String, base: => DataFrame, deltas: => Seq[String])(
+      readCompact: String => DataFrame,
+      readDeltas: Seq[String] => DataFrame): DataFrame =
+    if (committed(compact)) readCompact(compact)
+    else deltas match {
+      case Seq() => base
+      case ds => base.unionByName(readDeltas(ds))
+    }
 
   /** Recursive delete of a retired index SIBLING (delta generations a
-    * compact has folded in). Only lifecycle code that has already
-    * retired the root commit marker may call this. */
+    * compact has folded in). Only lifecycle code inside [[mutate]] may
+    * call this. */
   def deleteRecursive(path: String): Boolean =
     withFs(path)((fs, p) => !fs.exists(p) || fs.delete(p, true))
 
@@ -61,20 +149,11 @@ private[graft] object IndexFs {
       try body(out) finally out.close()
     }
 
-  /** Child DIRECTORIES of `path` (empty when absent) — the delta-batch
-    * listing the facade probe-root resolver uses; sorted by name so the
-    * resolved union is deterministic. */
-  def listDirs(path: String): Seq[String] = withFs(path) { (fs, p) =>
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.filter(_.isDirectory)
-      .map(_.getPath.toString).sorted
-  }
-
   /** One-level fold of a table root (a directory or a single file): mtime
     * and length of the root, then name, mtime and length of its DIRECT
     * children in name order; None when the root does not exist. Any
     * Spark rewrite touches a direct child (a unique part-file name, a
-    * partition directory, `_SUCCESS`, the root itself through
+    * partition directory, the commit marker, the root itself through
     * `_temporary`), so an unchanged stamp means an unchanged file set.
     * Local paths fold nanosecond mtimes (at millisecond granularity a
     * same-millisecond regeneration with identical child names and sizes

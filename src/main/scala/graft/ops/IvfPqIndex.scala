@@ -26,6 +26,15 @@ import org.apache.spark.sql.functions._
   *                           prunes whole directories before any I/O — the
   *                           FAISS inverted-list layout as a lakehouse table.
   *
+  * The base-family root adds `ivfpq_codes_delta` (the appended batch,
+  * same layout) and `ivfpq_codes_compact` (base ∪ delta); probes read
+  * them through [[resolvedCodes]]. A maintenance split adds
+  * `coarse_split` and `cells_split`. Every table commits through
+  * [[IndexFs]]: the root marker after all six tables and the geometry
+  * manifest, each sibling's own table marker, and the split marker over
+  * the split side-tables (retired by any rebuild, compact or delete
+  * that changes cell membership).
+  *
   * At 100 TB: the build trains on a sample and encodes in one distributed
   * pass; codes are 4 bytes/vector; probes read one cell directory + two
   * broadcast codebook tables and never touch the float column outside the
@@ -52,13 +61,12 @@ object IvfPqIndex {
   private def indexRoot(dir: String): String =
     Artifacts.root("annix_v1", dir, "embeddings.parquet")
 
-  /** Build-if-absent. Idempotent and crash-safe: the root `_SUCCESS`
-    * marker is touched only after every table has committed, so a partial
-    * build is rebuilt from scratch. Synchronized: parallel test suites in
-    * one JVM must not race the build. */
+  /** Full-corpus index, built once under the root marker
+    * ([[IndexFs.ensure]]). Synchronized: parallel test suites in one JVM
+    * must not race the build. */
   def ensure(s: SparkSession, dir: String): Ix = synchronized {
     val ix = Ix(indexRoot(dir))
-    if (!new java.io.File(ix.root, "_SUCCESS").isFile) build(s, dir, ix)
+    IndexFs.ensure(ix.root)(build(s, dir, ix))
     ix
   }
 
@@ -72,12 +80,11 @@ object IvfPqIndex {
     * version bump a two-call-site hazard). */
   def ensureBase(s: SparkSession, dir: String): Ix = synchronized {
     val ix = Ix(Artifacts.root("annix_v1_base", dir, "embeddings.parquet"))
-    if (!new java.io.File(ix.root, "_SUCCESS").isFile)
-      buildAt(s,
-        embeddings(s, dir)
-          .filter(col("vec_id") % 10 =!= 7)
-          .select(col("vec_id"), col("embedding").cast("array<double>").as("x")),
-        ix, cells = 16, m = VectorOps.PqM, k = 16, iters = 2)
+    IndexFs.ensure(ix.root)(train(s,
+      embeddings(s, dir)
+        .filter(col("vec_id") % 10 =!= 7)
+        .select(col("vec_id"), col("embedding").cast("array<double>").as("x")),
+      ix, cells = 16, m = VectorOps.PqM, k = 16, iters = 2))
     ix
   }
 
@@ -85,57 +92,38 @@ object IvfPqIndex {
     * 7`) encoded against the STORED base codebooks (no retraining),
     * exactly what `ann_index_append` lands; the ensure face exists so
     * every PROBE resolves the same content whether or not the append
-    * job ran first (deterministic codebooks → byte-identical rows).
-    * Spark's own `_SUCCESS` in the delta dir commits last, so a crashed
-    * write reads as "no delta" and rebuilds. */
+    * job ran first (deterministic codebooks → byte-identical rows). */
   def ensureDelta(s: SparkSession, dir: String, ix: Ix): String = synchronized {
-    if (!new java.io.File(ix.ivfCodesDelta, "_SUCCESS").isFile)
-      VectorOps.writeAnnDelta(s, dir, ix)
+    IndexFs.ensure(ix.ivfCodesDelta)(VectorOps.writeAnnDelta(s, dir, ix))
     ix.ivfCodesDelta
   }
 
-  /** The ANN PROBE-ROOT RESOLVER (VERDICT r12 #1, the mirror of
-    * [[MinhashIndex.resolvedPostings]]): the residual-code table every
-    * base-family probe scores from — the committed
-    * `ivfpq_codes_compact` when present (post-OPTIMIZE: one
-    * cell-partitioned scan), else `ivfpq_codes` ∪ the (ensured) delta.
-    * Both resolve to the same content — every corpus vector encoded
-    * under the base-trained codebooks — so an appended vector is
+  /** The residual-code table every base-family probe scores from (the
+    * mirror of [[MinhashIndex.resolvedPostings]]): [[IndexFs.resolve]]
+    * over the committed `ivfpq_codes_compact`, else `ivfpq_codes` ∪ the
+    * ensured delta. Both resolve to the same content — every corpus
+    * vector encoded under the base-trained codebooks — so an appended vector is
     * probe-visible without a compact, and compact changes nothing but
     * the scan count (VectorSpec pins byte-identical probe results). */
   def resolvedCodes(s: SparkSession, dir: String, ix: Ix): DataFrame = {
-    val cols = Seq("vec_id", "cell", "m", "code", "pcell")
+    val cols = Seq("vec_id", "cell", "m", "code", "pcell").map(col)
     // Declared schema on the sibling reads (not inference): an empty
     // held-out slice writes a data-file-less delta — it must resolve to
     // "base alone", not crash the probe (the bandsSchema rule).
-    if (new java.io.File(ix.ivfCodesCompact, "_SUCCESS").isFile)
-      Tables.read(s, ix.ivfCodesCompact, Some(VectorOps.codesSchema))
-        .select(cols.map(col): _*)
-    else {
-      val delta = ensureDelta(s, dir, ix)
-      Tables.read(s, ix.ivfCodes).select(cols.map(col): _*)
-        .unionByName(Tables.read(s, delta, Some(VectorOps.codesSchema))
-          .select(cols.map(col): _*))
-    }
+    def sibling(paths: Seq[String]) =
+      Tables.readAll(s, paths, Some(VectorOps.codesSchema)).select(cols: _*)
+    IndexFs.resolve(ix.ivfCodesCompact, Tables.read(s, ix.ivfCodes).select(cols: _*),
+      Seq(ensureDelta(s, dir, ix)))(p => sibling(Seq(p)), sibling)
   }
 
-  // IndexFs, not java.io.File (review r12): the split write path is
-  // reachable from the public facade (GraftAPI.annIndexSplit), whose
-  // `path` may be an object-store URI — same rule as buildAt's marker.
-  private def splitMarker(ix: Ix): String =
-    IndexFs.child(ix.root, "_split_SUCCESS")
-
-  /** Marker-disciplined rewrite of the cell-SPLIT side-tables (the ANN
-    * mirror of [[MinhashIndex.rewriteFine]]): `coarse_split` (cell, scid,
-    * scv — per-hot-cell residual sub-centroids) and `cells_split`
-    * (vec_id, cell, scid — the hot cells' vectors re-assigned to
-    * sub-cells, hive-partitioned by cell). Both land inside a COMMITTED
-    * index root, so their own `_split_SUCCESS` marker retires before the
-    * overwrite and recommits only after it — a crash mid-write reads as
-    * "no split" to [[ensureSplit]] and the probe, never as a
-    * trustworthy partial table. The main index `_SUCCESS` stays valid
-    * throughout: the split is additive; raw cell probes remain correct
-    * without it. */
+  /** Rewrite of the cell-SPLIT side-tables under their own marker
+    * ([[IndexFs.Split]]; the ANN mirror of [[MinhashIndex.rewriteFine]]):
+    * `coarse_split` (cell, scid, scv — per-hot-cell residual
+    * sub-centroids) and `cells_split` (vec_id, cell, scid — the hot
+    * cells' vectors re-assigned to sub-cells, hive-partitioned by cell).
+    * A crash mid-write reads as "no split" to [[ensureSplit]] and the
+    * probe. The root marker stays valid throughout: the split is
+    * additive; raw cell probes remain correct without it. */
   def rewriteSplit(s: SparkSession, dir: String, ix: Ix): Unit =
     rewriteSplitFrom(VectorOps.splitRowsFor(s, dir, ix), ix)
 
@@ -145,10 +133,11 @@ object IvfPqIndex {
     * ([[graft.ops.VectorOps.splitRowsOf]]). */
   def rewriteSplitFrom(frames: (DataFrame, DataFrame, DataFrame),
                        ix: Ix): Unit = synchronized {
+    IndexFs.build(ix.root, IndexFs.Split)(writeSplit(frames, ix))
+  }
+
+  private def writeSplit(frames: (DataFrame, DataFrame, DataFrame), ix: Ix): Unit = {
     val (he, cents, assign) = frames
-    val m = splitMarker(ix)
-    if (IndexFs.isFile(m)) require(IndexFs.delete(m),
-      s"could not retire the split marker under ${ix.root} before the rewrite")
     try {
       cents.select(col("g").as("cell"), col("cid").as("scid"),
           col("cv").as("scv"))
@@ -161,8 +150,6 @@ object IvfPqIndex {
         .write.mode("overwrite").partitionBy("pcell")
         .parquet(s"${ix.root}/cells_split")
     } finally { he.unpersist(); cents.unpersist(); () }
-    require(IndexFs.touch(m),
-      s"could not commit the split marker under ${ix.root}")
   }
 
   /** Build-once cell-split side-tables next to an index — the stored
@@ -172,20 +159,28 @@ object IvfPqIndex {
     * ran first or the probe built it lazily, the stored content is
     * byte-identical and every query stays a pure function of the corpus. */
   def ensureSplit(s: SparkSession, dir: String, ix: Ix): Unit = synchronized {
-    if (!IndexFs.isFile(splitMarker(ix))) rewriteSplit(s, dir, ix)
+    IndexFs.ensure(ix.root, IndexFs.Split)(writeSplit(VectorOps.splitRowsFor(s, dir, ix), ix))
   }
 
   /** The one-time registry build at the harness geometry (16 coarse
     * cells, PqM×PqSub subspaces, 2 Lloyd iterations — the point every
     * probe oracle reproduces). */
   private def build(s: SparkSession, dir: String, ix: Ix): Unit =
-    buildAt(s,
+    train(s,
       embeddings(s, dir)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("x")),
       ix, cells = 16, m = VectorOps.PqM, k = 16, iters = 2)
 
-  /** The index build core, parameterized for the public API
-    * ([[graft.api.GraftAPI.buildAnnIndex]]): 2-phase k-means coarse
+  /** The committed index (re)build for the public API
+    * ([[graft.api.GraftAPI.buildAnnIndex]]): [[train]] under the root
+    * marker ([[IndexFs.build]]), so a rebuild that fails reads as
+    * uncommitted instead of a valid marker over mixed-generation
+    * tables. */
+  private[graft] def buildAt(s: SparkSession, raw: DataFrame, ix: Ix,
+                             cells: Int, m: Int, k: Int, iters: Int): Unit =
+    IndexFs.build(ix.root)(train(s, raw, ix, cells, m, k, iters))
+
+  /** The index build body, parameterized: 2-phase k-means coarse
     * training, coarse assignment, raw-vector PQ train+encode, residual PQ
     * train+encode over an arbitrary (vec_id, x) frame. Every stage WRITES
     * its table and downstream stages READ it back — lineage is truncated
@@ -193,26 +188,14 @@ object IvfPqIndex {
     * build and a probe are different jobs). `sub` (subvector width) is
     * derived from the first row's dimensionality; callers validate
     * rectangularity upstream. */
-  private[graft] def buildAt(s: SparkSession, raw: DataFrame, ix: Ix,
-                             cells: Int, m: Int, k: Int, iters: Int): Unit = {
-    // The marker must genuinely commit LAST on a REBUILD too (the
-    // writeMinhashIndex rule, ADVICE r8 / review r10): retire any prior
-    // root _SUCCESS before the six-table overwrite starts, or a crash
-    // mid-rebuild leaves a valid-looking marker over a mixed-generation
-    // index (new centroids, old codes) that probes would silently serve.
-    // IndexFs, not java.io.File (review r10): buildAt also serves
-    // GraftAPI.buildAnnIndex, whose `path` may be an object-store URI.
-    val marker = IndexFs.child(ix.root, "_SUCCESS")
-    if (IndexFs.isFile(marker)) require(IndexFs.delete(marker),
-      s"could not retire the stale index marker under ${ix.root}")
+  private def train(s: SparkSession, raw: DataFrame, ix: Ix,
+                    cells: Int, m: Int, k: Int, iters: Int): Unit = {
     // An in-place REBUILD invalidates any committed cell split (review
     // r12): the side-tables reflect the OLD assignment, and the
-    // split-aware probe would silently serve them — retire the split
-    // marker so consumers fall back to whole-cell scans until the next
-    // maintenance run re-splits against the new index.
-    val stale = splitMarker(ix)
-    if (IndexFs.isFile(stale)) require(IndexFs.delete(stale),
-      s"could not retire the stale split marker under ${ix.root}")
+    // split-aware probe would silently serve them — consumers fall back
+    // to whole-cell scans until the next maintenance run re-splits
+    // against the new index.
+    IndexFs.retire(ix.root, IndexFs.Split)
     val e = raw.persist()
     try {
       val dim = e.select(size(col("x"))).head().getInt(0)
@@ -265,8 +248,6 @@ object IvfPqIndex {
       Artifacts.writeMeta(ix.root,
         "cells" -> cells.toString, "m" -> m.toString, "k" -> k.toString,
         "iters" -> iters.toString, "dim" -> dim.toString)
-      require(IndexFs.touch(marker),
-        s"could not commit index marker under ${ix.root}")
     } finally e.unpersist(false)
   }
 }

@@ -30,10 +30,15 @@ import org.apache.spark.sql.functions._
   *   <root>/bands_fine     hot-bucket full-signature sub-keys over the
   *                         RESOLVED postings (base ∪ delta).
   *
+  * Every table commits through [[IndexFs]]: the root marker after
+  * `bands` and the geometry manifest, each sibling's own table marker,
+  * and the fine marker over `bands_fine`.
+  *
   * Probes never read `bands` alone: [[resolvedPostings]] is the catalog
   * swap VERDICT r12 #1 demanded — committed compact if present, else
-  * base ∪ (ensured) delta — so an appended document is visible to the
-  * very next probe, compact is a pure layout optimization, and because
+  * base ∪ (ensured) delta, the [[IndexFs.resolve]] rule — so an
+  * appended document is visible to the very next probe, compact is a
+  * pure layout optimization, and because
   * the delta is ensured deterministically the resolved content is ALWAYS
   * the postings of docs < AppendCutoff: every query stays a pure function
   * of the corpus regardless of maintenance-op order.
@@ -52,14 +57,12 @@ object MinhashIndex {
     def fine: String = s"$root/bands_fine"
   }
 
-  /** Full-corpus band index, build-if-absent. Idempotent and crash-safe:
-    * the root `_SUCCESS` marker is touched only after the table has
-    * committed, so a partial build is rebuilt from scratch. Synchronized:
-    * parallel suites in one JVM must not race the build. */
+  /** Full-corpus band index, built once under the root marker
+    * ([[IndexFs.ensure]]). Synchronized: parallel suites in one JVM must
+    * not race the build. */
   def ensure(s: SparkSession, dir: String): Ix = synchronized {
     val ix = Ix(Artifacts.root("mhix_v1", dir, "documents.parquet"))
-    if (!new java.io.File(ix.root, "_SUCCESS").isFile)
-      buildAt(DedupOps.postingRows(s, dir), ix)
+    IndexFs.ensure(ix.root)(buildAt(DedupOps.postingRows(s, dir), ix))
     ix
   }
 
@@ -73,9 +76,8 @@ object MinhashIndex {
     * not the base alone). */
   def ensureBase(s: SparkSession, dir: String): Ix = synchronized {
     val ix = Ix(Artifacts.root("mhix_v2_base", dir, "documents.parquet"))
-    if (!new java.io.File(ix.root, "_SUCCESS").isFile)
-      buildAt(DedupOps.postingRows(s, dir,
-        col("doc_id") < DedupOps.IncrementalCutoff), ix)
+    IndexFs.ensure(ix.root)(buildAt(DedupOps.postingRows(s, dir,
+      col("doc_id") < DedupOps.IncrementalCutoff), ix))
     ix
   }
 
@@ -84,8 +86,8 @@ object MinhashIndex {
     * and landed next to the base postings — the write core of
     * `dedup_index_append` (which ALWAYS rewrites: the bench window must
     * measure an append, and the deterministic banding makes the rewrite
-    * byte-stable). Spark's own `bands_delta/_SUCCESS` commits last, so a
-    * crashed write reads as "no delta" to [[ensureDelta]]. */
+    * byte-stable). A crashed write reads as "no delta" to
+    * [[ensureDelta]]. */
   def writeDelta(s: SparkSession, dir: String, ix: Ix): Unit = {
     DedupOps.postingRows(s, dir, col("doc_id") >= DedupOps.IncrementalCutoff &&
         col("doc_id") < DedupOps.AppendCutoff)
@@ -99,19 +101,14 @@ object MinhashIndex {
     * every PROBE so the resolved postings are a pure function of the
     * corpus whether or not the append job ran first. */
   def ensureDelta(s: SparkSession, dir: String, ix: Ix): String = synchronized {
-    if (!new java.io.File(ix.delta, "_SUCCESS").isFile) writeDelta(s, dir, ix)
+    IndexFs.ensure(ix.delta)(writeDelta(s, dir, ix))
     ix.delta
   }
 
-  /** The PROBE-ROOT RESOLVER (VERDICT r12 #1) — the "catalog-metadata
-    * swap" `dedup_index_compact` narrates, implemented: every probe of
-    * the base-family index reads
-    *
-    *   1. the committed `bands_compact` when present (post-OPTIMIZE:
-    *      one table scan), else
-    *   2. `bands` ∪ the (ensured) `bands_delta`.
-    *
-    * Both resolve to the SAME content — the postings of docs <
+  /** The probed postings of the base-family index ([[IndexFs.resolve]]
+    * over the committed `bands_compact`, else `bands` ∪ the ensured
+    * `bands_delta`) — the "catalog-metadata swap" `dedup_index_compact`
+    * narrates. Both resolve to the SAME content — the postings of docs <
     * [[DedupOps.AppendCutoff]] — because the delta is ensured
     * deterministically and the compact is their deterministic merge, so
     * probe output is byte-identical before and after a compact
@@ -120,24 +117,16 @@ object MinhashIndex {
     * snapshot id → table set); the local form keeps the contract
     * testable. */
   def resolvedPostings(s: SparkSession, dir: String, ix: Ix): DataFrame = {
-    val cols = Seq("doc_id", "band", "band_key")
+    val cols = Seq("doc_id", "band", "band_key").map(col)
     // Declared schema on the sibling reads (not inference): a corpus
     // whose delta slice is empty writes a data-file-less partitioned
     // table, and inference on it throws — an empty delta must resolve
     // to "base alone", not crash the probe.
-    if (new java.io.File(ix.compact, "_SUCCESS").isFile)
-      Tables.read(s, ix.compact, Some(DedupOps.bandsSchema))
-        .select(cols.map(col): _*)
-    else {
-      val delta = ensureDelta(s, dir, ix)
-      Tables.read(s, ix.bands).select(cols.map(col): _*)
-        .unionByName(Tables.read(s, delta, Some(DedupOps.bandsSchema))
-          .select(cols.map(col): _*))
-    }
+    def sibling(paths: Seq[String]) =
+      Tables.readAll(s, paths, Some(DedupOps.bandsSchema)).select(cols: _*)
+    IndexFs.resolve(ix.compact, Tables.read(s, ix.bands).select(cols: _*),
+      Seq(ensureDelta(s, dir, ix)))(p => sibling(Seq(p)), sibling)
   }
-
-  private def fineMarker(ix: Ix): java.io.File =
-    new java.io.File(ix.root, "_fine_SUCCESS")
 
   /** Declared schema of a FACADE `bands_fine` side-table
     * ([[graft.api.GraftAPI.writeMinhashIndex]]'s layout: `_id` instead
@@ -154,24 +143,19 @@ object MinhashIndex {
         org.apache.spark.sql.types.StringType),
       postings("pband")))
 
-  /** Marker-disciplined rewrite of the `bands_fine` side-table (ADVICE
-    * r11): the table lands inside a COMMITTED index root, so its own
-    * `_fine_SUCCESS` marker retires before the overwrite and recommits
-    * only after it — a crash mid-write reads as "no fine table" to
-    * every consumer ([[ensureFine]], the incremental probe), never as a
-    * trustworthy partial one. The main index `_SUCCESS` stays valid
-    * throughout: the fine table is additive, and the raw postings
-    * remain correct without it. */
+  /** Rewrite of the `bands_fine` side-table under its own marker
+    * ([[IndexFs.Fine]]): a crash mid-write reads as "no fine table" to
+    * every consumer ([[ensureFine]], the incremental probe). The root
+    * marker stays valid throughout: the fine table is additive, and the
+    * raw postings remain correct without it. */
   def rewriteFine(fine: DataFrame, ix: Ix): Unit = synchronized {
-    val m = fineMarker(ix)
-    if (m.isFile) require(m.delete(),
-      s"could not retire the fine marker under ${ix.root} before the rewrite")
+    IndexFs.build(ix.root, IndexFs.Fine)(writeFine(fine, ix))
+  }
+
+  private def writeFine(fine: DataFrame, ix: Ix): Unit =
     fine.repartition(col("pband"))
       .write.mode("overwrite").partitionBy("pband")
       .parquet(ix.fine)
-    require(m.createNewFile() || m.isFile,
-      s"could not commit the fine marker under ${ix.root}")
-  }
 
   /** Build-once `bands_fine` next to an index — the stored side of the
     * hot-bucket fine probe ([[graft.ops.DedupOps.dedupIncremental]]):
@@ -180,18 +164,18 @@ object MinhashIndex {
     * (base ∪ delta — r13: a bucket pushed over the hot threshold by
     * appended documents must probe fine, and an appended member's
     * sub_key must be probe-visible; only the hot docs' text is
-    * re-signed). Returns the table path; absent or uncommitted (no
-    * `_fine_SUCCESS`) tables rebuild. */
+    * re-signed). Returns the table path; an uncommitted table
+    * rebuilds. */
   def ensureFine(s: SparkSession, dir: String, ix: Ix): String = synchronized {
-    if (!fineMarker(ix).isFile)
-      rewriteFine(DedupOps.fineRowsFor(s, dir,
-        resolvedPostings(s, dir, ix)), ix)
+    IndexFs.ensure(ix.root, IndexFs.Fine)(writeFine(DedupOps.fineRowsFor(s, dir,
+      resolvedPostings(s, dir, ix)), ix))
     ix.fine
   }
 
-  /** One file per band via the repartition; `band` is duplicated as the
-    * partition column `pband` so the data column keeps its exact
-    * IntegerType (partition-value inference would re-derive it). */
+  /** The build body under the root marker. One file per band via the
+    * repartition; `band` is duplicated as the partition column `pband` so
+    * the data column keeps its exact IntegerType (partition-value
+    * inference would re-derive it). */
   private def buildAt(bands: DataFrame, ix: Ix): Unit = {
     bands
       .withColumn("pband", col("band"))
@@ -200,8 +184,5 @@ object MinhashIndex {
     Artifacts.writeMeta(ix.root,
       "numHashes" -> DedupOps.NumHashes.toString,
       "bands" -> DedupOps.NumBands.toString)
-    require(new java.io.File(ix.root, "_SUCCESS").createNewFile() ||
-      new java.io.File(ix.root, "_SUCCESS").isFile,
-      s"could not commit index marker under ${ix.root}")
   }
 }

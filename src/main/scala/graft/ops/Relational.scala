@@ -761,42 +761,39 @@ object Relational {
       // Membership is recorded only AFTER the seed (or a pre-existing
       // marker) is confirmed (ADVICE r12): adding the key up front meant
       // a thrown seed (transient Derby error, disk full) left the key in
-      // the set with no _SUCCESS on disk, so every later call in the JVM
-      // skipped re-seeding and failed against the absent/partial db.jar
-      // until restart.
+      // the set with no commit marker on disk, so every later call in the
+      // JVM skipped re-seeding and failed against the absent/partial
+      // db.jar until restart.
       val seedKey = s"${System.identityHashCode(s)}:$root"
       if (!jdbcScanSeeded.contains(seedKey)) {
-        if (!new java.io.File(root, "_SUCCESS").isFile) {
-        JdbcSink.dropIfExists(url, "orders_t")
-        JdbcSink.ensureTable(url, "orders_t",
-          """"o_orderkey" BIGINT, "o_custkey" BIGINT,
-            |"o_orderstatus" VARCHAR(8), "o_totalprice" DOUBLE""".stripMargin)
-        // Driver-local seed (not the distributed append writer): on a
-        // multi-JVM master the executors' insert tasks each boot the
-        // embedded engine and fail XSDB6; seeding is setup, not the
-        // measured product.
-        JdbcSink.seedLocal(src, url, "orders_t")
-        // Index the partition column (review r12, measured): without
-        // it each of the 4 bounded partition queries full-scans the
-        // table — 4x the pages for one logical pass; a real migration
-        // source has its PK indexed, so the stand-in should too.
-        JdbcSink.createIndex(url, "orders_t", "o_orderkey")
-        // Multi-JVM seam (r12, found on the local-cluster sweep): a
-        // read-WRITE embedded-Derby boot is exclusive per JVM (db.lck),
-        // so two executor JVMs' concurrent partition readers failed
-        // XSDB6. Shut the seeded database down and package it as
-        // Derby's read-only database-in-a-jar: jar boots take no lock
-        // and are concurrently bootable from any number of executor
-        // JVMs — the embedded stand-in then behaves like the real
-        // server it stands in for. (A chmod read-only mark was tried
-        // first and is silently bypassed when the process runs as
-        // root.)
-        JdbcSink.shutdownDb(url)
-        JdbcSink.packageDb(new java.io.File(s"$root/db"),
-          new java.io.File(s"$root/db.jar"))
-        require(new java.io.File(root, "_SUCCESS").createNewFile() ||
-          new java.io.File(root, "_SUCCESS").isFile,
-          s"could not commit the derby seed marker under $root")
+        IndexFs.ensure(root) {
+          JdbcSink.dropIfExists(url, "orders_t")
+          JdbcSink.ensureTable(url, "orders_t",
+            """"o_orderkey" BIGINT, "o_custkey" BIGINT,
+              |"o_orderstatus" VARCHAR(8), "o_totalprice" DOUBLE""".stripMargin)
+          // Driver-local seed (not the distributed append writer): on a
+          // multi-JVM master the executors' insert tasks each boot the
+          // embedded engine and fail XSDB6; seeding is setup, not the
+          // measured product.
+          JdbcSink.seedLocal(src, url, "orders_t")
+          // Index the partition column (review r12, measured): without
+          // it each of the 4 bounded partition queries full-scans the
+          // table — 4x the pages for one logical pass; a real migration
+          // source has its PK indexed, so the stand-in should too.
+          JdbcSink.createIndex(url, "orders_t", "o_orderkey")
+          // Multi-JVM seam (r12, found on the local-cluster sweep): a
+          // read-WRITE embedded-Derby boot is exclusive per JVM (db.lck),
+          // so two executor JVMs' concurrent partition readers failed
+          // XSDB6. Shut the seeded database down and package it as
+          // Derby's read-only database-in-a-jar: jar boots take no lock
+          // and are concurrently bootable from any number of executor
+          // JVMs — the embedded stand-in then behaves like the real
+          // server it stands in for. (A chmod read-only mark was tried
+          // first and is silently bypassed when the process runs as
+          // root.)
+          JdbcSink.shutdownDb(url)
+          JdbcSink.packageDb(new java.io.File(s"$root/db"),
+            new java.io.File(s"$root/db.jar"))
         }
         jdbcScanSeeded.add(seedKey)
         ()
@@ -839,12 +836,12 @@ object Relational {
   /** Layout artifacts (sorted/Z-ordered/partitioned tables) are
     * WRITE-ONCE: pay the shuffle+sort at write time, amortize across
     * every subsequent query — the same contract as [[joinBucketed]]'s
-    * bucketed tables. Guarded by an in-JVM set AND the `_SUCCESS` marker
-    * (a previous process may have written it); bump the version suffix in
+    * bucketed tables. Guarded by an in-JVM set AND the table's commit
+    * marker ([[IndexFs.ensure]]; a previous process may have written it); bump the version suffix in
     * the path when the layout recipe changes. Hardened r10 (review):
     * (a) paths come from [[Artifacts.root]], so they carry the SOURCE
     * table's (mtime, length) fingerprint — a regenerated corpus gets a
-    * fresh path instead of a stale `_SUCCESS` silently serving old rows
+    * fresh path instead of a stale marker silently serving old rows
     * while the oracle reads the new table (the same scheme the
     * ANN/MinHash index artifacts already use); (b) the in-JVM mark lands
     * only AFTER the write completes — a crashed write used to leave the
@@ -856,7 +853,7 @@ object Relational {
   private def writeOnce(path: String)(write: => Unit): Unit =
     layoutWritten.synchronized {
       if (!layoutWritten.contains(path)) {
-        if (!new java.io.File(path, "_SUCCESS").isFile) write
+        IndexFs.ensure(path)(write)
         layoutWritten.add(path) // reached only after a committed write
       }
     }

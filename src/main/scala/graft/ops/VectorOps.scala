@@ -1046,9 +1046,9 @@ object VectorOps {
 
   /** Build-once scratch "live" layout for [[annIndexDelete]]: the stored
     * IVFADC codes re-partitioned by cell, the table a production delete
-    * mutates in place. Guarded by Spark's own root `_SUCCESS` (commits
-    * last); synchronized against parallel suites. Returns (live path,
-    * pristine source frame) — each bench draw's pruned rewrite reads the
+    * mutates in place. Built once ([[IndexFs.ensure]]); synchronized
+    * against parallel suites. Returns (live path, pristine source
+    * frame) — each bench draw's pruned rewrite reads the
     * pristine frame, so untouched cell directories are written exactly
     * once, here. */
   private def ensureLiveCodes(s: SparkSession, dir: String): (String, DataFrame) =
@@ -1056,10 +1056,9 @@ object VectorOps {
       val ix = IvfPqIndex.ensure(s, dir)
       val live = s"${ix.root}/ivfpq_codes_live"
       val pristine = Tables.read(s, ix.ivfCodes).drop("pcell")
-      if (!new java.io.File(live, "_SUCCESS").isFile)
-        pristine.withColumn("pcell", col("cell"))
-          .repartition(col("pcell"))
-          .write.mode("overwrite").partitionBy("pcell").parquet(live)
+      IndexFs.ensure(live)(pristine.withColumn("pcell", col("cell"))
+        .repartition(col("pcell"))
+        .write.mode("overwrite").partitionBy("pcell").parquet(live))
       (live, pristine)
     }
 
@@ -1246,8 +1245,7 @@ object VectorOps {
     // Ensure the delta landed WITHOUT re-running the append when its
     // committed table already exists (VERDICT r11 "what's wrong" #3: the
     // in-window append replay made the compact's bench number carry an
-    // append's work). Spark's own _SUCCESS commits last, so a crashed
-    // append re-runs; a committed one is byte-stable (deterministic
+    // append's work). A committed delta is byte-stable (deterministic
     // codebooks) and is exactly what a re-append would rewrite.
     IvfPqIndex.ensureDelta(s, dir, ix)
     val merged = Tables.read(s, ix.ivfCodes)

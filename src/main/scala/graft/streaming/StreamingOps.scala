@@ -198,12 +198,7 @@ object StreamingOps {
                              id: String, text: String,
                              numHashes: Int = 128, bands: Int = 16)
                             (batch: DataFrame, batchId: Long): Unit = {
-    val s = batch.sparkSession
-    // geometry guard: a probe banded differently from the stored index
-    // would return silently wrong flags; the manifest makes it loud
-    Option(new java.io.File(indexBandsPath).getParent).foreach(root =>
-      graft.ops.Artifacts.requireGeometry(root,
-        "numHashes" -> numHashes.toString, "bands" -> bands.toString))
+    requireBanding(indexBandsPath, numHashes, bands)
     val hits = fineUnionHits(indexBandsPath, batch, id, text,
       numHashes, bands).withColumn("is_dup", lit(true))
     val flags = batch.select(id).distinct()
@@ -212,26 +207,41 @@ object StreamingOps {
     idempotentBatchWriter(outPath)(flags, batchId)
   }
 
-  /** Streaming incremental-curation verdict against the STORED base
-    * artifacts — the `foreachBatch` twin of the registry's
-    * `curation_incremental` (L18d), for the steady-state ingest where
-    * documents arrive as a stream: each micro-batch gets quality /
-    * exact-dup / near-dup / decontamination signals and the
-    * first-failing-stage verdict, probing
-    *
-    *   - `baseFpsPath`: the base corpus's distinct text fingerprints
-    *     (one `fp` column; tiny, broadcast),
-    *   - `indexBandsPath`: the persisted base MinHash postings (same
-    *     table [[dedupBatchAgainstIndex]] probes; geometry-guarded),
-    *   - `evalShinglesPath`: the eval slice's shingle set (one `x`
-    *     column; broadcast).
-    *
-    * Only the micro-batch tokenizes/shingles/signs; the stored side is
-    * fixed-width scalar tables — per-batch cost O(batch), the corpus
-    * never re-read. Results land through the idempotent
-    * partition-per-batch sink (at-least-once replay ×
-    * [[idempotentBatchWriter]] = exactly-once verdicts). StreamingSpec
-    * pins stream == the one-shot registry op on the same batch. */
+  /** Geometry guard: a probe banded differently from the stored index
+    * would return silently wrong flags; the index manifest makes it loud.
+    * The root resolves through [[graft.ops.IndexFs]], so object-store
+    * paths keep their scheme. */
+  private def requireBanding(indexBandsPath: String, numHashes: Int, bands: Int): Unit =
+    graft.ops.Artifacts.requireGeometry(graft.ops.IndexFs.parent(indexBandsPath),
+      "numHashes" -> numHashes.toString, "bands" -> bands.toString)
+
+  /** Resolved facade postings KEYS (band, band_key) — the streaming face
+    * of [[graft.ops.MinhashIndex.resolvedPostings]] (r13, VERDICT r12
+    * #1): [[graft.ops.IndexFs.resolve]] over the committed
+    * `bands_compact` sibling, else `bands` ∪ every committed
+    * `bands_delta/batch=<k>` generation
+    * ([[graft.api.GraftAPI.minhashIndexAppend]]'s layout). A facade index
+    * with no lifecycle siblings resolves to `bands` alone, byte-identical
+    * to the pre-r13 probe. Artifacts bind per micro-batch (read inside
+    * foreachBatch), so an append/compact is picked up at the next batch
+    * boundary, not mid-query. `baseDf` arrives from the caller, which
+    * already opened the base table — one footer-listing pass per
+    * micro-batch, not three (review r13). The delta generations read
+    * through a declared schema (the bandsSchema rule): an appended EMPTY
+    * batch commits a data-file-less generation, and inference over
+    * generations that are ALL data-file-less throws. */
+  private def resolvedFacadeKeys(s: org.apache.spark.sql.SparkSession,
+                                 indexBandsPath: String,
+                                 baseDf: DataFrame): DataFrame = {
+    val root = graft.ops.IndexFs.parent(indexBandsPath)
+    graft.ops.IndexFs.resolve(graft.ops.IndexFs.child(root, "bands_compact"),
+      baseDf.select("band", "band_key"),
+      graft.ops.IndexFs.committedGenerations(graft.ops.IndexFs.child(root, "bands_delta")))(
+      Tables.read(s, _).select("band", "band_key"),
+      Tables.readAll(s, _, Some(graft.ops.MinhashIndex.facadeFineSchema(baseDf.schema)))
+        .select("band", "band_key"))
+  }
+
   /** Distinct batch ids whose band keys hit the stored postings under
     * the FINE-UNION probe (r12, the streaming mirror of the batch
     * `dedup_incremental`): cold buckets (< the index's recorded
@@ -241,45 +251,6 @@ object StreamingOps {
     * grazes it. An index built before the fine table existed (no
     * `hotSize` in its meta) degrades to the coarse raw probe for every
     * bucket — old indexes keep their old semantics until rebuilt. */
-  /** Resolved facade postings KEYS (band, band_key) — the streaming face
-    * of [[graft.ops.MinhashIndex.resolvedPostings]] (r13, VERDICT r12
-    * #1): committed `bands_compact` sibling when present, else `bands` ∪
-    * every COMMITTED `bands_delta/batch=<k>` generation
-    * ([[graft.api.GraftAPI.minhashIndexAppend]]'s layout — each append is
-    * its own subdirectory whose Spark `_SUCCESS` commits last, so a
-    * crashed append is invisible rather than half-read). A facade index
-    * with no lifecycle siblings resolves to `bands` alone, byte-identical
-    * to the pre-r13 probe. Artifacts bind per micro-batch (read inside
-    * foreachBatch), so an append/compact is picked up at the next batch
-    * boundary, not mid-query. */
-  private def resolvedFacadeKeys(s: org.apache.spark.sql.SparkSession,
-                                 indexBandsPath: String,
-                                 baseDf: DataFrame): DataFrame = {
-    val root = graft.ops.IndexFs.parent(indexBandsPath)
-    val compact = graft.ops.IndexFs.child(root, "bands_compact")
-    if (graft.ops.IndexFs.isFile(graft.ops.IndexFs.child(compact, "_SUCCESS")))
-      Tables.read(s, compact).select("band", "band_key")
-    else {
-      // `baseDf` arrives from the caller, which already opened the base
-      // table — one footer-listing pass per micro-batch, not three
-      // (review r13; object-store roots pay a LIST + footer fetch each).
-      val base = baseDf.select("band", "band_key")
-      val deltas = graft.ops.IndexFs
-        .listDirs(graft.ops.IndexFs.child(root, "bands_delta"))
-        .filter(d => graft.ops.IndexFs.isFile(
-          graft.ops.IndexFs.child(d, "_SUCCESS")))
-      if (deltas.isEmpty) base
-      // Declared schema (the bandsSchema rule, review r13): an appended
-      // EMPTY batch commits a data-file-less generation, and inference
-      // over a set of generations that are ALL data-file-less throws —
-      // the resolver must serve base alone, not fail the micro-batch.
-      // The delta layout coincides with the fine side-table's.
-      else base.unionByName(
-        Tables.readAll(s, deltas, Some(graft.ops.MinhashIndex.facadeFineSchema(baseDf.schema)))
-          .select("band", "band_key"))
-    }
-  }
-
   private def fineUnionHits(indexBandsPath: String, batch: DataFrame,
                             id: String, text: String,
                             numHashes: Int, bands: Int): DataFrame = {
@@ -318,6 +289,26 @@ object StreamingOps {
     }).distinct()
   }
 
+  /** Streaming incremental-curation verdict against the STORED base
+    * artifacts — the `foreachBatch` twin of the registry's
+    * `curation_incremental` (L18d), for the steady-state ingest where
+    * documents arrive as a stream: each micro-batch gets quality /
+    * exact-dup / near-dup / decontamination signals and the
+    * first-failing-stage verdict, probing
+    *
+    *   - `baseFpsPath`: the base corpus's distinct text fingerprints
+    *     (one `fp` column; tiny, broadcast),
+    *   - `indexBandsPath`: the persisted base MinHash postings (same
+    *     table [[dedupBatchAgainstIndex]] probes; geometry-guarded),
+    *   - `evalShinglesPath`: the eval slice's shingle set (one `x`
+    *     column; broadcast).
+    *
+    * Only the micro-batch tokenizes/shingles/signs; the stored side is
+    * fixed-width scalar tables — per-batch cost O(batch), the corpus
+    * never re-read. Results land through the idempotent
+    * partition-per-batch sink (at-least-once replay ×
+    * [[idempotentBatchWriter]] = exactly-once verdicts). StreamingSpec
+    * pins stream == the one-shot registry op on the same batch. */
   def curationVerdictBatch(indexBandsPath: String, baseFpsPath: String,
                            evalShinglesPath: String, outPath: String,
                            id: String, text: String, nChars: String,
@@ -326,9 +317,7 @@ object StreamingOps {
                            maxRep: Double = 2.5, contamMin: Double = 0.3)
                           (batch: DataFrame, batchId: Long): Unit = {
     val s = batch.sparkSession
-    Option(new java.io.File(indexBandsPath).getParent).foreach(root =>
-      graft.ops.Artifacts.requireGeometry(root,
-        "numHashes" -> numHashes.toString, "bands" -> bands.toString))
+    requireBanding(indexBandsPath, numHashes, bands)
     val toks = split(col(text), " ")
     val qOk = col(nChars) >= minChars && col(nChars) <= maxChars &&
       size(toks).cast("double") / size(array_distinct(toks)) <= maxRep
@@ -377,7 +366,7 @@ object StreamingOps {
     * assigned cell, or — when the index root carries a committed cell
     * split (r12) — that cell's nearest sub-cells, which is approximate
     * at the cell level exactly like narrowing nprobe (pool ≥ k enforced
-    * via whole-cell fallback; retire `_split_SUCCESS` to restore
+    * via whole-cell fallback; retiring the split marker restores
     * whole-cell pools). Index and corpus frames are bound per batch
     * (read inside foreachBatch), so a re-trained/compacted/re-split
     * index is picked up at the next batch boundary, not mid-query. */
@@ -400,16 +389,12 @@ object StreamingOps {
       // whose held-out slice is empty commits a data-file-less delta,
       // and inference on it would fail every micro-batch — the resolver
       // must serve the cells table alone, not crash the probe.
-      def m0(path: String) = Tables.read(s, path, Some(graft.ops.VectorOps.codesSchema))
+      def m0(paths: Seq[String]) = Tables.readAll(s, paths, Some(graft.ops.VectorOps.codesSchema))
         .filter(col("m") === 0).select("vec_id", "cell")
-      val compact = graft.ops.IndexFs.child(indexRoot, "ivfpq_codes_compact")
       val delta = graft.ops.IndexFs.child(indexRoot, "ivfpq_codes_delta")
-      if (graft.ops.IndexFs.isFile(
-          graft.ops.IndexFs.child(compact, "_SUCCESS"))) m0(compact)
-      else if (graft.ops.IndexFs.isFile(
-          graft.ops.IndexFs.child(delta, "_SUCCESS")))
-        Tables.read(s, s"$indexRoot/cells").unionByName(m0(delta))
-      else Tables.read(s, s"$indexRoot/cells")
+      graft.ops.IndexFs.resolve(graft.ops.IndexFs.child(indexRoot, "ivfpq_codes_compact"),
+        Tables.read(s, s"$indexRoot/cells"),
+        Seq(delta).filter(graft.ops.IndexFs.committed(_)))(p => m0(Seq(p)), m0)
     }
     def dot2(a: Column, b: Column) = graft.functions.VectorFunctions.graftDot(a, b)
     val q = batch.select(col(qId).as("query_id"),
@@ -440,15 +425,14 @@ object StreamingOps {
       .select(col("vec_id").as("query_id"), col("cell").as("qcell"))
     val qfull = broadcast(q.join(qa, "query_id"))
     // Split-aware candidate pool (r12): when the index root carries a
-    // COMMITTED cell split (`_split_SUCCESS` — artifacts bind per batch,
-    // like a compacted/re-trained index), a query landing in a split
+    // COMMITTED cell split (artifacts bind per batch, like a
+    // compacted/re-trained index), a query landing in a split
     // cell scans only its nearest sub-cells instead of max_cell
     // vectors, with the same per-query pool >= k floor the batch probe
     // enforces (whole-cell fallback). Unsplit indexes and unsplit cells
     // keep the exact pre-split pool.
     val cand: DataFrame =
-      if (!graft.ops.IndexFs.isFile(
-          graft.ops.IndexFs.child(indexRoot, "_split_SUCCESS"))) {
+      if (!graft.ops.IndexFs.committed(indexRoot, graft.ops.IndexFs.Split)) {
         cells.join(qfull, col("cell") === col("qcell"))
           .select(col("query_id"), col("qx"), col("vec_id"))
       } else {

@@ -283,6 +283,49 @@ class ApiSpec extends AnyFunSuite {
     assert(got.sameElements(want))
   }
 
+  test("triangleCounts plans one scan of a parquet edge table: the normalized edges are derived once, not per join branch") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    val sq = spark; import sq.implicits._
+    // the 1-2-3 triangle with a duplicate, a reversed copy and a self loop,
+    // plus the 3-4 tail that closes nothing
+    val dir = java.nio.file.Files.createTempDirectory("graft_tri_edges").toString
+    val path = s"$dir/edges.parquet"
+    Seq((1L, 2L), (2L, 3L), (3L, 1L), (2L, 1L), (1L, 2L), (3L, 3L), (3L, 4L))
+      .toDF("u", "v").write.parquet(path)
+    // Scans of `path` in a run's physical plan as planned, before AQE
+    // reuses identical exchange stages (graft.ScanAudit's count): three
+    // join branches that each re-derive the edges plan three scans, three
+    // normalizing aggregates and three exchanges.
+    def scansOf(p: SparkPlan): Int = p match {
+      case a: AdaptiveSparkPlanExec => scansOf(a.inputPlan)
+      case f: FileSourceScanExec =>
+        if (f.relation.location.rootPaths.exists(_.toString.contains(dir))) 1 else 0
+      case other => (other.children ++ other.subqueries).map(scansOf).sum
+    }
+    val runs = scala.collection.mutable.ArrayBuffer.empty[(String, Int)]
+    def seen = runs.synchronized(runs.toList)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        runs.synchronized { runs += funcName -> scansOf(qe.executedPlan); () }
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val got = try {
+      val out = GraftAPI.triangleCounts(spark.read.parquet(path), "u", "v")
+        .orderBy("vertex").collect().map(r => (r.getLong(0), r.getLong(1)))
+      // listener events arrive asynchronously; the collect's comes last
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.exists(_._1 == "collect") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      out
+    } finally spark.listenerManager.unregister(listener)
+    assert(got.sameElements(Seq((1L, 1L), (2L, 1L), (3L, 1L))), got.toSeq)
+    val perRun = seen
+    assert(perRun.exists(_._1 == "collect"), s"no collect event: $perRun")
+    assert(perRun.map(_._2).sum == 1, s"edge table scans per query run: $perRun")
+  }
+
   test("lexicalDiversity == TextOps.textLexicalDiversity") {
     val got = GraftAPI.lexicalDiversity(renamedDocs, "k", "body")
       .orderBy("k").collect()
@@ -936,6 +979,40 @@ class ApiSpec extends AnyFunSuite {
     val manifest3 = GraftAPI.minhashIndexCompact(spark, s"$root/bands").collect()
     assert(manifest3.map(_.toString).sorted.sameElements(
       manifest2.map(_.toString).sorted))
+  }
+
+  test("an append generation without its commit marker is invisible: the probe skips it and the compact folds only committed batches") {
+    val sq = spark; import sq.implicits._
+    def text(tag: String) = (1 to 40).map(i => s"$tag$i").mkString(" ")
+    val base = (0L to 20L).map(id => (id, text(s"g${id}w")))
+    val root = java.nio.file.Files.createTempDirectory("graft_mh_gen").toString
+    GraftAPI.writeMinhashIndex(base.toDF("doc_id", "text"), "doc_id", "text",
+      root, numHashes = 8, bands = 2, batchWidth = 250).collect()
+    val batch1 = Seq((300L, text("b1x")), (301L, text("b1y")))
+    GraftAPI.minhashIndexAppend(spark, s"$root/bands", batch1.toDF("doc_id", "text"),
+      "doc_id", "text", batchId = 1L, numHashes = 8, bands = 2).collect()
+    // a crashed append of batch 2: its rows landed, its marker did not
+    GraftAPI.minhashIndexAppend(spark, s"$root/bands",
+      Seq((302L, text("b2z"))).toDF("doc_id", "text"),
+      "doc_id", "text", batchId = 2L, numHashes = 8, bands = 2).collect()
+    assert(new java.io.File(s"$root/bands_delta/batch=2", "_SUCCESS").delete())
+    val out = "/tmp/graft_mh_gen_probe"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+    graft.streaming.StreamingOps.dedupBatchAgainstIndex(s"$root/bands", out,
+      "doc_id", "text", numHashes = 8, bands = 2)(
+      Seq((900L, text("b1x")), (901L, text("b2z"))).toDF("doc_id", "text"), 0L)
+    val flags = spark.read.parquet(out).collect()
+      .map(r => r.getAs[Long]("doc_id") -> r.getAs[Boolean]("is_dup")).toMap
+    assert(flags(900L), "a dup of a committed batch-1 doc must flag")
+    assert(!flags(901L), "a dup of the uncommitted batch-2 doc must not flag")
+    val manifest = GraftAPI.minhashIndexCompact(spark, s"$root/bands").collect()
+    assert(manifest.length == 2)
+    manifest.foreach { r =>
+      assert(r.getAs[Long]("n_postings") == base.size + batch1.size,
+        s"the compact must fold base + batch 1 only: $r")
+    }
+    assert(spark.read.parquet(s"$root/bands").filter($"_id" === 302L).isEmpty,
+      "the uncommitted generation must not be folded")
   }
 
   test("minhashIndexDelete refuses while a committed bands_compact sibling exists (review r13)") {

@@ -143,6 +143,17 @@ class InventorySpec extends AnyFunSuite {
       s"scratch paths must go through Artifacts.scratch, spelled in: $hits")
   }
 
+  test("IndexFs holds the commit protocol: marker names are spelled only in IndexFs.scala") {
+    val markers = Seq("\"_SUCCESS\"", "\"_fine_SUCCESS\"", "\"_split_SUCCESS\"")
+    // the detector itself: a marker in code is caught, one in a comment is not
+    val controls = Seq("A.scala" -> codeOnly("new java.io.File(root, \"_fine_SUCCESS\").isFile"),
+      "B.scala" -> codeOnly("/** the \"_SUCCESS\" marker */\n// \"_split_SUCCESS\"\nval r = 1"))
+    assert(markers.flatMap(filesWith(_, controls)).distinct == Seq("A.scala"))
+    val hits = markers.flatMap(filesWith(_, mainSources)).distinct
+    assert(hits.map(java.nio.file.Paths.get(_).getFileName.toString) == Seq("IndexFs.scala"),
+      s"commit markers must go through IndexFs, spelled in: ${hits.sorted}")
+  }
+
   test("GraftSession holds the only SparkSession builder under src/main and src/test") {
     // spelled in parts: this file is scanned too
     val builderCall = Seq("SparkSession", "builder").mkString(".")

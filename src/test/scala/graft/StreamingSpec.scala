@@ -663,6 +663,14 @@ class StreamingSpec extends AnyFunSuite {
         "/tmp/graft_geom_out", "doc_id", "text")(batch, 0L)
     }
     assert(e.getMessage.contains("numHashes=8"), e.getMessage)
+    // the curation verdict guards the same index root; the guard runs
+    // before any side table is read, so their paths are never opened
+    val eCur = intercept[IllegalArgumentException] {
+      StreamingOps.curationVerdictBatch(s"$mhRoot/bands", "/tmp/graft_geom_fps",
+        "/tmp/graft_geom_eval", "/tmp/graft_geom_cur_out", "doc_id", "text",
+        "n_chars")(batch, 0L)
+    }
+    assert(eCur.getMessage.contains("numHashes=8"), eCur.getMessage)
     // matched geometry goes through
     StreamingOps.dedupBatchAgainstIndex(s"$mhRoot/bands",
       "/tmp/graft_geom_out", "doc_id", "text",
