@@ -1,6 +1,7 @@
 package graft.jobs
 
 import graft.Tables
+import org.apache.spark.sql.Observation
 import org.apache.spark.sql.functions._
 
 /** spark-submit entry point for the STEADY-STATE DAILY RUN — the job that
@@ -79,7 +80,12 @@ object DailyIncrement {
     val outDir = args(1)
     val spark = JobSession.get("graft-daily-increment")
     try {
+      // The report's counts ride the writes as `Dataset.observe` metrics
+      // (the BooksPipeline.run pattern): no action runs for the report.
+      val verdictObs, shardObs, annObs = Observation()
       graft.ops.PipelineOps.curationIncremental(spark, sfDir)
+        .observe(verdictObs, count(lit(1)).as("batch"),
+          count(when(col("verdict") === "keep", lit(1))).as("keep"))
         .write.mode("overwrite").parquet(s"$outDir/verdicts")
       val verdicts = Tables.read(spark, s"$outDir/verdicts")
       val keep = verdicts.filter(col("verdict") === "keep").select("doc_id")
@@ -111,29 +117,30 @@ object DailyIncrement {
           batchToks.join(keep, "doc_id"),
           budget = graft.ops.PipelineOps.IncrementalShardBudget,
           startTokens = Some(state))
+        .observe(shardObs, coalesce(sum("n_tokens"), lit(0L)).as("day_tokens"),
+          coalesce(max("shard"), lit(-1L)).as("last_shard"))
         .write.mode("overwrite").parquet(s"$outDir/shards")
       graft.ops.DedupOps.dedupIndexAppend(spark, sfDir)
         .write.mode("overwrite").parquet(s"$outDir/postings_manifest")
       graft.ops.VectorOps.annIndexAppend(spark, sfDir)
+        .observe(annObs, coalesce(sum("n_new"), lit(0L)).as("ann_new"))
         .write.mode("overwrite").parquet(s"$outDir/ann_delta_manifest")
-      val annNew = Tables.read(spark, s"$outDir/ann_delta_manifest")
-        .agg(coalesce(sum("n_new"), lit(0L))).head().getLong(0)
       // 5. MAINTENANCE AUDIT — the shared detect step (see scaladoc).
       val posture = Maintenance.audit(spark, sfDir)
       Maintenance.auditDF(spark, posture)
         .write.mode("overwrite").parquet(s"$outDir/maintenance")
       def p(f: String) = posture.find(_.family == f).get
-      val shards = Tables.read(spark, s"$outDir/shards")
-      val dayTokens = shards.agg(coalesce(sum("n_tokens"), lit(0L)))
-        .head().getLong(0)
+      def observed(o: Observation, name: String) = o.get(name).asInstanceOf[Long]
+      val dayTokens = observed(shardObs, "day_tokens")
       // packed_tokens_total is THE feedback value: pass it verbatim as the
       // next run's third argument. packed_tokens_day is informational.
       val report =
-        s"[daily-increment] batch=${verdicts.count()} keep=${keep.count()} " +
+        s"[daily-increment] batch=${observed(verdictObs, "batch")} " +
+          s"keep=${observed(verdictObs, "keep")} " +
           s"packed_tokens_day=$dayTokens " +
           s"packed_tokens_total=${baseTokens + dayTokens} " +
-          s"last_shard=${shards.agg(coalesce(max("shard"), lit(-1L))).head().getLong(0)} " +
-          s"ann_new=$annNew " +
+          s"last_shard=${observed(shardObs, "last_shard")} " +
+          s"ann_new=${observed(annObs, "ann_new")} " +
           s"hot_buckets=${p("minhash").hotShards} hot_cells=${p("ann").hotShards} " +
           s"unremedied_buckets=${p("minhash").unremedied} " +
           s"unremedied_cells=${p("ann").unremedied}"

@@ -13,9 +13,10 @@ import org.apache.spark.sql.functions._
   * both families over the DELTA-TOUCHED shards of base ∪ delta, with
   * `unremedied` = hot shards this root's COMMITTED fine/split side-table
   * does not cover — the scheduler's trigger, converging to 0 once the
-  * remedy runs while `hot_shards` stays the raw posture. One
-  * scalar-column pass over stored postings; the corpus text is never
-  * read.
+  * remedy runs while `hot_shards` stays the raw posture. One action
+  * per audit: a scalar-column pass over stored postings that returns
+  * both families' counts as one two-row collect, with nothing persisted;
+  * the corpus text is never read.
   *
   * [[MaintenanceRun]] is the remedy executor: for each family the audit
   * reports unremedied > 0 it performs the documented remedy against the
@@ -51,32 +52,43 @@ object Maintenance {
   final case class Posture(family: String, hotShards: Long, maxShard: Long,
                            unremedied: Long, remedyJob: String)
 
-  /** Hot-shard posture of `postings` restricted to `touched` shards:
-    * (hot count, max size, hot-but-not-`covered` count). Semantics chosen
-    * so the loop CONVERGES and stays O(day + one scalar-column pass)
-    * (review r12): only shards the delta touched are audited (nothing
-    * else can newly cross a threshold today); sizes still count base ∪
-    * delta rows, so a slow multi-day drift is caught the day it crosses. */
-  private def hotPosture(postings: DataFrame, touched: DataFrame,
-                         keys: Seq[String], threshold: Long,
-                         covered: DataFrame): (Long, Long, Long) = {
-    val hot = postings
-      .join(broadcast(touched.distinct()), keys, "left_semi")
-      .groupBy(keys.map(col): _*).agg(count(lit(1)).as("sz"))
+  /** One family's posture as a one-row frame (family, hot_shards,
+    * max_shard, unremedied) over `postings` restricted to `touched`
+    * shards. Semantics chosen so the loop CONVERGES and stays O(day + one
+    * scalar-column pass) (review r12): only shards the delta touched are
+    * audited (nothing else can newly cross a threshold today); sizes still
+    * count base ∪ delta rows, so a slow multi-day drift is caught the day
+    * it crosses.
+    *
+    * One aggregate answers all three counts: the `covered` keys ride the
+    * postings' union with weight 0, so a shard's size is the sum of the
+    * weights and it is covered when its smallest weight is 0. The touched
+    * keys are a broadcast semi-join build side, which duplicates cannot
+    * change, so they are not de-duplicated first. */
+  private def posture(family: String, postings: DataFrame, touched: DataFrame,
+                      keys: Seq[String], threshold: Long,
+                      covered: DataFrame): DataFrame =
+    postings.withColumn("w", lit(1L))
+      .unionByName(covered.withColumn("w", lit(0L)))
+      .join(broadcast(touched), keys, "left_semi")
+      .groupBy(keys.map(col): _*)
+      .agg(sum("w").as("sz"), min("w").as("uncovered"))
       .filter(col("sz") >= threshold)
-      .persist()
-    val agg = hot.agg(count(lit(1)).as("n"),
-      coalesce(max("sz"), lit(0L)).as("mx")).head()
-    val un = hot.join(broadcast(covered.distinct()), keys, "left_anti")
-      .count()
-    hot.unpersist()
-    (agg.getLong(0), agg.getLong(1), un)
-  }
+      .agg(count(lit(1)).as("hot_shards"),
+        coalesce(max("sz"), lit(0L)).as("max_shard"),
+        count(when(col("uncovered") === 1L, lit(1))).as("unremedied"))
+      .select(lit(family).as("family"), col("hot_shards"), col("max_shard"),
+        col("unremedied"))
 
-  /** The two-family audit over the base roots' resolved state. Reads
-    * stored fixed-width tables only (~12 bytes/posting — the stats-ops
-    * cost class); deltas are ensured, so the posture is a pure function
-    * of the corpus. */
+  private val remedyJobs = Map(
+    "minhash" -> "graft.jobs.MaintenanceRun (dedup_index_compact + bands_fine rebuild on this root)",
+    "ann" -> "graft.jobs.MaintenanceRun (ann_index_compact + resolved-membership cell split on this root)")
+
+  /** The two-family audit over the base roots' resolved state, in ONE
+    * action: both families' one-row postures are unioned and collected
+    * together. Reads stored fixed-width tables only (~12 bytes/posting —
+    * the stats-ops cost class); deltas are ensured, so the posture is a
+    * pure function of the corpus. */
   def audit(spark: SparkSession, sfDir: String): Seq[Posture] = {
     val mhIx = graft.ops.MinhashIndex.ensureBase(spark, sfDir)
     graft.ops.MinhashIndex.ensureDelta(spark, sfDir, mhIx)
@@ -89,7 +101,7 @@ object Maintenance {
       else spark.emptyDataFrame
         .withColumn("band", lit(0)).withColumn("band_key", lit(""))
         .limit(0)
-    val (mhHot, mhMax, mhUn) = hotPosture(
+    val mh = posture("minhash",
       Tables.read(spark, mhIx.bands).select("band", "band_key")
         .unionByName(mhDelta),
       mhDelta, Seq("band", "band_key"),
@@ -103,16 +115,17 @@ object Maintenance {
         Tables.read(spark, s"${annIx.root}/coarse_split",
           Some(graft.ops.VectorOps.splitCentsSchema)).select("cell")
       else spark.emptyDataFrame.withColumn("cell", lit(0L)).limit(0)
-    val (annHot, annMax, annUn) = hotPosture(
+    val ann = posture("ann",
       Tables.read(spark, annIx.cells).select("cell")
         .unionByName(annDelta),
       annDelta, Seq("cell"),
       graft.ops.VectorOps.SplitHotSize, annSplitCovered)
-    Seq(
-      Posture("minhash", mhHot, mhMax, mhUn,
-        "graft.jobs.MaintenanceRun (dedup_index_compact + bands_fine rebuild on this root)"),
-      Posture("ann", annHot, annMax, annUn,
-        "graft.jobs.MaintenanceRun (ann_index_compact + resolved-membership cell split on this root)"))
+    val rows = mh.unionByName(ann).collect()
+      .map(r => r.getString(0) -> r).toMap
+    Seq("minhash", "ann").map { f =>
+      val r = rows(f)
+      Posture(f, r.getLong(1), r.getLong(2), r.getLong(3), remedyJobs(f))
+    }
   }
 
   /** A computed audit as the (family, hot_shards, max_shard, unremedied,

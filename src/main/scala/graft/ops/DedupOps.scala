@@ -57,13 +57,22 @@ object DedupOps {
     shingleMemo = None
   }
 
-  /** Generation-scoped shared pin of the shingle table (r9, the
-    * scan-audit finding on the curation stage PRODUCER): dedupClusters'
+  /** Generation-scoped shared pin of the CORPUS-WIDE shingle table (r9,
+    * the scan-audit finding on the curation stage PRODUCER): dedupClusters'
     * LSH chain and decontamNgram both start from [[shingleRows]], and
     * each used to persist its OWN copy — a composite that runs both
     * (the stage build) tokenized + shingled the corpus twice. One memo
     * per generation makes the second consumer reuse the first's cached
-    * frame; freshGen clears it with the rest of the generation. */
+    * frame; freshGen clears it with the rest of the generation.
+    *
+    * Its consumers are the corpus-wide operators only: [[simPairs]]
+    * (`simjoin_lsh`, `dedup_clusters`), [[candidatePairsFor]],
+    * [[decontamNgramUnsorted]], [[dedupMinhashEst]], the exact-Jaccard
+    * verifiers through [[shingled]], and `PipelineOps.buildCurationStages`,
+    * which pre-pins it. The daily `curation_incremental` shingles its
+    * own day-only frames instead, because a filter above a cached
+    * relation cannot reach the scan under it: through this pin the
+    * verdict would shingle all 500 sf0.01 documents to use 59. */
   private var shingleMemo: Option[(String, DataFrame)] = None
 
   private[ops] def pinnedShingles(s: SparkSession, dir: String): DataFrame =
@@ -86,9 +95,9 @@ object DedupOps {
     * composites WORSE (curation_pipeline 5.7 s → 18.2 s same-window A/B)
     * — serializing one small job per cached frame costs more than the
     * race, because a single big action materializes every cache branch
-    * with full cluster parallelism. The one op where the race measurably
-    * dominates (dedup_incremental: 4 consumers of the band table, 9.8 s
-    * → 1.3 s) forces materialization explicitly at its own site. */
+    * with full cluster parallelism. The daily probes (`dedup_incremental`,
+    * `curation_incremental`) pin nothing: [[fineProbeHits]] reads their
+    * batch band table once, in the op's one query. */
   private def cache(df: DataFrame): DataFrame = synchronized {
     cachedGen += df; df.persist()
   }
@@ -546,14 +555,17 @@ object DedupOps {
   def dedupIndexAppend(s: SparkSession, dir: String): DataFrame = {
     val ix = MinhashIndex.ensureBase(s, dir)
     MinhashIndex.writeDelta(s, dir, ix)
-    val base = Tables.read(s, ix.bands)
-      .groupBy("band").agg(count(lit(1)).as("n_base"))
+    // One aggregate over both sides' rows; the manifest lists the bands
+    // the base holds.
+    val base = Tables.read(s, ix.bands).select(col("band"), lit(true).as("in_base"))
     // declared schema: an empty delta slice writes a data-file-less table
     val fresh = Tables.read(s, ix.delta, Some(bandsSchema))
-      .groupBy("band").agg(count(lit(1)).as("n_new"))
-    base.join(fresh, Seq("band"), "left")
-      .select(col("band").cast("int").as("band"), col("n_base"),
-        coalesce(col("n_new"), lit(0L)).as("n_new"))
+      .select(col("band"), lit(false).as("in_base"))
+    base.unionByName(fresh)
+      .groupBy("band")
+      .agg(count_if(col("in_base")).as("n_base"), count_if(!col("in_base")).as("n_new"))
+      .filter(col("n_base") > 0)
+      .select(col("band").cast("int").as("band"), col("n_base"), col("n_new"))
       .orderBy("band")
   }
 
@@ -830,11 +842,12 @@ object DedupOps {
   /** The fine-union PROBE core shared by [[dedupIncremental]] and
     * [[PipelineOps.curationIncremental]] (review r12 — the two callers
     * must never disagree about what counts as a near-dup, so the
-    * cold-keys/fine-keys wiring lives once): distinct batch doc_ids
-    * whose band rows hit the stored base index under the fine-union
-    * rule. `batch` must carry (doc_id, band, band_key, sub_key) —
-    * [[bandsOf]]'s shape — and should be cached by the caller
-    * (both legs consume it). */
+    * cold-keys/fine-keys wiring lives once): one (doc_id, hit) row per
+    * batch doc, `hit` = some band row of the doc hits the stored base
+    * index under the fine-union rule. `batch` must carry (doc_id, band,
+    * band_key, sub_key) — [[bandsOf]]'s shape. It is read once: both key
+    * legs flag its rows and one per-doc aggregate folds the flags, so a
+    * caller needs no cache, no union and no distinct over it. */
   private[ops] def fineProbeHits(s: SparkSession, dir: String,
                                  batch: DataFrame): DataFrame = {
     val ix = MinhashIndex.ensureBase(s, dir)
@@ -856,18 +869,19 @@ object DedupOps {
     // change, not a probe optimization.
     val coldKeys = postings
       .groupBy("band", "band_key").agg(count(lit(1)).as("sz"))
-      .filter(col("sz") < RebandHotSize).select("band", "band_key")
-    // No distinct on the fine keys (optimization r14): they feed ONLY a
-    // left-semi probe, and a semi-join is insensitive to build-side
-    // duplicates — the old distinct paid a full shuffle+aggregate of the
-    // stored fine table per probe for nothing.
+      .filter(col("sz") < RebandHotSize)
+      .select(col("band"), col("band_key"), lit(true).as("cold"))
+    // No distinct on the fine keys (optimization r14): a duplicate key
+    // only repeats a batch row, which the per-doc aggregate folds back,
+    // and a distinct would pay a shuffle of the stored fine table per
+    // probe for nothing.
     val fineKeys = Tables.read(s, finePath, Some(fineSchema))
-      .select("band", "band_key", "sub_key")
-    batch.join(coldKeys, Seq("band", "band_key"), "left_semi")
-      .select("doc_id")
-      .union(batch.join(fineKeys, Seq("band", "band_key", "sub_key"),
-        "left_semi").select("doc_id"))
-      .distinct()
+      .select(col("band"), col("band_key"), col("sub_key"), lit(true).as("fine"))
+    batch.join(coldKeys, Seq("band", "band_key"), "left")
+      .join(fineKeys, Seq("band", "band_key", "sub_key"), "left")
+      .groupBy("doc_id")
+      .agg(coalesce(max(coalesce(col("cold"), lit(false)) ||
+        coalesce(col("fine"), lit(false))), lit(false)).as("hit"))
   }
 
   /** L14: incremental MinHash dedup of a new batch against the STORED
@@ -895,17 +909,11 @@ object DedupOps {
     * index ([[MinhashIndex.ensureFine]], commit-marker guarded) and the
     * steady-state probe reads stored postings + stored fine keys only. */
   def dedupIncremental(s: SparkSession, dir: String): DataFrame = {
-    // The batch band table feeds THREE consumers (both probe legs and
-    // the result spine); cache + eager count so they can't race into
-    // recomputing the batch's shingle+signature pipeline (the r5→r6
-    // lesson at this site, now scoped to the batch only).
-    val batch = cache(bandsOf(
-      shingleRows(s, dir).filter(col("doc_id") >= AppendCutoff)))
-    batch.count()
-    val hits = fineProbeHits(s, dir, batch).withColumn("is_dup", lit(true))
-    batch.select("doc_id").distinct()
-      .join(hits, Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("is_dup"), lit(false)).as("is_dup"))
+    // fineProbeHits reads the batch band table once and answers every
+    // batch doc, so the table needs no cache and the probe no spine.
+    fineProbeHits(s, dir,
+        bandsOf(shingleRows(s, dir).filter(col("doc_id") >= AppendCutoff)))
+      .select(col("doc_id"), col("hit").as("is_dup"))
       .orderBy("doc_id")
   }
 
@@ -927,9 +935,9 @@ object DedupOps {
       shingleRows(s, dir).filter(col("doc_id") >= AppendCutoff)))
     batch.count()
     val resolvedHits = fineProbeHits(s, dir, batch)
-      .withColumn("is_dup", lit(true))
+      .filter(col("hit")).select(col("doc_id"), lit(true).as("is_dup"))
     val ix = MinhashIndex.ensureBase(s, dir)
-    // Same no-distinct-before-semi-join as [[fineProbeHits]]
+    // No distinct on the fine keys, as in [[fineProbeHits]]
     // (optimization r14): the base-only leg's fine keys are consumed
     // ONLY through a batch semi-join, so leaving the fine rows
     // un-deduplicated changes no flag. (Batch-key pruning of the size

@@ -674,10 +674,14 @@ object PipelineOps {
     * contaminated → keep), mirroring the full pipeline's precedence. At
     * 100 TB this is the whole point of the stored artifacts: a day's
     * batch costs one map-side pass over the DAY plus probes of
-    * fixed-width index tables — the corpus is never re-read. The batch
-    * shingle table comes from the generation-shared pin
-    * ([[DedupOps.pinnedShingles]]), so banding and decontamination
-    * share one tokenize+shingle pass. */
+    * fixed-width index tables — the corpus is never re-read. The one
+    * corpus-side term left is the eval slice (`doc_id % 50 == 0` below
+    * the cutoff, 2% of the base): its shingles are derived per run,
+    * not stored. Both shingle frames filter `documents` on `doc_id`
+    * before the tokenizer, so the scan under each `posexplode` carries
+    * the filter (PipelineSpec pins it): 59 of 500 documents shingle at
+    * sf0.01. Banding and decontamination read the same batch shingle
+    * plan, whose exchanges AQE reuses, so nothing is pinned. */
   def curationIncremental(s: SparkSession, dir: String): DataFrame = {
     DedupOps.freshGen()
     val cut = DedupOps.AppendCutoff
@@ -686,25 +690,25 @@ object PipelineOps {
     val baseFps = docs.filter(col("doc_id") < cut)
       .select(md5(col("text")).as("fp")).distinct()
       .withColumn("seen", lit(true))
-    val sh = DedupOps.pinnedShingles(s, dir)
+    val batchSh = GraftAPI.shingleRows(docs.filter(col("doc_id") >= cut),
+      "doc_id", "text")
     // Fine-union probe (r12): the SHARED core with dedup_incremental
     // (DedupOps.fineProbeHits), so the curation verdict and the
     // standalone dedup probe can never disagree about what counts as a
-    // near-dup. The batch band table feeds both probe legs — cache +
-    // eager count against the double-compute of the batch signature
-    // pipeline (the dedupIncremental lesson at this site).
-    val batchBands = cache(
-      DedupOps.bandsOf(sh.filter(col("doc_id") >= cut)))
-    batchBands.count()
-    val nearHits = DedupOps.fineProbeHits(s, dir, batchBands)
-      .withColumn("near", lit(true))
-    val evalSet = sh.filter(col("doc_id") < cut && col("doc_id") % 50 === 0)
+    // near-dup.
+    val nearHits = DedupOps.fineProbeHits(s, dir, DedupOps.bandsOf(batchSh))
+      .select(col("doc_id"), col("hit").as("near"))
+    val evalSet = GraftAPI.shingleRows(
+        docs.filter(col("doc_id") < cut && col("doc_id") % 50 === 0),
+        "doc_id", "text")
       .select("x").distinct()
-    val batchSh = sh.filter(col("doc_id") >= cut)
-    val tot = batchSh.groupBy("doc_id").agg(count(lit(1)).as("n_shingles"))
-    val hits = batchSh.join(broadcast(evalSet), "x")
-      .groupBy("doc_id").agg(count(lit(1)).as("n_overlap"))
-    val contam = tot.join(hits, "doc_id")
+    // One aggregate counts a doc's shingles and its eval hits (evalSet is
+    // distinct, so the left join adds no rows); a doc with no hit has
+    // ratio 0 and fails the filter as it would an inner join.
+    val contam = batchSh
+      .join(broadcast(evalSet.withColumn("hit", lit(1))), Seq("x"), "left")
+      .groupBy("doc_id")
+      .agg(count(lit(1)).as("n_shingles"), count(col("hit")).as("n_overlap"))
       .filter(graft.Tables.r6(
         col("n_overlap").cast("double") / col("n_shingles")) >= 0.3)
       .select("doc_id").withColumn("cont", lit(true))

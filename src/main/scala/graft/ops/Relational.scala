@@ -1878,13 +1878,12 @@ object Relational {
   /** SQL-12 (TPC-H Q15 shape): the quarter's top revenue supplier(s).
     * Revenue totals go through DECIMAL so the `= max` equality is
     * bit-exact on both engines (a double-summed total could differ in the
-    * last ulp and drop the row). The maximum is a window MAX OVER () on
-    * the rev table (optimization r14): the scalar-subquery form planned
-    * the `rev` CTE twice — two full lineitem scans and two fact-scale
-    * suppkey aggregations — where the window form pays one single-task
-    * pass over the SUPPLIER-cardinality rev table (dim-scale even at
-    * 100 TB; output proven identical against the oracle). Supplier dim
-    * broadcasts; the CTE is output-scale (one row/supplier). */
+    * last ulp and drop the row). The maximum is the scalar subquery
+    * `(SELECT max(total_rev) FROM rev)`, not a window `MAX OVER ()`:
+    * an unpartitioned window moves the whole rev table into one
+    * partition, and the scalar form's `rev` aggregate shares its
+    * exchange with the main query's under AQE's stage reuse. Supplier
+    * dim broadcasts; the CTE is output-scale (one row/supplier). */
   def sqlTopSupplier(s: SparkSession, dir: String): DataFrame = {
     registerViews(s, dir)
     s.sql(
@@ -1898,10 +1897,8 @@ object Relational {
         |  GROUP BY l_suppkey)
         |SELECT s.s_suppkey, s.s_name, r.total_rev
         |FROM supplier s
-        |JOIN (SELECT l_suppkey, total_rev,
-        |        MAX(total_rev) OVER () AS max_rev FROM rev) r
-        |  ON s.s_suppkey = r.l_suppkey
-        |WHERE r.total_rev = r.max_rev
+        |JOIN rev r ON s.s_suppkey = r.l_suppkey
+        |WHERE r.total_rev = (SELECT max(total_rev) FROM rev)
         |ORDER BY s.s_suppkey""".stripMargin)
   }
 

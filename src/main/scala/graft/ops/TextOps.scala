@@ -214,12 +214,17 @@ object TextOps {
     * both sides so the arithmetic trees match the oracle's exactly. */
   def textBm25(s: SparkSession, dir: String): DataFrame = {
     val docs = documents(s, dir)
-    val tf = docs
+    // The DF table counts the TF aggregate's own rows, so the corpus
+    // token shuffle runs once and AQE reuses it for both: `count_if` keeps
+    // `tf` live (a `count(1)` lets the optimizer prune the TF aggregate to
+    // a second distinct over the raw tokens), and the id filter the TF
+    // side's join would infer is explicit, so both branches plan alike.
+    val tf = docs.filter(col("doc_id").isNotNull)
       .select(col("doc_id"), explode(tokens(col("text"))).as("word"))
       .groupBy("doc_id", "word").agg(count(lit(1)).as("tf"))
     val dl = docs.select(col("doc_id"),
       size(tokens(col("text"))).cast("double").as("dl"))
-    val dfT = tf.groupBy("word").agg(count(lit(1)).as("df"))
+    val dfT = tf.groupBy("word").agg(count_if(col("tf") > 0).as("df"))
     val stats = docs.agg(count(lit(1)).as("n_docs"),
       (sum(size(tokens(col("text"))).cast("decimal(25,6)")).cast("double") /
         count(lit(1))).as("avgdl"))

@@ -166,14 +166,17 @@ object VectorOps {
   private def sqDist(x: Column, cv: Column): Column =
     r6(dot(x, x) - lit(2) * dot(x, cv) + dot(cv, cv))
 
-  /** Broadcast-argmin cell assignment: (vec_id, cell). Map-side scoring
-    * against the broadcast centroid table; the per-vector min is a
-    * partial-agg'd struct (distance, cid) so ties break on cid. */
-  private[graft] def assignCells(e: DataFrame, cents: DataFrame): DataFrame =
+  /** Broadcast-argmin cell assignment: (vec_id, cell, carry…). Map-side
+    * scoring against the broadcast centroid table; the per-vector min is
+    * a partial-agg'd struct (distance, cid) so ties break on cid. `carry`
+    * columns are functions of the vector and ride the grouping key
+    * through unchanged, so a caller needs no join back. */
+  private[graft] def assignCells(e: DataFrame, cents: DataFrame,
+                                 carry: Seq[String] = Nil): DataFrame =
     e.crossJoin(broadcast(cents))
-      .groupBy("vec_id")
+      .groupBy(("vec_id" +: carry).map(col): _*)
       .agg(min(struct(sqDist(col("x"), col("cv")).as("d"), col("cid"))).as("m"))
-      .select(col("vec_id"), col("m.cid").as("cell"))
+      .select(Seq(col("vec_id"), col("m.cid").as("cell")) ++ carry.map(col): _*)
 
   /** LONG-FORM multi-subspace Lloyd training (VERDICT r6 #1): the input is
     * ONE frame (m, vec_id, x) holding every subspace's subvectors with the
@@ -213,12 +216,14 @@ object VectorOps {
   }
 
   /** Long-form argmin assignment against (m, cid, cv) codebooks:
-    * (m, vec_id, cell) — all subspaces in one broadcast join + one agg. */
-  private[graft] def assignCellsLong(emLong: DataFrame, cents: DataFrame): DataFrame =
+    * (m, vec_id, cell, carry…) — all subspaces in one broadcast join + one
+    * agg; `carry` as in [[assignCells]]. */
+  private[graft] def assignCellsLong(emLong: DataFrame, cents: DataFrame,
+                                     carry: Seq[String] = Nil): DataFrame =
     emLong.join(broadcast(cents), "m")
-      .groupBy("m", "vec_id")
+      .groupBy(("m" +: "vec_id" +: carry).map(col): _*)
       .agg(min(struct(sqDist(col("x"), col("cv")).as("d"), col("cid"))).as("mm"))
-      .select(col("m"), col("vec_id"), col("mm.cid").as("cell"))
+      .select(Seq(col("m"), col("vec_id"), col("mm.cid").as("cell")) ++ carry.map(col): _*)
 
   /** GROUPED Lloyd training over (g, vec_id, x): one independent k-means
     * per group, all groups trained in the SAME Spark jobs (the
@@ -1171,23 +1176,26 @@ object VectorOps {
     * ([[graft.api.GraftAPI.annIndexAppend]]) so the byte-stable-replay
     * contract cannot drift between them: same r6 residual snap, same
     * slice bounds, same argmin tie-breaks. Returns
-    * (vec_id, m, code, cell). */
+    * (vec_id, m, code, cell).
+    *
+    * The batch is shuffled once per argmin and never joined back to
+    * itself: the vector rides the coarse argmin's grouping key to its
+    * residual (the centroid is a broadcast lookup), and the coarse cell
+    * rides the subspace argmin's. */
   private[graft] def encodeAgainstStored(e: DataFrame, coarse: DataFrame,
                                          codebooks: DataFrame, m: Int,
                                          sub: Int): DataFrame = {
-    val bCells = assignCells(e, coarse)
-    val remLong = e.join(bCells, "vec_id")
+    val remLong = assignCells(e, coarse, carry = Seq("x"))
       .join(broadcast(coarse), col("cell") === col("cid"))
-      .select(col("vec_id"), col("cell"),
+      .select(col("vec_id"), col("cell").as("coarse"),
         zip_with(col("x"), col("cv"), (a, b) => r6(a - b)).as("rx"))
-      .select(col("vec_id"), col("cell"), posexplode(array((0 until m).map(i =>
+      .select(col("vec_id"), col("coarse"), posexplode(array((0 until m).map(i =>
         slice(col("rx"), i * sub + 1, sub)): _*)))
-      .select(col("vec_id"), col("cell"), col("pos").cast("int").as("m"),
+      .select(col("vec_id"), col("coarse"), col("pos").cast("int").as("m"),
         col("col").as("x"))
-    assignCellsLong(remLong.select("m", "vec_id", "x"), codebooks)
-      .select(col("vec_id"), col("m"), col("cell").as("code"))
-      .join(bCells, "vec_id")
-      .select("vec_id", "m", "code", "cell")
+    assignCellsLong(remLong, codebooks, carry = Seq("coarse"))
+      .select(col("vec_id"), col("m"), col("cell").as("code"),
+        col("coarse").as("cell"))
   }
 
   /** Cells a `del` id-list would fully empty in `live` — the catalog-
@@ -1210,21 +1218,19 @@ object VectorOps {
     val ix = IvfPqIndex.ensureBase(s, dir)
     writeAnnDelta(s, dir, ix)
     // merged manifest: base counts from the stored index, new counts from
-    // the just-landed delta
-    val base = Tables.read(s, ix.cells)
-      .groupBy("cell").agg(count(lit(1)).as("n_base"))
+    // the just-landed delta, as one aggregate over both sides' rows. Every
+    // cell of either side gets a row (review r10): a coarse cell empty in
+    // the base but receiving appended vectors must not drop out, or the
+    // daily job's ann_new undercounts the batch. (Empty base cells
+    // demonstrably occur: annIndexStats reports an empty_cells metric.)
+    val base = Tables.read(s, ix.cells).select(col("cell"), lit(true).as("in_base"))
     // declared schema: an empty held-out slice writes a data-file-less table
     val fresh = Tables.read(s, ix.ivfCodesDelta, Some(codesSchema))
       .filter(col("m") === 0)
-      .groupBy("cell").agg(count(lit(1)).as("n_new"))
-    // FULL outer (review r10): a coarse cell empty in the base but
-    // receiving appended vectors has no base row — a left join dropped
-    // it from the manifest entirely and the daily job's ann_new
-    // undercounted the batch. (Empty base cells demonstrably occur:
-    // annIndexStats reports an empty_cells metric.)
-    base.join(fresh, Seq("cell"), "full_outer")
-      .select(col("cell"), coalesce(col("n_base"), lit(0L)).as("n_base"),
-        coalesce(col("n_new"), lit(0L)).as("n_new"))
+      .select(col("cell"), lit(false).as("in_base"))
+    base.unionByName(fresh)
+      .groupBy("cell")
+      .agg(count_if(col("in_base")).as("n_base"), count_if(!col("in_base")).as("n_new"))
       .orderBy("cell")
   }
 

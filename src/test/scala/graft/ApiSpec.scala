@@ -284,8 +284,7 @@ class ApiSpec extends AnyFunSuite {
   }
 
   test("triangleCounts plans one scan of a parquet edge table: the normalized edges are derived once, not per join branch") {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.FileSourceScanExec
     val sq = spark; import sq.implicits._
     // the 1-2-3 triangle with a duplicate, a reversed copy and a self loop,
     // plus the 3-4 tail that closes nothing
@@ -293,35 +292,19 @@ class ApiSpec extends AnyFunSuite {
     val path = s"$dir/edges.parquet"
     Seq((1L, 2L), (2L, 3L), (3L, 1L), (2L, 1L), (1L, 2L), (3L, 3L), (3L, 4L))
       .toDF("u", "v").write.parquet(path)
+    val (got, runs) = QueryRecorder.record(spark) {
+      GraftAPI.triangleCounts(spark.read.parquet(path), "u", "v")
+        .orderBy("vertex").collect().map(r => (r.getLong(0), r.getLong(1)))
+    }
+    assert(got.sameElements(Seq((1L, 1L), (2L, 1L), (3L, 1L))), got.toSeq)
     // Scans of `path` in a run's physical plan as planned, before AQE
     // reuses identical exchange stages (graft.ScanAudit's count): three
     // join branches that each re-derive the edges plan three scans, three
     // normalizing aggregates and three exchanges.
-    def scansOf(p: SparkPlan): Int = p match {
-      case a: AdaptiveSparkPlanExec => scansOf(a.inputPlan)
-      case f: FileSourceScanExec =>
-        if (f.relation.location.rootPaths.exists(_.toString.contains(dir))) 1 else 0
-      case other => (other.children ++ other.subqueries).map(scansOf).sum
-    }
-    val runs = scala.collection.mutable.ArrayBuffer.empty[(String, Int)]
-    def seen = runs.synchronized(runs.toList)
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        runs.synchronized { runs += funcName -> scansOf(qe.executedPlan); () }
-      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    val got = try {
-      val out = GraftAPI.triangleCounts(spark.read.parquet(path), "u", "v")
-        .orderBy("vertex").collect().map(r => (r.getLong(0), r.getLong(1)))
-      // listener events arrive asynchronously; the collect's comes last
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!seen.exists(_._1 == "collect") && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      out
-    } finally spark.listenerManager.unregister(listener)
-    assert(got.sameElements(Seq((1L, 1L), (2L, 1L), (3L, 1L))), got.toSeq)
-    val perRun = seen
+    val perRun = runs.map(r => r.funcName -> QueryRecorder.nodes(r.qe.executedPlan).count {
+      case f: FileSourceScanExec => f.relation.location.rootPaths.exists(_.toString.contains(dir))
+      case _ => false
+    })
     assert(perRun.exists(_._1 == "collect"), s"no collect event: $perRun")
     assert(perRun.map(_._2).sum == 1, s"edge table scans per query run: $perRun")
   }

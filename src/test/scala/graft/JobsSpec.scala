@@ -169,6 +169,19 @@ class JobsSpec extends AnyFunSuite {
     assert(a.sameElements(b), "explicit packing state diverged from derived")
   }
 
+  /** 21 scattered vectors (ids 0-20, the 16 coarse seeds among them) and
+    * a 34-vector cluster (ids 100-133) that lands in ONE learned cell: 31
+    * base members (< SplitHotSize = 32) plus 3 appended ones (id % 10 ==
+    * 7), so the cell is hot only with the delta counted. */
+  private def plantedCellVectors: Seq[(Long, Long, Array[Float])] = {
+    val rnd = new scala.util.Random(23)
+    val center = Array.fill(64)(rnd.nextGaussian() * 0.1 + 2.0)
+    def near() = center.map(v => (v + rnd.nextGaussian() * 0.02).toFloat)
+    def far() = Array.fill(64)((rnd.nextGaussian() * 3.0).toFloat)
+    (0L to 20L).map(id => (id, id % 10, far())) ++
+      (100L to 133L).map(id => (id, id % 10, near()))
+  }
+
   test("MaintenanceRun converges the detect→remedy loop: planted hot cell → daily reports unremedied>0 → remedy → re-audit 0, probes unchanged (r13)") {
     import org.apache.spark.sql.functions._
     val sq = spark; import sq.implicits._
@@ -179,16 +192,8 @@ class JobsSpec extends AnyFunSuite {
     // resolved-membership split can cover it. Scattered low-id vectors
     // (0..20, minus the %10==7 holdouts) provide the 16 coarse seeds so
     // the cluster lands in ONE learned cell.
-    val rnd = new scala.util.Random(23)
-    val center = Array.fill(64)(rnd.nextGaussian() * 0.1 + 2.0)
-    def near() = center.map(v => (v + rnd.nextGaussian() * 0.02).toFloat)
-    def far() = Array.fill(64)((rnd.nextGaussian() * 3.0).toFloat)
-    val clusterIds = (100L to 133L)
-    val emb =
-      (0L to 20L).map(id => (id, id % 10, far())) ++
-      clusterIds.map(id => (id, id % 10, near()))
     val dir = java.nio.file.Files.createTempDirectory("graft_maint").toString
-    emb.toDF("vec_id", "label", "embedding")
+    plantedCellVectors.toDF("vec_id", "label", "embedding")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     // documents: unique base docs + one keeper batch doc (>= 450); the
     // [400, 450) delta slice is EMPTY — the minhash family must audit
@@ -260,6 +265,42 @@ class JobsSpec extends AnyFunSuite {
       .getOrElse(fail("no second maintenance report line"))
     assert(maint2.contains("remedied=none"), maint2)
     assert(reported(maint2, "unremedied_cells") == 0L, maint2)
+  }
+
+  test("Maintenance.audit answers both families in one query: a planted fine-covered hot bucket and an unsplit hot cell keep their postures") {
+    import org.apache.spark.sql.functions._
+    val sq = spark; import sq.implicits._
+    def ensured(dir: String): Unit = {
+      val mh = ops.MinhashIndex.ensureBase(spark, dir)
+      ops.MinhashIndex.ensureDelta(spark, dir, mh)
+      ops.MinhashIndex.ensureFine(spark, dir, mh)
+      val ann = ops.IvfPqIndex.ensureBase(spark, dir)
+      ops.IvfPqIndex.ensureDelta(spark, dir, ann)
+    }
+    def audited(dir: String): Seq[(String, Long, Long, Long)] = {
+      ensured(dir)
+      val (postures, runs) = QueryRecorder.record(spark)(jobs.Maintenance.audit(spark, dir))
+      assert(runs.size == 1,
+        s"the audit must be one query, ran ${runs.size}: ${runs.map(_.funcName)}")
+      postures.map(p => (p.family, p.hotShards, p.maxShard, p.unremedied))
+    }
+    audited(TestSpark.Sf0001)
+    // Planted corpus. MinHash: docs 0-3 and 400 share one text, so the
+    // delta doc 400 touches one bucket of 5 per band (RebandHotSize = 4),
+    // and the fine table built over the resolved postings covers both.
+    // ANN: the planted cell (plantedCellVectors), with no split.
+    val dir = java.nio.file.Files.createTempDirectory("graft_audit").toString
+    plantedCellVectors.toDF("vec_id", "label", "embedding")
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    val dup = (1 to 40).map(i => s"dupw$i").mkString(" ")
+    val docs = (0L until 40L).map(id =>
+        (id, if (id < 4) dup else (1 to 40).map(i => s"b${id}w$i").mkString(" "))) ++
+      Seq((400L, dup), (460L, (1 to 40).map(i => s"t460w$i").mkString(" ")))
+    docs.toDF("doc_id", "text")
+      .withColumn("lang", lit("en")).withColumn("source", lit("spec"))
+      .withColumn("n_chars", length(col("text")))
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    assert(audited(dir) == Seq(("minhash", 2L, 5L, 0L), ("ann", 1L, 34L, 1L)))
   }
 
   test("daily-increment DAG example parses and submits exactly the tested main") {

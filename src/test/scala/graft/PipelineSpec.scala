@@ -105,6 +105,31 @@ class PipelineSpec extends AnyFunSuite {
     assert(row.isNullAt(3) && row.isNullAt(4))
   }
 
+  test("curation_incremental shingles only the day: every documents scan under a posexplode carries a doc_id filter") {
+    import org.apache.spark.sql.catalyst.expressions.{IsNotNull, PosExplode}
+    import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec}
+    val sf = TestSpark.Sf0001
+    // build the stored index first, so only the verdict query is recorded
+    val ix = ops.MinhashIndex.ensureBase(spark, sf)
+    ops.MinhashIndex.ensureFine(spark, sf, ix)
+    val (_, runs) = QueryRecorder.record(spark) {
+      ops.PipelineOps.curationIncremental(spark, sf).collect()
+    }
+    assert(runs.nonEmpty, "no query recorded")
+    val tokenizers = runs.flatMap(r => QueryRecorder.nodes(r.qe.executedPlan))
+      .collect { case g: GenerateExec if g.generator.isInstanceOf[PosExplode] => g }
+    val docScans = tokenizers.flatMap(g => QueryRecorder.nodes(g).collect {
+      case f: FileSourceScanExec
+          if f.relation.location.rootPaths.exists(_.toString.contains("documents")) => f
+    })
+    assert(docScans.nonEmpty, s"no documents scan under a posexplode in ${runs.map(_.funcName)}")
+    docScans.foreach { f =>
+      assert(f.dataFilters.exists(e => !e.isInstanceOf[IsNotNull] &&
+          e.references.exists(_.name == "doc_id")),
+        s"a documents scan feeding the tokenizer reads the whole corpus: ${f.dataFilters}")
+    }
+  }
+
   test("corpus_dsir_weights: target-language docs score higher on average") {
     import org.apache.spark.sql.functions._
     val sf = TestSpark.Sf0001
