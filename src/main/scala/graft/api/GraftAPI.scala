@@ -1436,23 +1436,13 @@ object GraftAPI {
     df.count(); df
   }
 
-  /** Frame-level vector validation shared by the PQ encoders (ADVICE
-    * r6): ONE column-pruned aggregate replaces the old one-arbitrary-row
-    * probe — a null vector or ragged lengths fail loudly here instead of
-    * NPE-ing the probe or silently emitting truncated/null subvector
-    * codes. Returns the (uniform) dimensionality. */
+  /** [[graft.ops.VectorOps.checkedDim]] for the encoders, which infer
+    * their geometry from the data: an empty frame has none to infer, and
+    * the width must split into `m` subspaces. Returns the width. */
   private def validatedDim(e: DataFrame, vec: String, m: Int): Int = {
-    val st = e.agg(count(lit(1)).as("n"),
-        sum(when(col("x").isNull, 1L).otherwise(0L)).as("nulls"),
-        min(size(col("x"))).as("mn"), max(size(col("x"))).as("mx"))
-      .collect()(0)
-    if (st.getLong(0) == 0L) throw new IllegalArgumentException(
-      s"no rows — cannot infer vector dimensionality from '$vec'")
-    require(st.getLong(1) == 0L,
-      s"${st.getLong(1)} null vectors in '$vec' — drop or impute upstream")
-    val (n, mx) = (st.getInt(2), st.getInt(3))
-    require(n == mx,
-      s"ragged vector lengths in '$vec' (min $n, max $mx) — uniform length required")
+    val n = graft.ops.VectorOps.checkedDim(e, s"'$vec'").getOrElse(
+      throw new IllegalArgumentException(
+        s"no rows — cannot infer vector dimensionality from '$vec'"))
     require(n % m == 0, s"vector length $n not divisible by m=$m subspaces")
     n
   }
@@ -1586,14 +1576,9 @@ object GraftAPI {
                      path: String): DataFrame = {
     val s = batch.sparkSession
     val ix = graft.ops.IvfPqIndex.Ix(path)
-    val meta = graft.ops.Artifacts.readMeta(path)
     // Geometry refusals BEFORE the marker retirement (the lifecycle
     // discipline): a rejected call leaves a valid index valid.
-    Seq("m", "dim").foreach(k => require(meta.contains(k),
-      s"index at $path records no '$k' geometry — rebuild via buildAnnIndex"))
-    val mM = meta("m").toInt
-    val dim = meta("dim").toInt
-    val sub = dim / mM
+    val (mM, dim) = graft.ops.IvfPqIndex.geometry(path)
     // An operator-managed compact would shadow this append's rows, and
     // the facade compact refuses while it exists (review r13).
     graft.ops.IndexFs.requireUncompacted(ix.ivfCodesCompact,
@@ -1603,27 +1588,23 @@ object GraftAPI {
     val e = batch.select(col(id).as("vec_id"),
       col(vec).cast("array<double>").as("x"))
     // An EMPTY day commits a no-op cleanly (the minhashIndexAppend
-    // contract): dim is known from the stored meta, so there is nothing
-    // to validate or encode — the fold below just rewrites the prior
-    // delta (or lands a data-file-less one).
-    val newCodes =
-      if (e.isEmpty)
+    // contract): the guard finds no width to check and nothing is
+    // encoded — the fold below just rewrites the prior delta (or lands a
+    // data-file-less one).
+    val newCodes = graft.ops.VectorOps.checkedDim(e, s"'$vec'", Some((path, dim))) match {
+      case None =>
         s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           org.apache.spark.sql.types.StructType(
             graft.ops.VectorOps.codesSchema.fields.filter(_.name != "pcell")))
-      else {
-        val got = validatedDim(e, vec, mM)
-        require(got == dim,
-          s"batch vectors are $got-dimensional; the index at $path was " +
-            s"trained at dim=$dim")
+      case Some(_) =>
         val fresh = e.join(Tables.read(s, ix.cells).select("vec_id"),
           Seq("vec_id"), "left_anti")
         // ONE shared stored-codebook encode path with the registry append
         // (review r13): byte-stable replay must not be able to drift.
         graft.ops.VectorOps.encodeAgainstStored(fresh,
           Tables.read(s, ix.coarse), Tables.read(s, ix.ivfCodebooks),
-          mM, sub)
-      }
+          mM, dim / mM)
+    }
     // Fold into the single delta generation. Declared schema on the
     // prior read: a previous empty append commits a data-file-less
     // table. localCheckpoint severs the read from the overwrite.

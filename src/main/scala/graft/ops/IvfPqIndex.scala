@@ -116,6 +116,15 @@ object IvfPqIndex {
       Seq(ensureDelta(s, dir, ix)))(p => sibling(Seq(p)), sibling)
   }
 
+  /** The (m, dim) geometry an index root's manifest records — what an
+    * append encodes at. An index without it must be rebuilt. */
+  private[graft] def geometry(root: String): (Int, Int) = {
+    val meta = Artifacts.readMeta(root)
+    Seq("m", "dim").foreach(k => require(meta.contains(k),
+      s"index at $root records no '$k' geometry — rebuild via buildAnnIndex"))
+    (meta("m").toInt, meta("dim").toInt)
+  }
+
   /** Rewrite of the cell-SPLIT side-tables under their own marker
     * ([[IndexFs.Split]]; the ANN mirror of [[MinhashIndex.rewriteFine]]):
     * `coarse_split` (cell, scid, scv — per-hot-cell residual

@@ -322,11 +322,16 @@ object PipelineOps {
   private[graft] val QualityMaxChars = 450
   private[graft] val QualityMaxRep = 2.5
 
-  private def qualityOk: org.apache.spark.sql.Column = {
-    val toks = split(col("text"), " ")
-    col("n_chars") >= QualityMinChars && col("n_chars") <= QualityMaxChars &&
+  private[graft] def qualityOk(text: String = "text",
+                               nChars: String = "n_chars"): org.apache.spark.sql.Column = {
+    val toks = split(col(text), " ")
+    col(nChars) >= QualityMinChars && col(nChars) <= QualityMaxChars &&
       size(toks).cast("double") / size(array_distinct(toks)) <= QualityMaxRep
   }
+
+  /** The decontamination threshold: a document whose r6-snapped share of
+    * shingles found in the eval slice reaches it is contaminated. */
+  private[graft] val ContamMinRatio = 0.3
 
   def docsQualityFilter(s: SparkSession, dir: String): DataFrame = {
     val toks = split(col("text"), " ")
@@ -377,7 +382,7 @@ object PipelineOps {
   private def qualityKept(s: SparkSession, dir: String): DataFrame = {
     val toks = split(col("text"), " ")
     documents(s, dir)
-      .filter(qualityOk)
+      .filter(qualityOk())
       .select(col("doc_id"), col("lang"), size(toks).cast("long").as("n_tokens"),
         md5(col("text")).as("fp"))
   }
@@ -453,7 +458,7 @@ object PipelineOps {
       },
       Future {
         DedupOps.decontamNgramUnsorted(s, dir)
-          .filter(col("contam_ratio") >= 0.3).select("doc_id")
+          .filter(col("contam_ratio") >= ContamMinRatio).select("doc_id")
           .write.mode("overwrite").parquet(s"$root/contaminated")
       })
     // Settle ALL three before rethrowing (review r11): a fail-fast Await
@@ -533,7 +538,7 @@ object PipelineOps {
     val clusterDrops = DedupOps.truncate(DedupOps.dedupClusters(s, dir)
       .filter(col("cluster_id") =!= col("doc_id")).select("doc_id"))
     val contaminated = DedupOps.truncate(DedupOps.decontamNgram(s, dir)
-      .filter(col("contam_ratio") >= 0.3).select("doc_id"))
+      .filter(col("contam_ratio") >= ContamMinRatio).select("doc_id"))
     val survivors = withRangeBucket(
       quality
         .join(exactKeep, Seq("doc_id"), "left_semi")
@@ -612,7 +617,7 @@ object PipelineOps {
   def corpusDedupFunnel(s: SparkSession, dir: String): DataFrame = {
     val root = ensureCurationStages(s, dir)
     val docs = documents(s, dir)
-    val qOk = qualityOk
+    val qOk = qualityOk()
     val exactKeep = Tables.read(s, s"$root/exact_keep")
       .withColumn("ek", lit(true))
     val clusterDrops = Tables.read(s, s"$root/cluster_drops")
@@ -686,7 +691,7 @@ object PipelineOps {
     DedupOps.freshGen()
     val cut = DedupOps.AppendCutoff
     val docs = documents(s, dir)
-    val qOk = qualityOk
+    val qOk = qualityOk()
     val baseFps = docs.filter(col("doc_id") < cut)
       .select(md5(col("text")).as("fp")).distinct()
       .withColumn("seen", lit(true))
@@ -702,34 +707,50 @@ object PipelineOps {
         docs.filter(col("doc_id") < cut && col("doc_id") % 50 === 0),
         "doc_id", "text")
       .select("x").distinct()
-    // One aggregate counts a doc's shingles and its eval hits (evalSet is
-    // distinct, so the left join adds no rows); a doc with no hit has
-    // ratio 0 and fails the filter as it would an inner join.
-    val contam = batchSh
-      .join(broadcast(evalSet.withColumn("hit", lit(1))), Seq("x"), "left")
-      .groupBy("doc_id")
+    curationVerdicts(
+        docs.filter(col("doc_id") >= cut)
+          .select(col("doc_id"), qOk.as("q_ok"), md5(col("text")).as("fp")),
+        "doc_id", baseFps, nearHits, contaminatedIds(batchSh, "doc_id", evalSet))
+      .orderBy("doc_id")
+  }
+
+  /** Ids whose r6-snapped share of shingles in `evalSet` (a distinct `x`
+    * column) reaches [[ContamMinRatio]], tagged `cont`. One aggregate
+    * counts shingles and eval hits (the left join adds no rows); an id
+    * with no hit has ratio 0 and fails the filter. */
+  private[graft] def contaminatedIds(sh: DataFrame, id: String,
+                                     evalSet: DataFrame): DataFrame =
+    sh.join(broadcast(evalSet.withColumn("hit", lit(1))), Seq("x"), "left")
+      .groupBy(id)
       .agg(count(lit(1)).as("n_shingles"), count(col("hit")).as("n_overlap"))
       .filter(graft.Tables.r6(
-        col("n_overlap").cast("double") / col("n_shingles")) >= 0.3)
-      .select("doc_id").withColumn("cont", lit(true))
-    docs.filter(col("doc_id") >= cut)
-      .select(col("doc_id"), qOk.as("q_ok"), md5(col("text")).as("fp"))
-      .join(broadcast(baseFps), Seq("fp"), "left")
-      .join(nearHits, Seq("doc_id"), "left")
-      .join(contam, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("q_ok"),
+        col("n_overlap").cast("double") / col("n_shingles")) >= ContamMinRatio)
+      .select(id).withColumn("cont", lit(true))
+
+  /** The ONE incremental-curation verdict ([[curationIncremental]] and
+    * [[graft.streaming.StreamingOps.curationVerdictBatch]]): `batch`
+    * (id, q_ok, fp) left-joins `seenFps` (fp, seen), `nearHits`
+    * (id, near) and `contam` (id, cont), and the first failing stage
+    * names the verdict (quality → exact_dup → near_dup → contaminated →
+    * keep), the full pipeline's precedence. */
+  private[graft] def curationVerdicts(batch: DataFrame, id: String,
+                                      seenFps: DataFrame, nearHits: DataFrame,
+                                      contam: DataFrame): DataFrame =
+    batch
+      .join(broadcast(seenFps), Seq("fp"), "left")
+      .join(nearHits, Seq(id), "left")
+      .join(contam, Seq(id), "left")
+      .select(col(id), col("q_ok"),
         coalesce(col("seen"), lit(false)).as("exact_dup"),
         coalesce(col("near"), lit(false)).as("near_dup"),
         coalesce(col("cont"), lit(false)).as("contaminated"))
-      .select(col("doc_id"), col("q_ok"), col("exact_dup"), col("near_dup"),
+      .select(col(id), col("q_ok"), col("exact_dup"), col("near_dup"),
         col("contaminated"),
         when(!col("q_ok"), "quality")
           .when(col("exact_dup"), "exact_dup")
           .when(col("near_dup"), "near_dup")
           .when(col("contaminated"), "contaminated")
           .otherwise("keep").as("verdict"))
-      .orderBy("doc_id")
-  }
 
   /** L10b: deterministic fixed-size per-group sample — at most 20 docs per
     * language, chosen by md5-of-id order. The "inspect a stable handful

@@ -62,7 +62,7 @@ object VectorOps {
 
   /** Half-up 6-dp cosine ([[graft.Tables.r6]]) — defensive symmetry with
     * the oracle, identical formula both engines. */
-  private def cosine(a: Column, b: Column): Column =
+  private[graft] def cosine(a: Column, b: Column): Column =
     r6(dot(a, b) / (norm(a) * norm(b)))
 
   /** 4-bit IVF cell id: sign bits of dims 1–4. A real IVF would k-means
@@ -1281,8 +1281,8 @@ object VectorOps {
 
   /** Sub-cells a split probe fans out to — like [[FilteredProbes]], the
     * pool should cover K after the split narrows each scan; when it
-    * can't (degenerate sub-cells), [[knnIvfSplit]] ENFORCES the floor
-    * by falling back to the whole-cell scan. */
+    * can't (degenerate sub-cells), [[splitAwarePool]] ENFORCES the
+    * floor by falling back to the whole-cell scan. */
   private[graft] val SplitProbes = 2
 
   /** Declared schema of the stored residual-code tables (base / delta /
@@ -1413,55 +1413,103 @@ object VectorOps {
     * whether or not the maintenance job ran first. At 100 TB the
     * `cells_split` table is cell-partitioned like the codes, so the
     * sub-probe is a partition-pruned scan of max_sub·probes vectors
-    * instead of max_cell. */
+    * instead of max_cell. The pool is [[splitAwarePool]], the core the
+    * streaming ANN probe shares. */
   def knnIvfSplit(s: SparkSession, dir: String): DataFrame = {
     val ix = IvfPqIndex.ensure(s, dir)
     IvfPqIndex.ensureSplit(s, dir, ix)
     val e = embeddings(s, dir)
       .select(col("vec_id"), asD(col("embedding")).as("x"))
     val cells = Tables.read(s, ix.cells)
-    val coarse = Tables.read(s, ix.coarse)
     val q = e.join(cells, "vec_id").filter(col("vec_id") === 0)
-      .select(col("x").as("qv"), col("cell").as("qcell"))
-    val splitCents = Tables.read(s, s"${ix.root}/coarse_split", Some(splitCentsSchema))
-    val splitCells = Tables.read(s, s"${ix.root}/cells_split", Some(splitCellsSchema))
-    val splitGs = splitCents.select("cell").distinct()
-    // unsplit cell → the whole-cell scan, exactly knnIvfKmeans' pool
-    val candRaw = cells.join(broadcast(q), col("cell") === col("qcell"))
-      .join(broadcast(splitGs.select(col("cell").as("scell"))),
-        col("cell") === col("scell"), "left_anti")
-      .select("vec_id")
-    // split cell → residual-assign the query, scan its nearest sub-cells
-    val qres = q.join(broadcast(coarse), col("qcell") === col("cid"))
-      .select(col("qcell"),
-        zip_with(col("qv"), col("cv"), (a, b) => r6(a - b)).as("qr"))
-    val top = splitCents.join(broadcast(qres), col("cell") === col("qcell"))
-      .select(col("cell"), col("scid"), sqDist(col("qr"), col("scv")).as("d"))
-      .orderBy(col("d").asc, col("scid").asc).limit(SplitProbes)
-      .select(col("cell"), col("scid"))
-    val candSplit = splitCells
-      .join(broadcast(top), Seq("cell", "scid"), "left_semi")
-      .select("vec_id")
-    // Pool floor (review r12): sub-cells that lose every point during
-    // the grouped Lloyd can leave the SplitProbes pool below K — the
-    // scaladoc's "pool must stay >= K" was asserted, not enforced. When
-    // the narrowed pool can't fill the top-K, fall back to the whole
-    // cell (exactly the unsplit scan) rather than silently returning a
-    // short result; the pool count is a broadcast scalar, so both
-    // branches stay one filter each. The oracle mirrors the same rule.
-    val pool = broadcast(candSplit.agg(count(lit(1)).as("pool")))
-    val candSplitOk = candSplit.crossJoin(pool)
-      .filter(col("pool") >= K).select("vec_id")
-    val candWide = cells.join(broadcast(q), col("cell") === col("qcell"))
-      .join(broadcast(splitGs.select(col("cell").as("wcell"))),
-        col("cell") === col("wcell"), "left_semi")
-      .crossJoin(pool).filter(col("pool") < K).select("vec_id")
-    candRaw.union(candSplitOk).union(candWide)
+      .select(col("vec_id").as("query_id"), col("x").as("qx"),
+        col("cell").as("qcell"))
+    splitAwarePool(q, cells, Tables.read(s, ix.coarse), Some(ix.root), K)
       .join(e, "vec_id")
-      .crossJoin(broadcast(q.select("qv")))
-      .select(col("vec_id"), cosine(col("x"), col("qv")).as("cos"))
+      .crossJoin(broadcast(q.select("qx")))
+      .select(col("vec_id"), cosine(col("x"), col("qx")).as("cos"))
       .orderBy(col("cos").desc, col("vec_id").asc)
       .limit(K)
+  }
+
+  /** (query_id, qx) queries with `qcell`, each query's nearest stored
+    * coarse centroid — the assignment an unindexed query needs before
+    * [[splitAwarePool]]. */
+  private[graft] def queryCells(q: DataFrame, coarse: DataFrame): DataFrame =
+    assignCells(q.select(col("query_id").as("vec_id"), col("qx").as("x")),
+        coarse, carry = Seq("x"))
+      .select(col("vec_id").as("query_id"), col("x").as("qx"),
+        col("cell").as("qcell"))
+
+  /** The ONE split-aware IVF candidate pool, for any number of queries:
+    * [[knnIvfSplit]] runs it for one query, the streaming ANN probe per
+    * micro-batch. `q` is (query_id, qx, qcell), `cells` the (vec_id,
+    * cell) membership the caller resolved, `splitRoot` the index root
+    * when it carries a committed split. Returns (query_id, vec_id): the
+    * whole cell for a query in an unsplit cell; else the [[SplitProbes]]
+    * sub-cells nearest its residual, ranked by (distance, scid), unless
+    * they hold fewer than `k` vectors — then the whole cell (review r12:
+    * the floor is enforced, not assumed). The matched sub-cell members
+    * feed three branches; `pin` lets a per-batch caller materialize them
+    * once. */
+  private[graft] def splitAwarePool(q: DataFrame, cells: DataFrame,
+                                    coarse: DataFrame, splitRoot: Option[String],
+                                    k: Int,
+                                    pin: DataFrame => DataFrame = identity): DataFrame = {
+    val s = q.sparkSession
+    val whole = cells
+      .join(broadcast(q.select("query_id", "qcell")), col("cell") === col("qcell"))
+    splitRoot match {
+      case None => whole.select("query_id", "vec_id")
+      case Some(root) =>
+        val splitCents = Tables.read(s, s"$root/coarse_split", Some(splitCentsSchema))
+        val splitCells = Tables.read(s, s"$root/cells_split", Some(splitCellsSchema))
+        val splitGs = broadcast(splitCents.select(col("cell").as("scell")).distinct())
+        val qres = q.join(broadcast(coarse), col("qcell") === col("cid"))
+          .select(col("query_id"), col("qcell"),
+            zip_with(col("qx"), col("cv"), (a, b) => r6(a - b)).as("qr"))
+        val w = Window.partitionBy("query_id").orderBy(col("d").asc, col("scid").asc)
+        val top = splitCents.join(broadcast(qres), col("cell") === col("qcell"))
+          .select(col("query_id"), col("cell"), col("scid"),
+            sqDist(col("qr"), col("scv")).as("d"))
+          .withColumn("rn", row_number().over(w))
+          .filter(col("rn") <= SplitProbes)
+          .select("query_id", "cell", "scid")
+        val matched = pin(splitCells.join(broadcast(top), Seq("cell", "scid"))
+          .select("query_id", "vec_id"))
+        val full = broadcast(matched.groupBy("query_id").agg(count(lit(1)).as("pool"))
+          .filter(col("pool") >= k).select("query_id"))
+        whole.join(splitGs, col("qcell") === col("scell"), "left_anti")
+          .select("query_id", "vec_id")
+          .union(matched.join(full, Seq("query_id"), "left_semi"))
+          .union(whole.join(splitGs, col("qcell") === col("scell"), "left_semi")
+            .join(full, Seq("query_id"), "left_anti")
+            .select("query_id", "vec_id"))
+    }
+  }
+
+  /** The ONE whole-batch vector guard (the facade encoders and append,
+    * the streaming ANN adapters): one aggregate over `x` fails on a null
+    * vector (counted explicitly — min/max over size() skip nulls, review
+    * r10), on mixed widths (not just a wrong first row) and, when
+    * `index` gives a stored (root, dim), on any other width. Returns the
+    * uniform width, or None for an empty frame, whose meaning is the
+    * caller's decision. */
+  private[graft] def checkedDim(e: DataFrame, what: String,
+                                index: Option[(String, Int)] = None): Option[Int] = {
+    val st = e.agg(count(lit(1)), count_if(col("x").isNull),
+      min(size(col("x"))), max(size(col("x")))).head()
+    require(st.getLong(1) == 0L,
+      s"${st.getLong(1)} null vectors in $what — drop or impute upstream")
+    if (st.getLong(0) == 0L) None
+    else {
+      val (lo, hi) = (st.getInt(2), st.getInt(3))
+      require(lo == hi,
+        s"ragged vector lengths in $what: dims in [$lo, $hi] — uniform length required")
+      index.foreach { case (root, d) => require(lo == d,
+        s"$what holds dim=$lo vectors; the index at $root serves dim=$d") }
+      Some(lo)
+    }
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

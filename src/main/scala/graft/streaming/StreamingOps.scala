@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
   GroupStateTimeout, ListState, MapState, OutputMode, StatefulProcessor,
@@ -39,6 +39,15 @@ final case class CurDocRow(doc_id: Long, text: String, n_chars: Long)
   *    the batch window form pays;
   *  - dedup-within-watermark holds only ids seen inside the watermark
   *    horizon, the streaming analogue of the band-bucket dedup.
+  *
+  * One contract per stateful operator, stated in its scaladoc as one of:
+  * EXACT for any arrival order the watermark admits (rows later than the
+  * watermark are dropped), or BOUNDED state per key that is exact for an
+  * event-time-ordered feed — and ORDER-FREE where that answer does not
+  * depend on arrival order at all. The `foreachBatch` bodies for the
+  * stored indexes are adapters: each runs the batch core from
+  * [[graft.ops]] (geometry guard, encode, candidate pool, verdict) on
+  * one micro-batch and lands it through [[idempotentBatchWriter]].
   */
 object StreamingOps {
 
@@ -63,7 +72,9 @@ object StreamingOps {
       .json(dir)
 
   /** Tumbling 1-hour counts/sums per event type — streaming twin of
-    * [[graft.ops.EventOps.eventsTumblingAgg]]. */
+    * [[graft.ops.EventOps.eventsTumblingAgg]]. Contract: exact inside
+    * the 2 h watermark; a window emits in append mode once the
+    * watermark passes its end. */
   def tumblingAgg(ev: DataFrame): DataFrame =
     ev.withWatermark("ts", "2 hours")
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
@@ -84,7 +95,8 @@ object StreamingOps {
     * state is watermark-bounded and closed hourly windows emit in append
     * mode; the containing hour is identical to windowing the minute start.
     * The second level's input is minute-cardinality, so its state is
-    * trivially small at any event rate. */
+    * trivially small at any event rate. Contract: exact inside the 2 h
+    * watermark; an hourly row emits once the watermark closes it. */
   def twoLevelAgg(ev: DataFrame): DataFrame = {
     val minutely = ev.withWatermark("ts", "2 hours")
       .groupBy(window(col("ts"), "1 minute").as("mw"), col("event_type"))
@@ -98,7 +110,14 @@ object StreamingOps {
   }
 
   /** 30-min-gap session windows per user — streaming twin of
-    * [[graft.ops.EventOps.eventsSessionWindow]]. */
+    * [[graft.ops.EventOps.eventsSessionWindow]], and the one sessionizer:
+    * Spark's native `session_window` merges sessions in state, so it
+    * needs no hand-written reorder buffer. Contract: exact for any
+    * arrival order inside the 2 h watermark — a late event inside a
+    * session's gap lands in that session, and one that bridges two
+    * sessions merges them. A session is (user_id, first event, last
+    * event + 30 min, n_events); in append mode it emits once, when the
+    * watermark passes its end. */
   def sessionAgg(ev: DataFrame): DataFrame =
     ev.withWatermark("ts", "2 hours")
       .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("w"))
@@ -107,7 +126,9 @@ object StreamingOps {
         col("w.end").as("sess_end"), col("n_events"))
 
   /** Exactly-once-ish ingest dedup: drop event_id duplicates arriving
-    * within the watermark horizon. */
+    * within the watermark horizon. Contract: exact inside the 2 h
+    * watermark — the first delivery of an event_id passes, every
+    * re-delivery within the horizon is dropped. */
   def dedupWithinWatermark(ev: DataFrame): DataFrame =
     ev.withWatermark("ts", "2 hours")
       .dropDuplicatesWithinWatermark(Seq("event_id"))
@@ -121,7 +142,8 @@ object StreamingOps {
     * purchases ≤ 30 min after it, so once the purchase-side watermark
     * passes v_ts + 30 min the row is dropped. Unbounded stream-stream
     * joins (no time bound) accumulate state forever — at 100 TB/day the
-    * interval bound IS the operator. */
+    * interval bound IS the operator. Contract: exact for any arrival
+    * order the 2 h watermarks admit. */
   def viewPurchaseJoin(ev: DataFrame): DataFrame =
     viewPurchaseJoinOfType(ev, "inner")
 
@@ -291,350 +313,117 @@ object StreamingOps {
 
   /** Streaming incremental-curation verdict against the STORED base
     * artifacts — the `foreachBatch` twin of the registry's
-    * `curation_incremental` (L18d), for the steady-state ingest where
-    * documents arrive as a stream: each micro-batch gets quality /
+    * `curation_incremental` (L18d): each micro-batch gets the quality /
     * exact-dup / near-dup / decontamination signals and the
-    * first-failing-stage verdict, probing
-    *
-    *   - `baseFpsPath`: the base corpus's distinct text fingerprints
-    *     (one `fp` column; tiny, broadcast),
-    *   - `indexBandsPath`: the persisted base MinHash postings (same
-    *     table [[dedupBatchAgainstIndex]] probes; geometry-guarded),
-    *   - `evalShinglesPath`: the eval slice's shingle set (one `x`
-    *     column; broadcast).
-    *
-    * Only the micro-batch tokenizes/shingles/signs; the stored side is
-    * fixed-width scalar tables — per-batch cost O(batch), the corpus
-    * never re-read. Results land through the idempotent
-    * partition-per-batch sink (at-least-once replay ×
-    * [[idempotentBatchWriter]] = exactly-once verdicts). StreamingSpec
-    * pins stream == the one-shot registry op on the same batch. */
+    * first-failing-stage verdict, probing `baseFpsPath` (the base
+    * corpus's distinct text fingerprints, one `fp` column), the
+    * geometry-guarded postings under `indexBandsPath` (the table
+    * [[dedupBatchAgainstIndex]] probes) and `evalShinglesPath` (the eval
+    * slice's shingle set, one `x` column). The quality rule, the
+    * decontamination ratio and the verdict are the registry's own
+    * ([[graft.ops.PipelineOps.curationVerdicts]]), so the two cannot
+    * disagree. Only the micro-batch is tokenized; per-batch cost is
+    * O(batch). Exactly-once verdicts through [[idempotentBatchWriter]];
+    * StreamingSpec pins stream == the one-shot registry op. */
   def curationVerdictBatch(indexBandsPath: String, baseFpsPath: String,
                            evalShinglesPath: String, outPath: String,
                            id: String, text: String, nChars: String,
-                           numHashes: Int = 128, bands: Int = 16,
-                           minChars: Long = 150, maxChars: Long = 450,
-                           maxRep: Double = 2.5, contamMin: Double = 0.3)
+                           numHashes: Int = 128, bands: Int = 16)
                           (batch: DataFrame, batchId: Long): Unit = {
+    import graft.ops.PipelineOps.{contaminatedIds, curationVerdicts, qualityOk}
     val s = batch.sparkSession
     requireBanding(indexBandsPath, numHashes, bands)
-    val toks = split(col(text), " ")
-    val qOk = col(nChars) >= minChars && col(nChars) <= maxChars &&
-      size(toks).cast("double") / size(array_distinct(toks)) <= maxRep
     val baseFps = Tables.read(s, baseFpsPath)
       .select("fp").distinct().withColumn("seen", lit(true))
     val nearHits = fineUnionHits(indexBandsPath, batch, id, text,
       numHashes, bands).withColumn("near", lit(true))
-    val evalSet = Tables.read(s, evalShinglesPath).select("x").distinct()
-    val sh = graft.api.GraftAPI.shingleRows(batch, id, text)
-    val tot = sh.groupBy(id).agg(count(lit(1)).as("n_shingles"))
-    val hits = sh.join(broadcast(evalSet), "x")
-      .groupBy(id).agg(count(lit(1)).as("n_overlap"))
-    val cont = tot.join(hits, id)
-      .filter(graft.Tables.r6(
-        col("n_overlap").cast("double") / col("n_shingles")) >= contamMin)
-      .select(id).withColumn("cont", lit(true))
-    val out = batch.select(col(id), qOk.as("q_ok"), md5(col(text)).as("fp"))
-      .join(broadcast(baseFps), Seq("fp"), "left")
-      .join(nearHits, Seq(id), "left")
-      .join(cont, Seq(id), "left")
-      .select(col(id), col("q_ok"),
-        coalesce(col("seen"), lit(false)).as("exact_dup"),
-        coalesce(col("near"), lit(false)).as("near_dup"),
-        coalesce(col("cont"), lit(false)).as("contaminated"))
-      .select(col(id), col("q_ok"), col("exact_dup"), col("near_dup"),
-        col("contaminated"),
-        when(!col("q_ok"), "quality")
-          .when(col("exact_dup"), "exact_dup")
-          .when(col("near_dup"), "near_dup")
-          .when(col("contaminated"), "contaminated")
-          .otherwise("keep").as("verdict"))
-    idempotentBatchWriter(outPath)(out, batchId)
+    val contam = contaminatedIds(graft.api.GraftAPI.shingleRows(batch, id, text),
+      id, Tables.read(s, evalShinglesPath).select("x").distinct())
+    idempotentBatchWriter(outPath)(curationVerdicts(
+      batch.select(col(id), qualityOk(text, nChars).as("q_ok"), md5(col(text)).as("fp")),
+      id, baseFps, nearHits, contam), batchId)
   }
 
-  /** Streaming ANN probe against the STORED IVF index — the serving face
-    * of `build_ivfpq_index`'s artifact, shipped as a `foreachBatch` body:
-    * `queries.writeStream.foreachBatch(annProbeBatch(corpusPath, ixRoot,
-    * out, "qid", "qvec") _)`. Each micro-batch of (id, vector) queries is
-    * coarse-assigned against the stored centroid table (broadcast-argmin
-    * over the tiny batch), joins ONLY its assigned cells' corpus vectors
-    * — with a cell-partitioned corpus layout at 100 TB that join is a
-    * partition-pruned scan, never the full corpus — and lands per-query
-    * cosine top-k through the idempotent partition-per-batch sink
-    * (at-least-once replay × [[idempotentBatchWriter]] = exactly-once
-    * results). Scores are EXACT over the probed pool; the pool is the
-    * assigned cell, or — when the index root carries a committed cell
-    * split (r12) — that cell's nearest sub-cells, which is approximate
-    * at the cell level exactly like narrowing nprobe (pool ≥ k enforced
-    * via whole-cell fallback; retiring the split marker restores
-    * whole-cell pools). Index and corpus frames are bound per batch
-    * (read inside foreachBatch), so a re-trained/compacted/re-split
-    * index is picked up at the next batch boundary, not mid-query. */
+  /** Streaming ANN probe against the STORED IVF index, shipped as a
+    * `foreachBatch` body: `queries.writeStream.foreachBatch(
+    * annProbeBatch(corpusPath, ixRoot, out, "qid", "qvec") _)`. Each
+    * micro-batch of (id, vector) queries is the batch probe run on one
+    * arrival: the dim guard ([[graft.ops.VectorOps.checkedDim]]), the
+    * coarse assignment, and `knn_ivf_split`'s candidate pool
+    * ([[graft.ops.VectorOps.splitAwarePool]]; its matched sub-cell
+    * members are localCheckpointed, so `cells_split` is read once per
+    * batch). Exact snapped-cosine top-k per query lands exactly-once
+    * through [[idempotentBatchWriter]]. Index and corpus frames are read
+    * per batch, so a re-trained/compacted/re-split index is picked up at
+    * the next batch boundary, not mid-query. */
   def annProbeBatch(corpusPath: String, indexRoot: String, outPath: String,
                     qId: String, qVec: String,
                     cId: String = "vec_id", cVec: String = "embedding",
                     k: Int = 10)(batch: DataFrame, batchId: Long): Unit = {
+    import graft.ops.{IndexFs, VectorOps}
     val s = batch.sparkSession
-    val coarse = Tables.read(s, s"$indexRoot/coarse")
-    // Pool membership through the probe-root resolver (r13, the ANN
-    // mirror of the dedup twins' resolution): a committed codes compact
-    // (one (vec_id, cell) row per vector at m = 0), else the cells table
-    // ∪ any committed codes delta — so a vector appended against the
-    // stored codebooks is servable from the very next micro-batch. An
-    // append into a SPLIT cell is served through the whole-cell/fallback
-    // paths after the next split refresh (the maintenance job); unsplit
-    // cells serve appends immediately.
-    val cells = {
-      // Declared schema (review r13, the codesSchema rule): a corpus
-      // whose held-out slice is empty commits a data-file-less delta,
-      // and inference on it would fail every micro-batch — the resolver
-      // must serve the cells table alone, not crash the probe.
-      def m0(paths: Seq[String]) = Tables.readAll(s, paths, Some(graft.ops.VectorOps.codesSchema))
-        .filter(col("m") === 0).select("vec_id", "cell")
-      val delta = graft.ops.IndexFs.child(indexRoot, "ivfpq_codes_delta")
-      graft.ops.IndexFs.resolve(graft.ops.IndexFs.child(indexRoot, "ivfpq_codes_compact"),
-        Tables.read(s, s"$indexRoot/cells"),
-        Seq(delta).filter(graft.ops.IndexFs.committed(_)))(p => m0(Seq(p)), m0)
-    }
-    def dot2(a: Column, b: Column) = graft.functions.VectorFunctions.graftDot(a, b)
     val q = batch.select(col(qId).as("query_id"),
       col(qVec).cast("array<double>").as("qx"))
-    // geometry guard: a query whose dimensionality differs from the
-    // trained index would score garbage distances; the stored manifest
-    // makes it a loud failure on the (tiny) batch instead. The WHOLE
-    // batch is validated (ADVICE r8 — min==max==dim in one aggregate
-    // over the micro-batch), not just its first row: a batch mixing
-    // correct- and wrong-width vectors must fail, not score silently.
-    graft.ops.Artifacts.readMeta(indexRoot).get("dim").foreach { d =>
-      // min/max over size() SKIP null rows (review r10), so null vectors
-      // are counted explicitly — a null query must fail loudly here, not
-      // argmin to an arbitrary lowest-cid cell and return garbage.
-      q.agg(min(size(col("qx"))).as("lo"), max(size(col("qx"))).as("hi"),
-          sum(when(col("qx").isNull, 1L).otherwise(0L)).as("nnull"))
-        .take(1).foreach { r =>
-          require(r.getLong(2) == 0L,
-            s"batch contains ${r.getLong(2)} null query vector(s); " +
-              s"index at $indexRoot serves dim=$d vectors")
-          if (!r.isNullAt(0)) require(r.getInt(0) == d.toInt && r.getInt(1) == d.toInt,
-            s"index at $indexRoot serves dim=$d vectors; batch has " +
-              s"dims in [${r.getInt(0)}, ${r.getInt(1)}]")
-        }
-    }
-    val qa = graft.ops.VectorOps.assignCells(
-        q.select(col("query_id").as("vec_id"), col("qx").as("x")), coarse)
-      .select(col("vec_id").as("query_id"), col("cell").as("qcell"))
-    val qfull = broadcast(q.join(qa, "query_id"))
-    // Split-aware candidate pool (r12): when the index root carries a
-    // COMMITTED cell split (artifacts bind per batch, like a
-    // compacted/re-trained index), a query landing in a split
-    // cell scans only its nearest sub-cells instead of max_cell
-    // vectors, with the same per-query pool >= k floor the batch probe
-    // enforces (whole-cell fallback). Unsplit indexes and unsplit cells
-    // keep the exact pre-split pool.
-    val cand: DataFrame =
-      if (!graft.ops.IndexFs.committed(indexRoot, graft.ops.IndexFs.Split)) {
-        cells.join(qfull, col("cell") === col("qcell"))
-          .select(col("query_id"), col("qx"), col("vec_id"))
-      } else {
-        def sq(x: Column, cv: Column): Column =
-          graft.Tables.r6(dot2(x, x) - lit(2) * dot2(x, cv) + dot2(cv, cv))
-        val splitCents = Tables.read(s, s"$indexRoot/coarse_split",
-          Some(graft.ops.VectorOps.splitCentsSchema))
-        val splitCells = Tables.read(s, s"$indexRoot/cells_split",
-          Some(graft.ops.VectorOps.splitCellsSchema))
-        val splitGs = broadcast(splitCents
-          .select(col("cell").as("scell")).distinct())
-        val qres = qfull.join(broadcast(coarse), col("qcell") === col("cid"))
-          .select(col("query_id"), col("qcell"),
-            zip_with(col("qx"), col("cv"),
-              (a, b) => graft.Tables.r6(a - b)).as("qrx"))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("query_id")
-          .orderBy(col("d").asc, col("scid").asc)
-        val topPer = broadcast(splitCents
-          .join(broadcast(qres), col("cell") === col("qcell"))
-          .select(col("query_id"), col("cell"), col("scid"),
-            sq(col("qrx"), col("scv")).as("d"))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= graft.ops.VectorOps.SplitProbes)
-          .select(col("query_id"), col("cell"), col("scid")))
-        // ONE scan of cells_split serves both the pool count and the
-        // candidate set (review r12): the matched frame is pool-sized
-        // (probed sub-cells' members), so an eager localCheckpoint is
-        // cheap and halves the side-table I/O per micro-batch.
-        val matched = splitCells
-          .join(topPer, Seq("cell", "scid"))
-          .select(col("query_id"), col("vec_id"))
-          .localCheckpoint()
-        val poolPer = broadcast(matched
-          .groupBy(col("query_id")).agg(count(lit(1)).as("pool")))
-        val candRaw = cells.join(qfull, col("cell") === col("qcell"))
-          .join(splitGs, col("qcell") === col("scell"), "left_anti")
-          .select(col("query_id"), col("qx"), col("vec_id"))
-        val candSplit = matched
-          .join(poolPer.filter(col("pool") >= k), "query_id")
-          .join(qfull.select(col("query_id").as("qid2"), col("qx")),
-            col("query_id") === col("qid2"))
-          .select(col("query_id"), col("qx"), col("vec_id"))
-        // pool < k (or 0 — no row in poolPer): whole split cell
-        val underfilled = broadcast(qfull
-          .join(splitGs, col("qcell") === col("scell"), "left_semi")
-          .join(poolPer, Seq("query_id"), "left")
-          .filter(coalesce(col("pool"), lit(0L)) < k)
-          .select(col("query_id"), col("qx"), col("qcell")))
-        val candWide = cells
-          .join(underfilled, col("cell") === col("qcell"))
-          .select(col("query_id"), col("qx"), col("vec_id"))
-        candRaw.unionByName(candSplit).unionByName(candWide)
-      }
+    VectorOps.checkedDim(q.select(col("qx").as("x")), "the query batch",
+      Some((indexRoot, graft.ops.IvfPqIndex.geometry(indexRoot)._2)))
+    val coarse = Tables.read(s, s"$indexRoot/coarse")
+    val qc = broadcast(VectorOps.queryCells(q, coarse))
+    val pool = VectorOps.splitAwarePool(qc, resolvedCells(s, indexRoot), coarse,
+      Some(indexRoot).filter(IndexFs.committed(_, IndexFs.Split)), k, _.localCheckpoint())
     val scored = Tables.read(s, corpusPath)
       .select(col(cId).as("corpus_id"), col(cVec).cast("array<double>").as("cx"))
-      .join(cand, col("corpus_id") === col("vec_id"))
+      .join(pool.join(qc.select("query_id", "qx"), "query_id"),
+        col("corpus_id") === col("vec_id"))
       .select(col("query_id"), col("corpus_id"),
-        graft.Tables.r6(dot2(col("cx"), col("qx")) /
-          (sqrt(dot2(col("cx"), col("cx"))) * sqrt(dot2(col("qx"), col("qx")))))
-          .as("cosine"))
-    val topk = graft.api.GraftAPI
-      .topKPerGroup(scored, Seq("query_id"), "cosine", "corpus_id", k)
-    idempotentBatchWriter(outPath)(topk, batchId)
+        VectorOps.cosine(col("cx"), col("qx")).as("cosine"))
+    idempotentBatchWriter(outPath)(graft.api.GraftAPI
+      .topKPerGroup(scored, Seq("query_id"), "cosine", "corpus_id", k), batchId)
+  }
+
+  /** Pool membership through the probe-root resolver (r13): a committed
+    * codes compact, else `cells` ∪ any committed codes delta (rows at
+    * m = 0), so an appended vector is servable from the next micro-batch
+    * (in a SPLIT cell, after the next split refresh). The siblings read
+    * through the declared codes schema: a data-file-less delta must not
+    * fail inference on every micro-batch. */
+  private def resolvedCells(s: SparkSession,
+                            indexRoot: String): DataFrame = {
+    import graft.ops.IndexFs
+    def m0(paths: Seq[String]) = Tables.readAll(s, paths, Some(graft.ops.VectorOps.codesSchema))
+      .filter(col("m") === 0).select("vec_id", "cell")
+    val delta = IndexFs.child(indexRoot, "ivfpq_codes_delta")
+    IndexFs.resolve(IndexFs.child(indexRoot, "ivfpq_codes_compact"),
+      Tables.read(s, s"$indexRoot/cells"),
+      Seq(delta).filter(IndexFs.committed(_)))(p => m0(Seq(p)), m0)
   }
 
   /** Streaming ANN index APPEND against the STORED codebooks — the
-    * `foreachBatch` twin of the registry's `ann_index_append` (L3j) and
-    * the streaming face of [[graft.jobs.DailyIncrement]]'s ANN leg, for
-    * the steady-state ingest where vectors arrive as a stream: each
-    * micro-batch of (id, vector) rows is coarse-assigned via the
-    * persisted centroid table and residual-encoded via the persisted
-    * residual codebooks — NO retraining, the deterministic-codebook
-    * append contract — and its (vec_id, m, code, cell) rows land through
-    * the idempotent partition-per-batch sink (at-least-once source
-    * replay × [[idempotentBatchWriter]] = exactly-once index rows).
-    * The delta arrives partitioned by batch_id (retention/backfill
-    * granular); a compaction job folds it into the cell-partitioned base
-    * exactly like `ann_index_compact`. Per-batch cost: two broadcast
-    * joins over the micro-batch + one write — the corpus floats and the
-    * stored base codes are never read. Codebook tables are bound per
-    * batch (read inside foreachBatch), so a re-trained index is picked
-    * up at the next batch boundary, not mid-query. Dim geometry is
-    * whole-batch-guarded like [[annProbeBatch]] (ADVICE r8: a batch
-    * mixing correct- and wrong-width vectors must fail, not encode
-    * silently). */
+    * `foreachBatch` twin of the registry's `ann_index_append` (L3j): the
+    * dim guard ([[graft.ops.VectorOps.checkedDim]]), then the one
+    * stored-codebook encode ([[graft.ops.VectorOps.encodeAgainstStored]],
+    * no retraining) at the index's recorded (m, dim), then exactly-once
+    * (vec_id, m, code, cell) rows through [[idempotentBatchWriter]],
+    * partitioned by batch_id for a compaction job to fold in like
+    * `ann_index_compact`. Codebooks are read per batch, so a re-trained
+    * index is picked up at the next batch boundary. */
   def annAppendBatch(indexRoot: String, outPath: String,
                      id: String, vec: String)
                     (batch: DataFrame, batchId: Long): Unit = {
-    import graft.ops.VectorOps.{PqM, PqSub}
     val s = batch.sparkSession
+    val (m, dim) = graft.ops.IvfPqIndex.geometry(indexRoot)
     val e = batch.select(col(id).as("vec_id"),
       col(vec).cast("array<double>").as("x"))
-    graft.ops.Artifacts.readMeta(indexRoot).get("dim").foreach { d =>
-      // Null vectors are counted explicitly (review r10): min/max over
-      // size() skip null rows, and a null vector would otherwise encode
-      // silently — null residuals argmin to an arbitrary lowest-cid
-      // codebook entry and a fabricated code row lands in the delta.
-      e.agg(min(size(col("x"))).as("lo"), max(size(col("x"))).as("hi"),
-          sum(when(col("x").isNull, 1L).otherwise(0L)).as("nnull"))
-        .take(1).foreach { r =>
-          require(r.getLong(2) == 0L,
-            s"batch contains ${r.getLong(2)} null vector(s); " +
-              s"index at $indexRoot encodes dim=$d vectors")
-          if (!r.isNullAt(0)) require(r.getInt(0) == d.toInt && r.getInt(1) == d.toInt,
-            s"index at $indexRoot encodes dim=$d vectors; batch has " +
-              s"dims in [${r.getInt(0)}, ${r.getInt(1)}]")
-        }
-    }
-    val coarse = Tables.read(s, s"$indexRoot/coarse")
-    val books = Tables.read(s, s"$indexRoot/ivfpq_codebooks")
-    // Lazy persist (review r10): the assignment feeds TWO consumers (the
-    // residual join and the final code join) on a per-trigger hot path —
-    // without the pin every micro-batch pays the broadcast-argmin twice.
-    // The single sink write materializes both branches in one job;
-    // unpersisted after the write (foreachBatch owns the lifecycle).
-    val bCells = graft.ops.VectorOps.assignCells(e, coarse).persist()
-    val remLong = e.join(bCells, "vec_id")
-      .join(broadcast(coarse), col("cell") === col("cid"))
-      .select(col("vec_id"), col("cell"),
-        zip_with(col("x"), col("cv"), (a, b) => graft.Tables.r6(a - b)).as("rx"))
-      .select(col("vec_id"), posexplode(array((0 until PqM).map(m =>
-        slice(col("rx"), m * PqSub + 1, PqSub)): _*)))
-      .select(col("vec_id"), col("pos").cast("int").as("m"), col("col").as("x"))
-    val codes = graft.ops.VectorOps
-      .assignCellsLong(remLong.select("m", "vec_id", "x"), books)
-      .select(col("vec_id"), col("m"), col("cell").as("code"))
-      .join(bCells, "vec_id")
-      .select(col("vec_id"), col("m"), col("code"), col("cell"))
-    try idempotentBatchWriter(outPath)(codes, batchId)
-    finally bCells.unpersist(false)
+    graft.ops.VectorOps.checkedDim(e, "the batch", Some((indexRoot, dim)))
+    idempotentBatchWriter(outPath)(graft.ops.VectorOps.encodeAgainstStored(e,
+      Tables.read(s, s"$indexRoot/coarse"),
+      Tables.read(s, s"$indexRoot/ivfpq_codebooks"), m, dim / m), batchId)
   }
 
   /** Query-vector row for the streaming ANN probe spec. */
   final case class VecRow(vec_id: Long, embedding: Seq[Double])
 
-  /** Closed session emitted by the custom sessionizer (epoch-µs bounds). */
-  final case class Session(user_id: Long, start_us: Long, end_us: Long, n_events: Long)
-
   private def micros(ts: java.sql.Timestamp): Long =
     (ts.getTime / 1000L) * 1000000L + ts.getNanos / 1000L
-
-  private val GapUs = 30L * 60 * 1000000
-
-  /** Custom-state sessionization via `flatMapGroupsWithState` — the
-    * operator you write when built-in `session_window` can't express the
-    * state machine (per-session enrichment, abandonment timers, …). State
-    * per user = the open session; a ≥30-min gap closes it and emits. In
-    * batch mode each group arrives complete (unordered — hence the sort)
-    * and every session closes at group end; in streaming the same function
-    * runs incrementally with the state store holding the open session.
-    * Cross-batch late arrivals (an event OLDER than the open session's
-    * end) merge with MONOTONE bounds — min/max, never assignment — so a
-    * late event can widen the open session backwards but can never drag
-    * `end_us` back and corrupt the next event's gap decision (review r10).
-    * A straggler a FULL gap older than the open session's start belongs
-    * to an earlier, implicitly-closed session — it emits as its own
-    * closed single-event session instead of gluing across a ≥30-min gap
-    * (the one approximation O(1) state allows: two such stragglers
-    * within a gap of EACH OTHER emit as two sessions where a full replay
-    * would merge them; exactness under arbitrary reordering needs a
-    * watermark reorder buffer, see [[OrderedTransitionsProcessor]]).
-    * In batch the per-group sort makes all three rules no-ops. */
-  def sessionizeCustom(ev: Dataset[Ev]): Dataset[Session] = {
-    val sq = ev.sparkSession; import sq.implicits._
-    val streaming = ev.isStreaming // plan property — resolve driver-side, not in the closure
-    ev.groupByKey(_.user_id)
-      .flatMapGroupsWithState[Option[Session], Session](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, it: Iterator[Ev], state: GroupState[Option[Session]]) =>
-          val closed = Seq.newBuilder[Session]
-          var open: Option[Session] = state.getOption.flatten
-          it.toSeq.sortBy(e => (micros(e.ts), e.event_id)).foreach { e =>
-            val t = micros(e.ts)
-            open = open match {
-              // beyond-reorder straggler: ≥ a full gap OLDER than the open
-              // session's start — its own session, never a merge (the
-              // signed gap check below would otherwise glue it across
-              // hours). `<=`, not `<` (ADVICE r10): at exactly one full
-              // gap the batch split rule (gap >= GapUs) closes, so the
-              // straggler guard must too — `<` let the boundary case fall
-              // through and glue. Unreachable in batch (per-group sort).
-              case Some(s) if t <= s.start_us - GapUs =>
-                closed += Session(uid, t, t, 1)
-                Some(s)
-              case Some(s) if t - s.end_us < GapUs =>
-                Some(s.copy(start_us = math.min(s.start_us, t),
-                  end_us = math.max(s.end_us, t), n_events = s.n_events + 1))
-              case Some(s) =>
-                closed += s
-                Some(Session(uid, t, t, 1))
-              case None =>
-                Some(Session(uid, t, t, 1))
-            }
-          }
-          state.update(open)
-          // Batch: the group is complete, so the open session is final.
-          // Streaming: it stays in state until a later batch closes it.
-          val tail = if (!streaming) open.toSeq else Nil
-          (closed.result() ++ tail).iterator
-      }
-  }
 
   /** Output row of [[runningTotalTws]]: cumulative spend per user in
     * exact integer cents (no FP accumulation drift in state). */
@@ -648,7 +437,10 @@ object StreamingOps {
     * with an event-time-ordered feed the stream output equals the batch
     * cumulative-sum window ([[graft.ops.EventOps.eventsRunningTotal]],
     * the oracle-checked twin). Batch execution runs the same processor
-    * with each group arriving complete. */
+    * with each group arriving complete. Contract: bounded state, exact
+    * for an event-time-ordered feed; a row arriving after a later row of
+    * its user is summed in arrival order, so the total stays right but
+    * the cumulative rows in between do not. */
   class RunningTotalProcessor extends StatefulProcessor[Long, Ev, RunningTotal] {
     @transient private var total: ValueState[Long] = _
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
@@ -679,52 +471,11 @@ object StreamingOps {
         TimeMode.None(), OutputMode.Append())
   }
 
-  /** One behavioral transition emitted by [[transitionsStream]]. */
+  /** One behavioral transition emitted by [[transitionsTwsOrdered]]. */
   final case class Transition(user_id: Long, prev_type: String, event_type: String)
 
-  /** E10's streaming form — stateful PAIRWISE emission: state is the
-    * user's single most recent event; every arriving event emits the
-    * (prev_type, event_type) pair and replaces the state, so a
-    * micro-batch boundary between two events of one user loses nothing.
-    * Downstream, the append stream of pairs feeds the same count/
-    * probability aggregation as the batch matrix
-    * ([[graft.ops.EventOps.eventsTransitions]] — StreamingSpec asserts
-    * the aggregated equality). O(1) state per user, same discipline as
-    * [[latestByUser]].
-    *
-    * Late-arrival contract (review r10): with one event of state, a
-    * cross-batch late arrival (event-time OLDER than the stored prev)
-    * cannot recover the pairs an exact replay would produce — that needs
-    * the watermark-buffered [[transitionsTwsOrdered]]. What this op
-    * guarantees instead: every emitted pair is ordered by EVENT time
-    * (never a fabricated reversed transition), and the state is always
-    * the user's latest-by-event-time event (a late straggler never
-    * displaces a newer prev). In-order feeds are exact. */
-  def transitionsStream(ev: Dataset[Ev]): Dataset[Transition] = {
-    val sq = ev.sparkSession; import sq.implicits._
-    ev.groupByKey(_.user_id)
-      .flatMapGroupsWithState[Option[Ev], Transition](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, it: Iterator[Ev], state: GroupState[Option[Ev]]) =>
-          def key(e: Ev): (Long, Long) = (micros(e.ts), e.event_id)
-          var prev: Option[Ev] = state.getOption.flatten
-          val out = Seq.newBuilder[Transition]
-          it.toSeq.sortBy(key).foreach { e =>
-            prev.foreach { p =>
-              val (a, b) =
-                if (Ordering[(Long, Long)].lteq(key(p), key(e))) (p, e) else (e, p)
-              out += Transition(uid, a.event_type, b.event_type)
-            }
-            if (prev.forall(p => Ordering[(Long, Long)].lteq(key(p), key(e))))
-              prev = Some(e)
-          }
-          state.update(prev)
-          out.result().iterator
-      }
-  }
-
-  /** EXACT out-of-order transitions — the watermark-buffered form of
-    * [[transitionsStream]]: per-user events are buffered in LIST state
+  /** EXACT out-of-order transitions — E10's streaming form: per-user
+    * events are buffered in LIST state
     * until the event-time watermark passes them, then flushed in (ts,
     * event_id) order with the last-flushed event carried in VALUE state,
     * so the emitted pair sequence equals the batch matrix's full-ordered
@@ -786,97 +537,17 @@ object StreamingOps {
       flush(uid, tv.getCurrentWatermarkInMs())
   }
 
-  /** [[transitionsStream]] with exact event-time ordering under
-    * out-of-order arrival (10-min watermark reorder buffer). */
+  /** (prev_type, event_type) pairs per user, aggregating to the batch
+    * matrix [[graft.ops.EventOps.eventsTransitions]]. Contract: exact
+    * for any arrival order inside the 10-min watermark (the reorder
+    * buffer of [[OrderedTransitionsProcessor]]); a pair emits once the
+    * watermark passes both of its events, so a feed's last events need a
+    * later event of any user to drain. */
   def transitionsTwsOrdered(ev: Dataset[Ev]): Dataset[Transition] = {
     val sq = ev.sparkSession; import sq.implicits._
     ev.withWatermark("ts", "10 minutes")
       .groupByKey(_.user_id)
       .transformWithState(new OrderedTransitionsProcessor,
-        TimeMode.EventTime(), OutputMode.Append())
-  }
-
-  /** EXACT out-of-order sessionization — the reorder-buffer construction
-    * of [[OrderedTransitionsProcessor]] applied to the 30-min-gap session
-    * machine, replacing [[sessionizeCustom]]'s O(1)-state approximations
-    * with watermark-exact semantics: buffered events drain strictly below
-    * the watermark ms in (ts, event_id) order into the gap machine (VALUE
-    * state = the open session), and the open session CLOSES only once the
-    * watermark proves no admissible event can merge (wm − end ≥ gap) —
-    * so the emitted closed-session stream equals the batch machine run
-    * over the fully ordered feed, for any arrival order the watermark
-    * admits. Timers re-arm at the earliest future decision point: the
-    * oldest still-buffered event's ms (more to drain) or the open
-    * session's close boundary (end + gap), whichever comes first — a
-    * quiet key still closes its last session, and state per key is
-    * O(events inside the watermark delay) + one open session. */
-  class OrderedSessionProcessor extends StatefulProcessor[Long, Ev, Session] {
-    private type OpenS = (Long, Long, Long) // (start_us, end_us, n_events)
-    @transient private var buf: ListState[(Long, Long)] = _ // (event µs, event_id)
-    @transient private var open: ValueState[OpenS] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      buf = getHandle.getListState[(Long, Long)]("buf",
-        org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.scalaLong,
-          org.apache.spark.sql.Encoders.scalaLong), TTLConfig.NONE)
-      open = getHandle.getValueState[OpenS]("open",
-        org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.scalaLong,
-          org.apache.spark.sql.Encoders.scalaLong,
-          org.apache.spark.sql.Encoders.scalaLong), TTLConfig.NONE)
-    }
-    private def flush(uid: Long, wmMs: Long): Iterator[Session] = {
-      val all = buf.get().toSeq.sorted
-      val (ripe, rest) = all.partition(_._1 / 1000 < wmMs)
-      val out = Seq.newBuilder[Session]
-      var cur: Option[OpenS] = if (open.exists()) Some(open.get()) else None
-      ripe.foreach { case (t, _) =>
-        cur = cur match {
-          // ripe is sorted and the open session's end is always the max
-          // seen, so t ≥ end here — plain forward gap logic, no min/max
-          case Some((s0, e0, n)) if t - e0 < GapUs => Some((s0, math.max(e0, t), n + 1))
-          case Some(s) => out += Session(uid, s._1, s._2, s._3); Some((t, t, 1L))
-          case None => Some((t, t, 1L))
-        }
-      }
-      // Close once UNREACHABLE: every admissible event has ts above the
-      // watermark, so gap-from-end is at least wm − end; ≥ gap means no
-      // admissible event can ever merge. (Conservative by < 1 ms — the
-      // watermark's sub-ms remainder — which only delays the close to
-      // the next watermark advance, never changes the session.) A still-
-      // buffered rest event can never merge either: its ts ≥ wm ms.
-      cur.foreach { case (s0, e0, n) =>
-        if (wmMs * 1000 - e0 >= GapUs) {
-          out += Session(uid, s0, e0, n)
-          cur = None
-        }
-      }
-      cur match { case Some(c) => open.update(c); case None => open.clear() }
-      if (rest.isEmpty) buf.clear() else buf.put(rest.toArray)
-      val nextDecision =
-        rest.headOption.map(_._1 / 1000 + 1).toSeq ++
-          cur.map { case (_, e0, _) => (e0 + GapUs) / 1000 + 1 }.toSeq
-      if (nextDecision.nonEmpty) getHandle.registerTimer(nextDecision.min)
-      out.result().iterator
-    }
-    override def handleInputRows(uid: Long, rows: Iterator[Ev],
-        tv: TimerValues): Iterator[Session] = {
-      rows.foreach(e => buf.appendValue((micros(e.ts), e.event_id)))
-      getHandle.listTimers().foreach(t => getHandle.deleteTimer(t.asInstanceOf[Long]))
-      flush(uid, tv.getCurrentWatermarkInMs())
-    }
-    override def handleExpiredTimer(uid: Long, tv: TimerValues,
-        info: ExpiredTimerInfo): Iterator[Session] =
-      flush(uid, tv.getCurrentWatermarkInMs())
-  }
-
-  /** [[sessionizeCustom]] with watermark-exact out-of-order semantics
-    * (10-min reorder buffer; emits CLOSED sessions only). */
-  def sessionizeTwsOrdered(ev: Dataset[Ev]): Dataset[Session] = {
-    val sq = ev.sparkSession; import sq.implicits._
-    ev.withWatermark("ts", "10 minutes")
-      .groupByKey(_.user_id)
-      .transformWithState(new OrderedSessionProcessor,
         TimeMode.EventTime(), OutputMode.Append())
   }
 
@@ -887,7 +558,10 @@ object StreamingOps {
     * per user, replaced whenever a later event arrives — the
     * `mapGroupsWithState` form of the batch window-dedup
     * [[graft.ops.EventOps.upsertLatestByKey]]. Runs in batch too (state
-    * starts empty, each group folds once). */
+    * starts empty, each group folds once). Contract: bounded state (one
+    * event per user) and order-free — the latest by (ts, event_id) does
+    * not depend on arrival order; with no watermark a user's state is
+    * kept for the life of the query. */
   def latestByUser(ev: Dataset[Ev]): Dataset[Ev] = {
     val sq = ev.sparkSession; import sq.implicits._
     ev.groupByKey(_.user_id)
@@ -910,7 +584,9 @@ object StreamingOps {
     * re-emits the merged top-k with a bumped version, so the LAST version
     * per user is the complete answer and earlier ones are the audit
     * trail. State stays O(k) per user forever — the streaming analogue
-    * of the native TopKPerGroup partial buffer. */
+    * of the native TopKPerGroup partial buffer. Contract: bounded state
+    * and order-free — the top 3 of a multiset does not depend on arrival
+    * order. */
   class TopPurchasesProcessor extends StatefulProcessor[Long, Ev, TopPurchases] {
     @transient private var top: ListState[Double] = _
     @transient private var ver: ValueState[Long] = _
@@ -998,7 +674,10 @@ object StreamingOps {
   }
 
   /** Alert stream of users whose sessions went quiet for ≥ 30 min of
-    * EVENT time. Input must carry a watermark on `ts` (the timer clock). */
+    * EVENT time; the 10-min watermark on `ts` is the timer clock.
+    * Contract: exact for any arrival order inside the watermark —
+    * last_seen is a max — and an alert fires once the watermark passes
+    * last_seen + 30 min; a later event of the user starts new state. */
   def abandonedSessionsTws(ev: Dataset[Ev]): Dataset[SessionAlert] = {
     val sq = ev.sparkSession; import sq.implicits._
     ev.withWatermark("ts", "10 minutes")
@@ -1017,7 +696,9 @@ object StreamingOps {
     * monotone per (user, type) and the max observed emission equals the
     * final count. MapState keeps per-entry storage (RocksDB key = user ×
     * map key), so one hot user with many types never rewrites a whole
-    * blob — the reason to prefer MapState over ValueState[Map]. */
+    * blob — the reason to prefer MapState over ValueState[Map].
+    * Contract: bounded state (one count per (user, type)) and
+    * order-free — counting commutes. */
   class TypeCountsProcessor extends StatefulProcessor[Long, Ev, TypeCount] {
     @transient private var counts: MapState[String, Long] = _
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =

@@ -154,6 +154,19 @@ class InventorySpec extends AnyFunSuite {
       s"commit markers must go through IndexFs, spelled in: ${hits.sorted}")
   }
 
+  test("the streaming face holds no ANN recipe: it calls the batch cores in graft.ops") {
+    val recipes = Seq("assignCells", "kmeansCentroids", "SplitProbes", "posexplode(", "row_number(")
+    // the detector itself: recipes in code are caught, ones in comments are not
+    val controls = Seq(
+      "A.scala" -> codeOnly("val c = VectorOps.assignCells(q, coarse)\n  .withColumn(\"rn\", row_number().over(w))"),
+      "B.scala" -> codeOnly("/** VectorOps.kmeansCentroids, SplitProbes */\n// posexplode(x)\nval z = 1"))
+    assert(recipes.map(filesWith(_, controls)) ==
+      Seq(Seq("A.scala"), Nil, Nil, Nil, Seq("A.scala")))
+    val hits = recipes.flatMap(r =>
+      filesWith(r, sourcesUnder("src/main/scala/graft/streaming")).map(f => s"$f spells $r"))
+    assert(hits.isEmpty, s"streaming code must call the graft.ops cores, not copy them: $hits")
+  }
+
   test("GraftSession holds the only SparkSession builder under src/main and src/test") {
     // spelled in parts: this file is scanned too
     val builderCall = Seq("SparkSession", "builder").mkString(".")

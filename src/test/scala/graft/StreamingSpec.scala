@@ -106,40 +106,35 @@ class StreamingSpec extends AnyFunSuite {
     // feed in global event-time order so per-user order holds across batches
     val all = eventsDs.collect()
       .sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id)).toSeq
-    val ms = MemoryStream[Ev]
-    val q = StreamingOps.transitionsStream(ms.toDS())
-      .writeStream.format("memory").queryName("s_transitions")
-      .outputMode("append").start()
+    // two single-event sentinel users a day and two days past the feed:
+    // the first lifts the 10-min watermark past every real event, the
+    // second runs a batch under that watermark so every reorder buffer
+    // drains (a pair emits only once the watermark passes both events)
+    val day = 24L * 3600 * 1000
+    val last = all.map(_.ts.getTime).max
+    val sentinels = Seq(1L, 2L).map(n =>
+      Ev(-n, new java.sql.Timestamp(last + n * day), -n, "z", 0.0, "{}"))
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
-      all.grouped(math.max(1, all.size / 4)).foreach { chunk =>
-        ms.addData(chunk)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    val streamed = spark.table("s_transitions")
+      val ms = MemoryStream[Ev]
+      val q = StreamingOps.transitionsTwsOrdered(ms.toDS())
+        .writeStream.format("memory").queryName("s_transitions")
+        .outputMode("append").start()
+      try {
+        (all.grouped(math.max(1, all.size / 4)) ++ sentinels.map(Seq(_))).foreach { chunk =>
+          ms.addData(chunk)
+          q.processAllAvailable()
+        }
+      } finally q.stop()
+    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    val streamed = spark.table("s_transitions").filter("user_id >= 0")
       .groupBy("prev_type", "event_type").count()
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     val batch = ops.EventOps.eventsTransitions(spark, sf)
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     assert(streamed == batch,
       "aggregated streaming pairs must equal the batch matrix counts")
-  }
-
-  test("flatMapGroupsWithState sessionizer matches an independent local model") {
-    def us(t: java.sql.Timestamp): Long = (t.getTime / 1000L) * 1000000L + t.getNanos / 1000L
-    val gap = 30L * 60 * 1000000
-    val model = eventsDs.collect().groupBy(_.user_id).flatMap { case (uid, es) =>
-      val ts = es.sortBy(e => (us(e.ts), e.event_id)).map(e => us(e.ts))
-      val sessions = scala.collection.mutable.Buffer[(Long, Long, Long)]() // start, end, n
-      ts.foreach { t =>
-        if (sessions.nonEmpty && t - sessions.last._2 < gap) {
-          val (s0, _, n) = sessions.last; sessions(sessions.size - 1) = (s0, t, n + 1)
-        } else sessions += ((t, t, 1L))
-      }
-      sessions.map { case (s0, e0, n) => StreamingOps.Session(uid, s0, e0, n) }
-    }.toSet
-    val got = StreamingOps.sessionizeCustom(eventsDs).collect().toSet
-    assert(got == model)
   }
 
   test("mapGroupsWithState keep-latest is correct INCREMENTALLY (update-mode stream)") {
@@ -699,6 +694,18 @@ class StreamingSpec extends AnyFunSuite {
         "/tmp/graft_geom_ann_out", "vec_id", "embedding")(mixed, 1L)
     }
     assert(e3.getMessage.contains("dims in [32, 64]"), e3.getMessage)
+    // the facade append runs the same guard, before it retires the root
+    // marker: both refusals leave the index committed
+    val e2f = intercept[IllegalArgumentException] {
+      graft.api.GraftAPI.annIndexAppend(short, "vec_id", "embedding", annRoot)
+    }
+    assert(e2f.getMessage.contains("dim=64"), e2f.getMessage)
+    val e3f = intercept[IllegalArgumentException] {
+      graft.api.GraftAPI.annIndexAppend(mixed, "vec_id", "embedding", annRoot)
+    }
+    assert(e3f.getMessage.contains("dims in [32, 64]"), e3f.getMessage)
+    assert(graft.ops.IndexFs.committed(annRoot),
+      "a refused append must leave the index committed")
     // review r10: a NULL vector must fail the guard too — min/max over
     // size() skip null rows, so without the explicit null count a null
     // query/append row would argmin to an arbitrary cell and encode or
@@ -725,72 +732,6 @@ class StreamingSpec extends AnyFunSuite {
     Ev(id, java.sql.Timestamp.from(java.time.Instant.parse(iso)), uid, tpe, 1.0, "{}")
   private def usOf(iso: String): Long =
     java.time.Instant.parse(iso).toEpochMilli * 1000
-
-  test("sessionizeCustom streaming: a late in-gap event widens the open session monotonically") {
-    val sq = spark; import sq.implicits._
-    implicit val ctx = spark.sqlContext
-    val ms = MemoryStream[Ev]
-    val q = StreamingOps.sessionizeCustom(ms.toDS())
-      .writeStream.format("memory").queryName("s_late_session")
-      .outputMode("append").start()
-    try {
-      ms.addData(evAt(1, "2025-06-01T10:00:00Z", 1, "view"),
-                 evAt(2, "2025-06-01T10:10:00Z", 1, "view"))
-      q.processAllAvailable()
-      // LATE event inside the open session's span: must merge without
-      // dragging end_us back to 10:05 (the pre-fix bug — the next gap
-      // decision would then read 31 min and split a real session).
-      ms.addData(evAt(3, "2025-06-01T10:05:00Z", 1, "view"))
-      q.processAllAvailable()
-      // 26 min after the TRUE last event (10:10) — must merge
-      ms.addData(evAt(4, "2025-06-01T10:36:00Z", 1, "view"))
-      q.processAllAvailable()
-      // beyond-reorder straggler: a FULL gap older than the open
-      // session's start — must emit as its own closed session, never
-      // glue the open session back across a 3-hour gap (the signed
-      // t - end_us check alone would merge it)
-      ms.addData(evAt(6, "2025-06-01T07:00:00Z", 1, "view"))
-      q.processAllAvailable()
-      // 54 min gap — closes and emits the session
-      ms.addData(evAt(5, "2025-06-01T11:30:00Z", 1, "view"))
-      q.processAllAvailable()
-    } finally q.stop()
-    // exact multiset, not a set: a duplicate emission of a closed
-    // session must fail, not dedupe away
-    val got = spark.table("s_late_session").as[StreamingOps.Session]
-      .collect().map(s => (s.user_id, s.start_us, s.end_us, s.n_events))
-      .toSeq.sorted
-    assert(got == Seq(
-      (1L, usOf("2025-06-01T07:00:00Z"), usOf("2025-06-01T07:00:00Z"), 1L),
-      (1L, usOf("2025-06-01T10:00:00Z"), usOf("2025-06-01T10:36:00Z"), 4L)),
-      got.toString)
-  }
-
-  test("transitionsStream: a cross-batch late event never emits a reversed pair") {
-    val sq = spark; import sq.implicits._
-    implicit val ctx = spark.sqlContext
-    val ms = MemoryStream[Ev]
-    val q = StreamingOps.transitionsStream(ms.toDS())
-      .writeStream.format("memory").queryName("s_late_transitions")
-      .outputMode("append").start()
-    try {
-      ms.addData(evAt(1, "2025-06-01T10:00:00Z", 1, "a"),
-                 evAt(3, "2025-06-01T10:20:00Z", 1, "c"))
-      q.processAllAvailable()
-      // late b@10:10 arrives after c@10:20 is already the stored prev:
-      // the emitted pair must be event-time-ordered (b -> c), never the
-      // fabricated reversal (c -> b), and prev must STAY c so the next
-      // event pairs against the true latest.
-      ms.addData(evAt(2, "2025-06-01T10:10:00Z", 1, "b"))
-      q.processAllAvailable()
-      ms.addData(evAt(4, "2025-06-01T10:30:00Z", 1, "d"))
-      q.processAllAvailable()
-    } finally q.stop()
-    // exact multiset: a duplicated pair emission must fail, not dedupe
-    val got = spark.table("s_late_transitions")
-      .collect().map(r => (r.getString(1), r.getString(2))).toSeq.sorted
-    assert(got == Seq(("a", "c"), ("b", "c"), ("c", "d")), got.toString)
-  }
 
   test("transitionsTwsOrdered: shuffled micro-batches emit the exact in-order pair sequence") {
     val sq = spark; import sq.implicits._
@@ -921,7 +862,27 @@ class StreamingSpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
   }
 
-  test("sessionizeTwsOrdered: kill + checkpoint-restart mid-stream keeps the session multiset exact") {
+  /** (user_id, sess_start µs, sess_end µs, n_events) rows of user 1. */
+  private def user1Sessions(df: DataFrame): Seq[(Long, Long, Long, Long)] = {
+    def us(t: java.sql.Timestamp): Long = t.getTime * 1000 + t.getNanos / 1000 % 1000
+    df.filter("user_id = 1").collect()
+      .map(r => (r.getAs[Long]("user_id"), us(r.getAs[java.sql.Timestamp]("sess_start")),
+        us(r.getAs[java.sql.Timestamp]("sess_end")), r.getAs[Long]("n_events")))
+      .toSeq.sorted
+  }
+
+  /** Six single-event sentinel users, 11:45 to 16:30: they lift the 2 h
+    * watermark past 11:30, the end of user 1's last session. */
+  private val sessionSentinels = Seq("11:45", "12:30", "13:30", "14:30", "15:30", "16:30")
+    .zipWithIndex.map { case (t, i) => evAt(91L + i, s"2025-06-01T$t:00Z", 91L + i, "z") }
+
+  // user 1's true ordered feed is 10:00, 10:08 (one session) and 11:00
+  // (a second one); a session ends at its last event + the 30-min gap
+  private val expectedUser1Sessions = Seq(
+    (1L, usOf("2025-06-01T10:00:00Z"), usOf("2025-06-01T10:38:00Z"), 2L),
+    (1L, usOf("2025-06-01T11:00:00Z"), usOf("2025-06-01T11:30:00Z"), 1L))
+
+  test("sessionAgg: kill + checkpoint-restart mid-stream keeps the session multiset exact") {
     val sq = spark; import sq.implicits._
     implicit val ctx = spark.sqlContext
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
@@ -930,10 +891,11 @@ class StreamingSpec extends AnyFunSuite {
     val out = java.nio.file.Files.createTempDirectory("graft_sess_restart_out").toString
     try {
       val ms = MemoryStream[Ev]
-      val q1 = StreamingOps.sessionizeTwsOrdered(ms.toDS())
+      def start() = StreamingOps.sessionAgg(ms.toDF())
         .writeStream.format("parquet").option("path", out)
         .option("checkpointLocation", ckpt)
         .outputMode("append").start()
+      val q1 = start()
       try {
         // the reversed pair of the first session arrives BEFORE the kill;
         // the session itself can only close after the restart
@@ -942,67 +904,40 @@ class StreamingSpec extends AnyFunSuite {
         ms.addData(evAt(1, "2025-06-01T10:00:00Z", 1, "view")) // late
         q1.processAllAvailable()
       } finally q1.stop()
-      val q2 = StreamingOps.sessionizeTwsOrdered(ms.toDS())
-        .writeStream.format("parquet").option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").start()
+      val q2 = start()
       try {
         ms.addData(evAt(3, "2025-06-01T11:00:00Z", 1, "view"))
         q2.processAllAvailable()
-        ms.addData(evAt(91, "2025-06-01T11:45:00Z", 91, "z")); q2.processAllAvailable()
-        ms.addData(evAt(92, "2025-06-01T12:30:00Z", 92, "z")); q2.processAllAvailable()
-        ms.addData(evAt(93, "2025-06-01T13:30:00Z", 93, "z")); q2.processAllAvailable()
-        ms.addData(evAt(94, "2025-06-01T14:30:00Z", 94, "z")); q2.processAllAvailable()
+        sessionSentinels.foreach { e => ms.addData(e); q2.processAllAvailable() }
       } finally q2.stop()
-      val gotU1 = spark.read.parquet(out).as[StreamingOps.Session]
-        .collect().map(s => (s.user_id, s.start_us, s.end_us, s.n_events))
-        .filter(_._1 == 1L).toSeq.sorted
-      // the late 10:00 event buffered BEFORE the kill must land inside
-      // the first closed session AFTER the restart — state-exact recovery
-      assert(gotU1 == Seq(
-        (1L, usOf("2025-06-01T10:00:00Z"), usOf("2025-06-01T10:08:00Z"), 2L),
-        (1L, usOf("2025-06-01T11:00:00Z"), usOf("2025-06-01T11:00:00Z"), 1L)),
-        gotU1.toString)
+      // the late 10:00 event held in state BEFORE the kill must land
+      // inside the first closed session AFTER the restart, exactly once
+      val got = user1Sessions(spark.read.parquet(out))
+      assert(got == expectedUser1Sessions, got.toString)
     } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
   }
 
-  test("sessionizeTwsOrdered: out-of-order feed yields the exact batch session machine output") {
+  test("sessionAgg: out-of-order feed yields the exact batch session machine output") {
     val sq = spark; import sq.implicits._
     implicit val ctx = spark.sqlContext
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val ms = MemoryStream[Ev]
+    val q = StreamingOps.sessionAgg(ms.toDF())
+      .writeStream.format("memory").queryName("s_ordered_sessions")
+      .outputMode("append").start()
     try {
-      val ms = MemoryStream[Ev]
-      val q = StreamingOps.sessionizeTwsOrdered(ms.toDS())
-        .writeStream.format("memory").queryName("s_ordered_sessions")
-        .outputMode("append").start()
-      try {
-        // u1's true ordered feed is 10:00, 10:08 (one session), 11:00
-        // (a second session) — delivered with the first two REVERSED
-        // across batches, each inside the 10-min watermark tolerance
-        ms.addData(evAt(2, "2025-06-01T10:08:00Z", 1, "view"))
-        q.processAllAvailable()
-        ms.addData(evAt(1, "2025-06-01T10:00:00Z", 1, "view")) // late
-        q.processAllAvailable()
-        ms.addData(evAt(3, "2025-06-01T11:00:00Z", 1, "view"))
-        q.processAllAvailable()
-        // sentinels advance the watermark: past 10:38 (= 10:08 + gap) the
-        // first session is unreachable and must close with BOTH events;
-        // past 11:30 the second closes too
-        ms.addData(evAt(91, "2025-06-01T11:45:00Z", 91, "z")); q.processAllAvailable()
-        ms.addData(evAt(92, "2025-06-01T12:30:00Z", 92, "z")); q.processAllAvailable()
-        ms.addData(evAt(93, "2025-06-01T13:30:00Z", 93, "z")); q.processAllAvailable()
-        ms.addData(evAt(94, "2025-06-01T14:30:00Z", 94, "z")); q.processAllAvailable()
-      } finally q.stop()
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    val got = spark.table("s_ordered_sessions").as[StreamingOps.Session]
-      .collect().map(s => (s.user_id, s.start_us, s.end_us, s.n_events))
-      .filter(_._1 == 1L).toSeq.sorted
+      // the first two events arrive REVERSED across batches, each inside
+      // the 2 h watermark tolerance
+      ms.addData(evAt(2, "2025-06-01T10:08:00Z", 1, "view"))
+      q.processAllAvailable()
+      ms.addData(evAt(1, "2025-06-01T10:00:00Z", 1, "view")) // late
+      q.processAllAvailable()
+      ms.addData(evAt(3, "2025-06-01T11:00:00Z", 1, "view"))
+      q.processAllAvailable()
+      sessionSentinels.foreach { e => ms.addData(e); q.processAllAvailable() }
+    } finally q.stop()
     // exact multiset: the late 10:00 event lands INSIDE the first closed
-    // session (the O(1)-state sessionizeCustom cannot reorder like this)
-    assert(got == Seq(
-      (1L, usOf("2025-06-01T10:00:00Z"), usOf("2025-06-01T10:08:00Z"), 2L),
-      (1L, usOf("2025-06-01T11:00:00Z"), usOf("2025-06-01T11:00:00Z"), 1L)),
-      got.toString)
+    // session, and no session emits twice
+    val got = user1Sessions(spark.table("s_ordered_sessions"))
+    assert(got == expectedUser1Sessions, got.toString)
   }
 }
