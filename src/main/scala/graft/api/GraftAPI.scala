@@ -679,92 +679,79 @@ object GraftAPI {
   }
 
   /** Partition-pruned takedown on a stored ANN code table
-    * ([[buildAnnIndex]]'s `<path>/ivfpq_codes` layout; the facade form
-    * of the registry's `ann_index_delete`): rewrites only the cell
-    * partitions containing deleted vectors — in the base, in any
-    * committed `ivfpq_codes_compact` sibling (the layout probes serve
-    * FIRST), in the committed `ivfpq_codes_delta` (a delta-only vector
-    * must not survive its own takedown), AND in the `cells` membership
-    * table (the streaming pool resolves membership from cells ∪ delta,
-    * so a stale row would keep serving the id whenever the caller's
-    * corpus purge lags) — all under one retired root marker, with the
-    * split marker retired (split side-tables reflect pre-delete
-    * membership). A delete that would fully EMPTY a base or compact
-    * cell is REFUSED before the marker retirement (toward a catalog
-    * DROP PARTITION — and so a rejected call leaves a committed index
-    * committed); an emptied DELTA cell is fine — the day-scale delta is
+    * ([[buildAnnIndex]]'s `<path>/ivfpq_codes` layout; the registry's
+    * `ann_index_delete` binds it): rewrites only the cell partitions
+    * containing deleted vectors — in the base, in the committed
+    * `ivfpq_codes_delta` (a delta-only vector must not survive its own
+    * takedown), AND in the `cells` membership table (the streaming pool
+    * resolves membership from cells ∪ delta, so a stale row would keep
+    * serving the id whenever the caller's corpus purge lags) — all under
+    * one retired root marker, with the split marker retired (split
+    * side-tables reflect pre-delete membership). A delete that would
+    * fully EMPTY a base cell is REFUSED before the marker retirement
+    * (toward a catalog DROP PARTITION — and so a rejected call leaves a
+    * committed index committed), and so is a delete on an uncommitted
+    * index; an emptied DELTA cell is fine — the day-scale delta is
     * library-managed and simply loses the partition. Mutates in place;
     * the corpus float column remains the caller's own table to purge. */
   def annIndexDelete(spark: SparkSession, codesPath: String,
                      deleteIds: DataFrame, id: String): Unit = {
-    // Schema validation BEFORE the marker retirement (review r10, the
-    // minhashIndexDelete discipline): a rejected mis-call — wrong path,
-    // a table that is not a cell-partitioned code layout — must leave a
-    // valid index valid, not retired-and-never-recommitted.
+    // Refusals BEFORE the marker retirement (review r10, the
+    // minhashIndexDelete discipline): a crashed index, or a mis-call — a
+    // table that is not a cell-partitioned code layout — must leave a
+    // valid index valid, not retired-and-never-recommitted. The commit
+    // check comes first: a crash can leave the code table unreadable.
+    val ix = graft.ops.IvfPqIndex.Ix(graft.ops.IndexFs.parent(codesPath))
+    graft.ops.IndexFs.requireCommitted(ix.root,
+      "rebuild via buildAnnIndex before deleting")
     val liveCols = Tables.read(spark, codesPath).columns.toSet
     Seq("vec_id", "cell").foreach(c => require(liveCols.contains(c),
       s"table at $codesPath has no '$c' column — not a cell-partitioned " +
         "ANN code table (buildAnnIndex's ivfpq_codes layout)"))
-    val root = graft.ops.IndexFs.parent(codesPath)
     val del = deleteIds.select(col(id).as("vec_id")).localCheckpoint()
-    val compactP = graft.ops.IndexFs.child(root, "ivfpq_codes_compact")
-    val deltaP = graft.ops.IndexFs.child(root, "ivfpq_codes_delta")
-    val hasCompact = graft.ops.IndexFs.committed(compactP)
-    val hasDelta = graft.ops.IndexFs.committed(deltaP)
-    // Emptied-cell REFUSALS run before the marker retirement (review
+    // The emptied-cell REFUSAL runs before the marker retirement (review
     // r13: deleteFromCodes' internal guard throwing mid-lifecycle left
     // the base rewritten and the index permanently uncommitted).
-    def refuseEmptied(table: String, live: org.apache.spark.sql.DataFrame): Unit = {
-      val emptied = graft.ops.VectorOps.emptiedCells(live, del)
-      require(emptied.isEmpty,
-        s"cells ${emptied.mkString(",")} of $table would be emptied by " +
-          "this delete; drop those partitions via the catalog instead of " +
-          "a data rewrite")
-    }
-    refuseEmptied(codesPath, Tables.read(spark, codesPath))
-    if (hasCompact) refuseEmptied(compactP,
-      Tables.read(spark, compactP, Some(graft.ops.VectorOps.codesSchema)))
-    graft.ops.IndexFs.mutate(root) {
+    val emptied = graft.ops.VectorOps.emptiedCells(Tables.read(spark, codesPath), del)
+    require(emptied.isEmpty,
+      s"cells ${emptied.mkString(",")} of $codesPath would be emptied by " +
+        "this delete; drop those partitions via the catalog instead of " +
+        "a data rewrite")
+    val hasDelta = graft.ops.IndexFs.committed(ix.ivfCodesDelta)
+    graft.ops.IndexFs.mutate(ix.root) {
       graft.ops.VectorOps.deleteFromCodes(spark, codesPath, del)
-      // Lifecycle siblings (review r13): the probe-root resolver serves a
-      // committed compact FIRST and unions the committed delta with the
-      // cells table, so a takedown that rewrote only the base would keep
-      // serving deleted vectors out of both — and a vector that exists
-      // ONLY in the delta slice would survive entirely. Declared schema:
-      // a data-file-less delta must read as empty, not crash inference.
-      if (hasCompact)
-        graft.ops.VectorOps.deleteFromCodes(spark, compactP, del,
-          source = Some(Tables.read(spark, compactP, Some(graft.ops.VectorOps.codesSchema))))
-      // The delta takes a guard-FREE full rewrite: it is day-scale and
-      // library-managed, so an emptied cell has no catalog partition to
-      // drop — the directory just goes.
+      // The delta (review r13): the probe resolvers union it with the
+      // base, so a vector that exists ONLY in the delta would survive a
+      // base-only takedown. It takes a guard-FREE full rewrite: it is
+      // day-scale and library-managed, so an emptied cell has no catalog
+      // partition to drop — the directory just goes. Declared schema: a
+      // data-file-less delta must read as empty, not crash inference.
       if (hasDelta) {
-        val survivors = Tables.read(spark, deltaP, Some(graft.ops.VectorOps.codesSchema))
+        val survivors = Tables.read(spark, ix.ivfCodesDelta, Some(graft.ops.VectorOps.codesSchema))
           .select("vec_id", "m", "code", "cell")
           .join(del, Seq("vec_id"), "left_anti")
           .localCheckpoint()
         survivors.withColumn("pcell", col("cell"))
           .repartition(col("pcell"))
-          .write.mode("overwrite").partitionBy("pcell").parquet(deltaP)
+          .write.mode("overwrite").partitionBy("pcell").parquet(ix.ivfCodesDelta)
       }
       // cells purge (review r13): the split-aware streaming probe builds
-      // its no-compact pool from cells ∪ delta, so a stale membership
-      // row serves a deleted id whenever the caller's corpus purge lags
-      // — and the facade compact would fold the stale row forward. One
-      // scalar-column rewrite; deletes are rare.
-      val cellsP = graft.ops.IndexFs.child(root, "cells")
-      if (graft.ops.IndexFs.committed(cellsP)) {
-        val kept = Tables.read(spark, cellsP)
+      // its pool from cells ∪ delta, so a stale membership row serves a
+      // deleted id whenever the caller's corpus purge lags — and the
+      // compact would fold the stale row forward. One scalar-column
+      // rewrite; deletes are rare.
+      if (graft.ops.IndexFs.committed(ix.cells)) {
+        val kept = Tables.read(spark, ix.cells)
           .join(del, Seq("vec_id"), "left_anti")
           .localCheckpoint()
-        kept.write.mode("overwrite").parquet(cellsP)
+        kept.write.mode("overwrite").parquet(ix.cells)
       }
       // A committed cell split reflects the PRE-delete membership
       // (ADVICE r12): the split-aware probe computes its pool >= k floor
       // from cells_split rows before joining the live corpus, so stale
       // split rows inflate the pool with deleted vec_ids; probes fall
       // back to whole-cell scans until the next annIndexSplit.
-      graft.ops.IndexFs.retire(root, graft.ops.IndexFs.Split)
+      graft.ops.IndexFs.retire(ix.root, graft.ops.IndexFs.Split)
     }
   }
 
@@ -1369,30 +1356,20 @@ object GraftAPI {
     * (floats stay out of the probe path; see `knn_pq` for the ADC
     * shortlist + exact rerank read side). Codebooks are deterministic
     * (lowest-id seeds, snapped arithmetic), so re-encoding is
-    * backfill-stable. */
+    * backfill-stable. The recipe is the index build's raw-vector PQ
+    * ([[graft.ops.VectorOps.trainPq]]). */
   def pqEncode(df: DataFrame, id: String, vec: String,
                m: Int = 8, k: Int = 16, iters: Int = 2): DataFrame = {
     require(m > 0 && k > 0 && iters > 0, s"m/k/iters must be positive: $m/$k/$iters")
     val gen = beginPins() // retire completed prior encodes' cached frames
     try {
       val e = df.select(col(id).as("vec_id"), col(vec).cast("array<double>").as("x"))
-      val sub = validatedDim(e, vec, m) / m
-      // Long-form training (the `knn_pq` structure): all m codebooks train
-      // in ONE frame keyed by the subspace column — one Lloyd pass and one
-      // assignment regardless of m, instead of m sequential trainings. The
-      // subvector frame and the trained codebook are pinned ([[pinned]])
-      // so the Lloyd fold's and the assignment's many plan references read
-      // cached blocks instead of re-running the upstream scan per
-      // reference.
-      val emLong = pinned(gen, e.select(col("vec_id"), posexplode(array((0 until m).map(i =>
-          slice(col("x"), i * sub + 1, sub)): _*)))
-        .select(col("vec_id"), col("pos").cast("int").as("m"), col("col").as("x")))
-      val cents = pinned(gen, graft.ops.VectorOps.kmeansCentroidsLong(emLong, iters, k))
-      graft.ops.VectorOps.assignCellsLong(emLong, cents)
-        .groupBy("vec_id")
-        .agg(array_sort(collect_list(struct(col("m"), col("cell")))).as("p"))
-        .select(col("vec_id").as(id),
-          transform(col("p"), x => x.getField("cell")).as("code"))
+      // The one PQ recipe, every stage pinned ([[pinned]]): the Lloyd
+      // fold's and the assignment's many plan references read cached
+      // blocks instead of re-running the upstream scan per reference.
+      graft.ops.VectorOps.codeArrays(graft.ops.VectorOps.trainPq(e, m,
+          validatedDim(e, vec, m) / m, k, iters, (_, st) => pinned(gen, st)))
+        .select(col("vec_id").as(id), col("code"))
     } finally endPins(gen)
   }
 
@@ -1456,7 +1433,10 @@ object GraftAPI {
     * partitioned by `cell` and a probe reads ONE cell's m-byte codes
     * plus the small codebooks, never the float vectors (those are
     * fetched only for the shortlist rerank). Deterministic (lowest-id
-    * seeds, snapped arithmetic), so re-encoding is backfill-stable. */
+    * seeds, snapped arithmetic), so re-encoding is backfill-stable. The
+    * recipe is the index build's ([[graft.ops.VectorOps.trainIvfPq]]):
+    * [[buildAnnIndex]] writes each stage as a table where this pins it,
+    * so its stored codes are these rows. */
   def ivfPqEncode(df: DataFrame, id: String, vec: String,
                   cells: Int = 16, m: Int = 8, k: Int = 16,
                   iters: Int = 2): DataFrame = {
@@ -1465,28 +1445,13 @@ object GraftAPI {
     val gen = beginPins() // retire completed prior encodes' cached frames
     try {
       val e = df.select(col(id).as("vec_id"), col(vec).cast("array<double>").as("x"))
-      val sub = validatedDim(e, vec, m) / m
-      // Pin the coarse centroids, the assignment, and the residual long
-      // form (review r7): coarse feeds the assignment AND the residual
-      // broadcast, asg feeds the residual build AND the final cell join,
-      // emLong feeds the Lloyd fold and the code assignment — unpinned,
-      // each plan reference would re-run the full coarse training subtree.
-      val coarse = pinned(gen, graft.ops.VectorOps.kmeansCentroids(e, iters, cells))
-      val asg = pinned(gen, graft.ops.VectorOps.assignCells(e, coarse))
-      val emLong = pinned(gen, e.join(asg, "vec_id")
-        .join(broadcast(coarse), col("cell") === col("cid"))
-        .select(col("vec_id"),
-          zip_with(col("x"), col("cv"), (a, b) => r6(a - b)).as("rx"))
-        .select(col("vec_id"), posexplode(array((0 until m).map(i =>
-          slice(col("rx"), i * sub + 1, sub)): _*)))
-        .select(col("vec_id"), col("pos").cast("int").as("m"), col("col").as("x")))
-      val cents = pinned(gen, graft.ops.VectorOps.kmeansCentroidsLong(emLong, iters, k))
-      graft.ops.VectorOps.assignCellsLong(emLong, cents)
-        .groupBy("vec_id")
-        .agg(array_sort(collect_list(struct(col("m"), col("cell")))).as("p"))
-        .select(col("vec_id"),
-          transform(col("p"), x => x.getField("cell")).as("code"))
-        .join(asg, "vec_id")
+      // The one IVF-PQ recipe, every stage pinned (review r7): coarse
+      // feeds the assignment AND the residual broadcast, the assignment
+      // feeds the residual build, the residual long form feeds the Lloyd
+      // fold and the code assignment — unpinned, each plan reference
+      // would re-run the full coarse training subtree.
+      graft.ops.VectorOps.codeArrays(graft.ops.VectorOps.trainIvfPq(e, cells, m,
+          validatedDim(e, vec, m) / m, k, iters, (_, st) => pinned(gen, st)), "cell")
         .select(col("vec_id").as(id), col("cell"), col("code"))
     } finally endPins(gen)
   }
@@ -1550,28 +1515,28 @@ object GraftAPI {
   }
 
   /** APPEND a batch of vectors to a stored [[buildAnnIndex]] layout —
-    * the facade form of the registry's `ann_index_append` (r13, the ANN
-    * mirror of [[minhashIndexAppend]]): the batch coarse-assigns
-    * against the STORED centroids and residual-encodes against the
-    * STORED codebooks — NO retraining, so a re-encode of the same batch
-    * is byte-identical — and folds into the single committed
-    * `ivfpq_codes_delta` sibling (distinct per (vec_id, m): a replayed
-    * batch folds to the same rows, the foreachBatch replay contract).
-    * The probe resolvers ([[graft.ops.IvfPqIndex.resolvedCodes]], the
-    * split-aware [[graft.streaming.StreamingOps.annProbeBatch]] pool)
-    * serve base ∪ committed delta, so an appended vector is servable
-    * the very next probe with no compact. Rows whose `vec_id` the base
-    * `cells` table already holds are SKIPPED (already indexed — this is
-    * what makes a replay AFTER [[annIndexCompact]] a clean no-op
-    * instead of double-serving the id through base and delta). The
-    * delta rewrite runs under the retired root marker: overwrite drops
-    * the old generation first, so a crash mid-write must read as an
-    * uncommitted index, not a valid index silently missing its
-    * appended vectors. Returns the merged per-cell manifest
-    * (cell, n_base, n_new). At 100 TB this is the daily vector
-    * arrival job: two broadcast-argmin map passes over the batch plus
-    * one delta-sized write — the corpus and the stored codes are never
-    * rescanned. */
+    * the ANN mirror of [[minhashIndexAppend]], and the one append behind
+    * the registry's `ann_index_append`, its ensured delta and the daily
+    * job: the batch coarse-assigns against the STORED centroids and
+    * residual-encodes against the STORED codebooks — NO retraining, so a
+    * re-encode of the same batch is byte-identical — and folds into the
+    * single committed `ivfpq_codes_delta` sibling (distinct per
+    * (vec_id, m): a replayed batch folds to the same rows, the
+    * foreachBatch replay contract). The probe resolvers
+    * ([[graft.ops.IvfPqIndex.resolvedCodes]], the split-aware
+    * [[graft.streaming.StreamingOps.annProbeBatch]] pool) serve base ∪
+    * committed delta, so an appended vector is servable the very next
+    * probe with no compact. Rows whose `vec_id` the base `cells` table
+    * already holds are SKIPPED (already indexed — this is what makes a
+    * replay AFTER [[annIndexCompact]] a clean no-op instead of
+    * double-serving the id through base and delta). The delta rewrite
+    * runs under the retired root marker: overwrite drops the old
+    * generation first, so a crash mid-write must read as an uncommitted
+    * index, not a valid index silently missing its appended vectors.
+    * Returns the merged per-cell manifest (cell, n_base, n_new). At
+    * 100 TB this is the daily vector arrival job: two broadcast-argmin
+    * map passes over the batch plus one delta-sized write — the corpus
+    * and the stored codes are never rescanned. */
   def annIndexAppend(batch: DataFrame, id: String, vec: String,
                      path: String): DataFrame = {
     val s = batch.sparkSession
@@ -1579,10 +1544,6 @@ object GraftAPI {
     // Geometry refusals BEFORE the marker retirement (the lifecycle
     // discipline): a rejected call leaves a valid index valid.
     val (mM, dim) = graft.ops.IvfPqIndex.geometry(path)
-    // An operator-managed compact would shadow this append's rows, and
-    // the facade compact refuses while it exists (review r13).
-    graft.ops.IndexFs.requireUncompacted(ix.ivfCodesCompact,
-      "retire it (or fold it in) before appending")
     graft.ops.IndexFs.requireCommitted(path,
       "rebuild via buildAnnIndex before appending")
     val e = batch.select(col(id).as("vec_id"),
@@ -1599,55 +1560,54 @@ object GraftAPI {
       case Some(_) =>
         val fresh = e.join(Tables.read(s, ix.cells).select("vec_id"),
           Seq("vec_id"), "left_anti")
-        // ONE shared stored-codebook encode path with the registry append
-        // (review r13): byte-stable replay must not be able to drift.
+        // The ONE stored-codebook encode path, shared with the streaming
+        // append (review r13): byte-stable replay must not drift.
         graft.ops.VectorOps.encodeAgainstStored(fresh,
           Tables.read(s, ix.coarse), Tables.read(s, ix.ivfCodebooks),
           mM, dim / mM)
     }
     // Fold into the single delta generation. Declared schema on the
     // prior read: a previous empty append commits a data-file-less
-    // table. localCheckpoint severs the read from the overwrite.
+    // table. One shuffle by cell serves both the distinct (cell is one
+    // of its keys) and the one-file-per-cell write; localCheckpoint
+    // severs the read from the overwrite.
     val merged = (if (graft.ops.IndexFs.committed(ix.ivfCodesDelta))
       Tables.read(s, ix.ivfCodesDelta, Some(graft.ops.VectorOps.codesSchema))
         .select("vec_id", "m", "code", "cell")
         .unionByName(newCodes)
-    else newCodes).distinct().localCheckpoint()
+    else newCodes).repartition(col("cell")).distinct().localCheckpoint()
     graft.ops.IndexFs.mutate(path) {
       merged.withColumn("pcell", col("cell"))
-        .repartition(col("pcell"))
         .write.mode("overwrite").partitionBy("pcell")
         .parquet(ix.ivfCodesDelta)
     }
-    val nBase = Tables.read(s, ix.cells)
-      .groupBy("cell").agg(count(lit(1)).as("n_base"))
-    val nNew = Tables.read(s, ix.ivfCodesDelta, Some(graft.ops.VectorOps.codesSchema))
-      .filter(col("m") === 0)
-      .groupBy("cell").agg(count(lit(1)).as("n_new"))
-    nBase.join(nNew, Seq("cell"), "full_outer")
-      .select(col("cell"), coalesce(col("n_base"), lit(0L)).as("n_base"),
-        coalesce(col("n_new"), lit(0L)).as("n_new"))
+    // One aggregate over both sides' rows: every cell of either side
+    // gets a row (review r10), so a coarse cell empty in the base but
+    // receiving appended vectors does not drop out of the count.
+    Tables.read(s, ix.cells).select(col("cell"), lit(true).as("in_base"))
+      .unionByName(Tables.read(s, ix.ivfCodesDelta, Some(graft.ops.VectorOps.codesSchema))
+        .filter(col("m") === 0).select(col("cell"), lit(false).as("in_base")))
+      .groupBy("cell")
+      .agg(count_if(col("in_base")).as("n_base"), count_if(!col("in_base")).as("n_new"))
       .orderBy("cell")
   }
 
-  /** COMPACT a stored [[buildAnnIndex]] layout in place (r13, the ANN
-    * mirror of [[minhashIndexCompact]]): folds the committed
-    * `ivfpq_codes_delta` into the `ivfpq_codes` table and the appended
-    * (vec_id, cell) memberships into `cells`, removes the folded delta,
-    * and retires the split marker (the split side-tables reflect
-    * PRE-compact cell membership — probes fall back to whole-cell pools
-    * until the next [[annIndexSplit]], the same rule the takedown
-    * applies). Single layout afterwards; probes resolve base alone and
-    * return exactly what base ∪ delta returned (the fold is a set
-    * union, distinct per (vec_id, m) row — replay-idempotent). Runs
-    * under the retired root marker; refuses while a committed
-    * operator-managed `ivfpq_codes_compact` sibling would shadow the
-    * folded base. Returns the per-cell manifest (cell, n_vecs,
-    * n_codes) of the compacted table. */
+  /** COMPACT a stored [[buildAnnIndex]] layout in place (the ANN mirror
+    * of [[minhashIndexCompact]], and the one compact behind the
+    * registry's `ann_index_compact` and the maintenance remedy): folds
+    * the committed `ivfpq_codes_delta` into the `ivfpq_codes` table and
+    * the appended (vec_id, cell) memberships into `cells`, removes the
+    * folded delta, and retires the split marker (the split side-tables
+    * reflect PRE-compact cell membership — probes fall back to
+    * whole-cell pools until the next [[annIndexSplit]], the same rule
+    * the takedown applies). Single layout afterwards; probes resolve the
+    * base (and an empty re-appended delta) and return exactly what
+    * base ∪ delta returned (the fold is a set union, distinct per
+    * (vec_id, m) row — replay-idempotent). Runs under the retired root
+    * marker. Returns the per-cell manifest (cell, n_vecs, n_codes) of
+    * the compacted table. */
   def annIndexCompact(spark: SparkSession, path: String): DataFrame = {
     val ix = graft.ops.IvfPqIndex.Ix(path)
-    graft.ops.IndexFs.requireUncompacted(ix.ivfCodesCompact,
-      "retire it before compacting in place")
     // Same rationale as minhashIndexCompact (review r13): the in-place
     // fold must not run on top of a crashed lifecycle op's partial base.
     graft.ops.IndexFs.requireCommitted(path,

@@ -37,11 +37,13 @@ import org.apache.spark.sql.functions._
   *      the same way); the per-band manifest → `<outDir>/postings_manifest`;
   *   4. ANN: the appended embedding batch is encoded against the base
   *      index's STORED codebooks (coarse-assign + residual-PQ, no
-  *      retraining — [[graft.ops.VectorOps.annIndexAppend]]) and lands
-  *      as a cell-partitioned delta next to the base codes, which the
-  *      ANN probes resolve the same way
-  *      ([[graft.ops.IvfPqIndex.resolvedCodes]] → `knn_ivf_pq_delta`,
-  *      the streaming probe's pool); the merged per-cell manifest →
+  *      retraining — `ann_index_append`, bound to the library's
+  *      [[graft.api.GraftAPI.annIndexAppend]], the same append the
+  *      probes' ensured delta runs) and folds into the cell-partitioned
+  *      delta next to the base codes, which the ANN probes resolve the
+  *      same way ([[graft.ops.IvfPqIndex.resolvedCodes]] →
+  *      `knn_ivf_pq_delta`, the streaming probe's pool); the merged
+  *      per-cell manifest →
   *      `<outDir>/ann_delta_manifest`. One spark-submit absorbs a day
   *      for BOTH indexes (VERDICT r9 #4);
   *   5. MAINTENANCE AUDIT (r12, shared with the remedy executor since

@@ -26,10 +26,12 @@ import org.apache.spark.sql.functions._
   *     probe resolver serves it from then on) and REBUILD `bands_fine`
   *     from the resolved postings ([[graft.ops.MinhashIndex.rewriteFine]]
   *     — deterministic, so a re-run byte-matches);
-  *   - ann: fold the codes delta in (`ann_index_compact`) and rebuild
-  *     the cell-split side-tables over the RESOLVED membership (base ∪
-  *     appended vectors), so a cell pushed over the hot threshold by
-  *     appends splits with ALL its members;
+  *   - ann: fold the codes delta into the base root in place
+  *     ([[graft.api.GraftAPI.annIndexCompact]], after which `cells` holds
+  *     the appended vectors) and rebuild the cell-split side-tables over
+  *     that membership ([[graft.api.GraftAPI.annIndexSplit]]), so a cell
+  *     pushed over the hot threshold by appends splits with ALL its
+  *     members; the next ensured delta is empty;
   *
   * then re-audits and writes the post-remedy posture. Probe outputs are
   * unchanged by construction (every side-table is a deterministic
@@ -82,7 +84,7 @@ object Maintenance {
 
   private val remedyJobs = Map(
     "minhash" -> "graft.jobs.MaintenanceRun (dedup_index_compact + bands_fine rebuild on this root)",
-    "ann" -> "graft.jobs.MaintenanceRun (ann_index_compact + resolved-membership cell split on this root)")
+    "ann" -> "graft.jobs.MaintenanceRun (in-place codes compact + cell split on this root)")
 
   /** The two-family audit over the base roots' resolved state, in ONE
     * action: both families' one-row postures are unioned and collected
@@ -147,17 +149,11 @@ object Maintenance {
         graft.ops.DedupOps.fineRowsFor(spark, sfDir,
           graft.ops.MinhashIndex.resolvedPostings(spark, sfDir, ix)), ix)
     case "ann" =>
-      graft.ops.VectorOps.annIndexCompact(spark, sfDir).count()
       val ix = graft.ops.IvfPqIndex.ensureBase(spark, sfDir)
-      val resolvedCells = graft.ops.IvfPqIndex
-        .resolvedCodes(spark, sfDir, ix)
-        .filter(col("m") === 0).select("vec_id", "cell")
-      val e = graft.Tables.embeddings(spark, sfDir)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("x"))
-      graft.ops.IvfPqIndex.rewriteSplitFrom(
-        graft.ops.VectorOps.splitRowsOf(spark, e, ix,
-          graft.ops.VectorOps.SplitHotSize, graft.ops.VectorOps.SplitSubK,
-          Some(resolvedCells)), ix)
+      graft.api.GraftAPI.annIndexCompact(spark, ix.root)
+      graft.api.GraftAPI.annIndexSplit(graft.Tables.embeddings(spark, sfDir),
+        "vec_id", "embedding", ix.root,
+        graft.ops.VectorOps.SplitHotSize, graft.ops.VectorOps.SplitSubK)
     case other =>
       throw new IllegalArgumentException(s"unknown index family '$other'")
   }

@@ -26,14 +26,17 @@ private[graft] object Artifacts {
     // IndexFs, not FileWriter (review r10): the facades pass user table
     // paths, which may be object-store URIs — the manifest must land
     // next to the tables on whatever filesystem holds them.
-    IndexFs.write(IndexFs.child(root, "index.properties"))(out =>
+    IndexFs.write(metaFile(root))(out =>
       p.store(out, "graft index geometry"))
   }
+
+  /** The geometry manifest's path under an index root. */
+  private[graft] def metaFile(root: String): String = IndexFs.child(root, "index.properties")
 
   /** Read the manifest; empty when absent (pre-manifest artifacts stay
     * readable — the guard only fires on a RECORDED mismatch). */
   private[graft] def readMeta(root: String): Map[String, String] =
-    IndexFs.readIfExists(IndexFs.child(root, "index.properties")) { in =>
+    IndexFs.readIfExists(metaFile(root)) { in =>
       val p = new java.util.Properties()
       p.load(in)
       import scala.jdk.CollectionConverters._

@@ -25,11 +25,13 @@ import org.apache.spark.sql.DataFrame
   * that a root rewrite makes stale loses its marker through [[retire]],
   * and consumers fall back to the raw tables until it is rebuilt.
   *
-  * Resolve. A probe reads the committed compact sibling when there is
-  * one, else the base table ∪ the committed delta generations
-  * ([[resolve]]); both hold the same rows, so compacting changes the
-  * scan count and nothing else. [[requireCommitted]] and
-  * [[requireUncompacted]] are the lifecycle preconditions the facade
+  * Resolve (MinHash only). A MinHash probe reads the committed compact
+  * sibling when there is one, else the base table ∪ the committed delta
+  * generations ([[resolve]]); both hold the same rows, so compacting
+  * changes the scan count and nothing else. [[requireUncompacted]]
+  * guards the MinHash facade lifecycle against that sibling. The IVF-PQ
+  * lifecycle compacts in place and has no sibling to resolve.
+  * [[requireCommitted]] is the precondition every facade lifecycle op
   * checks before it mutates a root.
   *
   * All I/O goes through Hadoop's `FileSystem` for the path's scheme,
@@ -133,9 +135,21 @@ private[graft] object IndexFs {
       case ds => base.unionByName(readDeltas(ds))
     }
 
+  /** Copy each existing table or file of `paths` into `root` under its
+    * own name, replacing what is there. Call it only as the body of a
+    * [[build]] of `root`, so the copies commit with the root marker. */
+  def copy(paths: Seq[String], root: String): Unit = paths.foreach(src => withFs(src) { (fs, p) =>
+    if (fs.exists(p)) {
+      val to = new Path(root, p.getName)
+      require(deleteRecursive(to.toString) &&
+        org.apache.hadoop.fs.FileUtil.copy(fs, p, to.getFileSystem(conf), to, false, conf),
+        s"could not copy $src into $root")
+    }
+  })
+
   /** Recursive delete of a retired index SIBLING (delta generations a
-    * compact has folded in). Only lifecycle code inside [[mutate]] may
-    * call this. */
+    * compact has folded in). Only lifecycle code inside [[mutate]] or
+    * [[build]] may call this. */
   def deleteRecursive(path: String): Boolean =
     withFs(path)((fs, p) => !fs.exists(p) || fs.delete(p, true))
 

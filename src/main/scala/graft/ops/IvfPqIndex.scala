@@ -27,13 +27,21 @@ import org.apache.spark.sql.functions._
   *                           FAISS inverted-list layout as a lakehouse table.
   *
   * The base-family root adds `ivfpq_codes_delta` (the appended batch,
-  * same layout) and `ivfpq_codes_compact` (base ∪ delta); probes read
-  * them through [[resolvedCodes]]. A maintenance split adds
-  * `coarse_split` and `cells_split`. Every table commits through
-  * [[IndexFs]]: the root marker after all six tables and the geometry
-  * manifest, each sibling's own table marker, and the split marker over
-  * the split side-tables (retired by any rebuild, compact or delete
-  * that changes cell membership).
+  * same layout), written only by [[graft.api.GraftAPI.annIndexAppend]]
+  * and folded into `ivfpq_codes` and `cells` in place by
+  * [[graft.api.GraftAPI.annIndexCompact]]; probes read base ∪ delta
+  * through [[resolvedCodes]]. A maintenance split adds `coarse_split`
+  * and `cells_split`. Every table commits through [[IndexFs]]: the root
+  * marker after all six tables and the geometry manifest, each
+  * sibling's own table marker, and the split marker over the split
+  * side-tables (retired by any rebuild, compact or delete that changes
+  * cell membership).
+  *
+  * This object keeps the registry's fixture roots only: the full-corpus
+  * and base-slice builds, the ensured delta, and the private copies the
+  * in-place lifecycle keys mutate ([[ensureCopy]]). Every lifecycle op
+  * is the facade's; the build recipe is [[VectorOps.trainIvfPq]] and
+  * [[VectorOps.trainPq]].
   *
   * At 100 TB: the build trains on a sample and encodes in one distributed
   * pass; codes are 4 bytes/vector; probes read one cell directory + two
@@ -51,8 +59,7 @@ object IvfPqIndex {
     def pqCodes: String      = s"$root/pq_codes"
     def ivfCodebooks: String = s"$root/ivfpq_codebooks"
     def ivfCodes: String     = s"$root/ivfpq_codes"
-    def ivfCodesDelta: String   = s"$root/ivfpq_codes_delta"
-    def ivfCodesCompact: String = s"$root/ivfpq_codes_compact"
+    def ivfCodesDelta: String = s"$root/ivfpq_codes_delta"
   }
 
   /** Shared fingerprint-keyed root scheme ([[Artifacts]], byte-compatible
@@ -88,32 +95,53 @@ object IvfPqIndex {
     ix
   }
 
-  /** Build-if-absent codes DELTA — the held-out batch (`vec_id % 10 ==
-    * 7`) encoded against the STORED base codebooks (no retraining),
-    * exactly what `ann_index_append` lands; the ensure face exists so
-    * every PROBE resolves the same content whether or not the append
-    * job ran first (deterministic codebooks → byte-identical rows). */
+  /** Build-if-absent codes DELTA — the held-out batch encoded against
+    * the STORED base codebooks ([[append]]), exactly what
+    * `ann_index_append` lands; the ensure face exists so every PROBE
+    * resolves the same content whether or not the append job ran first
+    * (deterministic codebooks → byte-identical rows). After a compact
+    * has folded the batch into the base, the re-ensured delta is empty:
+    * the append skips ids `cells` already holds. */
   def ensureDelta(s: SparkSession, dir: String, ix: Ix): String = synchronized {
-    IndexFs.ensure(ix.ivfCodesDelta)(VectorOps.writeAnnDelta(s, dir, ix))
+    IndexFs.ensure(ix.ivfCodesDelta) { append(s, dir, ix); () }
     ix.ivfCodesDelta
   }
 
+  /** [[graft.api.GraftAPI.annIndexAppend]] of the held-out `vec_id % 10
+    * == 7` batch (the later arrivals [[ensureBase]] never trained on) to
+    * the index at `ix`. Returns the append's (cell, n_base, n_new)
+    * manifest. */
+  private[ops] def append(s: SparkSession, dir: String, ix: Ix): DataFrame =
+    graft.api.GraftAPI.annIndexAppend(embeddings(s, dir).filter(col("vec_id") % 10 === 7),
+      "vec_id", "embedding", ix.root)
+
+  /** A private copy of the committed index `src`, for a registry key
+    * that mutates its index in place (`ann_index_compact`,
+    * `ann_index_delete`), so that the shared roots every other key reads
+    * stay as built. Copied once, under `tag`'s root marker
+    * ([[IndexFs.copy]] inside [[IndexFs.ensure]]); from then on the key
+    * finds its own earlier mutation. */
+  private[ops] def ensureCopy(src: Ix, tag: String, dir: String): Ix = synchronized {
+    val ix = Ix(Artifacts.root(tag, dir, "embeddings.parquet"))
+    IndexFs.ensure(ix.root)(IndexFs.copy(Seq(src.coarse, src.cells, src.pqCodebooks,
+      src.pqCodes, src.ivfCodebooks, src.ivfCodes, src.ivfCodesDelta,
+      Artifacts.metaFile(src.root)), ix.root))
+    ix
+  }
+
   /** The residual-code table every base-family probe scores from (the
-    * mirror of [[MinhashIndex.resolvedPostings]]): [[IndexFs.resolve]]
-    * over the committed `ivfpq_codes_compact`, else `ivfpq_codes` ∪ the
-    * ensured delta. Both resolve to the same content — every corpus
-    * vector encoded under the base-trained codebooks — so an appended vector is
-    * probe-visible without a compact, and compact changes nothing but
-    * the scan count (VectorSpec pins byte-identical probe results). */
+    * mirror of [[MinhashIndex.resolvedPostings]]): `ivfpq_codes` ∪ the
+    * ensured delta, so an appended vector is probe-visible without a
+    * compact. After a compact the delta is empty and the base holds the
+    * same rows (VectorSpec pins byte-identical probe results). */
   def resolvedCodes(s: SparkSession, dir: String, ix: Ix): DataFrame = {
     val cols = Seq("vec_id", "cell", "m", "code", "pcell").map(col)
-    // Declared schema on the sibling reads (not inference): an empty
+    val delta = ensureDelta(s, dir, ix)
+    // Declared schema on the delta read (not inference): an empty
     // held-out slice writes a data-file-less delta — it must resolve to
     // "base alone", not crash the probe (the bandsSchema rule).
-    def sibling(paths: Seq[String]) =
-      Tables.readAll(s, paths, Some(VectorOps.codesSchema)).select(cols: _*)
-    IndexFs.resolve(ix.ivfCodesCompact, Tables.read(s, ix.ivfCodes).select(cols: _*),
-      Seq(ensureDelta(s, dir, ix)))(p => sibling(Seq(p)), sibling)
+    Tables.read(s, ix.ivfCodes).select(cols: _*)
+      .unionByName(Tables.read(s, delta, Some(VectorOps.codesSchema)).select(cols: _*))
   }
 
   /** The (m, dim) geometry an index root's manifest records — what an
@@ -126,20 +154,15 @@ object IvfPqIndex {
   }
 
   /** Rewrite of the cell-SPLIT side-tables under their own marker
-    * ([[IndexFs.Split]]; the ANN mirror of [[MinhashIndex.rewriteFine]]):
-    * `coarse_split` (cell, scid, scv — per-hot-cell residual
-    * sub-centroids) and `cells_split` (vec_id, cell, scid — the hot
-    * cells' vectors re-assigned to sub-cells, hive-partitioned by cell).
-    * A crash mid-write reads as "no split" to [[ensureSplit]] and the
-    * probe. The root marker stays valid throughout: the split is
-    * additive; raw cell probes remain correct without it. */
-  def rewriteSplit(s: SparkSession, dir: String, ix: Ix): Unit =
-    rewriteSplitFrom(VectorOps.splitRowsFor(s, dir, ix), ix)
-
-  /** [[rewriteSplit]] from pre-built (pinned residuals, sub-centroids,
-    * assignments) frames — shared with the public facade, which derives
-    * them from a caller corpus at caller geometry
-    * ([[graft.ops.VectorOps.splitRowsOf]]). */
+    * ([[IndexFs.Split]]; the ANN mirror of [[MinhashIndex.rewriteFine]])
+    * from pre-built (pinned residuals, sub-centroids, assignments) frames
+    * ([[graft.ops.VectorOps.splitRowsOf]]): `coarse_split` (cell, scid,
+    * scv — per-hot-cell residual sub-centroids) and `cells_split`
+    * (vec_id, cell, scid — the hot cells' vectors re-assigned to
+    * sub-cells, hive-partitioned by cell). A crash mid-write reads as "no
+    * split" to [[ensureSplit]] and the probe. The root marker stays valid
+    * throughout: the split is additive; raw cell probes remain correct
+    * without it. */
   def rewriteSplitFrom(frames: (DataFrame, DataFrame, DataFrame),
                        ix: Ix): Unit = synchronized {
     IndexFs.build(ix.root, IndexFs.Split)(writeSplit(frames, ix))
@@ -189,74 +212,48 @@ object IvfPqIndex {
                              cells: Int, m: Int, k: Int, iters: Int): Unit =
     IndexFs.build(ix.root)(train(s, raw, ix, cells, m, k, iters))
 
-  /** The index build body, parameterized: 2-phase k-means coarse
-    * training, coarse assignment, raw-vector PQ train+encode, residual PQ
-    * train+encode over an arbitrary (vec_id, x) frame. Every stage WRITES
-    * its table and downstream stages READ it back — lineage is truncated
-    * at each artifact (the factoring VERDICT r7 called for: an index
-    * build and a probe are different jobs). `sub` (subvector width) is
-    * derived from the first row's dimensionality; callers validate
-    * rectangularity upstream. */
+  /** The index build body: [[VectorOps.trainPq]] and
+    * [[VectorOps.trainIvfPq]] over an arbitrary (vec_id, x) frame, each
+    * stored stage WRITTEN to its table and READ back by downstream stages
+    * — lineage is truncated at each artifact (the factoring VERDICT r7
+    * called for: an index build and a probe are different jobs) — and
+    * each long-form subvector frame persisted for the Lloyd folds and the
+    * argmin. `sub` (subvector width) is derived from the first row's
+    * dimensionality; callers validate rectangularity upstream. */
   private def train(s: SparkSession, raw: DataFrame, ix: Ix,
                     cells: Int, m: Int, k: Int, iters: Int): Unit = {
-    // An in-place REBUILD invalidates any committed cell split (review
-    // r12): the side-tables reflect the OLD assignment, and the
-    // split-aware probe would silently serve them — consumers fall back
-    // to whole-cell scans until the next maintenance run re-splits
-    // against the new index.
+    // An in-place REBUILD invalidates what was derived from the old
+    // assignment and codebooks: a committed cell split (review r12),
+    // which the split-aware probe would silently serve, and a committed
+    // codes delta, encoded against the old codebooks. Consumers fall back
+    // to whole-cell scans until the next maintenance run re-splits, and
+    // the delta is re-ensured or re-appended.
     IndexFs.retire(ix.root, IndexFs.Split)
+    IndexFs.retire(ix.ivfCodesDelta)
     val e = raw.persist()
+    val pins = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def keep(stage: String, df: DataFrame): DataFrame =
+      if (stage.endsWith("_long")) { pins += df.persist(); df }
+      else {
+        val table = IndexFs.child(ix.root, stage)
+        df.write.mode("overwrite").parquet(table)
+        Tables.read(s, table)
+      }
     try {
       val dim = e.select(size(col("x"))).head().getInt(0)
       require(dim % m == 0, s"vector length $dim not divisible by m=$m subspaces")
-      val sub = dim / m
-      def sliceL(v: org.apache.spark.sql.Column) =
-        posexplode(array((0 until m).map(i => slice(v, i * sub + 1, sub)): _*))
-      // 1. coarse centroids (learned cells, deterministic training)
-      VectorOps.kmeansCentroids(e, iters, cells)
-        .write.mode("overwrite").parquet(ix.coarse)
-      val coarse = Tables.read(s, ix.coarse)
-      // 2. coarse cell assignment
-      VectorOps.assignCells(e, coarse)
-        .write.mode("overwrite").parquet(ix.cells)
-      val cellsT = Tables.read(s, ix.cells)
-      // 3. raw-vector PQ: one long-form frame holds every subspace
-      val emLong = e.select(col("vec_id"), sliceL(col("x")))
-        .select(col("vec_id"), col("pos").cast("int").as("m"), col("col").as("x"))
-        .persist()
-      try {
-        VectorOps.kmeansCentroidsLong(emLong, iters, k)
-          .write.mode("overwrite").parquet(ix.pqCodebooks)
-        VectorOps.assignCellsLong(emLong, Tables.read(s, ix.pqCodebooks))
-          .select(col("vec_id"), col("m"), col("cell").as("code"))
-          .write.mode("overwrite").parquet(ix.pqCodes)
-      } finally emLong.unpersist(false)
-      // 4. residual PQ: residual = x − coarse centroid of the vector's cell
-      val remLong = e.join(cellsT, "vec_id")
-        .join(broadcast(coarse), col("cell") === col("cid"))
-        .select(col("vec_id"), col("cell"),
-          zip_with(col("x"), col("cv"), (a, b) => r6(a - b)).as("rx"))
-        .select(col("vec_id"), col("cell"), sliceL(col("rx")))
-        .select(col("vec_id"), col("cell"), col("pos").cast("int").as("m"),
-          col("col").as("x"))
-        .persist()
-      try {
-        VectorOps.kmeansCentroidsLong(remLong.select("m", "vec_id", "x"), iters, k)
-          .write.mode("overwrite").parquet(ix.ivfCodebooks)
-        // codes partitioned by coarse cell (duplicated as pcell so the data
-        // column keeps its exact LongType — partition-value inference would
-        // narrow it); one file per cell via the repartition.
-        VectorOps.assignCellsLong(remLong.select("m", "vec_id", "x"),
-            Tables.read(s, ix.ivfCodebooks))
-          .select(col("vec_id"), col("m"), col("cell").as("code"))
-          .join(cellsT, "vec_id")
-          .withColumn("pcell", col("cell"))
-          .repartition(col("pcell"))
-          .write.mode("overwrite").partitionBy("pcell").parquet(ix.ivfCodes)
-      } finally remLong.unpersist(false)
+      VectorOps.trainPq(e, m, dim / m, k, iters, keep)
+        .write.mode("overwrite").parquet(ix.pqCodes)
+      // codes partitioned by coarse cell (duplicated as pcell so the data
+      // column keeps its exact LongType — partition-value inference would
+      // narrow it); one file per cell via the repartition.
+      VectorOps.trainIvfPq(e, cells, m, dim / m, k, iters, keep)
+        .withColumn("pcell", col("cell"))
+        .repartition(col("pcell"))
+        .write.mode("overwrite").partitionBy("pcell").parquet(ix.ivfCodes)
       Artifacts.writeMeta(ix.root,
         "cells" -> cells.toString, "m" -> m.toString, "k" -> k.toString,
         "iters" -> iters.toString, "dim" -> dim.toString)
-    } finally e.unpersist(false)
+    } finally { pins.foreach(_.unpersist(false)); e.unpersist(false) }
   }
 }

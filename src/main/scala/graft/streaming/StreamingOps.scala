@@ -380,21 +380,19 @@ object StreamingOps {
       .topKPerGroup(scored, Seq("query_id"), "cosine", "corpus_id", k), batchId)
   }
 
-  /** Pool membership through the probe-root resolver (r13): a committed
-    * codes compact, else `cells` ∪ any committed codes delta (rows at
+  /** Pool membership (r13): `cells` ∪ the committed codes delta (rows at
     * m = 0), so an appended vector is servable from the next micro-batch
-    * (in a SPLIT cell, after the next split refresh). The siblings read
-    * through the declared codes schema: a data-file-less delta must not
-    * fail inference on every micro-batch. */
+    * (in a SPLIT cell, after the next split refresh); a compact folds the
+    * delta into `cells` in place. The delta reads through the declared
+    * codes schema: a data-file-less delta must not fail inference on
+    * every micro-batch. */
   private def resolvedCells(s: SparkSession,
                             indexRoot: String): DataFrame = {
-    import graft.ops.IndexFs
-    def m0(paths: Seq[String]) = Tables.readAll(s, paths, Some(graft.ops.VectorOps.codesSchema))
-      .filter(col("m") === 0).select("vec_id", "cell")
-    val delta = IndexFs.child(indexRoot, "ivfpq_codes_delta")
-    IndexFs.resolve(IndexFs.child(indexRoot, "ivfpq_codes_compact"),
-      Tables.read(s, s"$indexRoot/cells"),
-      Seq(delta).filter(IndexFs.committed(_)))(p => m0(Seq(p)), m0)
+    val ix = graft.ops.IvfPqIndex.Ix(indexRoot)
+    val cells = Tables.read(s, ix.cells)
+    if (!graft.ops.IndexFs.committed(ix.ivfCodesDelta)) cells
+    else cells.unionByName(Tables.read(s, ix.ivfCodesDelta, Some(graft.ops.VectorOps.codesSchema))
+      .filter(col("m") === 0).select("vec_id", "cell"))
   }
 
   /** Streaming ANN index APPEND against the STORED codebooks — the

@@ -1029,28 +1029,23 @@ class ApiSpec extends AnyFunSuite {
       .filter(col("_id") === someId).collect().nonEmpty)
   }
 
-  test("annIndexDelete rewrites committed delta/compact siblings so probes stop serving deleted vectors (review r13)") {
+  test("annIndexDelete rewrites the committed delta sibling and cells so probes stop serving deleted vectors (review r13)") {
     import org.apache.spark.sql.functions._
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     val root = java.nio.file.Files.createTempDirectory("graft_anndel_sib").toString
     GraftAPI.buildAnnIndex(emb, "vec_id", "embedding", root,
       cells = 8, m = 4, k = 8).collect()
     val codes = s"$root/ivfpq_codes"
-    // Plant the lifecycle siblings in the codes layout: a delta of
-    // remapped vectors (vec_id + 100000 — delta-ONLY ids) and a compact
-    // = base ∪ delta, both cell-partitioned with their own _SUCCESS.
+    // Plant the delta sibling in the codes layout: remapped vectors
+    // (vec_id + 100000 — delta-ONLY ids), cell-partitioned with its own
+    // _SUCCESS.
     val baseCodes = spark.read.parquet(codes)
       .select("vec_id", "m", "code", "cell")
-    val deltaCodes = baseCodes.withColumn("vec_id", col("vec_id") + 100000L)
-    deltaCodes.withColumn("pcell", col("cell"))
-      .repartition(col("pcell"))
-      .write.mode("overwrite").partitionBy("pcell")
-      .parquet(s"$root/ivfpq_codes_delta")
-    baseCodes.unionByName(deltaCodes)
+    baseCodes.withColumn("vec_id", col("vec_id") + 100000L)
       .withColumn("pcell", col("cell"))
       .repartition(col("pcell"))
       .write.mode("overwrite").partitionBy("pcell")
-      .parquet(s"$root/ivfpq_codes_compact")
+      .parquet(s"$root/ivfpq_codes_delta")
     val baseId = baseCodes.select("vec_id").distinct()
       .limit(1).collect().head.getLong(0)
     val deltaId = baseId + 100000L
@@ -1068,10 +1063,6 @@ class ApiSpec extends AnyFunSuite {
       "the delta sibling must drop the delta-only id — it is the ONLY " +
         "table serving that vector")
     assert(dIds.nonEmpty, "surviving delta vectors must remain")
-    val cIds = ids(s"$root/ivfpq_codes_compact")
-    assert(!cIds.contains(baseId) && !cIds.contains(deltaId),
-      "the compact sibling (served FIRST by the resolver) must drop both")
-    assert(cIds.nonEmpty)
     // the cells membership table is purged too (review r13): the
     // streaming pool resolves membership from cells ∪ delta, so a stale
     // row would keep serving the deleted id through the corpus join
@@ -1129,18 +1120,8 @@ class ApiSpec extends AnyFunSuite {
       .parquet(s"$root/ivfpq_codes_delta")
       .filter(col("cell") === cellOfTarget).count() == 0L,
       s"the emptied delta cell $cellOfTarget must be gone")
-    // (c) appends refuse while a committed compact sibling would shadow
-    // them, and refuse on an uncommitted (crashed) index — both leave
-    // the index exactly as found
-    val compactDir = new java.io.File(root, "ivfpq_codes_compact")
-    assert(compactDir.mkdirs())
-    val cm = new java.io.File(compactDir, "_SUCCESS")
-    assert(cm.createNewFile())
-    val e2 = intercept[IllegalArgumentException](
-      GraftAPI.annIndexAppend(held, "vec_id", "embedding", root))
-    assert(e2.getMessage.contains("ivfpq_codes_compact"), e2.getMessage)
-    assert(marker.isFile)
-    assert(cm.delete() && compactDir.delete())
+    // (c) every lifecycle op refuses on an uncommitted (crashed) index
+    // and leaves it exactly as found
     assert(marker.delete()) // simulate a crashed lifecycle op
     val e3 = intercept[IllegalArgumentException](
       GraftAPI.annIndexAppend(held, "vec_id", "embedding", root))
@@ -1148,6 +1129,10 @@ class ApiSpec extends AnyFunSuite {
     val e4 = intercept[IllegalArgumentException](
       GraftAPI.annIndexCompact(spark, root))
     assert(e4.getMessage.contains("not committed"), e4.getMessage)
+    val e5 = intercept[IllegalArgumentException](
+      GraftAPI.annIndexDelete(spark, s"$root/ivfpq_codes", Seq(residents.head).toDF("vec_id"), "vec_id"))
+    assert(e5.getMessage.contains("not committed"), e5.getMessage)
+    assert(!marker.isFile)
     assert(marker.createNewFile())
     // (d) an EMPTY batch commits a clean no-op (the minhash contract)
     val n0 = spark.read.schema(ops.VectorOps.codesSchema)

@@ -99,13 +99,16 @@ class InventorySpec extends AnyFunSuite {
     src.replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("(?m)^\\s*//.*$", "")
       .replaceAll("\\s+", "")
 
-  /** (path, [[codeOnly]] text) of every Scala file under `root`. */
-  private def sourcesUnder(root: String): Seq[(String, String)] = {
+  /** (path, [[codeOnly]] text, or the whole text with `comments`) of
+    * every Scala file under `root`. */
+  private def sourcesUnder(root: String, comments: Boolean = false): Seq[(String, String)] = {
     import scala.jdk.CollectionConverters._
     java.nio.file.Files.walk(java.nio.file.Paths.get(root))
       .iterator.asScala.filter(_.toString.endsWith(".scala"))
-      .map(f => f.toString -> codeOnly(new String(java.nio.file.Files.readAllBytes(f),
-        java.nio.charset.StandardCharsets.UTF_8)))
+      .map { f =>
+        val src = new String(java.nio.file.Files.readAllBytes(f), java.nio.charset.StandardCharsets.UTF_8)
+        f.toString -> (if (comments) src else codeOnly(src))
+      }
       .toSeq
   }
 
@@ -165,6 +168,28 @@ class InventorySpec extends AnyFunSuite {
     val hits = recipes.flatMap(r =>
       filesWith(r, sourcesUnder("src/main/scala/graft/streaming")).map(f => s"$f spells $r"))
     assert(hits.isEmpty, s"streaming code must call the graft.ops cores, not copy them: $hits")
+  }
+
+  test("one IVF-PQ lifecycle: long-form training only in VectorOps, the delta path only in IvfPqIndex, no compact sibling") {
+    def names(files: Seq[String]) =
+      files.map(java.nio.file.Paths.get(_).getFileName.toString).distinct.sorted
+    val trainers = Seq("kmeansCentroidsLong(", "assignCellsLong(")
+    // the detector itself: calls and path literals in code are caught,
+    // ones in comments are not; the sibling name is caught in comments too
+    val controls = Seq(
+      "A.scala" -> codeOnly("VectorOps.assignCellsLong(long, books)\n" +
+        "  .write.parquet(s\"$root/ivfpq_codes_delta\")"),
+      "B.scala" -> codeOnly("/** kmeansCentroidsLong(x) */\n// s\"$r/ivfpq_codes_delta\"\nval z = 1"))
+    assert(trainers.map(filesWith(_, controls)) == Seq(Nil, Seq("A.scala")))
+    assert(filesWith("ivfpq_codes_delta", controls) == Seq("A.scala"))
+    assert(filesWith("ivfpq_codes_compact", Seq("C.scala" -> "// was ivfpq_codes_compact")) ==
+      Seq("C.scala"))
+    assert(names(trainers.flatMap(filesWith(_, mainSources))) == Seq("VectorOps.scala"),
+      "the IVF-PQ training recipe must be written once, in VectorOps")
+    assert(names(filesWith("ivfpq_codes_delta", mainSources)) == Seq("IvfPqIndex.scala"),
+      "callers must take the delta path from IvfPqIndex.Ix")
+    val sibling = filesWith("ivfpq_codes_compact", sourcesUnder("src/main/scala", comments = true))
+    assert(sibling.isEmpty, s"the IVF-PQ compact sibling is gone, yet spelled in: $sibling")
   }
 
   test("GraftSession holds the only SparkSession builder under src/main and src/test") {

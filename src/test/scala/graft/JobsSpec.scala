@@ -243,10 +243,17 @@ class JobsSpec extends AnyFunSuite {
     assert(posted.values.forall(_ == 0L),
       s"post-remedy posture must be clean: $posted")
     // the remedy wrote real artifacts: a committed split covering the
-    // hot cell, and the codes compact the resolver now serves
+    // hot cell, and the in-place fold — the appended ids are in `cells`
+    // and the re-ensured delta holds no rows
     val annIx = ops.IvfPqIndex.ensureBase(spark, dir)
     assert(new java.io.File(annIx.root, "_split_SUCCESS").isFile)
-    assert(new java.io.File(annIx.ivfCodesCompact, "_SUCCESS").isFile)
+    val annCells = spark.read.parquet(annIx.cells)
+      .select("vec_id").collect().map(_.getLong(0)).toSet
+    assert(Set(107L, 117L, 127L).subsetOf(annCells),
+      "the fold must move the appended members into cells")
+    assert(spark.read.schema(ops.VectorOps.codesSchema)
+      .parquet(annIx.ivfCodesDelta).count() == 0L,
+      "after the fold the re-ensured delta must hold no rows")
     val splitMembers = spark.read.schema(ops.VectorOps.splitCellsSchema)
       .parquet(s"${annIx.root}/cells_split")
       .select("vec_id").collect().map(_.getLong(0)).toSet

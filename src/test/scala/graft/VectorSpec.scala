@@ -184,21 +184,49 @@ class VectorSpec extends AnyFunSuite {
   }
 
   test("ann_index_compact: content == base+delta exactly, one file per cell (L3k)") {
+    import org.apache.spark.sql.functions.col
     VectorOps.annIndexCompact(spark, sf).collect()
-    val ix = ops.IvfPqIndex.ensureBase(spark, sf)
-    val base = spark.read.parquet(ix.ivfCodes).drop("pcell")
-    val delta = spark.read.parquet(s"${ix.root}/ivfpq_codes_delta").drop("pcell")
-    val merged = spark.read.parquet(s"${ix.root}/ivfpq_codes_compact").drop("pcell")
-    val union = base.unionByName(delta)
-    assert(merged.count() == base.count() + delta.count())
-    assert(merged.exceptAll(union).isEmpty && union.exceptAll(merged).isEmpty,
-      "compacted content must be the exact base+delta multiset")
+    // the in-place fold ran on the key's own copy of the base root; the
+    // shared base root keeps its codes and delta as built
+    val base = ops.IvfPqIndex.ensureBase(spark, sf)
+    val own = ops.IvfPqIndex.Ix(ops.Artifacts.root("annix_v1_compact", sf, "embeddings.parquet"))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val delta = spark.read.parquet(base.ivfCodesDelta).select("vec_id", "m", "code", "cell")
+    assert(delta.count() > 0)
+    assert(rows(spark.read.parquet(own.ivfCodes).select("vec_id", "m", "code", "cell")) ==
+      rows(spark.read.parquet(base.ivfCodes).select("vec_id", "m", "code", "cell")
+        .unionByName(delta)),
+      "folded codes must be the exact base+delta multiset")
+    assert(rows(spark.read.parquet(own.cells).select("vec_id", "cell")) ==
+      rows(spark.read.parquet(base.cells).select("vec_id", "cell")
+        .unionByName(delta.filter(col("m") === 0).select("vec_id", "cell"))),
+      "folded cells must hold the appended memberships")
+    assert(!new java.io.File(own.ivfCodesDelta).exists(), "the folded delta must be gone")
+    assert(new java.io.File(own.root, "_SUCCESS").isFile, "the fold must recommit the root")
     // compaction folded each cell to ONE data file
-    new java.io.File(s"${ix.root}/ivfpq_codes_compact").listFiles()
+    new java.io.File(own.ivfCodes).listFiles()
       .filter(_.getName.startsWith("pcell=")).foreach { d =>
         val n = d.listFiles().count(f => f.getName.endsWith(".parquet") && f.length > 0)
         assert(n == 1, s"${d.getName}: $n files after compaction")
       }
+  }
+
+  test("ann_index_compact and ann_index_delete leave the shared fixture roots pristine; ann_index_append still reports its batch") {
+    val full = ops.IvfPqIndex.ensure(spark, sf)
+    val base = ops.IvfPqIndex.ensureBase(spark, sf)
+    ops.IvfPqIndex.ensureDelta(spark, sf, base)
+    val reference = VectorOps.annIndexAppend(spark, sf).collect().map(_.toString).sorted.toSeq
+    assert(reference.nonEmpty)
+    def stamps(): Map[String, Option[Long]] = Seq(full.root, base.root).flatMap(root =>
+      new java.io.File(root).listFiles().map(f => f.getPath -> ops.IndexFs.shallowStamp(f.getPath))).toMap
+    val before = stamps()
+    Seq(base.ivfCodes, base.cells, base.ivfCodesDelta, full.ivfCodes, full.cells)
+      .foreach(t => assert(before.contains(t), s"$t missing from the stamped set"))
+    VectorOps.annIndexCompact(spark, sf).collect()
+    VectorOps.annIndexDelete(spark, sf).collect()
+    assert(stamps() == before, "a mutating key touched a shared fixture root")
+    assert(VectorOps.annIndexAppend(spark, sf).collect().map(_.toString).sorted.toSeq == reference,
+      "ann_index_append must still report the held-out batch as new")
   }
 
   test("PQ shortlist+rerank recalls the exact-L2 top-10 well above chance (L3g)") {
@@ -550,19 +578,24 @@ class VectorSpec extends AnyFunSuite {
     assert(got1.nonEmpty && got1.head._1 == 7L,
       s"the appended near-duplicate must top the rerank: ${got1.toSeq}")
 
-    // 2. compact → byte-identical, and genuinely served FROM the compact
-    // (delta table removed entirely).
-    VectorOps.annIndexCompact(spark, dir).count()
+    // 2. compact the base root in place through the facade → the delta
+    // is gone and the folded base serves byte-identical results; the
+    // probe's re-ensured delta is EMPTY (the append skips ids the folded
+    // cells hold), not a duplicate of the folded batch.
+    val ix = ops.IvfPqIndex.ensureBase(spark, dir)
+    graft.api.GraftAPI.annIndexCompact(spark, ix.root).count()
+    assert(!new java.io.File(ix.ivfCodesDelta).exists(), "the fold must remove the delta")
+    assert(spark.read.parquet(ix.cells).filter(col("vec_id") === 7L).count() == 1L,
+      "the fold must move the appended vector into cells")
     val got2 = VectorOps.knnIvfPqDelta(spark, dir).collect()
       .map(r => (r.getLong(0), r.getDouble(3)))
     assert(got2.sameElements(got1),
       "probe results must be byte-identical before/after compact")
-    val ix = ops.IvfPqIndex.ensureBase(spark, dir)
-    ops.Artifacts.rmrf(new java.io.File(ix.ivfCodesDelta))
-    assert(!new java.io.File(ix.ivfCodesDelta).exists())
+    assert(spark.read.schema(VectorOps.codesSchema).parquet(ix.ivfCodesDelta).count() == 0L,
+      "the re-ensured delta must be empty, not a duplicate of the folded batch")
     val got3 = VectorOps.knnIvfPqDelta(spark, dir).collect()
       .map(r => (r.getLong(0), r.getDouble(3)))
     assert(got3.sameElements(got1),
-      "a committed compact must serve the probe on its own (the catalog swap)")
+      "the folded base must keep serving the probe on its own")
   }
 }
