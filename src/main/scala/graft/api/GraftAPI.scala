@@ -293,388 +293,239 @@ object GraftAPI {
       .select(col("band").cast("int").as("band"), col("n_keys"),
         col("n_postings"), col("n_docs"))
 
-  /** Persist [[minhashBands]] as a stored dedup index (the facade form of
-    * the registry's `build_minhash_index` / [[graft.ops.MinhashIndex]]):
-    * postings land at `path` hive-partitioned by band (`band` duplicated
-    * as `pband` so the data column keeps its type), one file per band,
-    * under the root marker ([[graft.ops.IndexFs.build]]: a crashed build
-    * reads as uncommitted). Returns the per-band manifest (band, n_keys,
-    * n_postings, n_docs) read back FROM the stored table; n_postings ==
-    * n_docs by the one-key-per-(doc, band) construction, so a
-    * lost/doubled posting is visible in the manifest. At 100 TB, bucket the table by band_key as well so
-    * incremental batch probes co-partition against it without shuffling
-    * the stored side. */
+  /** Persist [[minhashBands]] as a stored dedup index — the one MinHash
+    * index build ([[graft.ops.MinhashIndex]]'s fixture roots call it at
+    * the harness geometry). One signature pass writes, under the root
+    * marker ([[graft.ops.IndexFs.build]]: a crashed build reads as
+    * uncommitted):
+    *   - `bands`: (doc_id, band, band_key) postings, the caller's `id`
+    *     stored as `doc_id`, hive-partitioned by band (`band` duplicated
+    *     as `pband` so the data column keeps its type), one file per band
+    *     — and, with `batchWidth > 0`, by the ingest batch `pbatch = id
+    *     div batchWidth`, the axis that makes [[minhashIndexDelete]]'s
+    *     takedowns partition-pruned (a document posts to EVERY band, so
+    *     band partitioning alone cannot prune a delete);
+    *   - `bands_fine`: the postings of buckets of at least
+    *     `DedupOps.RebandHotSize` documents, re-keyed on the
+    *     full-signature sub_key, so incremental probes match a
+    *     template-family bucket only on a full-signature hit; O(hot
+    *     postings), not O(corpus);
+    *   - `sub_keys`: one (doc_id, sub_key) row per document (~40
+    *     bytes/doc), so an append can refresh `bands_fine` for buckets it
+    *     pushes over the threshold without re-signing any stored text;
+    *   - the manifest (`index.properties`): geometry, batch width, hot
+    *     size and [[graft.ops.MinhashIndex.Layout]].
+    * A rebuild drops every delta generation an earlier append left.
+    * Returns the per-band manifest (band, n_keys, n_postings, n_docs)
+    * read back FROM the stored table; n_postings == n_docs by the
+    * one-key-per-(doc, band) construction, so a lost/doubled posting is
+    * visible in the manifest. At 100 TB, bucket the table by band_key as
+    * well so incremental batch probes co-partition against it without
+    * shuffling the stored side. */
   def writeMinhashIndex(df: DataFrame, id: String, text: String, path: String,
                         numHashes: Int = 128, bands: Int = 16,
                         batchWidth: Long = 0): DataFrame = {
+    import graft.ops.{Artifacts, DedupOps, IndexFs, MinhashIndex}
     val s = df.sparkSession
-    graft.ops.IndexFs.build(path) {
-      // batchWidth > 0 adds the ingest-batch partition axis (pbatch =
-      // id div batchWidth) that makes [[minhashIndexDelete]]'s takedowns
-      // partition-pruned: a document posts to EVERY band, so band
-      // partitioning alone cannot prune a delete. Readers are unaffected
-      // (pbatch is one more hive partition column they never select).
-      // One signature pass feeds BOTH the postings (sub_key dropped — a
-      // 32-char key per posting would bloat the main table for nothing)
-      // and the hot-bucket fine side-table below; persist so the fine
-      // write doesn't re-shingle the corpus.
+    val ix = MinhashIndex.Ix(path)
+    IndexFs.build(path) {
+      require(IndexFs.deleteRecursive(ix.delta),
+        s"could not drop the delta generations under $path")
+      // One signature pass feeds the postings (sub_key dropped — a 32-char
+      // key per posting would bloat the main table for nothing), the fine
+      // table and the per-doc sub keys; persisted so neither re-shingles.
       val bandedSub = minhashBandsWithSub(df, id, text, numHashes, bands)
-        .withColumnRenamed(id, "_id")
+        .withColumnRenamed(id, "doc_id")
         .withColumn("pband", col("band"))
         .persist()
-      val banded = bandedSub.drop("sub_key")
-      val (laid, partCols) =
-        if (batchWidth > 0)
-          (banded.withColumn("pbatch", expr(s"_id div $batchWidth"))
-             .repartition(col("pband"), col("pbatch")),
-           Seq("pband", "pbatch"))
-        else (banded.repartition(col("pband")), Seq("pband"))
-      laid.write.mode("overwrite").partitionBy(partCols: _*)
-        .parquet(s"$path/bands")
-      // Hot-bucket fine side-table (r12, the facade form of the registry's
-      // bands_fine): postings of buckets >= hotSize re-keyed on the
-      // full-signature sub_key, so incremental probes
-      // ([[graft.streaming.StreamingOps.dedupBatchAgainstIndex]]) match a
-      // template-family bucket only on a full-signature hit; its row count
-      // is O(hot postings), not O(corpus).
-      val hotKeys = bandedSub.groupBy("band", "band_key")
-        .agg(count(lit(1)).as("sz"))
-        .filter(col("sz") >= graft.ops.DedupOps.RebandHotSize)
-        .select("band", "band_key")
-      bandedSub.join(hotKeys, Seq("band", "band_key"), "left_semi")
-        .select("_id", "band", "band_key", "sub_key", "pband")
-        .repartition(col("pband"))
-        .write.mode("overwrite").partitionBy("pband")
-        .parquet(s"$path/bands_fine")
-      // Per-DOC sub_keys side table (r13): one (_id, sub_key) row per
-      // document — ~40 bytes/doc, a fraction of the bands table's
-      // numBands rows/doc — so a lifecycle APPEND can refresh bands_fine
-      // for buckets the delta pushes over the hot threshold WITHOUT
-      // re-signing any base text (the per-POSTING width argument for
-      // dropping sub_key from the main table doesn't apply here).
-      bandedSub.select("_id", "sub_key").distinct()
-        .write.mode("overwrite").parquet(s"$path/sub_keys")
-      bandedSub.unpersist()
-      // batchWidth is recorded so [[minhashIndexDelete]] can refuse an index
-      // written WITHOUT a batch axis with a geometry message instead of a
-      // late missing-pbatch-column AnalysisException (ADVICE r9).
-      graft.ops.Artifacts.writeMeta(path,
+      try {
+        val banded = bandedSub.drop("sub_key")
+        writePostings(banded, batchWidth, ix.bands)
+        val subKeys = bandedSub.select("doc_id", "sub_key").distinct()
+        MinhashIndex.writeFine(fineOf(banded, subKeys, DedupOps.RebandHotSize), ix)
+        subKeys.write.mode("overwrite").parquet(ix.subKeys)
+      } finally bandedSub.unpersist()
+      Artifacts.writeMeta(path,
         "numHashes" -> numHashes.toString, "bands" -> bands.toString,
         "batchWidth" -> batchWidth.toString,
-        "hotSize" -> graft.ops.DedupOps.RebandHotSize.toString)
+        "hotSize" -> DedupOps.RebandHotSize.toString,
+        "layout" -> MinhashIndex.Layout)
     }
-    bandManifest(Tables.read(s, s"$path/bands"), "_id")
+    bandManifest(Tables.read(s, ix.bands), "doc_id")
   }
 
-  /** APPEND a day's batch to a stored facade MinHash index (the facade
-    * form of the registry's `dedup_index_append`, r13): the batch
-    * shingles + signs ONLY itself and lands as its own COMMITTED delta
-    * generation `<root>/bands_delta/batch=<batchId>/` — one
-    * subdirectory per append, each committed by its own table marker,
-    * so a crashed append is invisible to the probe
-    * resolver and a replay of the same `batchId` is an idempotent
-    * overwrite (the foreachBatch replay contract). The streaming probes
-    * ([[graft.streaming.StreamingOps.dedupBatchAgainstIndex]] /
-    * `curationVerdictBatch`) resolve `bands` ∪ committed deltas (or a
-    * committed `bands_compact`), so a document appended today flags the
-    * very next micro-batch's dups of it — no compact required.
+  /** Write `post` (doc_id, band, band_key, pband) as a postings table at
+    * `path`: partitioned by band and, when `batchWidth > 0`, by the
+    * ingest batch `pbatch = doc_id div batchWidth`; one file per
+    * partition. */
+  private def writePostings(post: DataFrame, batchWidth: Long, path: String): Unit = {
+    val (laid, partCols) =
+      if (batchWidth > 0)
+        (post.withColumn("pbatch", expr(s"doc_id div $batchWidth")), Seq("pband", "pbatch"))
+      else (post, Seq("pband"))
+    laid.repartition(partCols.map(col): _*)
+      .write.mode("overwrite").partitionBy(partCols: _*).parquet(path)
+  }
+
+  /** The `bands_fine` rows over `post` (doc_id, band, band_key, pband):
+    * the postings of buckets of at least `hotSize` rows, each keyed by
+    * its document's sub_key from `subKeys` (doc_id, sub_key). The one fine
+    * rule of the build, the append and the compact. */
+  private def fineOf(post: DataFrame, subKeys: DataFrame, hotSize: Long): DataFrame = {
+    val hot = post.groupBy("band", "band_key").agg(count(lit(1)).as("sz"))
+      .filter(col("sz") >= hotSize).select("band", "band_key")
+    post.join(hot, Seq("band", "band_key"), "left_semi")
+      .join(subKeys, "doc_id")
+      .select("doc_id", "band", "band_key", "sub_key", "pband")
+  }
+
+  /** APPEND a day's batch to a stored MinHash index — the one append
+    * behind the registry's `dedup_index_append`, its ensured delta and
+    * the daily job: the batch shingles + signs ONLY itself and lands as
+    * its own committed delta generation `batch=<batchId>` of the index's
+    * delta table, so a replay of the same `batchId` is an idempotent
+    * overwrite (the foreachBatch replay contract). Documents whose id
+    * `bands` already holds are SKIPPED (already indexed — this is what
+    * makes a replay AFTER [[minhashIndexCompact]] a clean no-op instead
+    * of counting the document twice in every bucket size). The probes
+    * ([[graft.ops.DedupOps.fineProbeHits]]) read `bands` ∪ the committed
+    * generations, so a document appended today flags the very next
+    * probe's dups of it — no compact required.
     *
-    * Delta rows KEEP the full-signature `sub_key` (day-scale tables —
-    * the per-posting width argument for dropping it from the main table
-    * doesn't apply), and the build persists a per-DOC `sub_keys` table,
-    * so this append refreshes the `bands_fine` side-table without
-    * re-reading ANY text: new fine = postings of buckets hot at the
-    * RESOLVED sizes (base ∪ all committed deltas), sub-keyed from the
-    * stored tables — including buckets this very append pushes over the
-    * threshold. An index built before the sub_keys table existed
-    * refuses the append with the rebuild remedy instead of silently
-    * serving half-covered hot buckets. The whole append runs under the
-    * retired root marker ([[graft.ops.IndexFs.mutate]]): a crash
-    * mid-append reads as an uncommitted index. */
+    * Generation rows keep the full-signature `sub_key`, so the append
+    * refreshes `bands_fine` from the stored tables without re-reading
+    * any text: the postings of buckets hot at the RESOLVED sizes (`bands`
+    * ∪ every committed generation), sub-keyed from `sub_keys` and the
+    * generation rows — buckets this very append pushes over the threshold
+    * included. That refresh reads the whole postings table once per
+    * append. The whole append runs under the retired root marker
+    * ([[graft.ops.IndexFs.mutate]]): a crash mid-append reads as an
+    * uncommitted index. Returns the per-band manifest (band, n_base,
+    * n_new) over `bands` and every committed generation. */
   def minhashIndexAppend(spark: SparkSession, bandsPath: String,
                          batch: DataFrame, id: String, text: String,
                          batchId: Long, numHashes: Int = 128,
                          bands: Int = 16): DataFrame = {
-    val root = graft.ops.IndexFs.parent(bandsPath)
-    graft.ops.Artifacts.requireGeometry(root,
+    import graft.ops.{Artifacts, IndexFs, MinhashIndex}
+    val ix = MinhashIndex.Ix(IndexFs.parent(bandsPath))
+    // Refusals BEFORE the marker retirement: a rejected call leaves a
+    // valid index valid.
+    Artifacts.requireGeometry(ix.root,
       "numHashes" -> numHashes.toString, "bands" -> bands.toString)
-    val meta = graft.ops.Artifacts.readMeta(root)
-    // The pre-r13-index refusal runs BEFORE the marker retirement (the
-    // delete legs' discipline, review r13): a rejected append on an
-    // index built before the sub_keys table existed must leave that
-    // valid index valid, not retired-and-never-recommitted.
-    if (meta.contains("hotSize"))
-      require(graft.ops.IndexFs.committed(graft.ops.IndexFs.child(root, "sub_keys")),
-        s"index at $root predates the per-doc sub_keys table — rebuild " +
-          "via writeMinhashIndex before appending (fine-table refresh " +
-          "for newly-hot buckets needs the stored sub keys)")
-    // An operator-managed compact would shadow the generation this
-    // append commits (review r13).
-    graft.ops.IndexFs.requireUncompacted(graft.ops.IndexFs.child(root, "bands_compact"),
-      "retire it before appending")
-    graft.ops.IndexFs.requireCommitted(root,
-      "rebuild via writeMinhashIndex before appending")
-    val deltaRoot = graft.ops.IndexFs.child(root, "bands_delta")
-    val deltaDir = graft.ops.IndexFs.child(deltaRoot, s"batch=$batchId")
-    // Declared schema for every delta read-back (the bandsSchema rule,
-    // review r13): an appended EMPTY batch commits a data-file-less
-    // generation, and inference on it throws — the layouts of the delta
-    // generations and the fine side-table coincide, so one schema
-    // serves both.
-    val deltaSchema = graft.ops.MinhashIndex.facadeFineSchema(
-      Tables.read(spark, bandsPath).schema)
-    // localCheckpoint: the banded batch feeds the delta write AND the
-    // fine refresh — one signature pass, lineage severed.
-    val banded = minhashBandsWithSub(batch, id, text, numHashes, bands)
-      .withColumnRenamed(id, "_id")
+    val hotSize = MinhashIndex.checkedMeta(ix.root, "before appending")("hotSize").toLong
+    val banded = minhashBandsWithSub(
+        batch.join(Tables.read(spark, ix.bands).select(col("doc_id").as(id)), Seq(id), "left_anti"),
+        id, text, numHashes, bands)
+      .withColumnRenamed(id, "doc_id")
       .withColumn("pband", col("band"))
-      .localCheckpoint()
-    // One base-postings frame serves the hot-size resolve, the fine
-    // refresh AND the returned manifest (review r13 — this call used to
-    // scan the base table three times); persisted across the fine write,
-    // released before return (the manifest re-reads from disk lazily).
-    val basePost = Tables.read(spark, bandsPath)
-      .select("_id", "band", "band_key", "pband")
-      .persist()
-    // Committed-generation listing is taken ONCE, after this batch's
-    // delta lands, and reused by the fine refresh and the manifest
-    // (review r13 — it was listed and fully re-read twice per append).
-    var committed: Seq[String] = Seq.empty
-    try graft.ops.IndexFs.mutate(root) {
+    val delta = IndexFs.mutate(ix.root) {
       banded.repartition(col("pband"))
-        .write.mode("overwrite").partitionBy("pband").parquet(deltaDir)
-      committed = graft.ops.IndexFs.committedGenerations(deltaRoot)
-      meta.get("hotSize").foreach { hs =>
-        val hotSize = hs.toLong
-        val deltaSub = Tables.readAll(spark, committed, Some(deltaSchema),
-          Map("basePath" -> deltaRoot))
-          .select(col("_id"), col("band"), col("band_key"), col("sub_key"),
-            col("pband"))
-        val hot = basePost.select("band", "band_key")
-          .unionByName(deltaSub.select("band", "band_key"))
-          .groupBy("band", "band_key").agg(count(lit(1)).as("sz"))
-          .filter(col("sz") >= hotSize).select("band", "band_key")
-        // The refresh is a pure function of the stored tables: postings
-        // of RESOLVED-hot buckets, sub-keyed from the per-doc sub_keys
-        // table (base) and the delta rows themselves — buckets pushed
-        // over the threshold by THIS append included, no text re-read.
-        // distinct: a replayed batch's rows recompute byte-identically.
-        val subKeys = Tables.read(spark, graft.ops.IndexFs.child(root, "sub_keys"))
-        val newFine = basePost
-          .join(hot, Seq("band", "band_key"), "left_semi")
-          .join(subKeys, "_id")
-          .select("_id", "band", "band_key", "sub_key", "pband")
-          .unionByName(deltaSub.join(hot, Seq("band", "band_key"), "left_semi"))
-          .distinct()
-          .localCheckpoint()
-        newFine.repartition(col("pband"))
-          .write.mode("overwrite").partitionBy("pband")
-          .parquet(graft.ops.IndexFs.child(root, "bands_fine"))
-      }
-    } finally basePost.unpersist()
-    val nBase = Tables.read(spark, bandsPath)
-      .groupBy("band").agg(count(lit(1)).as("n_base"))
-    val nNew = Tables.readAll(spark, committed, Some(deltaSchema),
-      Map("basePath" -> deltaRoot))
-      .groupBy("band").agg(count(lit(1)).as("n_new"))
-    nBase.join(nNew, Seq("band"), "full_outer")
-      .select(col("band").cast("int").as("band"),
-        coalesce(col("n_base"), lit(0L)).as("n_base"),
-        coalesce(col("n_new"), lit(0L)).as("n_new"))
+        .write.mode("overwrite").partitionBy("pband").parquet(ix.generation(batchId))
+      val delta = MinhashIndex.deltaRows(spark, ix)
+      MinhashIndex.writeFine(fineOf(MinhashIndex.resolvedPostings(spark, ix),
+        Tables.read(spark, ix.subKeys).unionByName(delta.select("doc_id", "sub_key")), hotSize), ix)
+      delta
+    }
+    // One aggregate over both sides' rows: every band of either side gets
+    // a row.
+    Tables.read(spark, ix.bands).select(col("band"), lit(true).as("in_base"))
+      .unionByName(delta.select(col("band"), lit(false).as("in_base")))
+      .groupBy("band")
+      .agg(count_if(col("in_base")).as("n_base"), count_if(!col("in_base")).as("n_new"))
       .orderBy("band")
   }
 
-  /** COMPACT a stored facade MinHash index in place (r13, the facade
-    * form of the registry's `dedup_index_compact`): folds every
-    * committed `bands_delta/batch=<k>/` generation into the `bands`
-    * table, extends the per-doc `sub_keys` table with the appended
-    * documents' keys, refreshes `bands_fine` at the compacted bucket
-    * sizes, and REMOVES the folded generations — afterwards the index
-    * is single-layout again, exactly as [[writeMinhashIndex]] leaves
-    * it, so every refusal that points here ("compact first") has a
-    * one-call remedy that costs O(index), never a corpus re-read.
-    *
-    * Unlike the registry op (which writes a `bands_compact` SIBLING and
-    * leaves the swap to a catalog), the facade compacts IN PLACE: the
-    * facade owns its root and its probes resolve per call, so the
-    * single-layout invariant is simpler and makes the partition-pruned
-    * takedown legal again for formerly-delta-resident documents
-    * (appended rows gain the `pbatch` ingest-batch axis from the
-    * recorded `batchWidth` during the fold). Probe flags are
-    * byte-identical before/after (the resolver already served base ∪
-    * deltas — ApiSpec pins it). Runs under the retired root marker;
-    * a crash mid-compact reads as an uncommitted index. No-op (beyond
-    * the manifest) when no committed delta generations exist. Returns
-    * the per-band manifest of the compacted table with the build's
-    * n_postings = n_docs invariant. */
+  /** COMPACT a stored MinHash index in place — the one compact behind
+    * the registry's `dedup_index_compact` and the maintenance remedy:
+    * folds every committed delta generation into `bands` (appended rows
+    * gain the `pbatch` ingest-batch axis from the recorded `batchWidth`,
+    * so the partition-pruned takedown is legal for them again), extends
+    * `sub_keys` with the appended documents' keys, rewrites `bands_fine`
+    * at the compacted bucket sizes, and REMOVES the folded generations.
+    * Afterwards the index is single-layout, exactly as
+    * [[writeMinhashIndex]] leaves it, and probes return what they
+    * returned before (ApiSpec pins it). The append's skip keeps every
+    * generation's ids out of `bands`, so only the generations themselves
+    * are de-duplicated. Runs under the retired root marker; a crash
+    * mid-compact reads as an uncommitted index. No-op (beyond the
+    * manifest) when no committed generation exists. Returns the per-band
+    * manifest of the compacted table with the build's n_postings =
+    * n_docs invariant. */
   def minhashIndexCompact(spark: SparkSession, bandsPath: String): DataFrame = {
-    val root = graft.ops.IndexFs.parent(bandsPath)
-    val meta = graft.ops.Artifacts.readMeta(root)
-    val deltaRoot = graft.ops.IndexFs.child(root, "bands_delta")
-    val committed = graft.ops.IndexFs.committedGenerations(deltaRoot)
-    graft.ops.IndexFs.requireUncompacted(graft.ops.IndexFs.child(root, "bands_compact"),
-      "retire it before compacting in place")
+    import graft.ops.{IndexFs, MinhashIndex}
+    val ix = MinhashIndex.Ix(IndexFs.parent(bandsPath))
     // The fold overwrites the base table from a localCheckpoint whose
-    // blocks die with the JVM, so a crash mid-overwrite loses postings
-    // with no intact copy. Compacting a half-rewritten base and then
-    // removing the deltas would destroy the only recoverable copy of the
-    // appended rows (review r13).
-    graft.ops.IndexFs.requireCommitted(root,
-      "rebuild via writeMinhashIndex instead of compacting")
-    if (committed.nonEmpty) {
-      val baseSchema = Tables.read(spark, bandsPath).schema
-      val hasBatchAxis = baseSchema.fieldNames.contains("pbatch")
-      val batchWidth = meta.get("batchWidth").map(_.toLong).getOrElse(0L)
-      if (hasBatchAxis) require(batchWidth > 0,
-        s"index at $root has a pbatch axis but records batchWidth=" +
-          s"${meta.get("batchWidth").orNull} — cannot derive the " +
-          "appended rows' ingest-batch partitions")
-      val deltaSub = Tables.readAll(spark, committed,
-        Some(graft.ops.MinhashIndex.facadeFineSchema(baseSchema)),
-        Map("basePath" -> deltaRoot))
-        .select("_id", "band", "band_key", "sub_key", "pband")
-      // distinct on the posting key: replayed/overlapping generations
-      // must fold to one row, the idempotent-append contract extended
-      // to the compacted layout.
-      val deltaPost = {
-        val p = deltaSub.drop("sub_key").distinct()
-        if (hasBatchAxis) p.withColumn("pbatch", expr(s"_id div $batchWidth"))
-        else p
-      }
-      // distinct across base ∪ deltas: a batch REPLAYED after a prior
-      // compact re-lands docs the base already holds — the fold must
-      // collapse them to one posting per (doc, band), not double bucket
-      // sizes. O(index) shuffle, which an in-place compact already is.
-      val merged = Tables.read(spark, bandsPath)
-        .unionByName(deltaPost)
-        .distinct()
-        .localCheckpoint() // severs the read from the overwrite below
-      val subKeys = Tables.read(spark, graft.ops.IndexFs.child(root, "sub_keys"))
-        .unionByName(deltaSub.select("_id", "sub_key").distinct())
-        .distinct()
+    // blocks die with the JVM; on a crashed op's half-rewritten base, the
+    // fold and the generation removal would destroy the only intact copy
+    // of the appended rows.
+    val meta = MinhashIndex.checkedMeta(ix.root, "instead of compacting")
+    if (IndexFs.committedGenerations(ix.delta).nonEmpty) {
+      val cols = Seq("doc_id", "band", "band_key", "pband").map(col)
+      val delta = MinhashIndex.deltaRows(spark, ix)
+      // localCheckpoint severs each read from the overwrite of its source
+      val merged = Tables.read(spark, ix.bands).select(cols: _*)
+        .unionByName(delta.select(cols: _*).distinct())
         .localCheckpoint()
-      graft.ops.IndexFs.mutate(root) {
-        val partCols = if (hasBatchAxis) Seq("pband", "pbatch") else Seq("pband")
-        merged.repartition(partCols.map(col): _*)
-          .write.mode("overwrite").partitionBy(partCols: _*).parquet(bandsPath)
-        subKeys.write.mode("overwrite")
-          .parquet(graft.ops.IndexFs.child(root, "sub_keys"))
-        // bands_fine at the COMPACTED bucket sizes — same pure function
-        // of the stored tables the append maintains, now over one layout.
-        meta.get("hotSize").foreach { hs =>
-          val post = merged.select("_id", "band", "band_key", "pband")
-          val hot = post.groupBy("band", "band_key")
-            .agg(count(lit(1)).as("sz"))
-            .filter(col("sz") >= hs.toLong).select("band", "band_key")
-          val newFine = post
-            .join(hot, Seq("band", "band_key"), "left_semi")
-            .join(subKeys, "_id")
-            .select("_id", "band", "band_key", "sub_key", "pband")
-            .distinct()
-            .localCheckpoint()
-          newFine.repartition(col("pband"))
-            .write.mode("overwrite").partitionBy("pband")
-            .parquet(graft.ops.IndexFs.child(root, "bands_fine"))
-        }
+      val subKeys = Tables.read(spark, ix.subKeys)
+        .unionByName(delta.select("doc_id", "sub_key").distinct())
+        .localCheckpoint()
+      IndexFs.mutate(ix.root) {
+        writePostings(merged, meta("batchWidth").toLong, ix.bands)
+        subKeys.write.mode("overwrite").parquet(ix.subKeys)
+        MinhashIndex.writeFine(fineOf(merged, subKeys, meta("hotSize").toLong), ix)
         // The folded generations retire with the marker still down: the
         // remedy for a crashed in-place fold is a rebuild, not a re-run
         // over a possibly partial base.
-        require(graft.ops.IndexFs.deleteRecursive(deltaRoot),
-          s"could not remove the folded delta generations under $root")
+        require(IndexFs.deleteRecursive(ix.delta),
+          s"could not remove the folded delta generations under ${ix.root}")
       }
     }
-    bandManifest(Tables.read(spark, bandsPath), "_id").orderBy("band")
+    bandManifest(Tables.read(spark, ix.bands), "doc_id").orderBy("band")
   }
 
-  /** Partition-pruned takedown on a stored MinHash postings table
-    * written by [[writeMinhashIndex]] WITH a `batchWidth` (the facade
-    * form of the registry's `dedup_index_delete`): anti-joins
-    * `deleteIds` (one column, the document id) out of ONLY the
-    * (band, ingest-batch) partitions containing them via dynamic
-    * partition overwrite — untouched batch directories stay
-    * byte-identical, and a fully-emptied partition throws toward a
-    * catalog DROP PARTITION. Mutates `bandsPath` in place (the live
-    * table a production delete rewrites); copy first if the original
-    * must stay pristine. */
+  /** Partition-pruned takedown on a stored MinHash index written by
+    * [[writeMinhashIndex]] WITH a `batchWidth` — the one delete behind
+    * the registry's `dedup_index_delete`: anti-joins `deleteIds` (one
+    * column, the document id) out of ONLY the (band, ingest-batch)
+    * partitions of `bands` containing them via dynamic partition
+    * overwrite — untouched batch directories stay byte-identical, and a
+    * fully-emptied partition throws toward a catalog DROP PARTITION —
+    * and out of `bands_fine` and `sub_keys`, all under one retired root
+    * marker. A takedown listing a document that a committed delta
+    * generation holds is refused: [[minhashIndexCompact]] first. Mutates
+    * in place; copy first if the original must stay pristine. */
   def minhashIndexDelete(spark: SparkSession, bandsPath: String,
                          deleteIds: DataFrame, id: String): Unit = {
-    val root = graft.ops.IndexFs.parent(bandsPath)
-    // Loud geometry guard (ADVICE r9, hardened r10): an index written
-    // without a batch axis has no pbatch partition column — fail with
-    // instructions here, not with an opaque missing-column
-    // AnalysisException mid-join. Ground truth is the STORED SCHEMA
-    // (covers registry-built and pre-meta indexes, where the batchWidth
-    // meta key is simply absent); the meta check stays as the recorded-
-    // geometry cross-check. Both run BEFORE the marker retirement: a
-    // rejected mis-call must leave a valid index valid.
-    require(Tables.read(spark, bandsPath).columns.contains("pbatch"),
-      s"index at $root was written without a batchWidth (ingest-batch " +
+    import graft.ops.{DedupOps, IndexFs, MinhashIndex}
+    val ix = MinhashIndex.Ix(IndexFs.parent(bandsPath))
+    // Refusals BEFORE the marker retirement: a rejected mis-call must
+    // leave a valid index valid.
+    val batchWidth = MinhashIndex.checkedMeta(ix.root, "before the takedown")("batchWidth")
+    require(batchWidth.toLong > 0,
+      s"index at ${ix.root} was written without a batchWidth (ingest-batch " +
         "partition axis) — partition-pruned deletes need it; rebuild " +
         "with writeMinhashIndex(batchWidth = <ids per ingest batch>)")
-    graft.ops.Artifacts.readMeta(root).get("batchWidth")
-      .foreach(bw => require(bw.toLong > 0,
-        s"index at $root records batchWidth=$bw — partition-pruned " +
-          "deletes need a positive ingest-batch width; rebuild with " +
-          "writeMinhashIndex(batchWidth = <ids per ingest batch>)"))
-    // This takedown rewrites only the bands/bands_delta family, so a
-    // compact left in place would keep serving every deleted document's
-    // postings. The facade defines no compact writer (the sibling is
-    // operator-managed, layout unknown here), so refuse rather than
-    // guess at rewriting it (review r13).
-    graft.ops.IndexFs.requireUncompacted(graft.ops.IndexFs.child(root, "bands_compact"),
-      "retire it (or rebuild via writeMinhashIndex over the surviving " +
-        "corpus) before the takedown")
-    // Delta generations ([[minhashIndexAppend]]) are probe-visible through
-    // the resolver, so a takedown that only rewrote `bands` would keep
-    // serving deleted documents out of the deltas. Refuse loudly (before
-    // the marker retirement — a rejected call leaves a valid index valid):
-    // the remedy is [[minhashIndexCompact]] — an O(index) in-place fold
-    // that restores the single layout (and the pbatch axis for the
-    // appended rows), after which this takedown is legal again.
-    val deltaGens = graft.ops.IndexFs.committedGenerations(
-      graft.ops.IndexFs.child(root, "bands_delta"))
-    if (deltaGens.nonEmpty) {
-      val hitDelta = Tables.readAll(spark, deltaGens,
-        Some(graft.ops.MinhashIndex.facadeFineSchema(Tables.read(spark, bandsPath).schema)),
-        Map("basePath" -> graft.ops.IndexFs.child(root, "bands_delta")))
-        .join(deleteIds.select(col(id).as("_id")), Seq("_id"), "left_semi")
-        .limit(1).count()
-      require(hitDelta == 0L,
-        s"index at $root has committed delta generations containing " +
-          "documents in the deletion list — run minhashIndexCompact to " +
-          "fold the deltas into the base (O(index), no corpus re-read), " +
-          "then re-run the takedown against the single layout")
-    }
-    graft.ops.IndexFs.mutate(root) {
-      graft.ops.DedupOps.deleteFromBands(spark, bandsPath,
-        deleteIds.select(col(id).as("_id")), idCol = "_id")
-      // The `bands_fine` side-table holds the SAME documents' hot-bucket
-      // postings (review r12): leaving it stale after a takedown lets a
-      // later fine probe flag new text as a dup of a document the index
-      // no longer contains — rewrite it minus the deleted ids under the
-      // same retired marker. localCheckpoint severs the read from the
-      // overwrite of its own source path; the survivors table is
-      // hot-postings-small, so a full rewrite is fine.
-      val fineDir = graft.ops.IndexFs.child(root, "bands_fine")
-      if (graft.ops.Artifacts.readMeta(root).contains("hotSize")) {
-        val survivors = Tables.read(spark, fineDir,
-          Some(graft.ops.MinhashIndex.facadeFineSchema(Tables.read(spark, bandsPath).schema)))
-          .join(deleteIds.select(col(id).as("_id")), Seq("_id"), "left_anti")
-          .localCheckpoint()
-        survivors.repartition(col("pband"))
-          .write.mode("overwrite").partitionBy("pband").parquet(fineDir)
-      }
-      // The per-doc sub_keys table (r13) holds the same documents' keys:
-      // purge them under the same retired marker — takedown completeness,
-      // and a later append's fine refresh must not resurrect fine rows
-      // for deleted documents.
-      val subDir = graft.ops.IndexFs.child(root, "sub_keys")
-      if (graft.ops.IndexFs.committed(subDir)) {
-        val keptSub = Tables.read(spark, subDir)
-          .join(deleteIds.select(col(id).as("_id")), Seq("_id"), "left_anti")
-          .localCheckpoint()
-        keptSub.write.mode("overwrite").parquet(subDir)
-      }
+    val ids = deleteIds.select(col(id).as("doc_id"))
+    // A takedown that rewrote only `bands` would keep serving deleted
+    // documents out of the generations the probes read.
+    require(MinhashIndex.deltaRows(spark, ix).join(ids, Seq("doc_id"), "left_semi")
+        .limit(1).count() == 0L,
+      s"index at ${ix.root} has committed delta generations containing " +
+        "documents in the deletion list — run minhashIndexCompact to " +
+        "fold the deltas into the base (O(index), no corpus re-read), " +
+        "then re-run the takedown against the single layout")
+    IndexFs.mutate(ix.root) {
+      DedupOps.deleteFromBands(spark, ix.bands, ids)
+      // `bands_fine` and `sub_keys` hold the same documents: a stale fine
+      // row would flag new text as a dup of a document the index no
+      // longer holds, and a later append's refresh would resurrect it.
+      // localCheckpoint severs each read from the overwrite of its own
+      // source; both tables are small enough for a full rewrite.
+      MinhashIndex.writeFine(MinhashIndex.fineRows(spark, ix)
+        .join(ids, Seq("doc_id"), "left_anti").localCheckpoint(), ix)
+      Tables.read(spark, ix.subKeys).join(ids, Seq("doc_id"), "left_anti")
+        .localCheckpoint()
+        .write.mode("overwrite").parquet(ix.subKeys)
     }
   }
 

@@ -17,12 +17,11 @@ import org.apache.spark.sql.functions._
   *      near-dup / decontamination verdict against the corpus-so-far
   *      fingerprints, the RESOLVED MinHash postings, and eval shingles
   *      ([[graft.ops.PipelineOps.curationIncremental]]) →
-  *      `<outDir>/verdicts`. The near-dup leg probes through the
-  *      probe-root resolver ([[graft.ops.MinhashIndex.resolvedPostings]]
-  *      — committed compact, else base ∪ delta), so TODAY'S probe sees
-  *      YESTERDAY'S appended documents — true in code since r13 (the
-  *      probe resolves the delta; DedupSpec pins a batch doc flagging
-  *      via an appended doc without any compact), not a narrated swap;
+  *      `<outDir>/verdicts`. The near-dup leg probes the base root's
+  *      `bands` ∪ its committed delta generations
+  *      ([[graft.ops.DedupOps.fineProbeHits]]), so TODAY'S probe sees
+  *      YESTERDAY'S appended documents, compacted or not (DedupSpec pins
+  *      a batch doc flagging via an appended doc without any compact);
   *   2. SHARDS: the day's KEEPERS pack into training shards continuing
   *      the global shard numbering — the packer's whole state is one
   *      scalar (tokens already packed), passed as the optional third
@@ -30,11 +29,13 @@ import org.apache.spark.sql.functions._
   *      (cumulative — the report emits it precisely so it can be fed
   *      back verbatim), or derived from the corpus-so-far slice for the
   *      demo corpus → `<outDir>/shards`;
-  *   3. INDEX: yesterday's band postings land as the delta next to the
-  *      base MinHash index ([[graft.ops.DedupOps.dedupIndexAppend]] —
-  *      the same write core the probes' ensure path uses, so stage 1's
-  *      probe sees exactly these postings; tomorrow's run appends today
-  *      the same way); the per-band manifest → `<outDir>/postings_manifest`;
+  *   3. INDEX: yesterday's band postings land as delta generation 1 of
+  *      the base MinHash index, which refreshes its `bands_fine` table
+  *      at the resolved bucket sizes ([[graft.ops.DedupOps.dedupIndexAppend]],
+  *      bound to [[graft.api.GraftAPI.minhashIndexAppend]] — the same
+  *      append the probes' ensured delta runs, so stage 1's probe sees
+  *      exactly these postings; tomorrow's run appends today the same
+  *      way); the per-band manifest → `<outDir>/postings_manifest`;
   *   4. ANN: the appended embedding batch is encoded against the base
   *      index's STORED codebooks (coarse-assign + residual-PQ, no
   *      retraining — `ann_index_append`, bound to the library's

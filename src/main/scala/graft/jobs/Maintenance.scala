@@ -11,21 +11,24 @@ import org.apache.spark.sql.functions._
   * [[Maintenance.audit]] is the shared detect step (extracted from
   * [[DailyIncrement]] stage 5, which now calls it): hot-shard posture of
   * both families over the DELTA-TOUCHED shards of base ∪ delta, with
-  * `unremedied` = hot shards this root's COMMITTED fine/split side-table
-  * does not cover — the scheduler's trigger, converging to 0 once the
-  * remedy runs while `hot_shards` stays the raw posture. One action
-  * per audit: a scalar-column pass over stored postings that returns
-  * both families' counts as one two-row collect, with nothing persisted;
-  * the corpus text is never read.
+  * `unremedied` = hot shards this root's fine/split side-table does not
+  * cover — the scheduler's trigger, converging to 0 once the remedy runs
+  * while `hot_shards` stays the raw posture. The MinHash append keeps
+  * `bands_fine` current at the resolved bucket sizes, so a committed
+  * MinHash root reports 0; an IVF-PQ cell pushed over the threshold by
+  * appends stays unremedied until the next split. One action per audit:
+  * a scalar-column pass over stored postings that returns both families'
+  * counts as one two-row collect, with nothing persisted; the corpus
+  * text is never read.
   *
   * [[MaintenanceRun]] is the remedy executor: for each family the audit
   * reports unremedied > 0 it performs the documented remedy against the
   * SAME root —
   *
-  *   - minhash: fold the delta in (`dedup_index_compact`'s layout — the
-  *     probe resolver serves it from then on) and REBUILD `bands_fine`
-  *     from the resolved postings ([[graft.ops.MinhashIndex.rewriteFine]]
-  *     — deterministic, so a re-run byte-matches);
+  *   - minhash: fold the delta generations into the base root in place
+  *     ([[graft.api.GraftAPI.minhashIndexCompact]], which rewrites
+  *     `bands_fine` at the compacted sizes); the next ensured delta is
+  *     empty;
   *   - ann: fold the codes delta into the base root in place
   *     ([[graft.api.GraftAPI.annIndexCompact]], after which `cells` holds
   *     the appended vectors) and rebuild the cell-split side-tables over
@@ -83,7 +86,7 @@ object Maintenance {
         col("unremedied"))
 
   private val remedyJobs = Map(
-    "minhash" -> "graft.jobs.MaintenanceRun (dedup_index_compact + bands_fine rebuild on this root)",
+    "minhash" -> "graft.jobs.MaintenanceRun (in-place postings compact on this root)",
     "ann" -> "graft.jobs.MaintenanceRun (in-place codes compact + cell split on this root)")
 
   /** The two-family audit over the base roots' resolved state, in ONE
@@ -94,15 +97,8 @@ object Maintenance {
   def audit(spark: SparkSession, sfDir: String): Seq[Posture] = {
     val mhIx = graft.ops.MinhashIndex.ensureBase(spark, sfDir)
     graft.ops.MinhashIndex.ensureDelta(spark, sfDir, mhIx)
-    val mhDelta = Tables.read(spark, mhIx.delta, Some(graft.ops.DedupOps.bandsSchema))
-      .select("band", "band_key")
-    val mhFineCovered =
-      if (graft.ops.IndexFs.committed(mhIx.root, graft.ops.IndexFs.Fine))
-        Tables.read(spark, mhIx.fine, Some(graft.ops.DedupOps.fineSchema))
-          .select("band", "band_key")
-      else spark.emptyDataFrame
-        .withColumn("band", lit(0)).withColumn("band_key", lit(""))
-        .limit(0)
+    val mhDelta = graft.ops.MinhashIndex.deltaRows(spark, mhIx).select("band", "band_key")
+    val mhFineCovered = graft.ops.MinhashIndex.fineRows(spark, mhIx).select("band", "band_key")
     val mh = posture("minhash",
       Tables.read(spark, mhIx.bands).select("band", "band_key")
         .unionByName(mhDelta),
@@ -143,11 +139,8 @@ object Maintenance {
   private[jobs] def remedy(spark: SparkSession, sfDir: String,
                            family: String): Unit = family match {
     case "minhash" =>
-      graft.ops.DedupOps.dedupIndexCompact(spark, sfDir).count()
-      val ix = graft.ops.MinhashIndex.ensureBase(spark, sfDir)
-      graft.ops.MinhashIndex.rewriteFine(
-        graft.ops.DedupOps.fineRowsFor(spark, sfDir,
-          graft.ops.MinhashIndex.resolvedPostings(spark, sfDir, ix)), ix)
+      graft.api.GraftAPI.minhashIndexCompact(spark,
+        graft.ops.MinhashIndex.ensureBase(spark, sfDir).bands)
     case "ann" =>
       val ix = graft.ops.IvfPqIndex.ensureBase(spark, sfDir)
       graft.api.GraftAPI.annIndexCompact(spark, ix.root)

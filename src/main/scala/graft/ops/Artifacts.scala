@@ -33,6 +33,19 @@ private[graft] object Artifacts {
   /** The geometry manifest's path under an index root. */
   private[graft] def metaFile(root: String): String = IndexFs.child(root, "index.properties")
 
+  /** A private copy, at `tag`'s root for `dir`, of the committed index
+    * `src`: its `tables` and geometry manifest. A registry key that
+    * mutates an index in place runs on such a copy, so the shared roots
+    * every other key reads stay as built. Copied once, under the copy's
+    * root marker ([[IndexFs.copy]] inside [[IndexFs.ensure]]); from then
+    * on the key finds its own earlier mutation. Returns the copy's root. */
+  private[ops] def ensureCopy(src: String, tables: Seq[String], tag: String,
+                              dir: String, table: String): String = {
+    val copy = root(tag, dir, table)
+    IndexFs.ensure(copy)(IndexFs.copy(tables :+ metaFile(src), copy))
+    copy
+  }
+
   /** Read the manifest; empty when absent (pre-manifest artifacts stay
     * readable — the guard only fires on a RECORDED mismatch). */
   private[graft] def readMeta(root: String): Map[String, String] =

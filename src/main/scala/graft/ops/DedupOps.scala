@@ -492,22 +492,15 @@ object DedupOps {
         r6(col("n_overlap").cast("double") / col("n_shingles")).as("contam_ratio"))
   }
 
-  /** (doc_id, band, band_key) postings of the docs `keep` selects — the
-    * [[MinhashIndex]] build input (full corpus, the base slice, the
-    * appended-day slice). The doc_id filter runs BEFORE shingling, so a
-    * slice build never tokenizes text outside the slice. */
-  private[ops] def postingRows(s: SparkSession, dir: String,
-                               keep: Column = lit(true)): DataFrame =
-    bandsOf(shingleRows(s, dir).filter(keep)).select("doc_id", "band", "band_key")
-
   /** L2j: the MinHash-LSH index BUILD as a first-class sink-style job —
     * the dedup counterpart of `build_ivfpq_index`: shingle + sign +
     * band the corpus ONCE and persist the (doc_id, band, band_key)
-    * postings as a parquet table hive-partitioned by band
-    * ([[MinhashIndex]]; write-once under the [[IndexFs]] commit
-    * protocol). This is the artifact [[dedupIncremental]] probes and
-    * [[simjoinLsh]]'s `persist()` stands in for — at 100 TB
-    * the postings are additionally bucketed by band_key so batch probes
+    * postings as a parquet table hive-partitioned by band and ingest
+    * batch ([[MinhashIndex.ensure]] over
+    * [[GraftAPI.writeMinhashIndex]]; write-once under the [[IndexFs]]
+    * commit protocol). This is the artifact [[dedupIncremental]] probes
+    * and [[simjoinLsh]]'s `persist()` stands in for — at 100 TB the
+    * postings are additionally bucketed by band_key so batch probes
     * co-partition without shuffling the stored side.
     *
     * Output is the per-band manifest read back FROM the stored table:
@@ -535,109 +528,67 @@ object DedupOps {
       .orderBy("band")
 
   /** L2k: MinHash index APPEND — the dedup lifecycle's third leg (build →
-    * probe → append), mirroring `ann_index_append`: the late-arriving
-    * day's batch (docs in [[IncrementalCutoff]], [[AppendCutoff]]) — the
-    * slice "today's" probe batch must then see) shingles + signs ONLY
-    * itself and lands its band postings as a delta table
-    * hive-partitioned by band next to the base index
-    * ([[MinhashIndex.ensureBase]], write core
-    * [[MinhashIndex.writeDelta]] — shared with the probes' ensure path,
-    * so the appended content cannot drift from what the resolver
-    * serves). No corpus re-read, no re-hash of stored postings —
-    * appending a day's documents to a 100 TB dedup index costs one
-    * map-side signature pass over the day. MinHash signatures are
-    * per-doc (no trained state), so unlike the ANN append there is
-    * nothing to re-encode against: the determinism contract is just the
-    * shared md5/Kirsch–Mitzenmacher hash recipe, and re-appends
+    * probe → append), bound to [[GraftAPI.minhashIndexAppend]] like
+    * `ann_index_append`: the late-arriving day's batch (docs in
+    * [[IncrementalCutoff]], [[AppendCutoff]]) — the slice "today's"
+    * probe batch must then see) shingles + signs ONLY itself and lands as
+    * delta generation 1 next to the base index
+    * ([[MinhashIndex.ensureBase]]; the same append the probes' ensured
+    * delta runs, so the appended content cannot drift from what they
+    * read). No corpus re-read, no re-hash of stored postings. MinHash
+    * signatures are per-doc (no trained state), so unlike the ANN append
+    * there is nothing to re-encode against: the determinism contract is
+    * the shared md5/Kirsch–Mitzenmacher hash recipe, and re-appends
     * byte-match. Output is the merged per-band manifest (band, n_base,
     * n_new); the oracle recomputes both sides from scratch, so a
     * dropped/doubled delta row fails the gate. */
-  def dedupIndexAppend(s: SparkSession, dir: String): DataFrame = {
-    val ix = MinhashIndex.ensureBase(s, dir)
-    MinhashIndex.writeDelta(s, dir, ix)
-    // One aggregate over both sides' rows; the manifest lists the bands
-    // the base holds.
-    val base = Tables.read(s, ix.bands).select(col("band"), lit(true).as("in_base"))
-    // declared schema: an empty delta slice writes a data-file-less table
-    val fresh = Tables.read(s, ix.delta, Some(bandsSchema))
-      .select(col("band"), lit(false).as("in_base"))
-    base.unionByName(fresh)
-      .groupBy("band")
-      .agg(count_if(col("in_base")).as("n_base"), count_if(!col("in_base")).as("n_new"))
-      .filter(col("n_base") > 0)
-      .select(col("band").cast("int").as("band"), col("n_base"), col("n_new"))
-      .orderBy("band")
-  }
+  def dedupIndexAppend(s: SparkSession, dir: String): DataFrame =
+    MinhashIndex.append(s, dir, MinhashIndex.ensureBase(s, dir))
 
-  /** L2l: MinHash index COMPACT — base postings + appended delta fold
-    * into ONE band-partitioned layout (the lakehouse OPTIMIZE closing
-    * the lifecycle, mirroring `ann_index_compact`): the base artifact
-    * stays immutable, the compacted table is a sibling, and the swap IS
-    * implemented — [[MinhashIndex.resolvedPostings]] serves the
-    * committed compact to every probe, which then pays one table scan
-    * instead of a two-table union (and byte-identical flags either way:
-    * the compact is the deterministic merge of deterministic tables —
-    * DedupSpec pins it). The manifest read back FROM the compacted
-    * table must equal the banding of docs < [[AppendCutoff]] recomputed
-    * from scratch — the oracle pins that, making a lost or duplicated
-    * row in the merge loud. */
-  def dedupIndexCompact(s: SparkSession, dir: String): DataFrame = {
-    val ix = MinhashIndex.ensureBase(s, dir)
-    // Ensure the delta landed WITHOUT re-running the append when its
-    // committed table already exists (VERDICT r11 "what's wrong" #3: the
-    // in-window append replay made the compact's bench number carry an
-    // append's work). A committed delta is byte-stable (deterministic
-    // banding) and is exactly what a re-append would rewrite.
-    MinhashIndex.ensureDelta(s, dir, ix)
-    Tables.read(s, ix.bands)
-      .unionByName(Tables.read(s, ix.delta, Some(bandsSchema)))
-      .withColumn("pband", col("band"))
-      .repartition(col("pband"))
-      .write.mode("overwrite").partitionBy("pband")
-      .parquet(ix.compact)
-    GraftAPI.bandManifest(Tables.read(s, ix.compact), "doc_id").orderBy("band")
-  }
+  /** L2l: MinHash index COMPACT — the appended delta folds into the base
+    * postings in place (the lakehouse OPTIMIZE closing the lifecycle,
+    * bound to [[GraftAPI.minhashIndexCompact]] like `ann_index_compact`).
+    * The fold runs on a copy of the base root with its delta ensured
+    * ([[MinhashIndex.ensureCopy]]), so every other key keeps reading the
+    * shared root as built; from the second call on the copy has no
+    * delta left and the call returns its manifest. The manifest read back
+    * FROM the compacted table must equal the banding of docs <
+    * [[AppendCutoff]] recomputed from scratch — the oracle pins that,
+    * making a lost or duplicated row in the merge loud. */
+  def dedupIndexCompact(s: SparkSession, dir: String): DataFrame =
+    GraftAPI.minhashIndexCompact(s,
+      MinhashIndex.ensureCopy(probedBase(s, dir), "mhix_v3_compact", dir).bands)
 
-  /** Ingest-batch width for the delete-leg live layout: documents land
-    * in id-ranges of `IngestBatch` (250) ids per ingest batch, and takedown requests arrive
-    * per source/batch — so the live postings table is hive-partitioned
-    * by (band, ingest batch) and a delete request prunes to the batch
-    * directories that actually contain its documents. (Unlike the ANN
-    * codes, where a vector lives in ONE cell, a document posts to EVERY
-    * band — the batch axis is what makes dedup-index deletes
-    * partition-pruned.) */
+  /** Ingest-batch width of the stored postings: documents land in
+    * id-ranges of `IngestBatch` (250) ids per ingest batch, and takedown
+    * requests arrive per source/batch — so the postings are
+    * hive-partitioned by (band, ingest batch) and a delete request prunes
+    * to the batch directories that actually contain its documents.
+    * (Unlike the ANN codes, where a vector lives in ONE cell, a document
+    * posts to EVERY band — the batch axis is what makes dedup-index
+    * deletes partition-pruned.) */
   private[graft] val IngestBatch = 250L
 
-  /** The partition-pruned postings delete core shared by
-    * [[dedupIndexDelete]] and its spec — the dedup mirror of
-    * [[VectorOps.deleteFromCodes]]: anti-join the deletion list out of
-    * ONLY the (band, ingest-batch) partitions that contain deleted
-    * documents, and dynamic-partition-overwrite exactly those
-    * directories; every other partition's files are untouched
-    * (byte-identical — DedupSpec proves it on the live layout). Guards
-    * loudly against a partition emptying out entirely: dynamic
-    * overwrite only replaces partitions PRESENT in the written data, so
-    * a fully-deleted batch would leave stale files behind — at 100 TB
-    * that case is a catalog DROP PARTITION, here it throws with
-    * instructions.
-    *
-    * `source` (bench use only): when given, affected partitions and
-    * their survivors are computed from that frame instead of the live
-    * table — [[dedupIndexDelete]] passes the PRISTINE stored postings so
-    * every bench draw performs the identical pruned rewrite (a
-    * live-sourced rewrite is a no-op from draw 2 on, once the ids are
-    * gone); production deletes leave it unset and mutate in place. */
-  private[graft] def deleteFromBands(s: SparkSession, live: String,
-                                     del: DataFrame,
-                                     idCol: String = "doc_id",
-                                     source: Option[DataFrame] = None): Unit = {
-    val liveT = source.getOrElse(Tables.read(s, live))
-    val affected = liveT.join(del, idCol)
+  /** The partition-pruned postings delete core of
+    * [[GraftAPI.minhashIndexDelete]] — the dedup mirror of
+    * [[VectorOps.deleteFromCodes]]: anti-join the deletion list (one
+    * `doc_id` column) out of ONLY the (band, ingest-batch) partitions of
+    * `live` that contain deleted documents, and
+    * dynamic-partition-overwrite exactly those directories; every other
+    * partition's files are untouched (byte-identical — DedupSpec proves
+    * it). Guards loudly against a partition emptying out entirely:
+    * dynamic overwrite only replaces partitions PRESENT in the written
+    * data, so a fully-deleted batch would leave stale files behind — at
+    * 100 TB that case is a catalog DROP PARTITION, here it throws with
+    * instructions. */
+  private[graft] def deleteFromBands(s: SparkSession, live: String, del: DataFrame): Unit = {
+    val liveT = Tables.read(s, live)
+    val affected = liveT.join(del, "doc_id")
       .select(col("band").as("aband"), col("pbatch").as("abatch")).distinct()
     val survivors = liveT.drop("pband")
       .join(broadcast(affected),
         col("band") === col("aband") && col("pbatch") === col("abatch"))
-      .join(del, Seq(idCol), "left_anti")
+      .join(del, Seq("doc_id"), "left_anti")
       .drop("aband", "abatch")
     val emptied = affected.join(
         survivors.select(col("band").as("sband"), col("pbatch").as("sbatch"))
@@ -657,70 +608,29 @@ object DedupOps {
       .partitionBy("pband", "pbatch").parquet(live)
   }
 
-  /** Build-once scratch "live" layout for [[dedupIndexDelete]]: the
-    * stored postings re-partitioned by (band, ingest batch), the table a
-    * production delete mutates in place. Rebuilt when uncommitted;
-    * synchronized against parallel suites. Returns (live path, pristine
-    * source frame with the batch axis derived) — the pristine frame is what each
-    * bench draw's pruned rewrite reads, so untouched partitions are
-    * written exactly once, here. */
-  private def ensureLiveBands(s: SparkSession, dir: String): (String, DataFrame) =
-    synchronized {
-      val ix = MinhashIndex.ensure(s, dir)
-      val live = s"${ix.root}/bands_live"
-      val pristine = Tables.read(s, ix.bands).drop("pband")
-        .withColumn("pbatch", expr(s"doc_id div $IngestBatch"))
-      // The layout is keyed by the ingest-batch width: a live table built
-      // by older code with a different width would otherwise survive in
-      // /tmp, and per-draw pruned rewrites (derived at the CURRENT width)
-      // would land mixed-width partitions — a silently wrong manifest.
-      // Rebuild whenever the recorded width is absent or differs. The
-      // width marker is underscore-prefixed so Spark's file listing
-      // ignores it (a bare root file would be read as parquet data).
-      val widthFile = IndexFs.child(live, "_ingest_batch")
-      val widthOk = IndexFs.readIfExists(widthFile)(in =>
-          new String(in.readAllBytes, java.nio.charset.StandardCharsets.UTF_8).trim)
-        .contains(IngestBatch.toString)
-      if (!IndexFs.committed(live) || !widthOk) IndexFs.build(live) {
-        pristine.withColumn("pband", col("band"))
-          .repartition(col("pband"), col("pbatch"))
-          .write.mode("overwrite").partitionBy("pband", "pbatch").parquet(live)
-        IndexFs.write(widthFile)(_.write(IngestBatch.toString
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-      }
-      (live, pristine)
-    }
-
   /** L2n: MinHash index DELETE — the removal leg closing the dedup index
-    * lifecycle (build → probe → append → compact → DELETE), mirroring
-    * `ann_index_delete`: takedown requests / right-to-be-forgotten
-    * remove a document set's postings from the stored band table by
-    * rewriting ONLY the (band, ingest-batch) partitions that contain
-    * them ([[deleteFromBands]]). The registry form targets a scratch
-    * "live" layout partitioned by (band, ingest batch of [[IngestBatch]]
-    * ids) — the table a production delete mutates in place — built ONCE
-    * per stored index ([[ensureLiveBands]]; the `join_bucketed`
-    * precedent: layout setup is setup, not the measured product, and r9's
-    * in-window full copy made the bench read as O(index) when the op is
-    * O(affected partitions)). Each draw then performs the identical
-    * partition-pruned survivor rewrite, sourcing affected partitions
-    * from the PRISTINE postings so re-runs measure the same work and the
-    * live table is byte-stable post-draw. Deletion list = a mid-batch
-    * slice of ingest batch 0 (doc_id in [100, 200) with
-    * doc_id % 3 = 0 — the realistic "one source's slice of one batch"
-    * shape at the width-250 batch axis); at 100 TB the rewrite touches NumBands × 1 batch
-    * directories, never the corpus-wide postings. Output is the
-    * post-delete per-band manifest; the oracle recomputes the banding
-    * minus the deleted ids, so a lost or doubled surviving posting
-    * fails the gate. */
+    * lifecycle (build → probe → append → compact → DELETE), bound to
+    * [[GraftAPI.minhashIndexDelete]] like `ann_index_delete`: takedown
+    * requests / right-to-be-forgotten remove a document set's postings
+    * by rewriting ONLY the (band, ingest-batch) partitions that contain
+    * them ([[deleteFromBands]]). The takedown runs on a copy of the
+    * full-corpus root ([[MinhashIndex.ensureCopy]]), so every other key
+    * keeps reading the shared root as built; from the second call on the
+    * listed ids are gone and the rewrite finds nothing to do. Deletion
+    * list = a mid-batch slice of ingest batch 0 (doc_id in [100, 200)
+    * with doc_id % 3 = 0 — the realistic "one source's slice of one
+    * batch" shape at the width-250 batch axis); at 100 TB the rewrite
+    * touches NumBands × 1 batch directories, never the corpus-wide
+    * postings. Output is the post-delete per-band manifest; the oracle
+    * recomputes the banding minus the deleted ids, so a lost or doubled
+    * surviving posting fails the gate. */
   def dedupIndexDelete(s: SparkSession, dir: String): DataFrame = {
-    val (live, pristine) = ensureLiveBands(s, dir)
-    val del = documents(s, dir)
-      .filter(col("doc_id") >= 100 && col("doc_id") < 200 &&
-        col("doc_id") % 3 === 0)
-      .select("doc_id")
-    deleteFromBands(s, live, del, source = Some(pristine))
-    GraftAPI.bandManifest(Tables.read(s, live), "doc_id").orderBy("band")
+    val ix = MinhashIndex.ensureCopy(MinhashIndex.ensure(s, dir), "mhix_v3_delete", dir)
+    GraftAPI.minhashIndexDelete(s, ix.bands,
+      documents(s, dir).filter(col("doc_id") >= 100 && col("doc_id") < 200 &&
+        col("doc_id") % 3 === 0).select("doc_id"),
+      "doc_id")
+    GraftAPI.bandManifest(Tables.read(s, ix.bands), "doc_id").orderBy("band")
   }
 
   /** Buckets at or above this size get re-banded by [[dedupIndexReband]].
@@ -730,104 +640,29 @@ object DedupOps {
     * enumeration starts to hurt (hundreds+). */
   private[graft] val RebandHotSize = 4L
 
-  /** L2o: hot-bucket REBAND maintenance (VERDICT r10 #5) — the remedy for
+  /** L2o: hot-bucket REBAND report (VERDICT r10 #5) — the remedy for
     * what [[minhashIndexStats]] detects: a band bucket glued together by
     * template/boilerplate families enumerates sz·(sz−1)/2 candidate
-    * pairs, and nothing in the lifecycle reduced one once it formed.
-    * This job re-bands ONLY the hot buckets' postings at a finer key —
-    * the md5 over the FULL NumHashes-slot signature instead of the
-    * band's RowsPerBand slots (the standard LSH hot-bucket split: more
-    * rows per band → collision probability J^k instead of J^(k/b)) —
-    * and persists them as a `bands_fine` side-table next to the index,
-    * partitioned by band like the main postings. The PRODUCTION
-    * candidate scans consume the scheme (r12): [[candidatePairs]]
-    * enumerates hot buckets at the fine key (feeding `simjoin_lsh` and
-    * `dedup_clusters`), and [[dedupIncremental]]'s probe matches hot
-    * buckets only through the stored fine keys
-    * ([[MinhashIndex.ensureFine]]). DedupSpec pins the pair-count drop
-    * on a planted hot bucket while full-signature duplicates keep
-    * colliding.
+    * pairs. The index build re-bands ONLY the hot buckets' postings at a
+    * finer key — the md5 over the FULL NumHashes-slot signature instead
+    * of the band's RowsPerBand slots (the standard LSH hot-bucket split:
+    * more rows per band → collision probability J^k instead of J^(k/b))
+    * — into its `bands_fine` table, partitioned by band like the main
+    * postings. The PRODUCTION candidate scans consume the scheme (r12):
+    * [[candidatePairs]] enumerates hot buckets at the fine key (feeding
+    * `simjoin_lsh` and `dedup_clusters`), and [[dedupIncremental]]'s
+    * probe matches hot buckets only through the stored fine keys.
+    * DedupSpec pins the pair-count drop on a planted hot bucket while
+    * full-signature duplicates keep colliding.
     *
-    * Scale shape: hot-bucket membership is found on the STORED postings
-    * (one groupBy, no text); only the hot docs' shingles re-sign (the
-    * corpus pass is semi-joined down to the affected ids before
-    * tokenization fan-out); the rewrite writes ONLY the side-table.
-    * Output is the per-hot-bucket manifest: docs, candidate pairs
-    * before/after, sub-bucket fan-out — the numbers an operator reads
-    * to confirm the blowup is gone. */
-  /** The fine side-table's frame: postings of hot buckets (≥
-    * [[RebandHotSize]]) re-keyed on the full-signature `sub_key`. Shared
-    * by [[dedupIndexReband]] (full index) and
-    * [[MinhashIndex.ensureFine]] (the base index's probe side) so both
-    * families key identically. */
-  private[graft] def fineRowsFor(s: SparkSession, dir: String,
-                                 bands: DataFrame): DataFrame = {
-    val hot = bands.groupBy("band", "band_key")
-      .agg(count(lit(1)).as("sz")).filter(col("sz") >= RebandHotSize)
-      .select("band", "band_key")
-    // cache + eager count: hot feeds the posting semi-join AND (via
-    // hotPostings) the id set for the re-sign — tiny frame, audit-scale
-    val hotPostings = cache(
-      bands.join(hot, Seq("band", "band_key"), "left_semi"))
-    hotPostings.count()
-    val hotIds = hotPostings.select("doc_id").distinct()
-    // The doc restriction pushes BELOW the tokenize fan-out (review r11:
-    // a semi-join on the corpus-wide shingle ROWS still paid the full
-    // per-token explode + window; only the hot docs' text should).
-    val subKeys = GraftAPI.minhashSignatures(GraftAPI.shingleRows(
-        documents(s, dir).join(hotIds, Seq("doc_id"), "left_semi"), "doc_id", "text"),
-        "doc_id", NumHashes)
-      .select(col("doc_id"), GraftAPI.minhashSubKey(NumHashes).as("sub_key"))
-    hotPostings.join(subKeys, "doc_id")
-      .select("doc_id", "band", "band_key", "sub_key")
-      .withColumn("pband", col("band"))
-  }
-
-  /** Declared schema of the stored band-postings tables (base / delta /
-    * compact) — delta read-backs must not rely on inference: a corpus
-    * with an empty [IncrementalCutoff, AppendCutoff) slice writes a
-    * data-file-less partitioned delta, and inference on it throws
-    * (the fineSchema rule, applied to the lifecycle siblings). */
-  private[graft] val bandsSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("doc_id",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("band",
-      org.apache.spark.sql.types.IntegerType),
-    org.apache.spark.sql.types.StructField("band_key",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("pband",
-      org.apache.spark.sql.types.IntegerType)))
-
-  /** The fine side-table's declared schema — read-backs must not rely
-    * on inference (a hot-bucket-free index writes a data-file-less
-    * partitioned table, and inference on it throws). */
-  private[graft] val fineSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("doc_id",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("band",
-      org.apache.spark.sql.types.IntegerType),
-    org.apache.spark.sql.types.StructField("band_key",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("sub_key",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("pband",
-      org.apache.spark.sql.types.IntegerType)))
-
-  def dedupIndexReband(s: SparkSession, dir: String): DataFrame = {
-    val ix = MinhashIndex.ensure(s, dir)
-    val fine = fineRowsFor(s, dir,
-      Tables.read(s, ix.bands).select("doc_id", "band", "band_key"))
-    // Marker-disciplined rewrite (ADVICE r11): the side-table lands in
-    // a committed index root, so a crash mid-write must read as "no
-    // fine table", not as a trustworthy partial one.
-    MinhashIndex.rewriteFine(fine, ix)
-    // Read back WITH the declared schema (review r11): a corpus with no
-    // bucket >= the hot threshold writes a data-file-less partitioned
-    // table, and schema inference on it throws — a healthy index must
-    // yield an EMPTY manifest, not a crash.
-    val sub = Tables.read(s, s"${ix.root}/bands_fine", Some(fineSchema))
+    * This key reads the full-corpus root's build-time `bands_fine`; its
+    * output is the per-hot-bucket manifest: docs, candidate pairs
+    * before/after, sub-bucket fan-out — the numbers an operator reads to
+    * confirm the blowup is gone. */
+  def dedupIndexReband(s: SparkSession, dir: String): DataFrame =
+    MinhashIndex.fineRows(s, MinhashIndex.ensure(s, dir))
       .groupBy("band", "band_key", "sub_key").agg(count(lit(1)).as("ssz"))
-    sub.groupBy("band", "band_key")
+      .groupBy("band", "band_key")
       .agg(sum("ssz").as("n_docs"),
         count(lit(1)).as("n_sub"),
         max("ssz").as("max_sub"),
@@ -837,26 +672,36 @@ object DedupOps {
         expr("CAST(n_docs * (n_docs - 1) AS BIGINT) div 2").as("pairs_before"),
         col("n_sub"), col("max_sub"), col("pairs_after"))
       .orderBy("band", "band_key")
+
+  /** The registry's base root with its delta ensured — the index every
+    * registry probe reads. */
+  private[ops] def probedBase(s: SparkSession, dir: String): MinhashIndex.Ix = {
+    val ix = MinhashIndex.ensureBase(s, dir)
+    MinhashIndex.ensureDelta(s, dir, ix)
+    ix
   }
 
-  /** The fine-union PROBE core shared by [[dedupIncremental]] and
-    * [[PipelineOps.curationIncremental]] (review r12 — the two callers
-    * must never disagree about what counts as a near-dup, so the
-    * cold-keys/fine-keys wiring lives once): one (doc_id, hit) row per
-    * batch doc, `hit` = some band row of the doc hits the stored base
-    * index under the fine-union rule. `batch` must carry (doc_id, band,
-    * band_key, sub_key) — [[bandsOf]]'s shape. It is read once: both key
-    * legs flag its rows and one per-doc aggregate folds the flags, so a
-    * caller needs no cache, no union and no distinct over it. */
-  private[ops] def fineProbeHits(s: SparkSession, dir: String,
-                                 batch: DataFrame): DataFrame = {
-    val ix = MinhashIndex.ensureBase(s, dir)
-    // The RESOLVED postings (r13, VERDICT r12 #1): committed compact if
-    // present, else base ∪ ensured delta — so a document appended
-    // yesterday flags today's near-dups of it, without waiting for a
-    // compact, and compact changes nothing but the scan count.
-    val postings = MinhashIndex.resolvedPostings(s, dir, ix)
-    val finePath = MinhashIndex.ensureFine(s, dir, ix)
+  /** The fine-union PROBE core — the one MinHash probe, shared by
+    * [[dedupIncremental]], [[dedupIncrementalVsdelta]],
+    * [[PipelineOps.curationIncremental]] and the streaming adapters
+    * (`dedupBatchAgainstIndex`, `curationVerdictBatch`), so no two
+    * callers can disagree about what counts as a near-dup: one (doc_id,
+    * hit) row per batch doc, `hit` = some band row of the doc hits the
+    * stored index at `root` — `bands` ∪ the committed delta generations
+    * ([[MinhashIndex.resolvedPostings]]) — under the fine-union rule:
+    * buckets below the root's recorded `hotSize` hit on (band,
+    * band_key), hot buckets only on a full-signature sub_key match in
+    * `bands_fine`, which the append keeps current at the resolved sizes.
+    * `batch` must carry (doc_id, band, band_key, sub_key) —
+    * [[bandsOf]]'s shape. It is read once: both key legs flag its rows
+    * and one per-doc aggregate folds the flags, so a caller needs no
+    * cache, no union and no distinct over it. A root that is not
+    * committed, or that an older build wrote, is refused
+    * ([[MinhashIndex.checkedMeta]]). */
+  private[graft] def fineProbeHits(root: String, batch: DataFrame): DataFrame = {
+    val s = batch.sparkSession
+    val ix = MinhashIndex.Ix(root)
+    val hotSize = MinhashIndex.checkedMeta(root, "before probing")("hotSize").toLong
     // Bucket sizing stays a full-postings aggregate — examined and left
     // (optimization r14): pre-pruning the postings to the batch's band
     // keys (broadcast semi-join) was A/B'd and REVERTED — it saves only
@@ -867,15 +712,15 @@ object DedupOps {
     // queries at sf0.1). The real 100 TB fix is a STORED per-bucket size
     // stat maintained by the index lifecycle, which is a write-path
     // change, not a probe optimization.
-    val coldKeys = postings
+    val coldKeys = MinhashIndex.resolvedPostings(s, ix)
       .groupBy("band", "band_key").agg(count(lit(1)).as("sz"))
-      .filter(col("sz") < RebandHotSize)
+      .filter(col("sz") < hotSize)
       .select(col("band"), col("band_key"), lit(true).as("cold"))
     // No distinct on the fine keys (optimization r14): a duplicate key
     // only repeats a batch row, which the per-doc aggregate folds back,
     // and a distinct would pay a shuffle of the stored fine table per
     // probe for nothing.
-    val fineKeys = Tables.read(s, finePath, Some(fineSchema))
+    val fineKeys = MinhashIndex.fineRows(s, ix)
       .select(col("band"), col("band_key"), col("sub_key"), lit(true).as("fine"))
     batch.join(coldKeys, Seq("band", "band_key"), "left")
       .join(fineKeys, Seq("band", "band_key", "sub_key"), "left")
@@ -885,33 +730,30 @@ object DedupOps {
   }
 
   /** L14: incremental MinHash dedup of a new batch against the STORED
-    * corpus index — the steady-state form of [[simjoinLsh]], now actually
-    * reading the persisted artifact (r8: previously the "index" was
-    * recomputed in-query from the full corpus; the corpus side comes
-    * from [[MinhashIndex.resolvedPostings]] — committed compact, else
-    * base ∪ ensured delta, i.e. docs < [[AppendCutoff]] either way (r13:
-    * probes see appended documents); the batch is docs ≥ AppendCutoff):
-    * only the incoming batch shingles + signs, and a batch doc is a dup
-    * if ANY of its band keys hits the index.
+    * corpus index — the steady-state form of [[simjoinLsh]], reading the
+    * persisted artifact: the corpus side is the base root's `bands` ∪
+    * its ensured delta ([[probedBase]]), i.e. docs < [[AppendCutoff]]
+    * whether or not a compact has folded the delta in (r13: probes see
+    * appended documents); the batch is docs ≥ AppendCutoff. Only the
+    * incoming batch shingles + signs, and a batch doc is a dup if ANY of
+    * its band keys hits the index.
     *
     * Scale shape: the index is a stored table (bucketed by band_key at
     * scale); the batch's band rows semi-join it co-partitioned (or
     * broadcast when the batch is small) — the 100 TB corpus text is never
     * re-read, and the per-batch cost is O(batch), not O(corpus).
     *
-    * Hot-bucket probes go through the stored `bands_fine` side-table
-    * (VERDICT r11 #2): a batch key landing in a bucket ≥
-    * [[RebandHotSize]] counts as a hit only if the batch doc's
-    * full-signature sub_key matches a stored doc's in that bucket —
-    * the probe mirror of [[candidatePairs]]' fine-union scheme, so a
+    * Hot-bucket probes go through the stored `bands_fine` table (VERDICT
+    * r11 #2): a batch key landing in a bucket ≥ [[RebandHotSize]] counts
+    * as a hit only if the batch doc's full-signature sub_key matches a
+    * stored doc's in that bucket — the probe mirror of
+    * [[candidatePairs]]' fine-union scheme ([[fineProbeHits]]), so a
     * template-family bucket can no longer mark every batch doc that
-    * grazes it as a dup. The side-table is build-once next to the base
-    * index ([[MinhashIndex.ensureFine]], commit-marker guarded) and the
-    * steady-state probe reads stored postings + stored fine keys only. */
+    * grazes it as a dup. */
   def dedupIncremental(s: SparkSession, dir: String): DataFrame = {
     // fineProbeHits reads the batch band table once and answers every
     // batch doc, so the table needs no cache and the probe no spine.
-    fineProbeHits(s, dir,
+    fineProbeHits(probedBase(s, dir).root,
         bandsOf(shingleRows(s, dir).filter(col("doc_id") >= AppendCutoff)))
       .select(col("doc_id"), col("hit").as("is_dup"))
       .orderBy("doc_id")
@@ -924,31 +766,33 @@ object DedupOps {
     * RESOLVED postings (base ∪ delta) and `via_delta` = flagged there
     * but NOT against the base alone — i.e. exactly the documents
     * yesterday's append made visible. The base-only leg reads the SAME
-    * stored tables (base bucket sizes from `bands`; base-hot buckets'
-    * member sub_keys = the fine table restricted to base doc_ids and to
-    * buckets hot at base sizes — base-hot ⇒ resolved-hot, so the
-    * restriction loses nothing), so the comparison costs two fixed-width
-    * probes, never a re-shingle. The DuckDB oracle mirrors both rules;
-    * at sf0.01 doc 452 flips (near-dup of an appended [400,450) doc). */
+    * stored tables restricted to base doc_ids (< [[IncrementalCutoff]]),
+    * so it holds whether or not a compact folded the delta into `bands`:
+    * base bucket sizes from `bands`; base-hot buckets' member sub_keys =
+    * the fine table restricted to buckets hot at base sizes — base-hot ⇒
+    * resolved-hot, so the restriction loses nothing. The comparison
+    * costs two fixed-width probes, never a re-shingle. The DuckDB oracle
+    * mirrors both rules; at sf0.01 doc 452 flips (near-dup of an
+    * appended [400,450) doc). */
   def dedupIncrementalVsdelta(s: SparkSession, dir: String): DataFrame = {
     val batch = cache(bandsOf(
       shingleRows(s, dir).filter(col("doc_id") >= AppendCutoff)))
     batch.count()
-    val resolvedHits = fineProbeHits(s, dir, batch)
+    val ix = probedBase(s, dir)
+    val resolvedHits = fineProbeHits(ix.root, batch)
       .filter(col("hit")).select(col("doc_id"), lit(true).as("is_dup"))
-    val ix = MinhashIndex.ensureBase(s, dir)
     // No distinct on the fine keys, as in [[fineProbeHits]]
     // (optimization r14): the base-only leg's fine keys are consumed
     // ONLY through a batch semi-join, so leaving the fine rows
     // un-deduplicated changes no flag. (Batch-key pruning of the size
     // aggregate was A/B'd and reverted — see fineProbeHits.)
-    val baseSz = Tables.read(s, ix.bands)
+    val baseSz = Tables.read(s, ix.bands).filter(col("doc_id") < IncrementalCutoff)
       .groupBy("band", "band_key").agg(count(lit(1)).as("sz"))
     val coldKeys0 = baseSz.filter(col("sz") < RebandHotSize)
       .select("band", "band_key")
     val baseHot = baseSz.filter(col("sz") >= RebandHotSize)
       .select("band", "band_key")
-    val fineKeys0 = Tables.read(s, MinhashIndex.ensureFine(s, dir, ix), Some(fineSchema))
+    val fineKeys0 = MinhashIndex.fineRows(s, ix)
       .filter(col("doc_id") < IncrementalCutoff)
       .join(baseHot, Seq("band", "band_key"), "left_semi")
       .select("band", "band_key", "sub_key")

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.DataFrame
 
 /** The commit protocol of the stored indexes ([[MinhashIndex]],
   * [[IvfPqIndex]], the facade layouts of [[graft.api.GraftAPI]], the
@@ -13,7 +12,6 @@ import org.apache.spark.sql.DataFrame
   *   - `_SUCCESS` ([[Table]]) in a table directory, where Spark's writer
   *     commits it, or at an index root, committed after every table
   *     under the root;
-  *   - `_fine_SUCCESS` ([[Fine]]) at a MinHash root, over `bands_fine`;
   *   - `_split_SUCCESS` ([[Split]]) at an IVF-PQ root, over
   *     `coarse_split` and `cells_split`.
   *
@@ -24,15 +22,9 @@ import org.apache.spark.sql.DataFrame
   * holds the root marker retired for the whole rewrite. A side-table
   * that a root rewrite makes stale loses its marker through [[retire]],
   * and consumers fall back to the raw tables until it is rebuilt.
-  *
-  * Resolve (MinHash only). A MinHash probe reads the committed compact
-  * sibling when there is one, else the base table ∪ the committed delta
-  * generations ([[resolve]]); both hold the same rows, so compacting
-  * changes the scan count and nothing else. [[requireUncompacted]]
-  * guards the MinHash facade lifecycle against that sibling. The IVF-PQ
-  * lifecycle compacts in place and has no sibling to resolve.
-  * [[requireCommitted]] is the precondition every facade lifecycle op
-  * checks before it mutates a root.
+  * [[requireCommitted]] is the precondition every lifecycle op checks
+  * before it mutates a root; the delta generations an append commits
+  * are listed by [[committedGenerations]].
   *
   * All I/O goes through Hadoop's `FileSystem` for the path's scheme,
   * with the active session's `hadoopConfiguration` when there is one, so
@@ -46,7 +38,6 @@ private[graft] object IndexFs {
   final class Marker private[IndexFs] (private[IndexFs] val file: String)
 
   val Table = new Marker("_SUCCESS")
-  val Fine = new Marker("_fine_SUCCESS")
   val Split = new Marker("_split_SUCCESS")
 
   // getActiveSession is THREAD-LOCAL (ADVICE r10): marker I/O issued from
@@ -92,12 +83,14 @@ private[graft] object IndexFs {
 
   /** Rewrite a root in place under its retired root marker, recommitted
     * after `body`; a crash mid-rewrite reads as an uncommitted index. A
-    * root with no marker (a scratch layout) stays without one. */
-  def mutate(root: String)(body: => Unit): Unit = {
+    * root with no marker (a scratch layout) stays without one. Returns
+    * what `body` returns. */
+  def mutate[T](root: String)(body: => T): T = {
     val had = committed(root)
     retire(root)
-    body
+    val out = body
     if (had) commit(root, Table)
+    out
   }
 
   /** Refuse to mutate a root whose marker a crashed lifecycle op left
@@ -106,14 +99,6 @@ private[graft] object IndexFs {
     require(committed(root),
       s"index at $root is not committed (a crashed lifecycle op?) — $remedy")
 
-  /** Refuse to mutate a root whose committed `compact` sibling probes
-    * serve first, ahead of whatever the mutation writes. */
-  def requireUncompacted(compact: String, remedy: String): Unit =
-    require(!committed(compact),
-      s"index at ${parent(compact)} carries a committed " +
-        s"${new Path(compact).getName} sibling, which probes serve in " +
-        s"preference to what this call writes — $remedy")
-
   /** The committed generation directories under `dir` (empty when
     * absent), in name order so a union over them is deterministic. */
   def committedGenerations(dir: String): Seq[String] = withFs(dir) { (fs, p) =>
@@ -121,19 +106,6 @@ private[graft] object IndexFs {
     else fs.listStatus(p).toSeq.filter(_.isDirectory)
       .map(_.getPath.toString).sorted.filter(committed(_))
   }
-
-  /** The probe-root resolver: `readCompact(compact)` when `compact` is
-    * committed, else `base` ∪ `readDeltas(deltas)`, or `base` alone when
-    * there are no deltas. `deltas` is evaluated first and only without a
-    * committed compact, so an ensured delta is built only when read. */
-  def resolve(compact: String, base: => DataFrame, deltas: => Seq[String])(
-      readCompact: String => DataFrame,
-      readDeltas: Seq[String] => DataFrame): DataFrame =
-    if (committed(compact)) readCompact(compact)
-    else deltas match {
-      case Seq() => base
-      case ds => base.unionByName(readDeltas(ds))
-    }
 
   /** Copy each existing table or file of `paths` into `root` under its
     * own name, replacing what is there. Call it only as the body of a
@@ -147,9 +119,9 @@ private[graft] object IndexFs {
     }
   })
 
-  /** Recursive delete of a retired index SIBLING (delta generations a
-    * compact has folded in). Only lifecycle code inside [[mutate]] or
-    * [[build]] may call this. */
+  /** Recursive delete of a retired index table (delta generations a
+    * compact has folded in, or a rebuild drops). Only lifecycle code
+    * inside [[mutate]] or [[build]] may call this. */
   def deleteRecursive(path: String): Boolean =
     withFs(path)((fs, p) => !fs.exists(p) || fs.delete(p, true))
 

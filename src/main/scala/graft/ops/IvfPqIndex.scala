@@ -115,18 +115,14 @@ object IvfPqIndex {
     graft.api.GraftAPI.annIndexAppend(embeddings(s, dir).filter(col("vec_id") % 10 === 7),
       "vec_id", "embedding", ix.root)
 
-  /** A private copy of the committed index `src`, for a registry key
-    * that mutates its index in place (`ann_index_compact`,
-    * `ann_index_delete`), so that the shared roots every other key reads
-    * stay as built. Copied once, under `tag`'s root marker
-    * ([[IndexFs.copy]] inside [[IndexFs.ensure]]); from then on the key
-    * finds its own earlier mutation. */
+  /** A private copy of the committed index `src` for a registry key that
+    * mutates its index in place (`ann_index_compact`, `ann_index_delete`),
+    * so the shared roots every other key reads stay as built
+    * ([[Artifacts.ensureCopy]]). */
   private[ops] def ensureCopy(src: Ix, tag: String, dir: String): Ix = synchronized {
-    val ix = Ix(Artifacts.root(tag, dir, "embeddings.parquet"))
-    IndexFs.ensure(ix.root)(IndexFs.copy(Seq(src.coarse, src.cells, src.pqCodebooks,
-      src.pqCodes, src.ivfCodebooks, src.ivfCodes, src.ivfCodesDelta,
-      Artifacts.metaFile(src.root)), ix.root))
-    ix
+    Ix(Artifacts.ensureCopy(src.root, Seq(src.coarse, src.cells, src.pqCodebooks,
+      src.pqCodes, src.ivfCodebooks, src.ivfCodes, src.ivfCodesDelta), tag, dir,
+      "embeddings.parquet"))
   }
 
   /** The residual-code table every base-family probe scores from (the
@@ -139,7 +135,7 @@ object IvfPqIndex {
     val delta = ensureDelta(s, dir, ix)
     // Declared schema on the delta read (not inference): an empty
     // held-out slice writes a data-file-less delta — it must resolve to
-    // "base alone", not crash the probe (the bandsSchema rule).
+    // "base alone", not crash the probe.
     Tables.read(s, ix.ivfCodes).select(cols: _*)
       .unionByName(Tables.read(s, delta, Some(VectorOps.codesSchema)).select(cols: _*))
   }
@@ -154,8 +150,8 @@ object IvfPqIndex {
   }
 
   /** Rewrite of the cell-SPLIT side-tables under their own marker
-    * ([[IndexFs.Split]]; the ANN mirror of [[MinhashIndex.rewriteFine]])
-    * from pre-built (pinned residuals, sub-centroids, assignments) frames
+    * ([[IndexFs.Split]]) from pre-built (pinned residuals,
+    * sub-centroids, assignments) frames
     * ([[graft.ops.VectorOps.splitRowsOf]]): `coarse_split` (cell, scid,
     * scv — per-hot-cell residual sub-centroids) and `cells_split`
     * (vec_id, cell, scid — the hot cells' vectors re-assigned to

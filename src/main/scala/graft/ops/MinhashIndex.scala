@@ -1,47 +1,47 @@
 package graft.ops
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.api.GraftAPI
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Persisted MinHash-LSH band-table artifact — the dedup counterpart of
-  * [[IvfPqIndex]] (VERDICT r7 #1's factoring applied to the dedup family,
-  * and the closure of SCALE.md's "simjoinLsh.persist() → a real checkpoint
-  * table" single-node artifact): shingling + signatures + banding run ONCE
-  * at ingest time and write a parquet table; dedup probes read the stored
-  * postings and never re-shingle the corpus.
+  * [[IvfPqIndex]]: shingling + signatures + banding run ONCE at ingest
+  * time and write parquet tables; dedup probes read the stored postings
+  * and never re-shingle the corpus.
   *
-  * Stored layout (deterministic — md5 shingles + Kirsch–Mitzenmacher
-  * integer minhash, so any builder writes byte-identical postings and the
-  * probe oracles can mirror the full build+probe chain):
+  * Stored layout, written by [[graft.api.GraftAPI.writeMinhashIndex]]
+  * (deterministic — md5 shingles + Kirsch–Mitzenmacher integer minhash,
+  * so any builder writes byte-identical postings and the probe oracles
+  * can mirror the full build+probe chain):
   *
-  *   <root>/bands   (doc_id, band, band_key), hive-partitioned by
-  *                  pband (= band) — one directory per band, so a probe
-  *                  that bands its batch the same way prunes to the
-  *                  matching band directory before any I/O.
+  *   <root>/bands       (doc_id, band, band_key), hive-partitioned by
+  *                      pband (= band) and, with a batch width, pbatch
+  *                      (= doc_id div width) — a probe prunes to its band
+  *                      directories, a takedown to its batch directories;
+  *   <root>/bands_fine  (doc_id, band, band_key, sub_key): the postings of
+  *                      hot buckets (≥ the manifest's `hotSize`) re-keyed
+  *                      on the full-signature sub_key;
+  *   <root>/sub_keys    (doc_id, sub_key), one row per indexed document;
+  *   <root>/bands_delta/batch=<k>  one committed generation per append
+  *                      ([[graft.api.GraftAPI.minhashIndexAppend]]), the
+  *                      `bands` layout plus each row's sub_key.
   *
-  * The BASE-family root additionally carries the lifecycle siblings:
+  * Every lifecycle op is the facade's: append lands a generation and
+  * keeps `bands_fine` current at the resolved bucket sizes, compact folds
+  * the generations into `bands` in place, delete rewrites the affected
+  * partitions. Probes read `bands` ∪ the committed generations
+  * ([[resolvedPostings]]), so an appended document is visible to the
+  * very next probe. All of it commits under the root marker
+  * ([[IndexFs]]); a root whose marker is down, or that an older build
+  * wrote, is refused by [[checkedMeta]].
   *
-  *   <root>/bands_delta    yesterday's appended batch (docs in
-  *                         [[DedupOps.IncrementalCutoff]],
-  *                         [[DedupOps.AppendCutoff]])), same layout;
-  *   <root>/bands_compact  base ∪ delta folded into one layout by
-  *                         `dedup_index_compact`;
-  *   <root>/bands_fine     hot-bucket full-signature sub-keys over the
-  *                         RESOLVED postings (base ∪ delta).
-  *
-  * Every table commits through [[IndexFs]]: the root marker after
-  * `bands` and the geometry manifest, each sibling's own table marker,
-  * and the fine marker over `bands_fine`.
-  *
-  * Probes never read `bands` alone: [[resolvedPostings]] is the catalog
-  * swap VERDICT r12 #1 demanded — committed compact if present, else
-  * base ∪ (ensured) delta, the [[IndexFs.resolve]] rule — so an
-  * appended document is visible to the very next probe, compact is a
-  * pure layout optimization, and because
-  * the delta is ensured deterministically the resolved content is ALWAYS
-  * the postings of docs < AppendCutoff: every query stays a pure function
-  * of the corpus regardless of maintenance-op order.
+  * This object keeps the registry's fixture roots only: the full-corpus
+  * and base-slice builds at the harness geometry, the ensured delta
+  * (docs in [[DedupOps.IncrementalCutoff]], [[DedupOps.AppendCutoff]])
+  * appended as generation 1), and the private copies the in-place
+  * lifecycle keys mutate ([[ensureCopy]]).
   *
   * At 100 TB the postings table is additionally bucketed by `band_key` so
   * the per-batch semi-join probe co-partitions without a shuffle of the
@@ -53,136 +53,130 @@ object MinhashIndex {
   final case class Ix(root: String) {
     def bands: String = s"$root/bands"
     def delta: String = s"$root/bands_delta"
-    def compact: String = s"$root/bands_compact"
     def fine: String = s"$root/bands_fine"
+    def subKeys: String = s"$root/sub_keys"
+    /** The delta generation append batch `k` commits. */
+    def generation(k: Long): String = s"$delta/batch=$k"
   }
 
-  /** Full-corpus band index, built once under the root marker
-    * ([[IndexFs.ensure]]). Synchronized: parallel suites in one JVM must
-    * not race the build. */
+  /** The layout the manifest of a current build records; [[checkedMeta]]
+    * refuses any other. Bump it with the root version keys. */
+  private[graft] val Layout = "3"
+
+  /** Full-corpus index, built once under the root marker. Synchronized:
+    * parallel suites in one JVM must not race the build. */
   def ensure(s: SparkSession, dir: String): Ix = synchronized {
-    val ix = Ix(Artifacts.root("mhix_v1", dir, "documents.parquet"))
-    IndexFs.ensure(ix.root)(buildAt(DedupOps.postingRows(s, dir), ix))
+    val ix = Ix(Artifacts.root("mhix_v3", dir, "documents.parquet"))
+    build(Tables.documents(s, dir), ix)
     ix
   }
 
   /** Corpus-slice index (docs below [[DedupOps.IncrementalCutoff]]) for
-    * the incremental-dedup probe: the stored side of "new batch vs
-    * existing corpus". Same build-once contract, separate root. The
-    * variant lives in the VERSION KEY (VERDICT r12 "what's wrong" #3:
-    * a suffix appended outside the versioned name meant a version bump
-    * had to remember two call sites); v2 because the fine side-table's
-    * content changed with it (now derived from the RESOLVED postings,
-    * not the base alone). */
+    * the incremental probes: the stored side of "new batch vs existing
+    * corpus". Same build-once contract, separate root; the variant lives
+    * in the version key. */
   def ensureBase(s: SparkSession, dir: String): Ix = synchronized {
-    val ix = Ix(Artifacts.root("mhix_v2_base", dir, "documents.parquet"))
-    IndexFs.ensure(ix.root)(buildAt(DedupOps.postingRows(s, dir,
-      col("doc_id") < DedupOps.IncrementalCutoff), ix))
+    val ix = Ix(Artifacts.root("mhix_v3_base", dir, "documents.parquet"))
+    build(Tables.documents(s, dir).filter(col("doc_id") < DedupOps.IncrementalCutoff), ix)
     ix
   }
 
-  /** Rewrite the delta table: yesterday's batch (docs in
-    * [[DedupOps.IncrementalCutoff]], [[DedupOps.AppendCutoff]])) banded
-    * and landed next to the base postings — the write core of
-    * `dedup_index_append` (which ALWAYS rewrites: the bench window must
-    * measure an append, and the deterministic banding makes the rewrite
-    * byte-stable). A crashed write reads as "no delta" to
-    * [[ensureDelta]]. */
-  def writeDelta(s: SparkSession, dir: String, ix: Ix): Unit = {
-    DedupOps.postingRows(s, dir, col("doc_id") >= DedupOps.IncrementalCutoff &&
-        col("doc_id") < DedupOps.AppendCutoff)
-      .withColumn("pband", col("band"))
-      .repartition(col("pband"))
-      .write.mode("overwrite").partitionBy("pband")
-      .parquet(ix.delta)
-  }
+  /** [[graft.api.GraftAPI.writeMinhashIndex]] at the harness geometry
+    * when `ix` is not committed. */
+  private def build(docs: DataFrame, ix: Ix): Unit =
+    if (!IndexFs.committed(ix.root))
+      GraftAPI.writeMinhashIndex(docs, "doc_id", "text", ix.root,
+        DedupOps.NumHashes, DedupOps.NumBands, DedupOps.IngestBatch)
 
-  /** Build-if-absent delta — the ensure face of [[writeDelta]], used by
-    * every PROBE so the resolved postings are a pure function of the
-    * corpus whether or not the append job ran first. */
+  /** Build-if-absent delta generation 1 — the ensure face of [[append]],
+    * used by every probe so the resolved postings are a pure function of
+    * the corpus whether or not the append job ran first. After a compact
+    * has folded the batch into `bands`, the re-ensured generation is
+    * empty: the append skips ids `bands` already holds. */
   def ensureDelta(s: SparkSession, dir: String, ix: Ix): String = synchronized {
-    IndexFs.ensure(ix.delta)(writeDelta(s, dir, ix))
+    if (!IndexFs.committed(ix.generation(1))) append(s, dir, ix)
     ix.delta
   }
 
-  /** The probed postings of the base-family index ([[IndexFs.resolve]]
-    * over the committed `bands_compact`, else `bands` ∪ the ensured
-    * `bands_delta`) — the "catalog-metadata swap" `dedup_index_compact`
-    * narrates. Both resolve to the SAME content — the postings of docs <
-    * [[DedupOps.AppendCutoff]] — because the delta is ensured
-    * deterministically and the compact is their deterministic merge, so
-    * probe output is byte-identical before and after a compact
-    * (DedupSpec pins it) and an appended document is visible WITHOUT
-    * waiting for one. At 100 TB this is one catalog lookup (current
-    * snapshot id → table set); the local form keeps the contract
-    * testable. */
-  def resolvedPostings(s: SparkSession, dir: String, ix: Ix): DataFrame = {
-    val cols = Seq("doc_id", "band", "band_key").map(col)
-    // Declared schema on the sibling reads (not inference): a corpus
-    // whose delta slice is empty writes a data-file-less partitioned
-    // table, and inference on it throws — an empty delta must resolve
-    // to "base alone", not crash the probe.
-    def sibling(paths: Seq[String]) =
-      Tables.readAll(s, paths, Some(DedupOps.bandsSchema)).select(cols: _*)
-    IndexFs.resolve(ix.compact, Tables.read(s, ix.bands).select(cols: _*),
-      Seq(ensureDelta(s, dir, ix)))(p => sibling(Seq(p)), sibling)
-  }
+  /** [[graft.api.GraftAPI.minhashIndexAppend]] of yesterday's batch (docs
+    * in [[DedupOps.IncrementalCutoff]], [[DedupOps.AppendCutoff]])) to
+    * `ix` as generation 1. Returns the append's (band, n_base, n_new)
+    * manifest. */
+  private[ops] def append(s: SparkSession, dir: String, ix: Ix): DataFrame =
+    GraftAPI.minhashIndexAppend(s, ix.bands,
+      Tables.documents(s, dir).filter(col("doc_id") >= DedupOps.IncrementalCutoff &&
+        col("doc_id") < DedupOps.AppendCutoff),
+      "doc_id", "text", batchId = 1, DedupOps.NumHashes, DedupOps.NumBands)
 
-  /** Declared schema of a FACADE `bands_fine` side-table
-    * ([[graft.api.GraftAPI.writeMinhashIndex]]'s layout: `_id` instead
-    * of the registry's `doc_id`), derived from the postings schema so
-    * the caller's id type is preserved. Shared by the streaming probe
-    * and the takedown rewrite so neither can drift; a declared schema
-    * is required because a hot-bucket-free corpus writes a
-    * data-file-less partitioned table and inference on it throws. */
-  def facadeFineSchema(postings: org.apache.spark.sql.types.StructType)
-      : org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(Seq(
-      postings("_id"), postings("band"), postings("band_key"),
-      org.apache.spark.sql.types.StructField("sub_key",
-        org.apache.spark.sql.types.StringType),
-      postings("pband")))
-
-  /** Rewrite of the `bands_fine` side-table under its own marker
-    * ([[IndexFs.Fine]]): a crash mid-write reads as "no fine table" to
-    * every consumer ([[ensureFine]], the incremental probe). The root
-    * marker stays valid throughout: the fine table is additive, and the
-    * raw postings remain correct without it. */
-  def rewriteFine(fine: DataFrame, ix: Ix): Unit = synchronized {
-    IndexFs.build(ix.root, IndexFs.Fine)(writeFine(fine, ix))
-  }
-
-  private def writeFine(fine: DataFrame, ix: Ix): Unit =
-    fine.repartition(col("pband"))
-      .write.mode("overwrite").partitionBy("pband")
-      .parquet(ix.fine)
-
-  /** Build-once `bands_fine` next to an index — the stored side of the
-    * hot-bucket fine probe ([[graft.ops.DedupOps.dedupIncremental]]):
-    * postings of buckets ≥ the hot threshold re-keyed on the
-    * full-signature sub_key, computed from the STORED RESOLVED postings
-    * (base ∪ delta — r13: a bucket pushed over the hot threshold by
-    * appended documents must probe fine, and an appended member's
-    * sub_key must be probe-visible; only the hot docs' text is
-    * re-signed). Returns the table path; an uncommitted table
-    * rebuilds. */
+  /** The `bands_fine` table of the base root with its delta ensured: the
+    * append keeps it current, so nothing else is built here. */
   def ensureFine(s: SparkSession, dir: String, ix: Ix): String = synchronized {
-    IndexFs.ensure(ix.root, IndexFs.Fine)(writeFine(DedupOps.fineRowsFor(s, dir,
-      resolvedPostings(s, dir, ix)), ix))
+    ensureDelta(s, dir, ix)
     ix.fine
   }
 
-  /** The build body under the root marker. One file per band via the
-    * repartition; `band` is duplicated as the partition column `pband` so
-    * the data column keeps its exact IntegerType (partition-value
-    * inference would re-derive it). */
-  private def buildAt(bands: DataFrame, ix: Ix): Unit = {
-    bands
-      .withColumn("pband", col("band"))
-      .repartition(col("pband"))
-      .write.mode("overwrite").partitionBy("pband").parquet(ix.bands)
-    Artifacts.writeMeta(ix.root,
-      "numHashes" -> DedupOps.NumHashes.toString,
-      "bands" -> DedupOps.NumBands.toString)
+  /** A private copy of the committed index `src` for a registry key that
+    * mutates its index in place (`dedup_index_compact`,
+    * `dedup_index_delete`), so the shared roots every other key reads
+    * stay as built ([[Artifacts.ensureCopy]]). */
+  private[ops] def ensureCopy(src: Ix, tag: String, dir: String): Ix = synchronized {
+    Ix(Artifacts.ensureCopy(src.root, Seq(src.bands, src.delta, src.fine, src.subKeys),
+      tag, dir, "documents.parquet"))
   }
+
+  /** The manifest of a committed root that this layout's build wrote —
+    * the one refusal every lifecycle op and probe runs first. A root
+    * whose marker is down (a crashed op) may hold half-rewritten tables;
+    * a root an older build wrote keys its postings differently and may
+    * lack the fine or sub-key tables. Both must be rebuilt. */
+  private[graft] def checkedMeta(root: String, when: String): Map[String, String] = {
+    val remedy = s"rebuild via writeMinhashIndex $when"
+    IndexFs.requireCommitted(root, remedy)
+    val meta = Artifacts.readMeta(root)
+    require(meta.get("layout").contains(Layout),
+      s"index at $root was written by an older build (layout " +
+        s"${meta.getOrElse("layout", "none")}, this build writes $Layout) — $remedy")
+    meta
+  }
+
+  /** Declared schema of the `bands_fine` table and of the delta
+    * generations, derived from the postings schema so the id type is
+    * preserved: (doc_id, band, band_key, sub_key, pband). Declared
+    * because a table with no rows is written without data files, and
+    * inference on it throws. */
+  def facadeFineSchema(postings: StructType): StructType =
+    StructType(Seq(postings("doc_id"), postings("band"), postings("band_key"),
+      StructField("sub_key", StringType), postings("pband")))
+
+  private def storedSchema(s: SparkSession, ix: Ix): StructType =
+    facadeFineSchema(Tables.read(s, ix.bands).schema)
+
+  /** The `bands_fine` rows of `ix`. */
+  private[graft] def fineRows(s: SparkSession, ix: Ix): DataFrame =
+    Tables.read(s, ix.fine, Some(storedSchema(s, ix)))
+
+  /** The rows of every committed delta generation of `ix` (an empty frame
+    * when there are none), in the [[facadeFineSchema]] layout. */
+  private[graft] def deltaRows(s: SparkSession, ix: Ix): DataFrame = {
+    val schema = storedSchema(s, ix)
+    IndexFs.committedGenerations(ix.delta) match {
+      case Seq() => s.createDataFrame(s.sparkContext.emptyRDD[Row], schema)
+      // basePath: generation directories read as one table's partitions
+      case gens => Tables.readAll(s, gens, Some(schema), Map("basePath" -> ix.delta))
+          .select(schema.fieldNames.map(col): _*)
+    }
+  }
+
+  /** The probed postings (doc_id, band, band_key, pband): `bands` ∪ every
+    * committed delta generation. */
+  private[graft] def resolvedPostings(s: SparkSession, ix: Ix): DataFrame = {
+    val cols = Seq("doc_id", "band", "band_key", "pband").map(col)
+    Tables.read(s, ix.bands).select(cols: _*).unionByName(deltaRows(s, ix).select(cols: _*))
+  }
+
+  /** Write `fine` (the [[facadeFineSchema]] layout) as the `bands_fine`
+    * table, one file per band. Callers run it under the root marker. */
+  private[graft] def writeFine(fine: DataFrame, ix: Ix): Unit =
+    fine.repartition(col("pband"))
+      .write.mode("overwrite").partitionBy("pband").parquet(ix.fine)
 }

@@ -202,30 +202,32 @@ object StreamingOps {
 
   /** Streaming incremental dedup against the STORED MinHash postings —
     * the streaming face of `dedup_incremental` (and the consumer of
-    * `build_minhash_index`'s artifact), shipped as a `foreachBatch` body:
-    * `stream.writeStream.foreachBatch(dedupBatchAgainstIndex(ix, out,
-    * "id", "text") _)`. Each micro-batch of (id, text) documents
-    * shingles + signs ONLY itself, left-semi probes the persisted band
-    * table, and lands (id, is_dup) through the idempotent
-    * partition-per-batch sink. Per-batch cost is O(batch) against an
-    * on-disk index the corpus wrote once; combined with the checkpoint
-    * this is the full streaming-ingest dedup recipe — at-least-once
-    * source replay × [[idempotentBatchWriter]] = exactly-once flags.
-    * The index frame is bound per batch (read inside foreachBatch, so a
-    * compacted/refreshed index is picked up at the next batch boundary,
-    * not mid-query). Banding parameters must match the ones the index
-    * was built with — [[graft.api.GraftAPI.minhashBands]] defaults on
-    * both sides. */
+    * [[graft.api.GraftAPI.writeMinhashIndex]]'s artifact), shipped as a
+    * `foreachBatch` body: `stream.writeStream.foreachBatch(
+    * dedupBatchAgainstIndex(ix, out, "id", "text") _)`. Each micro-batch
+    * of (id, text) documents is the batch probe run on one arrival: the
+    * geometry guard, the micro-batch's own band rows, and the one probe
+    * core ([[graft.ops.DedupOps.fineProbeHits]] — `bands` ∪ the committed
+    * delta generations under the fine-union rule); (id, is_dup) lands
+    * through the idempotent partition-per-batch sink, with `is_dup =
+    * false` for a document too short to shingle. Per-batch cost is
+    * O(batch) against an on-disk index the corpus wrote once; combined
+    * with the checkpoint this is the full streaming-ingest dedup recipe —
+    * at-least-once source replay × [[idempotentBatchWriter]] =
+    * exactly-once flags. The index is read per batch, so an
+    * append/compact is picked up at the next batch boundary, not
+    * mid-query. Banding parameters must match the ones the index was
+    * built with — [[graft.api.GraftAPI.minhashBands]] defaults on both
+    * sides. */
   def dedupBatchAgainstIndex(indexBandsPath: String, outPath: String,
                              id: String, text: String,
                              numHashes: Int = 128, bands: Int = 16)
                             (batch: DataFrame, batchId: Long): Unit = {
     requireBanding(indexBandsPath, numHashes, bands)
-    val hits = fineUnionHits(indexBandsPath, batch, id, text,
-      numHashes, bands).withColumn("is_dup", lit(true))
+    val hits = probeHits(indexBandsPath, batch, id, text, numHashes, bands)
     val flags = batch.select(id).distinct()
       .join(hits, Seq(id), "left")
-      .select(col(id), coalesce(col("is_dup"), lit(false)).as("is_dup"))
+      .select(col(id), coalesce(col("hit"), lit(false)).as("is_dup"))
     idempotentBatchWriter(outPath)(flags, batchId)
   }
 
@@ -237,79 +239,14 @@ object StreamingOps {
     graft.ops.Artifacts.requireGeometry(graft.ops.IndexFs.parent(indexBandsPath),
       "numHashes" -> numHashes.toString, "bands" -> bands.toString)
 
-  /** Resolved facade postings KEYS (band, band_key) — the streaming face
-    * of [[graft.ops.MinhashIndex.resolvedPostings]] (r13, VERDICT r12
-    * #1): [[graft.ops.IndexFs.resolve]] over the committed
-    * `bands_compact` sibling, else `bands` ∪ every committed
-    * `bands_delta/batch=<k>` generation
-    * ([[graft.api.GraftAPI.minhashIndexAppend]]'s layout). A facade index
-    * with no lifecycle siblings resolves to `bands` alone, byte-identical
-    * to the pre-r13 probe. Artifacts bind per micro-batch (read inside
-    * foreachBatch), so an append/compact is picked up at the next batch
-    * boundary, not mid-query. `baseDf` arrives from the caller, which
-    * already opened the base table — one footer-listing pass per
-    * micro-batch, not three (review r13). The delta generations read
-    * through a declared schema (the bandsSchema rule): an appended EMPTY
-    * batch commits a data-file-less generation, and inference over
-    * generations that are ALL data-file-less throws. */
-  private def resolvedFacadeKeys(s: org.apache.spark.sql.SparkSession,
-                                 indexBandsPath: String,
-                                 baseDf: DataFrame): DataFrame = {
-    val root = graft.ops.IndexFs.parent(indexBandsPath)
-    graft.ops.IndexFs.resolve(graft.ops.IndexFs.child(root, "bands_compact"),
-      baseDf.select("band", "band_key"),
-      graft.ops.IndexFs.committedGenerations(graft.ops.IndexFs.child(root, "bands_delta")))(
-      Tables.read(s, _).select("band", "band_key"),
-      Tables.readAll(s, _, Some(graft.ops.MinhashIndex.facadeFineSchema(baseDf.schema)))
-        .select("band", "band_key"))
-  }
-
-  /** Distinct batch ids whose band keys hit the stored postings under
-    * the FINE-UNION probe (r12, the streaming mirror of the batch
-    * `dedup_incremental`): cold buckets (< the index's recorded
-    * `hotSize`) hit on (band, band_key); hot buckets hit only on a
-    * full-signature sub_key match against the stored `bands_fine`
-    * side-table, so a template-family bucket can't flag every doc that
-    * grazes it. An index built before the fine table existed (no
-    * `hotSize` in its meta) degrades to the coarse raw probe for every
-    * bucket — old indexes keep their old semantics until rebuilt. */
-  private def fineUnionHits(indexBandsPath: String, batch: DataFrame,
-                            id: String, text: String,
-                            numHashes: Int, bands: Int): DataFrame = {
-    val s = batch.sparkSession
-    val root = graft.ops.IndexFs.parent(indexBandsPath)
-    // The band table feeds BOTH probe legs; an eager localCheckpoint
-    // materializes the micro-batch's tokenize+signature pipeline once
-    // instead of twice per batch (the same double-compute hazard the
-    // batch twin caches against), and its blocks are released when the
-    // batch's RDD is GC'd — no cross-batch persist leak.
-    val bt = graft.api.GraftAPI.minhashBandsWithSub(
-      batch, id, text, numHashes, bands).localCheckpoint()
-    // ONE base-table open per micro-batch (review r13): the frame feeds
-    // the resolver's base branch AND both declared-schema sibling reads.
-    val baseDf = Tables.read(s, indexBandsPath)
-    // Probe keys come from the RESOLVER, so appended postings flag the
-    // very next micro-batch's dups of them, compact or not (r13).
-    val post = resolvedFacadeKeys(s, indexBandsPath, baseDf)
-    (graft.ops.Artifacts.readMeta(root).get("hotSize") match {
-      case Some(hotSize) =>
-        // Hot/cold sizes on the RESOLVED keys: a bucket pushed over the
-        // threshold by appended postings probes fine (the append refreshes
-        // bands_fine — minhashIndexAppend's invariant — so its keys exist).
-        val coldKeys = post
-          .groupBy("band", "band_key").agg(count(lit(1)).as("sz"))
-          .filter(col("sz") < hotSize.toLong).select("band", "band_key")
-        val fineKeys = Tables.read(s, graft.ops.IndexFs.child(root, "bands_fine"),
-          Some(graft.ops.MinhashIndex.facadeFineSchema(baseDf.schema)))
-          .select("band", "band_key", "sub_key").distinct()
-        bt.join(coldKeys, Seq("band", "band_key"), "left_semi").select(id)
-          .union(bt.join(fineKeys, Seq("band", "band_key", "sub_key"),
-            "left_semi").select(id))
-      case None =>
-        bt.join(post.distinct(), Seq("band", "band_key"), "left_semi")
-          .select(id)
-    }).distinct()
-  }
+  /** (id, hit) per micro-batch document with a band row:
+    * [[graft.ops.DedupOps.fineProbeHits]] over the batch's own bands. */
+  private def probeHits(indexBandsPath: String, batch: DataFrame, id: String,
+                        text: String, numHashes: Int, bands: Int): DataFrame =
+    graft.ops.DedupOps.fineProbeHits(graft.ops.IndexFs.parent(indexBandsPath),
+        graft.api.GraftAPI.minhashBandsWithSub(batch, id, text, numHashes, bands)
+          .withColumnRenamed(id, "doc_id"))
+      .withColumnRenamed("doc_id", id)
 
   /** Streaming incremental-curation verdict against the STORED base
     * artifacts — the `foreachBatch` twin of the registry's
@@ -335,8 +272,8 @@ object StreamingOps {
     requireBanding(indexBandsPath, numHashes, bands)
     val baseFps = Tables.read(s, baseFpsPath)
       .select("fp").distinct().withColumn("seen", lit(true))
-    val nearHits = fineUnionHits(indexBandsPath, batch, id, text,
-      numHashes, bands).withColumn("near", lit(true))
+    val nearHits = probeHits(indexBandsPath, batch, id, text, numHashes, bands)
+      .withColumnRenamed("hit", "near")
     val contam = contaminatedIds(graft.api.GraftAPI.shingleRows(batch, id, text),
       id, Tables.read(s, evalShinglesPath).select("x").distinct())
     idempotentBatchWriter(outPath)(curationVerdicts(

@@ -33,42 +33,30 @@ object CrashingCommitProtocol {
   def arm(n: Int, after: Boolean): Unit = { commits.set(0); crashAt = n; afterCommit = after }
 }
 
-/** Every crash point of the IVF-PQ lifecycle ops, on the registry's
-  * base-slice fixture root (ROADMAP item 11, ANN half). For each of the
-  * facade's append, compact and delete, a session whose commit protocol
-  * fails the N-th job commit crashes the op at write step N, for N = 1,
-  * 2, … until the op runs through, both before and after the delegate
-  * commit. After every crash:
+/** The crash-point harness of the index lifecycle specs. For each of a
+  * family's facade lifecycle ops, a session whose commit protocol fails
+  * the N-th job commit crashes the op at write step N, for N = 1, 2, …
+  * until the op runs through, both before and after the delegate commit.
+  * After every crash:
   *   - each facade lifecycle op refuses the root with the rebuild remedy;
-  *   - `ensureBase` + `ensureDelta` rebuild it to the clean run's tables;
-  *   - `knn_ivf_pq_delta` returns its pre-crash rows. */
-class AnnLifecycleCrashSpec extends AnyFunSuite {
-  import org.apache.spark.sql.functions._
-  private lazy val spark = TestSpark.spark
+  *   - the fixture's `ensure*` entry points rebuild it to the clean run's
+  *     tables;
+  *   - the family's probe returns its pre-crash rows. */
+abstract class LifecycleCrashSuite[Ix] extends AnyFunSuite {
+  protected lazy val spark = TestSpark.spark
 
-  /** A fixture dir of its own (fresh index roots), the sf0.001 corpus. */
-  private lazy val dir = {
-    val d = java.nio.file.Files.createTempDirectory("graft_anncrash").toString
-    spark.read.parquet(s"${TestSpark.Sf0001}/embeddings.parquet")
-      .write.mode("overwrite").parquet(s"$d/embeddings.parquet")
-    d
-  }
-
-  private def ensured(): ops.IvfPqIndex.Ix = {
-    val ix = ops.IvfPqIndex.ensureBase(spark, dir)
-    ops.IvfPqIndex.ensureDelta(spark, dir, ix)
-    ix
-  }
-
+  /** The fixture root, built and with its delta ensured. */
+  protected def ensured(): Ix
+  protected def root(ix: Ix): String
   /** Sorted rows of every table the fixture root's probes read. */
-  private def tables(ix: ops.IvfPqIndex.Ix): Map[String, Seq[String]] =
-    Seq(ix.coarse, ix.cells, ix.pqCodebooks, ix.pqCodes, ix.ivfCodebooks, ix.ivfCodes)
-      .map(t => t -> spark.read.parquet(t).collect().map(_.toString).sorted.toSeq).toMap +
-      (ix.ivfCodesDelta -> spark.read.schema(ops.VectorOps.codesSchema)
-        .parquet(ix.ivfCodesDelta).collect().map(_.toString).sorted.toSeq)
-
-  private def probe(): Seq[String] =
-    ops.VectorOps.knnIvfPqDelta(spark, dir).collect().map(_.toString).toSeq
+  protected def tables(ix: Ix): Map[String, Seq[String]]
+  protected def probe(): Seq[String]
+  /** The facade lifecycle ops on the fixture root, through a session. */
+  protected def lifecycle: Seq[(String, (org.apache.spark.sql.SparkSession, Ix) => Unit)]
+  /** What every refusal of a crashed root names. */
+  protected def remedy: String
+  /** Picks the ops' inputs on the clean root, before any crash. */
+  protected def pick(): Unit = ()
 
   private lazy val (clean, probeClean) = { val ix = ensured(); (tables(ix), probe()) }
 
@@ -78,7 +66,79 @@ class AnnLifecycleCrashSpec extends AnyFunSuite {
     c
   }
 
-  /** The three facade lifecycle ops on the fixture root through `s`. */
+  private def committed(ix: Ix) = new java.io.File(root(ix), "_SUCCESS")
+
+  /** Crash `op` at every write step in both modes; returns its step count. */
+  protected def crashEverywhere(op: (org.apache.spark.sql.SparkSession, Ix) => Unit): Int = {
+    assert(clean.nonEmpty && probeClean.nonEmpty)
+    pick()
+    def runs(n: Int, after: Boolean): Boolean = {
+      val ix = ensured()
+      assert(tables(ix) == clean, "the fixture root must start clean")
+      CrashingCommitProtocol.arm(n, after)
+      val crashed =
+        try { op(crashing, ix); false }
+        catch {
+          case t: Throwable if Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+              .exists(c => String.valueOf(c.getMessage).contains(CrashingCommitProtocol.Crash)) => true
+        } finally CrashingCommitProtocol.arm(0, after = false)
+      if (crashed) {
+        val at = s"step $n${if (after) " after commit" else ""}"
+        assert(!committed(ix).isFile, s"$at: the root must read uncommitted")
+        lifecycle.foreach { case (name, refused) =>
+          val e = intercept[IllegalArgumentException](refused(spark, ix))
+          assert(e.getMessage.contains(remedy), s"$at, $name: ${e.getMessage}")
+        }
+        val rebuilt = ensured()
+        assert(committed(rebuilt).isFile, s"$at: the rebuild must commit")
+        assert(tables(rebuilt) == clean, s"$at: the rebuild must equal the clean run's tables")
+        assert(probe() == probeClean, s"$at: the probe must return its pre-crash rows")
+      }
+      else { // the op ran through: rebuild the root clean for the next case
+        assert(committed(ix).delete())
+        assert(tables(ensured()) == clean)
+      }
+      crashed
+    }
+    val steps = Iterator.from(1).takeWhile(n => runs(n, after = false)).size
+    (1 to steps).foreach(n => assert(runs(n, after = true), s"step $n must crash after commit too"))
+    steps
+  }
+}
+
+/** Every crash point of the IVF-PQ lifecycle ops ([[LifecycleCrashSuite]])
+  * on the registry's base-slice fixture root: the facade's append,
+  * compact and delete; the probe is `knn_ivf_pq_delta`. */
+class AnnLifecycleCrashSpec extends LifecycleCrashSuite[ops.IvfPqIndex.Ix] {
+  import org.apache.spark.sql.functions._
+
+  /** A fixture dir of its own (fresh index roots), the sf0.001 corpus. */
+  private lazy val dir = {
+    val d = java.nio.file.Files.createTempDirectory("graft_anncrash").toString
+    spark.read.parquet(s"${TestSpark.Sf0001}/embeddings.parquet")
+      .write.mode("overwrite").parquet(s"$d/embeddings.parquet")
+    d
+  }
+
+  protected def ensured(): ops.IvfPqIndex.Ix = {
+    val ix = ops.IvfPqIndex.ensureBase(spark, dir)
+    ops.IvfPqIndex.ensureDelta(spark, dir, ix)
+    ix
+  }
+
+  protected def root(ix: ops.IvfPqIndex.Ix): String = ix.root
+
+  protected def tables(ix: ops.IvfPqIndex.Ix): Map[String, Seq[String]] =
+    Seq(ix.coarse, ix.cells, ix.pqCodebooks, ix.pqCodes, ix.ivfCodebooks, ix.ivfCodes)
+      .map(t => t -> spark.read.parquet(t).collect().map(_.toString).sorted.toSeq).toMap +
+      (ix.ivfCodesDelta -> spark.read.schema(ops.VectorOps.codesSchema)
+        .parquet(ix.ivfCodesDelta).collect().map(_.toString).sorted.toSeq)
+
+  protected def probe(): Seq[String] =
+    ops.VectorOps.knnIvfPqDelta(spark, dir).collect().map(_.toString).toSeq
+
+  protected val remedy = "rebuild via buildAnnIndex"
+
   private def append(s: org.apache.spark.sql.SparkSession, ix: ops.IvfPqIndex.Ix): Unit =
     api.GraftAPI.annIndexAppend(s.read.parquet(s"$dir/embeddings.parquet")
       .filter(col("vec_id") % 10 === 7), "vec_id", "embedding", ix.root).collect()
@@ -95,49 +155,14 @@ class AnnLifecycleCrashSpec extends AnyFunSuite {
       spark.read.schema(ops.VectorOps.codesSchema).parquet(ix.ivfCodesDelta)
         .select("vec_id").orderBy("vec_id").limit(1).collect().map(_.getLong(0))
   }
+  override protected def pick(): Unit = assert(delIds.size == 2)
   private def delete(s: org.apache.spark.sql.SparkSession, ix: ops.IvfPqIndex.Ix): Unit = {
     val sq = s; import sq.implicits._
     api.GraftAPI.annIndexDelete(s, ix.ivfCodes, delIds.toDF("vec_id"), "vec_id")
   }
 
-  private val ops3 = Seq[(String, (org.apache.spark.sql.SparkSession, ops.IvfPqIndex.Ix) => Unit)](
+  protected val lifecycle = Seq[(String, (org.apache.spark.sql.SparkSession, ops.IvfPqIndex.Ix) => Unit)](
     "append" -> append, "compact" -> compact, "delete" -> delete)
-
-  /** Crash `op` at every write step in both modes; returns its step count. */
-  private def crashEverywhere(op: (org.apache.spark.sql.SparkSession, ops.IvfPqIndex.Ix) => Unit): Int = {
-    assert(clean.nonEmpty && probeClean.nonEmpty && delIds.size == 2) // picked on the clean root
-    def runs(n: Int, after: Boolean): Boolean = {
-      val ix = ensured()
-      assert(tables(ix) == clean, "the fixture root must start clean")
-      CrashingCommitProtocol.arm(n, after)
-      val crashed =
-        try { op(crashing, ix); false }
-        catch {
-          case t: Throwable if Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
-              .exists(c => String.valueOf(c.getMessage).contains(CrashingCommitProtocol.Crash)) => true
-        } finally CrashingCommitProtocol.arm(0, after = false)
-      if (crashed) {
-        val at = s"step $n${if (after) " after commit" else ""}"
-        assert(!new java.io.File(ix.root, "_SUCCESS").isFile, s"$at: the root must read uncommitted")
-        ops3.foreach { case (name, refused) =>
-          val e = intercept[IllegalArgumentException](refused(spark, ix))
-          assert(e.getMessage.contains("rebuild via buildAnnIndex"), s"$at, $name: ${e.getMessage}")
-        }
-        val rebuilt = ensured()
-        assert(new java.io.File(rebuilt.root, "_SUCCESS").isFile, s"$at: the rebuild must commit")
-        assert(tables(rebuilt) == clean, s"$at: the rebuild must equal the clean run's tables")
-        assert(probe() == probeClean, s"$at: knn_ivf_pq_delta must return its pre-crash rows")
-      }
-      else { // the op ran through: rebuild the root clean for the next case
-        assert(new java.io.File(ix.root, "_SUCCESS").delete())
-        assert(tables(ensured()) == clean)
-      }
-      crashed
-    }
-    val steps = Iterator.from(1).takeWhile(n => runs(n, after = false)).size
-    (1 to steps).foreach(n => assert(runs(n, after = true), s"step $n must crash after commit too"))
-    steps
-  }
 
   test("annIndexAppend: a crash at its one write step refuses, rebuilds clean and leaves the probe unchanged") {
     assert(crashEverywhere(append) == 1)

@@ -656,7 +656,7 @@ class ApiSpec extends AnyFunSuite {
     }
     assert(new java.io.File(root, "_SUCCESS").isFile)
     val stored = spark.read.parquet(s"$root/bands")
-      .select("_id", "band", "band_key").collect()
+      .select("doc_id", "band", "band_key").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).sorted
     val want = ops.DedupOps.dedupMinhash(spark, sf)
       .select("doc_id", "band", "band_key").collect()
@@ -680,7 +680,7 @@ class ApiSpec extends AnyFunSuite {
       numHashes = 8, bands = 2, batchWidth = 100).collect()
     val bands = s"$root/bands"
     val before = spark.read.parquet(bands)
-      .select("_id", "band", "band_key").collect()
+      .select("doc_id", "band", "band_key").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getString(2)))
     // batchWidth must not change the CONTENT vs the default layout
     val want = ops.DedupOps.dedupMinhash(spark, sf)
@@ -693,7 +693,7 @@ class ApiSpec extends AnyFunSuite {
     assert(delIds.nonEmpty)
     GraftAPI.minhashIndexDelete(spark, bands, delIds.toSeq.toDF("doc_id"), "doc_id")
     val after = spark.read.parquet(bands)
-      .select("_id", "band", "band_key").collect()
+      .select("doc_id", "band", "band_key").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getString(2)))
     assert(after.sorted.sameElements(
       before.filterNot(r => delIds.contains(r._1)).sorted),
@@ -730,7 +730,7 @@ class ApiSpec extends AnyFunSuite {
       famA.map(_._1).toDF("doc_id"), "doc_id")
     val fineLeft = spark.read.schema(ops.MinhashIndex.facadeFineSchema(
         spark.read.parquet(bands).schema))
-      .parquet(s"$root/bands_fine").select("_id").collect().map(_.getLong(0))
+      .parquet(s"$root/bands_fine").select("doc_id").collect().map(_.getLong(0))
     assert(!fineLeft.exists(famA.map(_._1).contains(_)),
       "bands_fine must not retain deleted documents' postings")
     assert(fineLeft.nonEmpty && famB.map(_._1).forall(fineLeft.contains),
@@ -769,7 +769,7 @@ class ApiSpec extends AnyFunSuite {
     // the family bucket is now hot (5 members) and must be fine-covered
     // for ALL members — including the base docs, via stored sub_keys
     val fine = spark.read.parquet(s"$root/bands_fine")
-      .select("_id").distinct().collect().map(_.getLong(0)).toSet
+      .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
     assert(Set(0L, 1L, 2L, 100L).subsetOf(fine),
       s"newly-hot bucket must be fine-covered for base AND delta members: $fine")
     // probe: an exact copy of the family must flag (full-signature match
@@ -817,19 +817,20 @@ class ApiSpec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("graft_mh_refuse").toString
     GraftAPI.writeMinhashIndex(base.toDF("doc_id", "text"), "doc_id", "text",
       root, numHashes = 8, bands = 2, batchWidth = 250).collect()
-    // Simulate a pre-r13 index: retire the sub_keys commit marker. The
-    // append must refuse BEFORE the root marker retirement — a rejected
-    // call leaves a valid index valid (the delete legs' discipline).
-    val subMarker = new java.io.File(s"$root/sub_keys", "_SUCCESS")
-    assert(subMarker.delete())
+    // Simulate a root an older build wrote: its manifest records no
+    // layout. The append must refuse with the rebuild remedy BEFORE the
+    // root marker retirement — a rejected call leaves a valid index
+    // valid (the delete legs' discipline).
+    val meta = ops.Artifacts.readMeta(root)
+    ops.Artifacts.writeMeta(root, (meta - "layout").toSeq: _*)
     val e = intercept[IllegalArgumentException](
       GraftAPI.minhashIndexAppend(spark, s"$root/bands",
         Seq((500L, "some text here")).toDF("doc_id", "text"),
         "doc_id", "text", batchId = 0L, numHashes = 8, bands = 2))
-    assert(e.getMessage.contains("sub_keys"), e.getMessage)
+    assert(e.getMessage.contains("rebuild via writeMinhashIndex"), e.getMessage)
     assert(new java.io.File(root, "_SUCCESS").isFile,
       "a refused append must leave the index committed")
-    assert(subMarker.createNewFile())
+    ops.Artifacts.writeMeta(root, meta.toSeq: _*)
     // An EMPTY batch commits a data-file-less delta generation; the
     // append itself, its manifest, and every later probe read the delta
     // set through declared schemas — no inference crash, no stuck index.
@@ -853,20 +854,6 @@ class ApiSpec extends AnyFunSuite {
     val flags = probe("/tmp/graft_mh_refuse_probe")
     assert(flags(400L) && !flags(402L),
       "the probe must serve base postings across an empty delta generation")
-    // a committed bands_compact sibling shadows every delta generation in
-    // the probe resolver — the append must refuse rather than commit
-    // rows no probe serves (review r13 round 2)
-    val compactDir = new java.io.File(root, "bands_compact")
-    assert(compactDir.mkdirs())
-    val cm = new java.io.File(compactDir, "_SUCCESS")
-    assert(cm.createNewFile())
-    val eShadow = intercept[IllegalArgumentException](
-      GraftAPI.minhashIndexAppend(spark, s"$root/bands",
-        Seq((700L, "shadowed text")).toDF("doc_id", "text"),
-        "doc_id", "text", batchId = 9L, numHashes = 8, bands = 2))
-    assert(eShadow.getMessage.contains("bands_compact"), eShadow.getMessage)
-    assert(new java.io.File(root, "_SUCCESS").isFile)
-    assert(cm.delete() && compactDir.delete())
     // an uncommitted (crashed) index refuses both append and compact
     assert(new java.io.File(root, "_SUCCESS").delete())
     val eCrash = intercept[IllegalArgumentException](
@@ -934,7 +921,7 @@ class ApiSpec extends AnyFunSuite {
     // appended rows carry the DERIVED ingest-batch axis: the takedown's
     // partition pruning works on them like build-time rows
     val pb = spark.read.parquet(s"$root/bands")
-      .filter(col("_id") === 500L).select("pbatch").distinct().collect()
+      .filter(col("doc_id") === 500L).select("pbatch").distinct().collect()
     assert(pb.length == 1 && pb.head.get(0).toString == "2",
       s"appended doc must gain pbatch = id div batchWidth, got ${pb.toSeq}")
     val post = probe("/tmp/graft_mh_cpt_post")
@@ -946,7 +933,7 @@ class ApiSpec extends AnyFunSuite {
     assert(!afterDel(801L), "takedown of a formerly-appended doc must stop its dups flagging")
     assert(afterDel(800L), "the surviving hot family must keep flagging")
     // replay of the same append AFTER a compact, then a second compact:
-    // the fold's distinct makes it idempotent — no doubled postings
+    // the append skips the already-indexed id — no doubled postings
     GraftAPI.minhashIndexAppend(spark, s"$root/bands",
       Seq((500L, fam)).toDF("doc_id", "text"), "doc_id", "text",
       batchId = 0L, numHashes = 8, bands = 2).collect()
@@ -956,12 +943,47 @@ class ApiSpec extends AnyFunSuite {
         "a replayed-then-compacted batch must not double postings")
     }
     assert(spark.read.parquet(s"$root/bands")
-      .filter(col("_id") === 500L).count() == 2L,
+      .filter(col("doc_id") === 500L).count() == 2L,
       "the replayed doc folds back to one posting per band")
     // compact with no deltas = manifest only, marker untouched
     val manifest3 = GraftAPI.minhashIndexCompact(spark, s"$root/bands").collect()
     assert(manifest3.map(_.toString).sorted.sameElements(
       manifest2.map(_.toString).sorted))
+  }
+
+  test("minhashIndexAppend skips ids the base already holds: a batch replayed after a compact adds no rows and changes no flag or bucket size") {
+    val sq = spark; import sq.implicits._
+    val fam = (1 to 40).map(i => s"rptok$i").mkString(" ")
+    val base = (0L to 2L).map(id => (id, fam)) ++
+      (10L to 30L).map(id => (id, (1 to 40).map(i => s"rp${id}w$i").mkString(" ")))
+    val batch = Seq((300L, fam), (301L, (1 to 40).map(i => s"rpnew$i").mkString(" ")))
+      .toDF("doc_id", "text")
+    val root = java.nio.file.Files.createTempDirectory("graft_mh_replay").toString
+    val bands = s"$root/bands"
+    GraftAPI.writeMinhashIndex(base.toDF("doc_id", "text"), "doc_id", "text",
+      root, numHashes = 8, bands = 2, batchWidth = 250).collect()
+    def append() = GraftAPI.minhashIndexAppend(spark, bands, batch, "doc_id", "text",
+      batchId = 1L, numHashes = 8, bands = 2).collect()
+    assert(append().map(_.getAs[Long]("n_new")).sum == 4L, "2 bands per appended doc")
+    GraftAPI.minhashIndexCompact(spark, bands).collect()
+    def probe(out: String): Map[Long, Boolean] = {
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+      graft.streaming.StreamingOps.dedupBatchAgainstIndex(bands, out, "doc_id", "text",
+        numHashes = 8, bands = 2)(Seq((900L, fam), (901L, "rp fresh words only here"),
+        (902L, (1 to 40).map(i => s"rpnew$i").mkString(" "))).toDF("doc_id", "text"), 0L)
+      spark.read.parquet(out).collect()
+        .map(r => r.getAs[Long]("doc_id") -> r.getAs[Boolean]("is_dup")).toMap
+    }
+    def skew() = GraftAPI.minhashIndexSkew(
+        ops.MinhashIndex.resolvedPostings(spark, ops.MinhashIndex.Ix(root)))
+      .orderBy("band").collect().map(_.toString).toSeq
+    val (flags, sizes) = (probe("/tmp/graft_mh_replay_pre"), skew())
+    assert(flags(900L) && flags(902L) && !flags(901L))
+    val replay = append()
+    assert(replay.map(_.getAs[Long]("n_new")).sum == 0L,
+      s"a replay after the compact must add no rows: ${replay.toSeq}")
+    assert(probe("/tmp/graft_mh_replay_post") == flags, "the replay changed a probe flag")
+    assert(skew() == sizes, "the replay changed a bucket size")
   }
 
   test("an append generation without its commit marker is invisible: the probe skips it and the compact folds only committed batches") {
@@ -994,39 +1016,8 @@ class ApiSpec extends AnyFunSuite {
       assert(r.getAs[Long]("n_postings") == base.size + batch1.size,
         s"the compact must fold base + batch 1 only: $r")
     }
-    assert(spark.read.parquet(s"$root/bands").filter($"_id" === 302L).isEmpty,
+    assert(spark.read.parquet(s"$root/bands").filter($"doc_id" === 302L).isEmpty,
       "the uncommitted generation must not be folded")
-  }
-
-  test("minhashIndexDelete refuses while a committed bands_compact sibling exists (review r13)") {
-    import org.apache.spark.sql.functions._
-    val sq = spark; import sq.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_mhdel_cpt").toString
-    GraftAPI.writeMinhashIndex(docs, "doc_id", "text", root,
-      numHashes = 8, bands = 2, batchWidth = 100).collect()
-    // a committed compact sibling is what the probe resolver serves
-    // FIRST — a takedown that rewrote only bands would leave deleted
-    // documents served out of it, so the call must refuse loudly and
-    // leave the index committed
-    val compactDir = new java.io.File(root, "bands_compact")
-    assert(compactDir.mkdirs())
-    val compactMarker = new java.io.File(compactDir, "_SUCCESS")
-    assert(compactMarker.createNewFile())
-    val someId = spark.read.parquet(s"$root/bands").select("_id")
-      .filter(col("_id") >= 100 && col("_id") < 200)
-      .distinct().limit(1).collect().head.getLong(0)
-    val e = intercept[IllegalArgumentException](
-      GraftAPI.minhashIndexDelete(spark, s"$root/bands",
-        Seq(someId).toDF("doc_id"), "doc_id"))
-    assert(e.getMessage.contains("bands_compact"), e.getMessage)
-    assert(new java.io.File(root, "_SUCCESS").isFile,
-      "a refused takedown must leave the index committed")
-    // retiring the sibling unblocks the takedown
-    assert(compactMarker.delete())
-    GraftAPI.minhashIndexDelete(spark, s"$root/bands",
-      Seq(someId).toDF("doc_id"), "doc_id")
-    assert(!spark.read.parquet(s"$root/bands")
-      .filter(col("_id") === someId).collect().nonEmpty)
   }
 
   test("annIndexDelete rewrites the committed delta sibling and cells so probes stop serving deleted vectors (review r13)") {
@@ -1264,7 +1255,7 @@ class ApiSpec extends AnyFunSuite {
     // successful delete: the marker is retired during the rewrite and
     // recommitted after it (ADVICE r9 — 'marker commits last' holds for
     // in-place deletes too)
-    val ids = spark.read.parquet(bands).select("_id").distinct()
+    val ids = spark.read.parquet(bands).select("doc_id").distinct()
       .collect().map(_.getLong(0)).sorted
     GraftAPI.minhashIndexDelete(spark, bands,
       Seq(ids.find(i => i >= 100 && i < 200).get).toDF("doc_id"), "doc_id")
@@ -1274,7 +1265,7 @@ class ApiSpec extends AnyFunSuite {
     // a reader/rebuilder sees an uncommitted index rather than trusting a
     // table a failed mutation may have touched
     val batch0 = spark.read.parquet(bands)
-      .filter(col("pbatch") === 0).select(col("_id")).distinct()
+      .filter(col("pbatch") === 0).select(col("doc_id")).distinct()
       .collect().map(_.getLong(0))
     assert(batch0.nonEmpty)
     intercept[IllegalArgumentException](
@@ -1296,17 +1287,6 @@ class ApiSpec extends AnyFunSuite {
     assert(e.getMessage.contains("batchWidth"), e.getMessage)
     assert(new java.io.File(root2, "_SUCCESS").isFile,
       "a rejected delete must leave the index committed")
-    // same refusal for a REGISTRY-built index, where the batchWidth meta
-    // key is simply ABSENT (review r10: the guard must not silently
-    // no-op into the opaque missing-pbatch AnalysisException — the
-    // stored schema is the ground truth)
-    val ix = ops.MinhashIndex.ensure(spark, sf)
-    val e2 = intercept[IllegalArgumentException](
-      GraftAPI.minhashIndexDelete(spark, ix.bands,
-        Seq(0L).toDF("doc_id"), "doc_id"))
-    assert(e2.getMessage.contains("batchWidth"), e2.getMessage)
-    assert(new java.io.File(ix.root, "_SUCCESS").isFile,
-      "a rejected delete on a registry index must leave its marker intact")
   }
 
   test("crash window mid-delete: a restarted minhash ensure rebuilds, never serves the half-rewritten table") {

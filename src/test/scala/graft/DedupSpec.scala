@@ -289,7 +289,7 @@ class DedupSpec extends AnyFunSuite {
       assert(after(p).keySet.intersect(before(p).keySet).isEmpty, s"$p kept stale files"))
     // content: exactly the anti-join survivors, nothing lost or duplicated
     val got = spark.read.parquet(live).drop("pband", "pbatch")
-    val want = spark.read.parquet(ix.bands).drop("pband")
+    val want = spark.read.parquet(ix.bands).drop("pband", "pbatch")
       .filter(!col("doc_id").isin(delIds.toSeq: _*))
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
       "post-delete content must be the exact survivor multiset")
@@ -387,8 +387,7 @@ class DedupSpec extends AnyFunSuite {
     val rawBuckets = raw.groupBy(r => (r._2, r._3)).values.map(_.map(_._1).sorted.toSeq)
     val hotKeys = raw.groupBy(r => (r._2, r._3)).collect {
       case (k, rows) if rows.length >= 4 => k }.toSet
-    val ixRoot = ops.Artifacts.root("mhix_v1", dir, "documents.parquet")
-    val fine = spark.read.parquet(s"$ixRoot/bands_fine")
+    val fine = spark.read.parquet(ops.MinhashIndex.ensure(spark, dir).fine)
       .select("doc_id", "band", "band_key", "sub_key").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getString(3)))
     def pairsOf(ids: Seq[Long]): Set[(Long, Long)] =
@@ -477,11 +476,9 @@ class DedupSpec extends AnyFunSuite {
     val buckets = raw.groupBy(r => (r._2, r._3))
     val rawCands = buckets.values.map(_.map(_._1).sorted.toSeq)
       .flatMap(pairsOf).toSet.filter(lenOk)
-    // the fine model needs sub keys for hot docs: the committed
-    // bands_fine side-table is exactly that (run the reband to write it)
-    DedupOps.dedupIndexReband(spark, dir).count()
-    val ixRoot = ops.Artifacts.root("mhix_v1", dir, "documents.parquet")
-    val fineRows = spark.read.parquet(s"$ixRoot/bands_fine")
+    // the fine model needs sub keys for hot docs: the full-corpus
+    // root's bands_fine table is exactly that
+    val fineRows = spark.read.parquet(ops.MinhashIndex.ensure(spark, dir).fine)
       .select("doc_id", "band", "band_key", "sub_key").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getString(3)))
     val modelFine = (
@@ -526,15 +523,15 @@ class DedupSpec extends AnyFunSuite {
     assert(curNear == inc,
       "curation_incremental and dedup_incremental must agree on near-dups")
 
-    // --- 4. crash window on the bands_fine seam (the r11 marker-seam
-    // pattern): _fine_SUCCESS gone + one partition missing must read as
-    // "no fine table" and the next probe must rebuild to pristine
-    // content, never serve the partial side-table.
-    val baseRoot = ops.Artifacts.root("mhix_v2_base", dir, "documents.parquet").toString
+    // --- 4. crash window on the base root (the r11 marker-seam
+    // pattern): the root marker gone + one bands_fine partition missing
+    // must read as an uncommitted index, and the next probe must rebuild
+    // to pristine content, never serve the partial fine table.
+    val baseRoot = ops.MinhashIndex.ensureBase(spark, dir).root
     val pristineFine = spark.read.parquet(s"$baseRoot/bands_fine")
       .collect().map(_.toString).sorted
     assert(pristineFine.nonEmpty)
-    assert(new java.io.File(baseRoot, "_fine_SUCCESS").delete())
+    assert(new java.io.File(baseRoot, "_SUCCESS").delete())
     val parts = new java.io.File(s"$baseRoot/bands_fine").listFiles()
       .filter(_.getName.startsWith("pband="))
     assert(parts.nonEmpty)
@@ -543,8 +540,8 @@ class DedupSpec extends AnyFunSuite {
       .map(r => r.getLong(0) -> r.getBoolean(1)).toMap
     assert(inc2 == inc,
       "a post-crash probe must rebuild bands_fine, not serve the partial table")
-    assert(new java.io.File(baseRoot, "_fine_SUCCESS").isFile,
-      "the rebuild must recommit the fine marker")
+    assert(new java.io.File(baseRoot, "_SUCCESS").isFile,
+      "the rebuild must recommit the root marker")
     val rebuiltFine = spark.read.parquet(s"$baseRoot/bands_fine")
       .collect().map(_.toString).sorted
     assert(rebuiltFine.sameElements(pristineFine),
@@ -590,15 +587,21 @@ class DedupSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getBoolean(1))).toSeq.sorted
     assert(inc2 == inc1, "flags must be byte-identical before/after compact")
 
-    // 3. ...and genuinely SERVED FROM the compact: with the delta table
-    // gone entirely, the committed compact must still carry the appended
-    // doc's postings to the probe.
+    // 3. the maintenance remedy's in-place fold on the base root itself:
+    // the appended doc's postings move into `bands`, the re-ensured delta
+    // comes back empty, and both probes still flag 460 — via_delta
+    // included, since the base-only leg reads base doc ids.
     val ix = ops.MinhashIndex.ensureBase(spark, dir)
-    ops.Artifacts.rmrf(new java.io.File(ix.delta))
-    assert(!new java.io.File(ix.delta).exists())
+    api.GraftAPI.minhashIndexCompact(spark, ix.bands).collect()
+    assert(spark.read.parquet(ix.bands).filter(col("doc_id") === 410L).count() > 0,
+      "the fold must move the appended doc into bands")
     val inc3 = DedupOps.dedupIncremental(spark, dir).collect()
       .map(r => (r.getLong(0), r.getBoolean(1))).toSeq.sorted
-    assert(inc3 == inc1,
-      "a committed compact must serve the probe on its own (the catalog swap)")
+    assert(inc3 == inc1, "flags must be byte-identical after the in-place fold")
+    assert(ops.MinhashIndex.deltaRows(spark, ix).count() == 0L,
+      "after the fold the re-ensured delta must hold no rows")
+    val vs3 = DedupOps.dedupIncrementalVsdelta(spark, dir).collect()
+      .map(r => (r.getLong(0), r.getBoolean(1), r.getBoolean(2))).toSeq.sorted
+    assert(vs3 == vs, s"the fold must not change the delta attribution: $vs3")
   }
 }

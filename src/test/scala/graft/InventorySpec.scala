@@ -192,6 +192,25 @@ class InventorySpec extends AnyFunSuite {
     assert(sibling.isEmpty, s"the IVF-PQ compact sibling is gone, yet spelled in: $sibling")
   }
 
+  test("one MinHash lifecycle: the delta path only in MinhashIndex, no compact sibling, live copy or fine marker") {
+    def names(files: Seq[String]) =
+      files.map(java.nio.file.Paths.get(_).getFileName.toString).distinct.sorted
+    val gone = Seq("bands_compact", "bands_live", "_fine_SUCCESS")
+    // the detector itself: a path literal in code is caught, one in a
+    // comment is not; the retired names are caught in comments too
+    val controls = Seq(
+      "A.scala" -> codeOnly("spark.read.parquet(s\"$root/bands_delta\")"),
+      "B.scala" -> codeOnly("/** s\"$r/bands_delta\" */\n// bands_delta\nval z = 1"))
+    assert(filesWith("bands_delta", controls) == Seq("A.scala"))
+    assert(gone.map(g => filesWith(g, Seq("C.scala" -> s"// was $g"))) ==
+      gone.map(_ => Seq("C.scala")))
+    assert(names(filesWith("bands_delta", mainSources)) == Seq("MinhashIndex.scala"),
+      "callers must take the delta path from MinhashIndex.Ix")
+    val retired = gone.flatMap(g =>
+      filesWith(g, sourcesUnder("src/main/scala", comments = true)).map(f => s"$f spells $g"))
+    assert(retired.isEmpty, s"the retired MinHash layouts are gone, yet: $retired")
+  }
+
   test("GraftSession holds the only SparkSession builder under src/main and src/test") {
     // spelled in parts: this file is scanned too
     val builderCall = Seq("SparkSession", "builder").mkString(".")

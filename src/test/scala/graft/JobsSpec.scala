@@ -125,9 +125,8 @@ class JobsSpec extends AnyFunSuite {
       posture(mhAll, mhTouched, ops.DedupOps.RebandHotSize)
     assert(maint("minhash")._1 == mhHot && maint("minhash")._2 == mhMax)
     val fineCov =
-      if (new java.io.File(mhIx.root, "_fine_SUCCESS").isFile)
-        spark.read.schema(ops.DedupOps.fineSchema)
-          .parquet(s"${mhIx.root}/bands_fine").select("band", "band_key")
+      if (new java.io.File(mhIx.root, "_SUCCESS").isFile)
+        ops.MinhashIndex.fineRows(spark, mhIx).select("band", "band_key")
           .collect().map(r => s"${r.getInt(0)}|${r.getString(1)}").toSet
       else Set.empty[String]
     assert(maint("minhash")._3 ==

@@ -75,12 +75,18 @@ class Round8OpsSpec extends AnyFunSuite {
     }.toSeq.sortBy(_._1)
     assert(got.nonEmpty && got.toSeq == want,
       "base ∪ delta must reproduce the banding of docs < AppendCutoff exactly")
-    val ix = graft.ops.MinhashIndex.ensureBase(spark, sf)
-    new java.io.File(ix.compact).listFiles()
-      .filter(_.getName.startsWith("pband=")).foreach { d =>
-        assert(d.listFiles().count(_.getName.endsWith(".parquet")) == 1,
-          s"${d.getName}: expected exactly one file after compaction")
-      }
+    // the fold ran in place on the key's own copy of the base root, one
+    // file per (band, ingest batch) directory
+    val copy = graft.ops.MinhashIndex.Ix(
+      graft.ops.Artifacts.root("mhix_v3_compact", sf, "documents.parquet"))
+    assert(!new java.io.File(copy.delta).exists(), "the fold must remove the folded generations")
+    val dirs = new java.io.File(copy.bands).listFiles().filter(_.getName.startsWith("pband="))
+      .flatMap(_.listFiles().filter(_.getName.startsWith("pbatch=")))
+    assert(dirs.nonEmpty)
+    dirs.foreach { d =>
+      assert(d.listFiles().count(_.getName.endsWith(".parquet")) == 1,
+        s"${d.getParentFile.getName}/${d.getName}: expected exactly one file after compaction")
+    }
   }
 
   test("dedup_incremental (stored index) == the in-memory formulation") {

@@ -212,21 +212,39 @@ class VectorSpec extends AnyFunSuite {
   }
 
   test("ann_index_compact and ann_index_delete leave the shared fixture roots pristine; ann_index_append still reports its batch") {
+    /** One family: its in-place keys leave every table stamp under the
+      * shared `roots` unchanged, and its append key still returns the
+      * rows it returned before them. */
+    def pristine(roots: Seq[String], tables: Seq[String],
+                 mutating: Seq[() => org.apache.spark.sql.DataFrame],
+                 append: () => org.apache.spark.sql.DataFrame): Unit = {
+      val reference = append().collect().map(_.toString).sorted.toSeq
+      assert(reference.nonEmpty)
+      def stamps(): Map[String, Option[Long]] = roots.flatMap(root =>
+        new java.io.File(root).listFiles().map(f => f.getPath -> ops.IndexFs.shallowStamp(f.getPath))).toMap
+      val before = stamps()
+      tables.foreach(t => assert(before.contains(t), s"$t missing from the stamped set"))
+      mutating.foreach(_().collect())
+      assert(stamps() == before, "a mutating key touched a shared fixture root")
+      assert(append().collect().map(_.toString).sorted.toSeq == reference,
+        "the append key must still report its batch as new")
+    }
     val full = ops.IvfPqIndex.ensure(spark, sf)
     val base = ops.IvfPqIndex.ensureBase(spark, sf)
     ops.IvfPqIndex.ensureDelta(spark, sf, base)
-    val reference = VectorOps.annIndexAppend(spark, sf).collect().map(_.toString).sorted.toSeq
-    assert(reference.nonEmpty)
-    def stamps(): Map[String, Option[Long]] = Seq(full.root, base.root).flatMap(root =>
-      new java.io.File(root).listFiles().map(f => f.getPath -> ops.IndexFs.shallowStamp(f.getPath))).toMap
-    val before = stamps()
-    Seq(base.ivfCodes, base.cells, base.ivfCodesDelta, full.ivfCodes, full.cells)
-      .foreach(t => assert(before.contains(t), s"$t missing from the stamped set"))
-    VectorOps.annIndexCompact(spark, sf).collect()
-    VectorOps.annIndexDelete(spark, sf).collect()
-    assert(stamps() == before, "a mutating key touched a shared fixture root")
-    assert(VectorOps.annIndexAppend(spark, sf).collect().map(_.toString).sorted.toSeq == reference,
-      "ann_index_append must still report the held-out batch as new")
+    pristine(Seq(full.root, base.root),
+      Seq(base.ivfCodes, base.cells, base.ivfCodesDelta, full.ivfCodes, full.cells),
+      Seq(() => VectorOps.annIndexCompact(spark, sf), () => VectorOps.annIndexDelete(spark, sf)),
+      () => VectorOps.annIndexAppend(spark, sf))
+    val mhFull = ops.MinhashIndex.ensure(spark, sf)
+    val mhBase = ops.MinhashIndex.ensureBase(spark, sf)
+    ops.MinhashIndex.ensureDelta(spark, sf, mhBase)
+    pristine(Seq(mhFull.root, mhBase.root),
+      Seq(mhBase.bands, mhBase.delta, mhBase.fine, mhBase.subKeys,
+        mhFull.bands, mhFull.fine, mhFull.subKeys),
+      Seq(() => ops.DedupOps.dedupIndexCompact(spark, sf),
+        () => ops.DedupOps.dedupIndexDelete(spark, sf)),
+      () => ops.DedupOps.dedupIndexAppend(spark, sf))
   }
 
   test("PQ shortlist+rerank recalls the exact-L2 top-10 well above chance (L3g)") {
