@@ -168,7 +168,7 @@ object ChaosCheck {
         java.nio.file.Paths.get(s"$dir/documents.parquet"),
         java.nio.file.Paths.get(s"$dir2/documents.parquet"))
       val t0 = System.nanoTime()
-      ops.DedupOps.queries("build_minhash_index")(spark, dir2).collect()
+      SparkEntry.queries("build_minhash_index")(spark, dir2).collect()
       val cleanMs = (System.nanoTime() - t0) / 1000000L
       val want = Tables.read(spark, ops.MinhashIndex.ensure(spark, dir2).bands)
         .select("doc_id", "band", "band_key")
@@ -176,7 +176,7 @@ object ChaosCheck {
       awaitExecutors(2)
       armWindow()
       val t1 = System.nanoTime()
-      ops.DedupOps.queries("build_minhash_index")(spark, dir).collect()
+      SparkEntry.queries("build_minhash_index")(spark, dir).collect()
       val chaosMs = (System.nanoTime() - t1) / 1000000L
       val ix = ops.MinhashIndex.ensure(spark, dir)
       val got = Tables.read(spark, ix.bands)
@@ -219,7 +219,7 @@ object ChaosCheck {
       val streamed = Tables.read(spark, out)
         .select("doc_id", "is_dup").collect()
         .map(r => r.getLong(0) -> r.getBoolean(1)).sorted
-      val wantFlags = ops.DedupOps.queries("dedup_incremental")(spark, dir)
+      val wantFlags = SparkEntry.queries("dedup_incremental")(spark, dir)
         .collect().map(r => r.getLong(0) -> r.getBoolean(1)).sorted
       val pristine = streamed.length == batchDocs.map(_.doc_id).distinct.size &&
         streamed.sameElements(wantFlags)
@@ -231,12 +231,12 @@ object ChaosCheck {
     {
       awaitExecutors(2)
       val t0 = System.nanoTime()
-      val want = ops.PipelineOps.queries("sample_per_group")(spark, dir)
+      val want = SparkEntry.queries("sample_per_group")(spark, dir)
         .collect().map(_.toString)
       val cleanMs = (System.nanoTime() - t0) / 1000000L
       armWindow()
       val t1 = System.nanoTime()
-      val got = ops.PipelineOps.queries("sample_per_group")(spark, dir)
+      val got = SparkEntry.queries("sample_per_group")(spark, dir)
         .collect().map(_.toString)
       val chaosMs = (System.nanoTime() - t1) / 1000000L
       val pristine = got.sameElements(want)

@@ -15,11 +15,15 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     ops.Relational.aggGroup(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each call
+    * opens one cache generation ([[ops.CacheLifecycle]]), which retires
+    * the frames the previous call pinned. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    ops.Relational.queries ++ ops.EventOps.queries ++ ops.TextOps.queries ++
+    (ops.Relational.queries ++ ops.EventOps.queries ++ ops.TextOps.queries ++
       ops.DedupOps.queries ++ ops.VectorOps.queries ++ ops.BooksOps.queries ++
-      ops.MultimodalOps.queries ++ ops.PipelineOps.queries
+      ops.MultimodalOps.queries ++ ops.PipelineOps.queries).map { case (k, fn) =>
+      k -> ((s: SparkSession, d: String) => ops.CacheLifecycle.generation(fn(s, d)))
+    }
 
   /** For each key in `queries`, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops → driver

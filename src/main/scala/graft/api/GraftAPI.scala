@@ -1,6 +1,7 @@
 package graft.api
 
 import graft.Tables
+import graft.ops.CacheLifecycle
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -385,9 +386,10 @@ object GraftAPI {
     * its own committed delta generation `batch=<batchId>` of the index's
     * delta table, so a replay of the same `batchId` is an idempotent
     * overwrite (the foreachBatch replay contract). Documents whose id
-    * `bands` already holds are SKIPPED (already indexed — this is what
-    * makes a replay AFTER [[minhashIndexCompact]] a clean no-op instead
-    * of counting the document twice in every bucket size). The probes
+    * `bands` or another committed generation already holds are SKIPPED
+    * (already indexed — this is what makes a replay after
+    * [[minhashIndexCompact]], or under a second batch id, a clean no-op
+    * instead of counting the document twice in every bucket size). The probes
     * ([[graft.ops.DedupOps.fineProbeHits]]) read `bands` ∪ the committed
     * generations, so a document appended today flags the very next
     * probe's dups of it — no compact required.
@@ -401,7 +403,8 @@ object GraftAPI {
     * append. The whole append runs under the retired root marker
     * ([[graft.ops.IndexFs.mutate]]): a crash mid-append reads as an
     * uncommitted index. Returns the per-band manifest (band, n_base,
-    * n_new) over `bands` and every committed generation. */
+    * n_new): n_new counts this batch's generation, n_base the postings
+    * indexed before it (`bands` and every other committed generation). */
   def minhashIndexAppend(spark: SparkSession, bandsPath: String,
                          batch: DataFrame, id: String, text: String,
                          batchId: Long, numHashes: Int = 128,
@@ -413,23 +416,32 @@ object GraftAPI {
     Artifacts.requireGeometry(ix.root,
       "numHashes" -> numHashes.toString, "bands" -> bands.toString)
     val hotSize = MinhashIndex.checkedMeta(ix.root, "before appending")("hotSize").toLong
+    // The postings indexed before this batch: `bands` and every OTHER
+    // committed generation (a replay of `batchId` overwrites its own).
+    val others = IndexFs.committedGenerations(ix.delta)
+      .filterNot(_.endsWith(s"/batch=$batchId"))
+    val prior = Tables.read(spark, ix.bands).select("doc_id", "band")
+    val held = if (others.isEmpty) prior
+      else prior.unionByName(
+        MinhashIndex.generationRows(spark, ix, others).select("doc_id", "band"))
     val banded = minhashBandsWithSub(
-        batch.join(Tables.read(spark, ix.bands).select(col("doc_id").as(id)), Seq(id), "left_anti"),
+        batch.join(held.select(col("doc_id").as(id)), Seq(id), "left_anti"),
         id, text, numHashes, bands)
       .withColumnRenamed(id, "doc_id")
       .withColumn("pband", col("band"))
-    val delta = IndexFs.mutate(ix.root) {
+    val fresh = IndexFs.mutate(ix.root) {
       banded.repartition(col("pband"))
         .write.mode("overwrite").partitionBy("pband").parquet(ix.generation(batchId))
       val delta = MinhashIndex.deltaRows(spark, ix)
       MinhashIndex.writeFine(fineOf(MinhashIndex.resolvedPostings(spark, ix),
         Tables.read(spark, ix.subKeys).unionByName(delta.select("doc_id", "sub_key")), hotSize), ix)
-      delta
+      if (others.isEmpty) delta
+      else MinhashIndex.generationRows(spark, ix, Seq(ix.generation(batchId)))
     }
     // One aggregate over both sides' rows: every band of either side gets
     // a row.
-    Tables.read(spark, ix.bands).select(col("band"), lit(true).as("in_base"))
-      .unionByName(delta.select(col("band"), lit(false).as("in_base")))
+    held.select(col("band"), lit(true).as("in_base"))
+      .unionByName(fresh.select(col("band"), lit(false).as("in_base")))
       .groupBy("band")
       .agg(count_if(col("in_base")).as("n_base"), count_if(!col("in_base")).as("n_new"))
       .orderBy("band")
@@ -812,7 +824,10 @@ object GraftAPI {
   }
 
   /** Per-vector L2 normalization of an array<float|double> column (HOF
-    * arithmetic, zero shuffle; norm-0 vectors pass through unchanged). */
+    * arithmetic, zero shuffle): adds `l2_norm` and replaces `vec` with
+    * the unit vector. Zero-norm contract: a zero vector passes through
+    * unchanged (no division by its zero norm). Registry binding:
+    * `embed_normalize`. */
   def l2Normalize(df: DataFrame, vec: String): DataFrame = {
     val v = col(vec).cast("array<double>")
     val norm = sqrt(aggregate(v, lit(0.0), (acc, x) => acc + x * x))
@@ -1212,56 +1227,15 @@ object GraftAPI {
   def pqEncode(df: DataFrame, id: String, vec: String,
                m: Int = 8, k: Int = 16, iters: Int = 2): DataFrame = {
     require(m > 0 && k > 0 && iters > 0, s"m/k/iters must be positive: $m/$k/$iters")
-    val gen = beginPins() // retire completed prior encodes' cached frames
-    try {
+    CacheLifecycle.generation {
       val e = df.select(col(id).as("vec_id"), col(vec).cast("array<double>").as("x"))
-      // The one PQ recipe, every stage pinned ([[pinned]]): the Lloyd
-      // fold's and the assignment's many plan references read cached
-      // blocks instead of re-running the upstream scan per reference.
+      // The one PQ recipe, every stage pinned eagerly: the Lloyd fold's
+      // and the assignment's many plan references read cached blocks
+      // instead of re-running the upstream subtree per reference.
       graft.ops.VectorOps.codeArrays(graft.ops.VectorOps.trainPq(e, m,
-          validatedDim(e, vec, m) / m, k, iters, (_, st) => pinned(gen, st)))
+          validatedDim(e, vec, m) / m, k, iters, (_, st) => CacheLifecycle.pinEager(st)))
         .select(col("vec_id").as(id), col("code"))
-    } finally endPins(gen)
-  }
-
-  /** Eagerly-materialized persist for the encoders' shared frames: the
-    * Lloyd training folds and the final assignment reference these
-    * frames many times in one plan, and without a cache every reference
-    * re-executes the upstream subtree (the multi-consumer recompute
-    * class the ops twins pin with their generation-managed caches).
-    * Generationally retired like VectorOps' cacheEager (review r7):
-    * each encoder call opens a CALL-LOCAL generation via [[beginPins]]
-    * and hands it back via [[endPins]] when the call exits; the next
-    * call's beginPins retires every generation whose owning call has
-    * ENDED. A driver looping encode jobs therefore holds at most one
-    * completed call's blocks — and, unlike the old shared-buffer form
-    * (ADVICE r10), a concurrent encoder can never unpersist an in-flight
-    * call's pins mid-materialization (which was silent full recompute:
-    * correct results, uncached cost). */
-  private val retireablePins =
-    scala.collection.mutable.Queue.empty[scala.collection.mutable.ArrayBuffer[DataFrame]]
-
-  // CacheLifecycle.retire, not raw unpersist (review r10): a generation
-  // pinned by a now-stopped SparkSession must not fail the replacement
-  // session's first encode with the dead context's block-manager RPC.
-  private def beginPins(): scala.collection.mutable.ArrayBuffer[DataFrame] =
-    synchronized {
-      while (retireablePins.nonEmpty)
-        graft.ops.CacheLifecycle.retire(retireablePins.dequeue())
-      scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     }
-
-  private def endPins(
-      gen: scala.collection.mutable.ArrayBuffer[DataFrame]): Unit =
-    synchronized { retireablePins.enqueue(gen); () }
-
-  // The generation buffer is call-local, so registration needs no lock
-  // and the eager count (a full Spark job) blocks nobody.
-  private def pinned(gen: scala.collection.mutable.ArrayBuffer[DataFrame],
-                     df: DataFrame): DataFrame = {
-    gen += df
-    df.persist()
-    df.count(); df
   }
 
   /** [[graft.ops.VectorOps.checkedDim]] for the encoders, which infer
@@ -1293,18 +1267,18 @@ object GraftAPI {
                   iters: Int = 2): DataFrame = {
     require(cells > 0 && m > 0 && k > 0 && iters > 0,
       s"cells/m/k/iters must be positive: $cells/$m/$k/$iters")
-    val gen = beginPins() // retire completed prior encodes' cached frames
-    try {
+    CacheLifecycle.generation {
       val e = df.select(col(id).as("vec_id"), col(vec).cast("array<double>").as("x"))
-      // The one IVF-PQ recipe, every stage pinned (review r7): coarse
-      // feeds the assignment AND the residual broadcast, the assignment
-      // feeds the residual build, the residual long form feeds the Lloyd
-      // fold and the code assignment — unpinned, each plan reference
-      // would re-run the full coarse training subtree.
+      // The one IVF-PQ recipe, every stage pinned eagerly (review r7):
+      // coarse feeds the assignment AND the residual broadcast, the
+      // assignment feeds the residual build, the residual long form feeds
+      // the Lloyd fold and the code assignment — unpinned, each plan
+      // reference would re-run the full coarse training subtree.
       graft.ops.VectorOps.codeArrays(graft.ops.VectorOps.trainIvfPq(e, cells, m,
-          validatedDim(e, vec, m) / m, k, iters, (_, st) => pinned(gen, st)), "cell")
+          validatedDim(e, vec, m) / m, k, iters, (_, st) => CacheLifecycle.pinEager(st)),
+          "cell")
         .select(col("vec_id").as(id), col("cell"), col("code"))
-    } finally endPins(gen)
+    }
   }
 
   /** Persist a complete IVF + residual-PQ ANN index for `df` under

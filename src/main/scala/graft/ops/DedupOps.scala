@@ -36,34 +36,11 @@ import org.apache.spark.sql.expressions.Window
   */
 object DedupOps {
 
-  /** Caches from the PREVIOUS dedup invocation. Lazy results can't be
-    * unpersisted before their consumer's action runs, so lifecycle is
-    * generational: each new TOP-LEVEL query first retires everything the
-    * last one cached — a long-lived session (Bench warm-up + repeated
-    * timed runs) holds at most one generation of blocks instead of
-    * accumulating one per invocation.
-    *
-    * The retire lives at QUERY ENTRY ([[freshGen]], called by the
-    * `queries`-map wrappers and by composite pipelines like
-    * `PipelineOps.curationPipeline`), NOT inside the leaf operators:
-    * a composite that chains dedupClusters + decontamNgram must keep
-    * both operators' caches alive until its own action runs — a
-    * leaf-level retire would unpersist the cluster frames mid-plan and
-    * silently recompute the whole iterative chain uncached. */
-  private val cachedGen = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-
-  private[ops] def freshGen(): Unit = synchronized {
-    CacheLifecycle.retire(cachedGen)
-    shingleMemo = None
-  }
-
-  /** Generation-scoped shared pin of the CORPUS-WIDE shingle table (r9,
-    * the scan-audit finding on the curation stage PRODUCER): dedupClusters'
-    * LSH chain and decontamNgram both start from [[shingleRows]], and
-    * each used to persist its OWN copy — a composite that runs both
-    * (the stage build) tokenized + shingled the corpus twice. One memo
-    * per generation makes the second consumer reuse the first's cached
-    * frame; freshGen clears it with the rest of the generation.
+  /** The corpus-wide shingle table, pinned once per cache generation
+    * ([[CacheLifecycle.memo]], keyed on (session, dir)): dedupClusters'
+    * LSH chain and decontamNgram both start from [[shingleRows]], so a
+    * composite that runs both (the curation stage build) tokenizes and
+    * shingles the corpus once.
     *
     * Its consumers are the corpus-wide operators only: [[simPairs]]
     * (`simjoin_lsh`, `dedup_clusters`), [[candidatePairsFor]],
@@ -73,34 +50,8 @@ object DedupOps {
     * own day-only frames instead, because a filter above a cached
     * relation cannot reach the scan under it: through this pin the
     * verdict would shingle all 500 sf0.01 documents to use 59. */
-  private var shingleMemo: Option[(String, DataFrame)] = None
-
   private[ops] def pinnedShingles(s: SparkSession, dir: String): DataFrame =
-    synchronized {
-      shingleMemo match {
-        // Keyed on (session, dir), not dir alone (ADVICE r9): a caller on
-        // a replacement session with the same dir must not get a cached
-        // frame bound to the old (possibly stopped) session — freshGen is
-        // only guaranteed at registry entry points.
-        case Some((d, df)) if d == dir && (df.sparkSession eq s) => df
-        case _ =>
-          val df = cache(shingleRows(s, dir))
-          shingleMemo = Some((dir, df))
-          df
-      }
-    }
-
-  /** LAZY persist, deliberately (r6 A/B): an eager count() per cache was
-    * tried to close the multi-consumer double-compute race and made the
-    * composites WORSE (curation_pipeline 5.7 s → 18.2 s same-window A/B)
-    * — serializing one small job per cached frame costs more than the
-    * race, because a single big action materializes every cache branch
-    * with full cluster parallelism. The daily probes (`dedup_incremental`,
-    * `curation_incremental`) pin nothing: [[fineProbeHits]] reads their
-    * batch band table once, in the op's one query. */
-  private def cache(df: DataFrame): DataFrame = synchronized {
-    cachedGen += df; df.persist()
-  }
+    CacheLifecycle.memo(("shingles", s, dir))(CacheLifecycle.pin(shingleRows(s, dir)))
 
   /** Pluggable lineage truncation (VERDICT r6 #7): a RELIABLE
     * `checkpoint()` when the session has a checkpoint dir configured
@@ -238,7 +189,7 @@ object DedupOps {
     // form; a fingerprint collision inside one pair's union — ~n^2/2^65
     // — is the only divergence risk, and the three-scale oracle gate
     // would catch it).
-    val sh = cache(shRows.groupBy("doc_id")
+    val sh = CacheLifecycle.pin(shRows.groupBy("doc_id")
       .agg(collect_list(xxhash64(col("x"))).as("shingles")))
     // SHUFFLE_HASH on the verify joins (optimization r14, guide §3.1):
     // sort-merge sorted the array-payload side twice for joins whose
@@ -343,7 +294,7 @@ object DedupOps {
     * consumed as a join SET, and a global range sort on the cluster map
     * is pure waste inside a stage write. */
   private[ops] def dedupClustersUnsorted(s: SparkSession, dir: String): DataFrame = {
-    val pairs = cache(simPairs(s, dir).select("doc_a", "doc_b"))
+    val pairs = CacheLifecycle.pin(simPairs(s, dir).select("doc_a", "doc_b"))
     // Materialize the verified pair set BEFORE the propagation loop
     // (VERDICT r6 #2): the loop re-reads `edges` (= pairs twice) every
     // round, and a lazily-persisted pairs frame lets round 1's two union
@@ -369,8 +320,8 @@ object DedupOps {
     * is directly testable on synthetic topologies (DedupSpec runs a
     * 64-node path graph and pins the O(log diameter) round count —
     * plain neighbor-min propagation would need 63 rounds and trip
-    * MaxRounds). Persisted label frames are registered in the dedup
-    * cache generation; non-convergence throws loudly. */
+    * MaxRounds). The returned label frame is pinned in the cache
+    * generation ([[CacheLifecycle]]); non-convergence throws loudly. */
   private[graft] def propagateMinLabels(edges: DataFrame,
                                         maxRounds: Int = 50): DataFrame = {
     // `prev` is always THE frame persist() was called on (unpersisting a
@@ -436,8 +387,8 @@ object DedupOps {
     }
     lastClusterRounds = rounds
     // Register BEFORE the convergence check: on the throw path prev must
-    // still be retired by the next invocation, not leak for the session.
-    synchronized { cachedGen += prev }
+    // still be retired by the next generation, not leak for the session.
+    CacheLifecycle.pin(prev)
     // Silent truncation would return plausible-but-wrong cluster ids;
     // an unconverged run must fail loudly instead.
     if (!converged)
@@ -775,9 +726,8 @@ object DedupOps {
     * mirrors both rules; at sf0.01 doc 452 flips (near-dup of an
     * appended [400,450) doc). */
   def dedupIncrementalVsdelta(s: SparkSession, dir: String): DataFrame = {
-    val batch = cache(bandsOf(
+    val batch = CacheLifecycle.pinEager(bandsOf(
       shingleRows(s, dir).filter(col("doc_id") >= AppendCutoff)))
-    batch.count()
     val ix = probedBase(s, dir)
     val resolvedHits = fineProbeHits(ix.root, batch)
       .filter(col("hit")).select(col("doc_id"), lit(true).as("is_dup"))
@@ -886,8 +836,9 @@ object DedupOps {
     // and both the estimate and the exact Jaccard now come off the same
     // consecutive-pair row. (Pinned via the generation cache, review
     // r10: the a/b sides are two consumers.)
-    val both = cache(GraftAPI.minhashSignatures(pinnedShingles(s, dir), "doc_id", NumHashes)
-      .join(shingled(s, dir), "doc_id"))
+    val both = CacheLifecycle.pin(
+      GraftAPI.minhashSignatures(pinnedShingles(s, dir), "doc_id", NumHashes)
+        .join(shingled(s, dir), "doc_id"))
     val agree = (1 to NumHashes)
       .map(i => when(col(s"a.mh$i") === col(s"b.mh$i"), 1).otherwise(0))
       .reduce(_ + _)
@@ -937,7 +888,7 @@ object DedupOps {
     * ratio weighs repeated spans by their actual coverage. */
   def dedupCrossdocNgrams(s: SparkSession, dir: String): DataFrame =
     GraftAPI.dupGramCoverage(
-      cache(GraftAPI.ngramRows(documents(s, dir), "doc_id", "text", CrossdocN)),
+      CacheLifecycle.pin(GraftAPI.ngramRows(documents(s, dir), "doc_id", "text", CrossdocN)),
       "doc_id", minDocs = 2).orderBy("doc_id")
 
   /** D12: edit-distance fuzzy match — dirty probe strings (supplier names
@@ -1000,9 +951,6 @@ object DedupOps {
     GraftAPI.keepFirstChunks(chunks, "doc_id", " ").orderBy("doc_id")
   }
 
-  /** Every entry opens a fresh cache generation (retiring the previous
-    * query's persisted intermediates) — see [[freshGen]]. Composite
-    * pipelines that call the ops directly manage the bracket themselves. */
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "fuzzy_join_edit"     -> fuzzyJoinEdit _,
     "dedup_exact"         -> dedupExact _,
@@ -1025,9 +973,7 @@ object DedupOps {
     "dedup_index_reband"  -> dedupIndexReband _,
     "dedup_crossdoc_ngrams" -> dedupCrossdocNgrams _,
     "dedup_paragraphs"    -> dedupParagraphs _,
-  ).map { case (k, fn) =>
-    k -> ((s: SparkSession, d: String) => { freshGen(); fn(s, d) })
-  }
+  )
 
   /** Shared SQL fragments (DuckDB): shingles + minhash bands, mirroring
     * the Spark exprs above 1:1. */

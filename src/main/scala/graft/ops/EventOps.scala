@@ -22,20 +22,6 @@ import org.apache.spark.sql.expressions.Window
   */
 object EventOps {
 
-  /** Persisted session frame from the PREVIOUS [[sessionsConcurrency]]
-    * invocation — the same generational lifecycle as
-    * [[DedupOps.cachedGen]] (ADVICE r9): the lazy persist can't be
-    * unpersisted before the caller's action runs, so each new invocation
-    * retires the previous one's blocks instead of leaking one cached
-    * frame per call in a long-lived application (Bench's clearCache only
-    * covers the bench; Verify/specs/user sessions never call it). */
-  private val cachedGen = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-
-  private def cacheLazy(df: DataFrame): DataFrame = synchronized {
-    CacheLifecycle.retire(cachedGen)
-    cachedGen += df; df.persist()
-  }
-
   /** C4: JSON field extraction from `events.props`
     * (reference precedent: raw JSON parse, /root/reference/scripts/extract.py:46). */
   def jsonExtract(s: SparkSession, dir: String): DataFrame =
@@ -127,10 +113,9 @@ object EventOps {
     val sess = sessionized(s, dir)
       .groupBy("user_id", "session_id")
       .agg(min(col("ts")).as("start_ts"), max(col("ts")).as("end_ts"))
-    // Lazy persist, per the DedupOps r6 A/B: the one final action
-    // materializes it once for both consumers. Generation-scoped (ADVICE
-    // r9): the NEXT invocation retires these blocks — no per-call leak.
-    val sessPinned = cacheLazy(sess)
+    // Lazy pin: the one final action materializes it once for both
+    // consumers.
+    val sessPinned = CacheLifecycle.pin(sess)
     val bounds = sessPinned
       .select(col("user_id"), explode(array(
           struct(col("start_ts").as("bts"), lit(1L).as("delta")),

@@ -227,9 +227,9 @@ object IvfPqIndex {
     IndexFs.retire(ix.root, IndexFs.Split)
     IndexFs.retire(ix.ivfCodesDelta)
     val e = raw.persist()
-    val pins = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    var pins = List.empty[DataFrame] // call-scoped: unpersisted below
     def keep(stage: String, df: DataFrame): DataFrame =
-      if (stage.endsWith("_long")) { pins += df.persist(); df }
+      if (stage.endsWith("_long")) { pins ::= df.persist(); df }
       else {
         val table = IndexFs.child(ix.root, stage)
         df.write.mode("overwrite").parquet(table)

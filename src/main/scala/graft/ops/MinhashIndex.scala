@@ -157,13 +157,17 @@ object MinhashIndex {
 
   /** The rows of every committed delta generation of `ix` (an empty frame
     * when there are none), in the [[facadeFineSchema]] layout. */
-  private[graft] def deltaRows(s: SparkSession, ix: Ix): DataFrame = {
+  private[graft] def deltaRows(s: SparkSession, ix: Ix): DataFrame =
+    generationRows(s, ix, IndexFs.committedGenerations(ix.delta))
+
+  /** [[deltaRows]] of the generation directories `gens` only. */
+  private[graft] def generationRows(s: SparkSession, ix: Ix, gens: Seq[String]): DataFrame = {
     val schema = storedSchema(s, ix)
-    IndexFs.committedGenerations(ix.delta) match {
+    gens match {
       case Seq() => s.createDataFrame(s.sparkContext.emptyRDD[Row], schema)
       // basePath: generation directories read as one table's partitions
-      case gens => Tables.readAll(s, gens, Some(schema), Map("basePath" -> ix.delta))
-          .select(schema.fieldNames.map(col): _*)
+      case _ => Tables.readAll(s, gens, Some(schema), Map("basePath" -> ix.delta))
+          .select(schema.fieldNames.toIndexedSeq.map(col): _*)
     }
   }
 

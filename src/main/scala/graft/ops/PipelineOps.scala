@@ -401,21 +401,6 @@ object PipelineOps {
     * and every later consumer in the same session reads the tables. */
   private val stagesBuilt = scala.collection.mutable.Set.empty[String]
 
-  /** Generation-scoped persists, the DedupOps/VectorOps discipline
-    * (review r11: [[packShards]] leaked one cached survivor frame per
-    * curation invocation — Verify/PlanDump/specs never run Bench's
-    * clearCache). Each registry entry retires the previous call's
-    * generation. */
-  private val cachedGen = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-
-  private[ops] def freshGen(): Unit = synchronized {
-    CacheLifecycle.retire(cachedGen)
-  }
-
-  private def cache(df: DataFrame): DataFrame = synchronized {
-    cachedGen += df; df.persist()
-  }
-
   /** Builds the corpus-level curation stage tables (VERDICT r8 #1/#2 —
     * the producer half of the staged factoring): exact-dedup keepers,
     * near-dup cluster drop-list, contamination drop-list, one parquet
@@ -427,50 +412,51 @@ object PipelineOps {
     * ([[curationPipelineStaged]], whose write IS the product). */
   private def buildCurationStages(s: SparkSession, dir: String): String = synchronized {
     // one cache generation for the WHOLE build: dedupClusters' and
-    // decontamNgram's persisted intermediates must all stay alive until
-    // their stage writes complete (DedupOps.freshGen scaladoc)
-    DedupOps.freshGen()
-    val root = curationStageRoot(dir)
-    // The producer was only ~1.35x core-scalable at 30x (VERDICT r10 #2):
-    // three SEQUENTIAL stage jobs each leave cores idle through their
-    // low-parallelism phases (driver planning, skewed verify tails, the
-    // small drop-list writes). Fix shape: materialize the SHARED shingle
-    // root once (both dedup stages read it; pre-pinning also removes the
-    // concurrent first-use race on the memo), then submit the three
-    // stage writes as CONCURRENT Spark jobs — the scheduler interleaves
-    // their tasks, filling each other's stragglers. The writes land in
-    // three disjoint directories; the sort the registry keys carry for
-    // presentation is dropped here (the stage tables are join SETS).
-    DedupOps.pinnedShingles(s, dir).count()
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val writes = Seq(
-      Future {
-        qualityKept(s, dir).groupBy("fp").agg(min("doc_id").as("doc_id"))
-          .select("doc_id")
-          .write.mode("overwrite").parquet(s"$root/exact_keep")
-      },
-      Future {
-        DedupOps.dedupClustersUnsorted(s, dir)
-          .filter(col("cluster_id") =!= col("doc_id")).select("doc_id")
-          .write.mode("overwrite").parquet(s"$root/cluster_drops")
-      },
-      Future {
-        DedupOps.decontamNgramUnsorted(s, dir)
-          .filter(col("contam_ratio") >= ContamMinRatio).select("doc_id")
-          .write.mode("overwrite").parquet(s"$root/contaminated")
-      })
-    // Settle ALL three before rethrowing (review r11): a fail-fast Await
-    // would abandon still-running writes, and a retried build would then
-    // race the orphans into the same output directories (_temporary/
-    // commit collisions or a silently mixed stage table).
-    val settled = Await.result(
-      Future.sequence(writes.map(_.transform(scala.util.Success(_)))),
-      Duration.Inf)
-    settled.collectFirst { case scala.util.Failure(e) => throw e }
-    stagesBuilt += root
-    root
+    // decontamNgram's pins must all stay alive until their stage writes
+    // complete
+    CacheLifecycle.generation {
+      val root = curationStageRoot(dir)
+      // The producer was only ~1.35x core-scalable at 30x (VERDICT r10 #2):
+      // three SEQUENTIAL stage jobs each leave cores idle through their
+      // low-parallelism phases (driver planning, skewed verify tails, the
+      // small drop-list writes). Fix shape: materialize the SHARED shingle
+      // root once (both dedup stages read it; pre-pinning also removes the
+      // concurrent first-use race on the memo), then submit the three
+      // stage writes as CONCURRENT Spark jobs — the scheduler interleaves
+      // their tasks, filling each other's stragglers. The writes land in
+      // three disjoint directories; the sort the registry keys carry for
+      // presentation is dropped here (the stage tables are join SETS).
+      DedupOps.pinnedShingles(s, dir).count()
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.duration.Duration
+      import scala.concurrent.ExecutionContext.Implicits.global
+      val writes = Seq(
+        Future {
+          qualityKept(s, dir).groupBy("fp").agg(min("doc_id").as("doc_id"))
+            .select("doc_id")
+            .write.mode("overwrite").parquet(s"$root/exact_keep")
+        },
+        Future {
+          DedupOps.dedupClustersUnsorted(s, dir)
+            .filter(col("cluster_id") =!= col("doc_id")).select("doc_id")
+            .write.mode("overwrite").parquet(s"$root/cluster_drops")
+        },
+        Future {
+          DedupOps.decontamNgramUnsorted(s, dir)
+            .filter(col("contam_ratio") >= ContamMinRatio).select("doc_id")
+            .write.mode("overwrite").parquet(s"$root/contaminated")
+        })
+      // Settle ALL three before rethrowing (review r11): a fail-fast Await
+      // would abandon still-running writes, and a retried build would then
+      // race the orphans into the same output directories (_temporary/
+      // commit collisions or a silently mixed stage table).
+      val settled = Await.result(
+        Future.sequence(writes.map(_.transform(scala.util.Success(_)))),
+        Duration.Inf)
+      settled.collectFirst { case scala.util.Failure(e) => throw e }
+      stagesBuilt += root
+      root
+    }
   }
 
   /** Build-once-per-session accessor for the stage tables: first caller
@@ -529,26 +515,26 @@ object PipelineOps {
     * (PipelineSpec), and as the honest record of why the staged form
     * won: at sf1 this form is 3× slower and its driver-action chain
     * re-pays the corpus pass on every invocation. */
-  private[graft] def curationPipelineInPlan(s: SparkSession, dir: String): DataFrame = {
-    DedupOps.freshGen()
-    val Budget = 2000L
-    val quality = qualityKept(s, dir)
-    val exactKeep = quality.groupBy("fp").agg(min("doc_id").as("doc_id"))
-      .select("doc_id")
-    val clusterDrops = DedupOps.truncate(DedupOps.dedupClusters(s, dir)
-      .filter(col("cluster_id") =!= col("doc_id")).select("doc_id"))
-    val contaminated = DedupOps.truncate(DedupOps.decontamNgram(s, dir)
-      .filter(col("contam_ratio") >= ContamMinRatio).select("doc_id"))
-    val survivors = withRangeBucket(
-      quality
-        .join(exactKeep, Seq("doc_id"), "left_semi")
-        .join(clusterDrops, Seq("doc_id"), "left_anti")
-        .join(contaminated, Seq("doc_id"), "left_anti")
-        .filter(col("doc_id") % 50 =!= 0)
-        .select(col("doc_id"), col("lang"), col("n_tokens")),
-      "doc_id", documents(s, dir).select("doc_id"))
-    packShards(survivors, Budget)
-  }
+  private[graft] def curationPipelineInPlan(s: SparkSession, dir: String): DataFrame =
+    CacheLifecycle.generation {
+      val Budget = 2000L
+      val quality = qualityKept(s, dir)
+      val exactKeep = quality.groupBy("fp").agg(min("doc_id").as("doc_id"))
+        .select("doc_id")
+      val clusterDrops = DedupOps.truncate(DedupOps.dedupClusters(s, dir)
+        .filter(col("cluster_id") =!= col("doc_id")).select("doc_id"))
+      val contaminated = DedupOps.truncate(DedupOps.decontamNgram(s, dir)
+        .filter(col("contam_ratio") >= ContamMinRatio).select("doc_id"))
+      val survivors = withRangeBucket(
+        quality
+          .join(exactKeep, Seq("doc_id"), "left_semi")
+          .join(clusterDrops, Seq("doc_id"), "left_anti")
+          .join(contaminated, Seq("doc_id"), "left_anti")
+          .filter(col("doc_id") % 50 =!= 0)
+          .select(col("doc_id"), col("lang"), col("n_tokens")),
+        "doc_id", documents(s, dir).select("doc_id"))
+      packShards(survivors, Budget)
+    }
 
   /** Stage 5 of the curation composite: two-pass prefix sum over the
     * FIXED-cardinality range-bucket spine ([[withRangeBucket]]) → shard
@@ -560,7 +546,7 @@ object PipelineOps {
     // (n_tokens comes from split(text)), the one column that dominates
     // scan bytes at corpus scale. The pinned frame is survivor-
     // cardinality × 4 scalar columns; lazy persist per the r6 A/B.
-    val survivors = cache(survivorsIn)
+    val survivors = CacheLifecycle.pin(survivorsIn)
     val wIn = Window.partitionBy("bucket").orderBy("doc_id")
       .rowsBetween(Window.unboundedPreceding, -1)
     val withPos = survivors
@@ -686,33 +672,33 @@ object PipelineOps {
     * the filter (PipelineSpec pins it): 59 of 500 documents shingle at
     * sf0.01. Banding and decontamination read the same batch shingle
     * plan, whose exchanges AQE reuses, so nothing is pinned. */
-  def curationIncremental(s: SparkSession, dir: String): DataFrame = {
-    DedupOps.freshGen()
-    val cut = DedupOps.AppendCutoff
-    val docs = documents(s, dir)
-    val qOk = qualityOk()
-    val baseFps = docs.filter(col("doc_id") < cut)
-      .select(md5(col("text")).as("fp")).distinct()
-      .withColumn("seen", lit(true))
-    val batchSh = GraftAPI.shingleRows(docs.filter(col("doc_id") >= cut),
-      "doc_id", "text")
-    // Fine-union probe (r12): the SHARED core with dedup_incremental
-    // (DedupOps.fineProbeHits), so the curation verdict and the
-    // standalone dedup probe can never disagree about what counts as a
-    // near-dup.
-    val nearHits = DedupOps.fineProbeHits(DedupOps.probedBase(s, dir).root,
-        DedupOps.bandsOf(batchSh))
-      .select(col("doc_id"), col("hit").as("near"))
-    val evalSet = GraftAPI.shingleRows(
-        docs.filter(col("doc_id") < cut && col("doc_id") % 50 === 0),
+  def curationIncremental(s: SparkSession, dir: String): DataFrame =
+    CacheLifecycle.generation {
+      val cut = DedupOps.AppendCutoff
+      val docs = documents(s, dir)
+      val qOk = qualityOk()
+      val baseFps = docs.filter(col("doc_id") < cut)
+        .select(md5(col("text")).as("fp")).distinct()
+        .withColumn("seen", lit(true))
+      val batchSh = GraftAPI.shingleRows(docs.filter(col("doc_id") >= cut),
         "doc_id", "text")
-      .select("x").distinct()
-    curationVerdicts(
-        docs.filter(col("doc_id") >= cut)
-          .select(col("doc_id"), qOk.as("q_ok"), md5(col("text")).as("fp")),
-        "doc_id", baseFps, nearHits, contaminatedIds(batchSh, "doc_id", evalSet))
-      .orderBy("doc_id")
-  }
+      // Fine-union probe (r12): the SHARED core with dedup_incremental
+      // (DedupOps.fineProbeHits), so the curation verdict and the
+      // standalone dedup probe can never disagree about what counts as a
+      // near-dup.
+      val nearHits = DedupOps.fineProbeHits(DedupOps.probedBase(s, dir).root,
+          DedupOps.bandsOf(batchSh))
+        .select(col("doc_id"), col("hit").as("near"))
+      val evalSet = GraftAPI.shingleRows(
+          docs.filter(col("doc_id") < cut && col("doc_id") % 50 === 0),
+          "doc_id", "text")
+        .select("x").distinct()
+      curationVerdicts(
+          docs.filter(col("doc_id") >= cut)
+            .select(col("doc_id"), qOk.as("q_ok"), md5(col("text")).as("fp")),
+          "doc_id", baseFps, nearHits, contaminatedIds(batchSh, "doc_id", evalSet))
+        .orderBy("doc_id")
+    }
 
   /** Ids whose r6-snapped share of shingles in `evalSet` (a distinct `x`
     * column) reaches [[ContamMinRatio]], tagged `cont`. One aggregate
@@ -1040,9 +1026,7 @@ object PipelineOps {
     "corpus_mix_epochs"    -> corpusMixEpochs _,
     "corpus_budget_select" -> corpusBudgetSelect _,
     "corpus_split_assign"  -> corpusSplitAssign _,
-  ).map { case (k, fn) =>
-    k -> ((s: SparkSession, d: String) => { freshGen(); fn(s, d) })
-  }
+  )
 
   val oracleSql: Map[String, String] = Map(
     "corpus_temperature_mix" ->

@@ -29,26 +29,6 @@ import org.apache.spark.sql.expressions.Window
   */
 object VectorOps {
 
-  /** Persisted frames from the PREVIOUS recall-harness invocation
-    * ([[knnRecallPq]]/[[knnRecallIvfPq]] pin their truth/codebook
-    * frames here; [[knnPq]] itself has been probe-only since r8 and
-    * caches nothing) — same generational lifecycle as [[DedupOps]]:
-    * lazy results can't be unpersisted before their consumer's action
-    * runs, so each new invocation retires the previous one's blocks
-    * instead of leaking one set per call (review r6: Verify/PlanDump/
-    * specs never run Bench's clearCache). */
-  private val cachedGen = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-
-  private def freshGen(): Unit = synchronized {
-    CacheLifecycle.retire(cachedGen)
-  }
-
-  private def cacheEager(df: DataFrame): DataFrame = {
-    synchronized { cachedGen += df; df.persist() }
-    df.count()
-    df
-  }
-
   /** Double-cast view of the embedding column. */
   private def asD(c: Column): Column = c.cast("array<double>")
 
@@ -408,17 +388,16 @@ object VectorOps {
     * rank, so the sweep costs one ADC pass regardless of how many
     * operating points it reports. */
   def knnRecallPq(s: SparkSession, dir: String): DataFrame = {
-    freshGen()
     val (e, scored) = pqProbe(s, dir)
     val q = e.filter(col("vec_id") === 0).select(col("x").as("qv"))
     // Top-maxS candidates by ADC, ranked — tiny (≤ 50 rows), eagerly
     // cached: each swept size consumes it for the rerank.
     val wr = Window.orderBy(col("adc").asc, col("vec_id").asc)
-    val cand = cacheEager(scored.filter(col("vec_id") =!= 0)
+    val cand = CacheLifecycle.pinEager(scored.filter(col("vec_id") =!= 0)
       .orderBy(col("adc").asc, col("vec_id").asc).limit(PqRecallShortlists.max)
       .withColumn("r", row_number().over(wr)))
     // Exact top-10 (brute force, one corpus pass) — K rows, cached once.
-    val exact10 = cacheEager(e.filter(col("vec_id") =!= 0)
+    val exact10 = CacheLifecycle.pinEager(e.filter(col("vec_id") =!= 0)
       .crossJoin(broadcast(q))
       .select(col("vec_id"), sqDist(col("x"), col("qv")).as("sd"))
       .orderBy(col("sd").asc, col("vec_id").asc).limit(K)
@@ -529,7 +508,6 @@ object VectorOps {
     * recall-vs-probes curve is the IVF knob's oracle-visible contract
     * (more probes ⇒ recall monotonically non-decreasing — spec-pinned). */
   def knnRecallIvfPq(s: SparkSession, dir: String): DataFrame = {
-    freshGen()
     val ix = IvfPqIndex.ensure(s, dir)
     val e = embeddings(s, dir)
       .select(col("vec_id"), col("label"), asD(col("embedding")).as("x"))
@@ -539,7 +517,7 @@ object VectorOps {
     // Tiny (IvfPqProbes.max rows incl. centroid payload) but its lineage
     // is the coarse training — pin it once for the consumers below.
     val wp = Window.orderBy(col("pd").asc, col("cid").asc)
-    val probes = cacheEager(coarse.crossJoin(broadcast(q))
+    val probes = CacheLifecycle.pinEager(coarse.crossJoin(broadcast(q))
       .select(col("cid"), col("cv"), col("qx"),
         sqDist(col("qx"), col("cv")).as("pd"))
       .orderBy(col("pd").asc, col("cid").asc).limit(IvfPqProbes.max)
@@ -558,14 +536,14 @@ object VectorOps {
     // broadcast probe list; the join on the hive-partition column `pcell`
     // prunes every unprobed cell directory), each scored against the
     // distance table of its OWN cell.
-    val scored = cacheEager(Tables.read(s, ix.ivfCodes)
+    val scored = CacheLifecycle.pinEager(Tables.read(s, ix.ivfCodes)
       .join(broadcast(probes.select(col("cid").as("pcell"), col("np"))), "pcell")
       .filter(col("vec_id") =!= 0)
       .join(broadcast(dt), Seq("m", "code"))
       .filter(col("dtcell") === col("cell"))
       .groupBy("vec_id", "np")
       .agg(r6(dsum(col("d"))).as("adc")))
-    val exact10 = cacheEager(e.filter(col("vec_id") =!= 0)
+    val exact10 = CacheLifecycle.pinEager(e.filter(col("vec_id") =!= 0)
       .crossJoin(broadcast(q))
       .select(col("vec_id"), sqDist(col("x"), col("qx")).as("sd"))
       .orderBy(col("sd").asc, col("vec_id").asc).limit(K)
@@ -672,15 +650,15 @@ object VectorOps {
 
   /** Vector hygiene: L2 norm + normalized-first-component check — the
     * pre-index normalization pass (and a norm-distribution sanity probe)
-    * every embedding pipeline runs before similarity search. */
-  def embedNormalize(s: SparkSession, dir: String): DataFrame = {
-    val e = asD(col("embedding"))
-    embeddings(s, dir)
-      .select(col("vec_id"), col("label"),
-        r6(norm(e)).as("l2_norm"),
-        r6(element_at(e, 1) / norm(e)).as("e1_normed"))
+    * every embedding pipeline runs before similarity search. Binds
+    * [[GraftAPI.l2Normalize]], so a zero vector passes through (l2_norm
+    * 0, e1_normed 0) where the oracle divides by the zero norm; the
+    * fixtures hold no zero vector. */
+  def embedNormalize(s: SparkSession, dir: String): DataFrame =
+    GraftAPI.l2Normalize(embeddings(s, dir).select("vec_id", "label", "embedding"), "embedding")
+      .select(col("vec_id"), col("label"), r6(col("l2_norm")).as("l2_norm"),
+        r6(element_at(col("embedding"), 1)).as("e1_normed"))
       .orderBy("vec_id")
-  }
 
   /** Int8 scalar quantization — the 4× storage-compression pass an
     * embedding store runs before indexing 100 TB of vectors: per-vector

@@ -986,6 +986,34 @@ class ApiSpec extends AnyFunSuite {
     assert(skew() == sizes, "the replay changed a bucket size")
   }
 
+  test("minhashIndexAppend skips ids another committed generation holds: a document appended under batch 1 and again under batch 2 is counted once") {
+    val sq = spark; import sq.implicits._
+    val fam = (1 to 40).map(i => s"gstok$i").mkString(" ")
+    val base = (0L to 2L).map(id => (id, fam)) ++
+      (10L to 30L).map(id => (id, (1 to 40).map(i => s"gs${id}w$i").mkString(" ")))
+    val batch = Seq((300L, fam), (301L, (1 to 40).map(i => s"gsnew$i").mkString(" ")))
+      .toDF("doc_id", "text")
+    val root = java.nio.file.Files.createTempDirectory("graft_mh_twogen").toString
+    val bands = s"$root/bands"
+    GraftAPI.writeMinhashIndex(base.toDF("doc_id", "text"), "doc_id", "text",
+      root, numHashes = 8, bands = 2, batchWidth = 250).collect()
+    def append(batchId: Long) = GraftAPI.minhashIndexAppend(spark, bands, batch,
+      "doc_id", "text", batchId, numHashes = 8, bands = 2).collect()
+    def newRows(m: Array[org.apache.spark.sql.Row]) = m.map(_.getAs[Long]("n_new")).sum
+    def skew() = GraftAPI.minhashIndexSkew(
+        ops.MinhashIndex.resolvedPostings(spark, ops.MinhashIndex.Ix(root)))
+      .orderBy("band").collect().map(_.toString).toSeq
+    assert(newRows(append(1L)) == 4L, "2 bands per appended doc")
+    val sizes = skew()
+    val again = append(2L)
+    assert(newRows(again) == 0L, s"batch 2 re-appended batch 1's documents: ${again.toSeq}")
+    assert(skew() == sizes, "the second generation changed a bucket size")
+    // the skip excludes the generation being written: a replay of batch 1
+    // stays an idempotent overwrite, not an empty generation
+    assert(newRows(append(1L)) == 4L, "a replay of batch 1 must rewrite its own rows")
+    assert(skew() == sizes, "the replay changed a bucket size")
+  }
+
   test("an append generation without its commit marker is invisible: the probe skips it and the compact folds only committed batches") {
     val sq = spark; import sq.implicits._
     def text(tag: String) = (1 to 40).map(i => s"$tag$i").mkString(" ")

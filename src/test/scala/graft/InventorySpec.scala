@@ -211,6 +211,26 @@ class InventorySpec extends AnyFunSuite {
     assert(retired.isEmpty, s"the retired MinHash layouts are gone, yet: $retired")
   }
 
+  test("one cache lifecycle: the per-object pin generations are gone, only CacheLifecycle holds or retires a generation") {
+    val gone = Seq("cachedGen", "freshGen", "cacheEager", "cacheLazy", "beginPins", "endPins",
+      "retireablePins")
+    val owned = Seq("ArrayBuffer.empty[DataFrame]", "CacheLifecycle.retire")
+    // the detector itself: the retired names are caught in comments too,
+    // the owned calls in code only
+    assert(gone.map(g => filesWith(g, Seq("C.scala" -> s"// was $g"))) ==
+      gone.map(_ => Seq("C.scala")))
+    val controls = Seq(
+      "A.scala" -> codeOnly("val g = mutable.ArrayBuffer.empty[ DataFrame ]\nCacheLifecycle.retire(g)"),
+      "B.scala" -> codeOnly("/** ArrayBuffer.empty[DataFrame] */\n// CacheLifecycle.retire(g)\nval z = 1"))
+    assert(owned.map(filesWith(_, controls)) == owned.map(_ => Seq("A.scala")))
+    val retired = gone.flatMap(g =>
+      filesWith(g, sourcesUnder("src/main/scala", comments = true)).map(f => s"$f spells $g"))
+    assert(retired.isEmpty, s"the per-object generations are gone, yet: $retired")
+    val outside = owned.flatMap(o => filesWith(o, mainSources)
+      .filterNot(_.endsWith("/CacheLifecycle.scala")).map(f => s"$f spells $o"))
+    assert(outside.isEmpty, s"pins must go through CacheLifecycle: $outside")
+  }
+
   test("GraftSession holds the only SparkSession builder under src/main and src/test") {
     // spelled in parts: this file is scanned too
     val builderCall = Seq("SparkSession", "builder").mkString(".")

@@ -69,7 +69,7 @@ class Round4BatchESpec extends AnyFunSuite {
   }
 
   test("knn_recall: one row per query, recall consistent with hit count") {
-    val rows = ops.VectorOps.queries("knn_recall")(spark, sf).collect()
+    val rows = SparkEntry.queries("knn_recall")(spark, sf).collect()
     assert(rows.length == 3)
     rows.foreach { r =>
       val (nHit, recall) = (r.getLong(1), r.getDouble(2))
