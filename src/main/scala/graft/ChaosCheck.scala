@@ -194,9 +194,8 @@ object ChaosCheck {
       implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
       val docs = Tables.read(spark, s"$dir/documents.parquet")
       val ixRoot = s"$dir/chaos_mhix"
-      api.GraftAPI.writeMinhashIndex(
-        docs.filter(col("doc_id") < 450), "doc_id", "text", ixRoot,
-        numHashes = 8, bands = 2)
+      ops.MinhashIndex.write(docs.filter(col("doc_id") < 450), "doc_id", "text", ixRoot,
+        numHashes = 8, bands = 2, batchWidth = 0)
       val out = s"$dir/chaos_stream_out"
       val batchDocs = docs.filter(col("doc_id") >= 450)
         .select("doc_id", "text").as[streaming.DocRow]
@@ -205,7 +204,7 @@ object ChaosCheck {
         .MemoryStream[streaming.DocRow]
       val q = ms.toDF().writeStream
         .foreachBatch(streaming.StreamingOps.dedupBatchAgainstIndex(
-          s"$ixRoot/bands", out, "doc_id", "text",
+          ops.MinhashIndex.Ix(ixRoot).bands, out, "doc_id", "text",
           numHashes = 8, bands = 2) _)
         .start()
       armWindow()

@@ -1,7 +1,7 @@
 package graft.api
 
 import graft.Tables
-import graft.ops.CacheLifecycle
+import graft.ops.{CacheLifecycle, IvfPqIndex, MinhashIndex}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -22,8 +22,12 @@ import org.apache.spark.sql.functions._
   * scan and shuffle `orders` twice) and `dedup_exact` (which hash is the
   * contract, raw text or [[exactDedupGroups]]' `to_json`, is still open).
   *
-  * Everything is a pure DataFrame→DataFrame transform: no SparkSession
-  * parameter, no paths, no side effects — the caller owns I/O. All
+  * Everything else is a pure DataFrame→DataFrame transform: no
+  * SparkSession parameter, no paths, no side effects — the caller owns
+  * I/O. The stored-index methods (`writeMinhashIndex`, `minhashIndex*`,
+  * `buildAnnIndex`, `annIndex*`) are the exception: each forwards in one
+  * line to its family's module, [[graft.ops.MinhashIndex]] or
+  * [[graft.ops.IvfPqIndex]], which internal callers use directly. All
   * shuffle-shape and determinism guarantees of the harness ops carry over
   * unchanged (DECIMAL-routed sums, md5 hashing, explicit tie-breaks), and
   * every method documents its 100 TB behavior.
@@ -282,341 +286,44 @@ object GraftAPI {
   private[graft] def distinctPairs(pairs: DataFrame, a: String, b: String): DataFrame =
     pairs.select(a, b).repartition(col(a)).distinct()
 
-  /** The per-band manifest (band, n_keys, n_postings, n_docs) of a
-    * stored postings table whose document id is `id`. Every doc with ≥1
-    * shingle posts exactly ONE key per band, so n_postings = n_docs by
-    * construction — a lost or doubled posting shows in the manifest. */
-  private[graft] def bandManifest(postings: DataFrame, id: String): DataFrame =
-    postings.groupBy("band")
-      .agg(countDistinct(col("band_key")).as("n_keys"),
-        count(lit(1)).as("n_postings"),
-        countDistinct(col(id)).as("n_docs"))
-      .select(col("band").cast("int").as("band"), col("n_keys"),
-        col("n_postings"), col("n_docs"))
-
-  /** Persist [[minhashBands]] as a stored dedup index — the one MinHash
-    * index build ([[graft.ops.MinhashIndex]]'s fixture roots call it at
-    * the harness geometry). One signature pass writes, under the root
-    * marker ([[graft.ops.IndexFs.build]]: a crashed build reads as
-    * uncommitted):
-    *   - `bands`: (doc_id, band, band_key) postings, the caller's `id`
-    *     stored as `doc_id`, hive-partitioned by band (`band` duplicated
-    *     as `pband` so the data column keeps its type), one file per band
-    *     — and, with `batchWidth > 0`, by the ingest batch `pbatch = id
-    *     div batchWidth`, the axis that makes [[minhashIndexDelete]]'s
-    *     takedowns partition-pruned (a document posts to EVERY band, so
-    *     band partitioning alone cannot prune a delete);
-    *   - `bands_fine`: the postings of buckets of at least
-    *     `DedupOps.RebandHotSize` documents, re-keyed on the
-    *     full-signature sub_key, so incremental probes match a
-    *     template-family bucket only on a full-signature hit; O(hot
-    *     postings), not O(corpus);
-    *   - `sub_keys`: one (doc_id, sub_key) row per document (~40
-    *     bytes/doc), so an append can refresh `bands_fine` for buckets it
-    *     pushes over the threshold without re-signing any stored text;
-    *   - the manifest (`index.properties`): geometry, batch width, hot
-    *     size and [[graft.ops.MinhashIndex.Layout]].
-    * A rebuild drops every delta generation an earlier append left.
-    * Returns the per-band manifest (band, n_keys, n_postings, n_docs)
-    * read back FROM the stored table; n_postings == n_docs by the
-    * one-key-per-(doc, band) construction, so a lost/doubled posting is
-    * visible in the manifest. At 100 TB, bucket the table by band_key as
-    * well so incremental batch probes co-partition against it without
-    * shuffling the stored side. */
+  /** Persist [[minhashBands]] as a stored dedup index under `path` — the
+    * one MinHash index build ([[MinhashIndex.write]]: layout, markers and
+    * batch axis there). Returns the per-band manifest (band, n_keys,
+    * n_postings, n_docs). */
   def writeMinhashIndex(df: DataFrame, id: String, text: String, path: String,
                         numHashes: Int = 128, bands: Int = 16,
-                        batchWidth: Long = 0): DataFrame = {
-    import graft.ops.{Artifacts, DedupOps, IndexFs, MinhashIndex}
-    val s = df.sparkSession
-    val ix = MinhashIndex.Ix(path)
-    IndexFs.build(path) {
-      require(IndexFs.deleteRecursive(ix.delta),
-        s"could not drop the delta generations under $path")
-      // One signature pass feeds the postings (sub_key dropped — a 32-char
-      // key per posting would bloat the main table for nothing), the fine
-      // table and the per-doc sub keys; persisted so neither re-shingles.
-      val bandedSub = minhashBandsWithSub(df, id, text, numHashes, bands)
-        .withColumnRenamed(id, "doc_id")
-        .withColumn("pband", col("band"))
-        .persist()
-      try {
-        val banded = bandedSub.drop("sub_key")
-        writePostings(banded, batchWidth, ix.bands)
-        val subKeys = bandedSub.select("doc_id", "sub_key").distinct()
-        MinhashIndex.writeFine(fineOf(banded, subKeys, DedupOps.RebandHotSize), ix)
-        subKeys.write.mode("overwrite").parquet(ix.subKeys)
-      } finally bandedSub.unpersist()
-      Artifacts.writeMeta(path,
-        "numHashes" -> numHashes.toString, "bands" -> bands.toString,
-        "batchWidth" -> batchWidth.toString,
-        "hotSize" -> DedupOps.RebandHotSize.toString,
-        "layout" -> MinhashIndex.Layout)
-    }
-    bandManifest(Tables.read(s, ix.bands), "doc_id")
-  }
+                        batchWidth: Long = 0): DataFrame =
+    MinhashIndex.write(df, id, text, path, numHashes, bands, batchWidth)
 
-  /** Write `post` (doc_id, band, band_key, pband) as a postings table at
-    * `path`: partitioned by band and, when `batchWidth > 0`, by the
-    * ingest batch `pbatch = doc_id div batchWidth`; one file per
-    * partition. */
-  private def writePostings(post: DataFrame, batchWidth: Long, path: String): Unit = {
-    val (laid, partCols) =
-      if (batchWidth > 0)
-        (post.withColumn("pbatch", expr(s"doc_id div $batchWidth")), Seq("pband", "pbatch"))
-      else (post, Seq("pband"))
-    laid.repartition(partCols.map(col): _*)
-      .write.mode("overwrite").partitionBy(partCols: _*).parquet(path)
-  }
-
-  /** The `bands_fine` rows over `post` (doc_id, band, band_key, pband):
-    * the postings of buckets of at least `hotSize` rows, each keyed by
-    * its document's sub_key from `subKeys` (doc_id, sub_key). The one fine
-    * rule of the build, the append and the compact. */
-  private def fineOf(post: DataFrame, subKeys: DataFrame, hotSize: Long): DataFrame = {
-    val hot = post.groupBy("band", "band_key").agg(count(lit(1)).as("sz"))
-      .filter(col("sz") >= hotSize).select("band", "band_key")
-    post.join(hot, Seq("band", "band_key"), "left_semi")
-      .join(subKeys, "doc_id")
-      .select("doc_id", "band", "band_key", "sub_key", "pband")
-  }
-
-  /** APPEND a day's batch to a stored MinHash index — the one append
-    * behind the registry's `dedup_index_append`, its ensured delta and
-    * the daily job: the batch shingles + signs ONLY itself and lands as
-    * its own committed delta generation `batch=<batchId>` of the index's
-    * delta table, so a replay of the same `batchId` is an idempotent
-    * overwrite (the foreachBatch replay contract). Documents whose id
-    * `bands` or another committed generation already holds are SKIPPED
-    * (already indexed — this is what makes a replay after
-    * [[minhashIndexCompact]], or under a second batch id, a clean no-op
-    * instead of counting the document twice in every bucket size). The probes
-    * ([[graft.ops.DedupOps.fineProbeHits]]) read `bands` ∪ the committed
-    * generations, so a document appended today flags the very next
-    * probe's dups of it — no compact required.
-    *
-    * Generation rows keep the full-signature `sub_key`, so the append
-    * refreshes `bands_fine` from the stored tables without re-reading
-    * any text: the postings of buckets hot at the RESOLVED sizes (`bands`
-    * ∪ every committed generation), sub-keyed from `sub_keys` and the
-    * generation rows — buckets this very append pushes over the threshold
-    * included. That refresh reads the whole postings table once per
-    * append. The whole append runs under the retired root marker
-    * ([[graft.ops.IndexFs.mutate]]): a crash mid-append reads as an
-    * uncommitted index. Returns the per-band manifest (band, n_base,
-    * n_new): n_new counts this batch's generation, n_base the postings
-    * indexed before it (`bands` and every other committed generation). */
+  /** APPEND a day's batch to a stored MinHash index as its own committed
+    * delta generation `batch=<batchId>` ([[MinhashIndex.append]]).
+    * Returns (band, n_base, n_new). */
   def minhashIndexAppend(spark: SparkSession, bandsPath: String,
                          batch: DataFrame, id: String, text: String,
                          batchId: Long, numHashes: Int = 128,
-                         bands: Int = 16): DataFrame = {
-    import graft.ops.{Artifacts, IndexFs, MinhashIndex}
-    val ix = MinhashIndex.Ix(IndexFs.parent(bandsPath))
-    // Refusals BEFORE the marker retirement: a rejected call leaves a
-    // valid index valid.
-    Artifacts.requireGeometry(ix.root,
-      "numHashes" -> numHashes.toString, "bands" -> bands.toString)
-    val hotSize = MinhashIndex.checkedMeta(ix.root, "before appending")("hotSize").toLong
-    // The postings indexed before this batch: `bands` and every OTHER
-    // committed generation (a replay of `batchId` overwrites its own).
-    val others = IndexFs.committedGenerations(ix.delta)
-      .filterNot(_.endsWith(s"/batch=$batchId"))
-    val prior = Tables.read(spark, ix.bands).select("doc_id", "band")
-    val held = if (others.isEmpty) prior
-      else prior.unionByName(
-        MinhashIndex.generationRows(spark, ix, others).select("doc_id", "band"))
-    val banded = minhashBandsWithSub(
-        batch.join(held.select(col("doc_id").as(id)), Seq(id), "left_anti"),
-        id, text, numHashes, bands)
-      .withColumnRenamed(id, "doc_id")
-      .withColumn("pband", col("band"))
-    val fresh = IndexFs.mutate(ix.root) {
-      banded.repartition(col("pband"))
-        .write.mode("overwrite").partitionBy("pband").parquet(ix.generation(batchId))
-      val delta = MinhashIndex.deltaRows(spark, ix)
-      MinhashIndex.writeFine(fineOf(MinhashIndex.resolvedPostings(spark, ix),
-        Tables.read(spark, ix.subKeys).unionByName(delta.select("doc_id", "sub_key")), hotSize), ix)
-      if (others.isEmpty) delta
-      else MinhashIndex.generationRows(spark, ix, Seq(ix.generation(batchId)))
-    }
-    // One aggregate over both sides' rows: every band of either side gets
-    // a row.
-    held.select(col("band"), lit(true).as("in_base"))
-      .unionByName(fresh.select(col("band"), lit(false).as("in_base")))
-      .groupBy("band")
-      .agg(count_if(col("in_base")).as("n_base"), count_if(!col("in_base")).as("n_new"))
-      .orderBy("band")
-  }
+                         bands: Int = 16): DataFrame =
+    MinhashIndex.append(spark, bandsPath, batch, id, text, batchId, numHashes, bands)
 
-  /** COMPACT a stored MinHash index in place — the one compact behind
-    * the registry's `dedup_index_compact` and the maintenance remedy:
-    * folds every committed delta generation into `bands` (appended rows
-    * gain the `pbatch` ingest-batch axis from the recorded `batchWidth`,
-    * so the partition-pruned takedown is legal for them again), extends
-    * `sub_keys` with the appended documents' keys, rewrites `bands_fine`
-    * at the compacted bucket sizes, and REMOVES the folded generations.
-    * Afterwards the index is single-layout, exactly as
-    * [[writeMinhashIndex]] leaves it, and probes return what they
-    * returned before (ApiSpec pins it). The append's skip keeps every
-    * generation's ids out of `bands`, so only the generations themselves
-    * are de-duplicated. Runs under the retired root marker; a crash
-    * mid-compact reads as an uncommitted index. No-op (beyond the
-    * manifest) when no committed generation exists. Returns the per-band
-    * manifest of the compacted table with the build's n_postings =
-    * n_docs invariant. */
-  def minhashIndexCompact(spark: SparkSession, bandsPath: String): DataFrame = {
-    import graft.ops.{IndexFs, MinhashIndex}
-    val ix = MinhashIndex.Ix(IndexFs.parent(bandsPath))
-    // The fold overwrites the base table from a localCheckpoint whose
-    // blocks die with the JVM; on a crashed op's half-rewritten base, the
-    // fold and the generation removal would destroy the only intact copy
-    // of the appended rows.
-    val meta = MinhashIndex.checkedMeta(ix.root, "instead of compacting")
-    if (IndexFs.committedGenerations(ix.delta).nonEmpty) {
-      val cols = Seq("doc_id", "band", "band_key", "pband").map(col)
-      val delta = MinhashIndex.deltaRows(spark, ix)
-      // localCheckpoint severs each read from the overwrite of its source
-      val merged = Tables.read(spark, ix.bands).select(cols: _*)
-        .unionByName(delta.select(cols: _*).distinct())
-        .localCheckpoint()
-      val subKeys = Tables.read(spark, ix.subKeys)
-        .unionByName(delta.select("doc_id", "sub_key").distinct())
-        .localCheckpoint()
-      IndexFs.mutate(ix.root) {
-        writePostings(merged, meta("batchWidth").toLong, ix.bands)
-        subKeys.write.mode("overwrite").parquet(ix.subKeys)
-        MinhashIndex.writeFine(fineOf(merged, subKeys, meta("hotSize").toLong), ix)
-        // The folded generations retire with the marker still down: the
-        // remedy for a crashed in-place fold is a rebuild, not a re-run
-        // over a possibly partial base.
-        require(IndexFs.deleteRecursive(ix.delta),
-          s"could not remove the folded delta generations under ${ix.root}")
-      }
-    }
-    bandManifest(Tables.read(spark, ix.bands), "doc_id").orderBy("band")
-  }
+  /** COMPACT a stored MinHash index in place ([[MinhashIndex.compact]]).
+    * Returns the per-band manifest of the compacted table. */
+  def minhashIndexCompact(spark: SparkSession, bandsPath: String): DataFrame =
+    MinhashIndex.compact(spark, bandsPath)
 
-  /** Partition-pruned takedown on a stored MinHash index written by
-    * [[writeMinhashIndex]] WITH a `batchWidth` — the one delete behind
-    * the registry's `dedup_index_delete`: anti-joins `deleteIds` (one
-    * column, the document id) out of ONLY the (band, ingest-batch)
-    * partitions of `bands` containing them via dynamic partition
-    * overwrite — untouched batch directories stay byte-identical, and a
-    * fully-emptied partition throws toward a catalog DROP PARTITION —
-    * and out of `bands_fine` and `sub_keys`, all under one retired root
-    * marker. A takedown listing a document that a committed delta
-    * generation holds is refused: [[minhashIndexCompact]] first. Mutates
-    * in place; copy first if the original must stay pristine. */
+  /** Partition-pruned takedown on a stored MinHash index written with a
+    * `batchWidth` ([[MinhashIndex.delete]]). Mutates in place. */
   def minhashIndexDelete(spark: SparkSession, bandsPath: String,
-                         deleteIds: DataFrame, id: String): Unit = {
-    import graft.ops.{DedupOps, IndexFs, MinhashIndex}
-    val ix = MinhashIndex.Ix(IndexFs.parent(bandsPath))
-    // Refusals BEFORE the marker retirement: a rejected mis-call must
-    // leave a valid index valid.
-    val batchWidth = MinhashIndex.checkedMeta(ix.root, "before the takedown")("batchWidth")
-    require(batchWidth.toLong > 0,
-      s"index at ${ix.root} was written without a batchWidth (ingest-batch " +
-        "partition axis) — partition-pruned deletes need it; rebuild " +
-        "with writeMinhashIndex(batchWidth = <ids per ingest batch>)")
-    val ids = deleteIds.select(col(id).as("doc_id"))
-    // A takedown that rewrote only `bands` would keep serving deleted
-    // documents out of the generations the probes read.
-    require(MinhashIndex.deltaRows(spark, ix).join(ids, Seq("doc_id"), "left_semi")
-        .limit(1).count() == 0L,
-      s"index at ${ix.root} has committed delta generations containing " +
-        "documents in the deletion list — run minhashIndexCompact to " +
-        "fold the deltas into the base (O(index), no corpus re-read), " +
-        "then re-run the takedown against the single layout")
-    IndexFs.mutate(ix.root) {
-      DedupOps.deleteFromBands(spark, ix.bands, ids)
-      // `bands_fine` and `sub_keys` hold the same documents: a stale fine
-      // row would flag new text as a dup of a document the index no
-      // longer holds, and a later append's refresh would resurrect it.
-      // localCheckpoint severs each read from the overwrite of its own
-      // source; both tables are small enough for a full rewrite.
-      MinhashIndex.writeFine(MinhashIndex.fineRows(spark, ix)
-        .join(ids, Seq("doc_id"), "left_anti").localCheckpoint(), ix)
-      Tables.read(spark, ix.subKeys).join(ids, Seq("doc_id"), "left_anti")
-        .localCheckpoint()
-        .write.mode("overwrite").parquet(ix.subKeys)
-    }
-  }
+                         deleteIds: DataFrame, id: String): Unit =
+    MinhashIndex.delete(spark, bandsPath, deleteIds, id)
+
+  /** Bucket-size skew audit over a stored MinHash postings table
+    * ([[MinhashIndex.skew]]). Registry binding: `minhash_index_stats`. */
+  def minhashIndexSkew(bands: DataFrame): DataFrame = MinhashIndex.skew(bands)
 
   /** Partition-pruned takedown on a stored ANN code table
-    * ([[buildAnnIndex]]'s `<path>/ivfpq_codes` layout; the registry's
-    * `ann_index_delete` binds it): rewrites only the cell partitions
-    * containing deleted vectors — in the base, in the committed
-    * `ivfpq_codes_delta` (a delta-only vector must not survive its own
-    * takedown), AND in the `cells` membership table (the streaming pool
-    * resolves membership from cells ∪ delta, so a stale row would keep
-    * serving the id whenever the caller's corpus purge lags) — all under
-    * one retired root marker, with the split marker retired (split
-    * side-tables reflect pre-delete membership). A delete that would
-    * fully EMPTY a base cell is REFUSED before the marker retirement
-    * (toward a catalog DROP PARTITION — and so a rejected call leaves a
-    * committed index committed), and so is a delete on an uncommitted
-    * index; an emptied DELTA cell is fine — the day-scale delta is
-    * library-managed and simply loses the partition. Mutates in place;
-    * the corpus float column remains the caller's own table to purge. */
+    * (`<path>/ivfpq_codes`; [[IvfPqIndex.delete]]). Mutates in place. */
   def annIndexDelete(spark: SparkSession, codesPath: String,
-                     deleteIds: DataFrame, id: String): Unit = {
-    // Refusals BEFORE the marker retirement (review r10, the
-    // minhashIndexDelete discipline): a crashed index, or a mis-call — a
-    // table that is not a cell-partitioned code layout — must leave a
-    // valid index valid, not retired-and-never-recommitted. The commit
-    // check comes first: a crash can leave the code table unreadable.
-    val ix = graft.ops.IvfPqIndex.Ix(graft.ops.IndexFs.parent(codesPath))
-    graft.ops.IndexFs.requireCommitted(ix.root,
-      "rebuild via buildAnnIndex before deleting")
-    val liveCols = Tables.read(spark, codesPath).columns.toSet
-    Seq("vec_id", "cell").foreach(c => require(liveCols.contains(c),
-      s"table at $codesPath has no '$c' column — not a cell-partitioned " +
-        "ANN code table (buildAnnIndex's ivfpq_codes layout)"))
-    val del = deleteIds.select(col(id).as("vec_id")).localCheckpoint()
-    // The emptied-cell REFUSAL runs before the marker retirement (review
-    // r13: deleteFromCodes' internal guard throwing mid-lifecycle left
-    // the base rewritten and the index permanently uncommitted).
-    val emptied = graft.ops.VectorOps.emptiedCells(Tables.read(spark, codesPath), del)
-    require(emptied.isEmpty,
-      s"cells ${emptied.mkString(",")} of $codesPath would be emptied by " +
-        "this delete; drop those partitions via the catalog instead of " +
-        "a data rewrite")
-    val hasDelta = graft.ops.IndexFs.committed(ix.ivfCodesDelta)
-    graft.ops.IndexFs.mutate(ix.root) {
-      graft.ops.VectorOps.deleteFromCodes(spark, codesPath, del)
-      // The delta (review r13): the probe resolvers union it with the
-      // base, so a vector that exists ONLY in the delta would survive a
-      // base-only takedown. It takes a guard-FREE full rewrite: it is
-      // day-scale and library-managed, so an emptied cell has no catalog
-      // partition to drop — the directory just goes. Declared schema: a
-      // data-file-less delta must read as empty, not crash inference.
-      if (hasDelta) {
-        val survivors = Tables.read(spark, ix.ivfCodesDelta, Some(graft.ops.VectorOps.codesSchema))
-          .select("vec_id", "m", "code", "cell")
-          .join(del, Seq("vec_id"), "left_anti")
-          .localCheckpoint()
-        survivors.withColumn("pcell", col("cell"))
-          .repartition(col("pcell"))
-          .write.mode("overwrite").partitionBy("pcell").parquet(ix.ivfCodesDelta)
-      }
-      // cells purge (review r13): the split-aware streaming probe builds
-      // its pool from cells ∪ delta, so a stale membership row serves a
-      // deleted id whenever the caller's corpus purge lags — and the
-      // compact would fold the stale row forward. One scalar-column
-      // rewrite; deletes are rare.
-      if (graft.ops.IndexFs.committed(ix.cells)) {
-        val kept = Tables.read(spark, ix.cells)
-          .join(del, Seq("vec_id"), "left_anti")
-          .localCheckpoint()
-        kept.write.mode("overwrite").parquet(ix.cells)
-      }
-      // A committed cell split reflects the PRE-delete membership
-      // (ADVICE r12): the split-aware probe computes its pool >= k floor
-      // from cells_split rows before joining the live corpus, so stale
-      // split rows inflate the pool with deleted vec_ids; probes fall
-      // back to whole-cell scans until the next annIndexSplit.
-      graft.ops.IndexFs.retire(ix.root, graft.ops.IndexFs.Split)
-    }
-  }
+                     deleteIds: DataFrame, id: String): Unit =
+    IvfPqIndex.delete(spark, codesPath, deleteIds, id)
 
   /** LSH candidate pairs (id_a < id_b, distinct): bucket-local i<j
     * enumeration over each (band, band_key) group — pair fan-out bounded
@@ -806,22 +513,6 @@ object GraftAPI {
       .withColumn("re_tokens",
         size(regexp_extract_all(lower(col(text)),
           lit("[a-z]+|[0-9]|[^a-z0-9 ]"), lit(0))).cast("long"))
-
-  /** Quality heuristics: length, token count, mean word length, stopword
-    * ratio — the cheap pre-filter every curation pipeline runs first.
-    * Zero-shuffle. (Punctuation-class token counts live in the tokenizer
-    * surface — see `re_tokens` above — not here.) */
-  def qualityScore(df: DataFrame, text: String,
-                   stopwords: Seq[String] = graft.ops.TextOps.Stopwords): DataFrame = {
-    val toks = split(lower(col(text)), " ")
-    val stopArr = array(stopwords.map(lit): _*)
-    df.withColumn("n_chars", length(col(text)).cast("long"))
-      .withColumn("n_tokens", size(toks).cast("long"))
-      .withColumn("mean_word_len",
-        r6(length(regexp_replace(col(text), " ", "")).cast("double") / size(toks)))
-      .withColumn("stopword_ratio",
-        r6(size(filter(toks, t => array_contains(stopArr, t))).cast("double") / size(toks)))
-  }
 
   /** Per-vector L2 normalization of an array<float|double> column (HOF
     * arithmetic, zero shuffle): adds `l2_norm` and replaces `vec` with
@@ -1209,7 +900,7 @@ object GraftAPI {
     // same loud null/ragged validation as the PQ encoders (review r10):
     // a null vector would otherwise argmin to the lowest cell id and a
     // ragged one would silently poison the centroid means
-    validatedDim(e, vec, 1)
+    IvfPqIndex.validatedDim(e, vec, 1)
     graft.ops.VectorOps.assignCells(e,
       graft.ops.VectorOps.kmeansCentroids(e, iters, k))
       .select(col("vec_id").as(id), col("cell"))
@@ -1233,20 +924,9 @@ object GraftAPI {
       // and the assignment's many plan references read cached blocks
       // instead of re-running the upstream subtree per reference.
       graft.ops.VectorOps.codeArrays(graft.ops.VectorOps.trainPq(e, m,
-          validatedDim(e, vec, m) / m, k, iters, (_, st) => CacheLifecycle.pinEager(st)))
+          IvfPqIndex.validatedDim(e, vec, m) / m, k, iters, (_, st) => CacheLifecycle.pinEager(st)))
         .select(col("vec_id").as(id), col("code"))
     }
-  }
-
-  /** [[graft.ops.VectorOps.checkedDim]] for the encoders, which infer
-    * their geometry from the data: an empty frame has none to infer, and
-    * the width must split into `m` subspaces. Returns the width. */
-  private def validatedDim(e: DataFrame, vec: String, m: Int): Int = {
-    val n = graft.ops.VectorOps.checkedDim(e, s"'$vec'").getOrElse(
-      throw new IllegalArgumentException(
-        s"no rows — cannot infer vector dimensionality from '$vec'"))
-    require(n % m == 0, s"vector length $n not divisible by m=$m subspaces")
-    n
   }
 
   /** IVF + residual-PQ index encoder — the artifact producer for the
@@ -1275,251 +955,46 @@ object GraftAPI {
       // the Lloyd fold and the code assignment — unpinned, each plan
       // reference would re-run the full coarse training subtree.
       graft.ops.VectorOps.codeArrays(graft.ops.VectorOps.trainIvfPq(e, cells, m,
-          validatedDim(e, vec, m) / m, k, iters, (_, st) => CacheLifecycle.pinEager(st)),
+          IvfPqIndex.validatedDim(e, vec, m) / m, k, iters, (_, st) => CacheLifecycle.pinEager(st)),
           "cell")
         .select(col("vec_id").as(id), col("cell"), col("code"))
     }
   }
 
   /** Persist a complete IVF + residual-PQ ANN index for `df` under
-    * `path` — the production "build once at ingest, probe forever" job
-    * (the registry twin is `build_ivfpq_index` over the harness corpus):
-    * trains the coarse quantizer and both PQ codebooks, encodes the
-    * corpus, and writes the parquet artifact set (`coarse`, `cells`,
-    * `pq_codebooks`, `pq_codes`, `ivfpq_codebooks`, `ivfpq_codes`
-    * hive-partitioned by coarse cell, committed last under the root
-    * marker). A probe reads ONE cell directory + two broadcast codebook
-    * tables; float vectors stay out of the read path until the shortlist
-    * rerank. Training is deterministic (lowest-id seeds, 6-dp-snapped
-    * DECIMAL arithmetic), so a rebuild byte-matches — backfill-stable.
-    * Returns the per-cell manifest (cell, n_vecs, n_codes), the fan-out a
-    * capacity planner reads. */
+    * `path` — the build-once, probe-forever job ([[IvfPqIndex.write]]:
+    * layout and markers there). Returns the per-cell manifest (cell,
+    * n_vecs, n_codes). */
   def buildAnnIndex(df: DataFrame, id: String, vec: String, path: String,
                     cells: Int = 16, m: Int = 8, k: Int = 16,
-                    iters: Int = 2): DataFrame = {
-    require(cells > 0 && m > 0 && k > 0 && iters > 0,
-      s"cells/m/k/iters must be positive: $cells/$m/$k/$iters")
-    val e = df.select(col(id).as("vec_id"), col(vec).cast("array<double>").as("x"))
-    validatedDim(e, vec, m)
-    val s = df.sparkSession
-    val ix = graft.ops.IvfPqIndex.Ix(path)
-    graft.ops.IvfPqIndex.buildAt(s, e, ix, cells, m, k, iters)
-    val nv = Tables.read(s, ix.cells)
-      .groupBy("cell").agg(count(lit(1)).as("n_vecs"))
-    val nc = Tables.read(s, ix.ivfCodes)
-      .groupBy("cell").agg(count(lit(1)).as("n_codes"))
-    nv.join(nc, "cell").select(col("cell"), col("n_vecs"), col("n_codes"))
-  }
+                    iters: Int = 2): DataFrame =
+    IvfPqIndex.write(df, id, vec, path, cells, m, k, iters)
 
-  /** Hot-cell SPLIT maintenance on a stored [[buildAnnIndex]] layout —
-    * the remedy for what [[annIndexStats]]'s `imbalance`/`max_cell`
-    * detect (the facade form of the registry's `ann_index_split`, and
-    * the ANN mirror of the MinHash hot-bucket reband): cells holding ≥
-    * `hotSize` vectors train `subK` sub-centroids on their RESIDUALS
-    * against the stored coarse centroids (one grouped Lloyd pass trains
-    * every hot cell in the same jobs, same 6-dp-snapped deterministic
-    * math as the codebooks) and re-assign into `coarse_split` /
-    * `cells_split` side-tables next to the index, guarded by their own
-    * commit marker (a crash mid-write reads as "no split"). Probes narrow a split cell to the sub-cells nearest the
-    * query's residual instead of scanning `max_cell` vectors. `df` must
-    * be the SAME corpus the index was built from — only the hot cells'
-    * vectors are read. Returns the per-hot-cell manifest
-    * (cell, n_vecs, n_sub, max_sub); empty when no cell is hot.
-    * Harness twin: `ann_index_split` / `knn_ivf_split`. */
+  /** Hot-cell SPLIT maintenance on a stored [[buildAnnIndex]] layout
+    * ([[IvfPqIndex.split]]). Returns the per-hot-cell manifest (cell,
+    * n_vecs, n_sub, max_sub). */
   def annIndexSplit(df: DataFrame, id: String, vec: String, path: String,
-                    hotSize: Long = 32L, subK: Int = 4): DataFrame = {
-    require(hotSize > 1 && subK > 1,
-      s"hotSize/subK must exceed 1: $hotSize/$subK")
-    val s = df.sparkSession
-    val ix = graft.ops.IvfPqIndex.Ix(path)
-    val e = df.select(col(id).as("vec_id"),
-      col(vec).cast("array<double>").as("x"))
-    graft.ops.IvfPqIndex.rewriteSplitFrom(
-      graft.ops.VectorOps.splitRowsOf(s, e, ix, hotSize, subK), ix)
-    graft.ops.VectorOps.splitManifest(s, ix)
-  }
+                    hotSize: Long = 32L, subK: Int = 4): DataFrame =
+    IvfPqIndex.split(df, id, vec, path, hotSize, subK)
 
-  /** APPEND a batch of vectors to a stored [[buildAnnIndex]] layout —
-    * the ANN mirror of [[minhashIndexAppend]], and the one append behind
-    * the registry's `ann_index_append`, its ensured delta and the daily
-    * job: the batch coarse-assigns against the STORED centroids and
-    * residual-encodes against the STORED codebooks — NO retraining, so a
-    * re-encode of the same batch is byte-identical — and folds into the
-    * single committed `ivfpq_codes_delta` sibling (distinct per
-    * (vec_id, m): a replayed batch folds to the same rows, the
-    * foreachBatch replay contract). The probe resolvers
-    * ([[graft.ops.IvfPqIndex.resolvedCodes]], the split-aware
-    * [[graft.streaming.StreamingOps.annProbeBatch]] pool) serve base ∪
-    * committed delta, so an appended vector is servable the very next
-    * probe with no compact. Rows whose `vec_id` the base `cells` table
-    * already holds are SKIPPED (already indexed — this is what makes a
-    * replay AFTER [[annIndexCompact]] a clean no-op instead of
-    * double-serving the id through base and delta). The delta rewrite
-    * runs under the retired root marker: overwrite drops the old
-    * generation first, so a crash mid-write must read as an uncommitted
-    * index, not a valid index silently missing its appended vectors.
-    * Returns the merged per-cell manifest (cell, n_base, n_new). At
-    * 100 TB this is the daily vector arrival job: two broadcast-argmin
-    * map passes over the batch plus one delta-sized write — the corpus
-    * and the stored codes are never rescanned. */
+  /** APPEND a batch of vectors to a stored [[buildAnnIndex]] layout,
+    * encoded against the stored codebooks ([[IvfPqIndex.append]]).
+    * Returns (cell, n_base, n_new). */
   def annIndexAppend(batch: DataFrame, id: String, vec: String,
-                     path: String): DataFrame = {
-    val s = batch.sparkSession
-    val ix = graft.ops.IvfPqIndex.Ix(path)
-    // Geometry refusals BEFORE the marker retirement (the lifecycle
-    // discipline): a rejected call leaves a valid index valid.
-    val (mM, dim) = graft.ops.IvfPqIndex.geometry(path)
-    graft.ops.IndexFs.requireCommitted(path,
-      "rebuild via buildAnnIndex before appending")
-    val e = batch.select(col(id).as("vec_id"),
-      col(vec).cast("array<double>").as("x"))
-    // An EMPTY day commits a no-op cleanly (the minhashIndexAppend
-    // contract): the guard finds no width to check and nothing is
-    // encoded — the fold below just rewrites the prior delta (or lands a
-    // data-file-less one).
-    val newCodes = graft.ops.VectorOps.checkedDim(e, s"'$vec'", Some((path, dim))) match {
-      case None =>
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(
-            graft.ops.VectorOps.codesSchema.fields.filter(_.name != "pcell")))
-      case Some(_) =>
-        val fresh = e.join(Tables.read(s, ix.cells).select("vec_id"),
-          Seq("vec_id"), "left_anti")
-        // The ONE stored-codebook encode path, shared with the streaming
-        // append (review r13): byte-stable replay must not drift.
-        graft.ops.VectorOps.encodeAgainstStored(fresh,
-          Tables.read(s, ix.coarse), Tables.read(s, ix.ivfCodebooks),
-          mM, dim / mM)
-    }
-    // Fold into the single delta generation. Declared schema on the
-    // prior read: a previous empty append commits a data-file-less
-    // table. One shuffle by cell serves both the distinct (cell is one
-    // of its keys) and the one-file-per-cell write; localCheckpoint
-    // severs the read from the overwrite.
-    val merged = (if (graft.ops.IndexFs.committed(ix.ivfCodesDelta))
-      Tables.read(s, ix.ivfCodesDelta, Some(graft.ops.VectorOps.codesSchema))
-        .select("vec_id", "m", "code", "cell")
-        .unionByName(newCodes)
-    else newCodes).repartition(col("cell")).distinct().localCheckpoint()
-    graft.ops.IndexFs.mutate(path) {
-      merged.withColumn("pcell", col("cell"))
-        .write.mode("overwrite").partitionBy("pcell")
-        .parquet(ix.ivfCodesDelta)
-    }
-    // One aggregate over both sides' rows: every cell of either side
-    // gets a row (review r10), so a coarse cell empty in the base but
-    // receiving appended vectors does not drop out of the count.
-    Tables.read(s, ix.cells).select(col("cell"), lit(true).as("in_base"))
-      .unionByName(Tables.read(s, ix.ivfCodesDelta, Some(graft.ops.VectorOps.codesSchema))
-        .filter(col("m") === 0).select(col("cell"), lit(false).as("in_base")))
-      .groupBy("cell")
-      .agg(count_if(col("in_base")).as("n_base"), count_if(!col("in_base")).as("n_new"))
-      .orderBy("cell")
-  }
+                     path: String): DataFrame =
+    IvfPqIndex.append(batch, id, vec, path)
 
-  /** COMPACT a stored [[buildAnnIndex]] layout in place (the ANN mirror
-    * of [[minhashIndexCompact]], and the one compact behind the
-    * registry's `ann_index_compact` and the maintenance remedy): folds
-    * the committed `ivfpq_codes_delta` into the `ivfpq_codes` table and
-    * the appended (vec_id, cell) memberships into `cells`, removes the
-    * folded delta, and retires the split marker (the split side-tables
-    * reflect PRE-compact cell membership — probes fall back to
-    * whole-cell pools until the next [[annIndexSplit]], the same rule
-    * the takedown applies). Single layout afterwards; probes resolve the
-    * base (and an empty re-appended delta) and return exactly what
-    * base ∪ delta returned (the fold is a set union, distinct per
-    * (vec_id, m) row — replay-idempotent). Runs under the retired root
-    * marker. Returns the per-cell manifest (cell, n_vecs, n_codes) of
-    * the compacted table. */
-  def annIndexCompact(spark: SparkSession, path: String): DataFrame = {
-    val ix = graft.ops.IvfPqIndex.Ix(path)
-    // Same rationale as minhashIndexCompact (review r13): the in-place
-    // fold must not run on top of a crashed lifecycle op's partial base.
-    graft.ops.IndexFs.requireCommitted(path,
-      "rebuild via buildAnnIndex instead of compacting")
-    if (graft.ops.IndexFs.committed(ix.ivfCodesDelta)) {
-      val delta = Tables.read(spark, ix.ivfCodesDelta, Some(graft.ops.VectorOps.codesSchema))
-        .select("vec_id", "m", "code", "cell")
-      val merged = Tables.read(spark, ix.ivfCodes)
-        .select("vec_id", "m", "code", "cell")
-        .unionByName(delta)
-        .distinct()
-        .localCheckpoint()
-      val newCells = Tables.read(spark, ix.cells)
-        .unionByName(delta.filter(col("m") === 0).select("vec_id", "cell"))
-        .distinct()
-        .localCheckpoint()
-      graft.ops.IndexFs.mutate(path) {
-        merged.withColumn("pcell", col("cell"))
-          .repartition(col("pcell"))
-          .write.mode("overwrite").partitionBy("pcell")
-          .parquet(ix.ivfCodes)
-        newCells.write.mode("overwrite").parquet(ix.cells)
-        require(graft.ops.IndexFs.deleteRecursive(ix.ivfCodesDelta),
-          s"could not remove the folded delta under $path")
-        graft.ops.IndexFs.retire(path, graft.ops.IndexFs.Split)
-      }
-    }
-    Tables.read(spark, ix.ivfCodes)
-      .groupBy("cell")
-      .agg(countDistinct(col("vec_id")).as("n_vecs"),
-        count(lit(1)).as("n_codes"))
-      .orderBy("cell")
-  }
+  /** COMPACT a stored [[buildAnnIndex]] layout in place
+    * ([[IvfPqIndex.compact]]). Returns (cell, n_vecs, n_codes). */
+  def annIndexCompact(spark: SparkSession, path: String): DataFrame =
+    IvfPqIndex.compact(spark, path)
 
-  /** Health audit of a stored ANN index ([[buildAnnIndex]] layout) — the
-    * one-row dashboard an operator reads before deciding to re-train:
-    * cell coverage vs the quantizer's `quantizerCells` capacity, size
-    * skew (`imbalance` = 6-dp max-over-mean cell size, the re-train
-    * trigger; `max_cell` bounds worst-case probe I/O), and the raw code
-    * count for the m-codes-per-vector encode cross-check. Caller passes
-    * the STORED tables (`cells` = (vec_id, cell), `codes` = the code
-    * manifest) — reads touch only scalar columns, never floats, so the
-    * audit costs one pass over ~12 bytes/vector at any corpus size.
-    * Registry binding: `ann_index_stats` (16 quantizer cells). */
+  /** One-row health audit of a stored ANN index from its `cells` and
+    * code tables ([[IvfPqIndex.stats]]). Registry binding:
+    * `ann_index_stats` (16 quantizer cells). */
   def annIndexStats(cells: DataFrame, codes: DataFrame,
-                    quantizerCells: Int): DataFrame = {
-    require(quantizerCells > 0, "quantizerCells must be positive")
-    val per = cells.groupBy("cell").agg(count(lit(1)).as("n"))
-    per.agg(
-        count(lit(1)).as("n_cells"),
-        sum(col("n")).as("n_vecs"),
-        min(col("n")).as("min_cell"),
-        max(col("n")).as("max_cell"),
-        r6(max(col("n")) * count(lit(1)) / sum(col("n")).cast("double"))
-          .as("imbalance"))
-      .withColumn("empty_cells", lit(quantizerCells.toLong) - col("n_cells"))
-      .crossJoin(broadcast(codes.agg(count(lit(1)).as("n_codes"))))
-      .select(col("n_cells"), col("n_vecs"), col("min_cell"),
-        col("max_cell"), col("imbalance"), col("empty_cells"), col("n_codes"))
-  }
-
-  /** Bucket-size skew audit over a stored MinHash postings table
-    * ([[writeMinhashIndex]] layout / [[minhashBands]] output): per band,
-    * the bucket count, max bucket, hot (≥2) vs singleton split, and the
-    * exact LSH candidate-pair volume Σ sz·(sz−1)/2 that band will feed a
-    * pair join — the quadratic-blowup early warning that decides a
-    * re-band (more bands / more rows per band) before a hot bucket
-    * stalls candidate generation. Two fixed-width aggregations over the
-    * stored scalar columns; document text is never touched. The
-    * registry's `minhash_index_stats` is this audit over its stored
-    * postings. */
-  def minhashIndexSkew(bands: DataFrame): DataFrame = {
-    val buckets = bands.groupBy("band", "band_key").agg(count(lit(1)).as("sz"))
-    buckets.groupBy("band")
-      .agg(count(lit(1)).as("n_buckets"),
-        max(col("sz")).as("max_bucket"),
-        sum(when(col("sz") >= 2, 1L).otherwise(0L)).as("hot_buckets"),
-        sum(when(col("sz") === 1, 1L).otherwise(0L)).as("singletons"),
-        // sz·(sz−1) is always even → the halved sum is exact in longs —
-        // via INTEGER div (review r10): `/` coerces to Double, which loses
-        // exactness past 2^53 (sz ≳ 9.5e7, exactly the hot-bucket blowup
-        // this audit measures).
-        sum(expr("CAST(sz * (sz - 1) AS BIGINT) div 2")).as("cand_pairs"))
-      .select(col("band").cast("int").as("band"), col("n_buckets"),
-        col("max_bucket"), col("hot_buckets"), col("singletons"),
-        col("cand_pairs"))
-  }
+                    quantizerCells: Int): DataFrame =
+    IvfPqIndex.stats(cells, codes, quantizerCells)
 
   /** Metadata-FILTERED ANN against a stored index: top-`k` by cosine
     * among rows of `df` satisfying `pred`, scanning only the `probes`

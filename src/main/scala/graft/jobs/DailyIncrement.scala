@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   *      ([[graft.ops.PipelineOps.curationIncremental]]) →
   *      `<outDir>/verdicts`. The near-dup leg probes the base root's
   *      `bands` ∪ its committed delta generations
-  *      ([[graft.ops.DedupOps.fineProbeHits]]), so TODAY'S probe sees
+  *      ([[graft.ops.MinhashIndex.probeHits]]), so TODAY'S probe sees
   *      YESTERDAY'S appended documents, compacted or not (DedupSpec pins
   *      a batch doc flagging via an appended doc without any compact);
   *   2. SHARDS: the day's KEEPERS pack into training shards continuing
@@ -32,14 +32,14 @@ import org.apache.spark.sql.functions._
   *   3. INDEX: yesterday's band postings land as delta generation 1 of
   *      the base MinHash index, which refreshes its `bands_fine` table
   *      at the resolved bucket sizes ([[graft.ops.DedupOps.dedupIndexAppend]],
-  *      bound to [[graft.api.GraftAPI.minhashIndexAppend]] — the same
+  *      bound to [[graft.ops.MinhashIndex.append]] — the same
   *      append the probes' ensured delta runs, so stage 1's probe sees
   *      exactly these postings; tomorrow's run appends today the same
   *      way); the per-band manifest → `<outDir>/postings_manifest`;
   *   4. ANN: the appended embedding batch is encoded against the base
   *      index's STORED codebooks (coarse-assign + residual-PQ, no
-  *      retraining — `ann_index_append`, bound to the library's
-  *      [[graft.api.GraftAPI.annIndexAppend]], the same append the
+  *      retraining — `ann_index_append`, bound to
+  *      [[graft.ops.IvfPqIndex.append]], the same append the
   *      probes' ensured delta runs) and folds into the cell-partitioned
   *      delta next to the base codes, which the ANN probes resolve the
   *      same way ([[graft.ops.IvfPqIndex.resolvedCodes]] →
@@ -94,7 +94,7 @@ object DailyIncrement {
       val keep = verdicts.filter(col("verdict") === "keep").select("doc_id")
       // TODAY's batch boundary (r13): docs >= AppendCutoff; everything
       // below it — base AND yesterday's delta — is already packed.
-      val cut = graft.ops.DedupOps.AppendCutoff
+      val cut = graft.ops.MinhashIndex.AppendCutoff
       // shared tokenization (review r10): one definition with the
       // registry packer, so the base/batch token formula cannot drift
       val toks = graft.ops.PipelineOps.tokenCounts(spark, sfDir)

@@ -1,6 +1,6 @@
 package graft.jobs
 
-import graft.Tables
+import graft.ops.{Artifacts, IvfPqIndex, MinhashIndex}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -26,13 +26,13 @@ import org.apache.spark.sql.functions._
   * SAME root —
   *
   *   - minhash: fold the delta generations into the base root in place
-  *     ([[graft.api.GraftAPI.minhashIndexCompact]], which rewrites
+  *     ([[graft.ops.MinhashIndex.compact]], which rewrites
   *     `bands_fine` at the compacted sizes); the next ensured delta is
   *     empty;
   *   - ann: fold the codes delta into the base root in place
-  *     ([[graft.api.GraftAPI.annIndexCompact]], after which `cells` holds
+  *     ([[graft.ops.IvfPqIndex.compact]], after which `cells` holds
   *     the appended vectors) and rebuild the cell-split side-tables over
-  *     that membership ([[graft.api.GraftAPI.annIndexSplit]]), so a cell
+  *     that membership ([[graft.ops.IvfPqIndex.split]]), so a cell
   *     pushed over the hot threshold by appends splits with ALL its
   *     members; the next ensured delta is empty;
   *
@@ -58,32 +58,33 @@ object Maintenance {
                            unremedied: Long, remedyJob: String)
 
   /** One family's posture as a one-row frame (family, hot_shards,
-    * max_shard, unremedied) over `postings` restricted to `touched`
-    * shards. Semantics chosen so the loop CONVERGES and stays O(day + one
-    * scalar-column pass) (review r12): only shards the delta touched are
-    * audited (nothing else can newly cross a threshold today); sizes still
-    * count base ∪ delta rows, so a slow multi-day drift is caught the day
-    * it crosses.
+    * max_shard, unremedied) over its [[graft.ops.Artifacts.AuditInputs]]:
+    * the shard rows restricted to the delta-touched shards. Semantics
+    * chosen so the loop CONVERGES and stays O(day + one scalar-column
+    * pass) (review r12): only shards the delta touched are audited
+    * (nothing else can newly cross a threshold today); sizes still count
+    * base ∪ delta rows, so a slow multi-day drift is caught the day it
+    * crosses.
     *
     * One aggregate answers all three counts: the `covered` keys ride the
-    * postings' union with weight 0, so a shard's size is the sum of the
+    * shards' union with weight 0, so a shard's size is the sum of the
     * weights and it is covered when its smallest weight is 0. The touched
     * keys are a broadcast semi-join build side, which duplicates cannot
     * change, so they are not de-duplicated first. */
-  private def posture(family: String, postings: DataFrame, touched: DataFrame,
-                      keys: Seq[String], threshold: Long,
-                      covered: DataFrame): DataFrame =
-    postings.withColumn("w", lit(1L))
-      .unionByName(covered.withColumn("w", lit(0L)))
-      .join(broadcast(touched), keys, "left_semi")
+  private def posture(family: String, in: Artifacts.AuditInputs): DataFrame = {
+    val keys = in.touched.columns.toSeq
+    in.shards.withColumn("w", lit(1L))
+      .unionByName(in.covered.withColumn("w", lit(0L)))
+      .join(broadcast(in.touched), keys, "left_semi")
       .groupBy(keys.map(col): _*)
       .agg(sum("w").as("sz"), min("w").as("uncovered"))
-      .filter(col("sz") >= threshold)
+      .filter(col("sz") >= in.hotSize)
       .agg(count(lit(1)).as("hot_shards"),
         coalesce(max("sz"), lit(0L)).as("max_shard"),
         count(when(col("uncovered") === 1L, lit(1))).as("unremedied"))
       .select(lit(family).as("family"), col("hot_shards"), col("max_shard"),
         col("unremedied"))
+  }
 
   private val remedyJobs = Map(
     "minhash" -> "graft.jobs.MaintenanceRun (in-place postings compact on this root)",
@@ -95,29 +96,8 @@ object Maintenance {
     * the stats-ops cost class); deltas are ensured, so the posture is a
     * pure function of the corpus. */
   def audit(spark: SparkSession, sfDir: String): Seq[Posture] = {
-    val mhIx = graft.ops.MinhashIndex.ensureBase(spark, sfDir)
-    graft.ops.MinhashIndex.ensureDelta(spark, sfDir, mhIx)
-    val mhDelta = graft.ops.MinhashIndex.deltaRows(spark, mhIx).select("band", "band_key")
-    val mhFineCovered = graft.ops.MinhashIndex.fineRows(spark, mhIx).select("band", "band_key")
-    val mh = posture("minhash",
-      Tables.read(spark, mhIx.bands).select("band", "band_key")
-        .unionByName(mhDelta),
-      mhDelta, Seq("band", "band_key"),
-      graft.ops.DedupOps.RebandHotSize, mhFineCovered)
-    val annIx = graft.ops.IvfPqIndex.ensureBase(spark, sfDir)
-    graft.ops.IvfPqIndex.ensureDelta(spark, sfDir, annIx)
-    val annDelta = Tables.read(spark, annIx.ivfCodesDelta, Some(graft.ops.VectorOps.codesSchema))
-      .filter(col("m") === 0).select("cell")
-    val annSplitCovered =
-      if (graft.ops.IndexFs.committed(annIx.root, graft.ops.IndexFs.Split))
-        Tables.read(spark, s"${annIx.root}/coarse_split",
-          Some(graft.ops.VectorOps.splitCentsSchema)).select("cell")
-      else spark.emptyDataFrame.withColumn("cell", lit(0L)).limit(0)
-    val ann = posture("ann",
-      Tables.read(spark, annIx.cells).select("cell")
-        .unionByName(annDelta),
-      annDelta, Seq("cell"),
-      graft.ops.VectorOps.SplitHotSize, annSplitCovered)
+    val mh = posture("minhash", MinhashIndex.auditInputs(spark, sfDir))
+    val ann = posture("ann", IvfPqIndex.auditInputs(spark, sfDir))
     val rows = mh.unionByName(ann).collect()
       .map(r => r.getString(0) -> r).toMap
     Seq("minhash", "ann").map { f =>
@@ -139,14 +119,12 @@ object Maintenance {
   private[jobs] def remedy(spark: SparkSession, sfDir: String,
                            family: String): Unit = family match {
     case "minhash" =>
-      graft.api.GraftAPI.minhashIndexCompact(spark,
-        graft.ops.MinhashIndex.ensureBase(spark, sfDir).bands)
+      MinhashIndex.compact(spark, MinhashIndex.ensureBase(spark, sfDir).bands)
     case "ann" =>
-      val ix = graft.ops.IvfPqIndex.ensureBase(spark, sfDir)
-      graft.api.GraftAPI.annIndexCompact(spark, ix.root)
-      graft.api.GraftAPI.annIndexSplit(graft.Tables.embeddings(spark, sfDir),
-        "vec_id", "embedding", ix.root,
-        graft.ops.VectorOps.SplitHotSize, graft.ops.VectorOps.SplitSubK)
+      val ix = IvfPqIndex.ensureBase(spark, sfDir)
+      IvfPqIndex.compact(spark, ix.root)
+      IvfPqIndex.split(graft.Tables.embeddings(spark, sfDir), "vec_id", "embedding",
+        ix.root, IvfPqIndex.SplitHotSize, IvfPqIndex.SplitSubK)
     case other =>
       throw new IllegalArgumentException(s"unknown index family '$other'")
   }

@@ -12,6 +12,15 @@ package graft.ops
   */
 private[graft] object Artifacts {
 
+  /** One index family's inputs to the hot-shard audit
+    * ([[graft.jobs.Maintenance.audit]]): the resolved shard-key rows (one
+    * per posting or vector, base ∪ delta), the shard keys the delta
+    * touched, the hot-shard size, and the shard keys the family's remedy
+    * side-table covers. The shard key is `touched`'s columns. */
+  final case class AuditInputs(shards: org.apache.spark.sql.DataFrame,
+                               touched: org.apache.spark.sql.DataFrame, hotSize: Long,
+                               covered: org.apache.spark.sql.DataFrame)
+
   /** Write the index geometry manifest (`<root>/index.properties`) next
     * to the artifact tables. Probes and appends validate against it via
     * [[requireGeometry]] instead of trusting their caller's parameters —

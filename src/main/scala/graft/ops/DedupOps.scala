@@ -6,6 +6,7 @@ import graft.api.GraftAPI
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import MinhashIndex.{AppendCutoff, IncrementalCutoff, RebandHotSize}
 
 /** Deduplication operators over `documents` (SURVEY.md §2.11/§2.12 L1–L2
   * plus the training-data-pipeline extensions: SimHash, n-gram Jaccard).
@@ -444,152 +445,68 @@ object DedupOps {
   }
 
   /** L2j: the MinHash-LSH index BUILD as a first-class sink-style job —
-    * the dedup counterpart of `build_ivfpq_index`: shingle + sign +
-    * band the corpus ONCE and persist the (doc_id, band, band_key)
-    * postings as a parquet table hive-partitioned by band and ingest
-    * batch ([[MinhashIndex.ensure]] over
-    * [[GraftAPI.writeMinhashIndex]]; write-once under the [[IndexFs]]
-    * commit protocol). This is the artifact [[dedupIncremental]] probes
-    * and [[simjoinLsh]]'s `persist()` stands in for — at 100 TB the
-    * postings are additionally bucketed by band_key so batch probes
-    * co-partition without shuffling the stored side.
-    *
-    * Output is the per-band manifest read back FROM the stored table:
-    * (band, n_keys, n_postings, n_docs). Every doc with ≥1 shingle emits
-    * exactly ONE key per band, so n_postings = n_docs by construction —
-    * a lost or doubled row in the write fails the count oracle. */
+    * the dedup counterpart of `build_ivfpq_index`: the full-corpus
+    * fixture root ([[MinhashIndex.ensure]], written once by
+    * [[MinhashIndex.write]]), the artifact [[dedupIncremental]] probes and
+    * [[simjoinLsh]]'s `persist()` stands in for. Output is the per-band
+    * [[MinhashIndex.manifest]] read back FROM the stored table; n_postings
+    * = n_docs by construction, so a lost or doubled row in the write fails
+    * the count oracle. */
   def buildMinhashIndex(s: SparkSession, dir: String): DataFrame = {
     val ix = MinhashIndex.ensure(s, dir)
-    GraftAPI.bandManifest(Tables.read(s, ix.bands), "doc_id").orderBy("band")
+    MinhashIndex.manifest(Tables.read(s, ix.bands)).orderBy("band")
   }
 
-  /** L2m: MinHash index SKEW audit over the stored postings — the health
-    * dashboard for the dedup index, mirroring `ann_index_stats`. LSH
-    * candidate generation enumerates i<j pairs WITHIN each (band,
-    * band_key) bucket, so a hot bucket is quadratic work: `max_bucket`
-    * bounds the worst single-bucket blowup, `cand_pairs` (Σ sz·(sz−1)/2)
-    * is each band's exact candidate-join output size, and a rising
-    * hot/singleton ratio tells the operator the banding geometry (r/b) no
-    * longer matches the corpus duplication rate. Reads ONLY the stored
-    * (doc_id, band, band_key) table — two fixed-width aggregations, text
-    * never touched. At 100 TB this audit is what decides a re-band before
-    * a skewed bucket stalls the pair join. */
+  /** L2m: MinHash index SKEW audit ([[MinhashIndex.skew]]) over the
+    * full-corpus root's stored postings — the health dashboard for the
+    * dedup index, mirroring `ann_index_stats`: `max_bucket` bounds the
+    * worst single-bucket blowup, `cand_pairs` is each band's exact
+    * candidate-join output size, and a rising hot/singleton ratio tells
+    * the operator the banding geometry (r/b) no longer matches the corpus
+    * duplication rate. */
   def minhashIndexStats(s: SparkSession, dir: String): DataFrame =
-    GraftAPI.minhashIndexSkew(Tables.read(s, MinhashIndex.ensure(s, dir).bands))
+    MinhashIndex.skew(Tables.read(s, MinhashIndex.ensure(s, dir).bands))
       .orderBy("band")
 
-  /** L2k: MinHash index APPEND — the dedup lifecycle's third leg (build →
-    * probe → append), bound to [[GraftAPI.minhashIndexAppend]] like
-    * `ann_index_append`: the late-arriving day's batch (docs in
-    * [[IncrementalCutoff]], [[AppendCutoff]]) — the slice "today's"
-    * probe batch must then see) shingles + signs ONLY itself and lands as
-    * delta generation 1 next to the base index
-    * ([[MinhashIndex.ensureBase]]; the same append the probes' ensured
-    * delta runs, so the appended content cannot drift from what they
-    * read). No corpus re-read, no re-hash of stored postings. MinHash
-    * signatures are per-doc (no trained state), so unlike the ANN append
-    * there is nothing to re-encode against: the determinism contract is
-    * the shared md5/Kirsch–Mitzenmacher hash recipe, and re-appends
-    * byte-match. Output is the merged per-band manifest (band, n_base,
-    * n_new); the oracle recomputes both sides from scratch, so a
+  /** L2k: MinHash index APPEND ([[MinhashIndex.append]]): the
+    * late-arriving day's batch (docs in [[IncrementalCutoff]],
+    * [[AppendCutoff]])) lands as delta generation 1 of the base root —
+    * the same append the probes' ensured delta runs
+    * ([[MinhashIndex.appendDay]]), so the appended content cannot drift
+    * from what they read. Output is the merged per-band manifest (band,
+    * n_base, n_new); the oracle recomputes both sides from scratch, so a
     * dropped/doubled delta row fails the gate. */
   def dedupIndexAppend(s: SparkSession, dir: String): DataFrame =
-    MinhashIndex.append(s, dir, MinhashIndex.ensureBase(s, dir))
+    MinhashIndex.appendDay(s, dir, MinhashIndex.ensureBase(s, dir))
 
-  /** L2l: MinHash index COMPACT — the appended delta folds into the base
-    * postings in place (the lakehouse OPTIMIZE closing the lifecycle,
-    * bound to [[GraftAPI.minhashIndexCompact]] like `ann_index_compact`).
-    * The fold runs on a copy of the base root with its delta ensured
-    * ([[MinhashIndex.ensureCopy]]), so every other key keeps reading the
-    * shared root as built; from the second call on the copy has no
-    * delta left and the call returns its manifest. The manifest read back
-    * FROM the compacted table must equal the banding of docs <
+  /** L2l: MinHash index COMPACT ([[MinhashIndex.compact]]) on a copy of
+    * the base root with its delta ensured ([[MinhashIndex.ensureCopy]]),
+    * so every other key keeps reading the shared root as built; from the
+    * second call on the copy has no delta left and the call returns its
+    * manifest. The manifest must equal the banding of docs <
     * [[AppendCutoff]] recomputed from scratch — the oracle pins that,
     * making a lost or duplicated row in the merge loud. */
   def dedupIndexCompact(s: SparkSession, dir: String): DataFrame =
-    GraftAPI.minhashIndexCompact(s,
-      MinhashIndex.ensureCopy(probedBase(s, dir), "mhix_v3_compact", dir).bands)
+    MinhashIndex.compact(s,
+      MinhashIndex.ensureCopy(MinhashIndex.probed(s, dir), "mhix_v3_compact", dir).bands)
 
-  /** Ingest-batch width of the stored postings: documents land in
-    * id-ranges of `IngestBatch` (250) ids per ingest batch, and takedown
-    * requests arrive per source/batch — so the postings are
-    * hive-partitioned by (band, ingest batch) and a delete request prunes
-    * to the batch directories that actually contain its documents.
-    * (Unlike the ANN codes, where a vector lives in ONE cell, a document
-    * posts to EVERY band — the batch axis is what makes dedup-index
-    * deletes partition-pruned.) */
-  private[graft] val IngestBatch = 250L
-
-  /** The partition-pruned postings delete core of
-    * [[GraftAPI.minhashIndexDelete]] — the dedup mirror of
-    * [[VectorOps.deleteFromCodes]]: anti-join the deletion list (one
-    * `doc_id` column) out of ONLY the (band, ingest-batch) partitions of
-    * `live` that contain deleted documents, and
-    * dynamic-partition-overwrite exactly those directories; every other
-    * partition's files are untouched (byte-identical — DedupSpec proves
-    * it). Guards loudly against a partition emptying out entirely:
-    * dynamic overwrite only replaces partitions PRESENT in the written
-    * data, so a fully-deleted batch would leave stale files behind — at
-    * 100 TB that case is a catalog DROP PARTITION, here it throws with
-    * instructions. */
-  private[graft] def deleteFromBands(s: SparkSession, live: String, del: DataFrame): Unit = {
-    val liveT = Tables.read(s, live)
-    val affected = liveT.join(del, "doc_id")
-      .select(col("band").as("aband"), col("pbatch").as("abatch")).distinct()
-    val survivors = liveT.drop("pband")
-      .join(broadcast(affected),
-        col("band") === col("aband") && col("pbatch") === col("abatch"))
-      .join(del, Seq("doc_id"), "left_anti")
-      .drop("aband", "abatch")
-    val emptied = affected.join(
-        survivors.select(col("band").as("sband"), col("pbatch").as("sbatch"))
-          .distinct(),
-        col("aband") === col("sband") && col("abatch") === col("sbatch"),
-        "left_anti")
-      .collect().map(r => s"(band=${r.get(0)}, batch=${r.get(1)})")
-    require(emptied.isEmpty,
-      s"partitions ${emptied.mkString(",")} would be emptied by this delete; " +
-        "drop those partitions via the catalog instead of a data rewrite")
-    // writer-scoped option, NOT the session conf (review r10): a global
-    // flip leaks dynamic-overwrite semantics to concurrent writes and
-    // the restore races user conf changes (same fix as deleteFromCodes).
-    survivors.withColumn("pband", col("band"))
-      .repartition(col("pband"), col("pbatch"))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("pband", "pbatch").parquet(live)
-  }
-
-  /** L2n: MinHash index DELETE — the removal leg closing the dedup index
-    * lifecycle (build → probe → append → compact → DELETE), bound to
-    * [[GraftAPI.minhashIndexDelete]] like `ann_index_delete`: takedown
-    * requests / right-to-be-forgotten remove a document set's postings
-    * by rewriting ONLY the (band, ingest-batch) partitions that contain
-    * them ([[deleteFromBands]]). The takedown runs on a copy of the
-    * full-corpus root ([[MinhashIndex.ensureCopy]]), so every other key
-    * keeps reading the shared root as built; from the second call on the
-    * listed ids are gone and the rewrite finds nothing to do. Deletion
-    * list = a mid-batch slice of ingest batch 0 (doc_id in [100, 200)
-    * with doc_id % 3 = 0 — the realistic "one source's slice of one
-    * batch" shape at the width-250 batch axis); at 100 TB the rewrite
-    * touches NumBands × 1 batch directories, never the corpus-wide
-    * postings. Output is the post-delete per-band manifest; the oracle
-    * recomputes the banding minus the deleted ids, so a lost or doubled
-    * surviving posting fails the gate. */
+  /** L2n: MinHash index DELETE ([[MinhashIndex.delete]]) on a copy of the
+    * full-corpus root ([[MinhashIndex.ensureCopy]]); from the second call
+    * on the listed ids are gone and the rewrite finds nothing to do.
+    * Deletion list = a mid-batch slice of ingest batch 0 (doc_id in
+    * [100, 200) with doc_id % 3 = 0 — the realistic "one source's slice
+    * of one batch" shape at the width-250 batch axis); at 100 TB the
+    * rewrite touches NumBands × 1 batch directories, never the
+    * corpus-wide postings. Output is the post-delete per-band manifest;
+    * the oracle recomputes the banding minus the deleted ids. */
   def dedupIndexDelete(s: SparkSession, dir: String): DataFrame = {
     val ix = MinhashIndex.ensureCopy(MinhashIndex.ensure(s, dir), "mhix_v3_delete", dir)
-    GraftAPI.minhashIndexDelete(s, ix.bands,
+    MinhashIndex.delete(s, ix.bands,
       documents(s, dir).filter(col("doc_id") >= 100 && col("doc_id") < 200 &&
         col("doc_id") % 3 === 0).select("doc_id"),
       "doc_id")
-    GraftAPI.bandManifest(Tables.read(s, ix.bands), "doc_id").orderBy("band")
+    MinhashIndex.manifest(Tables.read(s, ix.bands)).orderBy("band")
   }
-
-  /** Buckets at or above this size get re-banded by [[dedupIndexReband]].
-    * Fixture-scale constant (sf0.01's largest bucket is 5 docs); a
-    * production deployment sets this from [[minhashIndexStats]]'s
-    * `max_bucket`/`cand_pairs` audit — the point where sz² candidate
-    * enumeration starts to hurt (hundreds+). */
-  private[graft] val RebandHotSize = 4L
 
   /** L2o: hot-bucket REBAND report (VERDICT r10 #5) — the remedy for
     * what [[minhashIndexStats]] detects: a band bucket glued together by
@@ -624,66 +541,10 @@ object DedupOps {
         col("n_sub"), col("max_sub"), col("pairs_after"))
       .orderBy("band", "band_key")
 
-  /** The registry's base root with its delta ensured — the index every
-    * registry probe reads. */
-  private[ops] def probedBase(s: SparkSession, dir: String): MinhashIndex.Ix = {
-    val ix = MinhashIndex.ensureBase(s, dir)
-    MinhashIndex.ensureDelta(s, dir, ix)
-    ix
-  }
-
-  /** The fine-union PROBE core — the one MinHash probe, shared by
-    * [[dedupIncremental]], [[dedupIncrementalVsdelta]],
-    * [[PipelineOps.curationIncremental]] and the streaming adapters
-    * (`dedupBatchAgainstIndex`, `curationVerdictBatch`), so no two
-    * callers can disagree about what counts as a near-dup: one (doc_id,
-    * hit) row per batch doc, `hit` = some band row of the doc hits the
-    * stored index at `root` — `bands` ∪ the committed delta generations
-    * ([[MinhashIndex.resolvedPostings]]) — under the fine-union rule:
-    * buckets below the root's recorded `hotSize` hit on (band,
-    * band_key), hot buckets only on a full-signature sub_key match in
-    * `bands_fine`, which the append keeps current at the resolved sizes.
-    * `batch` must carry (doc_id, band, band_key, sub_key) —
-    * [[bandsOf]]'s shape. It is read once: both key legs flag its rows
-    * and one per-doc aggregate folds the flags, so a caller needs no
-    * cache, no union and no distinct over it. A root that is not
-    * committed, or that an older build wrote, is refused
-    * ([[MinhashIndex.checkedMeta]]). */
-  private[graft] def fineProbeHits(root: String, batch: DataFrame): DataFrame = {
-    val s = batch.sparkSession
-    val ix = MinhashIndex.Ix(root)
-    val hotSize = MinhashIndex.checkedMeta(root, "before probing")("hotSize").toLong
-    // Bucket sizing stays a full-postings aggregate — examined and left
-    // (optimization r14): pre-pruning the postings to the batch's band
-    // keys (broadcast semi-join) was A/B'd and REVERTED — it saves only
-    // the bucket-cardinality exchange (the postings SCAN is the O(corpus)
-    // term either way, and partial aggregation already shrinks the
-    // exchange to one fixed-width row per bucket) while paying a
-    // broadcast-build job per probe (~+0.2-0.4 s across the three probe
-    // queries at sf0.1). The real 100 TB fix is a STORED per-bucket size
-    // stat maintained by the index lifecycle, which is a write-path
-    // change, not a probe optimization.
-    val coldKeys = MinhashIndex.resolvedPostings(s, ix)
-      .groupBy("band", "band_key").agg(count(lit(1)).as("sz"))
-      .filter(col("sz") < hotSize)
-      .select(col("band"), col("band_key"), lit(true).as("cold"))
-    // No distinct on the fine keys (optimization r14): a duplicate key
-    // only repeats a batch row, which the per-doc aggregate folds back,
-    // and a distinct would pay a shuffle of the stored fine table per
-    // probe for nothing.
-    val fineKeys = MinhashIndex.fineRows(s, ix)
-      .select(col("band"), col("band_key"), col("sub_key"), lit(true).as("fine"))
-    batch.join(coldKeys, Seq("band", "band_key"), "left")
-      .join(fineKeys, Seq("band", "band_key", "sub_key"), "left")
-      .groupBy("doc_id")
-      .agg(coalesce(max(coalesce(col("cold"), lit(false)) ||
-        coalesce(col("fine"), lit(false))), lit(false)).as("hit"))
-  }
-
   /** L14: incremental MinHash dedup of a new batch against the STORED
     * corpus index — the steady-state form of [[simjoinLsh]], reading the
     * persisted artifact: the corpus side is the base root's `bands` ∪
-    * its ensured delta ([[probedBase]]), i.e. docs < [[AppendCutoff]]
+    * its ensured delta ([[MinhashIndex.probed]]), i.e. docs < [[AppendCutoff]]
     * whether or not a compact has folded the delta in (r13: probes see
     * appended documents); the batch is docs ≥ AppendCutoff. Only the
     * incoming batch shingles + signs, and a batch doc is a dup if ANY of
@@ -698,13 +559,13 @@ object DedupOps {
     * r11 #2): a batch key landing in a bucket ≥ [[RebandHotSize]] counts
     * as a hit only if the batch doc's full-signature sub_key matches a
     * stored doc's in that bucket — the probe mirror of
-    * [[candidatePairs]]' fine-union scheme ([[fineProbeHits]]), so a
-    * template-family bucket can no longer mark every batch doc that
+    * [[candidatePairs]]' fine-union scheme ([[MinhashIndex.probeHits]]),
+    * so a template-family bucket can no longer mark every batch doc that
     * grazes it as a dup. */
   def dedupIncremental(s: SparkSession, dir: String): DataFrame = {
-    // fineProbeHits reads the batch band table once and answers every
-    // batch doc, so the table needs no cache and the probe no spine.
-    fineProbeHits(probedBase(s, dir).root,
+    // probeHits reads the batch band table once and answers every batch
+    // doc, so the table needs no cache and the probe no spine.
+    MinhashIndex.probeHits(MinhashIndex.probed(s, dir).root,
         bandsOf(shingleRows(s, dir).filter(col("doc_id") >= AppendCutoff)))
       .select(col("doc_id"), col("hit").as("is_dup"))
       .orderBy("doc_id")
@@ -728,16 +589,15 @@ object DedupOps {
   def dedupIncrementalVsdelta(s: SparkSession, dir: String): DataFrame = {
     val batch = CacheLifecycle.pinEager(bandsOf(
       shingleRows(s, dir).filter(col("doc_id") >= AppendCutoff)))
-    val ix = probedBase(s, dir)
-    val resolvedHits = fineProbeHits(ix.root, batch)
+    val ix = MinhashIndex.probed(s, dir)
+    val resolvedHits = MinhashIndex.probeHits(ix.root, batch)
       .filter(col("hit")).select(col("doc_id"), lit(true).as("is_dup"))
-    // No distinct on the fine keys, as in [[fineProbeHits]]
+    // No distinct on the fine keys, as in [[MinhashIndex.probeHits]]
     // (optimization r14): the base-only leg's fine keys are consumed
     // ONLY through a batch semi-join, so leaving the fine rows
-    // un-deduplicated changes no flag. (Batch-key pruning of the size
-    // aggregate was A/B'd and reverted — see fineProbeHits.)
-    val baseSz = Tables.read(s, ix.bands).filter(col("doc_id") < IncrementalCutoff)
-      .groupBy("band", "band_key").agg(count(lit(1)).as("sz"))
+    // un-deduplicated changes no flag.
+    val baseSz = MinhashIndex.bucketSizes(
+      Tables.read(s, ix.bands).filter(col("doc_id") < IncrementalCutoff))
     val coldKeys0 = baseSz.filter(col("sz") < RebandHotSize)
       .select("band", "band_key")
     val baseHot = baseSz.filter(col("sz") >= RebandHotSize)
@@ -760,18 +620,6 @@ object DedupOps {
           !coalesce(col("base_dup"), lit(false))).as("via_delta"))
       .orderBy("doc_id")
   }
-
-  private[graft] val IncrementalCutoff = 400
-
-  /** The delta/batch boundary of the three-slice incremental model (r13):
-    * docs < [[IncrementalCutoff]] are the ingest-time BASE corpus (the
-    * stored base index), docs in [IncrementalCutoff, AppendCutoff) are
-    * "yesterday's" appended batch (the `bands_delta` generation), and
-    * docs ≥ AppendCutoff are "today's" probe batch — so the lifecycle's
-    * core promise (an appended document is probe-visible the next day,
-    * compact or not) is oracle-checkable instead of a two-slice model
-    * where the delta IS the probe batch and self-hits would mask it. */
-  private[graft] val AppendCutoff = 450
 
   private val SimBits = 16
 

@@ -263,11 +263,11 @@ object PipelineOps {
     * offset in-plan via a broadcast 1-row frame. No re-pack, no
     * re-read of already-packed shards, and shard ids stay globally
     * consistent — exactly how a 100 TB corpus absorbs a daily delta.
-    * Batch = docs ≥ [[DedupOps.AppendCutoff]] ("today" in the
+    * Batch = docs ≥ [[MinhashIndex.AppendCutoff]] ("today" in the
     * three-slice model), mirroring the other incremental legs: the
     * base-so-far = base + yesterday's already-packed delta. */
   def shardPackIncremental(s: SparkSession, dir: String): DataFrame = {
-    val cut = DedupOps.AppendCutoff
+    val cut = MinhashIndex.AppendCutoff
     val toks = tokenCounts(s, dir)
     val baseTot = toks.filter(col("doc_id") < cut)
       .agg(coalesce(sum(col("n_tokens")), lit(0L)).as("base_tokens"))
@@ -639,7 +639,7 @@ object PipelineOps {
   }
 
   /** L18d (r9): INCREMENTAL curation — the steady-state daily run. A
-    * new batch (docs ≥ [[DedupOps.AppendCutoff]] — "today", in the
+    * new batch (docs ≥ [[MinhashIndex.AppendCutoff]] — "today", in the
     * three-slice model where [IncrementalCutoff, AppendCutoff) is
     * "yesterday's" already-absorbed batch) gets the full curation
     * verdict against the STORED corpus-so-far artifacts, without
@@ -650,7 +650,7 @@ object PipelineOps {
     *     fingerprint set (tiny distinct-md5 table, broadcast);
     *   - near dup: batch band keys probe the PERSISTED MinHash
     *     postings — the base root's `bands` ∪ its ensured delta, through
-    *     [[DedupOps.fineProbeHits]], the same probe `dedup_incremental`
+    *     [[MinhashIndex.probeHits]], the same probe `dedup_incremental`
     *     runs, under the same fine-union scheme: hot buckets match only
     *     on a stored full-signature sub_key; only the batch shingles +
     *     signs. A document appended yesterday flags today's near-dups of
@@ -674,7 +674,7 @@ object PipelineOps {
     * plan, whose exchanges AQE reuses, so nothing is pinned. */
   def curationIncremental(s: SparkSession, dir: String): DataFrame =
     CacheLifecycle.generation {
-      val cut = DedupOps.AppendCutoff
+      val cut = MinhashIndex.AppendCutoff
       val docs = documents(s, dir)
       val qOk = qualityOk()
       val baseFps = docs.filter(col("doc_id") < cut)
@@ -683,10 +683,10 @@ object PipelineOps {
       val batchSh = GraftAPI.shingleRows(docs.filter(col("doc_id") >= cut),
         "doc_id", "text")
       // Fine-union probe (r12): the SHARED core with dedup_incremental
-      // (DedupOps.fineProbeHits), so the curation verdict and the
+      // (MinhashIndex.probeHits), so the curation verdict and the
       // standalone dedup probe can never disagree about what counts as a
       // near-dup.
-      val nearHits = DedupOps.fineProbeHits(DedupOps.probedBase(s, dir).root,
+      val nearHits = MinhashIndex.probeHits(MinhashIndex.probed(s, dir).root,
           DedupOps.bandsOf(batchSh))
         .select(col("doc_id"), col("hit").as("near"))
       val evalSet = GraftAPI.shingleRows(
@@ -1112,31 +1112,31 @@ object PipelineOps {
       s"""WITH ${DedupOps.shinglesCte},
          |${DedupOps.bandsCte},
          |basefp AS (SELECT DISTINCT md5(text) AS fp FROM documents
-         |           WHERE doc_id < ${DedupOps.AppendCutoff}),
+         |           WHERE doc_id < ${MinhashIndex.AppendCutoff}),
          |idxsz AS (SELECT band, band_key, count(*) AS sz FROM bands
-         |        WHERE doc_id < ${DedupOps.AppendCutoff} GROUP BY band, band_key),
+         |        WHERE doc_id < ${MinhashIndex.AppendCutoff} GROUP BY band, band_key),
          |subk AS (SELECT doc_id, ${DedupOps.subKeySql} AS sub_key FROM sig),
          |bt AS (SELECT b.doc_id, b.band, b.band_key, k.sub_key FROM bands b
          |       JOIN subk k USING (doc_id)
-         |       WHERE b.doc_id >= ${DedupOps.AppendCutoff}),
+         |       WHERE b.doc_id >= ${MinhashIndex.AppendCutoff}),
          |finek AS (SELECT DISTINCT b.band, b.band_key, k.sub_key FROM bands b
          |       JOIN idxsz ON b.band = idxsz.band AND b.band_key = idxsz.band_key
          |       JOIN subk k ON b.doc_id = k.doc_id
-         |       WHERE b.doc_id < ${DedupOps.AppendCutoff}
-         |         AND idxsz.sz >= ${DedupOps.RebandHotSize}),
+         |       WHERE b.doc_id < ${MinhashIndex.AppendCutoff}
+         |         AND idxsz.sz >= ${MinhashIndex.RebandHotSize}),
          |near AS (SELECT DISTINCT bt.doc_id FROM bt
          |           JOIN idxsz USING (band, band_key)
-         |           WHERE idxsz.sz < ${DedupOps.RebandHotSize}
+         |           WHERE idxsz.sz < ${MinhashIndex.RebandHotSize}
          |         UNION
          |         SELECT DISTINCT bt.doc_id FROM bt
          |           JOIN finek USING (band, band_key, sub_key)),
          |shr AS (SELECT doc_id, unnest(shingles) AS x FROM shf),
          |ev AS (SELECT DISTINCT x FROM shr
-         |       WHERE doc_id % 50 = 0 AND doc_id < ${DedupOps.AppendCutoff}),
+         |       WHERE doc_id % 50 = 0 AND doc_id < ${MinhashIndex.AppendCutoff}),
          |tot AS (SELECT doc_id, count(*) AS n FROM shr
-         |        WHERE doc_id >= ${DedupOps.AppendCutoff} GROUP BY doc_id),
+         |        WHERE doc_id >= ${MinhashIndex.AppendCutoff} GROUP BY doc_id),
          |hit AS (SELECT doc_id, count(*) AS o FROM shr JOIN ev USING (x)
-         |        WHERE doc_id >= ${DedupOps.AppendCutoff} GROUP BY doc_id),
+         |        WHERE doc_id >= ${MinhashIndex.AppendCutoff} GROUP BY doc_id),
          |cont AS (SELECT t.doc_id FROM tot t JOIN hit h USING (doc_id)
          |         WHERE floor(o::DOUBLE / n * 1000000 + 0.5) / 1000000 >= 0.3),
          |b AS (SELECT doc_id,
@@ -1144,7 +1144,7 @@ object PipelineOps {
          |        len(string_split(text, ' '))::DOUBLE /
          |          len(list_distinct(string_split(text, ' '))) <= 2.5 AS q_ok,
          |        md5(text) AS fp
-         |      FROM documents WHERE doc_id >= ${DedupOps.AppendCutoff})
+         |      FROM documents WHERE doc_id >= ${MinhashIndex.AppendCutoff})
          |SELECT b.doc_id, q_ok,
          |  (fp IN (SELECT fp FROM basefp)) AS exact_dup,
          |  (b.doc_id IN (SELECT doc_id FROM near)) AS near_dup,
@@ -1319,12 +1319,12 @@ object PipelineOps {
          |  SELECT doc_id, len(string_split(text, ' '))::BIGINT AS n_tokens
          |  FROM documents),
          |base AS (SELECT CAST(COALESCE(SUM(n_tokens), 0) AS BIGINT) AS tot
-         |         FROM toks WHERE doc_id < ${DedupOps.AppendCutoff}),
+         |         FROM toks WHERE doc_id < ${MinhashIndex.AppendCutoff}),
          |c AS (
          |  SELECT doc_id, n_tokens,
          |    COALESCE(SUM(n_tokens) OVER (ORDER BY doc_id
          |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum
-         |  FROM toks WHERE doc_id >= ${DedupOps.AppendCutoff})
+         |  FROM toks WHERE doc_id >= ${MinhashIndex.AppendCutoff})
          |SELECT doc_id, n_tokens,
          |  CAST(((SELECT tot FROM base) + cum) // 10000 AS BIGINT) AS shard
          |FROM c ORDER BY doc_id""".stripMargin,

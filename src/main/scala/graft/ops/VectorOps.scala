@@ -6,6 +6,7 @@ import graft.api.GraftAPI
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import IvfPqIndex.{SplitHotSize, SplitProbes, SplitSubK}
 
 /** Similarity search over `embeddings` (SURVEY.md §2.12 L3/L4): brute-force
   * cosine top-k as the correctness baseline, an IVF-style cell-pruned
@@ -162,7 +163,7 @@ object VectorOps {
 
   /** Squared L2 distance via three codegen'd dot products, 6-dp-snapped
     * so argmin ties resolve identically in both engines. */
-  private def sqDist(x: Column, cv: Column): Column =
+  private[ops] def sqDist(x: Column, cv: Column): Column =
     r6(dot(x, x) - lit(2) * dot(x, cv) + dot(cv, cv))
 
   /** Cell assignment against (cid, cv) centroids: (vec_id, cell, carry…). */
@@ -201,7 +202,7 @@ object VectorOps {
   /** (vec_id, coarse, m, x): the residual of each vector of `asg`
     * (vec_id, cell, x) against its cell's centroid, r6-snapped and cut
     * into subspaces. The centroid is a broadcast lookup. */
-  private def residualLong(asg: DataFrame, coarse: DataFrame, m: Int, sub: Int): DataFrame =
+  private[ops] def residualLong(asg: DataFrame, coarse: DataFrame, m: Int, sub: Int): DataFrame =
     asg.join(broadcast(coarse), col("cell") === col("cid"))
       .select(col("vec_id"), col("cell").as("coarse"),
         subspaces(zip_with(col("x"), col("cv"), (a, b) => r6(a - b)), m, sub))
@@ -211,7 +212,7 @@ object VectorOps {
   /** (vec_id, m, code, cell): the residual long form argmin-encoded
     * against (m, cid, cv) codebooks; the coarse cell rides the argmin's
     * grouping key, so nothing joins back. */
-  private def residualCodes(rem: DataFrame, codebooks: DataFrame): DataFrame =
+  private[ops] def residualCodes(rem: DataFrame, codebooks: DataFrame): DataFrame =
     assignCellsLong(rem, codebooks, carry = Seq("coarse"))
       .select(col("vec_id"), col("m"), col("cell").as("code"), col("coarse").as("cell"))
 
@@ -961,98 +962,41 @@ object VectorOps {
       .orderBy("vec_id")
 
   /** L3i: the ANN index BUILD as a first-class sink-style job (VERDICT r7
-    * #1) — trains the coarse quantizer and both PQ codebooks, encodes the
-    * corpus, and persists the whole artifact as parquet tables (see
-    * [[IvfPqIndex]] for the layout). Idempotent: a present, committed
-    * artifact is NOT rebuilt (the write-once contract every layout sink in
-    * the engine follows), so running this op in front of a probe workload
-    * is exactly the production "build index, then serve" sequence. Output
-    * is the index's per-cell manifest — vector and code counts per coarse
-    * cell, the fan-out a capacity planner reads (codes-per-cell is the
-    * probe's I/O budget). The oracle reproduces the deterministic coarse
-    * training and checks both counts (n_codes = PqM × n_vecs by
-    * construction — verifying the encode pass produced exactly one code
-    * per (vector, subspace)); the code VALUES are verified end-to-end by
-    * every probe oracle (knn_pq / knn_ivf_pq / knn_recall_*). */
-  def buildIvfpqIndex(s: SparkSession, dir: String): DataFrame = {
-    val ix = IvfPqIndex.ensure(s, dir)
-    val vecs = Tables.read(s, ix.cells)
-      .groupBy("cell").agg(count(lit(1)).as("n_vecs"))
-    val codes = Tables.read(s, ix.ivfCodes)
-      .groupBy("cell").agg(count(lit(1)).as("n_codes"))
-    vecs.join(codes, "cell")
-      .select(col("cell"), col("n_vecs"), col("n_codes"))
-      .orderBy("cell")
-  }
+    * #1): the full-corpus fixture root ([[IvfPqIndex.ensure]], trained
+    * and encoded once — see [[IvfPqIndex]] for the layout), so running
+    * this op in front of a probe workload is exactly the production
+    * "build index, then serve" sequence. Output is the index's per-cell
+    * [[IvfPqIndex.buildManifest]] — the fan-out a capacity planner reads.
+    * The oracle reproduces the deterministic coarse training and checks
+    * both counts (n_codes = PqM × n_vecs by construction); the code
+    * VALUES are verified end-to-end by every probe oracle (knn_pq /
+    * knn_ivf_pq / knn_recall_*). */
+  def buildIvfpqIndex(s: SparkSession, dir: String): DataFrame =
+    IvfPqIndex.buildManifest(s, IvfPqIndex.ensure(s, dir)).orderBy("cell")
 
-  /** The partition-pruned delete core of
-    * [[graft.api.GraftAPI.annIndexDelete]]: anti-join the deletion list
-    * out of ONLY the cell partitions that contain deleted vectors, and
-    * dynamic-partition-overwrite exactly those directories — every other
-    * partition's files are untouched (byte-identical; VectorSpec proves
-    * it). Guards loudly against a cell emptying out entirely
-    * ([[emptiedCells]]): dynamic overwrite only replaces partitions
-    * PRESENT in the written data, so a fully-deleted cell would leave
-    * stale files behind — at 100 TB that case is a catalog DROP
-    * PARTITION, here it throws with instructions. */
-  private[graft] def deleteFromCodes(s: SparkSession, live: String,
-                                     del: DataFrame): Unit = {
-    val liveT = Tables.read(s, live)
-    val emptied = emptiedCells(liveT, del)
-    require(emptied.isEmpty,
-      s"cells ${emptied.mkString(",")} would be emptied by this delete; " +
-        "drop those partitions via the catalog instead of a data rewrite")
-    val affected = liveT.join(del, "vec_id")
-      .select(col("cell").as("acell")).distinct()
-    // writer-scoped option, NOT the session conf (review r10): flipping
-    // spark.sql.sources.partitionOverwriteMode globally leaks dynamic
-    // semantics to any concurrent write in the session, and the restore
-    // races a user's own conf change.
-    liveT.drop("pcell")
-      .join(broadcast(affected), col("cell") === col("acell"))
-      .join(del, Seq("vec_id"), "left_anti")
-      .drop("acell")
-      .withColumn("pcell", col("cell"))
-      .repartition(col("pcell"))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("pcell").parquet(live)
-  }
-
-  /** L3m: ANN index DELETE — the removal leg of the lifecycle (takedown
-    * requests, right-to-be-forgotten, poisoned-sample removal), bound to
-    * [[graft.api.GraftAPI.annIndexDelete]]: the deletion list (the
-    * deterministic `vec_id % 29 == 0` slice) leaves the code table by a
-    * rewrite of ONLY the cell partitions that contain it
-    * ([[deleteFromCodes]]; the cell-partitioned layout is what makes
-    * deletes cheap — a 100 TB index with a thousand-row takedown rewrites
-    * a handful of cell directories, never the corpus), and leaves the
-    * `cells` membership. The takedown runs on a full-corpus root of its
-    * own ([[IvfPqIndex.ensureCopy]]), because it rewrites the `cells`
-    * table every other full-corpus key reads; from the second call on
-    * the ids are gone and the rewrite is a no-op. Output is the
-    * post-delete per-cell manifest, which the oracle reproduces from the
+  /** L3m: ANN index DELETE ([[IvfPqIndex.delete]]) of the deterministic
+    * `vec_id % 29 == 0` slice, on a full-corpus root of its own
+    * ([[IvfPqIndex.ensureCopy]]), because it rewrites the `cells` table
+    * every other full-corpus key reads; from the second call on the ids
+    * are gone and the rewrite is a no-op. Output is the post-delete
+    * [[IvfPqIndex.codeManifest]], which the oracle reproduces from the
     * coarse chain minus the deleted ids. */
   def annIndexDelete(s: SparkSession, dir: String): DataFrame = {
     val ix = IvfPqIndex.ensureCopy(IvfPqIndex.ensure(s, dir), "annix_v1_delete", dir)
-    GraftAPI.annIndexDelete(s, ix.ivfCodes,
+    IvfPqIndex.delete(s, ix.ivfCodes,
       embeddings(s, dir).filter(col("vec_id") % 29 === 0), "vec_id")
-    Tables.read(s, ix.ivfCodes)
-      .groupBy("cell")
-      .agg(countDistinct(col("vec_id")).as("n_vecs"), count(lit(1)).as("n_codes"))
-      .orderBy("cell")
+    IvfPqIndex.codeManifest(s, ix)
   }
 
-  /** L3k: ANN index HEALTH audit over the STORED artifact
-    * ([[GraftAPI.annIndexStats]]) — the one-row dashboard an index
-    * operator reads before deciding to re-train or re-balance: cell
-    * coverage, size skew (`imbalance`, the re-train trigger; `max_cell`,
-    * the worst-case probe I/O) and the code count, which must be exactly
-    * PqM per vector. Reads ONLY the persisted index tables. The oracle
-    * reproduces the deterministic coarse training and derives the same
-    * summary from first principles. */
+  /** L3k: ANN index HEALTH audit ([[IvfPqIndex.stats]]) over the stored
+    * full-corpus artifact: cell coverage, size skew (`imbalance`, the
+    * re-train trigger; `max_cell`, the worst-case probe I/O) and the code
+    * count, which must be exactly PqM per vector. The oracle reproduces
+    * the deterministic coarse training and derives the same summary from
+    * first principles. */
   def annIndexStats(s: SparkSession, dir: String): DataFrame = {
     val ix = IvfPqIndex.ensure(s, dir)
-    GraftAPI.annIndexStats(Tables.read(s, ix.cells), Tables.read(s, ix.ivfCodes),
+    IvfPqIndex.stats(Tables.read(s, ix.cells), Tables.read(s, ix.ivfCodes),
       quantizerCells = KmeansCells)
   }
 
@@ -1081,218 +1025,52 @@ object VectorOps {
       .withColumnRenamed("cosine", "cos")
   }
 
-  /** The ONE stored-codebook encode path (review r13): coarse-assign a
-    * (vec_id, x) batch against the stored centroids, residual-encode
-    * against the stored long-form codebooks — no retraining. The append
-    * ([[graft.api.GraftAPI.annIndexAppend]], behind every registry and
-    * library caller) and the streaming append share it, and it reuses
-    * [[trainIvfPq]]'s residual and argmin steps, so the byte-stable-replay
-    * contract cannot drift: same r6 residual snap, same slice bounds,
-    * same argmin tie-breaks. Returns (vec_id, m, code, cell).
-    *
-    * The batch is shuffled once per argmin and never joined back to
-    * itself: the vector rides the coarse argmin's grouping key to its
-    * residual. */
-  private[graft] def encodeAgainstStored(e: DataFrame, coarse: DataFrame,
-                                         codebooks: DataFrame, m: Int,
-                                         sub: Int): DataFrame =
-    residualCodes(residualLong(assignCells(e, coarse, carry = Seq("x")), coarse, m, sub),
-      codebooks)
-
-  /** Cells a `del` id-list would fully empty in `live` — the catalog-
-    * DROP-PARTITION precheck [[deleteFromCodes]] enforces, exposed so
-    * lifecycle callers can run the REFUSAL before retiring their root
-    * marker (review r13: a rejection must leave a committed index
-    * committed, not half-rewritten-and-uncommitted). */
-  private[graft] def emptiedCells(live: DataFrame, del: DataFrame): Array[Long] = {
-    val affected = live.join(del, "vec_id")
-      .select(col("cell").as("acell")).distinct()
-    val survivors = live
-      .join(broadcast(affected), col("cell") === col("acell"))
-      .join(del, Seq("vec_id"), "left_anti")
-    affected.join(survivors.select(col("cell").as("scell")).distinct(),
-        col("acell") === col("scell"), "left_anti")
-      .collect().map(_.getLong(0))
-  }
-
-  /** L3j: ANN index APPEND — the third leg of the index lifecycle
-    * (build → probe → append), bound to
-    * [[graft.api.GraftAPI.annIndexAppend]]: a later-arriving batch (the
-    * held-out `vec_id % 10 == 7` slice) is encoded against the STORED
-    * codebooks of the base index ([[IvfPqIndex.ensureBase]], trained only
-    * on the other 90%) — coarse-assign via the persisted centroids,
-    * residual-encode via the persisted residual codebooks, NO retraining
-    * — and folds into the delta table, hive-partitioned by coarse cell
-    * next to the base codes. This is what daily vector arrivals do at
-    * 100 TB: training is an ingest-time event, appends are
-    * broadcast-argmin map jobs (the corpus is never rescanned). The
-    * deterministic codebooks make the append backfill-stable: re-encoding
-    * the same batch byte-matches. Output is the merged per-cell manifest
+  /** L3j: ANN index APPEND ([[IvfPqIndex.append]]): the held-out
+    * `vec_id % 10 == 7` slice is encoded against the STORED codebooks of
+    * the base index ([[IvfPqIndex.ensureBase]], trained only on the other
+    * 90%) — NO retraining — and folds into the cell-partitioned delta:
+    * the same append the probes' ensured delta runs
+    * ([[IvfPqIndex.appendDay]]). Output is the merged per-cell manifest
     * (cell, n_base, n_new); the oracle reproduces the base-subset coarse
     * training and both assignments, and VectorSpec verifies the delta
     * CODE VALUES against an independent local re-encode. */
   def annIndexAppend(s: SparkSession, dir: String): DataFrame =
-    IvfPqIndex.append(s, dir, IvfPqIndex.ensureBase(s, dir))
+    IvfPqIndex.appendDay(s, dir, IvfPqIndex.ensureBase(s, dir))
 
-  /** L3k: ANN index COMPACT — the lakehouse OPTIMIZE step that closes the
-    * lifecycle (build → append → compact → probe), bound to
-    * [[graft.api.GraftAPI.annIndexCompact]]: the appended delta folds
-    * into the cell-partitioned codes and the `cells` membership in
-    * place, so probes stop paying a two-table union and small delta
-    * files fold away. The fold runs on a copy of the base root and its
-    * delta ([[IvfPqIndex.ensureCopy]]): folding the shared base root
-    * would leave `ann_index_append` nothing new to report. From the
-    * second call on there is no delta left to fold. Output is the
-    * per-cell manifest of the folded codes — (cell, n_vecs, n_codes) with
-    * n_codes = PqM·n_vecs — which the oracle cross-checks against
-    * base-slice training + batch assignment counts (so a lost or
-    * duplicated row in the fold fails the gate). */
+  /** L3k: ANN index COMPACT ([[IvfPqIndex.compact]]) on a copy of the
+    * base root and its delta ([[IvfPqIndex.ensureCopy]]): folding the
+    * shared base root would leave `ann_index_append` nothing new to
+    * report. From the second call on there is no delta left to fold.
+    * Output is the per-cell manifest of the folded codes — (cell, n_vecs,
+    * n_codes) with n_codes = PqM·n_vecs — which the oracle cross-checks
+    * against base-slice training + batch assignment counts. */
   def annIndexCompact(s: SparkSession, dir: String): DataFrame = {
     val base = IvfPqIndex.ensureBase(s, dir)
     IvfPqIndex.ensureDelta(s, dir, base)
-    GraftAPI.annIndexCompact(s, IvfPqIndex.ensureCopy(base, "annix_v1_compact", dir).root)
+    IvfPqIndex.compact(s, IvfPqIndex.ensureCopy(base, "annix_v1_compact", dir).root)
   }
 
-  /** Cells at/above this size get sub-split by [[annIndexSplit]].
-    * Fixture-scale constant (sf0.01's cells run 21–38 vectors; the mean
-    * is ~31, so the oversized half splits and the rest probe raw); a
-    * production deployment sets this from [[annIndexStats]]'s
-    * `max_cell`/`imbalance` audit — the point where one cell's scan
-    * dominates probe latency. */
-  private[graft] val SplitHotSize = 32L
-
-  /** Sub-centroids trained per hot cell (k of the inner Lloyd). */
-  private[graft] val SplitSubK = 4
-
-  /** Sub-cells a split probe fans out to — like [[FilteredProbes]], the
-    * pool should cover K after the split narrows each scan; when it
-    * can't (degenerate sub-cells), [[splitAwarePool]] ENFORCES the
-    * floor by falling back to the whole-cell scan. */
-  private[graft] val SplitProbes = 2
-
-  /** Declared schema of the stored residual-code tables (base and
-    * delta) — DELTA read-backs must not rely on inference: a corpus
-    * with an empty held-out slice (no `vec_id % 10 == 7` rows) writes a
-    * data-file-less partitioned delta, and inference on it throws; the
-    * resolver must serve "base alone", not crash the probe. */
-  private[graft] val codesSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("vec_id",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("m",
-      org.apache.spark.sql.types.IntegerType),
-    org.apache.spark.sql.types.StructField("code",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("cell",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("pcell",
-      org.apache.spark.sql.types.LongType)))
-
-  /** Declared schemas for the split side-table read-backs — a corpus
-    * with no hot cell writes data-file-less tables, and inference on
-    * them throws; a healthy index must read as EMPTY, not crash. */
-  private[graft] val splitCentsSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("cell",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("scid",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("scv",
-      org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.DoubleType))))
-  private[graft] val splitCellsSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("vec_id",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("cell",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("scid",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("pcell",
-      org.apache.spark.sql.types.LongType)))
-
-  /** The split side-tables' frames: hot cells' vectors as RESIDUALS
-    * against the stored coarse centroids, sub-trained ([[SplitSubK]]
-    * grouped Lloyd) and re-assigned. Returns (pinned residual frame —
-    * caller unpersists after both writes —, sub-centroids (g, cid, cv),
-    * assignments (g, vec_id, cid)). Reads only STORED tables plus the
-    * hot cells' float vectors; cold cells' floats are never touched. */
-  private[ops] def splitRowsFor(s: SparkSession, dir: String,
-                                ix: IvfPqIndex.Ix): (DataFrame, DataFrame, DataFrame) =
-    splitRowsOf(s,
-      embeddings(s, dir).select(col("vec_id"), asD(col("embedding")).as("x")),
-      ix, SplitHotSize, SplitSubK)
-
-  /** [[splitRowsFor]] over an arbitrary (vec_id, x) frame at caller
-    * geometry — the core of [[graft.api.GraftAPI.annIndexSplit]]. */
-  private[graft] def splitRowsOf(s: SparkSession, e: DataFrame,
-                                 ix: IvfPqIndex.Ix, hotSize: Long,
-                                 subK: Int): (DataFrame, DataFrame, DataFrame) = {
-    // The stored membership: after a compact it holds the appended
-    // vectors too, so a cell pushed over the hot threshold by appends
-    // splits with all its members.
-    val cells = Tables.read(s, ix.cells)
-    val hot = cells.groupBy("cell").agg(count(lit(1)).as("n"))
-      .filter(col("n") >= hotSize).select("cell")
-    val coarse = Tables.read(s, ix.coarse)
-    val he = e
-      .join(cells.join(broadcast(hot), Seq("cell"), "left_semi"), "vec_id")
-      .join(broadcast(coarse), col("cell") === col("cid"))
-      .select(col("cell").as("g"), col("vec_id"),
-        zip_with(col("x"), col("cv"), (a, b) => r6(a - b)).as("x"))
-      .persist()
-    // cents persisted too (review r12): the assignment (and therefore
-    // the cells_split write) would otherwise re-run the whole grouped
-    // Lloyd chain the coarse_split write already executed — 2x training
-    // cost for a deterministic recompute.
-    val cents = kmeansCentroidsGrouped(he, iters = 2, k = subK).persist()
-    (he, cents, assignCellsGrouped(he, cents))
-  }
-
-  /** Per-hot-cell manifest read back FROM the written `cells_split`
-    * side-table — shared by the registry op and the facade. */
-  private[graft] def splitManifest(s: SparkSession, ix: IvfPqIndex.Ix): DataFrame = {
-    val sub = Tables.read(s, s"${ix.root}/cells_split", Some(splitCellsSchema))
-      .groupBy("cell", "scid").agg(count(lit(1)).as("ssz"))
-    sub.groupBy("cell")
-      .agg(sum("ssz").as("n_vecs"), count(lit(1)).as("n_sub"),
-        max("ssz").as("max_sub"))
-      .select(col("cell"), col("n_vecs"), col("n_sub"), col("max_sub"))
-      .orderBy("cell")
-  }
-
-  /** L3n: hot-cell SPLIT maintenance (VERDICT r11 #3) — the remedy for
-    * what [[annIndexStats]] detects: a coarse cell glued together by a
-    * dense embedding region makes every probe of it scan `max_cell`
-    * vectors, and nothing in the lifecycle reduced one once it formed
-    * (stats' scaladoc calls max-over-mean "the re-train trigger"; this
-    * is the trigger's target). Cells ≥ [[SplitHotSize]] train
-    * [[SplitSubK]] sub-centroids on their RESIDUALS (reusing the stored
-    * coarse centroids and the same 6-dp-snapped Lloyd the codebooks
-    * use, grouped so all hot cells train in the same jobs) and their
-    * vectors re-assign into sub-cells, persisted as `coarse_split` /
-    * `cells_split` side-tables next to the index (commit-marker guarded)
-    * — the IVF mirror of the dedup family's L2o reband. Bound to
-    * [[graft.api.GraftAPI.annIndexSplit]] on the full-corpus root;
-    * [[knnIvfSplit]] is the consuming probe.
-    *
-    * Scale shape: hot-cell membership comes from the STORED assignment
-    * table (one groupBy, no floats); only hot cells' vectors are read
-    * and re-encoded; the rewrite writes only the side-tables. Output is
-    * the per-hot-cell manifest (vectors, sub-cell fan-out, worst
-    * sub-cell) — the numbers an operator reads to confirm the probe
+  /** L3n: hot-cell SPLIT maintenance (VERDICT r11 #3,
+    * [[IvfPqIndex.split]]) on the full-corpus root: cells ≥
+    * [[SplitHotSize]] train [[SplitSubK]]
+    * sub-centroids on their residuals and re-assign into the
+    * `coarse_split` / `cells_split` side-tables — the IVF mirror of the
+    * dedup family's L2o reband; [[knnIvfSplit]] is the consuming probe.
+    * Output is the per-hot-cell manifest (vectors, sub-cell fan-out,
+    * worst sub-cell) — the numbers an operator reads to confirm the probe
     * blowup is gone. */
   def annIndexSplit(s: SparkSession, dir: String): DataFrame =
-    GraftAPI.annIndexSplit(embeddings(s, dir), "vec_id", "embedding",
+    IvfPqIndex.split(embeddings(s, dir), "vec_id", "embedding",
       IvfPqIndex.ensure(s, dir).root, SplitHotSize, SplitSubK)
 
   /** L3o: IVF probe THROUGH the cell split — [[knnIvfKmeans]]'s shape,
     * but when the query's coarse cell has been split, the scan narrows
-    * to the [[SplitProbes]] sub-cells nearest the query's residual
-    * instead of the whole cell (an unsplit cell probes raw, unchanged).
-    * The side-tables are build-once ([[IvfPqIndex.ensureSplit]]) and
-    * deterministic, so the probe is a pure function of the corpus
-    * whether or not the maintenance job ran first. At 100 TB the
-    * `cells_split` table is cell-partitioned like the codes, so the
-    * sub-probe is a partition-pruned scan of max_sub·probes vectors
-    * instead of max_cell. The pool is [[splitAwarePool]], the core the
+    * to the [[SplitProbes]] sub-cells nearest the query's
+    * residual instead of the whole cell (an unsplit cell probes raw,
+    * unchanged). The side-tables are build-once
+    * ([[IvfPqIndex.ensureSplit]]) and deterministic, so the probe is a
+    * pure function of the corpus whether or not the maintenance job ran
+    * first. The pool is [[IvfPqIndex.splitAwarePool]], the core the
     * streaming ANN probe shares. */
   def knnIvfSplit(s: SparkSession, dir: String): DataFrame = {
     val ix = IvfPqIndex.ensure(s, dir)
@@ -1303,92 +1081,12 @@ object VectorOps {
     val q = e.join(cells, "vec_id").filter(col("vec_id") === 0)
       .select(col("vec_id").as("query_id"), col("x").as("qx"),
         col("cell").as("qcell"))
-    splitAwarePool(q, cells, Tables.read(s, ix.coarse), Some(ix.root), K)
+    IvfPqIndex.splitAwarePool(q, cells, Tables.read(s, ix.coarse), Some(ix), K)
       .join(e, "vec_id")
       .crossJoin(broadcast(q.select("qx")))
       .select(col("vec_id"), cosine(col("x"), col("qx")).as("cos"))
       .orderBy(col("cos").desc, col("vec_id").asc)
       .limit(K)
-  }
-
-  /** (query_id, qx) queries with `qcell`, each query's nearest stored
-    * coarse centroid — the assignment an unindexed query needs before
-    * [[splitAwarePool]]. */
-  private[graft] def queryCells(q: DataFrame, coarse: DataFrame): DataFrame =
-    assignCells(q.select(col("query_id").as("vec_id"), col("qx").as("x")),
-        coarse, carry = Seq("x"))
-      .select(col("vec_id").as("query_id"), col("x").as("qx"),
-        col("cell").as("qcell"))
-
-  /** The ONE split-aware IVF candidate pool, for any number of queries:
-    * [[knnIvfSplit]] runs it for one query, the streaming ANN probe per
-    * micro-batch. `q` is (query_id, qx, qcell), `cells` the (vec_id,
-    * cell) membership the caller resolved, `splitRoot` the index root
-    * when it carries a committed split. Returns (query_id, vec_id): the
-    * whole cell for a query in an unsplit cell; else the [[SplitProbes]]
-    * sub-cells nearest its residual, ranked by (distance, scid), unless
-    * they hold fewer than `k` vectors — then the whole cell (review r12:
-    * the floor is enforced, not assumed). The matched sub-cell members
-    * feed three branches; `pin` lets a per-batch caller materialize them
-    * once. */
-  private[graft] def splitAwarePool(q: DataFrame, cells: DataFrame,
-                                    coarse: DataFrame, splitRoot: Option[String],
-                                    k: Int,
-                                    pin: DataFrame => DataFrame = identity): DataFrame = {
-    val s = q.sparkSession
-    val whole = cells
-      .join(broadcast(q.select("query_id", "qcell")), col("cell") === col("qcell"))
-    splitRoot match {
-      case None => whole.select("query_id", "vec_id")
-      case Some(root) =>
-        val splitCents = Tables.read(s, s"$root/coarse_split", Some(splitCentsSchema))
-        val splitCells = Tables.read(s, s"$root/cells_split", Some(splitCellsSchema))
-        val splitGs = broadcast(splitCents.select(col("cell").as("scell")).distinct())
-        val qres = q.join(broadcast(coarse), col("qcell") === col("cid"))
-          .select(col("query_id"), col("qcell"),
-            zip_with(col("qx"), col("cv"), (a, b) => r6(a - b)).as("qr"))
-        val w = Window.partitionBy("query_id").orderBy(col("d").asc, col("scid").asc)
-        val top = splitCents.join(broadcast(qres), col("cell") === col("qcell"))
-          .select(col("query_id"), col("cell"), col("scid"),
-            sqDist(col("qr"), col("scv")).as("d"))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= SplitProbes)
-          .select("query_id", "cell", "scid")
-        val matched = pin(splitCells.join(broadcast(top), Seq("cell", "scid"))
-          .select("query_id", "vec_id"))
-        val full = broadcast(matched.groupBy("query_id").agg(count(lit(1)).as("pool"))
-          .filter(col("pool") >= k).select("query_id"))
-        whole.join(splitGs, col("qcell") === col("scell"), "left_anti")
-          .select("query_id", "vec_id")
-          .union(matched.join(full, Seq("query_id"), "left_semi"))
-          .union(whole.join(splitGs, col("qcell") === col("scell"), "left_semi")
-            .join(full, Seq("query_id"), "left_anti")
-            .select("query_id", "vec_id"))
-    }
-  }
-
-  /** The ONE whole-batch vector guard (the facade encoders and append,
-    * the streaming ANN adapters): one aggregate over `x` fails on a null
-    * vector (counted explicitly — min/max over size() skip nulls, review
-    * r10), on mixed widths (not just a wrong first row) and, when
-    * `index` gives a stored (root, dim), on any other width. Returns the
-    * uniform width, or None for an empty frame, whose meaning is the
-    * caller's decision. */
-  private[graft] def checkedDim(e: DataFrame, what: String,
-                                index: Option[(String, Int)] = None): Option[Int] = {
-    val st = e.agg(count(lit(1)), count_if(col("x").isNull),
-      min(size(col("x"))), max(size(col("x")))).head()
-    require(st.getLong(1) == 0L,
-      s"${st.getLong(1)} null vectors in $what — drop or impute upstream")
-    if (st.getLong(0) == 0L) None
-    else {
-      val (lo, hi) = (st.getInt(2), st.getInt(3))
-      require(lo == hi,
-        s"ragged vector lengths in $what: dims in [$lo, $hi] — uniform length required")
-      index.foreach { case (root, d) => require(lo == d,
-        s"$what holds dim=$lo vectors; the index at $root serves dim=$d") }
-      Some(lo)
-    }
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -1572,7 +1270,7 @@ object VectorOps {
 
   /** Residual chain + hot-cell grouped sub-training + final sub-cell
     * assignment `gcells` (g, vec_id, cid) — the DuckDB mirror of
-    * [[splitRowsFor]]. */
+    * [[IvfPqIndex.ensureSplit]]. */
   private lazy val sqlSplitCte: String =
     s"""$sqlResidCte,
        |hot AS (SELECT cell FROM (SELECT cell, count(*) AS n FROM cells

@@ -202,12 +202,12 @@ object StreamingOps {
 
   /** Streaming incremental dedup against the STORED MinHash postings —
     * the streaming face of `dedup_incremental` (and the consumer of
-    * [[graft.api.GraftAPI.writeMinhashIndex]]'s artifact), shipped as a
+    * [[graft.ops.MinhashIndex.write]]'s artifact), shipped as a
     * `foreachBatch` body: `stream.writeStream.foreachBatch(
     * dedupBatchAgainstIndex(ix, out, "id", "text") _)`. Each micro-batch
     * of (id, text) documents is the batch probe run on one arrival: the
     * geometry guard, the micro-batch's own band rows, and the one probe
-    * core ([[graft.ops.DedupOps.fineProbeHits]] — `bands` ∪ the committed
+    * core ([[graft.ops.MinhashIndex.probeHits]] — `bands` ∪ the committed
     * delta generations under the fine-union rule); (id, is_dup) lands
     * through the idempotent partition-per-batch sink, with `is_dup =
     * false` for a document too short to shingle. Per-batch cost is
@@ -240,10 +240,10 @@ object StreamingOps {
       "numHashes" -> numHashes.toString, "bands" -> bands.toString)
 
   /** (id, hit) per micro-batch document with a band row:
-    * [[graft.ops.DedupOps.fineProbeHits]] over the batch's own bands. */
+    * [[graft.ops.MinhashIndex.probeHits]] over the batch's own bands. */
   private def probeHits(indexBandsPath: String, batch: DataFrame, id: String,
                         text: String, numHashes: Int, bands: Int): DataFrame =
-    graft.ops.DedupOps.fineProbeHits(graft.ops.IndexFs.parent(indexBandsPath),
+    graft.ops.MinhashIndex.probeHits(graft.ops.IndexFs.parent(indexBandsPath),
         graft.api.GraftAPI.minhashBandsWithSub(batch, id, text, numHashes, bands)
           .withColumnRenamed(id, "doc_id"))
       .withColumnRenamed("doc_id", id)
@@ -285,9 +285,9 @@ object StreamingOps {
     * `foreachBatch` body: `queries.writeStream.foreachBatch(
     * annProbeBatch(corpusPath, ixRoot, out, "qid", "qvec") _)`. Each
     * micro-batch of (id, vector) queries is the batch probe run on one
-    * arrival: the dim guard ([[graft.ops.VectorOps.checkedDim]]), the
+    * arrival: the dim guard ([[graft.ops.IvfPqIndex.checkedDim]]), the
     * coarse assignment, and `knn_ivf_split`'s candidate pool
-    * ([[graft.ops.VectorOps.splitAwarePool]]; its matched sub-cell
+    * ([[graft.ops.IvfPqIndex.splitAwarePool]]; its matched sub-cell
     * members are localCheckpointed, so `cells_split` is read once per
     * batch). Exact snapped-cosine top-k per query lands exactly-once
     * through [[idempotentBatchWriter]]. Index and corpus frames are read
@@ -297,16 +297,17 @@ object StreamingOps {
                     qId: String, qVec: String,
                     cId: String = "vec_id", cVec: String = "embedding",
                     k: Int = 10)(batch: DataFrame, batchId: Long): Unit = {
-    import graft.ops.{IndexFs, VectorOps}
+    import graft.ops.{IndexFs, IvfPqIndex, VectorOps}
     val s = batch.sparkSession
+    val ix = IvfPqIndex.Ix(indexRoot)
     val q = batch.select(col(qId).as("query_id"),
       col(qVec).cast("array<double>").as("qx"))
-    VectorOps.checkedDim(q.select(col("qx").as("x")), "the query batch",
-      Some((indexRoot, graft.ops.IvfPqIndex.geometry(indexRoot)._2)))
-    val coarse = Tables.read(s, s"$indexRoot/coarse")
-    val qc = broadcast(VectorOps.queryCells(q, coarse))
-    val pool = VectorOps.splitAwarePool(qc, resolvedCells(s, indexRoot), coarse,
-      Some(indexRoot).filter(IndexFs.committed(_, IndexFs.Split)), k, _.localCheckpoint())
+    IvfPqIndex.checkedDim(q.select(col("qx").as("x")), "the query batch",
+      Some((indexRoot, IvfPqIndex.geometry(indexRoot)._2)))
+    val coarse = Tables.read(s, ix.coarse)
+    val qc = broadcast(IvfPqIndex.queryCells(q, coarse))
+    val pool = IvfPqIndex.splitAwarePool(qc, resolvedCells(s, ix), coarse,
+      Some(ix).filter(i => IndexFs.committed(i.root, IndexFs.Split)), k, _.localCheckpoint())
     val scored = Tables.read(s, corpusPath)
       .select(col(cId).as("corpus_id"), col(cVec).cast("array<double>").as("cx"))
       .join(pool.join(qc.select("query_id", "qx"), "query_id"),
@@ -320,22 +321,15 @@ object StreamingOps {
   /** Pool membership (r13): `cells` ∪ the committed codes delta (rows at
     * m = 0), so an appended vector is servable from the next micro-batch
     * (in a SPLIT cell, after the next split refresh); a compact folds the
-    * delta into `cells` in place. The delta reads through the declared
-    * codes schema: a data-file-less delta must not fail inference on
-    * every micro-batch. */
-  private def resolvedCells(s: SparkSession,
-                            indexRoot: String): DataFrame = {
-    val ix = graft.ops.IvfPqIndex.Ix(indexRoot)
-    val cells = Tables.read(s, ix.cells)
-    if (!graft.ops.IndexFs.committed(ix.ivfCodesDelta)) cells
-    else cells.unionByName(Tables.read(s, ix.ivfCodesDelta, Some(graft.ops.VectorOps.codesSchema))
+    * delta into `cells` in place. */
+  private def resolvedCells(s: SparkSession, ix: graft.ops.IvfPqIndex.Ix): DataFrame =
+    Tables.read(s, ix.cells).unionByName(graft.ops.IvfPqIndex.deltaCodes(s, ix)
       .filter(col("m") === 0).select("vec_id", "cell"))
-  }
 
   /** Streaming ANN index APPEND against the STORED codebooks — the
     * `foreachBatch` twin of the registry's `ann_index_append` (L3j): the
-    * dim guard ([[graft.ops.VectorOps.checkedDim]]), then the one
-    * stored-codebook encode ([[graft.ops.VectorOps.encodeAgainstStored]],
+    * dim guard ([[graft.ops.IvfPqIndex.checkedDim]]), then the one
+    * stored-codebook encode ([[graft.ops.IvfPqIndex.encodeAgainstStored]],
     * no retraining) at the index's recorded (m, dim), then exactly-once
     * (vec_id, m, code, cell) rows through [[idempotentBatchWriter]],
     * partitioned by batch_id for a compaction job to fold in like
@@ -344,14 +338,15 @@ object StreamingOps {
   def annAppendBatch(indexRoot: String, outPath: String,
                      id: String, vec: String)
                     (batch: DataFrame, batchId: Long): Unit = {
+    import graft.ops.IvfPqIndex
     val s = batch.sparkSession
-    val (m, dim) = graft.ops.IvfPqIndex.geometry(indexRoot)
+    val ix = IvfPqIndex.Ix(indexRoot)
+    val (m, dim) = IvfPqIndex.geometry(indexRoot)
     val e = batch.select(col(id).as("vec_id"),
       col(vec).cast("array<double>").as("x"))
-    graft.ops.VectorOps.checkedDim(e, "the batch", Some((indexRoot, dim)))
-    idempotentBatchWriter(outPath)(graft.ops.VectorOps.encodeAgainstStored(e,
-      Tables.read(s, s"$indexRoot/coarse"),
-      Tables.read(s, s"$indexRoot/ivfpq_codebooks"), m, dim / m), batchId)
+    IvfPqIndex.checkedDim(e, "the batch", Some((indexRoot, dim)))
+    idempotentBatchWriter(outPath)(IvfPqIndex.encodeAgainstStored(e,
+      Tables.read(s, ix.coarse), Tables.read(s, ix.ivfCodebooks), m, dim / m), batchId)
   }
 
   /** Query-vector row for the streaming ANN probe spec. */

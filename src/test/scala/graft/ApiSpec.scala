@@ -1074,7 +1074,7 @@ class ApiSpec extends AnyFunSuite {
     assert(new java.io.File(root, "_SUCCESS").isFile,
       "the takedown must recommit the root marker")
     def ids(path: String): Set[Long] = spark.read
-      .schema(ops.VectorOps.codesSchema).parquet(path)
+      .schema(ops.IvfPqIndex.codesSchema).parquet(path)
       .select("vec_id").distinct().collect().map(_.getLong(0)).toSet
     assert(!ids(codes).contains(baseId), "base codes must drop the base id")
     val dIds = ids(s"$root/ivfpq_codes_delta")
@@ -1135,7 +1135,7 @@ class ApiSpec extends AnyFunSuite {
     GraftAPI.annIndexDelete(spark, s"$root/ivfpq_codes",
       residents.toSeq.toDF("vec_id"), "vec_id")
     assert(marker.isFile, "emptying a delta cell must recommit the marker")
-    assert(spark.read.schema(ops.VectorOps.codesSchema)
+    assert(spark.read.schema(ops.IvfPqIndex.codesSchema)
       .parquet(s"$root/ivfpq_codes_delta")
       .filter(col("cell") === cellOfTarget).count() == 0L,
       s"the emptied delta cell $cellOfTarget must be gone")
@@ -1154,12 +1154,12 @@ class ApiSpec extends AnyFunSuite {
     assert(!marker.isFile)
     assert(marker.createNewFile())
     // (d) an EMPTY batch commits a clean no-op (the minhash contract)
-    val n0 = spark.read.schema(ops.VectorOps.codesSchema)
+    val n0 = spark.read.schema(ops.IvfPqIndex.codesSchema)
       .parquet(s"$root/ivfpq_codes_delta").count()
     val mEmpty = GraftAPI.annIndexAppend(
       held.filter(col("vec_id") < 0), "vec_id", "embedding", root).collect()
     assert(marker.isFile, "an empty append must recommit the marker")
-    assert(spark.read.schema(ops.VectorOps.codesSchema)
+    assert(spark.read.schema(ops.IvfPqIndex.codesSchema)
       .parquet(s"$root/ivfpq_codes_delta").count() == n0,
       "an empty append must leave the delta content unchanged")
     assert(mEmpty.map(_.getAs[Long]("n_new")).sum == n0 / 4,

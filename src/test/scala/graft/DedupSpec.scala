@@ -256,7 +256,7 @@ class DedupSpec extends AnyFunSuite {
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(live))
     spark.read.parquet(ix.bands).drop("pband")
       .withColumn("pband", col("band"))
-      .withColumn("pbatch", expr(s"doc_id div ${DedupOps.IngestBatch}"))
+      .withColumn("pbatch", expr(s"doc_id div ${ops.MinhashIndex.IngestBatch}"))
       .repartition(col("pband"), col("pbatch"))
       .write.mode("overwrite").partitionBy("pband", "pbatch").parquet(live)
     // (pband=i/pbatch=j dir) -> file name -> length, two hive levels deep
@@ -280,7 +280,7 @@ class DedupSpec extends AnyFunSuite {
       .map(r => s"pband=${r.getInt(0)}/pbatch=${r.get(1)}").toSet
     assert(affected.nonEmpty && affected.size < before.size,
       "fixture must leave some batch partitions untouched for the pruning claim")
-    DedupOps.deleteFromBands(spark, live, del)
+    ops.MinhashIndex.deleteFromBands(spark, live, del)
     val after = listing()
     (before.keySet -- affected).foreach { p =>
       assert(after(p) == before(p), s"$p was rewritten but contains no deleted doc")
@@ -313,7 +313,7 @@ class DedupSpec extends AnyFunSuite {
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(live))
     spark.read.parquet(ix.bands).drop("pband")
       .withColumn("pband", col("band"))
-      .withColumn("pbatch", expr(s"doc_id div ${DedupOps.IngestBatch}"))
+      .withColumn("pbatch", expr(s"doc_id div ${ops.MinhashIndex.IngestBatch}"))
       .repartition(col("pband"), col("pbatch"))
       .write.mode("overwrite").partitionBy("pband", "pbatch").parquet(live)
     def files(): Map[String, Long] = {
@@ -325,7 +325,7 @@ class DedupSpec extends AnyFunSuite {
     val before = files()
     // an empty takedown list must rewrite NOTHING (no partition appears
     // in the written data under dynamic overwrite)
-    DedupOps.deleteFromBands(spark, live, Seq.empty[Long].toDF("doc_id"))
+    ops.MinhashIndex.deleteFromBands(spark, live, Seq.empty[Long].toDF("doc_id"))
     assert(files() == before, "empty delete rewrote partitions")
     // deleting EVERY doc of one ingest batch empties its partitions —
     // must throw toward a catalog DROP PARTITION, never silently leave
@@ -334,7 +334,7 @@ class DedupSpec extends AnyFunSuite {
       .filter(col("pbatch") === 0).select("doc_id").distinct()
     assert(del.count() > 0)
     val e = intercept[IllegalArgumentException](
-      DedupOps.deleteFromBands(spark, live, del))
+      ops.MinhashIndex.deleteFromBands(spark, live, del))
     assert(e.getMessage.contains("DROP PARTITION") ||
       e.getMessage.contains("catalog"), e.getMessage)
     assert(files() == before, "failed delete must not have touched the layout")
@@ -482,7 +482,7 @@ class DedupSpec extends AnyFunSuite {
       .select("doc_id", "band", "band_key", "sub_key").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getString(3)))
     val modelFine = (
-      buckets.collect { case (_, rows) if rows.length < DedupOps.RebandHotSize.toInt =>
+      buckets.collect { case (_, rows) if rows.length < ops.MinhashIndex.RebandHotSize.toInt =>
         rows.map(_._1).sorted.toSeq }.flatMap(pairsOf).toSet ++
       fineRows.groupBy(r => (r._2, r._3, r._4)).values
         .map(_.map(_._1).sorted.toSeq).flatMap(pairsOf).toSet

@@ -211,6 +211,36 @@ class InventorySpec extends AnyFunSuite {
     assert(retired.isEmpty, s"the retired MinHash layouts are gone, yet: $retired")
   }
 
+  test("one module per index family: table paths only in MinhashIndex/IvfPqIndex, the GraftAPI index methods called only from GraftAPI") {
+    def names(files: Seq[String]) =
+      files.map(java.nio.file.Paths.get(_).getFileName.toString).distinct.sorted
+    // the path form `/<name>"`: the manifest's "bands" geometry key is not a path
+    def paths(tables: String*) = tables.map(t => s"/$t\"")
+    val minhash = paths("bands", "bands_delta", "bands_fine", "sub_keys")
+    val ann = paths("coarse", "cells", "pq_codebooks", "pq_codes", "ivfpq_codebooks",
+      "ivfpq_codes", "coarse_split", "cells_split")
+    val facadeCall = "GraftAPI\\.(writeMinhashIndex|minhashIndex\\w*|buildAnnIndex|annIndex\\w*)".r
+    def callers(sources: Seq[(String, String)]) =
+      sources.collect { case (f, code) if facadeCall.findFirstIn(code).nonEmpty => f }
+    // the detector itself: literals and calls in code are caught, ones in
+    // comments are not, and neither is the geometry key
+    val controls = Seq(
+      "A.scala" -> codeOnly("Tables.read(s, s\"$root/bands\")\nval c = s\"$r/cells_split\"\n" +
+        "GraftAPI\n  .annIndexCompact(s, p)"),
+      "B.scala" -> codeOnly("/** s\"$root/bands\", GraftAPI.buildAnnIndex(df) */\n" +
+        "// s\"$r/cells_split\" GraftAPI.minhashIndexSkew(b)\nval g = Map(\"bands\" -> 2)"))
+    assert(minhash.map(filesWith(_, controls)) == Seq(Seq("A.scala"), Nil, Nil, Nil))
+    assert(ann.map(filesWith(_, controls)) == Seq.fill(7)(Nil) :+ Seq("A.scala"))
+    assert(callers(controls) == Seq("A.scala"))
+    assert(names(minhash.flatMap(filesWith(_, mainSources))) == Seq("MinhashIndex.scala"),
+      "MinHash table paths must come from MinhashIndex.Ix")
+    assert(names(ann.flatMap(filesWith(_, mainSources))) == Seq("IvfPqIndex.scala"),
+      "IVF-PQ table paths must come from IvfPqIndex.Ix")
+    val outside = callers(mainSources).filterNot(_.endsWith("/GraftAPI.scala"))
+    assert(outside.isEmpty,
+      s"internal callers must call MinhashIndex/IvfPqIndex, not the GraftAPI forwards: $outside")
+  }
+
   test("one cache lifecycle: the per-object pin generations are gone, only CacheLifecycle holds or retires a generation") {
     val gone = Seq("cachedGen", "freshGen", "cacheEager", "cacheLazy", "beginPins", "endPins",
       "retireablePins")

@@ -87,7 +87,7 @@ class JobsSpec extends AnyFunSuite {
     val dayTokens = spark.read.parquet(s"$out/shards")
       .agg(sum("n_tokens")).head().getLong(0)
     val baseTokens0 = Tables.documents(spark, sf)
-      .filter(col("doc_id") < ops.DedupOps.AppendCutoff)
+      .filter(col("doc_id") < ops.MinhashIndex.AppendCutoff)
       .selectExpr("cast(sum(size(split(text, ' '))) as long)")
       .head().getLong(0)
     assert(reported("packed_tokens_day") == dayTokens)
@@ -122,7 +122,7 @@ class JobsSpec extends AnyFunSuite {
       .select("band", "band_key").collect()
       .map(r => s"${r.getInt(0)}|${r.getString(1)}").toSet
     val (mhHot, mhMax, mhHotKeys) =
-      posture(mhAll, mhTouched, ops.DedupOps.RebandHotSize)
+      posture(mhAll, mhTouched, ops.MinhashIndex.RebandHotSize)
     assert(maint("minhash")._1 == mhHot && maint("minhash")._2 == mhMax)
     val fineCov =
       if (new java.io.File(mhIx.root, "_SUCCESS").isFile)
@@ -141,7 +141,7 @@ class JobsSpec extends AnyFunSuite {
       .filter(col("m") === 0).select("cell").collect()
       .map(_.getLong(0).toString).toSet
     val (annHot, annMax, _) =
-      posture(annAll, annTouched, ops.VectorOps.SplitHotSize)
+      posture(annAll, annTouched, ops.IvfPqIndex.SplitHotSize)
     assert(maint("ann")._1 == annHot && maint("ann")._2 == annMax)
     assert(maint("ann")._3 <= maint("ann")._1,
       "unremedied can never exceed the hot count")
@@ -250,10 +250,10 @@ class JobsSpec extends AnyFunSuite {
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(Set(107L, 117L, 127L).subsetOf(annCells),
       "the fold must move the appended members into cells")
-    assert(spark.read.schema(ops.VectorOps.codesSchema)
+    assert(spark.read.schema(ops.IvfPqIndex.codesSchema)
       .parquet(annIx.ivfCodesDelta).count() == 0L,
       "after the fold the re-ensured delta must hold no rows")
-    val splitMembers = spark.read.schema(ops.VectorOps.splitCellsSchema)
+    val splitMembers = spark.read.schema(ops.IvfPqIndex.splitCellsSchema)
       .parquet(s"${annIx.root}/cells_split")
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(Set(107L, 117L, 127L).subsetOf(splitMembers),

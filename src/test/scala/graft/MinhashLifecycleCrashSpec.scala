@@ -1,7 +1,7 @@
 package graft
 
 /** Every crash point of the MinHash lifecycle ops ([[LifecycleCrashSuite]])
-  * on the registry's base-slice fixture root: the facade's append,
+  * on the registry's base-slice fixture root: the facade's build, append,
   * compact and delete; the probe is `dedup_incremental`. */
 class MinhashLifecycleCrashSpec extends LifecycleCrashSuite[ops.MinhashIndex.Ix] {
   import org.apache.spark.sql.functions._
@@ -35,6 +35,12 @@ class MinhashLifecycleCrashSpec extends LifecycleCrashSuite[ops.MinhashIndex.Ix]
 
   protected val remedy = "rebuild via writeMinhashIndex"
 
+  /** The fixture's own base build ([[ops.MinhashIndex.ensureBase]]'s
+    * slice and geometry), through the facade. */
+  private def build(s: org.apache.spark.sql.SparkSession, ix: ops.MinhashIndex.Ix): Unit =
+    api.GraftAPI.writeMinhashIndex(s.read.parquet(s"$dir/documents.parquet")
+      .filter(col("doc_id") < 400), "doc_id", "text", ix.root,
+      numHashes = 8, bands = 2, batchWidth = 250).collect()
   private def append(s: org.apache.spark.sql.SparkSession, ix: ops.MinhashIndex.Ix): Unit =
     api.GraftAPI.minhashIndexAppend(s, ix.bands,
       s.read.parquet(s"$dir/documents.parquet").filter(col("doc_id") >= 400 && col("doc_id") < 450),
@@ -65,5 +71,9 @@ class MinhashLifecycleCrashSpec extends LifecycleCrashSuite[ops.MinhashIndex.Ix]
 
   test("minhashIndexDelete: a crash at each of its three write steps refuses, rebuilds clean and leaves the probe unchanged") {
     assert(crashEverywhere(delete) == 3)
+  }
+
+  test("writeMinhashIndex: a crash at each of its three write steps refuses, rebuilds clean and leaves the probe unchanged") {
+    assert(crashEverywhere(build) == 3)
   }
 }

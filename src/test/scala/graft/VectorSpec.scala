@@ -347,7 +347,7 @@ class VectorSpec extends AnyFunSuite {
       .select("cell").distinct().collect().map(r => s"pcell=${r.getLong(0)}").toSet
     assert(affectedCells.nonEmpty && affectedCells.size < before.size,
       "fixture must leave some cells untouched for the pruning claim")
-    ops.VectorOps.deleteFromCodes(spark, live, del)
+    ops.IvfPqIndex.deleteFromCodes(spark, live, del)
     val after = listing()
     // untouched partitions: identical file name→length maps (no rewrite)
     (before.keySet -- affectedCells).foreach { p =>
@@ -380,7 +380,7 @@ class VectorSpec extends AnyFunSuite {
       .filter(col("cell") === cell0).select("vec_id").distinct()
     assert(del.count() > 0)
     val e = intercept[IllegalArgumentException](
-      ops.VectorOps.deleteFromCodes(spark, live, del))
+      ops.IvfPqIndex.deleteFromCodes(spark, live, del))
     assert(e.getMessage.contains("catalog"), e.getMessage)
   }
 
@@ -501,7 +501,7 @@ class VectorSpec extends AnyFunSuite {
     assert(manifest.nonEmpty, "planted corpus must surface a hot cell")
     manifest.foreach { r =>
       assert(r.getAs[Long]("n_sub") >= 1L &&
-        r.getAs[Long]("n_sub") <= VectorOps.SplitSubK.toLong)
+        r.getAs[Long]("n_sub") <= ops.IvfPqIndex.SplitSubK.toLong)
       assert(r.getAs[Long]("max_sub") <= r.getAs[Long]("n_vecs"))
     }
     assert(manifest.exists(_.getAs[Long]("n_vecs") >= 200L),
@@ -514,13 +514,13 @@ class VectorSpec extends AnyFunSuite {
     val cells = spark.read.parquet(s"$ixRoot/cells")
     val qcell = cells.filter(col("vec_id") === 0).collect()(0).getLong(1)
     val cellSize = cells.filter(col("cell") === qcell).count()
-    assert(cellSize >= VectorOps.SplitHotSize, "query's cell must be hot")
+    assert(cellSize >= ops.IvfPqIndex.SplitHotSize, "query's cell must be hot")
     val splitCells = spark.read.parquet(s"$ixRoot/cells_split")
       .filter(col("cell") === qcell)
     val bySub = splitCells.groupBy("scid").count().collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val worstPool = bySub.values.toSeq.sorted.reverse
-      .take(VectorOps.SplitProbes).sum
+      .take(ops.IvfPqIndex.SplitProbes).sum
     assert(worstPool < cellSize,
       s"split probe pool ($worstPool) must shrink below the cell scan ($cellSize)")
 
@@ -609,7 +609,7 @@ class VectorSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getDouble(3)))
     assert(got2.sameElements(got1),
       "probe results must be byte-identical before/after compact")
-    assert(spark.read.schema(VectorOps.codesSchema).parquet(ix.ivfCodesDelta).count() == 0L,
+    assert(spark.read.schema(ops.IvfPqIndex.codesSchema).parquet(ix.ivfCodesDelta).count() == 0L,
       "the re-ensured delta must be empty, not a duplicate of the folded batch")
     val got3 = VectorOps.knnIvfPqDelta(spark, dir).collect()
       .map(r => (r.getLong(0), r.getDouble(3)))
